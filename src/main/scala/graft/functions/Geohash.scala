@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets.US_ASCII
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, TernaryExpression}
@@ -16,18 +18,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * (WeatherStreamsTest.java:171-177,214) — see GeohashSpec.
   *
   * Scale note: pure per-row arithmetic, no state, no allocation beyond the
-  * output string — safe at any scale, and exposed as a codegen'd Catalyst
+  * output bytes — safe at any scale, and exposed as a codegen'd Catalyst
   * `Expression` (not a Scala UDF) so it stays inside whole-stage codegen
   * with primitive (unboxed) inputs.
   */
 object Geohash {
-  private val Base32 = "0123456789bcdefghjkmnpqrstuvwxyz".toCharArray
+  private val Base32 = "0123456789bcdefghjkmnpqrstuvwxyz".getBytes(US_ASCII)
 
   /** Encode (lat, lng) to a geohash of `precision` base-32 characters. */
-  def encode(lat: Double, lng: Double, precision: Int): String = {
+  def encode(lat: Double, lng: Double, precision: Int): String =
+    new String(encodeBytes(lat, lng, precision), US_ASCII)
+
+  /** Codegen entry point: the ASCII bytes are the UTF-8 encoding, so they
+    * are wrapped as the result without a `String` in between.
+    */
+  def encodeUtf8(lat: Double, lng: Double, precision: Int): UTF8String =
+    UTF8String.fromBytes(encodeBytes(lat, lng, precision))
+
+  private def encodeBytes(lat: Double, lng: Double, precision: Int): Array[Byte] = {
     var latMin = -90.0; var latMax = 90.0
     var lngMin = -180.0; var lngMax = 180.0
-    val out = new Array[Char](precision)
+    val out = new Array[Byte](precision)
     var even = true // geohash interleaving starts with the longitude bit
     var bits = 0; var ch = 0; var pos = 0
     while (pos < precision) {
@@ -44,15 +55,8 @@ object Geohash {
       bits += 1
       if (bits == 5) { out(pos) = Base32(ch); pos += 1; bits = 0; ch = 0 }
     }
-    new String(out)
+    out
   }
-
-  /** Codegen entry point — kept separate so generated code does a single
-    * static call returning the final UTF8String (no per-row String → UTF8String
-    * bridge in the generated class).
-    */
-  def encodeUtf8(lat: Double, lng: Double, precision: Int): UTF8String =
-    UTF8String.fromString(encode(lat, lng, precision))
 
   /** Decode a geohash to its bounding box: (latMin, latMax, lngMin, lngMax). */
   def decodeBBox(gh: String): (Double, Double, Double, Double) = {

@@ -26,6 +26,23 @@ import graft.functions.GraftFunctions._
   * Scale notes per operator inline. Everything here is built-in-function
   * only — whole-stage-codegen end to end, shuffles only at the two groupBys
   * and the join (broadcast when the dimension side is small).
+  *
+  * Parse once: each parser tokenizes a record's JSON exactly once. The
+  * natural form — `withColumn("w", from_json(..))` then a filter on `w` —
+  * parses it several times after optimization, because three Catalyst rules
+  * copy the `from_json` call into every predicate above it:
+  *  - `PushPredicateThroughNonJoin` pushes the filter below the projection
+  *    by substituting the `from_json` call for `w`;
+  *  - `OptimizeJsonExprs` prunes each pushed copy into its own single-field
+  *    `from_json`;
+  *  - filters inferred from the downstream join (`isnotnull(key)`) are
+  *    pushed down the same way, e.g. as `isnotnull(geohash(from_json(..).lat,
+  *    from_json(..).lng))`.
+  * [[parseOnce]] therefore yields the parsed struct from a generator
+  * (`explode(array(from_json(..)))`): a predicate on a generator's output
+  * cannot move below it, and `InferFiltersFromGenerate` skips non-attribute
+  * inputs, so the plan keeps one `from_json` per input. PlanInvariantsSpec
+  * pins the count.
   */
 object WeatherOps {
 
@@ -49,6 +66,14 @@ object WeatherOps {
     StructField("Name", StringType),
     StructField("Id", StringType)))
 
+  /** `raw`'s `valueCol` and `carry` columns plus `w`, the value parsed with
+    * `schema` once per record (see the header). Drops no row: a value that
+    * is not a JSON object yields a null `w`. */
+  private def parseOnce(raw: DataFrame, valueCol: String, schema: StructType,
+      carry: String*): DataFrame =
+    raw.select((valueCol +: carry).map(col) :+
+      explode(array(from_json(col(valueCol), schema))).as("w"): _*)
+
   // ---- M1: parse + geohash re-key (WeatherHotelsApp.java:68-88) ----------
 
   /** Parse raw weather JSON and key by `geohash4(lat,lng)` + date.
@@ -60,8 +85,9 @@ object WeatherOps {
     * string-typed `"avg_tmpr_f": "72"` becomes 0.0, not 72.0, exactly like
     * a string-typed lat becomes geohash "s000"
     * (WeatherStreamsTest.java:206-214). `false` uses straight `from_json`
-    * typing. Malformed JSON → null fields → row dropped, matching the
-    * reference's catch-and-null mapper (WeatherHotelsApp.java:83-86).
+    * typing. A line that is not a JSON object, or has no `wthr_date`, is
+    * dropped, matching the reference's catch-and-null mapper
+    * (WeatherHotelsApp.java:83-86).
     *
     * Scale: narrow transform, no shuffle; the derived `key` becomes the
     * shuffle key of the downstream aggregation — same manual key-derivation
@@ -72,8 +98,8 @@ object WeatherOps {
     val v = col(valueCol)
     def fld(name: String, typed: Column): Column =
       if (lenient) jsonDoubleLenient(v, name) else typed
-    raw.withColumn("w", from_json(v, weatherSchema))
-      .filter(col("w").isNotNull && col("w.wthr_date").isNotNull)
+    parseOnce(raw, valueCol, weatherSchema)
+      .filter(col("w.wthr_date").isNotNull)
       .select(
         geohash(fld("lat", col("w.lat")), fld("lng", col("w.lng")), 4).as("hash"),
         col("w.wthr_date").as("wthr_date"),
@@ -88,18 +114,16 @@ object WeatherOps {
     * WeatherHotelsApp.java:83-86); at pipeline scale you want the rejects
     * observable and re-playable — split the result on `ok` and route the
     * false side to a quarantine sink. One pass, no shuffle. */
-  def parseWeatherWithRejects(raw: DataFrame, valueCol: String = "value"): DataFrame = {
-    val v = col(valueCol)
-    raw.withColumn("w", from_json(v, weatherSchema))
-      .withColumn("ok", col("w").isNotNull && col("w.wthr_date").isNotNull)
+  def parseWeatherWithRejects(raw: DataFrame, valueCol: String = "value"): DataFrame =
+    parseOnce(raw, valueCol, weatherSchema)
+      .withColumn("ok", col("w.wthr_date").isNotNull)
       .select(
         col("ok"),
-        v.as("raw"),
+        col(valueCol).as("raw"),
         when(col("ok"), geohash(col("w.lat"), col("w.lng"), 4)).as("hash"),
         col("w.wthr_date").as("wthr_date"),
         col("w.avg_tmpr_f").as("tmp_f"),
         col("w.avg_tmpr_c").as("tmp_c"))
-  }
 
   /** Parse the intermediate-topic shape (S2): key `"{hash}_{date}"`, value a
     * typed Weather JSON `{"tmp_f":…,"tmp_c":…,"date":…}` — the format the
@@ -114,7 +138,7 @@ object WeatherOps {
       StructField("tmp_f", DoubleType),
       StructField("tmp_c", DoubleType),
       StructField("date", StringType)))
-    raw.withColumn("w", from_json(col(valueCol), schema))
+    parseOnce(raw, valueCol, schema, keyCol)
       .filter(col("w").isNotNull)
       .select(
         col(keyCol).as("key"),
@@ -128,15 +152,15 @@ object WeatherOps {
 
   /** Parse raw address JSON; key = precomputed `Hash` field. */
   def parseAddress(raw: DataFrame, valueCol: String = "value"): DataFrame =
-    raw.withColumn("a", from_json(col(valueCol), addressSchema))
-      .filter(col("a").isNotNull && col("a.Hash").isNotNull)
+    parseOnce(raw, valueCol, addressSchema)
+      .filter(col("w.Hash").isNotNull)
       .select(
-        col("a.Hash").as("key"),
-        col("a.Country").as("country"),
-        col("a.City").as("city"),
-        col("a.Address").as("address"),
-        col("a.Name").as("name"),
-        col("a.Id").as("id"))
+        col("w.Hash").as("key"),
+        col("w.Country").as("country"),
+        col("w.City").as("city"),
+        col("w.Address").as("address"),
+        col("w.Name").as("name"),
+        col("w.Id").as("id"))
 
   // ---- A1 + M3: per-(cell, day) average (WeatherHotelsApp.java:91-104) ---
 

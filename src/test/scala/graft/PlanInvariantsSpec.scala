@@ -715,4 +715,40 @@ class PlanInvariantsSpec extends SparkSuite {
     assert(bq.contains("BroadcastExchange"),
       s"the query side must broadcast:\n${bq.take(2000)}")
   }
+
+  test("weather/hotel parsers: one from_json per parsed input after optimization") {
+    import graft.operators.WeatherOps
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.functions.col
+    // a file scan, not a local relation the optimizer would fold away
+    def lines(name: String, json: String): DataFrame = {
+      val dir = java.nio.file.Files.createTempDirectory(name)
+      java.nio.file.Files.writeString(dir.resolve("part.jsonl"), json)
+      graft.sources.Sources.rawLines(spark, dir.toString)
+    }
+    val weather = lines("parse-once-w",
+      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}""")
+    val hotels = lines("parse-once-h",
+      """{"Hash":"dp01","Country":"US","City":"c","Address":"a","Name":"n","Id":"1"}""")
+    // the reference composition (WeatherOpsSpec E2E), keyed by the cell
+    def topology(lenient: Boolean): DataFrame = WeatherOps.enrich(
+      WeatherOps.parseAddress(hotels),
+      WeatherOps.cellHistory(WeatherOps.dailyAverage(
+        WeatherOps.parseWeather(weather, lenient = lenient), keyCols = Seq("hash")),
+        keyCol = "hash").withColumnRenamed("hash", "key"))
+    // each from_json left in the optimized plan tokenizes every record again
+    def parses(df: DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case n =>
+        n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum }.sum
+    Seq(
+      ("topology", topology(lenient = false), 2),
+      ("topology lenient", topology(lenient = true), 2),
+      ("q_s2_roundtrip", SparkEntry.queries("q_s2_roundtrip")(spark, sf0001), 1),
+      ("rejects ok side", WeatherOps.parseWeatherWithRejects(weather).filter(col("ok")), 1)
+    ).foreach { case (name, df, inputs) =>
+      assert(parses(df) == inputs,
+        s"$name: one from_json per parsed input\n${df.queryExecution.optimizedPlan}")
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSuite
+import graft.functions.Geohash
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -72,6 +73,37 @@ class WeatherOpsSpec extends SparkSuite {
     assert(bad.count() == 2)
     assert(bad.select("raw").as[String].collect().toSet ==
       Set("""garbage {{{""", """{"lat": 1.0, "lng": 2.0}"""))
+  }
+
+  test("malformed records fail per row on every parser path, never per job") {
+    val good = """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}"""
+    val stringLat = """{"avg_tmpr_c":2.0,"avg_tmpr_f":1.0,"lat":"39.6467","lng":-89.8455,"wthr_date":"2017-08-30"}"""
+    val bad = Seq("null", "[]", "123", "\"s\"", "{}",
+      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6""",
+      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":null}""")
+    val lines = Seq(good, stringLat) ++ bad
+    val raw = lines.toDF("value")
+    def cells(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+      df.select("hash", "wthr_date").as[(String, String)].collect().toSet
+
+    // strict typing: a string-typed lat nulls that field alone, so the
+    // reading survives without a cell; every bad line is dropped
+    assert(cells(WeatherOps.parseWeather(raw)) ==
+      Set(("dp01", "2017-08-29"), (null, "2017-08-30")))
+    // lenient: the string lat coerces to 0.0 (Jackson doubleValue)
+    assert(cells(WeatherOps.parseWeather(raw, lenient = true)) == Set(
+      ("dp01", "2017-08-29"), (Geohash.encode(0.0, -89.8455, 4), "2017-08-30")))
+    // dead-letter channel: one row per line, the raw line kept verbatim,
+    // and the rejects are exactly the lines the other two paths drop
+    val tagged = WeatherOps.parseWeatherWithRejects(raw)
+      .select("ok", "raw").as[(Boolean, String)].collect().toSeq
+    assert(tagged.map(_._2).sorted == lines.sorted)
+    assert(tagged.filterNot(_._1).map(_._2).sorted == bad.sorted)
+
+    val address = """{"Hash":"dp01","Country":"US","City":"c","Address":"a","Name":"n","Id":"1"}"""
+    val noHash = """{"Country":"US","City":"c","Address":"a","Name":"n","Id":"2"}"""
+    val hotels = WeatherOps.parseAddress((Seq(address, noHash) ++ bad).toDF("value"))
+    assert(hotels.select("key", "id").as[(String, String)].collect().toSeq == Seq(("dp01", "1")))
   }
 
   // ---- testHashAddresses (M2) — WeatherStreamsTest.java:88-140 -----------

@@ -83,6 +83,43 @@ class WeatherStreamsSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("parse → cell history: a stream with malformed lines ends where the batch does") {
+    implicit val sqlCtx = spark.sqlContext
+    val stations = Seq((39.6467, -89.8455), (35.7395, -78.3249), (51.5131074, -0.1778707))
+    val malformed = Seq("not json", "{}", "[]", "null", """{"lat":1.0,"lng":""",
+      """{"lat":1.0,"lng":2.0,"wthr_date":null}""")
+    // five micro-batches; cells and dates recur across batch boundaries
+    val batches = (0 until 5).map { b =>
+      (0 until 12).map { i =>
+        val (lat, lng) = stations((b + i) % stations.length)
+        f"""{"lat":$lat,"lng":$lng,"wthr_date":"2020-01-0${1 + i % 3}",""" +
+          f""""avg_tmpr_f":${50 + b * 1.5 + i}%.1f,"avg_tmpr_c":${10 - b * 0.5 + i}%.1f}"""
+      } :+ malformed(b) :+ malformed((b + 1) % malformed.length)
+    }
+    val in = MemoryStream[String]
+    val q = WeatherStreams.cellHistoryStream(
+      WeatherStreams.parseWeatherStream(in.toDF().toDF("value")))
+      .writeStream.outputMode(OutputMode.Update())
+      .format("memory").queryName("hist_parsed")
+      .option("checkpointLocation", tmpDir("ckpt-parsed"))
+      .start()
+    val streamed = try {
+      batches.foreach { lines => in.addData(lines); q.processAllAvailable() }
+      // update mode re-emits a cell on every change: its last row is final
+      spark.table("hist_parsed").as[(String, Seq[Weather])].collect().toSeq
+        .groupBy(_._1).map { case (k, rows) => k -> rows.last._2 }
+    } finally q.stop()
+
+    import graft.operators.WeatherOps._
+    val all = batches.flatten.toDF("value")
+    val batch = cellHistory(
+      dailyAverage(parseWeather(all), keyCols = Seq("hash"), exact = true), keyCol = "hash")
+      .as[(String, Seq[(String, Double, Double)])].collect()
+      .map { case (k, hs) => k -> hs.map { case (d, f, c) => Weather(f, c, d) } }.toMap
+    assert(streamed.size == stations.length)
+    assert(streamed == batch)
+  }
+
   test("aggregator: second-level average math matches the reference golden") {
     // avg(70,72)=71 @2020-01-01 and 72 @2020-01-02 (WeatherStreamsTest.java:214-217)
     val agg = new WeatherStreams.CellHistoryAggregator
