@@ -43,9 +43,10 @@ object Bench {
     // one-off ingest costs a standing pipeline pays once, inflating
     // wall-clock and the queries_max spread (r12: an 83.5 s spike on
     // q_interval_join_replay was three replay builds).
-    try ExtQueries.prewarmFixtures(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] fixture prewarm failed: $e") }
+    val prewarmFailures = ExtQueries.prewarmFixtures(spark, sfDir)
+    if (prewarmFailures.nonEmpty)
+      System.err.println("[bench] fixture prewarm failed: " +
+        prewarmFailures.mkString("; "))
     spark.catalog.clearCache() // CacheManager pins every staging persist()
     System.gc() // drain warm-up garbage so no timed query absorbs the pause
     // Timed: min of `iters` runs per query. One run of 50+ queries has no

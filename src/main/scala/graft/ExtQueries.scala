@@ -1236,36 +1236,146 @@ object ExtQueries {
        |ORDER BY stage""".stripMargin
   }
 
-  /** Standing ANN index for the q_ann_index* entries, built ONCE per
-    * (process, fixture dir) — a standing index is built once and read
-    * many times, so repeated invocations (bench min-of-N, the recall
-    * twin) measure the READ path, which is the thing the entries exist
-    * to track. First touch in a process DELETES any on-disk leftover and
-    * rebuilds, so a stale index from an earlier run or another scale
-    * factor (train-once quantizers never retrain!) can never answer. */
-  private val annIndexBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** A per-(process, fixture dir) artifact the catalog builds once and
+    * then only reads: a standing index, a stream replay's sink, a
+    * rendered crawl dump, a trained tokenizer table.
+    *
+    *  - Memo: one value per fixture dir per process, so repeated face
+    *    runs (bench min-of-N, recall twins) time the read path. Each
+    *    fixture keeps its own map: builds nest (the corpus pair fixtures
+    *    read [[dedupSketchFixture]]) and `computeIfAbsent` throws on a
+    *    recursive update of one map. A build that throws stores nothing,
+    *    so the next call rebuilds.
+    *  - Path: a rooted fixture builds under
+    *    `/tmp/graft_<name>_<dirHash>_p<pid>`, deleted and re-created
+    *    before the build runs. The md5 prefix keeps two fixture dirs from
+    *    serving each other's corpus; the pid keeps two JVMs on one dir
+    *    from racing a first-touch delete against a read. Deleting on first
+    *    touch means a stale artifact from an earlier run or another scale
+    *    factor (train-once quantizers never retrain) can never answer.
+    *  - Prewarm: a fixture joins its [[Fixtures]] list when it is
+    *    declared, and [[prewarmFixtures]] builds that list, so no fixture
+    *    can be left out of the untimed warm-up by omission. */
+  private[graft] final class Fixture[V](val name: String,
+      build: (SparkSession, String) => V) {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, V]()
+    def apply(s: SparkSession, dir: String): V =
+      memo.computeIfAbsent(dir, _ => build(s, dir))
+    def isBuilt(dir: String): Boolean = memo.containsKey(dir)
+  }
 
-  private def annIndexFixture(s: SparkSession, dir: String): String =
-    annIndexBuilt.computeIfAbsent(dir, { _ =>
-      // path = wide hash of the fixture dir (md5 prefix — two dirs can't
-      // collide the way 32-bit hashCode could and silently serve each
-      // other's corpus) + the pid, so concurrent JVMs benching the same
-      // dir never race one first-touch delete against another's read
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val idx = s"/tmp/graft_ann_index_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(idx)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.streaming.IngestStreams.buildEmbeddingIndex(
-        Tables.embeddings(s, dir), idx, nlist = 8,
-        pq = Some(graft.streaming.IngestStreams.PqIndexConfig(m = 16, ksub = 32)))
-      idx
-    })
+  /** The declaration list of [[Fixture]]s, in declaration order. */
+  private[graft] final class Fixtures {
+    private val declared =
+      new java.util.concurrent.CopyOnWriteArrayList[Fixture[_]]()
+    private def declare[V](f: Fixture[V]): Fixture[V] = { declared.add(f); f }
+    private def all: Seq[Fixture[_]] =
+      scala.jdk.CollectionConverters.ListHasAsScala(declared).asScala.toSeq
 
-  private val ingestReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    /** A fixture built under a fresh scratch root; its value is the root. */
+    def rooted(name: String)(
+        build: (SparkSession, String, String) => Unit): Fixture[String] =
+      declare(new Fixture[String](name, { (s, dir) =>
+        val root = s"/tmp/graft_${name}_${dirHash(dir)}_p${ProcessHandle.current().pid()}"
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
+        build(s, dir, root)
+        root
+      }))
+
+    /** A fixture whose value is what `build` returns; no scratch root. */
+    def value[V](name: String)(build: (SparkSession, String) => V): Fixture[V] =
+      declare(new Fixture[V](name, build))
+
+    /** Builds every declared fixture for `dir`, each on its own, and
+      * returns `name: error` for each one that failed. */
+    def prewarm(s: SparkSession, dir: String): Seq[String] = all.flatMap { f =>
+      try { f(s, dir); None }
+      catch { case scala.util.control.NonFatal(e) => Some(s"${f.name}: $e") }
+    }
+
+    def built(dir: String): Set[String] =
+      all.filter(_.isBuilt(dir)).map(_.name).toSet
+  }
+
+  /** Wide hash of a fixture dir (md5 prefix): two dirs can't collide the
+    * way a 32-bit hashCode could. */
+  private def dirHash(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"$b%02x").mkString
+
+  private val fixtures = new Fixtures
+
+  /** The micro-batch split every replay feeds: near-equal thirds, in
+    * order. */
+  private[graft] def inThirds[T](rows: collection.Seq[T]): Seq[collection.Seq[T]] =
+    rows.grouped(math.max(1, (rows.length + 2) / 3)).toSeq
+
+  /** Replays `rows` through the checkpointed streaming query `start`
+    * builds over a MemoryStream: three near-equal micro-batches, each
+    * processed before the next arrives, then one micro-batch per
+    * sentinel row. The query is stopped on every path. */
+  private[graft] def replay[T: org.apache.spark.sql.Encoder](s: SparkSession,
+      rows: collection.Seq[T], sentinels: Seq[T])(
+      start: org.apache.spark.sql.Dataset[T] =>
+        org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    replayBatches(s, inThirds(rows), sentinels)(start)
+
+  /** [[replay]] over caller-made batches. Needs at least one row: with
+    * none, the sink path is never created and the consuming face fails
+    * on read. */
+  private def replayBatches[T: org.apache.spark.sql.Encoder](s: SparkSession,
+      batches: Seq[collection.Seq[T]], sentinels: Seq[T])(
+      start: org.apache.spark.sql.Dataset[T] =>
+        org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    require(batches.exists(_.nonEmpty), "a replay needs rows")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
+    val q = start(src.toDS())
+    try (batches ++ sentinels.map(Seq(_))).foreach { b =>
+      src.addData(b.toSeq: _*); q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** Update-mode sink: each micro-batch's rows, stamped with their
+    * `batch_id`, appended as parquet under `<root>/updates`. */
+  private def updatesSink(root: String)(
+      df: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream.outputMode("update")
+      .foreachBatch { (b: DataFrame, bid: Long) =>
+        b.withColumn("batch_id", lit(bid))
+          .write.mode("append").parquet(s"$root/updates")
+      }
+      .option("checkpointLocation", s"$root/ckpt")
+      .start()
+
+  /** Append-mode parquet file sink at `<root>/<sub>` (exactly-once via
+    * the sink log). */
+  private def appendSink(root: String, sub: String)(
+      df: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream.outputMode("append").format("parquet")
+      .option("path", s"$root/$sub")
+      .option("checkpointLocation", s"$root/ckpt")
+      .start()
+
+  /** Far-future sentinel times: three hourly rounds 46 days past `maxMs`,
+    * beyond the replays' 45-day watermark delay. The first round moves
+    * the watermark past every event; the later ones re-trigger batches
+    * so registered event-time timeouts fire and emit. */
+  private def sentinelTimes(maxMs: Long): Seq[java.sql.Timestamp] =
+    (0 until 3).map(i =>
+      new java.sql.Timestamp(maxMs + 46L * 86400000L + i * 3600000L))
+
+  /** Standing ANN index for the q_ann_index* entries: a standing index is
+    * built once and read many times, so repeated invocations (bench
+    * min-of-N, the recall twin) measure the READ path, which is the
+    * thing the entries exist to track. */
+  private val annIndexFixture = fixtures.rooted("ann_index") { (s, dir, root) =>
+    graft.streaming.IngestStreams.buildEmbeddingIndex(
+      Tables.embeddings(s, dir), root, nlist = 8,
+      pq = Some(graft.streaming.IngestStreams.PqIndexConfig(m = 16, ksub = 32)))
+  }
 
   /** Replay the EXACT streamed-ingest path end-to-end, once per fixture
     * dir: the documents table splits into 3 batches by `doc_id % 3` and
@@ -1276,132 +1386,73 @@ object ExtQueries {
     * runs, not a batch re-derivation. The MemoryStream feed is
     * driver-local by nature (bounded: the sf fixture's documents); the
     * per-batch processing is the distributed foreachBatch pipeline
-    * itself. Same first-touch-rebuild + md5(dir)+pid path contract as
-    * [[annIndexFixture]]. */
-  private def ingestReplayFixture(s: SparkSession, dir: String): String =
-    ingestReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_ingest_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .collect().sortBy(_._1)
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      val q = graft.streaming.IngestStreams.dedupIngest(
-        src.toDF().toDF("doc_id", "text"),
+    * itself. */
+  private val ingestReplayFixture = fixtures.rooted("ingest_replay") { (s, dir, root) =>
+    import s.implicits._
+    import graft.streaming.IngestStreams
+    val docs = Tables.documents(s, dir)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+      .as[(Long, String, String, String)].collect().sortBy(_._1).toSeq
+    // a document arrives in batch doc_id % 3, not in a near-equal third:
+    // q_ingest_exact_replay's oracle keeps the min doc_id of the EARLIEST
+    // such batch holding the text. Every ingest below rides the SAME split
+    // with its own stream + checkpoint.
+    def byMod3[T: org.apache.spark.sql.Encoder](
+        row: ((Long, String, String, String)) => T)(
+        start: org.apache.spark.sql.Dataset[T] =>
+          org.apache.spark.sql.streaming.StreamingQuery): Unit =
+      replayBatches(s, (0 until 3).map(b => docs.filter(_._1 % 3 == b).map(row)),
+        Nil)(start)
+    byMod3(d => (d._1, d._2)) { ds =>
+      IngestStreams.dedupIngest(ds.toDF("doc_id", "text"),
         s"$root/index", s"$root/corpus", s"$root/ckpt",
         // near-dup maintenance rides the same stream (the r15 posting-
         // path fold): per-batch pairs vs the standing corpus land in
         // /pairs for q_minhash_ingest_replay's staged-pair gate
-        minhash = Some(graft.streaming.IngestStreams.MinhashConfig(
+        minhash = Some(IngestStreams.MinhashConfig(
           pairsDir = s"$root/pairs", k = 3, bands = 32, rowsPerBand = 2,
           threshold = 0.5, maxBucket = 1000)))
-      try (0 until 3).foreach { b =>
-        src.addData(rows.filter(_._1 % 3 == b).toSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      // the df-statistic ingest over the SAME 3-batch split (its own
-      // stream + checkpoint): q_df_ingest_replay reads the accumulated
-      // batch partitions back as the standing term-keyed sum
-      val dfSrc =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      val dq = graft.streaming.IngestStreams.dfIngest(
-        dfSrc.toDF().toDF("doc_id", "text"),
+    }
+    // q_df_ingest_replay reads the accumulated batch partitions back as
+    // the standing term-keyed sum
+    byMod3(d => (d._1, d._2)) { ds =>
+      IngestStreams.dfIngest(ds.toDF("doc_id", "text"),
         s"$root/df_index", s"$root/df_ckpt")
-      try (0 until 3).foreach { b =>
-        dfSrc.addData(rows.filter(_._1 % 3 == b).toSeq: _*)
-        dq.processAllAvailable()
-      } finally dq.stop()
-      // the per-domain ledger ingest over the SAME 3-batch split (its own
-      // stream + checkpoint; rows re-collected WITH source since the
-      // synthetic URL derives from doc_id × source): q_url_ingest_replay
-      // reads the accumulated batch partitions back as the standing
-      // domain-keyed sums
-      val urlRows = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("source"))
-        .as[(Long, String, String)].collect().sortBy(_._1)
-      val uSrc = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, String)]
-      val uq = graft.streaming.IngestStreams.domainIngest(
-        uSrc.toDF().toDF("doc_id", "text", "source")
+    }
+    // q_url_ingest_replay reads the standing domain-keyed sums (the
+    // synthetic URL derives from doc_id × source)
+    byMod3(d => (d._1, d._2, d._4)) { ds =>
+      IngestStreams.domainIngest(ds.toDF("doc_id", "text", "source")
           .withColumn("url", syntheticUrlCol),
         col("url"), s"$root/domain_index", s"$root/domain_ckpt")
-      try (0 until 3).foreach { b =>
-        uSrc.addData(urlRows.filter(_._1 % 3 == b).toSeq: _*)
-        uq.processAllAvailable()
-      } finally uq.stop()
-      // the per-pattern hit ledger over the SAME 3-batch split (its own
-      // stream + checkpoint): q_keyword_ingest_replay reads the
-      // accumulated batch partitions back as pattern-keyed sums
-      val kSrc =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      val kq = graft.streaming.IngestStreams.keywordIngest(
-        kSrc.toDF().toDF("doc_id", "text"), keywordPatterns,
+    }
+    // q_keyword_ingest_replay reads the pattern-keyed sums
+    byMod3(d => (d._1, d._2)) { ds =>
+      IngestStreams.keywordIngest(ds.toDF("doc_id", "text"), keywordPatterns,
         s"$root/keyword_index", s"$root/keyword_ckpt")
-      try (0 until 3).foreach { b =>
-        kSrc.addData(rows.filter(_._1 % 3 == b).toSeq: _*)
-        kq.processAllAvailable()
-      } finally kq.stop()
-      // the host link-graph ingest over the SAME 3-batch split (its own
-      // stream + checkpoint; rows carry (doc_id, source) since the
-      // planted page derives from both): q_link_ingest_replay reads the
-      // accumulated batch partitions back as the standing edge-keyed
-      // sums — additive across any batch split, so the batch face's
-      // oracle gates it verbatim
-      val lSrc = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val lq = graft.streaming.IngestStreams.linkIngest(
-        linkPageCols(lSrc.toDF().toDF("doc_id", "source")),
-        col("url"), col("html"),
-        s"$root/link_index", s"$root/link_ckpt")
-      try (0 until 3).foreach { b =>
-        lSrc.addData(urlRows.filter(_._1 % 3 == b).map(r => (r._1, r._3)): _*)
-        lq.processAllAvailable()
-      } finally lq.stop()
-      // the canonical-cluster ledger ingest over the SAME 3-batch split
-      // (rows carry (doc_id, lang, source) since the metaPages planting
-      // derives from all three): q_meta_ingest_replay reads the batch
-      // partitions back as the per-canonical (sum n_pages, min min_url)
-      // fold — additive/min-associative across any split, so the batch
-      // face's oracle gates it verbatim
-      val mRows = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("source"))
-        .as[(Long, String, String)].collect().sortBy(_._1)
-      val mSrc = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, String)]
-      val mq = graft.streaming.IngestStreams.metaIngest(
-        metaPages(mSrc.toDF().toDF("doc_id", "lang", "source")),
-        col("url"), col("html"),
-        s"$root/meta_index", s"$root/meta_ckpt")
-      try (0 until 3).foreach { b =>
-        mSrc.addData(mRows.filter(_._1 % 3 == b).toSeq: _*)
-        mq.processAllAvailable()
-      } finally mq.stop()
-      // the mirror-content ledger over the SAME 3-batch split (host and
-      // content both derive from doc_id — the q_mirror_hosts planting):
-      // q_mirror_ingest_replay reads the batch partitions back through
-      // the cross-batch distinct + pair-mining fold — distinct-of-union
-      // is associative across any split, so the batch face's oracle
-      // gates it verbatim
-      val hSrc =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val hq = graft.streaming.IngestStreams.mirrorIngest(
-        mirrorDocsOf(hSrc.toDF().toDF("doc_id")),
-        col("host"), col("content"),
-        s"$root/mirror_index", s"$root/mirror_ckpt")
-      try (0 until 3).foreach { b =>
-        hSrc.addData(rows.map(_._1).filter(_ % 3 == b).toSeq: _*)
-        hq.processAllAvailable()
-      } finally hq.stop()
-      root
-    })
+    }
+    // q_link_ingest_replay reads the standing edge-keyed sums (the
+    // planted page derives from doc_id and source) — additive across any
+    // batch split, so the batch face's oracle gates it verbatim
+    byMod3(d => (d._1, d._4)) { ds =>
+      IngestStreams.linkIngest(linkPageCols(ds.toDF("doc_id", "source")),
+        col("url"), col("html"), s"$root/link_index", s"$root/link_ckpt")
+    }
+    // q_meta_ingest_replay reads the per-canonical (sum n_pages, min
+    // min_url) fold (the metaPages planting derives from doc_id, lang and
+    // source) — additive/min-associative across any split
+    byMod3(d => (d._1, d._3, d._4)) { ds =>
+      IngestStreams.metaIngest(metaPages(ds.toDF("doc_id", "lang", "source")),
+        col("url"), col("html"), s"$root/meta_index", s"$root/meta_ckpt")
+    }
+    // q_mirror_ingest_replay reads the cross-batch distinct + pair-mining
+    // fold (host and content derive from doc_id — the q_mirror_hosts
+    // planting); distinct-of-union is associative across any split
+    byMod3(_._1) { ds =>
+      IngestStreams.mirrorIngest(mirrorDocsOf(ds.toDF("doc_id")),
+        col("host"), col("content"), s"$root/mirror_index", s"$root/mirror_ckpt")
+    }
+  }
 
   /** One oracle derivation for the batch mirror face AND its streamed
     * ledger twin (distinct-of-union associativity makes them equal). */
@@ -1449,9 +1500,6 @@ object ExtQueries {
   private def scrambleKey(us: Long, id: Long): (Long, Long) =
     ((us * 2654435761L) ^ id, id)
 
-  private val funnelReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Replay the STREAMING funnel end-to-end, once per fixture dir: the
     * whole events table feeds [[graft.streaming.EventStreams.funnelStages]]
     * as a real checkpointed MemoryStream query in 3 deterministically
@@ -1464,55 +1512,21 @@ object ExtQueries {
     * sentinel noise (user −1, filtered before the state store but past
     * the watermark node) then advances event time so the event-time
     * timeout seals every user's buffer; per-user UPDATE rows land in
-    * parquet tagged by micro-batch. Same first-touch-rebuild +
-    * md5(dir)+pid path contract as [[annIndexFixture]]. */
-  private def funnelReplayFixture(s: SparkSession, dir: String): String =
-    funnelReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_funnel_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts"))
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .as[(Long, String, java.sql.Timestamp)].collect()
-      val scrambled = rows.sortBy(r => scrambleKey(tsMicros(r._3), r._1))
-      val maxMs = rows.iterator.map(_._3.getTime).max
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, java.sql.Timestamp)]
-      val q = graft.streaming.EventStreams.funnelStages(
-        src.toDF().toDF("user_id", "event_type", "ts"),
-        funnelSteps, watermarkDelay = "45 days")
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          df.withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(s"$root/updates")
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try {
-        scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-          src.addData(b.toSeq: _*); q.processAllAvailable()
-        }
-        // sentinel rounds: watermark must both ADVANCE past every event
-        // (first round) and then re-trigger batches so the registered
-        // event-time timeouts actually fire and emit (later rounds)
-        (0 until 3).foreach { i =>
-          src.addData((-1L, "noise",
-            new java.sql.Timestamp(maxMs + 46L * 86400000L + i * 3600000L)))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      root
-    })
-
-  private val intervalReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * parquet tagged by micro-batch. */
+  private val funnelReplayFixture = fixtures.rooted("funnel_replay") { (s, dir, root) =>
+    import s.implicits._
+    val rows = Tables.events(s, dir)
+      .select(col("user_id"), col("event_type"), col("ts"))
+      .filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .as[(Long, String, java.sql.Timestamp)].collect()
+    val maxMs = rows.iterator.map(_._3.getTime).max
+    replay(s, rows.sortBy(r => scrambleKey(tsMicros(r._3), r._1)),
+      sentinelTimes(maxMs).map(t => (-1L, "noise", t))) { ds =>
+      updatesSink(root)(graft.streaming.EventStreams.funnelStages(
+        ds.toDF("user_id", "event_type", "ts"),
+        funnelSteps, watermarkDelay = "45 days"))
+    }
+  }
 
   /** Replay the stream-stream interval join end-to-end, once per
     * (fixture dir, JOIN TYPE): `view` events (left) and `click` events
@@ -1525,69 +1539,50 @@ object ExtQueries {
     * window). Far-future sentinels on BOTH sides (disjoint negative keys,
     * too far apart to join each other) push both watermarks past every
     * left row's window end so the left-outer face flushes its null-padded
-    * finals. Keyed PER JOIN TYPE (r12 judge directive): one key building
-    * all three replays attributed ~80 s of build cost to whichever face
-    * touched first — per-type keys make cost attribution per-face, and
-    * [[prewarmFixtures]] moves the builds out of the timed region
-    * entirely. Same first-touch-rebuild + md5(dir)+pid contract as
-    * [[annIndexFixture]]. */
-  private def intervalReplayFixture(s: SparkSession, dir: String,
-      jt: String): String =
-    intervalReplayBuilt.computeIfAbsent(s"$dir|$jt", { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_interval_replay_${dirHash}_${jt}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_type"))
-        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("event_type").isin("view", "click"))
-        .as[(Long, java.sql.Timestamp, String)].collect()
-      def feed(kind: String) = ev.filter(_._3 == kind).map(r => (r._1, r._2))
-        .sortBy(r => scrambleKey(tsMicros(r._2), r._1))
-      val (views, clicks) = (feed("view"), feed("click"))
-      val maxMs = ev.iterator.map(_._2.getTime).max
-      val lIn =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
-      val rIn =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
-      val q = graft.streaming.EventStreams.intervalJoin(
-        lIn.toDF().toDF("l_user", "l_ts"),
-        rIn.toDF().toDF("r_user", "r_ts"),
-        leftKey = "l_user", rightKey = "r_user",
-        leftTs = "l_ts", rightTs = "r_ts",
-        before = "10 minutes", after = "25 minutes",
-        watermarkDelay = "45 days", joinType = jt)
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", s"$root/$jt")
-        .option("checkpointLocation", s"$root/ckpt_$jt")
-        .start()
-      try {
-        val lb = views.grouped(math.max(1, (views.length + 2) / 3)).toSeq
-        val rb = clicks.grouped(math.max(1, (clicks.length + 2) / 3)).toSeq
-        lb.zipAll(rb, Array.empty[(Long, java.sql.Timestamp)],
-          Array.empty[(Long, java.sql.Timestamp)]).foreach { case (l, r) =>
-          if (l.nonEmpty) lIn.addData(l.toSeq: _*)
-          if (r.nonEmpty) rIn.addData(r.toSeq: _*)
-          q.processAllAvailable()
-        }
-        (0 until 3).foreach { i =>
-          val t = maxMs + 46L * 86400000L + i * 3600000L
-          lIn.addData((-1L, new java.sql.Timestamp(t)))
-          rIn.addData((-2L, new java.sql.Timestamp(t)))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      root
-    })
+    * finals. One fixture PER JOIN TYPE: one build of all three replays
+    * attributed ~80 s of build cost to whichever face touched first. */
+  private def intervalReplay(jt: String)(s: SparkSession, dir: String,
+      root: String): Unit = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    import s.implicits._
+    val ev = Tables.events(s, dir)
+      .select(col("user_id"), col("ts"), col("event_type"))
+      .filter(col("user_id").isNotNull && col("ts").isNotNull &&
+        col("event_type").isin("view", "click"))
+      .as[(Long, java.sql.Timestamp, String)].collect()
+    require(ev.nonEmpty, "a replay needs rows")
+    def feed(kind: String) = inThirds(ev.filter(_._3 == kind)
+      .map(r => (r._1, r._2)).sortBy(r => scrambleKey(tsMicros(r._2), r._1)))
+    val maxMs = ev.iterator.map(_._2.getTime).max
+    val lIn =
+      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
+    val rIn =
+      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
+    val q = appendSink(root, jt)(graft.streaming.EventStreams.intervalJoin(
+      lIn.toDF().toDF("l_user", "l_ts"),
+      rIn.toDF().toDF("r_user", "r_ts"),
+      leftKey = "l_user", rightKey = "r_user",
+      leftTs = "l_ts", rightTs = "r_ts",
+      before = "10 minutes", after = "25 minutes",
+      watermarkDelay = "45 days", joinType = jt))
+    try {
+      feed("view").zipAll(feed("click"), Nil, Nil).foreach { case (l, r) =>
+        if (l.nonEmpty) lIn.addData(l.toSeq: _*)
+        if (r.nonEmpty) rIn.addData(r.toSeq: _*)
+        q.processAllAvailable()
+      }
+      sentinelTimes(maxMs).foreach { t =>
+        lIn.addData((-1L, t))
+        rIn.addData((-2L, t))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+  }
 
-  private val sessionReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One [[intervalReplay]] fixture per join type. */
+  private val intervalReplayFixtures: Map[String, Fixture[String]] =
+    Seq("inner", "left_outer", "full_outer").map(jt =>
+      jt -> fixtures.rooted(s"interval_replay_$jt")(intervalReplay(jt))).toMap
 
   /** Replay STREAMING sessionization end-to-end, once per fixture dir:
     * the whole events table feeds [[graft.operators.Sessionize.stream]]
@@ -1600,49 +1595,21 @@ object ExtQueries {
     * wider than the fixture span so scrambling never late-drops an event
     * (lateness semantics stay spec-locked); far-future sentinel noise
     * (user −1) then pushes the watermark past every real session's close
-    * so append mode seals them all. Same first-touch-rebuild +
-    * md5(dir)+pid path contract as [[annIndexFixture]]. */
-  private def sessionReplayFixture(s: SparkSession, dir: String): String =
-    sessionReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_session_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"))
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .as[(Long, java.sql.Timestamp)].collect()
-      val scrambled = rows.sortBy(r => scrambleKey(tsMicros(r._2), r._1))
-      val maxMs = rows.iterator.map(_._2.getTime).max
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
-      val q = graft.operators.Sessionize.stream(
-        src.toDF().toDF("user_id", "ts"), "user_id", "ts",
-        gap = "30 minutes", watermarkDelay = "45 days")
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", s"$root/sessions")
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try {
-        scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-          src.addData(b.toSeq: _*); q.processAllAvailable()
-        }
-        (0 until 3).foreach { i =>
-          src.addData((-1L,
-            new java.sql.Timestamp(maxMs + 46L * 86400000L + i * 3600000L)))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      root
-    })
-
-  private val dailyAvgReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * so append mode seals them all. */
+  private val sessionReplayFixture = fixtures.rooted("session_replay") { (s, dir, root) =>
+    import s.implicits._
+    val rows = Tables.events(s, dir)
+      .select(col("user_id"), col("ts"))
+      .filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .as[(Long, java.sql.Timestamp)].collect()
+    val maxMs = rows.iterator.map(_._2.getTime).max
+    replay(s, rows.sortBy(r => scrambleKey(tsMicros(r._2), r._1)),
+      sentinelTimes(maxMs).map(t => (-1L, t))) { ds =>
+      appendSink(root, "sessions")(graft.operators.Sessionize.stream(
+        ds.toDF("user_id", "ts"), "user_id", "ts",
+        gap = "30 minutes", watermarkDelay = "45 days"))
+    }
+  }
 
   /** Replay the reference's CORE aggregation surface (A1/M3 daily
     * average, the KTable changelog) end-to-end, once per fixture dir:
@@ -1655,46 +1622,21 @@ object ExtQueries {
     * the feed is split — which is what lets the streaming aggregation
     * machinery itself sit under q_a1_daily_avg's DuckDB oracle (a
     * double-sum avg would diverge by reassociation on real data; see the
-    * CellBuf scaladoc). Same first-touch-rebuild + md5(dir)+pid contract
-    * as [[annIndexFixture]]. */
-  private def dailyAvgReplayFixture(s: SparkSession, dir: String): String =
-    dailyAvgReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_dailyavg_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("value"))
-        .as[(Long, java.sql.Timestamp, Double)].collect()
-      val scrambled = rows.sortBy(r => scrambleKey(tsMicros(r._2), r._1))
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, Double)]
-      val readings = src.toDF().toDF("user_id", "ts", "value")
+    * CellBuf scaladoc). */
+  private val dailyAvgReplayFixture = fixtures.rooted("dailyavg_replay") { (s, dir, root) =>
+    import s.implicits._
+    val rows = Tables.events(s, dir)
+      .select(col("user_id"), col("ts"), col("value"))
+      .as[(Long, java.sql.Timestamp, Double)].collect()
+    replay(s, rows.sortBy(r => scrambleKey(tsMicros(r._2), r._1)), Nil) { ds =>
+      val readings = ds.toDF("user_id", "ts", "value")
         .withColumn("day", to_date(col("ts")))
         .withColumn("tmp_f", col("value"))
         .withColumn("tmp_c", (col("value") - 32.0d) * 5.0d / 9.0d)
-      val q = graft.operators.WeatherOps.dailyAverage(readings,
-        keyCols = Seq("user_id"), dateCol = "day", exact = true)
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          df.withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(s"$root/updates")
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val hoppingReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      updatesSink(root)(graft.operators.WeatherOps.dailyAverage(readings,
+        keyCols = Seq("user_id"), dateCol = "day", exact = true))
+    }
+  }
 
   /** Replay the HOPPING-window aggregation (the KS `TimeWindows
     * .of(1d).advanceBy(12h)` class, q_hopping_window's exact shape) as an
@@ -1704,48 +1646,22 @@ object ExtQueries {
     * aggregate carries the DECIMAL sum (exact, order-independent), so
     * the final per-(window, type) state is BIT-identical to the one-shot
     * batch answer — which lets the whole windowed streaming machinery
-    * answer to q_hopping_window's integer-epoch-micros oracle. Same
-    * first-touch-rebuild + md5(dir)+pid path contract as
-    * [[annIndexFixture]]. */
-  private def hoppingReplayFixture(s: SparkSession, dir: String): String =
-    hoppingReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_hopping_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"), col("ts"), col("value"))
-        .filter(col("ts").isNotNull)
-        .as[(Long, String, java.sql.Timestamp, Double)].collect()
-      val scrambled = rows.sortBy(r => scrambleKey(tsMicros(r._3), r._1))
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, java.sql.Timestamp, Double)]
-      val q = src.toDF().toDF("event_id", "event_type", "ts", "value")
+    * answer to q_hopping_window's integer-epoch-micros oracle. */
+  private val hoppingReplayFixture = fixtures.rooted("hopping_replay") { (s, dir, root) =>
+    import s.implicits._
+    val rows = Tables.events(s, dir)
+      .select(col("event_id"), col("event_type"), col("ts"), col("value"))
+      .filter(col("ts").isNotNull)
+      .as[(Long, String, java.sql.Timestamp, Double)].collect()
+    replay(s, rows.sortBy(r => scrambleKey(tsMicros(r._3), r._1)), Nil) { ds =>
+      updatesSink(root)(ds.toDF("event_id", "event_type", "ts", "value")
         .groupBy(window(col("ts"), "1 day", "12 hours"), col("event_type"))
         .agg(sum(col("value").cast("decimal(18,6)")).as("dec_sum"),
           count(col("value")).as("cnt"), count(lit(1)).as("n"))
         .select(unix_micros(col("window.start")).as("w_start_us"),
-          col("event_type"), col("dec_sum"), col("cnt"), col("n"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          df.withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(s"$root/updates")
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val latestReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+          col("event_type"), col("dec_sum"), col("cnt"), col("n")))
+    }
+  }
 
   /** Replay the KTable-materialization surface (C1 latest-per-key, the
     * reference's `toTable` contract) end-to-end, once per fixture dir:
@@ -1756,45 +1672,20 @@ object ExtQueries {
     * state rule (an older event_id arriving later must NOT overwrite) is
     * what lands under the DuckDB gate: the face reduces the update
     * changelog to its final row per key and answers to q_c1_latest's
-    * batch window oracle. Same first-touch-rebuild + md5(dir)+pid path
-    * contract as [[annIndexFixture]]. */
-  private def latestReplayFixture(s: SparkSession, dir: String): String =
-    latestReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_latest_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-        .as[(Long, Long, String, Double)].collect()
-      val scrambled = rows.sortBy(r => scrambleKey(r._2, r._1))
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String, Double)]
-      val q = graft.streaming.WeatherStreams.latestPerKeyStream(
-        src.toDS().map { case (u, e, t, v) => (u, e, (t, v)) })
+    * batch window oracle. */
+  private val latestReplayFixture = fixtures.rooted("latest_replay") { (s, dir, root) =>
+    import s.implicits._
+    val rows = Tables.events(s, dir)
+      .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
+      .as[(Long, Long, String, Double)].collect()
+    replay(s, rows.sortBy(r => scrambleKey(r._2, r._1)), Nil) { ds =>
+      updatesSink(root)(graft.streaming.WeatherStreams.latestPerKeyStream(
+          ds.map { case (u, e, t, v) => (u, e, (t, v)) })
         .toDF("user_id", "event_id", "payload")
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          df.select(col("user_id"), col("event_id"),
-            col("payload._1").as("event_type"), col("payload._2").as("value"))
-            .withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(s"$root/updates")
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val enrichReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+        .select(col("user_id"), col("event_id"),
+          col("payload._1").as("event_type"), col("payload._2").as("value")))
+    }
+  }
 
   /** Replay the reference's CORE J1 stream-table enrichment join
     * (`WeatherHotelsApp.java:134-142`'s KStream⋈KTable, the
@@ -1805,50 +1696,35 @@ object ExtQueries {
     * batch face joins; landed rows across batches must equal the one-shot
     * batch join under q_j1_enrich's oracle (each stream row meets the same
     * static table whatever batch it rides — the arrival-order-independent
-    * truth). Same first-touch-rebuild + md5(dir)+pid contract as
-    * [[annIndexFixture]]. */
-  private def enrichReplayFixture(s: SparkSession, dir: String): String =
-    enrichReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_enrich_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val hist = CoreQueries.history(s, dir).withColumnRenamed("user_id", "key")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val rows = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_name"))
-        .as[(Long, String)].collect()
-      val scrambled = rows.sortBy(r => scrambleKey(r._1 * 2654435761L, r._1))
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      // enrichStream pins Trigger.AvailableNow — so the replay runs the
-      // PRODUCTION restart pattern: one AvailableNow run per arriving
-      // batch, all sharing the checkpoint (exactly-once across restarts
-      // via recorded offsets), instead of one long-lived query
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
+    * truth). */
+  private val enrichReplayFixture = fixtures.rooted("enrich_replay") { (s, dir, root) =>
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    import s.implicits._
+    val rows = Tables.customer(s, dir)
+      .select(col("c_custkey"), col("c_name"))
+      .as[(Long, String)].collect()
+    require(rows.nonEmpty, "a replay needs rows")
+    val hist = CoreQueries.history(s, dir).withColumnRenamed("user_id", "key")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val src =
+      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    // enrichStream pins Trigger.AvailableNow — so the replay runs the
+    // PRODUCTION restart pattern: one AvailableNow run per arriving
+    // batch, all sharing the checkpoint (exactly-once across restarts
+    // via recorded offsets), instead of one long-lived query
+    try inThirds(rows.sortBy(r => scrambleKey(r._1 * 2654435761L, r._1)))
+      .foreach { b =>
         src.addData(b.toSeq: _*)
-        val q = graft.streaming.WeatherStreams.enrichStream(
+        graft.streaming.WeatherStreams.enrichStream(
           src.toDF().toDF("c_custkey", "c_name")
             .withColumn("key", col("c_custkey")),
           () => hist, s"$root/ckpt") { out =>
           out.select(col("c_custkey"), col("c_name"), col("n_days"), col("history"))
             .write.mode("append").parquet(s"$root/joined")
-        }
-        q.awaitTermination()
-      } finally {
-        hist.unpersist()
-        ()
+        }.awaitTermination()
       }
-      root
-    })
-
-  private val hllReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    finally hist.unpersist()
+  }
 
   /** Replay STREAMED sketch-state maintenance, once per fixture dir: an
     * update-mode streaming aggregation carries the HLL++ sketch
@@ -1859,67 +1735,19 @@ object ExtQueries {
     * follows the q_approx_distinct contract pattern: emit the exact
     * per-type cardinality (oracle-recomputable) plus the |approx −
     * exact| ≤ 5% claim as a hash-gated boolean — a sketch whose state
-    * merged wrongly across batches blows the bound and flips the bit.
-    * Same first-touch-rebuild + md5(dir)+pid path contract as
-    * [[annIndexFixture]]. */
-  /** Shared scaffold of the update-mode SKETCH replay fixtures
-    * ([[hllReplayFixture]], [[pctReplayFixture]]): deterministically
-    * scrambled 3-batch checkpointed MemoryStream → update-mode
-    * aggregate → batch-stamped parquet under
-    * `/tmp/graft_<prefix>_<md5(dir)>_p<pid>/updates` (the r14 review
-    * counted this scaffold copy-pasted per fixture — any fix to the
-    * shared mechanics now lands once). `rows` must be non-empty: zero
-    * batches would never create the updates path and the consuming
-    * face's read would throw path-not-found. */
-  private def updateReplayFixture[T](s: SparkSession, dir: String,
-      prefix: String,
-      built: java.util.concurrent.ConcurrentHashMap[String, String],
-      rows: => Array[T], order: T => (Long, Long), cols: Seq[String],
-      agg: DataFrame => DataFrame)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): String =
-    built.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_${prefix}_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val data = rows
-      require(data.nonEmpty, s"$prefix replay fixture needs rows ($dir)")
-      val scrambled = data.sortBy(order)
-      val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-      val q = agg(src.toDF().toDF(cols: _*))
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, bid: Long) =>
-          df.withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(s"$root/updates")
-        }
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private def hllReplayFixture(s: SparkSession, dir: String): String = {
+    * merged wrongly across batches blows the bound and flips the bit. */
+  private val hllReplayFixture = fixtures.rooted("hll_replay") { (s, dir, root) =>
     import s.implicits._
-    updateReplayFixture[(Long, String, Long)](s, dir, "hll_replay",
-      hllReplayBuilt,
-      rows = Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"), col("user_id"))
-        .filter(col("event_type").isNotNull && col("user_id").isNotNull)
-        .as[(Long, String, Long)].collect(),
-      order = r => scrambleKey(r._1 * 2654435761L, r._3),
-      cols = Seq("event_id", "event_type", "user_id"),
-      agg = _.groupBy(col("event_type"))
+    val rows = Tables.events(s, dir)
+      .select(col("event_id"), col("event_type"), col("user_id"))
+      .filter(col("event_type").isNotNull && col("user_id").isNotNull)
+      .as[(Long, String, Long)].collect()
+    replay(s, rows.sortBy(r => scrambleKey(r._1 * 2654435761L, r._3)), Nil) { ds =>
+      updatesSink(root)(ds.toDF("event_id", "event_type", "user_id")
+        .groupBy(col("event_type"))
         .agg(approx_count_distinct(col("user_id"), 0.01).as("approx_users")))
+    }
   }
-
-  private val pctReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** ONE accuracy constant for the percentile replay — consumed by the
     * fixture's sketch AND the face's rank band, so the two can never
@@ -1933,25 +1761,20 @@ object ExtQueries {
     * the QuantileSummaries partial state merges in the state store
     * across batches, which is exactly what the face's rank-error
     * contract gates (a wrong cross-batch merge lands the final estimate
-    * outside the ±1/accuracy rank band). Same first-touch-rebuild +
-    * md5(dir)+pid path contract as [[annIndexFixture]]. */
-  private def pctReplayFixture(s: SparkSession, dir: String): String = {
+    * outside the ±1/accuracy rank band). */
+  private val pctReplayFixture = fixtures.rooted("pct_replay") { (s, dir, root) =>
     import s.implicits._
-    updateReplayFixture[(Long, String, Double)](s, dir, "pct_replay",
-      pctReplayBuilt,
-      rows = Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"), col("value"))
-        .filter(col("event_type").isNotNull && col("value").isNotNull)
-        .as[(Long, String, Double)].collect(),
-      order = r => scrambleKey(r._1 * 2654435761L, r._1),
-      cols = Seq("event_id", "event_type", "value"),
-      agg = _.groupBy(col("event_type"))
+    val rows = Tables.events(s, dir)
+      .select(col("event_id"), col("event_type"), col("value"))
+      .filter(col("event_type").isNotNull && col("value").isNotNull)
+      .as[(Long, String, Double)].collect()
+    replay(s, rows.sortBy(r => scrambleKey(r._1 * 2654435761L, r._1)), Nil) { ds =>
+      updatesSink(root)(ds.toDF("event_id", "event_type", "value")
+        .groupBy(col("event_type"))
         .agg(percentile_approx(col("value"), lit(0.5),
           lit(pctReplayAccuracy)).as("ap50")))
+    }
   }
-
-  private val mediaReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Streamed media ingest (decode-at-ingest), once per fixture dir: the
     * q_media_decode doc-id subset arrives as a 3-batch deterministically
@@ -1962,43 +1785,16 @@ object ExtQueries {
     * append-mode parquet FILE SINK — exactly-once via the sink log, the
     * standing feature table a media corpus maintains. The
     * q_media_stream_replay face reads the sink back and must hash-match
-    * q_media_decode's closed-form oracle verbatim. Same
-    * first-touch-rebuild + md5(dir)+pid path contract as
-    * [[annIndexFixture]]. */
-  private def mediaReplayFixture(s: SparkSession, dir: String): String =
-    mediaReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_media_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val ids = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id")).as[Long].collect()
-      // empty input would feed zero batches: the parquet sink then never
-      // creates <root>/features and the face fails later with an opaque
-      // path-not-found instead of a clear fixture error
-      require(ids.nonEmpty, s"media replay fixture needs rows ($dir)")
-      val scrambled = ids.sortBy(id => scrambleKey(id, id))
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = Multimodal.decodeFeatures(
-          Multimodal.attachPng(src.toDF().toDF("doc_id")))
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$root/features")
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val wetFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * q_media_decode's closed-form oracle verbatim. */
+  private val mediaReplayFixture = fixtures.rooted("media_replay") { (s, dir, root) =>
+    import s.implicits._
+    val ids = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
+      .select(col("doc_id")).as[Long].collect()
+    replay(s, ids.sortBy(id => scrambleKey(id, id)), Nil) { ds =>
+      appendSink(root, "features")(
+        Multimodal.decodeFeatures(Multimodal.attachPng(ds.toDF("doc_id"))))
+    }
+  }
 
   /** First-touch WET (WARC conversion) fixture: one crawl-dump file
     * rendered from the documents table — per record, the spec'd header
@@ -2006,50 +1802,59 @@ object ExtQueries {
     * p/<doc_id>`, Content-Length) + blank line + the doc text verbatim
     * + the record terminator. Driver-side StringBuilder is fine: the
     * fixture corpus is bounded (≤ 5k docs); a real dump arrives as
-    * many files and never passes through the driver. Same
-    * first-touch-rebuild + md5(dir)+pid path contract as the replay
-    * fixtures. */
-  private def wetFixture(s: SparkSession, dir: String): String =
-    wetFixtureBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_wet_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      java.nio.file.Files.writeString(
-        rootPath.resolve("corpus.wet"), renderWet(rows))
-      root
-    })
-
-  /** Render document rows as spec'd WET conversion records — shared by
-    * the batch fixture ([[wetFixture]]) and the streamed-arrival one
-    * ([[wetIngestFixture]]); Content-Length is BYTES per the WARC spec
-    * (== chars only for ASCII; the fixture corpus is ASCII, but write
-    * it correctly). */
-  private def renderWet(rows: Array[org.apache.spark.sql.Row]): String = {
-    val sb = new StringBuilder
-    rows.foreach { r =>
-      val (id, src, text) = (r.getLong(0), r.getString(1), r.getString(2))
-      val nBytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-      sb.append("WARC/1.0\r\n")
-        .append("WARC-Type: conversion\r\n")
-        .append(s"WARC-Target-URI: http://$src.example.com/p/$id\r\n")
-        .append(s"Content-Length: $nBytes\r\n")
-        .append("\r\n")
-        .append(text)
-        .append("\r\n\r\n")
-    }
-    sb.toString
+    * many files and never passes through the driver. */
+  private val wetFixture = fixtures.rooted("wet") { (s, dir, root) =>
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "corpus.wet"),
+      renderWet(docRows(s, dir)))
   }
 
-  private val wetIngestBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The documents table's (doc_id, source, text) rows in doc_id order —
+    * the input every rendered crawl-dump fixture starts from. */
+  private def docRows(s: SparkSession, dir: String): Array[(Long, String, String)] = {
+    import s.implicits._
+    Tables.documents(s, dir)
+      .select(col("doc_id").cast("long"), col("source"), col("text"))
+      .orderBy(col("doc_id")).as[(Long, String, String)].collect()
+  }
+
+  /** One text WARC record: the header block (`extra` WARC headers after
+    * the target URI; Content-Length is `block`'s UTF-8 BYTES per the WARC
+    * spec), a blank line, the block, the record terminator. */
+  private def warcText(recType: String, uri: String, extra: Seq[String],
+      block: String): String =
+    s"WARC/1.0\r\nWARC-Type: $recType\r\nWARC-Target-URI: $uri\r\n" +
+      extra.map(_ + "\r\n").mkString +
+      s"Content-Length: ${block.getBytes(java.nio.charset.StandardCharsets.UTF_8).length}" +
+      s"\r\n\r\n$block\r\n\r\n"
+
+  /** Render document rows as spec'd WET conversion records — shared by
+    * the batch fixture ([[wetFixture]]) and the streamed-arrival ones
+    * ([[wetIngestFixture]], [[crawlIngestFixture]]). */
+  private def renderWet(rows: collection.Seq[(Long, String, String)]): String =
+    rows.map { case (id, src, text) =>
+      warcText("conversion", s"http://$src.example.com/p/$id", Nil, text)
+    }.mkString
+
+  /** The file-arrival replay of the crawl-bucket fixtures: dump 0 lands
+    * and the query `start` builds drains it, dump 1 lands and drains, the
+    * query stops; dump 2 lands while the job is DOWN and a restarted
+    * query drains it from the checkpoint — multi-batch file discovery
+    * AND recovery. */
+  private def fileArrivalReplay(root: String,
+      dump: Int => collection.Seq[(Long, String, String)])(
+      start: () => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "in"))
+    def land(i: Int): Unit = java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(root, "in", s"part$i.wet"), renderWet(dump(i)))
+    Seq(Seq(0, 1), Seq(2)).foreach { dumps =>
+      land(dumps.head)
+      val q = start()
+      try {
+        q.processAllAvailable()
+        dumps.tail.foreach { i => land(i); q.processAllAvailable() }
+      } finally q.stop()
+    }
+  }
 
   /** Streamed crawl-bucket ingest fixture: the WET corpus arrives as
     * THREE dump files landing in a watched directory over time — the
@@ -2061,50 +1866,13 @@ object ExtQueries {
     * between file 2 and file 3 — so the replay covers multi-batch file
     * discovery AND recovery. The sink read-back must equal the batch
     * face's oracle verbatim (`q_wet_ingest_replay` shares q_wet_scan's
-    * SQL). Same first-touch-rebuild + md5(dir)+pid contract as
-    * [[wetFixture]]. */
-  private def wetIngestFixture(s: SparkSession, dir: String): String =
-    wetIngestBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_wet_ingest_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath.resolve("in"))
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      def writePart(i: Int): Unit = java.nio.file.Files.writeString(
-        rootPath.resolve("in").resolve(s"part$i.wet"),
-        renderWet(rows.filter(_.getLong(0) % 3 == i)))
-      def drain(): Unit = {
-        val q = graft.sources.Sources.wetStream(s, s"$root/in")
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", s"$root/sink")
-          .option("checkpointLocation", s"$root/ckpt")
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      writePart(0)
-      val q = graft.sources.Sources.wetStream(s, s"$root/in")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$root/sink")
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try {
-        q.processAllAvailable()
-        writePart(1)
-        q.processAllAvailable()
-      } finally q.stop()
-      writePart(2) // arrives while the job is DOWN — the restart leg
-      drain()
-      root
-    })
-
-  private val crawlIngestBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * SQL). */
+  private val wetIngestFixture = fixtures.rooted("wet_ingest") { (s, dir, root) =>
+    val rows = docRows(s, dir)
+    fileArrivalReplay(root, i => rows.filter(_._1 % 3 == i)) { () =>
+      appendSink(root, "sink")(graft.sources.Sources.wetStream(s, s"$root/in"))
+    }
+  }
 
   /** Streamed COMPOSED crawl pipeline fixture (r19 — the r18 judge's
     * missing-#5, `q_crawl_pipeline`'s streamed twin): the WET corpus
@@ -2121,55 +1889,27 @@ object ExtQueries {
     * range-ordered arrival, the earliest batch holding a text contains
     * its min-id occurrence, so first-arrival-wins incremental dedup
     * lands on EXACTLY the batch face's min-id-per-text survivors — the
-    * replay gates against `q_crawl_pipeline`'s oracle VERBATIM. Same
-    * first-touch-rebuild + md5(dir)+pid contract as [[wetFixture]]. */
-  private def crawlIngestFixture(s: SparkSession, dir: String): String =
-    crawlIngestBuilt.computeIfAbsent(dir, { _ =>
-      import s.implicits._
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_crawl_ingest_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath.resolve("in"))
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      val n = rows.length
-      def writePart(i: Int): Unit = java.nio.file.Files.writeString(
-        rootPath.resolve("in").resolve(s"part$i.wet"),
-        renderWet(rows.slice(i * n / 3, if (i == 2) n else (i + 1) * n / 3)))
-      def pipeline(): org.apache.spark.sql.streaming.StreamingQuery = {
-        val recs = graft.sources.Sources.wetStream(s, s"$root/in")
-          .select(
-            regexp_extract(col("uri"), "/p/(\\d+)", 1).cast("long")
-              .as("doc_id"),
-            col("uri"), col("body").as("text"))
-        val unblocked = Urls.domainFilter(recs, col("uri"),
-          urlBlocklist.toDF("domain"))
-        val gated = TextAnalysis.qualityRules(
-          TextAnalysis.languageId(unblocked),
-          requiredWords = qualityRuleWords).filter(col("keep"))
-        graft.streaming.IngestStreams.dedupIngest(gated,
-          s"$root/index", s"$root/out", s"$root/ckpt")
-      }
-      writePart(0)
-      val q = pipeline()
-      try {
-        q.processAllAvailable()
-        writePart(1)
-        q.processAllAvailable()
-      } finally q.stop()
-      writePart(2) // arrives while the job is DOWN — the restart leg
-      val q2 = pipeline()
-      try q2.processAllAvailable() finally q2.stop()
-      root
-    })
-
-  private val warcFixtureBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * replay gates against `q_crawl_pipeline`'s oracle VERBATIM. */
+  private val crawlIngestFixture = fixtures.rooted("crawl_ingest") { (s, dir, root) =>
+    import s.implicits._
+    val rows = docRows(s, dir)
+    val n = rows.length
+    fileArrivalReplay(root,
+      i => rows.slice(i * n / 3, if (i == 2) n else (i + 1) * n / 3)) { () =>
+      val recs = graft.sources.Sources.wetStream(s, s"$root/in")
+        .select(
+          regexp_extract(col("uri"), "/p/(\\d+)", 1).cast("long")
+            .as("doc_id"),
+          col("uri"), col("body").as("text"))
+      val unblocked = Urls.domainFilter(recs, col("uri"),
+        urlBlocklist.toDF("domain"))
+      val gated = TextAnalysis.qualityRules(
+        TextAnalysis.languageId(unblocked),
+        requiredWords = qualityRuleWords).filter(col("keep"))
+      graft.streaming.IngestStreams.dedupIngest(gated,
+        s"$root/index", s"$root/out", s"$root/ckpt")
+    }
+  }
 
   /** First-touch WARC `response` fixture: the crawl dump one step
     * UPSTREAM of WET — per record the WARC header block, then a full
@@ -2177,43 +1917,17 @@ object ExtQueries {
     * text as payload); the WARC Content-Length covers the WHOLE HTTP
     * block in bytes per the spec. Status and content type cycle on
     * doc_id so both header-extraction regexes see multiple values.
-    * Same driver-side-bounded render + first-touch-rebuild +
-    * md5(dir)+pid contract as [[wetFixture]]. */
-  private def warcFixture(s: SparkSession, dir: String): String =
-    warcFixtureBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      val sb = new StringBuilder
-      rows.foreach { r =>
-        val (id, src, text) = (r.getLong(0), r.getString(1), r.getString(2))
+    * Same driver-side-bounded render as [[wetFixture]]. */
+  private val warcFixture = fixtures.rooted("warc") { (s, dir, root) =>
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "corpus.warc"),
+      docRows(s, dir).map { case (id, src, text) =>
         val status = if (id % 3 == 0) 404 else 200
         val ctype =
           if (id % 2 == 0) "text/html; charset=UTF-8" else "text/plain"
-        val http =
-          s"HTTP/1.1 $status OK\r\nContent-Type: $ctype\r\n\r\n$text"
-        val nBytes =
-          http.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-        sb.append("WARC/1.0\r\n")
-          .append("WARC-Type: response\r\n")
-          .append(s"WARC-Target-URI: http://$src.example.com/p/$id\r\n")
-          .append(s"Content-Length: $nBytes\r\n")
-          .append("\r\n")
-          .append(http)
-          .append("\r\n\r\n")
-      }
-      java.nio.file.Files.writeString(
-        rootPath.resolve("corpus.warc"), sb.toString)
-      root
-    })
+        warcText("response", s"http://$src.example.com/p/$id", Nil,
+          s"HTTP/1.1 $status OK\r\nContent-Type: $ctype\r\n\r\n$text")
+      }.mkString)
+  }
 
   /** The HTML wrapper planted around each doc's text — shared by the
     * q_html_strip face and the WARC-with-HTML-payload fixture
@@ -2227,108 +1941,74 @@ object ExtQueries {
   private val htmlWrapSuffix: String =
     "</p>&nbsp;&amp;amp; <b>tail</b></body></html>"
 
-  private val sitemapBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Sitemap fixture: two urlset files (docs split by doc_id parity —
     * the per-file parallelism surface) plus one sitemap INDEX naming
     * them, rendered per the sitemaps.org protocol from doc_id
     * arithmetic — `&` in the mod-3 query class is entity-escaped in the
-    * XML (the spec REQUIRES it), so the engine's decode is load-bearing.
-    * Same first-touch-rebuild + md5(dir)+pid contract as
-    * [[warcFixture]]. */
-  private def sitemapFixture(s: SparkSession, dir: String): String =
-    sitemapBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_sitemap_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"))
-        .orderBy(col("doc_id")).collect()
-      val sets = Array.fill(2)(new StringBuilder(
-        "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
-          "<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n"))
-      rows.foreach { r =>
-        val (id, src) = (r.getLong(0), r.getString(1))
-        val loc = s"http://$src.example.com/p/$id" +
-          (if (id % 3 == 0) "?a=1&amp;b=2" else "")
-        val sb = sets((id % 2).toInt)
-        sb.append("  <url>\n    <loc>").append(loc).append("</loc>\n")
-        if (id % 4 == 0)
-          sb.append(f"    <lastmod>2026-02-${id % 28 + 1}%02d</lastmod>\n")
-        if (id % 3 == 0) sb.append("    <changefreq>daily</changefreq>\n")
-        else if (id % 3 == 1) sb.append("    <changefreq>weekly</changefreq>\n")
-        if (id % 5 == 0)
-          sb.append(s"    <priority>0.${id % 10}</priority>\n")
-        sb.append("  </url>\n")
-      }
-      sets.zipWithIndex.foreach { case (sb, i) =>
-        java.nio.file.Files.writeString(
-          rootPath.resolve(s"sitemap_$i.xml"), sb.append("</urlset>\n").toString)
-      }
-      java.nio.file.Files.writeString(rootPath.resolve("sitemap_index.xml"),
-        "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
-          "<sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n" +
-          (0 until 2).map(i =>
-            s"  <sitemap>\n    <loc>http://site.example.com/sitemap_$i.xml</loc>\n" +
-              "    <lastmod>2026-03-01</lastmod>\n  </sitemap>\n").mkString +
-          "</sitemapindex>\n")
-      root
-    })
-
-  private val warcMimeBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * XML (the spec REQUIRES it), so the engine's decode is load-bearing. */
+  private val sitemapFixture = fixtures.rooted("sitemap") { (s, dir, root) =>
+    val rootPath = java.nio.file.Paths.get(root)
+    val sets = Array.fill(2)(new StringBuilder(
+      "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
+        "<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n"))
+    docRows(s, dir).foreach { case (id, src, _) =>
+      val loc = s"http://$src.example.com/p/$id" +
+        (if (id % 3 == 0) "?a=1&amp;b=2" else "")
+      val sb = sets((id % 2).toInt)
+      sb.append("  <url>\n    <loc>").append(loc).append("</loc>\n")
+      if (id % 4 == 0)
+        sb.append(f"    <lastmod>2026-02-${id % 28 + 1}%02d</lastmod>\n")
+      if (id % 3 == 0) sb.append("    <changefreq>daily</changefreq>\n")
+      else if (id % 3 == 1) sb.append("    <changefreq>weekly</changefreq>\n")
+      if (id % 5 == 0)
+        sb.append(s"    <priority>0.${id % 10}</priority>\n")
+      sb.append("  </url>\n")
+    }
+    sets.zipWithIndex.foreach { case (sb, i) =>
+      java.nio.file.Files.writeString(
+        rootPath.resolve(s"sitemap_$i.xml"), sb.append("</urlset>\n").toString)
+    }
+    java.nio.file.Files.writeString(rootPath.resolve("sitemap_index.xml"),
+      "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
+        "<sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n" +
+        (0 until 2).map(i =>
+          s"  <sitemap>\n    <loc>http://site.example.com/sitemap_$i.xml</loc>\n" +
+            "    <lastmod>2026-03-01</lastmod>\n  </sitemap>\n").mkString +
+        "</sitemapindex>\n")
+  }
 
   /** WARC `response` fixture whose payloads are REAL container bytes
     * (the q_mime_sniff encoders: PNG/JPEG/GIF/WAV/AVI by doc_id mod 5)
     * with a Content-Type header that LIES on odd ids (`text/html`) —
     * the crawl-reality audit input: server-claimed type vs what the
     * bytes actually are. Binary render via [[warcRecBytes]]. */
-  private def warcMimeFixture(s: SparkSession, dir: String): String =
-    warcMimeBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_mime_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val all = Multimodal.attachPng(ids.filter(col("doc_id") % 5 === 0))
-        .unionByName(Multimodal.attachJpeg(ids.filter(col("doc_id") % 5 === 1)))
-        .unionByName(Multimodal.attachGif(ids.filter(col("doc_id") % 5 === 2)))
-        .unionByName(Multimodal.attachWav(ids.filter(col("doc_id") % 5 === 3)))
-        .unionByName(Video.attachAvi(ids.filter(col("doc_id") % 5 === 4),
-          _ => Video.CodecRgb))
-      val rows = all.select(col("doc_id"), col("media.payload"))
-        .orderBy(col("doc_id")).collect()
-      val out = new java.io.ByteArrayOutputStream()
-      rows.foreach { r =>
-        val id = r.getLong(0)
-        val mime = (id % 5) match {
-          case 0 => "image/png"
-          case 1 => "image/jpeg"
-          case 2 => "image/gif"
-          case 3 => "audio/wav"
-          case _ => "video/x-msvideo"
-        }
-        val claimed = if (id % 2 == 0) mime else "text/html"
-        warcRecBytes(out, s"http://m.example.com/p/$id",
-          Seq(s"Content-Type: $claimed"), r.getAs[Array[Byte]](1))
+  private val warcMimeFixture = fixtures.rooted("warc_mime") { (s, dir, root) =>
+    val ids = Tables.documents(s, dir).select(col("doc_id"))
+    val all = Multimodal.attachPng(ids.filter(col("doc_id") % 5 === 0))
+      .unionByName(Multimodal.attachJpeg(ids.filter(col("doc_id") % 5 === 1)))
+      .unionByName(Multimodal.attachGif(ids.filter(col("doc_id") % 5 === 2)))
+      .unionByName(Multimodal.attachWav(ids.filter(col("doc_id") % 5 === 3)))
+      .unionByName(Video.attachAvi(ids.filter(col("doc_id") % 5 === 4),
+        _ => Video.CodecRgb))
+    val rows = all.select(col("doc_id"), col("media.payload"))
+      .orderBy(col("doc_id")).collect()
+    val out = new java.io.ByteArrayOutputStream()
+    rows.foreach { r =>
+      val id = r.getLong(0)
+      val mime = (id % 5) match {
+        case 0 => "image/png"
+        case 1 => "image/jpeg"
+        case 2 => "image/gif"
+        case 3 => "audio/wav"
+        case _ => "video/x-msvideo"
       }
-      java.nio.file.Files.write(rootPath.resolve("corpus.warc"),
-        out.toByteArray)
-      root
-    })
-
-  private val warcRedirectBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      val claimed = if (id % 2 == 0) mime else "text/html"
+      warcRecBytes(out, s"http://m.example.com/p/$id",
+        Seq(s"Content-Type: $claimed"), r.getAs[Array[Byte]](1))
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "corpus.warc"),
+      out.toByteArray)
+  }
 
   /** WARC `response` fixture with REDIRECTS: per doc_id mod 4 a plain
     * 200 (no Location — must NOT appear in the redirect map), a 301
@@ -2337,29 +2017,16 @@ object ExtQueries {
     * evidence), a 302 with a RELATIVE Location (RFC 9110 allows it;
     * resolution is load-bearing), and a 308 with a scheme-relative
     * one. Same render contract as [[warcFixture]]. */
-  private def warcRedirectFixture(s: SparkSession, dir: String): String =
-    warcRedirectBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_redir_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"))
-        .orderBy(col("doc_id")).collect()
-      val sb = new StringBuilder
-      rows.zipWithIndex.foreach { case (r, i) =>
-        val (id, src) = (r.getLong(0), r.getString(1))
+  private val warcRedirectFixture = fixtures.rooted("warc_redir") { (s, dir, root) =>
+    val rows = docRows(s, dir)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "corpus.warc"),
+      rows.zipWithIndex.map { case ((id, src, _), i) =>
         val (status, loc) = (id % 4) match {
           case 0 => (200, None)
           case 1 if i + 1 < rows.length =>
             // chain head: 301 to the NEXT record's URI (a 302, since
             // id+1 ≡ 2 mod 4 — contiguous ids make this total)
-            (301, Some(s"http://${rows(i + 1).getString(1)}.example.com" +
-              s"/p/${id + 1}"))
+            (301, Some(s"http://${rows(i + 1)._2}.example.com/p/${id + 1}"))
           case 1 => (301, Some(s"http://moved.example.net/p/$id"))
           case 2 => (302, Some(s"/new/$id"))
           case _ => (308, Some(s"//alt.example.org/$id"))
@@ -2370,27 +2037,13 @@ object ExtQueries {
           "ETag: \"v" + id + "\"\r\n" +
             f"Last-Modified: Sat, 01 Feb 2026 00:${id % 60}%02d:00 GMT\r\n"
         else ""
-        val http = s"HTTP/1.1 $status X\r\n" +
-          loc.map(l => s"Location: $l\r\n").getOrElse("") +
-          validators +
-          "Content-Type: text/plain\r\n\r\nmoved"
-        val nBytes =
-          http.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-        sb.append("WARC/1.0\r\n")
-          .append("WARC-Type: response\r\n")
-          .append(s"WARC-Target-URI: http://$src.example.com/p/$id\r\n")
-          .append(s"Content-Length: $nBytes\r\n")
-          .append("\r\n")
-          .append(http)
-          .append("\r\n\r\n")
-      }
-      java.nio.file.Files.writeString(
-        rootPath.resolve("corpus.warc"), sb.toString)
-      root
-    })
-
-  private val warcHtmlBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+        warcText("response", s"http://$src.example.com/p/$id", Nil,
+          s"HTTP/1.1 $status X\r\n" +
+            loc.map(l => s"Location: $l\r\n").getOrElse("") +
+            validators +
+            "Content-Type: text/plain\r\n\r\nmoved")
+      }.mkString)
+  }
 
   /** WARC `response` fixture whose payloads are real HTML pages (the
     * q_html_strip wrapper around each doc's text) — the input of the
@@ -2398,42 +2051,14 @@ object ExtQueries {
     * text out, i.e. the step that produces WET dumps in the first
     * place. Same render/contract as [[warcFixture]] (status 200,
     * text/html, Content-Length = HTTP block bytes). */
-  private def warcHtmlFixture(s: SparkSession, dir: String): String =
-    warcHtmlBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_html_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      val sb = new StringBuilder
-      rows.foreach { r =>
-        val (id, src, text) = (r.getLong(0), r.getString(1), r.getString(2))
-        val html = htmlWrapPrefix + text + htmlWrapSuffix
-        val http =
-          s"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n\r\n$html"
-        val nBytes =
-          http.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-        sb.append("WARC/1.0\r\n")
-          .append("WARC-Type: response\r\n")
-          .append(s"WARC-Target-URI: http://$src.example.com/p/$id\r\n")
-          .append(s"Content-Length: $nBytes\r\n")
-          .append("\r\n")
-          .append(http)
-          .append("\r\n\r\n")
-      }
-      java.nio.file.Files.writeString(
-        rootPath.resolve("corpus.warc"), sb.toString)
-      root
-    })
-
-  private val warcRobotsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val warcHtmlFixture = fixtures.rooted("warc_html") { (s, dir, root) =>
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "corpus.warc"),
+      docRows(s, dir).map { case (id, src, text) =>
+        warcText("response", s"http://$src.example.com/p/$id", Nil,
+          "HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n\r\n" +
+            htmlWrapPrefix + text + htmlWrapSuffix)
+      }.mkString)
+  }
 
   /** WARC `response` fixture carrying BOTH noindex channels: an
     * `X-Robots-Tag` response header on the mod-5 classes (class 1 a
@@ -2445,22 +2070,9 @@ object ExtQueries {
     * a fresh March 1 on class 4, March 2–4 otherwise) and `ETag`
     * validators on even ids only. Same render/contract as
     * [[warcHtmlFixture]]. */
-  private def warcRobotsFixture(s: SparkSession, dir: String): String =
-    warcRobotsBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_robots_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"))
-        .orderBy(col("doc_id")).collect()
-      val sb = new StringBuilder
-      rows.foreach { r =>
-        val (id, src) = (r.getLong(0), r.getString(1))
+  private val warcRobotsFixture = fixtures.rooted("warc_robots") { (s, dir, root) =>
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "corpus.warc"),
+      docRows(s, dir).map { case (id, src, _) =>
         val meta =
           if (id % 3 == 0) "<meta name=\"robots\" content=\"noindex\">"
           else ""
@@ -2474,11 +2086,6 @@ object ExtQueries {
         // validators for the cadence face: ETag on even ids only (the
         // validator-less odd rows make the stale→fetch class live)
         val etag = if (id % 2 == 0) s"ETag: \"v$id\"\r\n" else ""
-        val http =
-          "HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n" +
-            s"$xr$etag\r\n$html"
-        val nBytes =
-          http.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
         // the capture time q_recrawl_cadence ages content by: the
         // lastmod-present class (id % 4 = 0) splits into a stale
         // January copy (id % 8 = 0) and a fresh March 1 one (= 4);
@@ -2487,22 +2094,12 @@ object ExtQueries {
           if (id % 8 == 0) "2026-01-15T00:00:00Z"
           else if (id % 8 == 4) "2026-03-01T00:00:00Z"
           else s"2026-03-0${1 + id % 4}T12:00:00Z"
-        sb.append("WARC/1.0\r\n")
-          .append("WARC-Type: response\r\n")
-          .append(s"WARC-Target-URI: http://$src.example.com/p/$id\r\n")
-          .append(s"WARC-Date: $wd\r\n")
-          .append(s"Content-Length: $nBytes\r\n")
-          .append("\r\n")
-          .append(http)
-          .append("\r\n\r\n")
-      }
-      java.nio.file.Files.writeString(
-        rootPath.resolve("corpus.warc"), sb.toString)
-      root
-    })
-
-  private val warcChromeBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+        warcText("response", s"http://$src.example.com/p/$id",
+          Seq(s"WARC-Date: $wd"),
+          "HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n" +
+            s"$xr$etag\r\n$html")
+      }.mkString)
+  }
 
   /** WARC `response` fixture whose payloads are CHROME-LADEN HTML pages
     * (the q_main_content template: header/nav/link-farm/aside/footer
@@ -2510,22 +2107,9 @@ object ExtQueries {
     * face `q_warc_to_main`: response records in, clean corpus text out,
     * i.e. the step that beats WET-style whole-page strips. Same
     * render/contract as [[warcHtmlFixture]]. */
-  private def warcChromeFixture(s: SparkSession, dir: String): String =
-    warcChromeBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_chrome_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      val sb = new StringBuilder
-      rows.foreach { r =>
-        val (id, src, text) = (r.getLong(0), r.getString(1), r.getString(2))
+  private val warcChromeFixture = fixtures.rooted("warc_chrome") { (s, dir, root) =>
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "corpus.warc"),
+      docRows(s, dir).map { case (id, src, text) =>
         val html =
           "<html><head><script>var z = 9;</script><title>T</title>" +
             "</head><body>" +
@@ -2537,22 +2121,10 @@ object ExtQueries {
             s"<p>tail ${id % 7} <a href=\"/more\">more</a></p>" +
             "<aside>related junk</aside>" +
             "<footer>copyright site</footer></body></html>"
-        val http =
-          s"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n\r\n$html"
-        val nBytes =
-          http.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-        sb.append("WARC/1.0\r\n")
-          .append("WARC-Type: response\r\n")
-          .append(s"WARC-Target-URI: http://$src.example.com/p/$id\r\n")
-          .append(s"Content-Length: $nBytes\r\n")
-          .append("\r\n")
-          .append(http)
-          .append("\r\n\r\n")
-      }
-      java.nio.file.Files.writeString(
-        rootPath.resolve("corpus.warc"), sb.toString)
-      root
-    })
+        warcText("response", s"http://$src.example.com/p/$id", Nil,
+          s"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=UTF-8\r\n\r\n$html")
+      }.mkString)
+  }
 
   // ---- WARC fixtures with ENCODED payloads (transfer/content/charset) --
 
@@ -2611,9 +2183,6 @@ object ExtQueries {
     out.write("\r\n\r\n".getBytes("US-ASCII"))
   }
 
-  private val warcEncBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** WARC `response` fixture whose payloads carry the TRANSFER/CONTENT
     * CODINGS real crawl dumps ship (the r18 judge's missing-#1): doc_id
     * mod 6 routes identity / chunked / gzip / chunked-over-gzip /
@@ -2624,48 +2193,31 @@ object ExtQueries {
     * path with md5(text) from the documents table — compressed bytes
     * themselves never need re-deriving. Same render/contract as
     * [[warcFixture]]. */
-  private def warcEncFixture(s: SparkSession, dir: String): String =
-    warcEncBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_enc_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      val out = new java.io.ByteArrayOutputStream()
-      rows.foreach { r =>
-        val (id, src, text) = (r.getLong(0), r.getString(1), r.getString(2))
-        val raw = encodeStrict(text, "UTF-8")
-        val uri = s"http://$src.example.com/p/$id"
-        val ct = "Content-Type: text/plain; charset=UTF-8"
-        (id % 6) match {
-          case 0 => warcRecBytes(out, uri, Seq(ct), raw)
-          case 1 => warcRecBytes(out, uri,
-            Seq(ct, "Transfer-Encoding: chunked"), chunkBytes(raw, 48))
-          case 2 => warcRecBytes(out, uri,
-            Seq(ct, "Content-Encoding: gzip"), gzipBytes(raw))
-          case 3 => warcRecBytes(out, uri,
-            Seq(ct, "Content-Encoding: gzip", "Transfer-Encoding: chunked"),
-            chunkBytes(gzipBytes(raw), 32))
-          case 4 => warcRecBytes(out, uri,
-            Seq(ct, "Content-Encoding: deflate"), zlibBytes(raw))
-          case _ => warcRecBytes(out, uri,
-            Seq(ct, "Content-Encoding: zstd"),
-            com.github.luben.zstd.Zstd.compress(raw))
-        }
+  private val warcEncFixture = fixtures.rooted("warc_enc") { (s, dir, root) =>
+    val out = new java.io.ByteArrayOutputStream()
+    docRows(s, dir).foreach { case (id, src, text) =>
+      val raw = encodeStrict(text, "UTF-8")
+      val uri = s"http://$src.example.com/p/$id"
+      val ct = "Content-Type: text/plain; charset=UTF-8"
+      (id % 6) match {
+        case 0 => warcRecBytes(out, uri, Seq(ct), raw)
+        case 1 => warcRecBytes(out, uri,
+          Seq(ct, "Transfer-Encoding: chunked"), chunkBytes(raw, 48))
+        case 2 => warcRecBytes(out, uri,
+          Seq(ct, "Content-Encoding: gzip"), gzipBytes(raw))
+        case 3 => warcRecBytes(out, uri,
+          Seq(ct, "Content-Encoding: gzip", "Transfer-Encoding: chunked"),
+          chunkBytes(gzipBytes(raw), 32))
+        case 4 => warcRecBytes(out, uri,
+          Seq(ct, "Content-Encoding: deflate"), zlibBytes(raw))
+        case _ => warcRecBytes(out, uri,
+          Seq(ct, "Content-Encoding: zstd"),
+          com.github.luben.zstd.Zstd.compress(raw))
       }
-      java.nio.file.Files.write(
-        rootPath.resolve("corpus.warc"), out.toByteArray)
-      root
-    })
-
-  private val warcMixedBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "corpus.warc"),
+      out.toByteArray)
+  }
 
   /** WARC fixture in the REAL CommonCrawl layout (r19 judge's
     * missing-#2): per fetch THREE records — `request` (the outbound
@@ -2678,51 +2230,21 @@ object ExtQueries {
     * response rows (a request's "GET …" block must never surface as a
     * null-status response row, a metadata body never as content).
     * Status cycles like [[warcFixture]] so the demux's status parse
-    * stays live. Same render/first-touch contract as [[warcFixture]]. */
-  private def warcMixedFixture(s: SparkSession, dir: String): String =
-    warcMixedBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_mixed_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      val sb = new StringBuilder
-      rows.foreach { r =>
-        val (id, src, text) = (r.getLong(0), r.getString(1), r.getString(2))
+    * stays live. */
+  private val warcMixedFixture = fixtures.rooted("warc_mixed") { (s, dir, root) =>
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "corpus.warc"),
+      docRows(s, dir).map { case (id, src, text) =>
         val uri = s"http://$src.example.com/p/$id"
-        def rec(recType: String, block: String): Unit = {
-          val n = block.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8).length
-          sb.append("WARC/1.0\r\n")
-            .append(s"WARC-Type: $recType\r\n")
-            .append(s"WARC-Target-URI: $uri\r\n")
-            .append(s"Content-Length: $n\r\n")
-            .append("\r\n")
-            .append(block)
-            .append("\r\n\r\n")
-        }
         val status = if (id % 3 == 0) 404 else 200
-        rec("request",
+        warcText("request", uri, Nil,
           s"GET /p/$id HTTP/1.1\r\nHost: $src.example.com\r\n" +
-            "User-Agent: graftbot\r\nAccept: text/html\r\n\r\n")
-        rec("response",
-          s"HTTP/1.1 $status OK\r\n" +
-            s"Content-Type: text/plain; charset=UTF-8\r\n\r\n$text")
-        rec("metadata", s"fetchTimeMs: ${id * 7 % 1000}\r\n")
-      }
-      java.nio.file.Files.writeString(
-        rootPath.resolve("corpus.warc"), sb.toString)
-      root
-    })
-
-  private val warcCsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+            "User-Agent: graftbot\r\nAccept: text/html\r\n\r\n") +
+          warcText("response", uri, Nil,
+            s"HTTP/1.1 $status OK\r\n" +
+              s"Content-Type: text/plain; charset=UTF-8\r\n\r\n$text") +
+          warcText("metadata", uri, Nil, s"fetchTimeMs: ${id * 7 % 1000}\r\n")
+      }.mkString)
+  }
 
   /** The charset tails planted per doc_id mod 5 — each class's tail is
     * encodable in its wire charset and distinguishes it from the others
@@ -2749,43 +2271,26 @@ object ExtQueries {
     * — so a decode that ignores the charset (or substitutes U+FFFD)
     * breaks the md5 gate the oracle recomputes from the documents
     * table. */
-  private def warcCsFixture(s: SparkSession, dir: String): String =
-    warcCsBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_cs_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      val out = new java.io.ByteArrayOutputStream()
-      rows.foreach { r =>
-        val (id, src, text) = (r.getLong(0), r.getString(1), r.getString(2))
-        val uri = s"http://$src.example.com/p/$id"
-        val cls = (id % 5).toInt
-        val body = (if (cls == 3) metaPrefix else "") + text + charsetTails(cls)
-        val (hdrs, wireCs) = cls match {
-          case 0 => (Seq("Content-Type: text/plain; charset=UTF-8"), "UTF-8")
-          case 1 => (Seq("Content-Type: text/plain; charset=ISO-8859-1"),
-            "ISO-8859-1")
-          case 2 => (Seq("Content-Type: text/html; charset=windows-1252"),
-            "windows-1252")
-          case 3 => (Seq("Content-Type: text/html"), "ISO-8859-1")
-          case _ => (Seq("Content-Type: text/plain"), "UTF-8")
-        }
-        warcRecBytes(out, uri, hdrs, encodeStrict(body, wireCs))
+  private val warcCsFixture = fixtures.rooted("warc_cs") { (s, dir, root) =>
+    val out = new java.io.ByteArrayOutputStream()
+    docRows(s, dir).foreach { case (id, src, text) =>
+      val uri = s"http://$src.example.com/p/$id"
+      val cls = (id % 5).toInt
+      val body = (if (cls == 3) metaPrefix else "") + text + charsetTails(cls)
+      val (hdrs, wireCs) = cls match {
+        case 0 => (Seq("Content-Type: text/plain; charset=UTF-8"), "UTF-8")
+        case 1 => (Seq("Content-Type: text/plain; charset=ISO-8859-1"),
+          "ISO-8859-1")
+        case 2 => (Seq("Content-Type: text/html; charset=windows-1252"),
+          "windows-1252")
+        case 3 => (Seq("Content-Type: text/html"), "ISO-8859-1")
+        case _ => (Seq("Content-Type: text/plain"), "UTF-8")
       }
-      java.nio.file.Files.write(
-        rootPath.resolve("corpus.warc"), out.toByteArray)
-      root
-    })
-
-  private val warcBomBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      warcRecBytes(out, uri, hdrs, encodeStrict(body, wireCs))
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "corpus.warc"),
+      out.toByteArray)
+  }
 
   /** Per-class non-ASCII tails for [[warcBomFixture]] — each class's
     * decode gate only bites if the payload leaves ASCII. */
@@ -2808,47 +2313,30 @@ object ExtQueries {
     * The oracle recomputes every class's text from the documents table
     * and the shared tails; the BOM itself must NOT surface in the
     * decoded body (signature, not content). */
-  private def warcBomFixture(s: SparkSession, dir: String): String =
-    warcBomBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_warc_bom_${dirHash}_p${ProcessHandle.current().pid()}"
-      val rootPath = java.nio.file.Paths.get(root)
-      org.apache.commons.io.FileUtils.deleteQuietly(rootPath.toFile)
-      java.nio.file.Files.createDirectories(rootPath)
-      val rows = Tables.documents(s, dir)
-        .select(col("doc_id").cast("long"), col("source"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      val out = new java.io.ByteArrayOutputStream()
-      rows.foreach { r =>
-        val (id, src, text) = (r.getLong(0), r.getString(1), r.getString(2))
-        val uri = s"http://$src.example.com/p/$id"
-        val cls = (id % 4).toInt
-        val body = text + bomTails(cls)
-        val (hdrs, payload) = cls match {
-          case 0 => (Seq("Content-Type: text/plain; charset=ISO-8859-1"),
-            Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++
-              encodeStrict(body, "UTF-8"))
-          case 1 => (Seq("Content-Type: text/plain"),
-            Array(0xFF, 0xFE).map(_.toByte) ++
-              encodeStrict(body, "UTF-16LE"))
-          case 2 => (Seq("Content-Type: text/plain; charset=UTF-8"),
-            Array(0xFE, 0xFF).map(_.toByte) ++
-              encodeStrict(body, "UTF-16BE"))
-          case _ => (Seq("Content-Type: text/plain; charset=UTF-8"),
+  private val warcBomFixture = fixtures.rooted("warc_bom") { (s, dir, root) =>
+    val out = new java.io.ByteArrayOutputStream()
+    docRows(s, dir).foreach { case (id, src, text) =>
+      val uri = s"http://$src.example.com/p/$id"
+      val cls = (id % 4).toInt
+      val body = text + bomTails(cls)
+      val (hdrs, payload) = cls match {
+        case 0 => (Seq("Content-Type: text/plain; charset=ISO-8859-1"),
+          Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++
             encodeStrict(body, "UTF-8"))
-        }
-        warcRecBytes(out, uri, hdrs, payload)
+        case 1 => (Seq("Content-Type: text/plain"),
+          Array(0xFF, 0xFE).map(_.toByte) ++
+            encodeStrict(body, "UTF-16LE"))
+        case 2 => (Seq("Content-Type: text/plain; charset=UTF-8"),
+          Array(0xFE, 0xFF).map(_.toByte) ++
+            encodeStrict(body, "UTF-16BE"))
+        case _ => (Seq("Content-Type: text/plain; charset=UTF-8"),
+          encodeStrict(body, "UTF-8"))
       }
-      java.nio.file.Files.write(
-        rootPath.resolve("corpus.warc"), out.toByteArray)
-      root
-    })
-
-  private val videoReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      warcRecBytes(out, uri, hdrs, payload)
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "corpus.warc"),
+      out.toByteArray)
+  }
 
   /** Replay video demux + frame decode AT INGEST, once per fixture dir
     * (the [[mediaReplayFixture]] shape on the video family): the
@@ -2856,39 +2344,16 @@ object ExtQueries {
     * scrambled checkpointed MemoryStream, attach→demux→decode run INSIDE
     * the streaming plan, per-frame rows land in an append parquet file
     * sink (exactly-once via the sink log) — the read-back must equal the
-    * batch face's closed-form oracle verbatim. Same first-touch-rebuild
-    * + md5(dir)+pid path contract as [[annIndexFixture]]. */
-  private def videoReplayFixture(s: SparkSession, dir: String): String =
-    videoReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_video_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val ids = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id")).as[Long].collect()
-      require(ids.nonEmpty, s"video replay fixture needs rows ($dir)")
-      val scrambled = ids.sortBy(id => scrambleKey(id, id))
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = Video.decodeFrames(
-          Video.attachAvi(src.toDF().toDF("doc_id"), _ => Video.CodecRgb))
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$root/frames")
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val j2ReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * batch face's closed-form oracle verbatim. */
+  private val videoReplayFixture = fixtures.rooted("video_replay") { (s, dir, root) =>
+    import s.implicits._
+    val ids = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
+      .select(col("doc_id")).as[Long].collect()
+    replay(s, ids.sortBy(id => scrambleKey(id, id)), Nil) { ds =>
+      appendSink(root, "frames")(Video.decodeFrames(
+        Video.attachAvi(ds.toDF("doc_id"), _ => Video.CodecRgb)))
+    }
+  }
 
   /** Replay the reference's J2 TABLE-TABLE left join
     * (`MyStream.java:168-173`) as STREAMING state maintenance, once per
@@ -2901,45 +2366,27 @@ object ExtQueries {
     * later batches: the arg-max-ord upsert rule is what's under the gate.
     * The fact side arrives as raw event rows whose per-key counts fold
     * additively across batches. The final snapshot (max batch_id) must
-    * equal the one-shot batch join — q_j2_left's oracle verbatim. Same
-    * first-touch-rebuild + md5(dir)+pid path contract as
-    * [[annIndexFixture]]. */
-  private def j2ReplayFixture(s: SparkSession, dir: String): String =
-    j2ReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_j2_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val dims = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_name")).as[(Long, String)].collect()
-        .flatMap { case (k, n) =>
-          Seq(("dim", k, 1L, n + " (stale)"), ("dim", k, 2L, n))
-        }
-      val facts = Tables.events(s, dir).select(col("user_id"))
-        .filter(col("user_id").isNotNull).as[Long].collect()
-        .zipWithIndex.map { case (u, i) => ("fact", u, 0L, "") }
-      val scrambled = (dims ++ facts).zipWithIndex
-        .sortBy { case ((_, k, ord, _), i) =>
-          scrambleKey(k * 131L + ord * 7L, i.toLong)
-        }.map(_._1)
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Long, String)]
-      val q = graft.streaming.IngestStreams.tableJoinIngest(
-        src.toDF().toDF("side", "key", "ord", "name"),
+    * equal the one-shot batch join — q_j2_left's oracle verbatim. */
+  private val j2ReplayFixture = fixtures.rooted("j2_replay") { (s, dir, root) =>
+    import s.implicits._
+    val dims = Tables.customer(s, dir)
+      .select(col("c_custkey"), col("c_name")).as[(Long, String)].collect()
+      .flatMap { case (k, n) =>
+        Seq(("dim", k, 1L, n + " (stale)"), ("dim", k, 2L, n))
+      }
+    val facts = Tables.events(s, dir).select(col("user_id"))
+      .filter(col("user_id").isNotNull).as[Long].collect()
+      .map(u => ("fact", u, 0L, ""))
+    val scrambled = (dims ++ facts).zipWithIndex
+      .sortBy { case ((_, k, ord, _), i) =>
+        scrambleKey(k * 131L + ord * 7L, i.toLong)
+      }.map(_._1)
+    replay(s, scrambled, Nil) { ds =>
+      graft.streaming.IngestStreams.tableJoinIngest(
+        ds.toDF("side", "key", "ord", "name"),
         s"$root/dim", s"$root/fact", s"$root/joined", s"$root/ckpt")
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val asofReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
+  }
 
   /** Replay the backward as-of enrichment as STREAMING ingest, once per
     * fixture dir: every event `(event_id, user_id, ts)` feeds
@@ -2949,34 +2396,20 @@ object ExtQueries {
     * static-right as-of join is per-left-row, so the batched union must
     * equal the one-shot batch join — q_asof_join's oracle verbatim —
     * for ANY batch assignment; the scramble makes that the gated claim
-    * rather than a fixed-arrival accident. Same first-touch-rebuild +
-    * md5(dir)+pid path contract as [[annIndexFixture]]. */
-  private def asofReplayFixture(s: SparkSession, dir: String): String =
-    asofReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_asof_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      // null keys never produce inner as-of rows — excluding them from
-      // the feed changes nothing and keeps the tuple encoder primitive
-      val evs = Tables.events(s, dir)
-        .filter(col("user_id").isNotNull)
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"))
-        .as[(Long, Long, Long)].collect()
-      require(evs.nonEmpty, s"as-of replay fixture needs rows ($dir)")
-      val scrambled = evs.sortBy { case (e, u, _) =>
-        scrambleKey(u * 131L + e * 7L, e)
-      }
-      val src = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Long)]
-      val q = graft.streaming.IngestStreams.asofIngest(
-        src.toDF().toDF("event_id", "user_id", "ts_us")
+    * rather than a fixed-arrival accident. */
+  private val asofReplayFixture = fixtures.rooted("asof_replay") { (s, dir, root) =>
+    import s.implicits._
+    // null keys never produce inner as-of rows — excluding them from
+    // the feed changes nothing and keeps the tuple encoder primitive
+    val evs = Tables.events(s, dir)
+      .filter(col("user_id").isNotNull)
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("ts_us"))
+      .as[(Long, Long, Long)].collect()
+    replay(s, evs.sortBy { case (e, u, _) => scrambleKey(u * 131L + e * 7L, e) },
+      Nil) { ds =>
+      graft.streaming.IngestStreams.asofIngest(
+        ds.toDF("event_id", "user_id", "ts_us")
           .withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us"),
         () => Tables.orders(s, dir),
         leftKey = "user_id", rightKey = "o_custkey",
@@ -2984,14 +2417,8 @@ object ExtQueries {
         rightPayload = Seq("o_orderkey", "o_totalprice"),
         rightOrd = "o_orderkey",
         s"$root/enriched", s"$root/ckpt")
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val scd2ReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
+  }
 
   /** Replay SCD2 validity-interval maintenance as STREAMING state, once
     * per fixture dir: every event version `(user_id, event_id,
@@ -3001,40 +2428,21 @@ object ExtQueries {
     * version in a LATER batch than its successor, so the re-derivation
     * of closed intervals over the standing state (not just appends) is
     * what's under the gate. The final snapshot (max batch_id) must equal
-    * q_scd2's batch-window oracle verbatim. Same first-touch-rebuild +
-    * md5(dir)+pid path contract as [[annIndexFixture]]. */
-  private def scd2ReplayFixture(s: SparkSession, dir: String): String =
-    scd2ReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_scd2_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val versions = Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"))
-        .as[(Long, Long, String, Double)].collect()
-      require(versions.nonEmpty, s"scd2 replay fixture needs rows ($dir)")
-      val scrambled = versions.sortBy { case (u, e, _, _) =>
-        scrambleKey(u * 131L + e * 7L, e)
-      }
-      val src = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String, Double)]
-      val q = graft.streaming.IngestStreams.scd2Ingest(
-        src.toDF().toDF("key", "ord", "event_type", "value"),
+    * q_scd2's batch-window oracle verbatim. */
+  private val scd2ReplayFixture = fixtures.rooted("scd2_replay") { (s, dir, root) =>
+    import s.implicits._
+    val versions = Tables.events(s, dir)
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        col("value"))
+      .as[(Long, Long, String, Double)].collect()
+    replay(s, versions.sortBy { case (u, e, _, _) =>
+      scrambleKey(u * 131L + e * 7L, e)
+    }, Nil) { ds =>
+      graft.streaming.IngestStreams.scd2Ingest(
+        ds.toDF("key", "ord", "event_type", "value"),
         s"$root/state", s"$root/scd2", s"$root/ckpt")
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val unigramModelBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
+    }
+  }
 
   /** The final-round (round-2) unigram piece scores for a fixture dir,
     * trained once per (process, dir) — the standing-tokenizer shape
@@ -3042,57 +2450,40 @@ object ExtQueries {
     * real training; it IS the timed surface). Deterministic training ⇒
     * identical to the ledger the train face stages, which is what the
     * tokens oracle verifies against. */
-  private def unigramModelCached(s: SparkSession, dir: String): Map[String, Long] =
-    unigramModelBuilt.computeIfAbsent(dir, { _ =>
-      Unigram.unigramTrain(Tables.documents(s, dir), rounds = 2,
-          maxPieceLen = 4, vocabSize = 48)
-        .filter(col("round") === 2)
-        .select(col("piece"), col("score_scaled"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    })
-
-  private val bpeRulesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+  private val unigramModelCached = fixtures.value("unigram_model") { (s, dir) =>
+    Unigram.unigramTrain(Tables.documents(s, dir), rounds = 2,
+        maxPieceLen = 4, vocabSize = 48)
+      .filter(col("round") === 2)
+      .select(col("piece"), col("score_scaled"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
 
   /** The 6-rule BPE merge table for a fixture dir, trained once per
     * (process, dir) — the standing-tokenizer shape q_bpe_tokens applies
     * (q_bpe_train itself always runs the real training; it IS the timed
     * surface). */
-  private def bpeRulesCached(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeRulesBuilt.computeIfAbsent(dir, { _ =>
-      Bpe.bpeTrain(Tables.documents(s, dir), merges = 6)
-        .orderBy(col("rank")).collect()
-        .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
-    })
-
-  private val byteBpeRulesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+  private val bpeRulesCached = fixtures.value("bpe_rules") { (s, dir) =>
+    Bpe.bpeTrain(Tables.documents(s, dir), merges = 6)
+      .orderBy(col("rank")).collect()
+      .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
+  }
 
   /** The byte-level merge table, trained once per (process, dir) — the
     * [[bpeRulesCached]] contract on the byte alphabet. */
-  private def byteBpeRulesCached(s: SparkSession,
-      dir: String): Seq[(String, String)] =
-    byteBpeRulesBuilt.computeIfAbsent(dir, { _ =>
-      Bpe.byteBpeTrain(Tables.documents(s, dir), merges = 6)
-        .orderBy(col("rank")).collect()
-        .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
-    })
-
-  private val wordpieceVocabBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
+  private val byteBpeRulesCached = fixtures.value("byte_bpe_rules") { (s, dir) =>
+    Bpe.byteBpeTrain(Tables.documents(s, dir), merges = 6)
+      .orderBy(col("rank")).collect()
+      .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
+  }
 
   /** Per-(process, dir) trained WordPiece vocab (the bpeRulesCached
     * production shape: a tokenizer is trained once, applied forever —
     * and WordPiece's published artifact IS the vocab, not the merge
     * list: apply is greedy longest-match under the vocab). ONE
     * training run yields both artifacts — no train-then-replay. */
-  private def wordpieceVocabCached(s: SparkSession, dir: String): Set[String] =
-    wordpieceVocabBuilt.computeIfAbsent(dir, { _ =>
-      WordPiece.trainAndVocab(Tables.documents(s, dir), merges = 6)._2
-    })
-
-  private val dedupStreamReplayBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val wordpieceVocabCached = fixtures.value("wordpiece_vocab") { (s, dir) =>
+    WordPiece.trainAndVocab(Tables.documents(s, dir), merges = 6)._2
+  }
 
   /** Replay the watermark-bounded streaming dedup
     * ([[graft.streaming.WeatherStreams.dedupStream]], Spark's
@@ -3108,44 +2499,22 @@ object ExtQueries {
     * dependent (KS semantics, [[graft.streaming.WeatherStreams.dedupStream]]
     * scaladoc), the key set is not, and an oracle gate must assert
     * arrival-order-independent truth. Eviction + re-admission semantics
-    * stay spec-locked in WeatherStreamsSpec. Same first-touch-rebuild +
-    * md5(dir)+pid path contract as [[annIndexFixture]]. */
-  private def dedupStreamReplayFixture(s: SparkSession, dir: String): String =
-    dedupStreamReplayBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_dedup_replay_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val rows = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts"))
-        .filter(col("user_id").isNotNull && col("event_type").isNotNull &&
-          col("ts").isNotNull)
-        .as[(Long, String, java.sql.Timestamp)].collect()
-      val scrambled = rows.sortBy(r => scrambleKey(tsMicros(r._3), r._1))
-      val src =
-        org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, java.sql.Timestamp)]
-      val q = graft.streaming.WeatherStreams.dedupStream(
-        src.toDF().toDF("user_id", "event_type", "ts"),
+    * stay spec-locked in WeatherStreamsSpec. */
+  private val dedupStreamReplayFixture = fixtures.rooted("dedup_replay") { (s, dir, root) =>
+    import s.implicits._
+    val rows = Tables.events(s, dir)
+      .select(col("user_id"), col("event_type"), col("ts"))
+      .filter(col("user_id").isNotNull && col("event_type").isNotNull &&
+        col("ts").isNotNull)
+      .as[(Long, String, java.sql.Timestamp)].collect()
+    replay(s, rows.sortBy(r => scrambleKey(tsMicros(r._3), r._1)), Nil) { ds =>
+      appendSink(root, "dedup")(graft.streaming.WeatherStreams.dedupStream(
+        ds.toDF("user_id", "event_type", "ts"),
         keyCols = Seq("user_id", "event_type"), tsCol = "ts",
         watermarkDelay = "45 days")
-        .select(col("user_id"), col("event_type"))
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", s"$root/dedup")
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try scrambled.grouped(math.max(1, (scrambled.length + 2) / 3)).foreach { b =>
-        src.addData(b.toSeq: _*); q.processAllAvailable()
-      } finally q.stop()
-      root
-    })
-
-  private val corpusIncBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+        .select(col("user_id"), col("event_type")))
+    }
+  }
 
   /** Standing corpus-dedup state for q_dedup_corpus_inc: the base
     * partition's exact-hash index, minhash signature index, CC label
@@ -3154,47 +2523,34 @@ object ExtQueries {
     * persists between batches ([[graft.operators.Dedup.signatureIndex]]
     * scaladoc), so the catalog face reads them as parquet exactly as a
     * daily job would, and repeated invocations time the per-batch fold
-    * rather than state reconstruction. Same first-touch-rebuild +
-    * md5(dir)+pid path contract as [[annIndexFixture]]. Sketch params
+    * rather than state reconstruction. Sketch params
     * here must match the query's (bands·rowsPerBand = 64). */
-  private def corpusIncFixture(s: SparkSession, dir: String): String =
-    corpusIncBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_corpus_inc_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      // 90/10 corpus/delta split: the regime the incremental face exists
-      // for (daily delta « standing corpus) — the fold's measured cost is
-      // then the per-batch price, not a half-corpus rebuild
-      val base = Tables.documents(s, dir).filter(col("doc_id") % 10 < 9)
-      val baseSurv = base.join(
-        Dedup.exact(base, "text", "doc_id").select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Dedup.hashIndex(base).write.parquet(s"$root/hash_idx")
-      Dedup.signatureIndex(baseSurv).write.parquet(s"$root/sig_idx")
-      // the standing POSTING artifacts (bandPostings scaladoc): with
-      // these on disk the per-batch fold broadcasts the delta instead of
-      // re-banding + shuffling the standing corpus every batch
-      val posts = Dedup.bandPostings(s.read.parquet(s"$root/sig_idx"),
-        bands = 32, rowsPerBand = 2)
-      posts.write.parquet(s"$root/post_idx")
-      Dedup.bandBucketCounts(s.read.parquet(s"$root/post_idx"))
-        .write.parquet(s"$root/post_cnt")
-      Graph.connectedComponents(Dedup.minhashPairs(baseSurv,
-          bands = 32, rowsPerBand = 2, threshold = 0.5))
-        .write.parquet(s"$root/labels")
-      baseSurv.select(col("doc_id"), col("lang"), col("source"))
-        .write.parquet(s"$root/base_surv")
-      baseSurv.unpersist()
-      root
-    })
-
-  private val dedupSketchBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val corpusIncFixture = fixtures.rooted("corpus_inc") { (s, dir, root) =>
+    // 90/10 corpus/delta split: the regime the incremental face exists
+    // for (daily delta « standing corpus) — the fold's measured cost is
+    // then the per-batch price, not a half-corpus rebuild
+    val base = Tables.documents(s, dir).filter(col("doc_id") % 10 < 9)
+    val baseSurv = base.join(
+      Dedup.exact(base, "text", "doc_id").select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Dedup.hashIndex(base).write.parquet(s"$root/hash_idx")
+    Dedup.signatureIndex(baseSurv).write.parquet(s"$root/sig_idx")
+    // the standing POSTING artifacts (bandPostings scaladoc): with
+    // these on disk the per-batch fold broadcasts the delta instead of
+    // re-banding + shuffling the standing corpus every batch
+    val posts = Dedup.bandPostings(s.read.parquet(s"$root/sig_idx"),
+      bands = 32, rowsPerBand = 2)
+    posts.write.parquet(s"$root/post_idx")
+    Dedup.bandBucketCounts(s.read.parquet(s"$root/post_idx"))
+      .write.parquet(s"$root/post_cnt")
+    Graph.connectedComponents(Dedup.minhashPairs(baseSurv,
+        bands = 32, rowsPerBand = 2, threshold = 0.5))
+      .write.parquet(s"$root/labels")
+    baseSurv.select(col("doc_id"), col("lang"), col("source"))
+      .write.parquet(s"$root/base_surv")
+    baseSurv.unpersist()
+  }
 
   /** Shared standing sketch state for the shingle-based dedup family,
     * built once per (process, fixture dir): the [[graft.operators.Dedup
@@ -3211,25 +2567,15 @@ object ExtQueries {
     * passes: q_dedup_exact (the hash-groupBy), q_dedup_ngram_capped (a
     * different, boilerplate-planted corpus), q_dedup_simhash (a
     * different kernel), q_dedup_corpus_inc's delta leg (the per-batch
-    * price). Same first-touch-rebuild + md5(dir)+pid path contract as
-    * [[annIndexFixture]]. */
-  private def dedupSketchFixture(s: SparkSession, dir: String): String =
-    dedupSketchBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_dedup_sketch_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val docs = Tables.documents(s, dir)
-      Dedup.signatureIndex(docs, bands = 32, rowsPerBand = 2,
-        extraCols = Seq("lang"))
-        .write.parquet(s"$root/sig64")
-      Dedup.exact(docs, keyCol = "text", idCol = "doc_id")
-        .select(col("doc_id")).write.parquet(s"$root/surv_ids")
-      root
-    })
+    * price). */
+  private val dedupSketchFixture = fixtures.rooted("dedup_sketch") { (s, dir, root) =>
+    val docs = Tables.documents(s, dir)
+    Dedup.signatureIndex(docs, bands = 32, rowsPerBand = 2,
+      extraCols = Seq("lang"))
+      .write.parquet(s"$root/sig64")
+    Dedup.exact(docs, keyCol = "text", idCol = "doc_id")
+      .select(col("doc_id")).write.parquet(s"$root/surv_ids")
+  }
 
   /** The [[dedupSketchFixture]] read-back in [[graft.operators.Dedup
     * .PreStagedSketch]] form — the standing-state input of the
@@ -3242,9 +2588,6 @@ object ExtQueries {
       signatures = s.read.parquet(s"$fx/sig64")))
   }
 
-  private val simhashSigBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The standing simhash signature table for q_dedup_simhash, staged
     * once per (process, fixture dir) DIRECTLY to the face's oracle stage
     * path (it doubles as the oracle's evidence — DuckDB re-derives
@@ -3256,19 +2599,15 @@ object ExtQueries {
     * judge flagged exactly that round-trip as the face's 2× breach vs
     * its own r1 time — the write now happens in [[prewarmFixtures]]'
     * untimed pass (or on first touch in a correctness run). */
-  private def simhashSigFixture(s: SparkSession, dir: String): String =
-    simhashSigBuilt.computeIfAbsent(dir, { _ =>
-      val path = oracleStagePath(dir, "q_dedup_simhash")
-      import graft.functions.TextFunctions.{simhash64, hashed, tokens}
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          simhash64(hashed(tokens(col("text")))).as("sim"))
-        .write.mode("overwrite").parquet(path)
-      path
-    })
-
-  private val corpusOnePassBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val simhashSigFixture = fixtures.value("simhash_sig") { (s, dir) =>
+    val path = oracleStagePath(dir, "q_dedup_simhash")
+    import graft.functions.TextFunctions.{simhash64, hashed, tokens}
+    Tables.documents(s, dir)
+      .select(col("doc_id"),
+        simhash64(hashed(tokens(col("text")))).as("sim"))
+      .write.mode("overwrite").parquet(path)
+    path
+  }
 
   /** The one-pass corpus face's mined pair set (bands 32 × 2 at
     * dedupCorpus's 0.8 threshold, over the exact-survivor slice of the
@@ -3285,20 +2624,26 @@ object ExtQueries {
     * correctness run). The oracle is unchanged: it re-verifies every
     * staged pair's Jaccard from raw text and recomputes the one-pass
     * selection independently. */
-  private def corpusOnePassPairsFixture(s: SparkSession, dir: String): String =
-    corpusOnePassBuilt.computeIfAbsent(dir, { _ =>
-      val path = oracleStagePath(dir, "q_dedup_corpus")
-      val fx = dedupSketchFixture(s, dir)
-      Dedup.minhashPairsFromShingles(
-        s.read.parquet(s"$fx/sig64")
-          .join(s.read.parquet(s"$fx/surv_ids"), Seq("doc_id"), "left_semi"),
-        bands = 32, rowsPerBand = 2, threshold = 0.8)
-        .write.mode("overwrite").parquet(path)
-      path
-    })
+  private val corpusOnePassPairsFixture = fixtures.value("corpus_one_pass_pairs") { (s, dir) =>
+    val path = oracleStagePath(dir, "q_dedup_corpus")
+    val fx = dedupSketchFixture(s, dir)
+    Dedup.minhashPairsFromShingles(
+      s.read.parquet(s"$fx/sig64")
+        .join(s.read.parquet(s"$fx/surv_ids"), Seq("doc_id"), "left_semi"),
+      bands = 32, rowsPerBand = 2, threshold = 0.8)
+      .write.mode("overwrite").parquet(path)
+    path
+  }
 
-  private val corpusPairsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The shared graph's mining threshold — ONE constant consumed by both
+    * the fixture mining below and the cc/best faces' oracle SQL
+    * (`corpusDedupOracleSql(verifyThreshold = …)`), so engine and oracle
+    * provably verify/cluster at the same Jaccard: the r13 judge found
+    * the oracle re-verifying at a hard-coded 0.8 while the engine
+    * computed components over the full 0.5 graph — a latent over-merge
+    * that only passed because the fixtures had no cluster-changing pair
+    * in [0.5, 0.8). */
+  private val corpusPairsThreshold = 0.5
 
   /** The mined near-dup pair set over the exact-survivor corpus (bands
     * 32 × 2, threshold 0.5 — the corpus family's shared
@@ -3311,36 +2656,14 @@ object ExtQueries {
     * the durable path END-TO-END (mining included). Each consuming
     * face still sinks the pairs to its own oracle path, so the
     * pairs → closure → survivors re-derivation contract is unchanged. */
-  /** The shared graph's mining threshold — ONE constant consumed by both
-    * the fixture mining below and the cc/best faces' oracle SQL
-    * (`corpusDedupOracleSql(verifyThreshold = …)`), so engine and oracle
-    * provably verify/cluster at the same Jaccard: the r13 judge found
-    * the oracle re-verifying at a hard-coded 0.8 while the engine
-    * computed components over the full 0.5 graph — a latent over-merge
-    * that only passed because the fixtures had no cluster-changing pair
-    * in [0.5, 0.8). */
-  private val corpusPairsThreshold = 0.5
-
-  private def corpusPairsFixture(s: SparkSession, dir: String): String =
-    corpusPairsBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_corpus_pairs_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val fx = dedupSketchFixture(s, dir)
-      Dedup.minhashPairsFromShingles(
-        s.read.parquet(s"$fx/sig64")
-          .join(s.read.parquet(s"$fx/surv_ids"), Seq("doc_id"), "left_semi"),
-        bands = 32, rowsPerBand = 2, threshold = corpusPairsThreshold)
-        .write.parquet(s"$root/pairs")
-      root
-    })
-
-  private val embPairsBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val corpusPairsFixture = fixtures.rooted("corpus_pairs") { (s, dir, root) =>
+    val fx = dedupSketchFixture(s, dir)
+    Dedup.minhashPairsFromShingles(
+      s.read.parquet(s"$fx/sig64")
+        .join(s.read.parquet(s"$fx/surv_ids"), Seq("doc_id"), "left_semi"),
+      bands = 32, rowsPerBand = 2, threshold = corpusPairsThreshold)
+      .write.parquet(s"$root/pairs")
+  }
 
   /** Shared exact embedding near-dup pair graph (label-blocked cosine ≥
     * 0.35, uncapped — q_dedup_embedding's exact ground truth), staged
@@ -3349,25 +2672,12 @@ object ExtQueries {
     * pair set and exist to time their graph algebra, not the pair
     * mining — which q_dedup_embedding itself stays live for. The staged
     * pair table is also the production shape: a similarity graph is
-    * mined once and analyzed many times. Same first-touch-rebuild +
-    * md5(dir)+pid path contract as [[annIndexFixture]]. */
-  private def embPairsFixture(s: SparkSession, dir: String): String =
-    embPairsBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_emb_pairs_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      Dedup.embeddingPairs(Tables.embeddings(s, dir), blockCol = col("label"),
-        threshold = 0.35, maxBlock = None)
-        .write.parquet(s"$root/pairs")
-      root
-    })
-
-  private val bipartiteEdgesBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * mined once and analyzed many times. */
+  private val embPairsFixture = fixtures.rooted("emb_pairs") { (s, dir, root) =>
+    Dedup.embeddingPairs(Tables.embeddings(s, dir), blockCol = col("label"),
+      threshold = 0.35, maxBlock = None)
+      .write.parquet(s"$root/pairs")
+  }
 
   /** Shared customer–supplier edge sets (who-buys-from-whom via order
     * lines), staged once per (process, fixture dir): the full bipartite
@@ -3375,72 +2685,34 @@ object ExtQueries {
     * q_kcore. Same rationale as [[embPairsFixture]]: a graph is mined
     * once and analyzed many times, and the graph faces exist to time
     * their ITERATIVE algebra, not the input join — which each oracle
-    * still re-derives from the raw tables independently. Same
-    * first-touch-rebuild + md5(dir)+pid contract as
-    * [[annIndexFixture]]. */
-  private def bipartiteEdgesFixture(s: SparkSession, dir: String): String =
-    bipartiteEdgesBuilt.computeIfAbsent(dir, { _ =>
-      val dirHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-      val root =
-        s"/tmp/graft_bipartite_${dirHash}_p${ProcessHandle.current().pid()}"
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val joined = Tables.orders(s, dir).join(Tables.lineitem(s, dir),
-          col("o_orderkey") === col("l_orderkey"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      joined.select(col("o_custkey").as("src"),
-          (col("l_suppkey") + lit(1000000L)).as("dst"))
-        .distinct().write.parquet(s"$root/pr_edges")
-      joined.filter(col("l_quantity") >= 45)
-        .select(col("o_custkey").as("id_a"),
-          (col("l_suppkey") + lit(1000000L)).as("id_b"))
-        .distinct().write.parquet(s"$root/kcore_edges")
-      joined.unpersist()
-      root
-    })
+    * still re-derives from the raw tables independently. */
+  private val bipartiteEdgesFixture = fixtures.rooted("bipartite") { (s, dir, root) =>
+    val joined = Tables.orders(s, dir).join(Tables.lineitem(s, dir),
+        col("o_orderkey") === col("l_orderkey"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    joined.select(col("o_custkey").as("src"),
+        (col("l_suppkey") + lit(1000000L)).as("dst"))
+      .distinct().write.parquet(s"$root/pr_edges")
+    joined.filter(col("l_quantity") >= 45)
+      .select(col("o_custkey").as("id_a"),
+        (col("l_suppkey") + lit(1000000L)).as("id_b"))
+      .distinct().write.parquet(s"$root/kcore_edges")
+    joined.unpersist()
+  }
 
-  /** Build every per-(process, dir) fixture this catalog creates lazily
-    * on first touch — [[graft.Bench]] calls this in the UNTIMED warm-up
-    * (r12 judge directive #1): first-touch fixture builds are one-off
+  /** Build every declared [[Fixture]] for `dir` — [[graft.Bench]] calls
+    * this in the UNTIMED warm-up: first-touch fixture builds are one-off
     * ingest costs a standing pipeline pays once, not per query, so
     * letting them land inside the timed region inflated wall-clock and
     * max-spread telemetry (the 83.5 s q_interval_join_replay spike was
-    * three replay builds attributed to one face). Each builder is
-    * idempotent per (process, dir) via its computeIfAbsent key, so the
-    * timed pass then only ever reads. */
-  def prewarmFixtures(s: SparkSession, dir: String): Unit = {
-    dedupSketchFixture(s, dir)
-    simhashSigFixture(s, dir)
-    corpusPairsFixture(s, dir)
-    corpusOnePassPairsFixture(s, dir)
-    embPairsFixture(s, dir)
-    bipartiteEdgesFixture(s, dir)
-    corpusIncFixture(s, dir)
-    annIndexFixture(s, dir)
-    ingestReplayFixture(s, dir)
-    funnelReplayFixture(s, dir)
-    Seq("inner", "left_outer", "full_outer")
-      .foreach(intervalReplayFixture(s, dir, _))
-    sessionReplayFixture(s, dir)
-    dailyAvgReplayFixture(s, dir)
-    hoppingReplayFixture(s, dir)
-    latestReplayFixture(s, dir)
-    enrichReplayFixture(s, dir)
-    dedupStreamReplayFixture(s, dir)
-    j2ReplayFixture(s, dir)
-    hllReplayFixture(s, dir)
-    mediaReplayFixture(s, dir)
-    pctReplayFixture(s, dir)
-    scd2ReplayFixture(s, dir)
-    asofReplayFixture(s, dir)
-    wetIngestFixture(s, dir)
-    crawlIngestFixture(s, dir)
-    bpeRulesCached(s, dir)
-    byteBpeRulesCached(s, dir)
-    ()
-  }
+    * three replay builds attributed to one face). One failing fixture
+    * does not stop the rest; returns `name: error` per failure. */
+  def prewarmFixtures(s: SparkSession, dir: String): Seq[String] =
+    fixtures.prewarm(s, dir)
+
+  /** Names of the fixtures built for `dir` in this process. */
+  private[graft] def builtFixtures(dir: String): Set[String] =
+    fixtures.built(dir)
 
   private val stagingScratch =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -3472,12 +2744,8 @@ object ExtQueries {
     * compares), so the artifact must outlive the process. Re-runs
     * overwrite in place; writers are sequential by the driver contract
     * (one Verify/Bench at a time per fixture dir). */
-  private def oracleStageRoot(dir: String): String = {
-    val dirHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map(b => f"$b%02x").mkString
-    s"/tmp/graft_oracle_stage_$dirHash"
-  }
+  private def oracleStageRoot(dir: String): String =
+    s"/tmp/graft_oracle_stage_${dirHash(dir)}"
 
   /** The fixture dir of the LAST oracle-staged query run in this process —
     * how the dir-parameterized staged paths reach `oracleSql` (a map with
@@ -5948,7 +5216,7 @@ object ExtQueries {
     // JoinWindows interval — the KStream-KStream join family's
     // end-to-end check (SURVEY §2.5 extension row)
     "q_interval_join_replay" -> ((s, dir) =>
-      s.read.parquet(s"${intervalReplayFixture(s, dir, "inner")}/inner")
+      s.read.parquet(s"${intervalReplayFixtures("inner")(s, dir)}/inner")
         .filter(col("l_user") >= 0)
         .select(col("l_user"), unix_micros(col("l_ts")).as("l_ts_us"),
           col("r_user"), unix_micros(col("r_ts")).as("r_ts_us"))
@@ -5958,7 +5226,7 @@ object ExtQueries {
     // finals; nulls canonicalized to −1 on BOTH engines (the driver
     // comparator's pandas path must never meet a nullable int column)
     "q_interval_join_replay_outer" -> ((s, dir) =>
-      s.read.parquet(s"${intervalReplayFixture(s, dir, "left_outer")}/left_outer")
+      s.read.parquet(s"${intervalReplayFixtures("left_outer")(s, dir)}/left_outer")
         .filter(col("l_user") >= 0)
         .select(col("l_user"), unix_micros(col("l_ts")).as("l_ts_us"),
           coalesce(col("r_user"), lit(-1L)).as("r_user"),
@@ -5969,7 +5237,7 @@ object ExtQueries {
     // BOTH sides' watermark-flushed null-padded finals — sentinel keys
     // are negative on either side, so one coalesce filter drops them
     "q_interval_join_replay_full" -> ((s, dir) =>
-      s.read.parquet(s"${intervalReplayFixture(s, dir, "full_outer")}/full_outer")
+      s.read.parquet(s"${intervalReplayFixtures("full_outer")(s, dir)}/full_outer")
         .filter(coalesce(col("l_user"), lit(0L)) >= 0 &&
           coalesce(col("r_user"), lit(0L)) >= 0)
         .select(coalesce(col("l_user"), lit(-1L)).as("l_user"),

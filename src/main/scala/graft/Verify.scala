@@ -2,14 +2,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * `runMain graft.Verify <sfDir> <outDir> [face,face,...]` — the optional
+  * third argument dumps only the named faces, and oracle_sql.json then
+  * holds only their entries, so `tools/check_oracle.py <sfDir> <outDir>`
+  * checks just that subset. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated face-name filter (builder-side
-    // fast iteration on new faces; the driver's 2-arg call is unchanged)
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"unknown faces: ${unknown.mkString(", ")}")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -58,6 +65,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   *    band. Before r13 only same-band pairs met, which silently lost
   *    EVERY indel pair whose longer length is a band-boundary multiple
   *    — measured at 0% deletion recall on even-length names
-  *    (tools/FuzzyProbe, SCALE.md "Fuzzy blocking recall dial");
+  *    (SCALE.md "Fuzzy blocking recall dial"; FuzzySpec pins the pairs);
   *  - everything before the verify is narrow map-side column derivation;
   *    the verify itself runs only on co-bucketed candidates.
   *

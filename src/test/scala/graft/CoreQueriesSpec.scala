@@ -14,10 +14,17 @@ class CoreQueriesSpec extends SparkSuite {
     // implementations under `++` (found the hard way: a second q_pivot)
     val dup = CoreQueries.queries.keySet intersect ExtQueries.queries.keySet
     assert(dup.isEmpty, s"catalog key collision across sub-maps: $dup")
+    // prewarm builds the declared fixtures: no face may build one it
+    // missed (Bench would pay that build inside its timed region)
+    val prewarmFailures = ExtQueries.prewarmFixtures(spark, sf0001)
+    assert(prewarmFailures.isEmpty, prewarmFailures.mkString("; "))
+    val prewarmed = ExtQueries.builtFixtures(sf0001)
     qs.foreach { case (name, fn) =>
       val n = fn(spark, sf0001).count()
       assert(n >= 0, name)
     }
+    val missed = ExtQueries.builtFixtures(sf0001) -- prewarmed
+    assert(missed.isEmpty, s"fixtures built by faces, not by prewarm: $missed")
     // every catalog query must be value-gated — the rows-only era is
     // over. Checked AFTER the run loop: three oracles are dynamic (their
     // SQL embeds staged paths recorded when the query executes)

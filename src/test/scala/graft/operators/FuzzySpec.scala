@@ -46,9 +46,9 @@ class FuzzySpec extends SparkSuite {
   test("band-boundary indel pairs are found (the r13 probe hole)") {
     // len 9 and len 10 with maxDist=1: bands 9//2=4 and 10//2=5 — a pair
     // STRADDLING the band boundary, which the pre-r13 same-band join lost
-    // entirely (FuzzyProbe measured 0% deletion recall on even-length
-    // names). The probe-band-above rule meets it in the longer record's
-    // band.
+    // entirely (SCALE.md "Fuzzy blocking recall dial": 0% deletion recall
+    // on even-length names). The probe-band-above rule meets it in the
+    // longer record's band.
     val got = pairs(Seq(1L -> "abcdefghi", 2L -> "abcdefghij"))
     assert(got == Set((1L, 2L, 1)))
     // deletion at the head: suffix pass, same straddle
