@@ -107,13 +107,17 @@ object Bench {
         ("ts_end", java.time.Instant.now().toString), ("load_end", loadavg())),
       baseline = r1Baseline().map(b =>
         baselineBlock(results.map(r => (r._1, r._2)), b._1, b._2)))
+    val breaches = budgetBreaches(results.map(r => (r._1, r._2)),
+      SparkEntry.faces.flatMap(f => f.budgetS.map(f.name -> _)).toMap)
+    if (breaches.nonEmpty)
+      System.err.println("[bench] budget breach: " + breaches.mkString("; "))
     // Two channels: bare stdout (build.sbt routes forked-run output through
     // StdoutOutput, so no sbt log prefix) gets the tail-safe line; the file
     // next to the build always carries the FULL per-query map, for callers
     // that only capture decorated logs and for the compact-line case.
     println(printed)
     try java.nio.file.Files.write(metricPath(),
-      (full + "\n").getBytes("UTF-8"))
+      (withBudgetBreaches(full, breaches) + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     spark.stop()
   }
@@ -256,6 +260,25 @@ object Bench {
           .map(e => e.getKey -> e.getValue.asDouble()).toMap
       }
     } catch { case _: Throwable => Map.empty }
+
+  /** Faces whose min-of-N is over their declared budget, slowest first,
+    * as `name:seconds(budget N)`. Times compare at the millisecond
+    * precision the file line records them in, so a face shown at exactly
+    * its budget is within it. */
+  private[graft] def budgetBreaches(results: Seq[(String, Double)],
+      budgets: Map[String, Double]): Seq[String] =
+    results
+      .flatMap { case (name, t) =>
+        budgets.get(name).filter(math.round(t * 1000) / 1000.0 > _)
+          .map(b => (name, t, b)) }
+      .sortBy(-_._2)
+      .map { case (name, t, b) => s"$name:${sec3(t)}(budget $b)" }
+
+  /** The file line with the budget breaches appended (`[]` when none, so a
+    * reader can tell the check ran); the stdout line never carries them. */
+  private[graft] def withBudgetBreaches(full: String, breaches: Seq[String]): String =
+    full.stripSuffix("}") +
+      breaches.map("\"" + _ + "\"").mkString(""","budget_breaches":[""", ",", "]}")
 
   // Millisecond precision keeps the line inside the driver's 2000-byte
   // stdout tail window (full-precision doubles overflowed it at 70

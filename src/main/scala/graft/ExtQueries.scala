@@ -5,13 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, Dedup, EmbeddingPrep, Funnel, Fuzzy, Graph, Keywords, Links, Multimodal, PageMeta, Profile, Recrawl, Robots, Similarity, TextAnalysis, TextPrep, Unigram, Urls, Video, WordPiece}
 
-/** North-star extension queries (SURVEY.md §2.10): dedup, similarity search,
-  * text analysis, multimodal — over `documents` / `embeddings`.
+/** North-star extension faces (SURVEY.md §2.10): dedup, similarity search,
+  * text analysis, multimodal — over `documents` / `embeddings`, each a
+  * [[Face]] in [[faces]] with its builder and DuckDB oracle side by side.
   *
   * Oracle-parity notes: token/shingle pipelines are mirrored in DuckDB SQL
-  * (string_split_regex + list HOFs); sketch-based ops (minhash, simhash,
-  * LSH) are not SQL-expressible → rows-only check + ScalaTest ground-truth
-  * comparisons instead.
+  * (string_split_regex + list HOFs); the sketch-based faces (minhash,
+  * simhash, LSH, IVF/PQ) stage their trained or derived state to an
+  * oracle-visible parquet path, and the oracle re-derives everything
+  * downstream of it (README's staged-oracle epistemic ledger).
   */
 object ExtQueries {
 
@@ -2748,17 +2750,20 @@ object ExtQueries {
     s"/tmp/graft_oracle_stage_${dirHash(dir)}"
 
   /** The fixture dir of the LAST oracle-staged query run in this process —
-    * how the dir-parameterized staged paths reach `oracleSql` (a map with
-    * no dir argument): Verify runs every query lambda FIRST and dumps
+    * how the dir-parameterized staged paths reach the oracles (which take
+    * no dir argument): Verify runs every face FIRST and dumps
     * oracle_sql.json last, so by dump time this names the dir the staged
     * artifacts belong to. Defaults to the driver's correctness SF. */
   @volatile private var oracleStagedFor: String = "/root/testdata/sf0.01"
+
+  /** The staging root the staged oracles read, as of the last staged run. */
+  private def stagedRoot: String = oracleStageRoot(oracleStagedFor)
 
   /** The ANN-index dir the last q_ann_index run read (pid-suffixed —
     * recorded at query time so the oracle can read the index's own
     * postings after this JVM exits; a later process first-touch deletes
     * only its OWN pid path, never this one). Empty until the face runs →
-    * its dynamic oracle entry is omitted (rows-only fallback). */
+    * its staged oracle is absent (rows-only fallback). */
   @volatile private var oracleAnnIndexDir: String = ""
 
   /** The corpus-inc fixture root the last q_dedup_corpus_inc run used
@@ -2879,20 +2884,31 @@ object ExtQueries {
        |    ch -> CAST(unicode(ch) AS BIGINT))),
        |  (a, b) -> (a * 1000003 + b) % 1000000007)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val faces: Seq[Face] = Face.catalog(
     // ---- text analysis --------------------------------------------------
-
-    "q_text_stats" -> ((s, dir) =>
+    Face("q_text_stats", (s, dir) =>
       TextAnalysis.stats(Tables.documents(s, dir))
         .select(col("doc_id"), col("n_tokens"), col("n_chars_calc"),
           col("n_punct"), col("n_bpeish"), col("avg_token_len"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
+         |CAST(length(text) AS INT) AS n_chars_calc,
+         |CAST(len(regexp_extract_all(text, '[[:punct:]]')) AS INT) AS n_punct,
+         |CAST(len(regexp_extract_all(text,
+         |  '${graft.functions.TextFunctions.BpeishPattern.replace("'", "''")}'))
+         |  AS INT) AS n_bpeish,
+         |CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks)
+         |  AS avg_token_len
+         |FROM (SELECT doc_id, text, $toksSql AS toks FROM documents)
+         |ORDER BY doc_id""".stripMargin),
 
-    "q_text_quality" -> ((s, dir) =>
+    Face("q_text_quality", (s, dir) =>
       TextAnalysis.qualityScore(Tables.documents(s, dir))
         .select(col("doc_id"), col("quality"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, $qualitySql AS quality
+         |FROM (SELECT doc_id, text, $toksSql AS toks FROM documents)
+         |ORDER BY doc_id""".stripMargin),
 
     // TRAINED quality classifier (the learned-filter slot), VALUE-gated
     // from the staged weights: the oracle recomputes the four rounded
@@ -2900,20 +2916,50 @@ object ExtQueries {
     // the fixed-shape dot product + keep decision — only the bounded
     // logistic-regression trainer stays engine-side, the staged-quantizer
     // epistemic split
-    "q_quality_classifier" -> ((s, dir) =>
+    Face("q_quality_classifier", (s, dir) =>
       TextAnalysis.qualityClassifier(Tables.documents(s, dir),
         weightsSink = Some(oracleStagePath(dir, "q_quality_classifier")))
         .select(col("doc_id"), col("z_quality"), col("keep"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // quality classifier from the staged weights: features recomputed
+      // from raw text (the q_text_quality arithmetic, rounded to 6
+      // BEFORE the dot product exactly like the engine), z as the same
+      // left-associated multiply-add chain, keep on the unrounded z
+      s"""WITH wts AS (
+         |  SELECT max(CASE WHEN i = 0 THEN w END) AS w0,
+         |         max(CASE WHEN i = 1 THEN w END) AS w1,
+         |         max(CASE WHEN i = 2 THEN w END) AS w2,
+         |         max(CASE WHEN i = 3 THEN w END) AS w3,
+         |         max(CASE WHEN i = 4 THEN w END) AS w4
+         |  FROM read_parquet('$stagedRoot/q_quality_classifier/*.parquet')),
+         |f AS (
+         |  SELECT doc_id,
+         |    round(CAST(len(list_filter(toks, t -> list_contains($stopSql, t))) AS DOUBLE)
+         |      / greatest(CAST(len(toks) AS DOUBLE), 1.0), 6) AS f1,
+         |    round(CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE)
+         |      / greatest(CAST(len(toks) AS DOUBLE), 1.0), 6) AS f2,
+         |    round(CAST(len(regexp_extract_all(text, '[[:punct:]]')) AS DOUBLE)
+         |      / greatest(CAST(length(text) AS DOUBLE), 1.0), 6) AS f3,
+         |    round(CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
+         |      / greatest(CAST(length(text) AS DOUBLE), 1.0), 6) AS f4
+         |  FROM (SELECT doc_id, text, $toksSql AS toks FROM documents)),
+         |z AS (SELECT doc_id,
+         |        ((((w0 + w1 * f1) + w2 * f2) + w3 * f3) + w4 * f4) AS zr
+         |      FROM f, wts)
+         |SELECT doc_id, round(zr, 6) AS z_quality, zr > 0 AS keep
+         |FROM z ORDER BY doc_id""".stripMargin),
 
     // language-ID (stopword/CJK heuristic — oracle-checked: the scoring is
     // deterministic SQL (stopword counts + argmax + CJK regex); semantics
     // additionally locked by TextAnalysisSpec on hand-written sentences)
-    "q_text_langid" -> ((s, dir) =>
+    Face("q_text_langid", (s, dir) =>
       TextAnalysis.languageId(Tables.documents(s, dir))
         .groupBy(col("lang_pred"))
         .agg(count(lit(1)).as("n"))
-        .orderBy(col("lang_pred"))),
+        .orderBy(col("lang_pred")),
+      s"""WITH $langidPredCtes
+         |SELECT lang_pred, count(*) AS n FROM pred
+         |GROUP BY lang_pred ORDER BY lang_pred""".stripMargin),
 
     // language-ID v2: a TRAINED character-bigram profile classifier (the
     // fastText shape) over a constructed 5-script labeled corpus —
@@ -2921,7 +2967,7 @@ object ExtQueries {
     // q_lm_score epistemics; the stopword face above stays as the cheap
     // dial. The per-doc row carries both the constructed truth and the
     // prediction, so the hash gate also locks end-to-end accuracy
-    "q_text_langid2" -> ((s, dir) => {
+    Face("q_text_langid2", (s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"),
         langIdLabelCol.as("label"), langIdTextCol.as("text2"))
       val model = TextAnalysis.langProfileTrain(docs, labelCol = "label",
@@ -2933,7 +2979,42 @@ object ExtQueries {
         .select(col("doc_id"), col("label"), col("lang_pred"),
           col("score_scaled"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // langid2: the 5-script corpus reconstructed from the same literal
+      // lists, bigram buckets re-derived per code point (Karp–Rabin fold),
+      // the model's (cnt, total) evidence recomputed independently,
+      // ln_scaled consumed only where they agree, scores re-summed as
+      // exact integers, argmax under the same (score desc, label) order
+      s"""WITH t2 AS (SELECT doc_id, $langIdTextSql AS text2,
+         |              $langIdLabelSql AS label FROM documents),
+         |bgr AS (SELECT doc_id,
+         |          ${polyFoldSql("substr(text2, CAST(i AS INT), 2)")} % 128
+         |            AS bucket
+         |        FROM (SELECT doc_id, text2,
+         |                unnest(range(1, len(text2))) AS i FROM t2)),
+         |pc AS (SELECT doc_id, bucket, count(*) AS c FROM bgr
+         |       GROUP BY doc_id, bucket),
+         |lc AS (SELECT t.label, b.bucket, CAST(count(*) AS BIGINT) AS cnt_chk
+         |       FROM bgr b JOIN t2 t USING (doc_id) GROUP BY label, bucket),
+         |lt AS (SELECT label, CAST(sum(cnt_chk) AS BIGINT) AS tot_chk
+         |       FROM lc GROUP BY label),
+         |staged AS (SELECT label, bucket, cnt, total, ln_scaled
+         |           FROM read_parquet('$stagedRoot/q_text_langid2/*.parquet')),
+         |ver AS (SELECT s.label, s.bucket, s.ln_scaled FROM staged s
+         |        LEFT JOIN lc ON lc.label = s.label AND lc.bucket = s.bucket
+         |        LEFT JOIN lt ON lt.label = s.label
+         |        WHERE coalesce(lc.cnt_chk, 0) = s.cnt
+         |          AND coalesce(lt.tot_chk, 0) = s.total),
+         |sc AS (SELECT p.doc_id, v.label,
+         |         CAST(sum(p.c * v.ln_scaled) AS BIGINT) AS score_scaled
+         |       FROM pc p JOIN ver v USING (bucket)
+         |       GROUP BY doc_id, label),
+         |best AS (SELECT doc_id, label AS lang_pred, score_scaled FROM (
+         |           SELECT *, row_number() OVER (PARTITION BY doc_id
+         |             ORDER BY score_scaled DESC, label) AS rn FROM sc)
+         |         WHERE rn = 1)
+         |SELECT b.doc_id, t.label, b.lang_pred, b.score_scaled
+         |FROM best b JOIN t2 t USING (doc_id) ORDER BY doc_id""".stripMargin),
 
     // script-mix audit (r18): per-doc Unicode-script histogram +
     // dominant non-Latin script + mixed flag — planted tails put one
@@ -2941,7 +3022,7 @@ object ExtQueries {
     // count column, the struct-max argmax, and both mixed branches are
     // exercised; counts are engine-portable character classes (Java
     // \p{IsX} ≡ RE2 \p{X}) the oracle recounts independently
-    "q_script_mix" -> ((s, dir) => {
+    Face("q_script_mix", (s, dir) => {
       val planted = element_at(array(scriptMixTails.map(lit): _*),
         (col("doc_id") % 5).cast("int") + 1)
       TextAnalysis.scriptMix(
@@ -2951,12 +3032,44 @@ object ExtQueries {
           col("n_greek"), col("n_han"), col("n_arabic"),
           col("main_other"), col("mixed"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // independent recount of every script histogram column (RE2 \p{X}
+      // classes vs the engine's Java \p{IsX}), the same (count, name
+      // DESC) argmax as the engine's struct max, and the presence sum
+      {
+      val tails = scriptMixTails.map(t => s"'${t.replace("'", "''")}'")
+      s"""WITH d AS (SELECT doc_id, text ||
+         |    CASE CAST(doc_id % 5 AS INT)
+         |      WHEN 0 THEN ${tails(0)} WHEN 1 THEN ${tails(1)}
+         |      WHEN 2 THEN ${tails(2)} WHEN 3 THEN ${tails(3)}
+         |      ELSE ${tails(4)} END AS t
+         |  FROM documents),
+         |c AS (SELECT doc_id,
+         |    CAST(len(regexp_extract_all(t, '\\p{Latin}')) AS BIGINT) AS n_latin,
+         |    CAST(len(regexp_extract_all(t, '\\p{Cyrillic}')) AS BIGINT) AS n_cyrillic,
+         |    CAST(len(regexp_extract_all(t, '\\p{Greek}')) AS BIGINT) AS n_greek,
+         |    CAST(len(regexp_extract_all(t, '\\p{Han}')) AS BIGINT) AS n_han,
+         |    CAST(len(regexp_extract_all(t, '\\p{Arabic}')) AS BIGINT) AS n_arabic
+         |  FROM d),
+         |s AS (SELECT doc_id, 'arabic' AS s, n_arabic AS n FROM c
+         |  UNION ALL SELECT doc_id, 'cyrillic', n_cyrillic FROM c
+         |  UNION ALL SELECT doc_id, 'greek', n_greek FROM c
+         |  UNION ALL SELECT doc_id, 'han', n_han FROM c),
+         |b AS (SELECT doc_id, s, n, row_number() OVER (PARTITION BY doc_id
+         |        ORDER BY n DESC, s DESC) AS rn FROM s)
+         |SELECT c.doc_id, n_latin, n_cyrillic, n_greek, n_han, n_arabic,
+         |  CASE WHEN b.n > 0 THEN b.s ELSE 'none' END AS main_other,
+         |  (CAST(n_latin > 0 AS INT) + CAST(n_cyrillic > 0 AS INT) +
+         |   CAST(n_greek > 0 AS INT) + CAST(n_han > 0 AS INT) +
+         |   CAST(n_arabic > 0 AS INT)) >= 2 AS mixed
+         |FROM c JOIN b ON c.doc_id = b.doc_id AND b.rn = 1
+         |ORDER BY c.doc_id""".stripMargin
+    }).budget(0.4),
 
     // Unicode NFC normalization (kernel expression) — ASCII fixtures are
     // already NFC, so decomposed/composed sequences are appended to make
     // the normalization observable; mirrored verbatim in the oracle
-    "q_text_normalize" -> ((s, dir) => {
+    Face("q_text_normalize", (s, dir) => {
       import graft.functions.TextFunctions.nfcNormalize
       val mixed = Tables.documents(s, dir).withColumn("text",
         concat(col("text"), lit(" café éclair")))
@@ -2965,26 +3078,40 @@ object ExtQueries {
         (length(col("text")) - length(nfcNormalize(col("text"))))
           .cast("int").as("delta_chars"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """SELECT doc_id, nfc_normalize(text) AS text_nfc,
+        |  CAST(length(text) - length(nfc_normalize(text)) AS INT) AS delta_chars
+        |FROM (SELECT doc_id,
+        |        text || ' cafe' || chr(769) || ' ' || chr(233) || 'clair' AS text
+        |      FROM documents)
+        |ORDER BY doc_id""".stripMargin),
 
     // fingerprints, VALUE-gated via the engine-portable Karp–Rabin
     // columns: the oracle recomputes the full-text rolling hash and the
     // min-shingle rolling fingerprint from raw text with the same
     // (B, M) fold — the xxhash64 twins stay engine-side, determinism
     // locked in TextAnalysisSpec
-    "q_text_fingerprint" -> ((s, dir) =>
+    Face("q_text_fingerprint", (s, dir) =>
       TextAnalysis.fingerprint(Tables.documents(s, dir))
         .select(col("doc_id"), col("fp_roll"), col("fp_roll_min"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
+         |f AS (SELECT doc_id, ${polyFoldSql("text")} AS fp_roll FROM t),
+         |shl AS (SELECT doc_id, unnest($shinglesSql) AS s FROM t),
+         |m AS (SELECT doc_id, min(${polyFoldSql("s")}) AS fp_roll_min
+         |      FROM shl GROUP BY doc_id)
+         |SELECT f.doc_id, f.fp_roll, m.fp_roll_min
+         |FROM f JOIN m USING (doc_id) ORDER BY doc_id""".stripMargin),
 
     // BPE tokenizer training: the first 6 merge rules learned from the
     // corpus word-frequency table — the whole driver-coordinated training
     // loop (pair counts, deterministic arg-max, greedy left-to-right
     // merge application) lands under the gate; the oracle re-runs the
     // identical recurrence one MATERIALIZED CTE group per round
-    "q_bpe_train" -> ((s, dir) =>
+    Face("q_bpe_train", (s, dir) =>
       Bpe.bpeTrain(Tables.documents(s, dir), merges = 6)
-        .orderBy(col("rank"))),
+        .orderBy(col("rank")),
+      bpeTrainOracleSql),
 
     // unigram-LM (SentencePiece-family) tokenizer training: 2 rounds of
     // deterministic Viterbi-EM over the seeded substring vocabulary; the
@@ -2992,20 +3119,22 @@ object ExtQueries {
     // the oracle re-derives every count (seed grid + brute-force
     // segmentation arg-max per round) and consumes score_scaled only
     // where its counts agree (the q_lm_score epistemics)
-    "q_unigram_train" -> ((s, dir) =>
+    Face("q_unigram_train", (s, dir) =>
       Unigram.unigramTrain(Tables.documents(s, dir), rounds = 2,
           maxPieceLen = 4, vocabSize = 48,
           modelSink = Some(oracleStagePath(dir, "q_unigram_train")))
-        .orderBy(col("round"), col("piece"))),
+        .orderBy(col("round"), col("piece")),
+      unigramOracleSql(stagedRoot)),
 
     // the SentencePiece PRUNE step: every multi-char piece scored by the
     // corpus likelihood loss of removing it (re-segmentation delta under
     // the final model), top-24 kept. The oracle re-runs the training
     // recurrence, then brute-forces best-with and best-WITHOUT-p masks
     // per (word, used piece) — every loss an exact integer sum
-    "q_unigram_prune" -> ((s, dir) =>
+    Face("q_unigram_prune", (s, dir) =>
       Unigram.pruneVocab(Tables.documents(s, dir), rounds = 2,
-        maxPieceLen = 4, vocabSize = 48, keep = 24)),
+        maxPieceLen = 4, vocabSize = 48, keep = 24),
+      unigramPruneOracleSql(stagedRoot)),
 
     // unigram apply side: the corpus word table segmented by the DP under
     // the standing trained model (per-(process, dir) cache — a tokenizer
@@ -3014,7 +3143,7 @@ object ExtQueries {
     // brute-force-segments every word under the verified final scores —
     // so DP ≡ exhaustive arg-max is locked externally here, not just by
     // UnigramSpec
-    "q_unigram_tokens" -> ((s, dir) => {
+    Face("q_unigram_tokens", (s, dir) => {
       import graft.functions.TextFunctions.tokens
       val model = unigramModelCached(s, dir)
       val words = Tables.documents(s, dir)
@@ -3025,7 +3154,8 @@ object ExtQueries {
         .select(col("cnt"), explode(split(col("pieces_joined"), " ")).as("piece"))
         .groupBy(col("piece")).agg(sum(col("cnt")).as("n"))
         .orderBy(col("n").desc, col("piece")).limit(10)
-    }),
+    },
+      unigramTokensOracleSql(stagedRoot)),
 
     // BPE apply side: tokenize the corpus with the 6 learned rules (the
     // bpeTokens higher-order fold) and take the top-10 tokens by weighted
@@ -3036,7 +3166,7 @@ object ExtQueries {
     // (a tokenizer is trained once, applied forever; re-training per
     // tokenization call would time the wrong thing), same standing-state
     // reasoning as annFromIndex reading the persisted IVF index
-    "q_bpe_tokens" -> ((s, dir) => {
+    Face("q_bpe_tokens", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val rules = bpeRulesCached(s, dir)
       docs.select(explode(split(lower(col("text")), "\\s+")).as("w"))
@@ -3045,7 +3175,8 @@ object ExtQueries {
         .select(explode(Bpe.bpeTokens(col("w"), rules)).as("token"), col("cnt"))
         .groupBy(col("token")).agg(sum(col("cnt")).as("n"))
         .orderBy(col("n").desc, col("token")).limit(10)
-    }),
+    },
+      bpeTokensOracleSql),
 
     // BYTE-LEVEL BPE training (r19 — the r18 judge's missing-#4, the
     // GPT-2/Llama production tokenizer family): UTF-8 bytes as the base
@@ -3053,15 +3184,16 @@ object ExtQueries {
     // no [UNK] on any input by construction (the no-unknown property is
     // spec-pinned on arbitrary Unicode input in BpeSpec). The oracle
     // re-runs the whole byte-level recurrence one CTE group per round.
-    "q_byte_bpe_train" -> ((s, dir) =>
+    Face("q_byte_bpe_train", (s, dir) =>
       Bpe.byteBpeTrain(Tables.documents(s, dir), merges = 6)
-        .orderBy(col("rank"))),
+        .orderBy(col("rank")),
+      byteBpeTrainOracleSql).budget(3.0),
 
     // byte-level apply side, gated externally like q_bpe_tokens: the
     // oracle consumes the final vocab of ITS OWN recurrence (fold ≡
     // relational application, on the byte alphabet); rules from the
     // per-(process, dir) cache — trained once, applied forever
-    "q_byte_bpe_tokens" -> ((s, dir) => {
+    Face("q_byte_bpe_tokens", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val rules = byteBpeRulesCached(s, dir)
       docs.select(explode(split(lower(col("text")), "\\s+")).as("w"))
@@ -3071,7 +3203,8 @@ object ExtQueries {
           col("cnt"))
         .groupBy(col("token")).agg(sum(col("cnt")).as("n"))
         .orderBy(col("n").desc, col("token")).limit(10)
-    }),
+    },
+      byteBpeTokensOracleSql).budget(0.8),
 
     // WordPiece training (the third tokenizer family): the BPE loop
     // with the likelihood-gain objective — merge the pair maximizing
@@ -3080,9 +3213,12 @@ object ExtQueries {
     // carrying the ## continuation marker. The oracle re-runs the
     // identical recurrence one CTE group per round, scores included —
     // the WHOLE training loop sits under the hash gate
-    "q_wordpiece_train" -> ((s, dir) =>
+    Face("q_wordpiece_train", (s, dir) =>
       WordPiece.train(Tables.documents(s, dir), merges = 6)
-        .orderBy(col("rank"))),
+        .orderBy(col("rank")),
+      // the full WordPiece training recurrence re-derived (scores in
+      // HUGEINT ≡ the engine's DECIMAL(38,0) — both exact truncation)
+      wordpieceTrainOracleSql),
 
     // WordPiece apply side: greedy LONGEST-MATCH-FIRST segmentation
     // under the trained vocab (the public algorithm — deliberately NOT
@@ -3093,7 +3229,7 @@ object ExtQueries {
     // Top-10 pieces by weighted usage — the oracle re-derives the full
     // training chain AND the greedy scan, so longest-match ≡ the
     // engine's per-partition loop is locked externally
-    "q_wordpiece_tokens" -> ((s, dir) => {
+    Face("q_wordpiece_tokens", (s, dir) => {
       import graft.functions.TextFunctions.tokens
       val vocab = wordpieceVocabCached(s, dir)
       val words = Tables.documents(s, dir)
@@ -3104,7 +3240,9 @@ object ExtQueries {
         .select(col("cnt"), explode(split(col("pieces_joined"), " ")).as("piece"))
         .groupBy(col("piece")).agg(sum(col("cnt")).as("n"))
         .orderBy(col("n").desc, col("piece")).limit(10)
-    }),
+    },
+      // training chain + the step-unrolled greedy longest-match scan
+      wordpieceTokensOracleSql),
 
     // mojibake repair (the ftfy-style double-encoding fix): the corpus
     // gets a planted tail per id-mod class — three classic cp1252
@@ -3112,7 +3250,7 @@ object ExtQueries {
     // repair (translate + ISO-8859-1 encode + is_valid_utf8 gate +
     // UTF-8 decode) must recover the true string byte-for-byte
     // (md5-gated) while leaving the clean class untouched
-    "q_mojibake" -> ((s, dir) => {
+    Face("q_mojibake", (s, dir) => {
       val planted = Tables.documents(s, dir).select(col("doc_id"),
         concat(col("text"), element_at(array(
             lit(" cafÃ© bar"), lit(" donâ€™t go"),
@@ -3122,15 +3260,40 @@ object ExtQueries {
         .select(col("doc_id"), col("mojibake_fixed"),
           md5(col("text")).as("text_md5"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the repaired strings, stated directly: each mojibake class's TRUE
+      // text is a literal here — the engine must land on the same bytes
+      // from the general re-encode path, and must not touch the clean one
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 4 = 3 THEN false ELSE true END AS mojibake_fixed,
+        |  md5(text || CASE CAST(doc_id % 4 AS INT)
+        |    WHEN 0 THEN ' café bar' WHEN 1 THEN ' don’t go'
+        |    WHEN 2 THEN ' über alles' ELSE ' clean tail' END) AS text_md5
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // collocation (phrase) mining: adjacent-bigram lift in exact
     // scaled-integer arithmetic — the phrase-vocabulary corpus-prep
     // step. minCount drops hapax bigrams before the arg-max (a pair of
     // two hapax words has maximal lift by construction); top-20 on the
     // (lift desc, a, b) total order — fully re-derived by the oracle
-    "q_collocations" -> ((s, dir) =>
-      TextAnalysis.collocations(Tables.documents(s, dir))),
+    Face("q_collocations", (s, dir) =>
+      TextAnalysis.collocations(Tables.documents(s, dir)),
+      // bigram/unigram recount + the identical exact integer lift
+      // (HUGEINT ≡ the engine's DECIMAL(38,0) — both truncate)
+      s"""WITH d AS (SELECT $toksSql AS l FROM documents),
+         |bg AS (SELECT a, b, CAST(count(*) AS BIGINT) AS n FROM (
+         |    SELECT l[i] AS a, l[i + 1] AS b FROM (
+         |      SELECT l, unnest(generate_series(1, len(l) - 1)) AS i FROM d))
+         |  WHERE len(a) > 0 AND len(b) > 0 GROUP BY a, b),
+         |uni AS (SELECT u, CAST(count(*) AS BIGINT) AS c FROM (
+         |    SELECT unnest(l) AS u FROM d) WHERE len(u) > 0 GROUP BY u),
+         |tot AS (SELECT CAST(sum(c) AS HUGEINT) AS nn FROM uni)
+         |SELECT a, b, n AS pair_count,
+         |  CAST(CAST(n AS HUGEINT) * (SELECT nn FROM tot) * 1000000 //
+         |    (CAST(ca.c AS HUGEINT) * cb.c) AS BIGINT) AS lift_ppm
+         |FROM bg JOIN uni ca ON ca.u = bg.a JOIN uni cb ON cb.u = bg.b
+         |WHERE n >= 2
+         |ORDER BY lift_ppm DESC, a, b LIMIT 20""".stripMargin),
 
     // tokenizer FERTILITY (pieces-per-word) per language slice — the
     // metric a tokenizer choice is judged by before a training run:
@@ -3138,7 +3301,7 @@ object ExtQueries {
     // weight by per-(lang, word) frequency, report exact integer ppm
     // (the repo-wide no-floats stance). The oracle re-derives the
     // training chain AND the greedy scan AND the per-lang ledger
-    "q_wordpiece_fertility" -> ((s, dir) => {
+    Face("q_wordpiece_fertility", (s, dir) => {
       import graft.functions.TextFunctions.tokens
       val vocab = wordpieceVocabCached(s, dir)
       val byLang = Tables.documents(s, dir)
@@ -3153,7 +3316,23 @@ object ExtQueries {
         .withColumn("pieces_per_word_ppm",
           expr("n_pieces * 1000000L div n_words"))
         .orderBy(col("lang"))
-    }),
+    },
+      // fertility: the same chain + greedy scan, then the per-(lang,
+      // word) frequency ledger joined on the segmented word table —
+      // exact integer ppm both sides
+      (
+      wordpieceScanCtes +
+        s""",
+           |wlang AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS cnt
+           |  FROM (SELECT lang, unnest($toksSql) AS w FROM documents)
+           |  WHERE len(w) BETWEEN 1 AND 12 GROUP BY lang, w),
+           |wnp AS (SELECT w, CAST(len(pieces) AS BIGINT) AS np FROM gst12)
+           |SELECT lang, CAST(sum(cnt) AS BIGINT) AS n_words,
+           |  CAST(sum(cnt * np) AS BIGINT) AS n_pieces,
+           |  CAST((sum(cnt * np) * 1000000) // sum(cnt) AS BIGINT)
+           |    AS pieces_per_word_ppm
+           |FROM wlang JOIN wnp USING (w)
+           |GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // Aho–Corasick multi-pattern SUBSTRING scan (the blocklist-scale
     // primitive regex alternation can't carry): one linear pass per doc
@@ -3163,7 +3342,7 @@ object ExtQueries {
     // the left join keeps never-hit patterns ("zzz") as explicit zeros.
     // Oracle recounts every pattern at every start position — an
     // engine that misses overlaps or nested hits diverges
-    "q_keyword_hits" -> ((s, dir) => {
+    Face("q_keyword_hits", (s, dir) => {
       import s.implicits._
       val hits = Keywords.matchCounts(Tables.documents(s, dir), keywordPatterns)
       keywordPatterns.toDF("pattern")
@@ -3174,6 +3353,20 @@ object ExtQueries {
           coalesce(col("h"), lit(0L)).as("n_hits"),
           coalesce(col("d"), lit(0L)).as("n_docs"))
         .orderBy(col("pattern"))
+    },
+      // every pattern recounted at every start position (overlaps and
+      // nesting included — substr equality per offset, NOT replace()
+      // arithmetic, which only sees non-overlapping occurrences)
+      {
+      val values = keywordPatterns.map(p => s"('$p')").mkString(", ")
+      s"""WITH pats(p) AS (VALUES $values),
+         |h AS (SELECT d.doc_id, pats.p,
+         |    len(list_filter(range(1, len(d.text) - len(pats.p) + 2),
+         |      i -> substr(d.text, CAST(i AS INT), len(pats.p)) = pats.p)) AS n
+         |  FROM documents d CROSS JOIN pats)
+         |SELECT p AS pattern, CAST(sum(n) AS BIGINT) AS n_hits,
+         |  CAST(count(*) FILTER (WHERE n > 0) AS BIGINT) AS n_docs
+         |FROM h GROUP BY p ORDER BY pattern""".stripMargin
     }),
 
     // the case-folded, NFC-normalized dial (r17 judge directive #2):
@@ -3183,7 +3376,7 @@ object ExtQueries {
     // one ("cafe"+U+0301) that the case-sensitive scan provably misses
     // (KeywordsSpec pins the divergence); the oracle recomputes the
     // fold (lower ∘ nfc_normalize) and every count from raw text
-    "q_keyword_hits_ci" -> ((s, dir) => {
+    Face("q_keyword_hits_ci", (s, dir) => {
       import s.implicits._
       val docs = Tables.documents(s, dir)
         .withColumn("text", concat(col("text"), lit(ciPlantedTail)))
@@ -3197,15 +3390,43 @@ object ExtQueries {
           coalesce(col("h"), lit(0L)).as("n_hits"),
           coalesce(col("d"), lit(0L)).as("n_docs"))
         .orderBy(col("pattern"))
-    }),
+    },
+      // the fold recomputed in the oracle (lower ∘ nfc_normalize — the
+      // engine's exact composition order) over the SAME planted tail,
+      // then every pattern recounted at every start position like
+      // q_keyword_hits; the patterns are already folded-form literals,
+      // so the VALUES list doubles as the folded automaton input
+      {
+      val values = ciKeywordPatterns.map(p => s"('$p')").mkString(", ")
+      s"""WITH pats(p) AS (VALUES $values),
+         |d AS (SELECT doc_id,
+         |    lower(nfc_normalize(text || '$ciPlantedTail')) AS t
+         |  FROM documents),
+         |h AS (SELECT d.doc_id, pats.p,
+         |    len(list_filter(range(1, len(d.t) - len(pats.p) + 2),
+         |      i -> substr(d.t, CAST(i AS INT), len(pats.p)) = pats.p)) AS n
+         |  FROM d CROSS JOIN pats)
+         |SELECT p AS pattern, CAST(sum(n) AS BIGINT) AS n_hits,
+         |  CAST(count(*) FILTER (WHERE n > 0) AS BIGINT) AS n_docs
+         |FROM h GROUP BY p ORDER BY pattern""".stripMargin
+    }).budget(0.3),
 
     // the blocklist drop itself: early-exit containsAny as a plain
     // per-partition filter — no explode, no join (phrase blocklist
     // chosen so the face drops AND keeps non-trivial doc sets)
-    "q_keyword_filter" -> ((s, dir) =>
+    Face("q_keyword_filter", (s, dir) =>
       Keywords.filterNone(Tables.documents(s, dir), keywordBlocklist)
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the drop predicate as plain LIKEs — any-pattern containment is
+      // engine-trivial; what the face gates is the automaton agreeing
+      // with it on every doc
+      {
+      val likes = keywordBlocklist
+        .map(p => s"text LIKE '%$p%'").mkString(" OR ")
+      s"""SELECT doc_id, lang FROM documents
+         |WHERE NOT ($likes) ORDER BY doc_id""".stripMargin
+    }),
 
     // WET (WARC conversion) crawl-dump ingestion: the fixture renders
     // the corpus as a real WET file (headers + Content-Length + body
@@ -3215,13 +3436,17 @@ object ExtQueries {
     // from the FILE BYTES, and the oracle recomputes all of them from
     // the documents table the fixture was rendered from: a record
     // split or header/body-slice bug diverges (body gated by md5)
-    "q_wet_scan" -> ((s, dir) =>
+    Face("q_wet_scan", (s, dir) =>
       graft.sources.Sources.wetRecords(s, s"${wetFixture(s, dir)}/corpus.wet")
         .select(
           regexp_extract(col("uri"), "/p/(\\d+)", 1).cast("long").as("doc_id"),
           col("rec_type"), col("uri"), col("content_length"),
           md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // every engine column is parsed from the rendered WET file; this
+      // recomputes them all from the source-of-truth documents table —
+      // uri/type from the render rule, length and body md5 from the text
+      wetScanOracleSql),
 
     // full WARC response-record ingestion (r17 judge directive #4): the
     // fixture renders the corpus as a real WARC response dump (HTTP
@@ -3231,7 +3456,7 @@ object ExtQueries {
     // comes from the FILE BYTES and the oracle recomputes them all —
     // status/type from the render rule, length from the byte
     // arithmetic, payload gated by md5
-    "q_warc_scan" -> ((s, dir) =>
+    Face("q_warc_scan", (s, dir) =>
       graft.sources.Sources.warcResponses(s,
         s"${warcFixture(s, dir)}/corpus.warc")
         .select(
@@ -3239,7 +3464,26 @@ object ExtQueries {
           col("rec_type"), col("uri"), col("content_length"),
           col("http_status"), col("content_type"),
           md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // every engine column parsed from the rendered WARC response dump;
+      // this recomputes them from the documents table + the render rule —
+      // content_length is the full HTTP block's BYTE count (status line +
+      // Content-Type header + blank line + payload), payload md5-gated
+      """WITH r AS (SELECT doc_id, source, text,
+        |    CASE WHEN doc_id % 3 = 0 THEN 404 ELSE 200 END AS st,
+        |    CASE WHEN doc_id % 2 = 0 THEN 'text/html; charset=UTF-8'
+        |         ELSE 'text/plain' END AS ct
+        |  FROM documents)
+        |SELECT doc_id, 'response' AS rec_type,
+        |  'http://' || source || '.example.com/p/' ||
+        |    CAST(doc_id AS VARCHAR) AS uri,
+        |  CAST(octet_length(encode('HTTP/1.1 ' || CAST(st AS VARCHAR) ||
+        |      ' OK' || chr(13) || chr(10) || 'Content-Type: ' || ct ||
+        |      chr(13) || chr(10) || chr(13) || chr(10))) +
+        |    octet_length(encode(text)) AS BIGINT) AS content_length,
+        |  CAST(st AS INT) AS http_status, ct AS content_type,
+        |  md5(text) AS body_md5
+        |FROM r ORDER BY doc_id""".stripMargin).budget(0.3),
 
     // the streamed crawl-bucket twin: three dump files arriving over
     // time (one per micro-batch, maxFilesPerTrigger=1) with a
@@ -3248,13 +3492,14 @@ object ExtQueries {
     // parquet-sink read-back is gated on the BATCH face's oracle
     // verbatim (file discovery, per-batch demux, exactly-once recovery
     // all under the same hash)
-    "q_wet_ingest_replay" -> ((s, dir) =>
+    Face("q_wet_ingest_replay", (s, dir) =>
       s.read.parquet(s"${wetIngestFixture(s, dir)}/sink")
         .select(
           regexp_extract(col("uri"), "/p/(\\d+)", 1).cast("long").as("doc_id"),
           col("rec_type"), col("uri"), col("content_length"),
           md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      wetScanOracleSql).budget(0.5),
 
     // crawl-to-corpus as ONE Catalyst plan (r17 judge directive #5 —
     // the ingestion extension of q_prep_pipeline's composability
@@ -3266,7 +3511,7 @@ object ExtQueries {
     // aggregation (plan-asserted in PlanInvariantsSpec). The oracle
     // recomputes the whole pipeline from the documents table the dump
     // was rendered from.
-    "q_crawl_pipeline" -> ((s, dir) => {
+    Face("q_crawl_pipeline", (s, dir) => {
       import s.implicits._
       val recs = graft.sources.Sources
         .wetRecords(s, s"${wetFixture(s, dir)}/corpus.wet")
@@ -3286,7 +3531,13 @@ object ExtQueries {
       Dedup.exactRows(gated, "text", "doc_id",
           Seq("doc_id", "domain", "lang_pred", "n_words"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the whole crawl-to-corpus pipeline re-derived from the documents
+      // table the WET dump was rendered from: blocklist drop from the
+      // render rule's host, stopword/CJK langid, the Gopher/C4 rule gate,
+      // then exact dedup (min-id per text) over the gated set — every
+      // stage recomputed independently, one SQL
+      crawlPipelineOracleSql).budget(4.0),
 
     // the STREAMED twin of q_crawl_pipeline (r19 — judge directive #5):
     // wetStream file source → blocklist anti-join → langid → quality
@@ -3296,47 +3547,130 @@ object ExtQueries {
     // the last — the production tail-a-crawl-bucket shape end to end;
     // the sink read-back gates against the BATCH face's oracle VERBATIM
     // (range-ordered arrival ⇒ first-arrival dedup ≡ min-id dedup)
-    "q_crawl_ingest_replay" -> ((s, dir) =>
+    Face("q_crawl_ingest_replay", (s, dir) =>
       s.read.parquet(s"${crawlIngestFixture(s, dir)}/out")
         .select(col("doc_id"), col("domain"), col("lang_pred"),
           col("n_words"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      crawlPipelineOracleSql).budget(0.5),
 
     // DSIR importance selection (target = English slice): hashed-unigram
     // log-ratio scores as exact integers; the staged ratio table carries
     // its own (t_cnt, r_cnt) evidence, which the oracle recomputes from
     // raw text before consuming the ln column — see the epistemic ledger
-    "q_dsir_select" -> ((s, dir) =>
+    Face("q_dsir_select", (s, dir) =>
       TextAnalysis.dsirSelect(Tables.documents(s, dir),
         targetPred = col("lang") === "en", m = 50,
         ratiosSink = Some(oracleStagePath(dir, "q_dsir_select")))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // DSIR: bucketing (Karp–Rabin fold mod 256), per-doc counts, and
+      // BOTH smoothing inputs (t_cnt, r_cnt) recomputed from raw text;
+      // the staged ratio_scaled is consumed only on buckets whose staged
+      // counts equal the recomputation (`ver` join — a mismatch drops
+      // buckets, changes scores, and fails the hash). Engine-side
+      // residue: the ln of two verified rationals (TextAnalysisSpec).
+      s"""WITH t AS (SELECT doc_id, unnest(toks) AS term
+         |           FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
+         |tb AS (SELECT doc_id, ${polyFoldSql("term")} % 256 AS bucket FROM t),
+         |c AS (SELECT doc_id, bucket, count(*) AS c FROM tb GROUP BY doc_id, bucket),
+         |rawb AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS r_chk FROM c GROUP BY bucket),
+         |tgtb AS (SELECT bucket, CAST(sum(c.c) AS BIGINT) AS t_chk
+         |         FROM c JOIN documents d USING (doc_id)
+         |         WHERE d.lang = 'en' GROUP BY bucket),
+         |staged AS (SELECT bucket, t_cnt, r_cnt, ratio_scaled
+         |           FROM read_parquet('$stagedRoot/q_dsir_select/*.parquet')),
+         |ver AS (SELECT s.bucket, s.ratio_scaled FROM staged s
+         |        JOIN rawb ON rawb.bucket = s.bucket AND rawb.r_chk = s.r_cnt
+         |        LEFT JOIN tgtb ON tgtb.bucket = s.bucket
+         |        WHERE coalesce(tgtb.t_chk, 0) = s.t_cnt),
+         |scores AS (SELECT c.doc_id,
+         |             CAST(sum(c.c * v.ratio_scaled) AS BIGINT) AS score
+         |           FROM c JOIN ver v USING (bucket) GROUP BY c.doc_id)
+         |SELECT doc_id, score FROM (
+         |  SELECT doc_id, score, row_number() OVER (
+         |    ORDER BY score DESC, doc_id) AS rn FROM scores) t
+         |WHERE rn <= 50 ORDER BY doc_id""".stripMargin),
 
     // bigram-LM quality scoring (the KenLM/CCNet perplexity-filter
     // shape, deterministic): the staged B×B model carries count
     // evidence the oracle re-derives from raw text before trusting the
     // scaled-ln column; per-doc sums are exact integers
-    "q_lm_score" -> ((s, dir) =>
+    Face("q_lm_score", (s, dir) =>
       TextAnalysis.lmScore(Tables.documents(s, dir), buckets = 64,
         modelSink = Some(oracleStagePath(dir, "q_lm_score")))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |bg AS (SELECT doc_id,
+         |         ${polyFoldSql("toks[i]")} % 64 AS b1,
+         |         ${polyFoldSql("toks[i + 1]")} % 64 AS b2
+         |       FROM (SELECT doc_id, toks,
+         |               unnest(generate_series(1, len(toks) - 1)) AS i
+         |             FROM t)),
+         |c AS (SELECT doc_id, b1, b2, count(*) AS c FROM bg
+         |      GROUP BY doc_id, b1, b2),
+         |corpus AS (SELECT b1, b2, CAST(sum(c) AS BIGINT) AS c12_chk
+         |           FROM c GROUP BY b1, b2),
+         |uni AS (SELECT b1, CAST(sum(c12_chk) AS BIGINT) AS c1_chk
+         |        FROM corpus GROUP BY b1),
+         |staged AS (SELECT b1, b2, c12, c1, ln_scaled
+         |           FROM read_parquet('$stagedRoot/q_lm_score/*.parquet')),
+         |ver AS (SELECT s.b1, s.b2, s.ln_scaled FROM staged s
+         |        LEFT JOIN corpus ON corpus.b1 = s.b1 AND corpus.b2 = s.b2
+         |        LEFT JOIN uni ON uni.b1 = s.b1
+         |        WHERE coalesce(corpus.c12_chk, 0) = s.c12
+         |          AND coalesce(uni.c1_chk, 0) = s.c1)
+         |SELECT c.doc_id, CAST(sum(c.c) AS BIGINT) AS n_bigrams,
+         |       CAST(sum(c.c * v.ln_scaled) AS BIGINT) AS ll_scaled
+         |FROM c JOIN ver v ON c.b1 = v.b1 AND c.b2 = v.b2
+         |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin),
 
     // distribution drift (PSI evidence) of doc length between the 'en'
     // slice and the rest: counts and the exact diff numerator are
     // re-derived independently by the oracle; the scaled-ln column is
     // consumed only where the count evidence matches (the DSIR pattern)
-    "q_drift" -> ((s, dir) => {
+    Face("q_drift", (s, dir) => {
       val path = oracleStagePath(dir, "q_drift")
       Profile.histogramDrift(Tables.documents(s, dir),
         isA = coalesce(col("lang") === "en", lit(false)),
         valueCol = col("n_chars"), lo = 0.0, hi = 600.0, buckets = 12)
         .coalesce(1).write.mode("overwrite").parquet(path)
       s.read.parquet(path).orderBy(col("bucket"))
-    }),
+    },
+      // drift table from the staged evidence: bin assignment, per-slice
+      // counts, totals, and the exact diff numerator all re-derived
+      // (the oracle emits ITS diff_num, so a wrong engine value can't
+      // hash-match); ln_scaled consumed only where the counts agree
+      s"""WITH x AS (SELECT CAST(n_chars AS DOUBLE) AS v,
+         |             coalesce(lang = 'en', false) AS a
+         |           FROM documents
+         |           WHERE CAST(n_chars AS DOUBLE) >= 0.0
+         |             AND CAST(n_chars AS DOUBLE) <= 600.0),
+         |b AS (SELECT CAST(least(11, floor((v - 0.0) * 12 / (600.0 - 0.0)))
+         |             AS BIGINT) AS bucket, a FROM x),
+         |c AS (SELECT bucket,
+         |        CAST(count(*) FILTER (a) AS BIGINT) AS na_chk,
+         |        CAST(count(*) FILTER (NOT a) AS BIGINT) AS nb_chk
+         |      FROM b GROUP BY bucket),
+         |tot AS (SELECT CAST(coalesce(sum(na_chk), 0) AS BIGINT) AS nA,
+         |               CAST(coalesce(sum(nb_chk), 0) AS BIGINT) AS nB
+         |        FROM c),
+         |g AS (SELECT unnest(generate_series(0, 11)) AS bucket),
+         |f AS (SELECT g.bucket, CAST(coalesce(c.na_chk, 0) AS BIGINT) AS na_chk,
+         |        CAST(coalesce(c.nb_chk, 0) AS BIGINT) AS nb_chk
+         |      FROM g LEFT JOIN c ON g.bucket = c.bucket),
+         |staged AS (SELECT bucket, n_a, n_b, diff_num, ln_scaled
+         |           FROM read_parquet('$stagedRoot/q_drift/*.parquet'))
+         |SELECT s.bucket, s.n_a, s.n_b,
+         |  CAST(f.na_chk * (SELECT nB FROM tot)
+         |     - f.nb_chk * (SELECT nA FROM tot) AS BIGINT) AS diff_num,
+         |  s.ln_scaled
+         |FROM staged s JOIN f ON s.bucket = f.bucket
+         |  AND s.n_a = f.na_chk AND s.n_b = f.nb_chk
+         |ORDER BY s.bucket""".stripMargin),
 
     // TF-IDF: top-3 terms per document (doc_id < 10), deterministic
     // (rounded-score, term) ranking.
-    "q_text_tfidf" -> ((s, dir) => {
+    Face("q_text_tfidf", (s, dir) => {
       val scored = TextAnalysis.tfidf(
         Tables.documents(s, dir).filter(col("doc_id") < 10))
         .withColumn("tfidf_r", round(col("tfidf"), 6))
@@ -3347,7 +3681,24 @@ object ExtQueries {
         .select(col("doc_id"), col("rank"), col("term"),
           col("tf"), col("tfidf_r").as("tfidf"))
         .orderBy(col("doc_id"), col("rank"))
-    }),
+    },
+      s"""WITH terms AS (
+         |  SELECT doc_id, unnest(toks) AS term
+         |  FROM (SELECT doc_id, $toksSql AS toks FROM documents WHERE doc_id < 10)),
+         |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
+         |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM terms GROUP BY term),
+         |n AS (SELECT count(*) AS n_docs FROM documents WHERE doc_id < 10),
+         |scored AS (
+         |  SELECT tf.doc_id, tf.term, tf.tf,
+         |    round(CAST(tf.tf AS DOUBLE) *
+         |      (ln((CAST(n_docs AS DOUBLE) + 1.0) / (CAST(df.df AS DOUBLE) + 1.0)) + 1.0),
+         |      6) AS tfidf
+         |  FROM tf JOIN df USING (term) CROSS JOIN n)
+         |SELECT doc_id, rank, term, tf, tfidf FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY doc_id
+         |                               ORDER BY tfidf DESC, term) AS rank
+         |  FROM scored) t
+         |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
 
     // corpus n-gram statistics: top-5 most frequent 3-grams per language
     // via the k-bounded topk aggregate with a STRING tie (cnt DESC, ngram
@@ -3355,7 +3706,7 @@ object ExtQueries {
     // The scale path: the heap ships ≤ k (ngram, cnt) entries per
     // (partition, lang) — a window row_number would sort every distinct
     // ngram of every language
-    "q_ngram_topk" -> ((s, dir) => {
+    Face("q_ngram_topk", (s, dir) => {
       import graft.functions.TextFunctions.{shingles, tokens}
       val counts = Tables.documents(s, dir)
         .select(col("lang"), explode(shingles(tokens(col("text")), 3)).as("ngram"))
@@ -3367,7 +3718,17 @@ object ExtQueries {
         .select(col("lang"), (col("rank0") + 1).cast("int").as("rank"),
           col("e.ngram").as("ngram"), col("e.cnt").as("cnt"))
         .orderBy(col("lang"), col("rank"))
-    }),
+    },
+      s"""WITH grams AS (
+         |  SELECT lang, unnest($shinglesSql) AS ngram
+         |  FROM (SELECT lang, $toksSql AS toks FROM documents)),
+         |c AS (SELECT lang, ngram, count(*) AS cnt FROM grams GROUP BY lang, ngram)
+         |SELECT lang, rank, ngram, cnt FROM (
+         |  SELECT lang, ngram, cnt,
+         |    CAST(row_number() OVER (PARTITION BY lang
+         |                            ORDER BY cnt DESC, ngram) AS INT) AS rank
+         |  FROM c) t
+         |WHERE rank <= 5 ORDER BY lang, rank""".stripMargin),
 
     // frequent items via the Misra-Gries sketch aggregate — run here in its
     // EXACT regime (distinct sources per lang ≤ m), where the sketch
@@ -3375,7 +3736,7 @@ object ExtQueries {
     // hash-check it; sketch-regime bounds are property-tested in
     // HeavyHittersSpec. Map side ships ≤ m entries per group regardless of
     // the distinct count — the vocabulary never crosses the exchange.
-    "q_heavy_hitters" -> ((s, dir) =>
+    Face("q_heavy_hitters", (s, dir) =>
       Tables.documents(s, dir)
         .groupBy(col("lang"))
         .agg(graft.functions.HeavyHitters.heavyHitters(col("source"), m = 64).as("hh"))
@@ -3383,43 +3744,81 @@ object ExtQueries {
         .select(col("lang"), (col("rank0") + 1).cast("int").as("rank"),
           col("e.item").as("source"), col("e.est").as("est"),
           col("e.err").as("err"))
-        .orderBy(col("lang"), col("rank"))),
+        .orderBy(col("lang"), col("rank")),
+      // exact-regime MG == plain counts, err 0, (est DESC, item ASC) order
+      s"""SELECT lang,
+         |  CAST(row_number() OVER (PARTITION BY lang
+         |                          ORDER BY est DESC, source) AS INT) AS rank,
+         |  source, est, CAST(0 AS BIGINT) AS err
+         |FROM (SELECT lang, source, count(*) AS est
+         |      FROM documents GROUP BY lang, source) t
+         |ORDER BY lang, rank""".stripMargin),
 
     // within-doc repetition score (degenerate-text quality signal)
-    "q_repetition" -> ((s, dir) =>
+    Face("q_repetition", (s, dir) =>
       TextAnalysis.repetition(Tables.documents(s, dir))
         .select(col("doc_id"), col("n_ngrams"), col("n_distinct_ngrams"),
           col("repetition"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, CAST(len(sh) AS INT) AS n_ngrams,
+         |  CAST(len(list_distinct(sh)) AS INT) AS n_distinct_ngrams,
+         |  round(1.0 - CAST(len(list_distinct(sh)) AS DOUBLE) /
+         |        greatest(CAST(len(sh) AS DOUBLE), 1.0), 6) AS repetition
+         |FROM (SELECT doc_id, $shinglesSql AS sh
+         |      FROM (SELECT doc_id, $toksSql AS toks FROM documents))
+         |ORDER BY doc_id""".stripMargin),
 
     // benchmark-contamination: docs with doc_id < 20 play the eval set, so
     // they flag themselves (contamination 1.0) plus any true leaks — the
     // decontamination sweep a training pipeline runs before every job
-    "q_contamination" -> ((s, dir) => {
+    Face("q_contamination", (s, dir) => {
       val docs = Tables.documents(s, dir)
       TextAnalysis.contamination(docs, docs.filter(col("doc_id") < 20), k = 3)
         .orderBy(col("doc_id"))
-    }),
+    },
+      contaminationSql),
 
     // bloom-prefiltered decontamination: OUTPUT-IDENTICAL to
     // q_contamination (the bloom only gates entry to the exact verify), so
     // the oracle is the same exact SQL — a hash-checked proof that the
     // sketch path loses nothing
-    "q_contamination_bloom" -> ((s, dir) => {
+    Face("q_contamination_bloom", (s, dir) => {
       val docs = Tables.documents(s, dir)
       TextAnalysis.contaminationBloom(
         docs, docs.filter(col("doc_id") < 20), k = 3, fpp = 0.03)
         .orderBy(col("doc_id"))
-    }),
+    },
+      contaminationSql),
 
     // HTML → plain text over a synthesized markup wrapper (the fixture
     // corpus is clean); &amp;amp; proves the decode-&amp;-last ordering
-    "q_html_strip" -> ((s, dir) =>
+    Face("q_html_strip", (s, dir) =>
       TextPrep.stripHtml(
         Tables.documents(s, dir).withColumn("text", concat(
           lit(htmlWrapPrefix), col("text"), lit(htmlWrapSuffix))))
         .select(col("doc_id"), col("text_plain"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, $htmlCleanSql AS text_plain
+         |FROM (SELECT doc_id,
+         |    '<html><head><script>var x = 1 &lt; 2;</script>' ||
+         |    '<style>p{color:red}</style></head><body><!-- note -->' ||
+         |    '<p class="main">' || text ||
+         |    '</p>&nbsp;&amp;amp; <b>tail</b></body></html>' AS text
+         |  FROM documents)
+         |ORDER BY doc_id""".stripMargin),
+
+    // HTML → MARKDOWN — the structure-PRESERVING corpus render (the
+    // markdownify / "LLM-ready text" class): heading levels, list
+    // items, links (nested emphasis renders inside the link text),
+    // bold/em, inline code, paragraph boundaries all survive as
+    // markdown while head/script/comment chrome dies; newlines are
+    // semantic (horizontal-only collapse). The oracle applies the SAME
+    // pattern/template chain, rendered for RE2's \n group syntax
+    Face("q_html_markdown", (s, dir) =>
+      TextPrep.htmlToMarkdown(markdownPages(Tables.documents(s, dir)))
+        .select(col("doc_id"), col("markdown"))
+        .orderBy(col("doc_id")),
+      htmlMarkdownOracleSql).budget(1.0),
 
     // MAIN-CONTENT extraction (r19 directive #6 — the trafilatura/
     // jusText class): planted template pages wrap each doc's text in
@@ -3429,19 +3828,7 @@ object ExtQueries {
     // oracle reconstructs exactly the surviving content and runs the
     // shared strip/decode/collapse chain, so both the structural drop
     // and the density arithmetic sit under the hash
-    // HTML → MARKDOWN — the structure-PRESERVING corpus render (the
-    // markdownify / "LLM-ready text" class): heading levels, list
-    // items, links (nested emphasis renders inside the link text),
-    // bold/em, inline code, paragraph boundaries all survive as
-    // markdown while head/script/comment chrome dies; newlines are
-    // semantic (horizontal-only collapse). The oracle applies the SAME
-    // pattern/template chain, rendered for RE2's \n group syntax
-    "q_html_markdown" -> ((s, dir) =>
-      TextPrep.htmlToMarkdown(markdownPages(Tables.documents(s, dir)))
-        .select(col("doc_id"), col("markdown"))
-        .orderBy(col("doc_id"))),
-
-    "q_main_content" -> ((s, dir) =>
+    Face("q_main_content", (s, dir) =>
       TextPrep.mainContent(
         Tables.documents(s, dir).withColumn("html", concat(
           lit("<html><head><script>var z = 9;</script><title>T</title>" +
@@ -3458,7 +3845,8 @@ object ExtQueries {
           lit("<aside>related junk</aside>" +
             "<footer>copyright site</footer></body></html>"))))
         .select(col("doc_id"), col("main_text"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      mainContentOracleSql).budget(0.6),
 
     // WET PRODUCTION (r18 — the r17 judge's missing-#3, completed): WARC
     // response records with real HTML payloads in, plain text out —
@@ -3467,7 +3855,7 @@ object ExtQueries {
     // the oracle re-derives the strip from the documents table + the
     // shared wrapper, so the whole response→text conversion is under
     // the hash
-    "q_warc_to_wet" -> ((s, dir) =>
+    Face("q_warc_to_wet", (s, dir) =>
       TextPrep.stripHtml(
         graft.sources.Sources.warcResponses(s,
           s"${warcHtmlFixture(s, dir)}/corpus.warc")
@@ -3476,7 +3864,15 @@ object ExtQueries {
               .as("doc_id"),
             col("body").as("text")))
         .select(col("doc_id"), col("text_plain"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the WET-production composition lands on the SAME strip derivation
+      // (the engine additionally proved the demux legs under q_warc_scan)
+      s"""SELECT doc_id, $htmlCleanSql AS text_plain
+         |FROM (SELECT doc_id,
+         |    '${htmlWrapPrefix.replace("'", "''")}' || text ||
+         |    '${htmlWrapSuffix.replace("'", "''")}' AS text
+         |  FROM documents)
+         |ORDER BY doc_id""".stripMargin).budget(0.8),
 
     // MARKDOWN PRODUCTION end to end — the demux and the structure-
     // preserving render in ONE plan over the same WARC dump the WET
@@ -3484,7 +3880,7 @@ object ExtQueries {
     // entity decode and the bold render land in markdown, paragraph
     // boundaries become blank lines (where q_warc_to_wet flattens to
     // one line)
-    "q_warc_to_markdown" -> ((s, dir) =>
+    Face("q_warc_to_markdown", (s, dir) =>
       TextPrep.htmlToMarkdown(
         graft.sources.Sources.warcResponses(s,
           s"${warcHtmlFixture(s, dir)}/corpus.warc")
@@ -3493,7 +3889,15 @@ object ExtQueries {
               .as("doc_id"),
             col("body").as("html")))
         .select(col("doc_id"), col("markdown"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the markdown chain over the SAME reconstructed WARC payloads the
+      // WET oracle reads (demux legs proven under q_warc_scan)
+      s"""SELECT doc_id, ${markdownChainSql("html")} AS markdown
+         |FROM (SELECT doc_id,
+         |    '${htmlWrapPrefix.replace("'", "''")}' || text ||
+         |    '${htmlWrapSuffix.replace("'", "''")}' AS html
+         |  FROM documents)
+         |ORDER BY doc_id""".stripMargin).budget(1.0),
 
     // MAIN-CONTENT PRODUCTION end to end — the step that beats the WET
     // conversion above: chrome-laden crawl pages (header/nav/link-farm/
@@ -3501,7 +3905,7 @@ object ExtQueries {
     // the demux and the block-level extraction run in ONE plan, and the
     // nav/footer/link-farm text provably never reaches the corpus while
     // the body and its inline link text survive
-    "q_warc_to_main" -> ((s, dir) =>
+    Face("q_warc_to_main", (s, dir) =>
       TextPrep.mainContent(
         graft.sources.Sources.warcResponses(s,
           s"${warcChromeFixture(s, dir)}/corpus.warc")
@@ -3510,7 +3914,10 @@ object ExtQueries {
               .as("doc_id"),
             col("body").as("html")))
         .select(col("doc_id"), col("main_text"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the WARC-composed production lands on the SAME surviving-content
+      // derivation (the demux legs are proven under q_warc_scan)
+      mainContentOracleSql).budget(0.8),
 
     // HTTP TRANSFER/CONTENT DECODING (r19 — the r18 judge's missing-#1):
     // the fixture ships each payload under the coding real crawl dumps
@@ -3520,7 +3927,7 @@ object ExtQueries {
     // the oracle recomputes the decoded text's md5 + byte count from
     // the documents table — so the whole framing-removal + inflate path
     // sits under the hash, per coding class
-    "q_warc_http_decode" -> ((s, dir) =>
+    Face("q_warc_http_decode", (s, dir) =>
       graft.sources.Sources.warcResponses(s,
         s"${warcEncFixture(s, dir)}/corpus.warc")
         .select(
@@ -3530,7 +3937,21 @@ object ExtQueries {
           col("content_encoding"),
           octet_length(col("body")).cast("long").as("body_bytes"),
           md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the decoded payload is the doc text by construction, so every
+      // coding class's de-chunk/inflate result is re-derived from the
+      // documents table — the coding labels from the mod-6 render rule
+      // (identity / chunked / gzip / chunked-over-gzip / deflate / zstd),
+      // the body from its md5 + byte count
+      """SELECT doc_id, CAST(200 AS INT) AS http_status,
+        |  CASE WHEN doc_id % 6 IN (1, 3) THEN 'chunked' END
+        |    AS transfer_encoding,
+        |  CASE WHEN doc_id % 6 IN (2, 3) THEN 'gzip'
+        |       WHEN doc_id % 6 = 4 THEN 'deflate'
+        |       WHEN doc_id % 6 = 5 THEN 'zstd' END AS content_encoding,
+        |  CAST(octet_length(encode(text)) AS BIGINT) AS body_bytes,
+        |  md5(text) AS body_md5
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(1.0),
 
     // CHARSET-AWARE PAYLOAD DECODE (r19 — the r18 judge's missing-#2):
     // payloads arrive encoded in UTF-8 / ISO-8859-1 / windows-1252 /
@@ -3540,14 +3961,33 @@ object ExtQueries {
     // sniff → UTF-8) and strict-decodes; the oracle recomputes the
     // expected charset label and the decoded text's md5 from the
     // documents table + the shared tail constants
-    "q_warc_charset" -> ((s, dir) =>
+    Face("q_warc_charset", (s, dir) =>
       graft.sources.Sources.warcResponses(s,
         s"${warcCsFixture(s, dir)}/corpus.warc")
         .select(
           regexp_extract(col("uri"), "/p/(\\d+)", 1).cast("long")
             .as("doc_id"),
           col("charset"), md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // expected charset label + decoded text per mod-5 class, re-derived
+      // from the documents table and the shared tail constants — md5 runs
+      // on the DECODED text (UTF-8 re-encoding), so the gate is charset-
+      // independent on the comparison side and charset-SENSITIVE on the
+      // engine side (a skipped or lied-about decode breaks it)
+      {
+      val t = charsetTails
+      s"""SELECT doc_id,
+         |  CASE doc_id % 5 WHEN 0 THEN 'UTF-8' WHEN 1 THEN 'ISO-8859-1'
+         |    WHEN 2 THEN 'windows-1252' WHEN 3 THEN 'ISO-8859-1'
+         |    ELSE 'UTF-8' END AS charset,
+         |  md5(CASE doc_id % 5
+         |    WHEN 0 THEN text || '${t(0)}'
+         |    WHEN 1 THEN text || '${t(1)}'
+         |    WHEN 2 THEN text || '${t(2)}'
+         |    WHEN 3 THEN '$metaPrefix' || text || '${t(3)}'
+         |    ELSE text || '${t(4)}' END) AS body_md5
+         |FROM documents ORDER BY doc_id""".stripMargin
+    }).budget(0.8),
 
     // BOM-over-declaration precedence (the WHATWG sniffing order): a
     // Unicode byte-order mark in the payload outranks any declared
@@ -3556,14 +3996,27 @@ object ExtQueries {
     // whose signature bytes are never valid UTF-8 (the non-BOM path
     // would NULL them), and a no-BOM control class; the BOM itself must
     // not surface in the decoded text
-    "q_warc_bom" -> ((s, dir) =>
+    Face("q_warc_bom", (s, dir) =>
       graft.sources.Sources.warcResponses(s,
         s"${warcBomFixture(s, dir)}/corpus.warc")
         .select(
           regexp_extract(col("uri"), "/p/(\\d+)", 1).cast("long")
             .as("doc_id"),
           col("charset"), md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // expected charset label per BOM class + decoded-text md5 from the
+      // documents table and the shared tails — the BOM never appears in
+      // the text, and the lying-header classes only pass if the BOM won
+      {
+      val t = bomTails
+      s"""SELECT doc_id,
+         |  CASE doc_id % 4 WHEN 0 THEN 'UTF-8' WHEN 1 THEN 'UTF-16LE'
+         |    WHEN 2 THEN 'UTF-16BE' ELSE 'UTF-8' END AS charset,
+         |  md5(text || CASE doc_id % 4
+         |    WHEN 0 THEN '${t(0)}' WHEN 1 THEN '${t(1)}'
+         |    WHEN 2 THEN '${t(2)}' ELSE '${t(3)}' END) AS body_md5
+         |FROM documents ORDER BY doc_id""".stripMargin
+    }).budget(1.5),
 
     // ---- URL / domain pre-filter ---------------------------------------
     // The fixture corpus carries no URL column, so the faces synthesize a
@@ -3577,18 +4030,38 @@ object ExtQueries {
     // on any planted variant breaks the hash.
 
     // per-domain corpus ledger over canonicalized messy URLs
-    "q_url_domains" -> ((s, dir) =>
+    Face("q_url_domains", (s, dir) =>
       Urls.domainStats(
         Tables.documents(s, dir).withColumn("url", syntheticUrlCol),
         col("url"))
-        .orderBy(col("domain"))),
+        .orderBy(col("domain")),
+      // the canonical domain from the generator arithmetic (lower(source) || '.example.com') —
+      // a deliberately different formulation from the engine's regex
+      // canonicalization pipeline, so any engine slip on a planted scheme/
+      // userinfo/www/case/port/root-dot variant breaks the hash
+      s"""SELECT lower(source) || '.example.com' AS domain,
+         |  count(*) AS n_docs,
+         |  CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
+         |FROM documents GROUP BY 1 ORDER BY domain""".stripMargin),
 
     // k heaviest domains by token volume: the string-tie TopK heap (no
     // global sort), (n_tokens desc, domain asc) tie order, one-row output
-    "q_url_topk" -> ((s, dir) =>
+    Face("q_url_topk", (s, dir) =>
       Urls.domainTopK(
         Tables.documents(s, dir).withColumn("url", syntheticUrlCol),
-        col("url"), k = 5)),
+        col("url"), k = 5),
+      s"""WITH d AS (SELECT lower(source) || '.example.com' AS domain,
+         |             count(*) AS n_docs,
+         |             CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
+         |           FROM documents GROUP BY 1),
+         |top AS (SELECT domain || ':' || n_docs || ':' || n_tokens AS entry,
+         |          n_tokens AS nt, domain AS dd
+         |        FROM d ORDER BY n_tokens DESC, domain LIMIT 5)
+         |SELECT (SELECT count(*) FROM d) AS n_domains,
+         |  (SELECT CAST(sum(n_docs) AS BIGINT) FROM d) AS n_docs,
+         |  (SELECT CAST(sum(n_tokens) AS BIGINT) FROM d) AS n_tokens,
+         |  (SELECT string_agg(entry, ',' ORDER BY nt DESC, dd) FROM top)
+         |    AS top_domains""".stripMargin),
 
     // FULL-URL canonicalization (r19 — the r18 judge's missing-#3): the
     // synthetic URL plants every transform class from doc_id arithmetic
@@ -3597,11 +4070,35 @@ object ExtQueries {
     // a stable sort, fragments); the oracle derives the canonical
     // RESULT from the same arithmetic — a slip on any planted variant
     // breaks the hash
-    "q_url_canonical" -> ((s, dir) =>
+    Face("q_url_canonical", (s, dir) =>
       Tables.documents(s, dir).withColumn("url", syntheticUrl2Col)
         .select(col("doc_id"),
           Urls.canonicalUrl(col("url")).as("canonical_url"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the canonical URL per planted-variant class, straight from the
+      // generator arithmetic: scheme from mod 4 (the engine's default
+      // kicks in on the empty class), scheme-AWARE default-port strip
+      // from mod 5 × mod 4, resolved path from mod 3, sorted+stripped
+      // query from mod 4 — the engine runs the whole regex/HOF
+      // canonicalization pipeline; the oracle needs none of it
+      """WITH u AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 4 IN (1, 2) THEN 'https' ELSE 'http' END
+        |      AS scheme,
+        |    lower(source) || '.example.com' AS host
+        |  FROM documents)
+        |SELECT doc_id,
+        |  scheme || '://' || host ||
+        |  CASE CAST(doc_id % 5 AS INT)
+        |    WHEN 0 THEN CASE WHEN scheme = 'https' THEN ':80' ELSE '' END
+        |    WHEN 1 THEN CASE WHEN scheme = 'http' THEN ':443' ELSE '' END
+        |    WHEN 2 THEN ':8080' ELSE '' END ||
+        |  CASE CAST(doc_id % 3 AS INT)
+        |    WHEN 0 THEN '/a/p/' WHEN 1 THEN '/x/p/' ELSE '/p/' END ||
+        |  CAST(doc_id AS VARCHAR) ||
+        |  CASE CAST(doc_id % 4 AS INT)
+        |    WHEN 0 THEN '?a=1&b=2' WHEN 2 THEN '?a=2&z=9' ELSE '' END
+        |  AS canonical_url
+        |FROM u ORDER BY doc_id""".stripMargin).budget(0.6),
 
     // PERCENT-ENCODING normalization inside canonicalUrl (RFC 3986
     // §6.2.2.2): unreserved escapes decode (%7E→~, %61→a, %41→A),
@@ -3609,7 +4106,7 @@ object ExtQueries {
     // %2E-spelled dot-segment resolves like a literal one (the
     // traversal/trap spelling), malformed % passes byte-for-byte, and
     // an escape-free control class is untouched
-    "q_url_percent" -> ((s, dir) => {
+    Face("q_url_percent", (s, dir) => {
       val u = when(col("doc_id") % 4 === 0, concat(
           lit("http://t.example.com/%7Euser/p%61th%2Fx/"),
           col("doc_id").cast("string"), lit("?q=%41%42")))
@@ -3624,7 +4121,18 @@ object ExtQueries {
       Tables.documents(s, dir)
         .select(col("doc_id"), Urls.canonicalUrl(u).as("canonical_url"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """SELECT doc_id,
+        |  CASE CAST(doc_id % 4 AS INT)
+        |    WHEN 0 THEN 'http://t.example.com/~user/path%2Fx/' ||
+        |      CAST(doc_id AS VARCHAR) || '?q=AB'
+        |    WHEN 1 THEN 'http://t.example.com/a%2Fb/' ||
+        |      CAST(doc_id AS VARCHAR) || '?x=%3D1'
+        |    WHEN 2 THEN 'http://t.example.com/b%zz/' ||
+        |      CAST(doc_id AS VARCHAR)
+        |    ELSE 'http://t.example.com/p/' || CAST(doc_id AS VARCHAR)
+        |      || '?a=1' END AS canonical_url
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(1.0),
 
     // URL-LEVEL DEDUP on the canonical key — the other half of crawl
     // dedup, composed with Dedup.exact exactly like content dedup: ~97
@@ -3632,7 +4140,7 @@ object ExtQueries {
     // survivors are min(doc_id) per page and group sizes are the page
     // populations; the oracle re-derives canonical spelling + counts
     // from the construction
-    "q_url_dedup" -> ((s, dir) => {
+    Face("q_url_dedup", (s, dir) => {
       val c = Tables.documents(s, dir)
         .select(col("doc_id"),
           Urls.canonicalUrl(syntheticDupUrlCol).as("canonical_url"))
@@ -3641,7 +4149,15 @@ object ExtQueries {
         .join(c, Seq("doc_id"), "inner")
         .select(col("doc_id"), col("canonical_url"), col("n_dups"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH c AS (SELECT doc_id,
+        |    'http://dup.example.com/p/' || CAST(doc_id % 97 AS VARCHAR) ||
+        |      CASE WHEN (doc_id % 97) % 2 = 0 THEN '?x=1' ELSE '' END
+        |      AS canonical_url
+        |  FROM documents)
+        |SELECT min(doc_id) AS doc_id, canonical_url,
+        |  CAST(count(*) AS BIGINT) AS n_dups
+        |FROM c GROUP BY canonical_url ORDER BY doc_id""".stripMargin).budget(1.5),
 
     // CRAWLER-TRAP SIGNALS — the frontier pre-filter against infinite
     // URL spaces: a calendar-trap class (repeated path segments), a
@@ -3649,7 +4165,7 @@ object ExtQueries {
     // (13 params), an oversize-URL class (545+ chars), and two normal
     // classes; every signal column and the trap verdict restated by the
     // oracle from the same construction
-    "q_url_traps" -> ((s, dir) => {
+    Face("q_url_traps", (s, dir) => {
       val u = when(col("doc_id") % 6 === 0, concat(
           lit("http://t.example.com/cal/2026/01/2026/01/2026/01/d"),
           col("doc_id").cast("string")))
@@ -3672,7 +4188,34 @@ object ExtQueries {
         .select(col("doc_id"), col("path_depth"), col("n_dup_segments"),
           col("n_params"), col("url_len"), col("trap"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // trap signals restated per mod class (depth/dup/params as stated
+      // constants, url_len off the reconstructed URL, verdict = the
+      // first four classes)
+      """WITH u AS (SELECT doc_id,
+        |  CASE CAST(doc_id % 6 AS INT)
+        |    WHEN 0 THEN 'http://t.example.com/cal/2026/01/2026/01/2026/01/d'
+        |      || CAST(doc_id AS VARCHAR)
+        |    WHEN 1 THEN 'http://t.example.com/s1/s2/s3/s4/s5/s6/s7/s8/s9/s10'
+        |      || '/s11/s12/s13/s14/s15/s16/s17/d' || CAST(doc_id AS VARCHAR)
+        |    WHEN 2 THEN 'http://t.example.com/p?a1=1&a2=2&a3=3&a4=4&a5=5'
+        |      || '&a6=6&a7=7&a8=8&a9=9&a10=10&a11=11&a12=12&a13='
+        |      || CAST(doc_id AS VARCHAR)
+        |    WHEN 3 THEN 'http://t.example.com/' || repeat('x', 520)
+        |      || '?id=' || CAST(doc_id AS VARCHAR)
+        |    ELSE 'http://t.example.com/p/' || CAST(doc_id AS VARCHAR)
+        |      || '?a=1' END AS url
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST(CASE CAST(doc_id % 6 AS INT) WHEN 0 THEN 8 WHEN 1 THEN 18
+        |    WHEN 2 THEN 1 WHEN 3 THEN 1 ELSE 2 END AS INT) AS path_depth,
+        |  CAST(CASE WHEN doc_id % 6 = 0 THEN 4 ELSE 0 END AS INT)
+        |    AS n_dup_segments,
+        |  CAST(CASE CAST(doc_id % 6 AS INT) WHEN 0 THEN 0 WHEN 1 THEN 0
+        |    WHEN 2 THEN 13 ELSE 1 END AS INT) AS n_params,
+        |  CAST(len(url) AS INT) AS url_len,
+        |  doc_id % 6 < 4 AS trap
+        |FROM u ORDER BY doc_id""".stripMargin).budget(1.0),
 
     // registrable domain (eTLD+1) under a provided public-suffix table:
     // suffix cycle + optional sub-label from doc_id arithmetic; the
@@ -3680,7 +4223,7 @@ object ExtQueries {
     // generator arithmetic (mod 0 hits the private-section entry →
     // per-source domains; 1-2 collapse to the listed-suffix+1; 3 takes
     // the unlisted-TLD fallback)
-    "q_reg_domains" -> ((s, dir) => {
+    Face("q_reg_domains", (s, dir) => {
       import s.implicits._
       val hosts = Tables.documents(s, dir).withColumn("url", concat(
         when(col("doc_id") % 5 === 0, lit("https://a."))
@@ -3694,7 +4237,14 @@ object ExtQueries {
         pslFixture.toDF("suffix"))
         .groupBy(col("reg_domain")).agg(count(lit(1)).as("n_docs"))
         .orderBy(col("reg_domain"))
-    }),
+    },
+      s"""SELECT CASE CAST(doc_id % 4 AS INT)
+         |    WHEN 0 THEN lower(source) || '.example.com'
+         |    WHEN 1 THEN 'blog.co.uk'
+         |    WHEN 2 THEN 'mirror.org'
+         |    ELSE 'intra.internal' END AS reg_domain,
+         |  count(*) AS n_docs
+         |FROM documents GROUP BY 1 ORDER BY reg_domain""".stripMargin),
 
     // eTLD+1 under FULL PSL rule syntax (r17 judge directive #3): the
     // generator cycles five URL shapes per doc_id mod-class — a plain
@@ -3704,7 +4254,7 @@ object ExtQueries {
     // generator arithmetic (the engine runs candidate explode + rule
     // parse + exception-first struct-max + fallback; the oracle needs
     // none of it)
-    "q_reg_domains_psl" -> ((s, dir) => {
+    Face("q_reg_domains_psl", (s, dir) => {
       import s.implicits._
       val hosts = Tables.documents(s, dir).withColumn("url",
         concat(lit("http://"), element_at(array(
@@ -3718,10 +4268,24 @@ object ExtQueries {
         pslRulesFixture.toDF("rule"))
         .groupBy(col("reg_domain")).agg(count(lit(1)).as("n_docs"))
         .orderBy(col("reg_domain"))
-    }),
+    },
+      // each mod class's registrable domain from the generator arithmetic:
+      // plain 'com' (suffix+1 collapses per class), plain multi-label
+      // 'co.uk', the EXCEPTION (!www.ck → www.ck itself registrable), the
+      // WILDCARD (*.ck → <label>.ck is the suffix, so the whole 3-label
+      // host is registrable and per-source rows survive), and the
+      // unlisted-TLD fallback
+      s"""SELECT CASE CAST(doc_id % 5 AS INT)
+         |    WHEN 0 THEN 'example.com'
+         |    WHEN 1 THEN 'blog.co.uk'
+         |    WHEN 2 THEN 'www.ck'
+         |    WHEN 3 THEN lower(source) || '.bar.ck'
+         |    ELSE 'unlisted.test' END AS reg_domain,
+         |  count(*) AS n_docs
+         |FROM documents GROUP BY 1 ORDER BY reg_domain""".stripMargin).budget(0.8),
 
     // domain blocklist drop: broadcast anti-join on the canonical host
-    "q_domain_filter" -> ((s, dir) => {
+    Face("q_domain_filter", (s, dir) => {
       import s.implicits._
       Urls.domainFilter(
         Tables.documents(s, dir).withColumn("url", syntheticUrlCol),
@@ -3729,7 +4293,12 @@ object ExtQueries {
         urlBlocklist.toDF("domain"))
         .select(col("doc_id"), col("domain"), col("lang"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""SELECT doc_id, lower(source) || '.example.com' AS domain, lang
+         |FROM documents
+         |WHERE lower(source) || '.example.com' NOT IN
+         |  (${urlBlocklist.map("'" + _ + "'").mkString(", ")})
+         |ORDER BY doc_id""".stripMargin),
 
     // RFC 3986 reference resolution composed with canonicalization —
     // the link-target normalization step of out-link processing: each
@@ -3739,7 +4308,7 @@ object ExtQueries {
     // resolved canonical target per class straight from the arithmetic
     // (the engine runs the whole dispatch + merge + dot-segment
     // machinery; the oracle needs none of it)
-    "q_url_resolve" -> ((s, dir) =>
+    Face("q_url_resolve", (s, dir) =>
       Tables.documents(s, dir)
         .withColumn("base", concat(lit("http://"), col("source"),
           lit(".example.com/b/c/d?bq=1")))
@@ -3751,25 +4320,65 @@ object ExtQueries {
         .select(col("doc_id"),
           Urls.canonicalUrl(Urls.resolveUrl(col("base"), col("ref")))
             .as("resolved"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT doc_id,
+        |  CASE CAST(doc_id % 8 AS INT)
+        |    WHEN 0 THEN 'http://' || source || '.example.com/b/c/g'
+        |    WHEN 1 THEN 'http://' || source || '.example.com/b/c/g'
+        |    WHEN 2 THEN 'http://' || source || '.example.com/b/g'
+        |    WHEN 3 THEN 'http://' || source || '.example.com/g'
+        |    WHEN 4 THEN 'http://other.example.net/g'
+        |    WHEN 5 THEN 'http://' || source || '.example.com/b/c/d?y=1'
+        |    WHEN 6 THEN 'http://' || source || '.example.com/b/c/d?bq=1'
+        |    ELSE 'https://abs.example.org/z' END AS resolved
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(0.5),
 
     // HTML out-link extraction end to end: planted pages carry one
     // double-quoted and one single-quoted (uppercase-tag) anchor whose
     // hrefs cycle through the reference classes; the engine extracts,
     // resolves against the page URL, and canonicalizes — the oracle
     // derives both targets per doc from the planting arithmetic
-    "q_link_extract" -> ((s, dir) =>
+    Face("q_link_extract", (s, dir) =>
       Links.outlinks(linkPages(s, dir), col("url"), col("html"),
           Seq("doc_id"))
-        .orderBy(col("doc_id"), col("link_no"))),
+        .orderBy(col("doc_id"), col("link_no")),
+      // both planted anchors' canonical targets per doc, restated from
+      // the href arithmetic (link_no 0 = the double-quoted ref, 1 = the
+      // single-quoted one — the extraction-order contract)
+      """WITH l AS (
+        |  SELECT doc_id, CAST(0 AS INT) AS link_no,
+        |    CASE CAST(doc_id % 4 AS INT)
+        |      WHEN 0 THEN 'http://ext' || CAST(doc_id % 5 AS VARCHAR) ||
+        |        '.example.org/p'
+        |      WHEN 1 THEN 'http://cdn.example.net/lib'
+        |      WHEN 2 THEN 'http://' || source || '.example.com/local/' ||
+        |        CAST(doc_id AS VARCHAR)
+        |      ELSE 'http://' || source || '.example.com/dir/sub/page'
+        |      END AS target
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT doc_id, CAST(1 AS INT),
+        |    CASE CAST(doc_id % 3 AS INT)
+        |      WHEN 0 THEN 'http://' || source || '.example.com/up/' ||
+        |        CAST(doc_id AS VARCHAR)
+        |      WHEN 1 THEN 'http://' || source || '.example.com/dir/page' ||
+        |        CAST(doc_id AS VARCHAR) || '.html?v=2'
+        |      ELSE 'http://' || source || '.example.com/dir/a/c' END
+        |  FROM documents)
+        |SELECT doc_id, link_no, target FROM l
+        |ORDER BY doc_id, link_no""".stripMargin).budget(1.0),
 
     // the host-level link graph those pages induce: self edges (the
     // relative/query refs resolve back to the page's own host) must
     // drop, externals aggregate to (src_host, dst_host, n_links) —
     // hosts only cross the exchange, never HTML
-    "q_host_graph" -> ((s, dir) =>
+    Face("q_host_graph", (s, dir) =>
       Links.hostGraph(linkPages(s, dir), col("url"), col("html"))
-        .orderBy(col("src_host"), col("dst_host"))),
+        .orderBy(col("src_host"), col("dst_host")),
+      // the host-graph edges those pages induce: only classes 0/1 of the
+      // double-quoted ref leave the page's own host (everything else is a
+      // self edge and must NOT appear)
+      hostGraphOracleSql).budget(1.5),
 
     // crawl-authority composition: the SAME extracted host graph fed
     // straight into the scaled-integer PageRank (ext*/cdn targets are
@@ -3777,18 +4386,19 @@ object ExtQueries {
     // the edge set from the href arithmetic and unrolls the identical
     // 3-round recurrence — extraction, graph reduction, and ranking
     // under ONE hash
-    "q_host_rank" -> ((s, dir) =>
+    Face("q_host_rank", (s, dir) =>
       Graph.pageRank(
         Links.hostGraph(linkPages(s, dir), col("url"), col("html")),
         srcCol = "src_host", dstCol = "dst_host", rounds = 3)
-        .orderBy(col("id"))),
+        .orderBy(col("id")),
+      hostRankOracleSql).budget(4.0),
 
     // robots.txt URL gate (RFC 9309): planted per-host files exercise
     // specific-group-beats-*, longest-match precedence, the allow
     // override, a *…$ wildcard rule, an exact-length tie (→ allow), a
     // *-only host, and a host with no robots at all; the oracle states
     // each mod-class's verdict directly
-    "q_robots_filter" -> ((s, dir) => {
+    Face("q_robots_filter", (s, dir) => {
       import s.implicits._
       val urls = Tables.documents(s, dir).select(col("doc_id"),
         concat(lit("http://"), element_at(array(
@@ -3805,14 +4415,30 @@ object ExtQueries {
       Robots.filter(urls, "doc_id", col("url"),
         robotsFixture.toDF("host", "robots_txt"), "GraftBot")
         .orderBy(col("doc_id"))
-    }),
+    },
+      // each mod class's RFC 9309 verdict stated directly: classes 0/2/4
+      // hit a longest-match Disallow (prefix, *…$ wildcard, *-group),
+      // 1/3 a longer/only Allow, 5 the exact-length tie (→ allow), 6 a
+      // host with no robots.txt (→ allow)
+      """SELECT doc_id,
+        |  CASE CAST(doc_id % 7 AS INT)
+        |    WHEN 4 THEN 'b.example.com' WHEN 5 THEN 'b.example.com'
+        |    WHEN 6 THEN 'c.example.com' ELSE 'a.example.com' END AS host,
+        |  CASE CAST(doc_id % 7 AS INT)
+        |    WHEN 0 THEN '/private/x' WHEN 1 THEN '/private/pub/y'
+        |    WHEN 2 THEN '/doc/f' WHEN 3 THEN '/ok/z' WHEN 4 THEN '/tmp/x'
+        |    WHEN 5 THEN '/dup' ELSE '/any/' END ||
+        |    CAST(doc_id AS VARCHAR) ||
+        |    CASE WHEN doc_id % 7 = 2 THEN '.pdf' ELSE '' END AS path,
+        |  doc_id % 7 NOT IN (0, 2, 4) AS allowed
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(0.6),
 
     // CDX-style archive index over the WARC response dump: SURT url
     // key (reversed host labels — one domain's records sort
     // contiguously, the range-scan property the format exists for) +
     // url/status/mime/payload-digest, sorted by urlkey; every column
     // re-derived by the oracle from the fixture's render arithmetic
-    "q_cdx_index" -> ((s, dir) =>
+    Face("q_cdx_index", (s, dir) =>
       graft.sources.Sources.warcResponses(s,
           s"${warcFixture(s, dir)}/corpus.warc")
         .select(
@@ -3821,16 +4447,57 @@ object ExtQueries {
           col("http_status").as("status"),
           trim(regexp_extract(col("content_type"), "^([^;]+)", 1)).as("mime"),
           md5(col("body")).as("digest"))
-        .orderBy(col("urlkey"))),
+        .orderBy(col("urlkey")),
+      // the CDX row per response record from the WARC fixture's render
+      // arithmetic: SURT key from the target URI, status/mime from the
+      // mod cycles, digest from the doc text the payload was rendered from
+      """SELECT 'com,example,' || source || ')/p/' ||
+        |    CAST(doc_id AS VARCHAR) AS urlkey,
+        |  'http://' || source || '.example.com/p/' ||
+        |    CAST(doc_id AS VARCHAR) AS url,
+        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 404 ELSE 200 END AS INT)
+        |    AS status,
+        |  CASE WHEN doc_id % 2 = 0 THEN 'text/html'
+        |       ELSE 'text/plain' END AS mime,
+        |  md5(text) AS digest
+        |FROM documents ORDER BY urlkey""".stripMargin).budget(0.6),
 
     // the anchor-text corpus over the same planted pages: per canonical
     // target, in-link count + sorted capped distinct anchor texts (the
     // link-based relevance signal); anchors vary by doc_id arithmetic so
     // distinct-set/cap/sort are all live — the oracle re-derives pairs
     // from the planting and re-aggregates with list HOFs
-    "q_anchor_text" -> ((s, dir) =>
+    Face("q_anchor_text", (s, dir) =>
       Links.anchorCorpus(linkPages(s, dir), col("url"), col("html"))
-        .orderBy(col("target"))),
+        .orderBy(col("target")),
+      // per-target anchor sets re-derived from the planting arithmetic:
+      // pair CTE (targetA × 'a{id%10}', targetB × 'b{id%7}'), then the
+      // same distinct-sort-cap aggregation with list HOFs
+      """WITH a AS (
+        |  SELECT CASE CAST(doc_id % 4 AS INT)
+        |      WHEN 0 THEN 'http://ext' || CAST(doc_id % 5 AS VARCHAR) ||
+        |        '.example.org/p'
+        |      WHEN 1 THEN 'http://cdn.example.net/lib'
+        |      WHEN 2 THEN 'http://' || source || '.example.com/local/' ||
+        |        CAST(doc_id AS VARCHAR)
+        |      ELSE 'http://' || source || '.example.com/dir/sub/page'
+        |      END AS target,
+        |    'a' || CAST(doc_id % 10 AS VARCHAR) AS anchor
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT CASE CAST(doc_id % 3 AS INT)
+        |      WHEN 0 THEN 'http://' || source || '.example.com/up/' ||
+        |        CAST(doc_id AS VARCHAR)
+        |      WHEN 1 THEN 'http://' || source || '.example.com/dir/page' ||
+        |        CAST(doc_id AS VARCHAR) || '.html?v=2'
+        |      ELSE 'http://' || source || '.example.com/dir/a/c' END,
+        |    'b' || CAST(doc_id % 7 AS VARCHAR)
+        |  FROM documents)
+        |SELECT target, CAST(count(*) AS BIGINT) AS n_anchors,
+        |  array_to_string(
+        |    list_slice(list_sort(list_distinct(list(anchor))), 1, 5), ',')
+        |    AS anchors
+        |FROM a GROUP BY target ORDER BY target""".stripMargin).budget(2.0),
 
     // PAGE-LEVEL DIRECTIVES (r20 — the layer after robots.txt): every
     // head field/directive extracted in one narrow pass over planted
@@ -3839,13 +4506,38 @@ object ExtQueries {
     // class, absolute AND relative rel=canonical hrefs) with constant
     // decoy tags that must never match; the oracle restates every
     // column from the arithmetic
-    "q_html_meta" -> ((s, dir) =>
+    Face("q_html_meta", (s, dir) =>
       PageMeta.pageMeta(metaPages(Tables.documents(s, dir)),
           col("url"), col("html"), Seq("doc_id"))
         .select(col("doc_id"), col("lang_attr"), col("title"),
           col("description"), col("og_title"), col("canonical"),
           col("noindex"), col("nofollow"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // every head field restated from the metaPages arithmetic: the
+      // lang/title/description/og/robots/canonical presence classes,
+      // spelling noise (case, quotes, attribute order, whitespace) all
+      // collapsing to the stated values, the relative canonical resolved
+      // to its absolute form, and the none=both robots class
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 3 = 2 THEN NULL
+        |       WHEN doc_id % 6 = 0 THEN 'xx' ELSE lang END AS lang_attr,
+        |  CASE WHEN doc_id % 7 = 3 THEN NULL
+        |       ELSE 'Doc ' || CAST(doc_id % 11 AS VARCHAR) || ' ' || source
+        |       END AS title,
+        |  CASE WHEN doc_id % 4 = 1 THEN NULL
+        |       ELSE 'd' || CAST(doc_id % 13 AS VARCHAR) || ' summary'
+        |       END AS description,
+        |  CASE WHEN doc_id % 5 = 0
+        |       THEN 'og' || CAST(doc_id % 9 AS VARCHAR) END AS og_title,
+        |  CASE WHEN doc_id % 4 = 3 THEN NULL
+        |       WHEN doc_id % 2 = 0 THEN 'http://canon.example.com/c/' ||
+        |         CAST(doc_id % 50 AS VARCHAR)
+        |       ELSE 'http://' || source || '.example.com/c/' ||
+        |         CAST(doc_id % 50 AS VARCHAR)
+        |       END AS canonical,
+        |  doc_id % 6 IN (0, 2) AS noindex,
+        |  doc_id % 6 IN (1, 2) AS nofollow
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(1.5),
 
     // META-REFRESH redirects — the third redirect channel next to HTTP
     // 3xx Location and rel=canonical: legacy/parked pages redirect via
@@ -3856,46 +4548,96 @@ object ExtQueries {
     // class), comma-separated bare url, reload-only content (drops),
     // no tag (drops), a refreshx decoy, and a second refresh tag where
     // the first must win
-    "q_meta_refresh" -> ((s, dir) =>
+    Face("q_meta_refresh", (s, dir) =>
       PageMeta.metaRefresh(refreshPages(Tables.documents(s, dir)),
           col("url"), col("html"), Seq("doc_id"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // meta-refresh redirects restated per mod class: the quoted
+      // absolute target with its tracking param stripped and the rest
+      // kept, the relative target resolved through the page URL or the
+      // mod-3 base-href, the bare comma-form absolute path on the page
+      // host; reload-only and tag-less classes absent
+      """SELECT doc_id,
+        |  CAST(CASE CAST(doc_id % 5 AS INT)
+        |    WHEN 0 THEN doc_id % 30 WHEN 1 THEN doc_id % 7
+        |    ELSE 5 END AS INT) AS delay_s,
+        |  CASE CAST(doc_id % 5 AS INT)
+        |    WHEN 0 THEN 'http://go.example.com/t/' ||
+        |      CAST(doc_id % 40 AS VARCHAR) || '?b=2'
+        |    WHEN 1 THEN 'http://' || source || '.example.com/' ||
+        |      CASE WHEN doc_id % 3 = 0 THEN 'b/r/' ELSE 'r/' END ||
+        |      CAST(doc_id % 20 AS VARCHAR)
+        |    ELSE 'http://' || source || '.example.com/abs/' ||
+        |      CAST(doc_id % 7 AS VARCHAR)
+        |    END AS target
+        |FROM documents WHERE doc_id % 5 < 3 ORDER BY doc_id""".stripMargin).budget(1.5),
 
     // rel=canonical clustering — the crawl-side dedup signal: pages
     // sharing a declared canonical target collapse (undeclared pages
     // self-cluster per RFC 6596); cluster key, size, and the
     // lexicographically-first member all re-derived by the oracle from
     // the planting arithmetic
-    "q_canonical_cluster" -> ((s, dir) =>
+    Face("q_canonical_cluster", (s, dir) =>
       PageMeta.canonicalClusters(metaPages(Tables.documents(s, dir)),
           col("url"), col("html"))
-        .orderBy(col("canonical"))),
+        .orderBy(col("canonical")),
+      canonicalClusterOracleSql).budget(3.0),
 
     // INDEX ADMISSION end to end: noindex pages (the "noindex" and
     // "NONE" robots-meta classes) drop BEFORE the canonical collapse,
     // so cluster sizes and representatives shift exactly where the
     // directive bites — the decision an indexer actually makes per page
-    "q_index_admission" -> ((s, dir) =>
+    Face("q_index_admission", (s, dir) =>
       PageMeta.indexAdmission(metaPages(Tables.documents(s, dir)),
           col("url"), col("html"))
-        .orderBy(col("canonical"))),
+        .orderBy(col("canonical")),
+      """WITH tgt AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 4 = 3 THEN 'http://' || source ||
+        |        '.example.com/m/' || CAST(doc_id AS VARCHAR)
+        |      WHEN doc_id % 2 = 0 THEN 'http://canon.example.com/c/' ||
+        |        CAST(doc_id % 50 AS VARCHAR)
+        |      ELSE 'http://' || source || '.example.com/c/' ||
+        |        CAST(doc_id % 50 AS VARCHAR) END AS canonical,
+        |    'http://' || source || '.example.com/m/' ||
+        |      CAST(doc_id AS VARCHAR) AS page_cu
+        |  FROM documents WHERE doc_id % 6 NOT IN (0, 2))
+        |SELECT canonical, CAST(count(*) AS BIGINT) AS n_pages,
+        |  min(page_cu) AS min_url
+        |FROM tgt GROUP BY canonical ORDER BY canonical""".stripMargin).budget(4.0),
 
     // nofollow-aware out-links: anchor-level rel=nofollow in both
     // spellings, the rel TOKEN-split trap ("nofollower" keeps,
     // "ugc nofollow" drops), an href-less anchor consuming a link_no,
     // and page-level meta-robots nofollow wiping whole pages; link_no
     // is true document order (single-alternation tag extraction)
-    "q_nofollow_links" -> ((s, dir) =>
+    Face("q_nofollow_links", (s, dir) =>
       Links.politeOutlinks(nofollowPages(Tables.documents(s, dir)),
           col("url"), col("html"), Seq("doc_id"))
-        .orderBy(col("doc_id"), col("link_no"))),
+        .orderBy(col("doc_id"), col("link_no")),
+      // survivors + document-order link numbers from the nofollowPages
+      // arithmetic: the href-less decoy holds link_no 0, the plain link
+      // (1) survives everywhere, the explicit-nofollow (2) never does,
+      // the rel-cycle slot (3) survives on its "me"/"nofollower" token
+      // classes, and the meta-nofollow pages (mod-7 class 0) vanish
+      """WITH l AS (
+        |  SELECT doc_id, 1 AS link_no,
+        |    'http://' || source || '.example.com/k/' ||
+        |      CAST(doc_id % 20 AS VARCHAR) AS target
+        |  FROM documents WHERE doc_id % 7 <> 0
+        |  UNION ALL
+        |  SELECT doc_id, 3,
+        |    'http://' || source || '.example.com/u/' ||
+        |      CAST(doc_id % 9 AS VARCHAR)
+        |  FROM documents WHERE doc_id % 7 <> 0 AND doc_id % 3 <> 0)
+        |SELECT doc_id, CAST(link_no AS INT) AS link_no, target FROM l
+        |ORDER BY doc_id, link_no""".stripMargin).budget(1.5),
 
     // declared-vs-detected language audit: the <html lang> declaration
     // (planted per mod class, absent on one) against the stopword/CJK
     // langid over the SAME page's body text, in one plan — the
     // mislabeled-page evidence a multilingual corpus filter needs
     // before trusting site metadata
-    "q_lang_audit" -> ((s, dir) => {
+    Face("q_lang_audit", (s, dir) => {
       val pages = Tables.documents(s, dir)
         .withColumn("url", concat(lit("http://"), col("source"),
           lit(".example.com/l/"), col("doc_id").cast("string")))
@@ -3912,14 +4654,26 @@ object ExtQueries {
           coalesce(col("lang_attr") === col("lang_pred"), lit(false))
             .as("agree"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the declared <html lang> per mod class joined against the SAME
+      // per-doc langid derivation q_text_langid is gated on; agreement
+      // null-safe (an undeclared page never "agrees")
+      s"""WITH $langidPredCtes,
+         |dec AS (SELECT doc_id,
+         |    CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'en'
+         |      WHEN 1 THEN 'zh' WHEN 2 THEN 'xx' END AS lang_attr
+         |  FROM documents)
+         |SELECT d.doc_id, d.lang_attr, p.lang_pred,
+         |  coalesce(d.lang_attr = p.lang_pred, false) AS agree
+         |FROM dec d JOIN pred p ON d.doc_id = p.doc_id
+         |ORDER BY d.doc_id""".stripMargin).budget(1.2),
 
     // BOTH noindex channels off a crawl dump in one plan: the
     // X-Robots-Tag response header (now surfaced by the WARC demux —
     // the only noindex signal for non-HTML payloads; the "noarchive,
     // nosnippet" decoy class must NOT trip it) and the payload's
     // robots meta, under the same token rules; indexable = neither
-    "q_warc_noindex" -> ((s, dir) => {
+    Face("q_warc_noindex", (s, dir) => {
       val r = graft.sources.Sources.warcResponses(s,
           s"${warcRobotsFixture(s, dir)}/corpus.warc")
         .select(
@@ -3933,16 +4687,25 @@ object ExtQueries {
           col("noindex").as("meta_noindex"),
           (!(col("hdr_noindex") || col("noindex"))).as("indexable"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // both channels stated per mod class: the header verdict (class 1
+      // only — the class-2 decoy directives never trip it), the payload
+      // meta verdict, and their disjunction
+      """SELECT doc_id,
+        |  doc_id % 5 = 1 AS hdr_noindex,
+        |  doc_id % 3 = 0 AS meta_noindex,
+        |  NOT (doc_id % 5 = 1 OR doc_id % 3 = 0) AS indexable
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(1.2),
 
     // the canonical-cluster ledger maintained by the ingest stream
     // (3-batch checkpointed replay): read-time (sum, min) fold across
     // batch partitions must equal the one-shot batch operator — the
     // q_canonical_cluster oracle gates it verbatim
-    "q_meta_ingest_replay" -> ((s, dir) =>
+    Face("q_meta_ingest_replay", (s, dir) =>
       graft.streaming.IngestStreams.readCanonicalClusters(s,
           s"${ingestReplayFixture(s, dir)}/meta_index")
-        .orderBy(col("canonical"))),
+        .orderBy(col("canonical")),
+      canonicalClusterOracleSql).budget(1.0),
 
     // hreflang alternate map (the multilingual variant clustering
     // signal): one row per rel=alternate+hreflang link tag — self
@@ -3950,10 +4713,30 @@ object ExtQueries {
     // lowercase), a RELATIVE-href es variant (resolution live), the
     // x-default sentinel, and two decoy tags (alternate without
     // hreflang, stylesheet with) that must drop
-    "q_hreflang" -> ((s, dir) =>
+    Face("q_hreflang", (s, dir) =>
       PageMeta.alternates(hreflangPages(Tables.documents(s, dir)),
           col("url"), col("html"), Seq("doc_id"))
-        .orderBy(col("doc_id"), col("hreflang"), col("target"))),
+        .orderBy(col("doc_id"), col("hreflang"), col("target")),
+      // every alternate row from the hreflangPages arithmetic: the self
+      // variant (lang lowercased), the resolved es variant, the x-default
+      // class — decoys absent by construction
+      """WITH a AS (
+        |  SELECT doc_id, lang AS hreflang,
+        |    'http://' || source || '.example.com/h/' ||
+        |      CAST(doc_id AS VARCHAR) AS target
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT doc_id, 'es',
+        |    'http://' || source || '.example.com/es/' ||
+        |      CAST(doc_id AS VARCHAR)
+        |  FROM documents WHERE doc_id % 3 <> 1
+        |  UNION ALL
+        |  SELECT doc_id, 'x-default',
+        |    'http://' || source || '.example.com/h/' ||
+        |      CAST(doc_id AS VARCHAR)
+        |  FROM documents WHERE doc_id % 4 = 0)
+        |SELECT doc_id, hreflang, target FROM a
+        |ORDER BY doc_id, hreflang, target""".stripMargin).budget(2.5),
 
     // the NOFOLLOW-HONORING frontier: same composed pipeline as
     // q_crawl_frontier but discovery runs through the polite tag-level
@@ -3961,7 +4744,7 @@ object ExtQueries {
     // meta-nofollow pages never become candidates, so their in-link
     // counts, ranks, and in some hosts the whole candidate vanish; the
     // oracle is the frontier derivation minus exactly those rows
-    "q_frontier_polite" -> ((s, dir) => {
+    Face("q_frontier_polite", (s, dir) => {
       import s.implicits._
       val seen = Tables.documents(s, dir)
         .where(col("doc_id") % 8 === 2)
@@ -3975,7 +4758,13 @@ object ExtQueries {
           col("host"), col("robots_txt"), "graftbot"),
         perHostK = 2, honorNofollow = true)
         .orderBy(col("host"), col("rank"))
-    }),
+    },
+      // the polite frontier: the same derivation minus the rel=nofollow
+      // anchor class and the meta-nofollow pages' rows
+      (politeFrontierOracleCtes +
+      """
+        |SELECT host, url, n_refs, rank FROM ranked WHERE rank <= 2
+        |ORDER BY host, rank""".stripMargin)).budget(3.0),
 
     // the composed CRAWL FRONTIER as one plan: out-link extraction →
     // URL-level dedup with in-link priority → already-crawled anti-join
@@ -3984,7 +4773,7 @@ object ExtQueries {
     // top-2 (rank window → the RewriteWindowTopK aggregate); the oracle
     // re-derives candidates/seen/verdicts/ranks from the planting
     // arithmetic alone
-    "q_crawl_frontier" -> ((s, dir) => {
+    Face("q_crawl_frontier", (s, dir) => {
       import s.implicits._
       val seen = Tables.documents(s, dir)
         .where(col("doc_id") % 8 === 2)
@@ -3995,7 +4784,15 @@ object ExtQueries {
         seen, frontierRobotsFixture.toDF("host", "robots_txt"),
         "graftbot", perHostK = 2)
         .orderBy(col("host"), col("rank"))
-    }),
+    },
+      // the whole frontier re-derived from the planting arithmetic:
+      // candidate targets + in-link counts from the href CASEs, seen =
+      // the planted /local subset (doc_id % 8 = 2), the robots verdicts
+      // stated as two host-prefix drops, rank by (n_refs desc, url)
+      (frontierOracleCtes +
+      """
+        |SELECT host, url, n_refs, rank FROM ranked WHERE rank <= 2
+        |ORDER BY host, rank""".stripMargin)).budget(5.0),
 
     // TRAP-GATED frontier: every page links one clean target plus two
     // CONSTANT trap targets (a calendar-loop path and an 18-deep path)
@@ -4003,7 +4800,7 @@ object ExtQueries {
     // and would take rank slots 1–2 without the gate, so the gate is
     // provably load-bearing: the oracle derives the frontier from the
     // CLEAN links alone (LinksSpec pins the ungated contrast)
-    "q_frontier_traps" -> ((s, dir) => {
+    Face("q_frontier_traps", (s, dir) => {
       import s.implicits._
       val pages = Tables.documents(s, dir).select(
         concat(lit("http://t"), (col("doc_id") % 4).cast("string"),
@@ -4021,50 +4818,118 @@ object ExtQueries {
       Links.frontierWithPolicy(pages, col("url"), col("html"), seen,
         policy, perHostK = 3, dropTraps = true)
         .orderBy(col("host"), col("rank"))
-    }),
+    },
+      // the trap-gated frontier: the oracle derives the frontier from the
+      // CLEAN /k/ links alone — the two constant trap targets (which
+      // would otherwise take ranks 1–2 on every host) exist only if the
+      // gate failed
+      """WITH cand AS (
+        |  SELECT 't' || CAST(doc_id % 4 AS VARCHAR) || '.example.com'
+        |      AS host,
+        |    'http://t' || CAST(doc_id % 4 AS VARCHAR) ||
+        |      '.example.com/k/' || CAST(doc_id % 20 AS VARCHAR) AS url
+        |  FROM documents),
+        |agg AS (SELECT host, url, CAST(count(*) AS BIGINT) AS n_refs
+        |        FROM cand GROUP BY host, url),
+        |r AS (SELECT host, url, n_refs,
+        |        CAST(row_number() OVER (PARTITION BY host
+        |          ORDER BY n_refs DESC, url) AS INT) AS rank
+        |      FROM agg)
+        |SELECT host, url, n_refs, rank FROM r WHERE rank <= 3
+        |ORDER BY host, rank""".stripMargin).budget(3.0),
 
     // the STREAMED link-graph twin: the same planted pages arrive over
     // a 3-batch checkpointed MemoryStream ingest, each batch landing
     // its partial edge counts as a batch-keyed partition; the standing
     // graph is the read-time edge sum and must equal the batch face
     // VERBATIM (edge counts are additive across any batch split)
-    "q_link_ingest_replay" -> ((s, dir) =>
+    Face("q_link_ingest_replay", (s, dir) =>
       graft.streaming.IngestStreams.readLinkGraph(s,
           s"${ingestReplayFixture(s, dir)}/link_index")
-        .orderBy(col("src_host"), col("dst_host"))),
+        .orderBy(col("src_host"), col("dst_host")),
+      hostGraphOracleSql).budget(0.5),
 
     // sitemap ingestion (sitemaps.org): two rendered urlset files + the
     // index naming them, read as one per-file-parallel scan; the
     // entity-escaped `&amp;` class, optional-field NULLs, and the
     // urlset/index kind split are all oracle-stated from the render
     // arithmetic
-    "q_sitemap_scan" -> ((s, dir) =>
+    Face("q_sitemap_scan", (s, dir) =>
       graft.sources.Sources.sitemapEntries(s,
           s"${sitemapFixture(s, dir)}/*.xml")
         .select(col("kind"), col("loc"), col("lastmod"),
           col("changefreq"), col("priority"))
-        .orderBy(col("kind"), col("loc"))),
+        .orderBy(col("kind"), col("loc")),
+      // every sitemap entry re-derived from the render arithmetic: the
+      // mod-3 class carries the entity-escaped query (the oracle states
+      // the DECODED form), optional fields NULL off their mod classes,
+      // the index rows constant
+      """WITH u AS (SELECT doc_id, source,
+        |    'http://' || source || '.example.com/p/' ||
+        |      CAST(doc_id AS VARCHAR) ||
+        |      CASE WHEN doc_id % 3 = 0 THEN '?a=1&b=2' ELSE '' END AS loc,
+        |    CASE WHEN doc_id % 4 = 0 THEN '2026-02-' ||
+        |      lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') END AS lastmod,
+        |    CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'daily'
+        |      WHEN 1 THEN 'weekly' END AS changefreq,
+        |    CASE WHEN doc_id % 5 = 0
+        |      THEN '0.' || CAST(doc_id % 10 AS VARCHAR) END AS priority
+        |  FROM documents)
+        |SELECT kind, loc, lastmod, changefreq, priority FROM (
+        |  SELECT 'urlset' AS kind, loc, lastmod, changefreq, priority
+        |  FROM u
+        |  UNION ALL
+        |  SELECT 'index', 'http://site.example.com/sitemap_' ||
+        |    CAST(i AS VARCHAR) || '.xml', '2026-03-01', NULL, NULL
+        |  FROM range(2) t(i)) z
+        |ORDER BY kind, loc""".stripMargin).budget(0.5),
 
     // the redirect map off a WARC dump: 3xx responses' Location headers
     // (absolute / RELATIVE / scheme-relative — resolution against the
     // record URI is load-bearing) become canonical (src, dst) aliasing
     // edges; 200s must not appear; the oracle states every class from
     // the render arithmetic
-    "q_redirect_map" -> ((s, dir) =>
+    Face("q_redirect_map", (s, dir) =>
       Links.redirectEdges(graft.sources.Sources.warcResponses(s,
           s"${warcRedirectFixture(s, dir)}/corpus.warc"))
         .select(
           regexp_extract(col("src"), "/p/(\\d+)", 1).cast("long")
             .as("doc_id"),
           col("status"), col("src"), col("dst"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // each redirect class's canonical (src, dst) from the render
+      // arithmetic — the relative and scheme-relative classes state the
+      // RESOLVED absolute form, the 301 class points at the next record's
+      // URI (the chain head — one doc_id+1 self-join re-derives the
+      // successor's host; when the corpus' LAST doc is the 301 class the
+      // fixture emits the moved.example.net fallback instead, so the d2
+      // miss COALESCEs to it — without this, a max doc_id ≡ 1 (mod 4)
+      // corpus would render NULL dst and break on doc-count luck); the
+      // 200 class is absent
+      """SELECT d.doc_id,
+        |  CAST(CASE CAST(d.doc_id % 4 AS INT) WHEN 1 THEN 301
+        |    WHEN 2 THEN 302 ELSE 308 END AS INT) AS status,
+        |  'http://' || d.source || '.example.com/p/' ||
+        |    CAST(d.doc_id AS VARCHAR) AS src,
+        |  CASE CAST(d.doc_id % 4 AS INT)
+        |    WHEN 1 THEN COALESCE(
+        |      'http://' || d2.source || '.example.com/p/' ||
+        |        CAST(d.doc_id + 1 AS VARCHAR),
+        |      'http://moved.example.net/p/' || CAST(d.doc_id AS VARCHAR))
+        |    WHEN 2 THEN 'http://' || d.source || '.example.com/new/' ||
+        |      CAST(d.doc_id AS VARCHAR)
+        |    ELSE 'http://alt.example.org/' || CAST(d.doc_id AS VARCHAR)
+        |    END AS dst
+        |FROM documents d
+        |LEFT JOIN documents d2 ON d2.doc_id = d.doc_id + 1
+        |WHERE d.doc_id % 4 <> 0 ORDER BY d.doc_id""".stripMargin).budget(1.5),
 
     // multi-hop collapse over the same map by pointer doubling: the
     // 301 heads chain through their 302 successor to /new/{id+1}
     // (hops 2), the 302/308 classes are terminal (hops 1); the oracle
     // states every final target from the render arithmetic via one
     // doc_id+1 self-join
-    "q_redirect_collapse" -> ((s, dir) =>
+    Face("q_redirect_collapse", (s, dir) =>
       Links.collapseRedirects(
         Links.redirectEdges(graft.sources.Sources.warcResponses(s,
           s"${warcRedirectFixture(s, dir)}/corpus.warc")), maxHops = 8)
@@ -4072,7 +4937,29 @@ object ExtQueries {
           regexp_extract(col("src"), "/p/(\\d+)", 1).cast("long")
             .as("doc_id"),
           col("src"), col("dst"), col("hops"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the collapse: 301 heads resolve THROUGH their 302 successor to
+      // its /new target (hops 2), the 302/308 classes are terminal
+      // (hops 1) — finals and hop counts all from the same self-join;
+      // a last-row 301 has NO successor record (the fixture's
+      // moved.example.net fallback), so it is terminal at hops 1
+      """SELECT d.doc_id,
+        |  'http://' || d.source || '.example.com/p/' ||
+        |    CAST(d.doc_id AS VARCHAR) AS src,
+        |  CASE CAST(d.doc_id % 4 AS INT)
+        |    WHEN 1 THEN COALESCE(
+        |      'http://' || d2.source || '.example.com/new/' ||
+        |        CAST(d.doc_id + 1 AS VARCHAR),
+        |      'http://moved.example.net/p/' || CAST(d.doc_id AS VARCHAR))
+        |    WHEN 2 THEN 'http://' || d.source || '.example.com/new/' ||
+        |      CAST(d.doc_id AS VARCHAR)
+        |    ELSE 'http://alt.example.org/' || CAST(d.doc_id AS VARCHAR)
+        |    END AS dst,
+        |  CAST(CASE WHEN d.doc_id % 4 = 1 AND d2.doc_id IS NOT NULL
+        |    THEN 2 ELSE 1 END AS INT) AS hops
+        |FROM documents d
+        |LEFT JOIN documents d2 ON d2.doc_id = d.doc_id + 1
+        |WHERE d.doc_id % 4 <> 0 ORDER BY d.doc_id""".stripMargin).budget(5.0),
 
     // frontier + Crawl-delay → the per-host FETCH SCHEDULE in ONE plan
     // with ONE robots parse (r19 directive #3): Robots.gate rides the
@@ -4082,7 +4969,7 @@ object ExtQueries {
     // Crawl-delay (default 1 s — politeness floor); delay-only robots
     // groups must not disturb the allow/disallow verdicts (the src
     // hosts' entries carry ONLY a Crawl-delay)
-    "q_fetch_schedule" -> ((s, dir) => {
+    Face("q_fetch_schedule", (s, dir) => {
       import s.implicits._
       val policy = Robots.agentPolicy(
         frontierRobotsFixture.toDF("host", "robots_txt"),
@@ -4095,7 +4982,20 @@ object ExtQueries {
       Links.fetchSchedule(linkPages(s, dir), col("url"), col("html"),
           seen, policy, perHostK = 2)
         .orderBy(col("host"), col("rank"))
-    }),
+    },
+      // the schedule on top of the same frontier derivation: delay from
+      // the planted Crawl-delay arithmetic (src hosts 2 + N%5, ext1 = 7,
+      // everything else the 1 s default), offset = (rank−1) × delay
+      (frontierOracleCtes +
+      """,
+        |delayed AS (SELECT host, url, rank,
+        |    CASE WHEN host LIKE 'src%' THEN 2 +
+        |      CAST(regexp_extract(host, '^src([0-9]+)', 1) AS INT) % 5
+        |    WHEN host = 'ext1.example.org' THEN 7 ELSE 1 END AS delay_s
+        |  FROM ranked WHERE rank <= 2)
+        |SELECT host, url, rank, CAST(delay_s AS INT) AS delay_s,
+        |  CAST((rank - 1) * delay_s AS INT) AS fetch_offset_s
+        |FROM delayed ORDER BY host, rank""".stripMargin)).budget(5.0),
 
     // robots-FETCH-status semantics (RFC 9309 §2.3.1 — r19 directive
     // #2): the robots ledger carries the HTTP status of each host's
@@ -4106,7 +5006,7 @@ object ExtQueries {
     // line must govern the agent "GraftBot/1.2" (version strip + fold),
     // and of "graft" vs "graftbot" only the LONGEST matching prefix
     // group governs
-    "q_robots_status" -> ((s, dir) => {
+    Face("q_robots_status", (s, dir) => {
       import s.implicits._
       val urls = Tables.documents(s, dir).select(col("doc_id"),
         concat(lit("http://"), element_at(array(
@@ -4122,14 +5022,33 @@ object ExtQueries {
         statusRobotsFixture.toDF("host", "robots_txt", "http_status"),
         "GraftBot/1.2")
         .orderBy(col("doc_id"))
-    }),
+    },
+      // robots-fetch-status verdicts stated per mod class: 0 hits the
+      // version-stripped graftbot group's Disallow (→ false), 1 misses it
+      // (→ true), 2 is the 404 host (body ignored → true), 3 the 503 host
+      // (body ignored → false), 4 the longest-prefix host where only the
+      // /b rule governs (→ true), 5 its /b hit (→ false), 6 a host with
+      // no robots row at all (→ true)
+      """SELECT doc_id,
+        |  CASE CAST(doc_id % 7 AS INT)
+        |    WHEN 0 THEN 'ok.example.com' WHEN 1 THEN 'ok.example.com'
+        |    WHEN 2 THEN 'gone.example.com' WHEN 3 THEN 'down.example.com'
+        |    WHEN 4 THEN 'pref.example.com' WHEN 5 THEN 'pref.example.com'
+        |    ELSE 'nofile.example.com' END AS host,
+        |  CASE CAST(doc_id % 7 AS INT)
+        |    WHEN 0 THEN '/private/x' WHEN 1 THEN '/pub/x'
+        |    WHEN 2 THEN '/any/' WHEN 3 THEN '/any/' WHEN 4 THEN '/a/'
+        |    WHEN 5 THEN '/b/' ELSE '/' END ||
+        |    CAST(doc_id AS VARCHAR) AS path,
+        |  doc_id % 7 NOT IN (0, 3, 5) AS allowed
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(0.8),
 
     // the conditional-GET recrawl ledger: per fetched (200) URL the
     // ETag/Last-Modified validators a polite recrawler persists to send
     // If-None-Match / If-Modified-Since next visit (redirects carry
     // none and must be absent); both validators oracle-stated from the
     // render arithmetic
-    "q_recrawl_ledger" -> ((s, dir) =>
+    Face("q_recrawl_ledger", (s, dir) =>
       graft.sources.Sources.warcResponses(s,
           s"${warcRedirectFixture(s, dir)}/corpus.warc")
         .where(col("http_status") === 200)
@@ -4137,7 +5056,17 @@ object ExtQueries {
           regexp_extract(col("uri"), "/p/(\\d+)", 1).cast("long")
             .as("doc_id"),
           col("uri").as("url"), col("etag"), col("last_modified"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the 200-class validators from the render arithmetic; redirect
+      // rows filtered out by status
+      """SELECT doc_id,
+        |  'http://' || source || '.example.com/p/' ||
+        |    CAST(doc_id AS VARCHAR) AS url,
+        |  '"v' || CAST(doc_id AS VARCHAR) || '"' AS etag,
+        |  'Sat, 01 Feb 2026 00:' ||
+        |    lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') ||
+        |    ':00 GMT' AS last_modified
+        |FROM documents WHERE doc_id % 4 = 0 ORDER BY doc_id""".stripMargin).budget(1.5),
 
     // the RECRAWL DECISION (r19 directive #7): sitemap lastmod ×
     // validator ledger → fetch / revalidate / skip per URL — the
@@ -4146,7 +5075,7 @@ object ExtQueries {
     // (redirect-class) URLs miss the ledger → fetch; matched URLs
     // whose sitemap lastmod is after the recorded copy's HTTP-date →
     // revalidate; lastmod on/before it (doc_id % 28 = 0) → skip
-    "q_recrawl_decide" -> ((s, dir) => {
+    Face("q_recrawl_decide", (s, dir) => {
       val entries = graft.sources.Sources.sitemapEntries(s,
           s"${sitemapFixture(s, dir)}/*.xml")
         .where(col("kind") === "urlset")
@@ -4160,7 +5089,21 @@ object ExtQueries {
             .as("doc_id"),
           col("url"), col("verdict"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the three verdict classes from the two fixtures' shared
+      // arithmetic: query-spelled locs (mod 3) and redirect-class URLs
+      // (mod 4 ≠ 0) never match the 200-validator ledger → fetch; the
+      // matched class compares sitemap lastmod 2026-02-(id%28+1) against
+      // the ledger's Last-Modified date 2026-02-01 → skip exactly when
+      // id % 28 = 0, else revalidate
+      """SELECT doc_id,
+        |  'http://' || source || '.example.com/p/' ||
+        |    CAST(doc_id AS VARCHAR) ||
+        |    CASE WHEN doc_id % 3 = 0 THEN '?a=1&b=2' ELSE '' END AS url,
+        |  CASE WHEN doc_id % 3 = 0 OR doc_id % 4 <> 0 THEN 'fetch'
+        |       WHEN doc_id % 28 = 0 THEN 'skip'
+        |       ELSE 'revalidate' END AS verdict
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(1.5),
 
     // CADENCE-AWARE recrawl decision: the two pieces of evidence the
     // plain decide face lacks — the FETCH date (the WARC record's
@@ -4171,7 +5114,7 @@ object ExtQueries {
     // weekly class splits fresh-by-cadence (skip — even without
     // validators) vs stale (revalidate with ETag / fetch without), the
     // no-cadence class falls to the validator rule
-    "q_recrawl_cadence" -> ((s, dir) => {
+    Face("q_recrawl_cadence", (s, dir) => {
       val entries = graft.sources.Sources.sitemapEntries(s,
           s"${sitemapFixture(s, dir)}/*.xml")
         .where(col("kind") === "urlset")
@@ -4186,7 +5129,27 @@ object ExtQueries {
             .as("doc_id"),
           col("url"), col("verdict"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // each cadence verdict stated per mod class: query locs miss the
+      // ledger; the lastmod class (mod 4 = 0, non-query) splits by the
+      // planted capture date (January copy stale → revalidate via its
+      // even-id ETag; March 1 copy → skip); the weekly class (mod 3 = 1)
+      // is fresh-by-cadence only at age 6 days (mod 4 = 3), else
+      // validator-split; the no-cadence class is validator-split
+      """SELECT doc_id,
+        |  'http://' || source || '.example.com/p/' ||
+        |    CAST(doc_id AS VARCHAR) ||
+        |    CASE WHEN doc_id % 3 = 0 THEN '?a=1&b=2' ELSE '' END AS url,
+        |  CASE WHEN doc_id % 3 = 0 THEN 'fetch'
+        |       WHEN doc_id % 4 = 0 THEN
+        |         CASE WHEN doc_id % 8 = 0 THEN 'revalidate' ELSE 'skip' END
+        |       WHEN doc_id % 3 = 1 THEN
+        |         CASE WHEN doc_id % 4 = 3 THEN 'skip'
+        |              WHEN doc_id % 2 = 0 THEN 'revalidate'
+        |              ELSE 'fetch' END
+        |       WHEN doc_id % 2 = 0 THEN 'revalidate'
+        |       ELSE 'fetch' END AS verdict
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(1.5),
 
     // REVALIDATION FOLD — the step after the recrawl decision: splice
     // the conditional-GET responses into the standing corpus. A 304
@@ -4196,7 +5159,7 @@ object ExtQueries {
     // copy — RFC 9110 §15.4.5) surfaces as refetch. All seven verdict
     // classes live from the two subsets' shared arithmetic; one
     // full-outer URL join, verdict + body in projection
-    "q_revalidate_fold" -> ((s, dir) => {
+    Face("q_revalidate_fold", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val url = concat(lit("http://"), col("source"),
         lit(".example.com/p/"), col("doc_id").cast("string"))
@@ -4211,19 +5174,56 @@ object ExtQueries {
           when(status === 200, concat(col("text"), lit(" v2")))
             .as("body"))
       Recrawl.foldRevalidated(prior, fresh).orderBy(col("url"))
-    }),
+    },
+      // the revalidation fold restated as the same FULL OUTER join over
+      // the two arithmetic subsets: body spliced from prior (304/5xx/
+      // untouched), fresh (200), or nulled (404/410, orphan 304); all
+      // seven verdict classes stated
+      """WITH p AS (SELECT 'http://' || source || '.example.com/p/' ||
+        |    CAST(doc_id AS VARCHAR) AS url, text AS pb
+        |  FROM documents WHERE doc_id % 5 <> 4),
+        |f AS (SELECT 'http://' || source || '.example.com/p/' ||
+        |    CAST(doc_id AS VARCHAR) AS url,
+        |  CAST(CASE CAST(doc_id % 7 AS INT)
+        |    WHEN 0 THEN 200 WHEN 1 THEN 304 WHEN 2 THEN 404
+        |    WHEN 3 THEN 200 WHEN 4 THEN 304 WHEN 5 THEN 503
+        |    ELSE 410 END AS INT) AS status,
+        |  CASE WHEN doc_id % 7 IN (0, 3) THEN text || ' v2' END AS fb
+        |  FROM documents WHERE doc_id % 3 <> 2)
+        |SELECT COALESCE(p.url, f.url) AS url,
+        |  CASE WHEN f.status = 200 THEN f.fb
+        |       WHEN f.status IN (404, 410)
+        |         OR (f.status = 304 AND p.pb IS NULL) THEN NULL
+        |       ELSE p.pb END AS body,
+        |  CASE WHEN f.status IS NULL THEN 'kept'
+        |       WHEN f.status = 200 THEN
+        |         CASE WHEN p.pb IS NULL THEN 'added' ELSE 'updated' END
+        |       WHEN f.status = 304 THEN
+        |         CASE WHEN p.pb IS NULL THEN 'refetch' ELSE 'unchanged' END
+        |       WHEN f.status IN (404, 410) THEN 'retired'
+        |       ELSE 'kept' END AS verdict
+        |FROM p FULL OUTER JOIN f ON p.url = f.url
+        |ORDER BY url""".stripMargin).budget(1.5),
 
     // sitemap DISCOVERY off robots.txt (group-independent Sitemap:
     // lines, field case-insensitive) — the other half of the crawl-seed
     // loop next to q_sitemap_scan's ingestion
-    "q_robots_sitemaps" -> ((s, dir) => {
+    Face("q_robots_sitemaps", (s, dir) => {
       import s.implicits._
       // anchored on the documents table only to keep the face
       // SF-invariant in shape; the fixture is the robots table
       val _ = Tables.documents(s, dir)
       Robots.sitemapUrls(robotsFixture.toDF("host", "robots_txt"))
         .orderBy(col("host"), col("sitemap_url"))
-    }),
+    },
+      // the Sitemap: lines planted in the robots fixture, verbatim (the
+      // face parses them back out of the raw files)
+      """SELECT * FROM (VALUES
+        |  ('a.example.com', 'http://a.example.com/sitemap_index.xml'),
+        |  ('b.example.com', 'http://b.example.com/sm1.xml'),
+        |  ('b.example.com', 'http://b.example.com/sm2.xml'))
+        |  t(host, sitemap_url)
+        |ORDER BY host, sitemap_url""".stripMargin).budget(0.5),
 
     // MIXED-RECORD WARC demux (r19 directive #4): the dump interleaves
     // request/response/metadata records per fetch — the real
@@ -4231,7 +5231,7 @@ object ExtQueries {
     // fetch (the response record) with status and payload intact — a
     // request's "GET …" block or a metadata body surfacing as a row
     // breaks the count AND the hash
-    "q_warc_demux_mixed" -> ((s, dir) =>
+    Face("q_warc_demux_mixed", (s, dir) =>
       graft.sources.Sources.warcResponses(s,
           s"${warcMixedFixture(s, dir)}/corpus.warc")
         .select(
@@ -4239,14 +5239,22 @@ object ExtQueries {
             .as("doc_id"),
           col("rec_type"), col("http_status"),
           md5(col("body")).as("body_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // exactly one row per fetch — the response record's — with the
+      // mod-3 status and the doc text's md5; the request/metadata
+      // records planted around it contribute NOTHING
+      """SELECT doc_id, 'response' AS rec_type,
+        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 404 ELSE 200 END AS INT)
+        |    AS http_status,
+        |  md5(text) AS body_md5
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(0.6),
 
     // server-claimed Content-Type vs what the payload bytes actually
     // are (magic-byte sniff over REAL container payloads riding a
     // binary WARC render) — the audit every multimodal crawl ingest
     // runs because crawl Content-Type lies; odd ids claim text/html
     // over image/audio/video bytes and must disagree
-    "q_warc_mime_audit" -> ((s, dir) =>
+    Face("q_warc_mime_audit", (s, dir) =>
       graft.sources.Sources.warcResponsesBinary(s,
           s"${warcMimeFixture(s, dir)}/corpus.warc")
         .select(
@@ -4256,7 +5264,21 @@ object ExtQueries {
             .as("claimed"),
           Multimodal.sniffMime(col("body")).as("sniffed"))
         .withColumn("agree", col("claimed") === col("sniffed"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // claimed-vs-sniffed per the render arithmetic: the true mime from
+      // the mod-5 encoder class, the claim lying (text/html) on odd ids
+      """WITH m AS (SELECT doc_id,
+        |    CASE CAST(doc_id % 5 AS INT)
+        |      WHEN 0 THEN 'image/png' WHEN 1 THEN 'image/jpeg'
+        |      WHEN 2 THEN 'image/gif' WHEN 3 THEN 'audio/wav'
+        |      ELSE 'video/x-msvideo' END AS mime
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CASE WHEN doc_id % 2 = 0 THEN mime ELSE 'text/html' END
+        |    AS claimed,
+        |  mime AS sniffed,
+        |  doc_id % 2 = 0 AS agree
+        |FROM m ORDER BY doc_id""".stripMargin).budget(1.5),
 
     // ---- dedup ----------------------------------------------------------
 
@@ -4266,14 +5288,24 @@ object ExtQueries {
     // changed/unchanged) are populated; comparison is by content hash
     // on narrow (id, hash) rows, text never crosses the exchange. The
     // oracle states each id's status from the generator arithmetic.
-    "q_corpus_diff" -> ((s, dir) => {
+    Face("q_corpus_diff", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val oldSnap = docs.filter(col("doc_id") % 10 < 9)
       val newSnap = docs.filter(col("doc_id") % 10 >= 1)
         .withColumn("text", when(col("doc_id") % 7 === 0,
           concat(col("text"), lit(" [refreshed]"))).otherwise(col("text")))
       Dedup.snapshotDiff(oldSnap, newSnap).orderBy(col("doc_id"))
-    }),
+    },
+      // each id's diff status straight from the generator arithmetic (the
+      // engine runs two hash projections + a full-outer id join; the
+      // oracle needs none of it — CASE order resolves the overlaps:
+      // removed/added membership first, then the mod-7 refresh)
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 10 = 0 THEN 'removed'
+        |       WHEN doc_id % 10 = 9 THEN 'added'
+        |       WHEN doc_id % 7 = 0 THEN 'changed'
+        |       ELSE 'unchanged' END AS status
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(0.8),
 
     // MIRROR-HOST detection — the host-level exact-dedup view: hosts
     // h{id%6} serve contents c{id%40}, and because gcd(40,6)=2 each
@@ -4283,11 +5315,16 @@ object ExtQueries {
     // must be df-capped OUT before pair mining (it would certify all 15
     // pairs). The oracle re-runs the whole derivation relationally on
     // the same construction (distinct → df-cap → self-join → ppm)
-    "q_mirror_hosts" -> ((s, dir) =>
+    Face("q_mirror_hosts", (s, dir) =>
       Dedup.mirrorHosts(
         mirrorDocsOf(Tables.documents(s, dir)),
         col("host"), col("content"), dfCap = 5)
-        .orderBy(col("host_a"), col("host_b"))),
+        .orderBy(col("host_a"), col("host_b")),
+      // the whole mirror derivation re-run relationally on the same
+      // construction: distinct (host, content), df-cap the boilerplate
+      // out, self-join on content, integer-ppm overlap vs the smaller
+      // host's inventory ('//' floor == Spark div: operands non-negative)
+      mirrorHostsOracleSql).budget(2.0),
 
     // the streamed MIRROR LEDGER twin: the narrow (host, content-hash)
     // pair relation accretes batch-keyed across a real 3-batch
@@ -4295,38 +5332,110 @@ object ExtQueries {
     // cross-batch distinct + the same df-cap/self-join/ppm fold —
     // distinct-of-union is associative across any split, so the batch
     // face's oracle gates the replay verbatim
-    "q_mirror_ingest_replay" -> ((s, dir) =>
+    Face("q_mirror_ingest_replay", (s, dir) =>
       graft.streaming.IngestStreams.readMirrorHosts(s,
         s"${ingestReplayFixture(s, dir)}/mirror_index", dfCap = 5)
-        .orderBy(col("host_a"), col("host_b"))),
+        .orderBy(col("host_a"), col("host_b")),
+      mirrorHostsOracleSql).budget(1.5),
 
     // span-level duplicated-substring coverage (Lee et al. 2021): token
     // positions covered by a corpus-repeated 3-gram, interval-union per doc
-    "q_dup_spans" -> ((s, dir) =>
+    Face("q_dup_spans", (s, dir) =>
       Dedup.dupCoverage(Tables.documents(s, dir), k = 3, minCount = 2)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // mirrors Dedup.dupCoverage: positions of corpus-duplicated 3-grams,
+      // covered-token union computed by exploding the (clamped) k indices of
+      // every hit — set-equivalent to the Spark side's lead-window interval
+      // union, deliberately a DIFFERENT formulation so the oracle is
+      // independent evidence, not a translation
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |d AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
+         |        $shinglesSql AS gs FROM t),
+         |p0 AS (SELECT doc_id, n_tokens, gs,
+         |         CAST(unnest(range(0, len(gs))) AS INT) AS pos FROM d),
+         |pos AS (SELECT doc_id, n_tokens, pos, gs[pos + 1] AS s FROM p0),
+         |dup AS (SELECT s FROM pos GROUP BY s HAVING count(*) >= 2),
+         |hit AS (SELECT doc_id, n_tokens, pos FROM pos JOIN dup USING (s)),
+         |cov AS (SELECT doc_id, count(DISTINCT idx) AS n_dup FROM (
+         |          SELECT doc_id, unnest(range(pos, least(pos + 3, n_tokens))) AS idx
+         |          FROM hit) GROUP BY doc_id)
+         |SELECT d.doc_id, d.n_tokens,
+         |  CAST(coalesce(c.n_dup, 0) AS BIGINT) AS n_dup_tokens,
+         |  round(CAST(coalesce(c.n_dup, 0) AS DOUBLE) /
+         |        greatest(CAST(d.n_tokens AS DOUBLE), 1.0), 6) AS dup_ratio
+         |FROM d LEFT JOIN cov c USING (doc_id) ORDER BY doc_id""".stripMargin),
 
     // exact substring-level dedup (Lee et al. 2022 duplicate-span REMOVAL):
     // every corpus-repeated 5-token span excised except its arg-min-first
     // occurrence, merged intervals, docs reassembled from surviving tokens
-    "q_substring_dedup" -> ((s, dir) =>
+    Face("q_substring_dedup", (s, dir) =>
       Dedup.dedupSubstrings(Tables.documents(s, dir), k = 5)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // mirrors Dedup.dedupSubstrings (k=5): duplicated 5-gram occurrences
+      // ranked by (doc_id, pos) with the rank-1 survivor kept; the removed
+      // token set is the DISTINCT explosion of every excised span's indices —
+      // set-equivalent to the Spark side's merged-interval islands,
+      // deliberately a DIFFERENT formulation (row_number + index explosion
+      // vs arg-min + gaps-and-islands) so the oracle is independent evidence
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |d AS (SELECT doc_id, toks, CAST(len(toks) AS INT) AS n_tokens,
+         |        CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
+         |        ELSE list_transform(range(1, len(toks) - 3),
+         |               i -> array_to_string(toks[i:i+4], ' '))
+         |        END AS gs FROM t),
+         |p0 AS (SELECT doc_id, n_tokens, gs,
+         |         CAST(unnest(range(0, len(gs))) AS INT) AS pos FROM d),
+         |pos AS (SELECT doc_id, n_tokens, pos, gs[pos + 1] AS s FROM p0),
+         |rk AS (SELECT *, row_number() OVER (PARTITION BY s
+         |           ORDER BY doc_id, pos) AS rn,
+         |         count(*) OVER (PARTITION BY s) AS cnt FROM pos),
+         |cut AS (SELECT doc_id, pos, least(pos + 5, n_tokens) AS e
+         |        FROM rk WHERE cnt >= 2 AND rn > 1),
+         |rem AS (SELECT DISTINCT doc_id,
+         |          CAST(unnest(range(pos, e)) AS INT) AS idx FROM cut),
+         |nr AS (SELECT doc_id, count(*) AS n_removed FROM rem GROUP BY doc_id),
+         |tx AS (SELECT doc_id, toks,
+         |         CAST(unnest(range(0, len(toks))) AS INT) AS idx FROM d),
+         |tv AS (SELECT doc_id, idx, toks[idx + 1] AS tok FROM tx),
+         |keep AS (SELECT tv.doc_id, tv.idx, tv.tok FROM tv LEFT JOIN rem
+         |           ON tv.doc_id = rem.doc_id AND tv.idx = rem.idx
+         |         WHERE rem.idx IS NULL),
+         |r AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS text_dedup
+         |      FROM keep GROUP BY doc_id)
+         |SELECT d.doc_id, coalesce(r.text_dedup, '') AS text_dedup,
+         |  d.n_tokens, CAST(coalesce(nr.n_removed, 0) AS BIGINT) AS n_removed
+         |FROM d LEFT JOIN r USING (doc_id) LEFT JOIN nr USING (doc_id)
+         |ORDER BY d.doc_id""".stripMargin),
 
-    "q_dedup_exact" -> ((s, dir) =>
+    Face("q_dedup_exact", (s, dir) =>
       Dedup.exact(Tables.documents(s, dir), keyCol = "text", idCol = "doc_id")
         .select(col("doc_id"), col("n_dups"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT min(doc_id) AS doc_id, count(*) AS n_dups
+        |FROM documents GROUP BY text ORDER BY doc_id""".stripMargin),
 
     // dfCap = None explicitly: this query IS the exact uncapped ground
     // truth the DuckDB oracle computes — the operator's default cap would
     // silently diverge from it on corpora with >cap-df shingles
-    "q_dedup_ngram_jaccard" -> ((s, dir) =>
+    Face("q_dedup_ngram_jaccard", (s, dir) =>
       Dedup.ngramJaccardPairsFromShingles(
         s.read.parquet(s"${dedupSketchFixture(s, dir)}/sig64")
           .withColumnRenamed("lang", "block"),
         threshold = 0.5, dfCap = None)
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      s"""WITH sh AS (
+         |  SELECT doc_id, lang,
+         |         list_distinct($shinglesSql) AS sh
+         |  FROM (SELECT doc_id, lang, $toksSql AS toks FROM documents))
+         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+         |        CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6)
+         |    AS jaccard
+         |FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
+         |WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+         |            CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6)
+         |      >= 0.5
+         |ORDER BY id_a, id_b""".stripMargin),
 
     // the GUARD path of ngramJaccardPairs under driver oracle check: a
     // boilerplate footer is planted on every doc so its shingles exceed the
@@ -4335,19 +5444,46 @@ object ExtQueries {
     // `case Some(cap)` branch). Capping is deterministic — postings of
     // over-df shingles are dropped before pair expansion — so the capped
     // result is oracle-checkable too, not just the uncapped ground truth
-    "q_dedup_ngram_capped" -> ((s, dir) =>
+    Face("q_dedup_ngram_capped", (s, dir) =>
       Dedup.ngramJaccardPairs(
         Tables.documents(s, dir).withColumn("text", concat(col("text"),
           lit(" standard footer disclaimer boilerplate notice applies"))),
         blockCol = col("lang"), threshold = 0.5, dfCap = Some(10))
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      // mirrors the operator's capped inverted index: df per (block, shingle),
+      // drop shingles over the cap, count intersections over SURVIVING
+      // shingles only, union = len_a + len_b − inter with len still the FULL
+      // distinct-shingle count (capping shrinks the numerator only)
+      s"""WITH aug AS (SELECT doc_id, lang,
+         |    text || ' standard footer disclaimer boilerplate notice applies' AS text
+         |  FROM documents),
+         |sh AS (
+         |  SELECT doc_id, lang, list_distinct($shinglesSql) AS sh
+         |  FROM (SELECT doc_id, lang, $toksSql AS toks FROM aug)),
+         |d AS (SELECT doc_id, lang, sh, CAST(len(sh) AS BIGINT) AS len FROM sh),
+         |post AS (SELECT lang, unnest(sh) AS s, doc_id, len FROM d),
+         |kept AS (
+         |  SELECT p.lang, p.s, p.doc_id, p.len FROM post p
+         |  JOIN (SELECT lang, s FROM post GROUP BY lang, s HAVING count(*) <= 10) ok
+         |    ON p.lang = ok.lang AND p.s = ok.s),
+         |pairs AS (
+         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.len AS len_a,
+         |    b.len AS len_b, count(*) AS inter
+         |  FROM kept a JOIN kept b
+         |    ON a.lang = b.lang AND a.s = b.s AND a.doc_id < b.doc_id
+         |  GROUP BY 1, 2, 3, 4)
+         |SELECT id_a, id_b,
+         |  round(CAST(inter AS DOUBLE) / (len_a + len_b - inter), 6) AS jaccard
+         |FROM pairs
+         |WHERE round(CAST(inter AS DOUBLE) / (len_a + len_b - inter), 6) >= 0.5
+         |ORDER BY id_a, id_b""".stripMargin),
 
     // MinHash+LSH candidates, VALUE-gated on everything checkable: the
     // mined pair set is staged and the oracle recomputes every pair's
     // Jaccard from raw text (emitting ITS value, so a wrong engine-side
     // verify can't hash-match) and re-applies the threshold; which pairs
     // banding surfaces stays in-engine, audited by q_dedup_minhash_recall
-    "q_dedup_minhash" -> ((s, dir) => {
+    Face("q_dedup_minhash", (s, dir) => {
       val path = oracleStagePath(dir, "q_dedup_minhash")
       // banding + verify over the standing signature index
       // (dedupSketchFixture) — the face times the LSH algebra, the
@@ -4358,7 +5494,8 @@ object ExtQueries {
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path).orderBy(col("id_a"), col("id_b"))
-    }),
+    },
+      pairJaccardOracleSql(s"$stagedRoot/q_dedup_minhash", 0.5)),
 
     // SimHash pairs, VALUE-gated from the staged signatures: chunking,
     // the bucket guard, pigeonhole candidate pairing and the hamming
@@ -4367,12 +5504,35 @@ object ExtQueries {
     // The signatures are a standing-index fixture ([[simhashSigFixture]]
     // — signed once at ingest, staged untimed), so the face times the
     // pairing algebra, not a per-run sign + parquet round-trip
-    "q_dedup_simhash" -> ((s, dir) =>
+    Face("q_dedup_simhash", (s, dir) =>
       // chunks > maxHamming keeps the pigeonhole guarantee (8 × 8-bit
       // chunks: any pair within hamming 7 shares at least one equal chunk)
       Dedup.simhashPairsFromSignatures(
         s.read.parquet(simhashSigFixture(s, dir)), maxHamming = 6, chunks = 8)
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      // simhash from the staged signatures: 8 × 8-bit chunk postings
+      // ((sim >> 8i) & 255 — arithmetic shift then mask, identical in
+      // both engines), over-cap buckets dropped like dropOversized,
+      // pigeonhole candidates (a < b, any shared chunk), hamming =
+      // popcount of the XOR — every step integer-exact
+      s"""WITH sig AS (SELECT doc_id, sim
+         |             FROM read_parquet('$stagedRoot/q_dedup_simhash/*.parquet')),
+         |ch AS (SELECT doc_id, CAST(i AS INT) AS chunk_idx,
+         |         (sim >> (CAST(i AS INT) * 8)) & 255 AS chunk_val
+         |       FROM sig, range(0, 8) r(i)),
+         |sizes AS (SELECT chunk_idx, chunk_val, count(*) AS n
+         |          FROM ch GROUP BY 1, 2),
+         |ok AS (SELECT c.doc_id, c.chunk_idx, c.chunk_val FROM ch c
+         |       JOIN sizes USING (chunk_idx, chunk_val) WHERE n <= 1000),
+         |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+         |         FROM ok a JOIN ok b USING (chunk_idx, chunk_val)
+         |         WHERE a.doc_id < b.doc_id),
+         |h AS (SELECT id_a, id_b,
+         |        CAST(bit_count(xor(x.sim, y.sim)) AS INT) AS hamming
+         |      FROM cand JOIN sig x ON x.doc_id = id_a
+         |      JOIN sig y ON y.doc_id = id_b)
+         |SELECT id_a, id_b, hamming FROM h
+         |WHERE hamming <= 6 ORDER BY id_a, id_b""".stripMargin),
 
     // dedup-sketch recall audit: fraction of the exact (per-lang, uncapped)
     // n-gram Jaccard pairs that MinHash+LSH banding surfaces. minhash
@@ -4384,7 +5544,7 @@ object ExtQueries {
     // lang-blocked pair set from raw text and the overlap fraction —
     // banding membership stays engine-side, but the exact leg and the
     // recall number are hash-gated
-    "q_dedup_minhash_recall" -> ((s, dir) => {
+    Face("q_dedup_minhash_recall", (s, dir) => {
       // ONE shingle pass feeds both pipelines (Dedup.shingled contract) —
       // and that pass is the standing dedupSketchFixture index, shared
       // across the family: the audit's dominant cost at scale is corpus
@@ -4401,7 +5561,30 @@ object ExtQueries {
       Dedup.pairRecallAudit(
         Dedup.ngramJaccardPairsFromShingles(sh, threshold = 0.5, dfCap = None),
         s.read.parquet(path))
-    }),
+    },
+      // minhash banding recall: the exact lang-blocked uncapped pair set
+      // is recomputed from raw text (the q_dedup_ngram_jaccard
+      // derivation), the staged sketch pair set is consumed as data, and
+      // the overlap fraction is recomputed — the exact shape of
+      // Dedup.pairRecallAudit (n_exact=0 → recall 1.0)
+      s"""WITH d AS (
+         |  SELECT doc_id, lang, list_distinct($shinglesSql) AS sh
+         |  FROM (SELECT doc_id, lang, $toksSql AS toks FROM documents)),
+         |ex AS (
+         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+         |  FROM d a JOIN d b ON a.lang = b.lang AND a.doc_id < b.doc_id
+         |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+         |        CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6)
+         |        >= 0.5),
+         |skp AS (SELECT id_a, id_b
+         |        FROM read_parquet('$stagedRoot/q_dedup_minhash_recall/*.parquet')),
+         |ne AS (SELECT count(*) AS n_exact FROM ex),
+         |nh AS (SELECT count(*) AS n_hit FROM ex JOIN skp USING (id_a, id_b))
+         |SELECT ne.n_exact, nh.n_hit,
+         |  CASE WHEN ne.n_exact = 0 THEN 1.0
+         |       ELSE round(CAST(nh.n_hit AS DOUBLE) / ne.n_exact, 4)
+         |  END AS recall
+         |FROM ne, nh""".stripMargin),
 
     // end-to-end corpus dedup, VALUE-gated: the mined minhash pair set is
     // staged to an oracle-visible parquet sink (downstream consumes the
@@ -4414,7 +5597,7 @@ object ExtQueries {
     // q_dedup_simhash de-breach shape, prescribed for this face in
     // VERDICT r17 #1); q_dedup_corpus_staged keeps the end-to-end
     // mine-included durable path timed.
-    "q_dedup_corpus" -> ((s, dir) => {
+    Face("q_dedup_corpus", (s, dir) => {
       val pairs = s.read.parquet(corpusOnePassPairsFixture(s, dir))
       val surv = Tables.documents(s, dir).join(
         s.read.parquet(s"${dedupSketchFixture(s, dir)}/surv_ids"),
@@ -4422,22 +5605,50 @@ object ExtQueries {
       Dedup.survivorsFromPairs(surv, pairs)
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      corpusDedupOracleSql(s"$stagedRoot/q_dedup_corpus", "onepass")).budget(1.0),
 
     // maxBlock = None explicitly: this IS the exact ground truth the
     // uncapped oracle computes (same contract as q_dedup_ngram_jaccard)
-    "q_dedup_embedding" -> ((s, dir) =>
+    Face("q_dedup_embedding", (s, dir) =>
       Dedup.embeddingPairs(Tables.embeddings(s, dir), blockCol = col("label"),
         threshold = 0.35, maxBlock = None)
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+        |           FROM embeddings)
+        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  round(list_dot_product(a.v, b.v) /
+        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+        |    AS cos
+        |FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
+        |WHERE round(list_dot_product(a.v, b.v) /
+        |            (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+        |      >= 0.35
+        |ORDER BY id_a, id_b""".stripMargin),
 
     // transitive near-dup clusters: distributed connected components
     // (large-star/small-star) over the exact embedding near-dup pair set;
     // oracle = DuckDB recursive CTE computing min reachable id per node
-    "q_cc_components" -> ((s, dir) =>
+    Face("q_cc_components", (s, dir) =>
       Graph.connectedComponents(
         s.read.parquet(s"${embPairsFixture(s, dir)}/pairs"))
-        .orderBy(col("id"))),
+        .orderBy(col("id")),
+      """WITH RECURSIVE v AS (
+        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |pairs AS (
+        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
+        |  WHERE round(list_dot_product(a.v, b.v) /
+        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+        |        >= 0.35),
+        |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |reach(id, r) AS (
+        |  SELECT DISTINCT u, u FROM edges
+        |  UNION
+        |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id)
+        |SELECT id, min(r) AS component FROM reach GROUP BY id
+        |ORDER BY id""".stripMargin),
 
     // incremental CC under the SAME oracle as q_cc_components: the label
     // table of a base partition of the pair graph (both endpoints even),
@@ -4445,21 +5656,37 @@ object ExtQueries {
     // must equal a full recompute over the whole graph — which is exactly
     // the recursive-CTE oracle, label VALUES included (the min-reachable-
     // id agreement the operator's scaladoc promises)
-    "q_cc_components_inc" -> ((s, dir) => {
+    Face("q_cc_components_inc", (s, dir) => {
       val pairs = s.read.parquet(s"${embPairsFixture(s, dir)}/pairs")
       val isBase = col("id_a") % 2 === 0 && col("id_b") % 2 === 0
       Graph.incrementalCC(
         Graph.connectedComponents(pairs.filter(isBase)),
         pairs.filter(!isBase))
         .orderBy(col("id"))
-    }),
+    },
+      """WITH RECURSIVE v AS (
+        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |pairs AS (
+        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
+        |  WHERE round(list_dot_product(a.v, b.v) /
+        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+        |        >= 0.35),
+        |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |reach(id, r) AS (
+        |  SELECT DISTINCT u, u FROM edges
+        |  UNION
+        |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id)
+        |SELECT id, min(r) AS component FROM reach GROUP BY id
+        |ORDER BY id""".stripMargin),
 
     // quality survivor policy under the SAME exact pair graph + recursive-
     // CTE closure as q_cc_components: per transitive cluster keep the
     // member maximizing (score, then lowest id) — score here a
     // deterministic proxy (vec_id % 7) since the fixture has no quality
     // column; the policy arithmetic is what's under the gate
-    "q_cc_best_survivors" -> ((s, dir) => {
+    Face("q_cc_best_survivors", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Dedup.survivorsFromLabelsBy(
         emb.select(col("vec_id"), col("label")),
@@ -4468,13 +5695,40 @@ object ExtQueries {
         ordCol = col("vec_id") % 7, idCol = "vec_id")
         .select(col("vec_id"), col("label"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // same closure, then the quality survivor policy: per component keep
+      // arg-max((id % 7), then lowest id); docs outside the pair graph
+      // survive untouched
+      """WITH RECURSIVE v AS (
+        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |pairs AS (
+        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
+        |  WHERE round(list_dot_product(a.v, b.v) /
+        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+        |        >= 0.35),
+        |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |reach(id, r) AS (
+        |  SELECT DISTINCT u, u FROM edges
+        |  UNION
+        |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id),
+        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
+        |best AS (SELECT component, id AS keep_id FROM (
+        |    SELECT component, id, row_number() OVER (
+        |      PARTITION BY component ORDER BY (id % 7) DESC, id ASC) AS rn
+        |    FROM comp) WHERE rn = 1),
+        |losers AS (SELECT id FROM comp
+        |           WHERE id NOT IN (SELECT keep_id FROM best))
+        |SELECT e.vec_id, e.label FROM embeddings e
+        |WHERE e.vec_id NOT IN (SELECT id FROM losers)
+        |ORDER BY e.vec_id""".stripMargin),
 
     // corpus dedup with exactly-one-survivor-per-transitive-cluster
     // semantics, VALUE-gated like q_dedup_corpus: DuckDB re-verifies the
     // staged pairs from raw text and recomputes the transitive closure
     // (recursive CTE) + min-id survivor selection independently
-    "q_dedup_corpus_cc" -> ((s, dir) => {
+    Face("q_dedup_corpus_cc", (s, dir) => {
       // survivor-policy face over the STANDING pair graph
       // (corpusPairsFixture — the mining is q_dedup_corpus's timed
       // surface): transitive closure + min-id survivors, the oracle
@@ -4490,14 +5744,20 @@ object ExtQueries {
       Dedup.survivorsFromLabels(surv, Graph.connectedComponents(pairs))
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // cc/best consume the SHARED standing graph (corpusPairsFixture),
+      // so the oracle re-verifies at ITS mining threshold — not the
+      // one-pass faces' 0.8 (r13 ADVICE: a stricter oracle threshold
+      // silently certifies a smaller closure than the engine computes)
+      corpusDedupOracleSql(s"$stagedRoot/q_dedup_corpus_cc", "cc",
+        verifyThreshold = corpusPairsThreshold)),
 
     // keep-longest survivor policy end-to-end (survivorOrd = n_chars),
     // VALUE-gated: the oracle recomputes closure + per-cluster
     // arg-max(n_chars, then lowest id) from the staged pairs — the policy
     // arithmetic is now hash-gated on the real sketch-mined graph too,
     // not only on the exact pairs of q_cc_best_survivors
-    "q_dedup_corpus_best" -> ((s, dir) => {
+    Face("q_dedup_corpus_best", (s, dir) => {
       val path = oracleStagePath(dir, "q_dedup_corpus_best")
       s.read.parquet(s"${corpusPairsFixture(s, dir)}/pairs")
         .write.mode("overwrite").parquet(path)
@@ -4510,7 +5770,9 @@ object ExtQueries {
         ordCol = col("n_chars"))
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      corpusDedupOracleSql(s"$stagedRoot/q_dedup_corpus_best", "best",
+        verifyThreshold = corpusPairsThreshold)),
 
     // the incremental end-to-end face of the same operator: STANDING
     // exact/signature/label state over a base partition (built once per
@@ -4527,7 +5789,7 @@ object ExtQueries {
     // staged delta pairs from raw text, and recomputes the merged
     // closure + survivors — the incremental FOLD is under the hash gate;
     // inc ≡ batch parity stays property-tested in DedupSpec.
-    "q_dedup_corpus_inc" -> ((s, dir) => {
+    Face.staged("q_dedup_corpus_inc", (s, dir) => {
       val fx = corpusIncFixture(s, dir)
       oracleCorpusIncDir = fx
       val (bands, rows, thr) = (32, 2, 0.5)
@@ -4554,36 +5816,125 @@ object ExtQueries {
         updated)
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      Option.when(oracleCorpusIncDir.nonEmpty)(
+        s"""WITH RECURSIVE d AS (
+           |  SELECT doc_id, list_distinct($shinglesSql) AS sh
+           |  FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
+           |delta AS (SELECT doc_id + 1000000 AS doc_id, text, lang, source
+           |          FROM documents WHERE doc_id % 10 >= 9),
+           |dsurv AS (SELECT min(doc_id) AS doc_id, text FROM delta GROUP BY text),
+           |dsurv2 AS (
+           |  SELECT s.doc_id, dd.lang, dd.source FROM dsurv s
+           |  JOIN delta dd ON dd.doc_id = s.doc_id
+           |  WHERE NOT EXISTS (SELECT 1 FROM documents c
+           |                    WHERE c.doc_id % 10 < 9 AND c.text = s.text)),
+           |bsurv AS (SELECT doc_id, lang, source
+           |          FROM read_parquet('$oracleCorpusIncDir/base_surv/*.parquet')),
+           |lab AS (SELECT id, component
+           |        FROM read_parquet('$oracleCorpusIncDir/labels/*.parquet')),
+           |rawp AS (SELECT id_a, id_b FROM read_parquet(
+           |           '$stagedRoot/q_dedup_corpus_inc/*.parquet')),
+           |vp AS (SELECT id_a, id_b FROM (
+           |    SELECT id_a, id_b,
+           |      CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+           |      (CAST(len(a.sh) AS DOUBLE) + CAST(len(b.sh) AS DOUBLE) -
+           |       CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)) AS jraw
+           |    FROM rawp
+           |    JOIN d a ON a.doc_id =
+           |      (CASE WHEN id_a >= 1000000 THEN id_a - 1000000 ELSE id_a END)
+           |    JOIN d b ON b.doc_id =
+           |      (CASE WHEN id_b >= 1000000 THEN id_b - 1000000 ELSE id_b END))
+           |  WHERE jraw >= 0.5),
+           |edges AS (
+           |  SELECT id AS u, component AS v FROM lab
+           |  UNION SELECT component, id FROM lab
+           |  UNION SELECT id_a, id_b FROM vp
+           |  UNION SELECT id_b, id_a FROM vp),
+           |reach(id, r) AS (
+           |  SELECT DISTINCT u, u FROM edges
+           |  UNION
+           |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id),
+           |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
+           |losers AS (SELECT id AS doc_id FROM comp WHERE id <> component),
+           |allsurv AS (SELECT doc_id, lang, source FROM bsurv
+           |            UNION ALL SELECT doc_id, lang, source FROM dsurv2)
+           |SELECT doc_id, lang, source FROM allsurv
+           |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
+           |ORDER BY doc_id""".stripMargin)),
 
-    // ---- staged (100 TB-path) twins: the SAME queries routed through the
-    // durable parquet staging path (Staging contract) instead of persist /
-    // localCheckpoint, so the configuration recommended at cluster scale
-    // is itself under the oracle gate. Scratch dirs are per-invocation
-    // temp dirs (harness-local; a cluster run points stagingDir at HDFS/S3).
+      // ---- staged (100 TB-path) twins: the SAME queries routed through the
+      // durable parquet staging path (Staging contract) instead of persist /
+      // localCheckpoint, so the configuration recommended at cluster scale
+      // is itself under the oracle gate. Scratch dirs are per-invocation
+      // temp dirs (harness-local; a cluster run points stagingDir at HDFS/S3).
 
-    // durable-round CC (fault-tolerant lineage truncation): hash-checked
-    // against the same recursive-CTE oracle as q_cc_components.
-    // smallGraphThreshold = 0 PINS this face to the iterative
-    // large-star/small-star convergence: q_cc_components{,_inc} take the
-    // driver-local fast path at oracle scale, so this is the catalog row
-    // that keeps the distributed path itself under the DuckDB gate
-    // (fast ≡ iterative is additionally property-tested in GraphSpec)
-    "q_cc_components_staged" -> ((s, dir) =>
-      Graph.connectedComponents(
-        s.read.parquet(s"${embPairsFixture(s, dir)}/pairs"),
-        stagingDir = Some(tempStagingDir("graft-stg-cc", dir)),
-        smallGraphThreshold = 0L)
-        .orderBy(col("id"))),
+      // durable-round CC (fault-tolerant lineage truncation): hash-checked
+      // against the same recursive-CTE oracle as q_cc_components.
+      // smallGraphThreshold = 0 PINS this face to the iterative
+      // large-star/small-star convergence: q_cc_components{,_inc} take the
+      // driver-local fast path at oracle scale, so this is the catalog row
+      // that keeps the distributed path itself under the DuckDB gate
+      // (fast ≡ iterative is additionally property-tested in GraphSpec)
+      Face("q_cc_components_staged", (s, dir) =>
+        Graph.connectedComponents(
+          s.read.parquet(s"${embPairsFixture(s, dir)}/pairs"),
+          stagingDir = Some(tempStagingDir("graft-stg-cc", dir)),
+          smallGraphThreshold = 0L)
+          .orderBy(col("id")),
+        // staged twin: identical semantics (durable rounds), identical oracle
+        """WITH RECURSIVE v AS (
+          |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+          |pairs AS (
+          |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+          |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
+          |  WHERE round(list_dot_product(a.v, b.v) /
+          |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+          |        >= 0.35),
+          |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
+          |          UNION SELECT id_b, id_a FROM pairs),
+          |reach(id, r) AS (
+          |  SELECT DISTINCT u, u FROM edges
+          |  UNION
+          |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id)
+          |SELECT id, min(r) AS component FROM reach GROUP BY id
+          |ORDER BY id""".stripMargin),
 
     // exact triangle count over the same similarity-pair graph as
     // q_cc_components — degree-ordered orientation (wedges only at each
     // edge's min-order endpoint), every triangle counted exactly once;
     // the oracle recomputes pairs, degrees, orientation, wedges, and the
     // closure independently
-    "q_triangles" -> ((s, dir) =>
+    Face("q_triangles", (s, dir) =>
       Graph.triangles(
-        s.read.parquet(s"${embPairsFixture(s, dir)}/pairs"))),
+        s.read.parquet(s"${embPairsFixture(s, dir)}/pairs")),
+      // same pair mining as q_cc_components, then the degree-ordered
+      // triangle algorithm re-derived: canonical edges, degrees, (deg, id)
+      // orientation, source wedges, closing semi-join
+      """WITH v AS (
+        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |pairs AS (
+        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
+        |  WHERE round(list_dot_product(a.v, b.v) /
+        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+        |        >= 0.35),
+        |canon AS (SELECT DISTINCT least(id_a, id_b) AS u, greatest(id_a, id_b) AS v
+        |          FROM pairs WHERE id_a <> id_b),
+        |deg AS (SELECT x, count(*) AS d FROM (
+        |    SELECT u AS x FROM canon UNION ALL SELECT v FROM canon) GROUP BY x),
+        |oriented AS (
+        |  SELECT CASE WHEN (du.d, c.u) < (dv.d, c.v) THEN c.u ELSE c.v END AS a,
+        |         CASE WHEN (du.d, c.u) < (dv.d, c.v) THEN c.v ELSE c.u END AS b,
+        |         CASE WHEN (du.d, c.u) < (dv.d, c.v) THEN dv.d ELSE du.d END AS db
+        |  FROM canon c JOIN deg du ON du.x = c.u JOIN deg dv ON dv.x = c.v),
+        |wedges AS (
+        |  SELECT o1.b, o2.b AS c
+        |  FROM oriented o1 JOIN oriented o2
+        |    ON o1.a = o2.a AND (o1.db, o1.b) < (o2.db, o2.b))
+        |SELECT CAST(count(*) AS BIGINT) AS n_triangles
+        |FROM wedges w
+        |WHERE EXISTS (SELECT 1 FROM oriented o WHERE o.a = w.b AND o.b = w.c)""".stripMargin),
 
     // exact-arithmetic PageRank over the who-buys-from-whom bipartite
     // graph (customer → supplier via order lines; suppliers are dangling
@@ -4591,22 +5942,24 @@ object ExtQueries {
     // The scaled-integer contract (Graph.pageRank scaladoc) is what makes
     // a 5-round power iteration hash-gateable: the oracle unrolls the
     // identical integer recurrence one CTE per round
-    "q_pagerank" -> ((s, dir) =>
+    Face("q_pagerank", (s, dir) =>
       Graph.pageRank(
         s.read.parquet(s"${bipartiteEdgesFixture(s, dir)}/pr_edges"),
         rounds = 5)
-        .orderBy(col("id"))),
+        .orderBy(col("id")),
+      pageRankOracleSql),
 
     // fixed-round k-core peel over the sparsified customer–supplier
     // graph (the dense-subgraph extraction a data pipeline runs to find
     // heavily-interconnected entities); every round's set algebra AND
     // the fixed-point flag are under the hash gate (the oracle unrolls
     // the identical recurrence and asserts converged literally)
-    "q_kcore" -> ((s, dir) =>
+    Face("q_kcore", (s, dir) =>
       Graph.kCorePeel(
         s.read.parquet(s"${bipartiteEdgesFixture(s, dir)}/kcore_edges"),
         k = kCoreK, rounds = kCoreRounds)
-        .orderBy(col("id"))),
+        .orderBy(col("id")),
+      kCoreOracleSql),
 
     // synchronous label propagation (community detection) over the
     // standing embedding NEAR-DUP pair graph (the cc_components input —
@@ -4614,42 +5967,51 @@ object ExtQueries {
     // bipartite customer–supplier set where every community would be
     // one-sided with zero internal edges) — 3 deterministic rounds, the
     // oracle unrolling the identical ballot recurrence one CTE per round
-    "q_label_prop" -> ((s, dir) =>
+    Face("q_label_prop", (s, dir) =>
       Graph.labelPropagation(
         s.read.parquet(s"${embPairsFixture(s, dir)}/pairs"),
         rounds = 3)
-        .orderBy(col("id"))),
+        .orderBy(col("id")),
+      labelPropOracleSql),
 
     // personalized PageRank from a customer seed set over the sparse
     // customer–supplier graph: restart + dangling mass paid to the
     // seeds only, same fixed-round scaled-integer recurrence, oracle
     // unrolled per round with a seed CASE
-    "q_ppr" -> ((s, dir) =>
+    Face("q_ppr", (s, dir) =>
       Graph.personalizedPageRank(
         s.read.parquet(s"${bipartiteEdgesFixture(s, dir)}/kcore_edges"),
         s.range(0, 101).toDF("id"),
         srcCol = "id_a", dstCol = "id_b", rounds = 4)
-        .orderBy(col("id"))),
+        .orderBy(col("id")),
+      pprOracleSql),
 
     // exact integer-modularity evidence of the LPA assignment on the
     // same graph — Q·4m² decomposed per community, every column an
     // integer both engines re-derive (the one float is the caller's
     // final division, never in the gate)
-    "q_modularity" -> ((s, dir) => {
+    Face("q_modularity", (s, dir) => {
       val edges = s.read.parquet(s"${embPairsFixture(s, dir)}/pairs")
       Graph.modularity(edges, Graph.labelPropagation(edges, rounds = 3))
         .orderBy(col("community"))
-    }),
+    },
+      modularityOracleSql),
 
     // entity resolution: near-identical names within edit distance 1 via
     // two-pass blocked comparison (prefix + reversed-prefix, length-
     // banded, maxBlock straggler guard) — the oracle re-derives blocks,
     // guard, candidates, AND each pair's levenshtein independently, so
     // the whole recall/guard contract is value-gated, not just the verify
-    "q_fuzzy_pairs" -> ((s, dir) =>
+    Face("q_fuzzy_pairs", (s, dir) =>
       Fuzzy.blockedLevenshtein(Tables.customer(s, dir), col("c_custkey"),
         col("c_name"), maxDist = 1, prefixLen = 15, maxBlock = Some(10000))
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      // both blocking passes, the HAVING straggler guard, candidate
+      // generation, and the levenshtein verify re-derived end to end —
+      // CAST to INT mirrors Spark's levenshtein return type. Two dial
+      // settings of the SAME derivation: the fast pl=15 and the
+      // total-recall pl=8 (SCALE.md recall table)
+      fuzzyPairsOracleSql(15)),
 
     // the SAFE setting of the blocking dial (r13 directive #7): pl=8
     // gives TOTAL structural recall for names of length ≥ 16 (a single
@@ -4658,28 +6020,30 @@ object ExtQueries {
     // deliberately trades the mid-typo region (positions 7–12 invisible)
     // for smaller blocks. Same fixture, same oracle shape — the catalog
     // demonstrates both ends of the dial under the hash gate
-    "q_fuzzy_pairs_safe" -> ((s, dir) =>
+    Face("q_fuzzy_pairs_safe", (s, dir) =>
       Fuzzy.blockedLevenshtein(Tables.customer(s, dir), col("c_custkey"),
         col("c_name"), maxDist = 1, prefixLen = 8, maxBlock = Some(10000))
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      fuzzyPairsOracleSql(8)),
 
     // staged one-pass corpus dedup (signatures + survivors as parquet
     // staging tables — the 100 TB configuration), VALUE-gated against the
     // same independently recomputed one-pass oracle as q_dedup_corpus
-    "q_dedup_corpus_staged" -> ((s, dir) =>
+    Face("q_dedup_corpus_staged", (s, dir) =>
       Dedup.dedupCorpus(Tables.documents(s, dir),
         stagingDir = Some(tempStagingDir("graft-stg-corpus", dir)),
         pairsSink = Some(oracleStagePath(dir, "q_dedup_corpus_staged")),
         preStaged = preStaged(s, dir))
         .select(col("doc_id"), col("lang"), col("source"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      corpusDedupOracleSql(s"$stagedRoot/q_dedup_corpus_staged", "onepass")),
 
     // incremental NEAR-dup, VALUE-gated like q_dedup_minhash: the oracle
     // recomputes each staged pair's Jaccard from raw text and re-applies
     // the threshold PLUS the orientation contract (id_a is a delta doc;
     // delta-delta pairs appear once as id_a < id_b) — batch/incremental
     // pair-set equivalence stays property-tested in DedupSpec
-    "q_dedup_minhash_inc" -> ((s, dir) => {
+    Face("q_dedup_minhash_inc", (s, dir) => {
       // both sides slice the standing signature index (identical text =>
       // identical sh/sig, the signatureIndex contract) — the face times
       // the incremental banding fold, not two corpus re-signs
@@ -4693,27 +6057,69 @@ object ExtQueries {
           round(col("jaccard"), 6).as("jaccard"))
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path).orderBy(col("id_a"), col("id_b"))
-    }),
+    },
+      pairJaccardOracleSql(s"$stagedRoot/q_dedup_minhash_inc", 0.5,
+        extraWhere =
+          "\n  AND id_a % 10 >= 7 AND (id_b % 10 < 7 OR id_a < id_b)")),
 
     // semantic near-dup with LEARNED blocking, VALUE-gated: given the
     // staged k-means quantizer, multi-probe cell assignment, the
     // block-size guard, candidate pairing and the exact-cosine verify are
     // all re-derived independently by the DuckDB oracle — blocking recall
     // vs the unblocked ground truth stays property-tested in DedupSpec
-    "q_dedup_semantic" -> ((s, dir) =>
+    Face("q_dedup_semantic", (s, dir) =>
       Dedup.semanticPairs(Tables.embeddings(s, dir), threshold = 0.35,
         nlist = 8, nprobe = 2,
         centroidsSink = Some(oracleStagePath(dir, "q_dedup_semantic")))
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      // SemDeDup face from the staged quantizer: every vector probes its
+      // nprobe=2 nearest cells (same argmin-score rule as IVF), postings
+      // in over-cap cells are dropped exactly like dropOversized (no-op
+      // at fixture scale, mirrored anyway so the guard semantics are
+      // under the gate), vectors sharing ANY cell pair up once
+      // (id_a < id_b), and the exact rounded cosine decides survival
+      s"""WITH cents AS (SELECT cell, c FROM read_parquet('$stagedRoot/q_dedup_semantic/*.parquet')),
+         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |sc AS (SELECT vec_id, cell,
+         |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
+         |       FROM v, cents),
+         |probe AS (SELECT vec_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM sc) WHERE rn <= 2),
+         |sizes AS (SELECT cell, count(*) AS n FROM probe GROUP BY cell),
+         |ok AS (SELECT p.vec_id, p.cell FROM probe p
+         |       JOIN sizes USING (cell) WHERE n <= 10000),
+         |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+         |         FROM ok a JOIN ok b USING (cell)
+         |         WHERE a.vec_id < b.vec_id),
+         |scored AS (
+         |  SELECT id_a, id_b,
+         |    round(list_dot_product(x.v, y.v) /
+         |          (sqrt(list_dot_product(x.v, x.v)) *
+         |           sqrt(list_dot_product(y.v, y.v))), 6) AS cos
+         |  FROM cand JOIN v x ON x.vec_id = id_a JOIN v y ON y.vec_id = id_b)
+         |SELECT id_a, id_b, cos FROM scored
+         |WHERE cos >= 0.35 ORDER BY id_a, id_b""".stripMargin),
 
     // ---- similarity search ---------------------------------------------
-
-    "q_sim_topk" -> ((s, dir) => {
+    Face("q_sim_topk", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       Similarity.bruteForceTopK(embs, embs.filter(col("vec_id") < 8), k = 5)
         .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
         .orderBy(col("query_id"), col("rank"))
-    }),
+    },
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |scored AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
+        |    round(list_dot_product(q.v, c.v) /
+        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6)
+        |      AS cos
+        |  FROM v q JOIN v c ON q.vec_id < 8 AND q.vec_id <> c.vec_id)
+        |SELECT query_id, rank, vec_id, cos FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY query_id
+        |                               ORDER BY cos DESC, vec_id) AS rank
+        |  FROM scored) t
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
 
     // BINARY-QUANTIZED ANN (sign bits + Hamming shortlist + exact
     // rerank — the 32×-compressed scan path): NO trained state, so the
@@ -4722,36 +6128,106 @@ object ExtQueries {
     // sign-mismatch COUNT (a deliberately different, unpacked
     // formulation: agreement proves the bit packing), shortlist ties to
     // the lower id, exact-cosine rerank on the k·rerank survivors
-    "q_sim_bq" -> ((s, dir) => {
+    Face("q_sim_bq", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       Similarity.bqTopK(embs, embs.filter(col("vec_id") < 8), k = 5,
         rerank = 4)
         .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
         .orderBy(col("query_id"), col("rank"))
-    }),
+    },
+      // the BQ read path from raw vectors alone: Hamming recomputed
+      // UNPACKED as the per-position sign-mismatch count (agreement with
+      // the engine's bit_count-of-XOR proves the packing), shortlist 20
+      // per query with (ham, vec_id) ties, exact rounded-cosine rerank
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |ham AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id, q.v AS qv, c.v AS cv,
+        |    CAST(len(list_filter(range(1, 65), j ->
+        |      (q.v[CAST(j AS INT)] > 0) <> (c.v[CAST(j AS INT)] > 0)))
+        |      AS BIGINT) AS ham
+        |  FROM v q JOIN v c ON q.vec_id < 8 AND q.vec_id <> c.vec_id),
+        |short AS (SELECT query_id, vec_id, qv, cv FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY query_id
+        |                               ORDER BY ham, vec_id) AS rn
+        |  FROM ham) t WHERE rn <= 20),
+        |scored AS (
+        |  SELECT query_id, vec_id,
+        |    round(list_dot_product(qv, cv) /
+        |          (sqrt(list_dot_product(qv, qv)) *
+        |           sqrt(list_dot_product(cv, cv))), 6) AS cos
+        |  FROM short)
+        |SELECT query_id, rank, vec_id, cos FROM (
+        |  SELECT query_id, vec_id, cos,
+        |    CAST(row_number() OVER (PARTITION BY query_id
+        |      ORDER BY cos DESC, vec_id) AS INT) AS rank
+        |  FROM scored) t
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin).budget(2.0),
 
     // the packed sign words themselves (32-bit little-endian words as
     // BIGINTs): the storage artifact a binary-embedding store writes
-    "q_embed_binary" -> ((s, dir) =>
+    Face("q_embed_binary", (s, dir) =>
       EmbeddingPrep.binaryQuantize(Tables.embeddings(s, dir))
         .select(col("vec_id"),
           concat_ws("|", transform(col("bvec"), w => w.cast("string")))
             .as("bvec"))
-        .orderBy(col("vec_id"))),
+        .orderBy(col("vec_id")),
+      // the packed sign words recomputed with plain integer shifts (bit j
+      // of word w set iff element 32w+j+1 > 0, little-endian)
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |w AS (SELECT vec_id,
+        |    CAST(list_sum(list_transform(range(1, 33), j ->
+        |      CASE WHEN v[CAST(j AS INT)] > 0
+        |           THEN (CAST(1 AS BIGINT) << CAST(j - 1 AS INT))
+        |           ELSE 0 END)) AS BIGINT) AS w0,
+        |    CAST(list_sum(list_transform(range(1, 33), j ->
+        |      CASE WHEN v[CAST(32 + j AS INT)] > 0
+        |           THEN (CAST(1 AS BIGINT) << CAST(j - 1 AS INT))
+        |           ELSE 0 END)) AS BIGINT) AS w1
+        |  FROM v)
+        |SELECT vec_id, CAST(w0 AS VARCHAR) || '|' || CAST(w1 AS VARCHAR)
+        |  AS bvec
+        |FROM w ORDER BY vec_id""".stripMargin).budget(1.0),
 
     // hyperplane-LSH ANN, VALUE-gated: the deterministic plane matrix is
     // staged, and the oracle recomputes every bucket signature (sign of
     // v·plane_p packed little-endian), the single-probe bucket join, and
     // the exact-cosine ranking — the whole face is derivable from the
     // staged geometry (recall vs brute force stays q_sim_lsh_recall)
-    "q_sim_ann_lsh" -> ((s, dir) => {
+    Face("q_sim_ann_lsh", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       Similarity.lshTopK(embs, embs.filter(col("vec_id") < 8), k = 5, dims = 64,
         planes = 6,
         planesSink = Some(oracleStagePath(dir, "q_sim_ann_lsh")))
         .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
         .orderBy(col("query_id"), col("rank"))
-    }),
+    },
+      // hyperplane LSH from the staged plane matrix: bucket = packed sign
+      // bits of v·plane_p (integer sum of disjoint powers of two —
+      // order-free), single-probe bucket equality, exact rounded cosine
+      // ranks within the bucket
+      s"""WITH planes AS (SELECT cell AS p, c
+         |                FROM read_parquet('$stagedRoot/q_sim_ann_lsh/*.parquet')),
+         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |sig AS (SELECT vec_id,
+         |          CAST(sum(CASE WHEN list_dot_product(v, c) >= 0
+         |                        THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)
+         |               AS BIGINT) AS bucket
+         |        FROM v, planes GROUP BY vec_id),
+         |scored AS (
+         |  SELECT sq.vec_id AS query_id, sc.vec_id,
+         |    round(list_dot_product(a.v, b.v) /
+         |          (sqrt(list_dot_product(a.v, a.v)) *
+         |           sqrt(list_dot_product(b.v, b.v))), 6) AS cos
+         |  FROM sig sq JOIN sig sc ON sq.bucket = sc.bucket
+         |   AND sq.vec_id < 8 AND sq.vec_id <> sc.vec_id
+         |  JOIN v a ON a.vec_id = sq.vec_id
+         |  JOIN v b ON b.vec_id = sc.vec_id)
+         |SELECT query_id, rank, vec_id, cos FROM (
+         |  SELECT query_id, vec_id, cos,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cos DESC, vec_id) AS INT) AS rank
+         |  FROM scored) t
+         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
 
     // IVF ANN, VALUE-gated: the trained coarse quantizer is staged to an
     // oracle-visible parquet sink, and DuckDB re-derives cell assignment
@@ -4760,14 +6236,46 @@ object ExtQueries {
     // path is deterministic given the centroids, so the sketch face
     // itself is now under the hash gate (recall vs brute force stays
     // in-engine as q_sim_ivf_recall)
-    "q_sim_ivf" -> ((s, dir) => {
+    Face("q_sim_ivf", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       Similarity.ivfTopK(embs, embs.filter(col("vec_id") < 8), k = 5,
         nlist = 16, nprobe = 4,
         centroidsSink = Some(oracleStagePath(dir, "q_sim_ivf")))
         .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
         .orderBy(col("query_id"), col("rank"))
-    }),
+    },
+      // IVF from the staged quantizer: corpus cell = argmin score (the
+      // kernel's ||c||²−2·v·c form, sequential-sum parity with
+      // list_dot_product — same equivalence q_sim_topk already proves for
+      // the cosine), ties to the lower cell id exactly like the kernel's
+      // strict-< scan; queries probe their nprobe=4 nearest cells; exact
+      // rounded cosine ranks the candidates (cos DESC, vec_id ASC)
+      s"""WITH cents AS (SELECT cell, c FROM read_parquet('$stagedRoot/q_sim_ivf/*.parquet')),
+         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |sc AS (SELECT vec_id, cell,
+         |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
+         |       FROM v, cents),
+         |assign AS (SELECT vec_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM sc) WHERE rn = 1),
+         |probe AS (SELECT vec_id AS query_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM sc WHERE vec_id < 8) WHERE rn <= 4),
+         |scored AS (
+         |  SELECT p.query_id, a.vec_id,
+         |    round(list_dot_product(q.v, cv.v) /
+         |          (sqrt(list_dot_product(q.v, q.v)) *
+         |           sqrt(list_dot_product(cv.v, cv.v))), 6) AS cos
+         |  FROM probe p JOIN assign a USING (cell)
+         |  JOIN v q ON q.vec_id = p.query_id
+         |  JOIN v cv ON cv.vec_id = a.vec_id
+         |  WHERE a.vec_id <> p.query_id)
+         |SELECT query_id, rank, vec_id, cos FROM (
+         |  SELECT query_id, vec_id, cos,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cos DESC, vec_id) AS INT) AS rank
+         |  FROM scored) t
+         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
 
     // all-pairs approximate kNN graph (every vector's top-5 neighbours,
     // IVF-blocked with a SHUFFLE candidate join — queries = corpus, so
@@ -4775,18 +6283,49 @@ object ExtQueries {
     // dial): given the staged quantizer the oracle
     // re-derives assignment, probing, the cell join, and the per-query
     // top-k independently
-    "q_knn_graph" -> ((s, dir) =>
+    Face("q_knn_graph", (s, dir) =>
       Similarity.knnGraph(Tables.embeddings(s, dir), k = 5,
         nlist = 8, nprobe = 3,
         centroidsSink = Some(oracleStagePath(dir, "q_knn_graph")))
-        .orderBy(col("query_id"), col("rank"))),
+        .orderBy(col("query_id"), col("rank")),
+      // kNN graph from the staged quantizer: assignment = argmin score
+      // (ties → lower cell), EVERY vector probes its nprobe=3 nearest
+      // of 8 cells (the rn <= 3 below — must match the face's knnGraph
+      // call), candidates join on cell, exact rounded cosine + the
+      // (cos DESC, vec_id ASC) top-5 per query
+      s"""WITH cents AS (SELECT cell, c FROM read_parquet('$stagedRoot/q_knn_graph/*.parquet')),
+         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |sc AS (SELECT vec_id, cell,
+         |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
+         |       FROM v, cents),
+         |assign AS (SELECT vec_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM sc) WHERE rn = 1),
+         |probe AS (SELECT vec_id AS query_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM sc) WHERE rn <= 3),
+         |scored AS (
+         |  SELECT p.query_id, a.vec_id,
+         |    round(list_dot_product(q.v, cv.v) /
+         |          (sqrt(list_dot_product(q.v, q.v)) *
+         |           sqrt(list_dot_product(cv.v, cv.v))), 6) AS cos
+         |  FROM probe p JOIN assign a USING (cell)
+         |  JOIN v q ON q.vec_id = p.query_id
+         |  JOIN v cv ON cv.vec_id = a.vec_id
+         |  WHERE a.vec_id <> p.query_id)
+         |SELECT query_id, rank, vec_id, cos FROM (
+         |  SELECT query_id, vec_id, cos,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cos DESC, vec_id) AS INT) AS rank
+         |  FROM scored) t
+         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin).budget(5.0),
 
     // retrieval-eval metrics (recall@k / MRR / nDCG@k components) over
     // the exact top-5 of 8 query vectors, relevance = same label: every
     // emitted number is an exact integer (rational metrics as their
     // components, log discounts as shared scaled-integer literals), so
     // the oracle re-derives ranks, relevance, hits, and both DCG sums
-    "q_rank_metrics" -> ((s, dir) => {
+    Face("q_rank_metrics", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       val ranked = Similarity.bruteForceTopK(embs,
         embs.filter(col("vec_id") < 8), k = 5)
@@ -4798,6 +6337,49 @@ object ExtQueries {
         .select(col("query_id"), col("id"))
       graft.operators.Eval.rankingMetrics(ranked, relevant, k = 5)
         .orderBy(col("query_id"))
+    },
+      // ranks re-derived like q_sim_topk, relevance = same label, and the
+      // SAME scaled-integer discount literals rendered from one Scala map
+      // (Eval.discounts/idealPrefix — one definition, two renderings)
+      {
+      val disc = graft.operators.Eval.discounts(5)
+      val ideal = graft.operators.Eval.idealPrefix(5)
+      val discSql = (1 to 5).map(r => s"WHEN ${r} THEN ${disc(r)}")
+        .mkString("CASE rank ", " ", " END")
+      val idealSql = (0 to 5).map(n => s"WHEN ${n} THEN ${ideal(n)}")
+        .mkString("CASE least(n_rel, 5) ", " ", " END")
+      s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+         |           FROM embeddings),
+         |scored AS (
+         |  SELECT q.vec_id AS query_id, c.vec_id AS id,
+         |    round(list_dot_product(q.v, c.v) /
+         |          (sqrt(list_dot_product(q.v, q.v)) *
+         |           sqrt(list_dot_product(c.v, c.v))), 6) AS cos
+         |  FROM v q JOIN v c ON q.vec_id < 8 AND q.vec_id <> c.vec_id),
+         |ranked AS (SELECT query_id, id, rank FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cos DESC, id) AS rank FROM scored) t WHERE rank <= 5),
+         |rel AS (SELECT q.vec_id AS query_id, c.vec_id AS id
+         |        FROM v q JOIN v c ON q.label = c.label
+         |         AND q.vec_id < 8 AND q.vec_id <> c.vec_id),
+         |nrel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
+         |         FROM rel GROUP BY query_id),
+         |hits AS (SELECT r.query_id,
+         |           CAST(count(*) AS BIGINT) AS n_rel_at_k,
+         |           CAST(min(r.rank) AS BIGINT) AS first_rel_rank,
+         |           CAST(sum($discSql) AS BIGINT) AS dcg_scaled
+         |         FROM ranked r
+         |         WHERE EXISTS (SELECT 1 FROM rel
+         |                       WHERE rel.query_id = r.query_id
+         |                         AND rel.id = r.id)
+         |         GROUP BY r.query_id)
+         |SELECT n.query_id, n.n_rel,
+         |  CAST(coalesce(h.n_rel_at_k, 0) AS BIGINT) AS n_rel_at_k,
+         |  CAST(coalesce(h.first_rel_rank, -1) AS BIGINT) AS first_rel_rank,
+         |  CAST(coalesce(h.dcg_scaled, 0) AS BIGINT) AS dcg_scaled,
+         |  CAST($idealSql AS BIGINT) AS idcg_scaled
+         |FROM nrel n LEFT JOIN hits h ON n.query_id = h.query_id
+         |ORDER BY n.query_id""".stripMargin
     }),
 
     // sketch-recall audits, VALUE-gated end-to-end: exact-vs-approx
@@ -4809,23 +6391,76 @@ object ExtQueries {
     // the per-query overlap, so the recall NUMBER itself is now under the
     // DuckDB hash gate (a broken sketch, a broken exact leg, or a broken
     // audit join all collapse it)
-    "q_sim_lsh_recall" -> ((s, dir) => {
+    Face("q_sim_lsh_recall", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       val qs = embs.filter(col("vec_id") < 8)
       Similarity.recallAudit(
         Similarity.bruteForceTopK(embs, qs, k = 5),
         Similarity.lshTopK(embs, qs, k = 5, dims = 64, planes = 6,
           planesSink = Some(oracleStagePath(dir, "q_sim_lsh_recall"))))
-    }),
+    },
+      // LSH recall: sketch top-5 fully re-derived from the staged plane
+      // matrix (bucket signatures + single-probe join + exact rounded
+      // cosine — the q_sim_ann_lsh derivation reduced to membership),
+      // exact leg from raw vectors, overlap recomputed per query
+      simRecallOracleSql(
+      s"""planes AS (SELECT cell AS p, c
+         |           FROM read_parquet('$stagedRoot/q_sim_lsh_recall/*.parquet')),
+         |sig AS (SELECT vec_id,
+         |          CAST(sum(CASE WHEN list_dot_product(v, c) >= 0
+         |                        THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)
+         |               AS BIGINT) AS bucket
+         |        FROM v, planes GROUP BY vec_id),
+         |skscored AS (
+         |  SELECT sq.vec_id AS query_id, sc.vec_id,
+         |    round(list_dot_product(a.v, b.v) /
+         |          (sqrt(list_dot_product(a.v, a.v)) *
+         |           sqrt(list_dot_product(b.v, b.v))), 6) AS cos
+         |  FROM sig sq JOIN sig sc ON sq.bucket = sc.bucket
+         |   AND sq.vec_id < 8 AND sq.vec_id <> sc.vec_id
+         |  JOIN v a ON a.vec_id = sq.vec_id
+         |  JOIN v b ON b.vec_id = sc.vec_id),
+         |sk AS (SELECT query_id, vec_id FROM (
+         |    SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cos DESC, vec_id) AS rn FROM skscored) t
+         |  WHERE rn <= 5)""".stripMargin)),
 
-    "q_sim_ivf_recall" -> ((s, dir) => {
+    Face("q_sim_ivf_recall", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       val qs = embs.filter(col("vec_id") < 8)
       Similarity.recallAudit(
         Similarity.bruteForceTopK(embs, qs, k = 5),
         Similarity.ivfTopK(embs, qs, k = 5, nlist = 16, nprobe = 4,
           centroidsSink = Some(oracleStagePath(dir, "q_sim_ivf_recall"))))
-    }),
+    },
+      // IVF recall: sketch top-5 re-derived from the staged coarse
+      // quantizer (argmin cell assignment + nprobe probing + exact
+      // rounded cosine — the q_sim_ivf derivation reduced to membership)
+      simRecallOracleSql(
+      s"""cents AS (SELECT cell, c
+         |          FROM read_parquet('$stagedRoot/q_sim_ivf_recall/*.parquet')),
+         |cellsc AS (SELECT vec_id, cell,
+         |             list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
+         |           FROM v, cents),
+         |assign AS (SELECT vec_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM cellsc) WHERE rn = 1),
+         |probe AS (SELECT vec_id AS query_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM cellsc WHERE vec_id < 8) WHERE rn <= 4),
+         |skscored AS (
+         |  SELECT p.query_id, a.vec_id,
+         |    round(list_dot_product(q.v, cv.v) /
+         |          (sqrt(list_dot_product(q.v, q.v)) *
+         |           sqrt(list_dot_product(cv.v, cv.v))), 6) AS cos
+         |  FROM probe p JOIN assign a USING (cell)
+         |  JOIN v q ON q.vec_id = p.query_id
+         |  JOIN v cv ON cv.vec_id = a.vec_id
+         |  WHERE a.vec_id <> p.query_id),
+         |sk AS (SELECT query_id, vec_id FROM (
+         |    SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cos DESC, vec_id) AS rn FROM skscored) t
+         |  WHERE rn <= 5)""".stripMargin)),
 
     // product-quantization ANN with the refine leg VALUE-gated: the ADC
     // shortlist is staged (read back into the refine for exact
@@ -4833,14 +6468,38 @@ object ExtQueries {
     // the exact-cosine top-5 re-rank from raw vectors — shortlist
     // membership (the codebook-seeded part) stays in-engine, audited by
     // q_sim_pq_recall, the same epistemic split as the minhash faces
-    "q_sim_pq" -> ((s, dir) => {
+    Face("q_sim_pq", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       Similarity.pqTopK(embs, embs.filter(col("vec_id") < 8), k = 5,
         m = 16, ksub = 32, rerank = 8,
         shortlistSink = Some(oracleStagePath(dir, "q_sim_pq")))
         .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
         .orderBy(col("query_id"), col("rank"))
-    }),
+    },
+      // PQ refine leg from the staged ADC shortlist: unit-normalize raw
+      // vectors exactly like the engine (x / sqrt(max(Σx², 1e-300)), the
+      // sequential fold list_dot_product mirrors), then the exact rounded
+      // cosine re-rank picks the top 5
+      s"""WITH sl AS (SELECT query_id, vec_id
+         |            FROM read_parquet('$stagedRoot/q_sim_pq/*.parquet')),
+         |raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0 FROM embeddings),
+         |n AS (SELECT vec_id,
+         |        list_transform(v0, x -> x /
+         |          sqrt(greatest(list_dot_product(v0, v0), 1e-300))) AS v
+         |      FROM raw),
+         |scored AS (
+         |  SELECT s.query_id, s.vec_id,
+         |    round(list_dot_product(q.v, c.v) /
+         |          (sqrt(list_dot_product(q.v, q.v)) *
+         |           sqrt(list_dot_product(c.v, c.v))), 6) AS cos
+         |  FROM sl s JOIN n q ON q.vec_id = s.query_id
+         |  JOIN n c ON c.vec_id = s.vec_id)
+         |SELECT query_id, rank, vec_id, cos FROM (
+         |  SELECT query_id, vec_id, cos,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cos DESC, vec_id) AS INT) AS rank
+         |  FROM scored) t
+         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
 
     // PQ-family recall audits, VALUE-gated on everything derivable: the
     // ADC shortlist is staged under the audit's own name, and the oracle
@@ -4849,19 +6508,24 @@ object ExtQueries {
     // MEMBERSHIP stays engine-side (the codebook-seeded part), the same
     // epistemic split as q_sim_pq itself, but a broken shortlist now
     // collapses an oracle-checked recall value instead of a spec floor
-    "q_sim_pq_recall" -> ((s, dir) => {
+    Face("q_sim_pq_recall", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       val qs = embs.filter(col("vec_id") < 8)
       Similarity.recallAudit(
         Similarity.bruteForceTopK(embs, qs, k = 5),
         Similarity.pqTopK(embs, qs, k = 5, m = 16, ksub = 32, rerank = 8,
           shortlistSink = Some(oracleStagePath(dir, "q_sim_pq_recall"))))
-    }),
+    },
+      // PQ / IVF-PQ recall: sketch top-5 = exact refine of each audit's
+      // own staged ADC shortlist (unit-normalized, the q_sim_pq refine
+      // derivation); shortlist membership stays engine-side
+      simRecallOracleSql(
+      pqRefineSketchCte(s"$stagedRoot/q_sim_pq_recall"))),
 
     // IVF-PQ: coarse cells bound WHICH rows score, PQ codes bound what
     // each row costs, exact refine on the shortlist — same staged-
     // shortlist value gate as q_sim_pq_recall
-    "q_sim_ivfpq_recall" -> ((s, dir) => {
+    Face("q_sim_ivfpq_recall", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       val qs = embs.filter(col("vec_id") < 8)
       Similarity.recallAudit(
@@ -4869,7 +6533,9 @@ object ExtQueries {
         Similarity.ivfPqTopK(embs, qs, k = 5, nlist = 8, nprobe = 4,
           m = 16, ksub = 32, rerank = 8,
           shortlistSink = Some(oracleStagePath(dir, "q_sim_ivfpq_recall"))))
-    }),
+    },
+      simRecallOracleSql(
+      pqRefineSketchCte(s"$stagedRoot/q_sim_ivfpq_recall"))),
 
     // STANDING-index ANN: build the durable IVF+PQ index from the batch
     // fixture (train-once quantizers, batch-key partition — exactly what
@@ -4879,7 +6545,7 @@ object ExtQueries {
     // exact-cosine top-5 from the index's own stored unit vectors plus
     // the raw queries (shortlist membership stays under
     // q_ann_index_recall, the established epistemic split)
-    "q_ann_index" -> ((s, dir) => {
+    Face.staged("q_ann_index", (s, dir) => {
       val idx = annIndexFixture(s, dir)
       oracleAnnIndexDir = idx
       graft.streaming.IngestStreams.annFromIndex(s, idx,
@@ -4888,7 +6554,35 @@ object ExtQueries {
         shortlistSink = Some(oracleStagePath(dir, "q_ann_index")))
         .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
         .orderBy(col("query_id"), col("rank"))
-    }),
+    },
+      // the refine leg: exact cosine between the engine-side
+      // unit-normalized queries (mirrored: x / sqrt(max(Σx², 1e-300))) and
+      // the index's OWN stored unit vectors, re-ranked over the staged
+      // shortlist
+      Option.when(oracleAnnIndexDir.nonEmpty)(
+        s"""WITH sl AS (SELECT query_id, vec_id
+           |            FROM read_parquet('$stagedRoot/q_ann_index/*.parquet')),
+           |p AS (SELECT vec_id, v
+           |      FROM read_parquet('$oracleAnnIndexDir/postings/*/*.parquet')),
+           |raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0
+           |        FROM embeddings WHERE vec_id < 8),
+           |qn AS (SELECT vec_id AS query_id,
+           |         list_transform(v0, x -> x /
+           |           sqrt(greatest(list_dot_product(v0, v0), 1e-300))) AS qv
+           |       FROM raw),
+           |scored AS (
+           |  SELECT s.query_id, s.vec_id,
+           |    round(list_dot_product(q.qv, c.v) /
+           |          (sqrt(list_dot_product(q.qv, q.qv)) *
+           |           sqrt(list_dot_product(c.v, c.v))), 6) AS cos
+           |  FROM sl s JOIN qn q USING (query_id)
+           |  JOIN p c ON c.vec_id = s.vec_id)
+           |SELECT query_id, rank, vec_id, cos FROM (
+           |  SELECT query_id, vec_id, cos,
+           |    CAST(row_number() OVER (PARTITION BY query_id
+           |      ORDER BY cos DESC, vec_id) AS INT) AS rank
+           |  FROM scored) t
+           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
     // recall audit of the standing-index read path against the exact
     // brute force on the same (corpus, queries, k) — collapses if index
@@ -4897,7 +6591,7 @@ object ExtQueries {
     // oracle re-derives its refine from the index's own stored unit
     // vectors plus the brute-force leg from raw vectors, and recomputes
     // the overlap
-    "q_ann_index_recall" -> ((s, dir) => {
+    Face.staged("q_ann_index_recall", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
       val qs = embs.filter(col("vec_id") < 8)
       val idx = annIndexFixture(s, dir)
@@ -4907,24 +6601,59 @@ object ExtQueries {
         graft.streaming.IngestStreams.annFromIndex(s, idx, qs, k = 5,
           nprobe = 4, rerank = 8,
           shortlistSink = Some(oracleStagePath(dir, "q_ann_index_recall"))))
-    }),
+    },
+      // sketch top-5 = refine of the staged shortlist over the index's
+      // OWN stored unit vectors (queries mirrored engine-normalized);
+      // exact leg = brute force from raw embeddings
+      Option.when(oracleAnnIndexDir.nonEmpty)(simRecallOracleSql(
+        s"""sl AS (SELECT query_id, vec_id
+           |       FROM read_parquet('$stagedRoot/q_ann_index_recall/*.parquet')),
+           |p AS (SELECT vec_id, v AS u
+           |      FROM read_parquet('$oracleAnnIndexDir/postings/*/*.parquet')),
+           |qn AS (SELECT vec_id AS query_id,
+           |         list_transform(v, x -> x /
+           |           sqrt(greatest(list_dot_product(v, v), 1e-300))) AS qv
+           |       FROM v WHERE vec_id < 8),
+           |skscored AS (
+           |  SELECT s.query_id, s.vec_id,
+           |    round(list_dot_product(q.qv, c.u) /
+           |          (sqrt(list_dot_product(q.qv, q.qv)) *
+           |           sqrt(list_dot_product(c.u, c.u))), 6) AS cos
+           |  FROM sl s JOIN qn q USING (query_id)
+           |  JOIN p c ON c.vec_id = s.vec_id),
+           |sk AS (SELECT query_id, vec_id FROM (
+           |    SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
+           |      ORDER BY cos DESC, vec_id) AS rn FROM skscored) t
+           |  WHERE rn <= 5)""".stripMargin))),
 
     // topic-cluster assignment (the cluster-then-balance recipe's first
     // half), VALUE-gated from the staged quantizer: the oracle re-derives
     // every cell assignment (argmin ‖c‖² − 2·v·c, ties → lower cell) —
     // only the bounded-sample Lloyd trainer stays engine-side, the same
     // epistemic split as q_sim_ivf
-    "q_cluster_assign" -> ((s, dir) =>
+    Face("q_cluster_assign", (s, dir) =>
       Similarity.clusterAssign(Tables.embeddings(s, dir), nlist = 8,
         centroidsSink = Some(oracleStagePath(dir, "q_cluster_assign")))
         .select(col("vec_id"), col("cluster"))
-        .orderBy(col("vec_id"))),
+        .orderBy(col("vec_id")),
+      // cluster assignment from the staged quantizer — the q_sim_ivf
+      // assign CTE, exported as a first-class face
+      s"""WITH cents AS (SELECT cell, c
+         |               FROM read_parquet('$stagedRoot/q_cluster_assign/*.parquet')),
+         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |sc AS (SELECT vec_id, cell,
+         |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
+         |       FROM v, cents)
+         |SELECT vec_id, cluster FROM (
+         |  SELECT vec_id, cell AS cluster, row_number() OVER (
+         |    PARTITION BY vec_id ORDER BY s, cell) AS rn FROM sc) t
+         |WHERE rn = 1 ORDER BY vec_id""".stripMargin),
 
     // the composition the operator exists for: cluster-BALANCED corpus
     // mixing — epoch factors applied per semantic cluster instead of per
     // metadata group; assignment AND copy membership both re-derived by
     // the oracle (staged centroids + the md5 hex-threshold rule)
-    "q_cluster_balance" -> ((s, dir) =>
+    Face("q_cluster_balance", (s, dir) =>
       graft.operators.Sampling.epochsMix(
         Similarity.clusterAssign(Tables.embeddings(s, dir), nlist = 8,
           centroidsSink = Some(oracleStagePath(dir, "q_cluster_balance"))),
@@ -4933,41 +6662,122 @@ object ExtQueries {
           "4" -> 0.75, "5" -> 2.5, "6" -> 0.25, "7" -> 1.5),
         col("vec_id"))
         .select(col("vec_id"), col("cluster"), col("epoch"))
-        .orderBy(col("vec_id"), col("epoch"))),
+        .orderBy(col("vec_id"), col("epoch")),
+      // cluster-balanced epoch mix: assignment re-derived from the staged
+      // quantizer, then the q_mix_epochs copy rule keyed by cluster
+      s"""WITH cents AS (SELECT cell, c
+         |               FROM read_parquet('$stagedRoot/q_cluster_balance/*.parquet')),
+         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |sc AS (SELECT vec_id, cell,
+         |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
+         |       FROM v, cents),
+         |a AS (SELECT vec_id, cluster FROM (
+         |    SELECT vec_id, cell AS cluster, row_number() OVER (
+         |      PARTITION BY vec_id ORDER BY s, cell) AS rn FROM sc) t
+         |  WHERE rn = 1),
+         |e AS (SELECT vec_id, cluster,
+         |    CAST(CASE cluster WHEN 0 THEN 2.0 WHEN 1 THEN 0.5
+         |      WHEN 2 THEN 1.25 WHEN 3 THEN 1.0 WHEN 4 THEN 0.75
+         |      WHEN 5 THEN 2.5 WHEN 6 THEN 0.25 WHEN 7 THEN 1.5 END
+         |      AS DOUBLE) AS ep
+         |  FROM a),
+         |n AS (SELECT vec_id, cluster,
+         |    CAST(floor(ep) AS BIGINT) +
+         |    CASE WHEN CAST(round((ep - floor(ep)) * 4294967296.0) AS BIGINT)
+         |               >= 4294967296
+         |           OR substr(md5(CAST(vec_id AS VARCHAR)), 1, 8) <
+         |              printf('%08x',
+         |                CAST(round((ep - floor(ep)) * 4294967296.0) AS BIGINT))
+         |         THEN 1 ELSE 0 END AS nc
+         |  FROM e WHERE ep IS NOT NULL)
+         |SELECT vec_id, cluster, unnest(range(0, nc)) AS epoch
+         |FROM n WHERE nc > 0
+         |ORDER BY vec_id, epoch""".stripMargin),
 
     // deterministic stratified sampling on the md5 rule — EXACT membership
     // is hash-checked by the oracle (rate/nesting properties in SamplingSpec)
-    "q_sample_stratified" -> ((s, dir) =>
+    Face("q_sample_stratified", (s, dir) =>
       graft.operators.Sampling.stratifiedSample(
         Tables.documents(s, dir), col("lang"), col("doc_id"), strataRates)
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // per-stratum md5 membership, thresholds rendered from the SAME map
+      {
+      val thrValues = strataRates.toSeq.sorted.map { case (g, r) =>
+        s"('$g', '${graft.operators.Sampling.hexThreshold(r)}')"
+      }.mkString(", ")
+      s"""WITH thr(g, t) AS (VALUES $thrValues)
+         |SELECT d.doc_id, d.lang FROM documents d JOIN thr ON d.lang = thr.g
+         |WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < thr.t
+         |ORDER BY d.doc_id""".stripMargin
+    }),
 
     // md5-keyed weighted sample: membership is hash-checked by the oracle —
     // substr(md5(id),1,8) is engine-portable, unlike the xxhash64 samplers
-    "q_mix_sample" -> ((s, dir) =>
+    Face("q_mix_sample", (s, dir) =>
       graft.operators.Sampling.weightedSample(
         Tables.documents(s, dir), col("lang"), mixRates, col("doc_id"))
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // same thresholds as the Spark side, rendered from the SAME map; "g"
+      // is the keep-all sentinel (above every 8-char hex string)
+      {
+      val thrValues = mixRates.toSeq.sorted.map { case (g, r) =>
+        s"('$g', '${graft.operators.Sampling.hexThreshold(r)}')"
+      }.mkString(", ")
+      s"""WITH thr(g, t) AS (VALUES $thrValues)
+         |SELECT d.doc_id, d.lang FROM documents d JOIN thr ON d.lang = thr.g
+         |WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < thr.t
+         |ORDER BY d.doc_id""".stripMargin
+    }),
 
     // mixing to target shares: per-group keep-rates derived engine-side
     // from one count aggregate (bottleneck group kept whole), then the md5
     // sample — the oracle recomputes rates AND membership independently
-    "q_mix_shares" -> ((s, dir) =>
+    Face("q_mix_shares", (s, dir) =>
       graft.operators.Sampling.mixToShares(
         Tables.documents(s, dir), col("lang"), mixWeights, col("doc_id"))
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // independently re-derives the keep-rates (same IEEE double steps on
+      // exact integer inputs) and the md5 membership
+      {
+      val wValues = mixWeights.toSeq.sorted.map { case (g, x) =>
+        s"('$g', $x)"
+      }.mkString(", ")
+      val totalW = mixWeights.values.map(_.toLong).sum
+      s"""WITH w(g, wt) AS (VALUES $wValues),
+         |c AS (SELECT lang AS g, count(*) AS n FROM documents
+         |      JOIN w ON lang = w.g GROUP BY lang),
+         |j AS (SELECT c.g, c.n,
+         |        CAST(wt AS DOUBLE) / CAST($totalW AS DOUBLE) AS share
+         |      FROM c JOIN w USING (g)),
+         |s AS (SELECT min(CAST(n AS DOUBLE) / share) AS sc FROM j),
+         |thr AS (SELECT g, CAST(round(least(1.0, sc * share / CAST(n AS DOUBLE))
+         |          * 4294967296.0) AS BIGINT) AS t FROM j, s)
+         |SELECT d.doc_id, d.lang FROM documents d JOIN thr ON d.lang = thr.g
+         |WHERE t >= 4294967296 OR
+         |  substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < printf('%08x', t)
+         |ORDER BY d.doc_id""".stripMargin
+    }),
 
     // temperature (α = 0.5) mixing: shares ∝ n^α derived from the data —
     // α pinned to the sqrt path so every rate op is IEEE-correctly-rounded
     // in both engines (the operator's engine-portability contract)
-    "q_mix_temperature" -> ((s, dir) =>
+    Face("q_mix_temperature", (s, dir) =>
       graft.operators.Sampling.temperatureMix(
         Tables.documents(s, dir), col("lang"), alpha = 0.5, col("doc_id"))
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH c AS (SELECT lang AS g, count(*) AS n FROM documents GROUP BY lang),
+        |j AS (SELECT g, n, sqrt(CAST(n AS DOUBLE)) AS w FROM c),
+        |s AS (SELECT min(CAST(n AS DOUBLE) / w) AS mn FROM j),
+        |thr AS (SELECT g, CAST(round(least(1.0, mn * w / CAST(n AS DOUBLE))
+        |          * 4294967296.0) AS BIGINT) AS t FROM j, s)
+        |SELECT d.doc_id, d.lang FROM documents d JOIN thr ON d.lang = thr.g
+        |WHERE t >= 4294967296 OR
+        |  substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < printf('%08x', t)
+        |ORDER BY d.doc_id""".stripMargin),
 
     // epoch-based UPSAMPLING (the published LLM data-mix spec: "2.5
     // epochs of source X") — copy COUNTS and extra-copy MEMBERSHIP both
@@ -4975,76 +6785,185 @@ object ExtQueries {
     // copy are fully oracle-derivable. Factors are binary-exact fractions
     // so neither engine's decimal/double literal parsing can perturb the
     // threshold; 'es' is deliberately absent (the dropped-group arm)
-    "q_mix_epochs" -> ((s, dir) =>
+    Face("q_mix_epochs", (s, dir) =>
       graft.operators.Sampling.epochsMix(
         Tables.documents(s, dir), col("lang"),
         Map("en" -> 0.75, "de" -> 2.5, "fr" -> 1.0, "zh" -> 3.25),
         col("doc_id"))
         .select(col("doc_id"), col("lang"), col("epoch"))
-        .orderBy(col("doc_id"), col("epoch"))),
+        .orderBy(col("doc_id"), col("epoch")),
+      // epoch mixing: CAST ... AS DOUBLE pins the CASE literals to the same
+      // IEEE doubles Spark's map literal carries (DuckDB would otherwise
+      // parse them as DECIMAL and round the threshold differently); the
+      // copy expansion is a per-row range() unnest
+      """WITH e AS (
+        |  SELECT doc_id, lang,
+        |    CAST(CASE lang WHEN 'en' THEN 0.75 WHEN 'de' THEN 2.5
+        |                   WHEN 'fr' THEN 1.0 WHEN 'zh' THEN 3.25 END
+        |         AS DOUBLE) AS ep
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, lang,
+        |    CAST(floor(ep) AS BIGINT) +
+        |    CASE WHEN CAST(round((ep - floor(ep)) * 4294967296.0) AS BIGINT)
+        |               >= 4294967296
+        |           OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
+        |              printf('%08x',
+        |                CAST(round((ep - floor(ep)) * 4294967296.0) AS BIGINT))
+        |         THEN 1 ELSE 0 END AS n
+        |  FROM e WHERE ep IS NOT NULL)
+        |SELECT doc_id, lang, unnest(range(0, n)) AS epoch
+        |FROM c WHERE n > 0
+        |ORDER BY doc_id, epoch""".stripMargin),
 
-    // exact global ntile(10) by (quality, doc_id) without a global sort —
-    // oracle is DuckDB's native ntile, a genuinely different formulation
     // deterministic contrastive negative sampling (k=4 draws per query
     // over the embeddings table, self/same-label draws dropped): the
     // md5-prefix draw index, the distributed rank numbering, and the
     // exclusion rule are all re-derived by the oracle
-    "q_negative_sample" -> ((s, dir) =>
+    Face("q_negative_sample", (s, dir) =>
       graft.operators.Sampling.negativeSample(
         Tables.embeddings(s, dir).select(col("vec_id"), col("label")),
         col("vec_id"), col("label"), k = 4)
-        .orderBy(col("query_id"), col("j"))),
+        .orderBy(col("query_id"), col("j")),
+      // rank numbering re-derived by row_number (driver-scale stand-in for
+      // the engine's distributed prefixSum), draw index by the identical
+      // md5-prefix integer, exclusions by the same three-valued predicates
+      """WITH c AS (SELECT vec_id, label FROM embeddings),
+        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
+        |r AS (SELECT vec_id, label,
+        |        CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS idx
+        |      FROM c),
+        |q AS (SELECT vec_id AS qid, label AS qlab,
+        |        unnest(generate_series(0, 3)) AS j FROM c),
+        |d AS (SELECT qid, qlab, CAST(j AS INT) AS j,
+        |        CAST(('0x' || substring(md5(CAST(qid AS VARCHAR) || ':' ||
+        |          CAST(j AS VARCHAR)), 1, 8)) AS BIGINT)
+        |          % (SELECT n FROM n) AS draw
+        |      FROM q)
+        |SELECT d.qid AS query_id, d.j, r.vec_id AS neg_id
+        |FROM d JOIN r ON d.draw = r.idx
+        |WHERE r.label <> d.qlab AND r.vec_id <> d.qid
+        |ORDER BY query_id, j""".stripMargin),
 
     // deterministic systematic PPS draw (100 picks proportional to doc
     // length, with replacement): the two-phase distributed prefix sum +
     // the integer pick rule are both re-derived by the oracle's window
     // cumsum — Σ n_picks = k is part of the gated value set
-    "q_sample_pps" -> ((s, dir) =>
+    Face("q_sample_pps", (s, dir) =>
       graft.operators.Sampling.ppsSystematic(
         Tables.documents(s, dir).select(col("doc_id"), col("n_chars")),
         col("doc_id"), col("n_chars"), k = 100)
         .select(col("doc_id"), col("n_picks"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the window cumsum and the identical integer pick rule
+      // (all operands non-negative, so `//` floor == Spark `div` truncate);
+      // the CASTs pin DuckDB's HUGEINT-widening sums back to int64
+      """WITH d AS (SELECT doc_id, n_chars FROM documents),
+        |c AS (SELECT CAST(sum(n_chars) AS BIGINT) AS w FROM d),
+        |cum AS (SELECT doc_id, n_chars,
+        |  CAST(coalesce(sum(n_chars) OVER (ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS a
+        |  FROM d),
+        |p AS (SELECT doc_id, a, a + n_chars AS b,
+        |  w // 100 AS stride, (w // 100) // 2 AS strt, w FROM cum CROSS JOIN c),
+        |picks AS (SELECT doc_id,
+        |  CAST(least(100, CASE WHEN b <= strt THEN 0 ELSE (b - strt - 1) // stride + 1 END)
+        |     - least(100, CASE WHEN a <= strt THEN 0 ELSE (a - strt - 1) // stride + 1 END)
+        |   AS BIGINT) AS n_picks
+        |  FROM p WHERE w >= 100)
+        |SELECT doc_id, n_picks FROM picks WHERE n_picks >= 1
+        |ORDER BY doc_id""".stripMargin),
 
-    "q_quality_strata" -> ((s, dir) =>
+    // exact global ntile(10) by (quality, doc_id) without a global sort —
+    // oracle is DuckDB's native ntile, a genuinely different formulation
+    Face("q_quality_strata", (s, dir) =>
       graft.operators.Sampling.scoreStrata(
         TextAnalysis.qualityScore(Tables.documents(s, dir))
           .select(col("doc_id"), col("quality")),
         col("quality"), col("doc_id"), k = 10)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, quality,
+         |  CAST(ntile(10) OVER (ORDER BY quality, doc_id) AS INT) AS stratum
+         |FROM (SELECT doc_id, $qualitySql AS quality
+         |      FROM (SELECT doc_id, text, $toksSql AS toks FROM documents))
+         |ORDER BY doc_id""".stripMargin),
 
     // staged twin: the numbered relation as a parquet staging table (the
     // 100 TB configuration) — hash-checked against the same ntile oracle
-    "q_quality_strata_staged" -> ((s, dir) =>
+    Face("q_quality_strata_staged", (s, dir) =>
       graft.operators.Sampling.scoreStrata(
         TextAnalysis.qualityScore(Tables.documents(s, dir))
           .select(col("doc_id"), col("quality")),
         col("quality"), col("doc_id"), k = 10,
         stagingDir = Some(tempStagingDir("graft-stg-strata", dir)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""SELECT doc_id, quality,
+         |  CAST(ntile(10) OVER (ORDER BY quality, doc_id) AS INT) AS stratum
+         |FROM (SELECT doc_id, $qualitySql AS quality
+         |      FROM (SELECT doc_id, text, $toksSql AS toks FROM documents))
+         |ORDER BY doc_id""".stripMargin),
 
     // n-way split assignment: membership is a pure function of doc_id via
     // the md5 hex rule, so the oracle re-derives every row's split exactly
-    "q_split_assign" -> ((s, dir) =>
+    Face("q_split_assign", (s, dir) =>
       graft.operators.Sampling.splitAssign(
         Tables.documents(s, dir), col("doc_id"), splitFracs)
         .select(col("doc_id"), col("split"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // cumulative thresholds rendered from the SAME fractions via the same
+      // hexThreshold; the last split is the CASE's ELSE (catches the rest)
+      {
+      val cuts = splitFracs.map(_._2).scanLeft(0.0)(_ + _).tail.init
+        .map(graft.operators.Sampling.hexThreshold)
+      val whens = cuts.zip(splitFracs.map(_._1)).map { case (t, name) =>
+        s"WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$t' THEN '$name'"
+      }.mkString(" ")
+      s"""SELECT doc_id,
+         |  CASE $whens ELSE '${splitFracs.last._1}' END AS split
+         |FROM documents ORDER BY doc_id""".stripMargin
+    }),
 
     // one-scan per-language corpus report (volume / diversity / dup load)
-    "q_corpus_report" -> ((s, dir) =>
+    Face("q_corpus_report", (s, dir) =>
       TextAnalysis.corpusReport(Tables.documents(s, dir))
-        .orderBy(col("lang"))),
+        .orderBy(col("lang")),
+      // count_distinct over text (the Spark side hashes text to an 8-byte
+      // key first — identical modulo the documented birthday bound)
+      s"""SELECT lang, count(*) AS n_docs,
+         |  CAST(sum(len(toks)) AS BIGINT) AS total_tokens,
+         |  round(avg(CAST(len(toks) AS DOUBLE)), 6) AS avg_tokens,
+         |  count(DISTINCT source) AS n_sources,
+         |  count(*) - count(DISTINCT text) AS n_dup_docs
+         |FROM (SELECT lang, source, text, $toksSql AS toks FROM documents)
+         |GROUP BY lang ORDER BY lang""".stripMargin),
 
     // ---- document prep (chunk / pack / redact) --------------------------
-
-    "q_text_chunks" -> ((s, dir) =>
+    Face("q_text_chunks", (s, dir) =>
       TextPrep.chunkTokens(Tables.documents(s, dir), chunkSize = 32, overlap = 8)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
+        .orderBy(col("doc_id"), col("chunk_idx")),
+      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+         |n AS (SELECT doc_id, toks, CAST(len(toks) AS INT) AS n_toks FROM t),
+         |c AS (SELECT doc_id, n_toks, toks,
+         |        CAST(unnest(range(0, greatest(1,
+         |          CAST(ceil((n_toks - 32) / 24.0) AS INT) + 1))) AS INT) AS chunk_idx
+         |      FROM n)
+         |SELECT doc_id, chunk_idx,
+         |  array_to_string(toks[chunk_idx*24 + 1 : chunk_idx*24 + 32], ' ') AS chunk_text,
+         |  CAST(least(32, n_toks - chunk_idx*24) AS INT) AS n_chunk_tokens
+         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
 
-    "q_pack_budget" -> ((s, dir) =>
+    Face("q_pack_budget", (s, dir) =>
       TextPrep.packByBudget(Tables.documents(s, dir), col("lang"), budget = 1000)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""WITH d AS (SELECT doc_id, lang AS "group",
+         |             CAST(len($toksSql) AS INT) AS n_tokens
+         |           FROM documents)
+         |SELECT doc_id, "group",
+         |  CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY "group"
+         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |    0) / 1000.0) AS BIGINT) AS pack_id,
+         |  n_tokens
+         |FROM d ORDER BY doc_id""".stripMargin),
 
     // the packs RENDERED: per (group, pack) the concatenated training
     // sequence (ascending-id, eos-joined — identity gated as md5 +
@@ -5052,9 +6971,32 @@ object ExtQueries {
     // doc inside the sequence, computed in one aggregate-HOF prefix
     // sum) — the oracle re-derives the pack assignment, the boundary
     // arithmetic via a window cumsum, and the sequence via string_agg
-    "q_pack_render" -> ((s, dir) =>
+    Face("q_pack_render", (s, dir) =>
       TextPrep.renderPacks(Tables.documents(s, dir), col("lang"), budget = 1000)
-        .orderBy(col("group"), col("pack_id"))),
+        .orderBy(col("group"), col("pack_id")),
+      // pack assignment re-derived, boundaries via a window cumsum (a
+      // different formulation than the engine's aggregate-HOF prefix
+      // sum), sequence identity via ordered string_agg — eos length 7
+      s"""WITH d AS (SELECT doc_id, lang AS "group", text,
+         |             CAST(len($toksSql) AS INT) AS n_tokens
+         |           FROM documents),
+         |p AS (SELECT doc_id, "group", text,
+         |    CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY "group"
+         |      ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |      0) / 1000.0) AS BIGINT) AS pack_id
+         |  FROM d),
+         |b AS (SELECT "group", pack_id, doc_id, text,
+         |    sum(len(text)) OVER (PARTITION BY "group", pack_id
+         |      ORDER BY doc_id) +
+         |    (row_number() OVER (PARTITION BY "group", pack_id
+         |      ORDER BY doc_id) - 1) * 7 AS bend
+         |  FROM p)
+         |SELECT "group", pack_id, CAST(count(*) AS INT) AS n_docs,
+         |  CAST(sum(len(text)) + (count(*) - 1) * 7 AS BIGINT) AS seq_chars,
+         |  string_agg(CAST(bend AS VARCHAR), ',' ORDER BY doc_id) AS boundaries,
+         |  md5(string_agg(text, '<|eos|>' ORDER BY doc_id)) AS seq_md5
+         |FROM b GROUP BY "group", pack_id
+         |ORDER BY "group", pack_id""".stripMargin),
 
     // FILL-IN-THE-MIDDLE transform (the Bavarian et al. 2022 infilling
     // recipe): a deterministic md5-drawn half of the corpus rewritten
@@ -5062,28 +7004,63 @@ object ExtQueries {
     // character cut points, the rest verbatim — selection, both cuts,
     // and the rendered sequence all re-derived by the oracle from the
     // identical portable hex arithmetic
-    "q_fim_transform" -> ((s, dir) =>
+    Face("q_fim_transform", (s, dir) =>
       TextPrep.fimTransform(Tables.documents(s, dir))
         .select(col("doc_id"), col("fim"), md5(col("seq")).as("seq_md5"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the FIM selection draw, both cut points, and the PSM render all
+      // recomputed from the same md5-prefix integers (the
+      // q_negative_sample hex-cast pattern); non-selected and short docs
+      // hash as their verbatim text
+      """WITH d AS (SELECT doc_id, text,
+        |    CAST(length(text) AS BIGINT) AS L,
+        |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':fim'),
+        |      1, 8)) AS BIGINT) AS hf,
+        |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':a'),
+        |      1, 8)) AS BIGINT) AS ha,
+        |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':b'),
+        |      1, 8)) AS BIGINT) AS hb
+        |  FROM documents),
+        |c AS (SELECT doc_id, text, L, hb,
+        |    (hf % 100 < 50 AND L >= 2) AS fim, ha % (L + 1) AS a
+        |  FROM d),
+        |e AS (SELECT doc_id, text, L, fim, a, a + hb % (L - a + 1) AS b
+        |  FROM c)
+        |SELECT doc_id, fim,
+        |  md5(CASE WHEN fim THEN
+        |      '<|fim_pre|>' || substring(text, 1, CAST(a AS INT)) ||
+        |      '<|fim_suf|>' ||
+        |        substring(text, CAST(b + 1 AS INT), CAST(L - b AS INT)) ||
+        |      '<|fim_mid|>' ||
+        |        substring(text, CAST(a + 1 AS INT), CAST(b - a AS INT))
+        |    ELSE text END) AS seq_md5
+        |FROM e ORDER BY doc_id""".stripMargin).budget(1.5),
 
     // paragraph-level corpus dedup: fixtures carry no paragraph breaks, so
     // the query constructs a paragraph'd corpus from 3-token slices (the
     // small fixture vocabulary makes slices repeat across docs — real
     // cross-doc boilerplate), mirrored verbatim in the oracle SQL
-    "q_para_dedup" -> ((s, dir) => {
+    Face("q_para_dedup", (s, dir) => {
       val toks = split(col("text"), "\\s+")
       def para(i: Int) = concat_ws(" ", slice(toks, i, 3))
       TextPrep.dedupParagraphs(
         Tables.documents(s, dir).withColumn("text",
           concat_ws("\n\n", para(1), para(4), para(7), para(10))))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // first-occurrence survivor via a window rn=1 — a deliberately
+      // DIFFERENT formulation than the Spark side's arg-min + equi-join
+      s"""WITH $paraDedupCtes
+         |SELECT d.doc_id, coalesce(r.text_dedup, '') AS text_dedup,
+         |  CAST(coalesce(t.n_paras, 0) AS BIGINT) AS n_paras,
+         |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept
+         |FROM documents d LEFT JOIN t USING (doc_id) LEFT JOIN r USING (doc_id)
+         |ORDER BY d.doc_id""".stripMargin),
 
     // v2 end-to-end pipeline over the round-5 operators: paragraph dedup →
     // quality gate → per-language token quota, as ONE Catalyst plan (same
     // composability argument as q_prep_pipeline, new stages)
-    "q_prep_pipeline2" -> ((s, dir) => {
+    Face("q_prep_pipeline2", (s, dir) => {
       val toks = split(col("text"), "\\s+")
       def para(i: Int) = concat_ws(" ", slice(toks, i, 3))
       val pdocs = Tables.documents(s, dir).withColumn("text",
@@ -5097,31 +7074,77 @@ object ExtQueries {
         .select(col("doc_id"), col("lang"), col("text"))
       TextPrep.quotaTrim(gated, col("lang"), budget = 1500)
         .orderBy(col("doc_id"))
-    }),
+    },
+      // v2 pipeline: the same paragraph-dedup CTEs feed quality gating and
+      // the per-language token quota — one definition, two queries
+      s"""WITH $paraDedupCtes,
+         |dd AS (SELECT r.doc_id, d.lang, r.text_dedup AS text
+         |       FROM r JOIN documents d USING (doc_id) WHERE r.n_kept > 0),
+         |q AS (SELECT doc_id, lang, CAST(len(toks) AS INT) AS n_tokens,
+         |        $qualitySql AS quality
+         |      FROM (SELECT doc_id, lang, text, $toksSql AS toks FROM dd)),
+         |g AS (SELECT doc_id, lang AS "group", n_tokens FROM q
+         |      WHERE quality >= 0.3),
+         |w AS (SELECT doc_id, "group", n_tokens,
+         |        CAST(coalesce(sum(n_tokens) OVER (PARTITION BY "group"
+         |          ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |          0) AS BIGINT) AS cum_before
+         |      FROM g)
+         |SELECT doc_id, "group", n_tokens,
+         |       CAST(cum_before + n_tokens AS BIGINT) AS cum_tokens
+         |FROM w WHERE cum_before < 1500 ORDER BY doc_id""".stripMargin),
 
     // per-source token quota: cumulative-sum trim, oracle re-derives the
     // same window independently
-    "q_quota_trim" -> ((s, dir) =>
+    Face("q_quota_trim", (s, dir) =>
       TextPrep.quotaTrim(Tables.documents(s, dir), col("lang"), budget = 2000)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""WITH d AS (SELECT doc_id, lang AS "group",
+         |             CAST(len($toksSql) AS INT) AS n_tokens
+         |           FROM documents),
+         |w AS (SELECT doc_id, "group", n_tokens,
+         |        CAST(coalesce(sum(n_tokens) OVER (PARTITION BY "group"
+         |          ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |          0) AS BIGINT) AS cum_before
+         |      FROM d)
+         |SELECT doc_id, "group", n_tokens,
+         |       CAST(cum_before + n_tokens AS BIGINT) AS cum_tokens
+         |FROM w WHERE cum_before < 2000 ORDER BY doc_id""".stripMargin),
 
     // deterministic corpus permutation into training shards — md5-keyed so
     // the oracle recomputes the exact (shard, pos) of every row
-    "q_train_shards" -> ((s, dir) =>
+    Face("q_train_shards", (s, dir) =>
       TextPrep.trainingShards(Tables.documents(s, dir), shards = 8)
-        .orderBy(col("shard"), col("pos"))),
+        .orderBy(col("shard"), col("pos")),
+      """WITH h AS (SELECT doc_id,
+        |             substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS hex
+        |           FROM documents),
+        |s AS (SELECT doc_id, hex,
+        |        CAST(CAST(concat('0x', hex) AS BIGINT) % 8 AS INT) AS shard
+        |      FROM h)
+        |SELECT doc_id, shard,
+        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY hex, doc_id)
+        |       AS INT) AS pos
+        |FROM s ORDER BY shard, pos""".stripMargin),
 
     // incremental ingestion: dedup a new batch (doc_id%10>=7) against the
     // hash index of the standing corpus (doc_id%10<7) — corpus text is
     // never re-read, only its 8-byte key hashes
-    "q_dedup_incremental" -> ((s, dir) => {
+    Face("q_dedup_incremental", (s, dir) => {
       val docs = Tables.documents(s, dir)
       Dedup.incrementalExact(
         docs.filter(col("doc_id") % 10 >= 7),
         Dedup.hashIndex(docs.filter(col("doc_id") % 10 < 7)))
         .select(col("doc_id"), col("n_dups"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH delta AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 >= 7),
+        |grp AS (SELECT text, min(doc_id) AS doc_id, count(*) AS n_dups
+        |        FROM delta GROUP BY text)
+        |SELECT doc_id, n_dups FROM grp g
+        |WHERE NOT EXISTS (SELECT 1 FROM documents c
+        |                  WHERE c.doc_id % 10 < 7 AND c.text = g.text)
+        |ORDER BY doc_id""".stripMargin),
 
     // the EXACT streamed-ingest path under the oracle gate: a 3-batch
     // checkpointed foreachBatch replay (dedupIngest over a MemoryStream)
@@ -5131,10 +7154,14 @@ object ExtQueries {
     // incremental step as a batch computation; this checks the streaming
     // machinery itself: batch keys, durable index accumulation, and the
     // cross-batch exclusion over three real micro-batches.
-    "q_ingest_exact_replay" -> ((s, dir) =>
+    Face("q_ingest_exact_replay", (s, dir) =>
       s.read.parquet(s"${ingestReplayFixture(s, dir)}/corpus")
         .select(col("doc_id"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT doc_id FROM (
+        |  SELECT doc_id, row_number() OVER (
+        |    PARTITION BY text ORDER BY doc_id % 3, doc_id) AS rn
+        |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin),
 
     // the STREAMED near-dup maintenance path (the r15 posting-path fold)
     // under the staged-pair gate: every pair the 3-batch checkpointed
@@ -5142,23 +7169,25 @@ object ExtQueries {
     // re-verifies its Jaccard from raw text + re-applies the threshold
     // (the q_dedup_minhash epistemics; banding membership stays
     // in-engine, its recall gated by q_dedup_minhash_recall)
-    "q_minhash_ingest_replay" -> ((s, dir) => {
+    Face("q_minhash_ingest_replay", (s, dir) => {
       val root = ingestReplayFixture(s, dir)
       val path = oracleStagePath(dir, "q_minhash_ingest_replay")
       s.read.parquet(s"$root/pairs")
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
         .write.mode("overwrite").parquet(path)
       s.read.parquet(path).orderBy(col("id_a"), col("id_b"))
-    }),
+    },
+      pairJaccardOracleSql(s"$stagedRoot/q_minhash_ingest_replay", 0.5)),
 
     // the STREAMED df-index maintenance path under the oracle gate: the
     // same 3-batch replay feeds dfIngest, and the standing statistic read
     // back from the accumulated batch partitions must equal DuckDB's df
     // over the whole corpus in one shot (same oracle SQL as q_text_df_inc)
-    "q_df_ingest_replay" -> ((s, dir) =>
+    Face("q_df_ingest_replay", (s, dir) =>
       graft.streaming.IngestStreams.readDfIndex(s,
           s"${ingestReplayFixture(s, dir)}/df_index")
-        .orderBy(col("term"))),
+        .orderBy(col("term")),
+      dfOracleSql),
 
     // the STREAMED per-domain ledger under the oracle gate: the same
     // 3-batch checkpointed replay feeds domainIngest (canonicalized
@@ -5166,10 +7195,14 @@ object ExtQueries {
     // domain-keyed sums read back from the accumulated batch partitions
     // must equal DuckDB's whole-corpus ledger in one shot — the additive-
     // statistic contract, same oracle SQL as q_url_domains
-    "q_url_ingest_replay" -> ((s, dir) =>
+    Face("q_url_ingest_replay", (s, dir) =>
       graft.streaming.IngestStreams.readDomainStats(s,
           s"${ingestReplayFixture(s, dir)}/domain_index")
-        .orderBy(col("domain"))),
+        .orderBy(col("domain")),
+      s"""SELECT lower(source) || '.example.com' AS domain,
+         |  count(*) AS n_docs,
+         |  CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
+         |FROM documents GROUP BY 1 ORDER BY domain""".stripMargin),
 
     // the STREAMED per-pattern hit ledger under the oracle gate: the
     // same 3-batch checkpointed replay feeds keywordIngest (one
@@ -5177,10 +7210,22 @@ object ExtQueries {
     // must equal DuckDB's whole-corpus recount in one shot — the
     // additive-statistic contract; never-hit patterns have no ledger
     // rows (the batch face q_keyword_hits carries the explicit zeros)
-    "q_keyword_ingest_replay" -> ((s, dir) =>
+    Face("q_keyword_ingest_replay", (s, dir) =>
       graft.streaming.IngestStreams.readKeywordStats(s,
           s"${ingestReplayFixture(s, dir)}/keyword_index")
-        .orderBy(col("pattern"))),
+        .orderBy(col("pattern")),
+      {
+      val values = keywordPatterns.map(p => s"('$p')").mkString(", ")
+      s"""WITH pats(p) AS (VALUES $values),
+         |h AS (SELECT d.doc_id, pats.p,
+         |    len(list_filter(range(1, len(d.text) - len(pats.p) + 2),
+         |      i -> substr(d.text, CAST(i AS INT), len(pats.p)) = pats.p)) AS n
+         |  FROM documents d CROSS JOIN pats)
+         |SELECT p AS pattern, CAST(sum(n) AS BIGINT) AS n_hits,
+         |  CAST(count(*) FILTER (WHERE n > 0) AS BIGINT) AS n_docs
+         |FROM h GROUP BY p HAVING sum(n) > 0
+         |ORDER BY pattern""".stripMargin
+    }),
 
     // the STREAMING funnel under the oracle gate: the scrambled 3-batch
     // checkpointed replay (funnelReplayFixture) leaves watermark-sealed
@@ -5192,7 +7237,7 @@ object ExtQueries {
     // the processor-API/state-store rows (SURVEY §2.9): the stateful
     // streaming machinery itself, not a batch re-derivation, is what the
     // hard gate checks.
-    "q_funnel_stream_replay" -> ((s, dir) => {
+    Face("q_funnel_stream_replay", (s, dir) => {
       val root = funnelReplayFixture(s, dir)
       val aggCols = funnelSteps.indices.map(i => max(col(s"t$i")).as(s"t$i"))
       val fin = s.read.parquet(s"$root/updates")
@@ -5208,35 +7253,56 @@ object ExtQueries {
         .select(explode(rows).as("__e"))
         .select(col("__e.stage"), col("__e.step"), col("__e.n_users"))
         .orderBy(col("stage"))
-    }),
+    },
+      funnelOracleSql),
 
     // the stream-stream interval join under the oracle gate (inner face):
     // every (view, click) pair the checkpointed 2-stream scrambled replay
     // emitted must equal DuckDB's batch range join restricted to the
     // JoinWindows interval — the KStream-KStream join family's
     // end-to-end check (SURVEY §2.5 extension row)
-    "q_interval_join_replay" -> ((s, dir) =>
+    Face("q_interval_join_replay", (s, dir) =>
       s.read.parquet(s"${intervalReplayFixtures("inner")(s, dir)}/inner")
         .filter(col("l_user") >= 0)
         .select(col("l_user"), unix_micros(col("l_ts")).as("l_ts_us"),
           col("r_user"), unix_micros(col("r_ts")).as("r_ts_us"))
-        .orderBy(col("l_user"), col("l_ts_us"), col("r_ts_us"))),
+        .orderBy(col("l_user"), col("l_ts_us"), col("r_ts_us")),
+      // batch range join over the same events, restricted to the
+      // JoinWindows interval — what the streamed symmetric hash join's
+      // append output must equal row-for-row
+      """SELECT l.user_id AS l_user, epoch_us(l.ts) AS l_ts_us,
+        |       r.user_id AS r_user, epoch_us(r.ts) AS r_ts_us
+        |FROM events l JOIN events r
+        |  ON l.user_id = r.user_id
+        | AND r.ts >= l.ts - INTERVAL 10 MINUTE
+        | AND r.ts <= l.ts + INTERVAL 25 MINUTE
+        |WHERE l.event_type = 'view' AND r.event_type = 'click'
+        |ORDER BY l_user, l_ts_us, r_ts_us""".stripMargin),
 
     // left-outer face: matched rows plus the watermark-flushed null-padded
     // finals; nulls canonicalized to −1 on BOTH engines (the driver
     // comparator's pandas path must never meet a nullable int column)
-    "q_interval_join_replay_outer" -> ((s, dir) =>
+    Face("q_interval_join_replay_outer", (s, dir) =>
       s.read.parquet(s"${intervalReplayFixtures("left_outer")(s, dir)}/left_outer")
         .filter(col("l_user") >= 0)
         .select(col("l_user"), unix_micros(col("l_ts")).as("l_ts_us"),
           coalesce(col("r_user"), lit(-1L)).as("r_user"),
           coalesce(unix_micros(col("r_ts")), lit(-1L)).as("r_ts_us"))
-        .orderBy(col("l_user"), col("l_ts_us"), col("r_ts_us"))),
+        .orderBy(col("l_user"), col("l_ts_us"), col("r_ts_us")),
+      """SELECT l.user_id AS l_user, epoch_us(l.ts) AS l_ts_us,
+        |       coalesce(r.user_id, -1) AS r_user,
+        |       coalesce(epoch_us(r.ts), -1) AS r_ts_us
+        |FROM (SELECT user_id, ts FROM events WHERE event_type = 'view') l
+        |LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') r
+        |  ON l.user_id = r.user_id
+        | AND r.ts >= l.ts - INTERVAL 10 MINUTE
+        | AND r.ts <= l.ts + INTERVAL 25 MINUTE
+        |ORDER BY l_user, l_ts_us, r_user, r_ts_us""".stripMargin),
 
     // full-outer face (the KS JoinWindows outerJoin): matched rows plus
     // BOTH sides' watermark-flushed null-padded finals — sentinel keys
     // are negative on either side, so one coalesce filter drops them
-    "q_interval_join_replay_full" -> ((s, dir) =>
+    Face("q_interval_join_replay_full", (s, dir) =>
       s.read.parquet(s"${intervalReplayFixtures("full_outer")(s, dir)}/full_outer")
         .filter(coalesce(col("l_user"), lit(0L)) >= 0 &&
           coalesce(col("r_user"), lit(0L)) >= 0)
@@ -5244,23 +7310,24 @@ object ExtQueries {
           coalesce(unix_micros(col("l_ts")), lit(-1L)).as("l_ts_us"),
           coalesce(col("r_user"), lit(-1L)).as("r_user"),
           coalesce(unix_micros(col("r_ts")), lit(-1L)).as("r_ts_us"))
-        .orderBy(col("l_user"), col("l_ts_us"), col("r_user"), col("r_ts_us"))),
+        .orderBy(col("l_user"), col("l_ts_us"), col("r_user"), col("r_ts_us")),
+      """SELECT coalesce(l.user_id, -1) AS l_user,
+        |       coalesce(epoch_us(l.ts), -1) AS l_ts_us,
+        |       coalesce(r.user_id, -1) AS r_user,
+        |       coalesce(epoch_us(r.ts), -1) AS r_ts_us
+        |FROM (SELECT user_id, ts FROM events WHERE event_type = 'view') l
+        |FULL JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') r
+        |  ON l.user_id = r.user_id
+        | AND r.ts >= l.ts - INTERVAL 10 MINUTE
+        | AND r.ts <= l.ts + INTERVAL 25 MINUTE
+        |ORDER BY l_user, l_ts_us, r_user, r_ts_us""".stripMargin),
 
-    // the reference's CORE aggregation (A1/M3 daily average) under the
-    // oracle gate as a streamed changelog: final update per (user, day)
-    // from the checkpointed scrambled replay must be BIT-identical to the
-    // one-shot batch answer — the decimal-exact sum makes cross-batch
-    // state merges order-independent, so this face proves the streaming
-    // aggregation machinery, not just the operator algebra
-    // the reference's CORE J1 enrichment join, STREAMED, under the
-    // oracle gate: rows landed across the 3 checkpointed AvailableNow
-    // restarts must equal the one-shot batch join (q_j1_enrich's oracle)
     // streamed HLL sketch-state maintenance under the oracle gate: the
     // final update per type (max batch_id) from the 3-batch scrambled
     // checkpointed replay must estimate the exact cardinality (computed
     // batch-side here, recomputed independently by the oracle) within
     // the rsd contract — cross-batch sketch-state merge is what's gated
-    "q_approx_distinct_stream_replay" -> ((s, dir) => {
+    Face("q_approx_distinct_stream_replay", (s, dir) => {
       val fin = s.read.parquet(s"${hllReplayFixture(s, dir)}/updates")
         .groupBy(col("event_type"))
         .agg(max_by(col("approx_users"), col("batch_id")).as("approx_users"))
@@ -5273,7 +7340,15 @@ object ExtQueries {
           (abs(col("approx_users") - col("exact_users")).cast("double") <=
             col("exact_users").cast("double") * 0.05).as("approx_ok"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // exact cardinalities recomputed independently; the contract bit is
+      // asserted literally (rsd=0.01 sketch vs a 5% bound — wide margin,
+      // and a wrong cross-batch state merge flips it)
+      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
+        |true AS approx_ok
+        |FROM events
+        |WHERE event_type IS NOT NULL AND user_id IS NOT NULL
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // streamed QUANTILE sketch-state maintenance under the oracle gate
     // (the percentile twin of q_approx_distinct_stream_replay): the
@@ -5282,7 +7357,7 @@ object ExtQueries {
     // median (rank counts recomputed engine-side, exact median + the
     // boolean re-derived by the oracle) — the cross-batch
     // QuantileSummaries state merge is what's gated
-    "q_percentile_stream_replay" -> ((s, dir) => {
+    Face("q_percentile_stream_replay", (s, dir) => {
       // 5× the nominal 1/accuracy rank band: percentile_approx's bound
       // is stated for a SINGLE aggregation, and this face merges
       // compressed QuantileSummaries state across 3 micro-batches where
@@ -5308,7 +7383,15 @@ object ExtQueries {
             col("at_or_below").cast("double") >= (lit(0.5) - eps) * col("n") - 1.0)
             .as("p50_ok"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // the percentile twin: exact n + exact median re-derived; the
+      // sketch's rank-band boolean must come out true on the engine side
+      """SELECT event_type, count(value) AS n,
+        |round(quantile_cont(value, 0.5), 6) AS p50_exact,
+        |true AS p50_ok
+        |FROM events
+        |WHERE event_type IS NOT NULL AND value IS NOT NULL
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // the reference's J2 table-table LEFT join, STREAMED, under the
     // oracle gate: the final snapshot of the maintained two-sided state
@@ -5316,64 +7399,79 @@ object ExtQueries {
     // checkpointed batches with stale dim versions planted across batch
     // boundaries) must equal the one-shot batch join — q_j2_left's
     // oracle verbatim
-    "q_j2_stream_replay" -> ((s, dir) =>
+    Face("q_j2_stream_replay", (s, dir) =>
       s.read.parquet(s"${j2ReplayFixture(s, dir)}/joined")
         .groupBy(col("key"))
         .agg(max_by(struct(col("name"), col("n_events")),
           col("batch_id")).as("f"))
         .select(col("key").as("c_custkey"), col("f.name").as("c_name"),
           col("f.n_events").as("n_events"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      CoreQueries.enrichLeftOracleSql),
 
-    "q_enrich_stream_replay" -> ((s, dir) =>
+    // the reference's CORE J1 enrichment join, STREAMED, under the
+    // oracle gate: rows landed across the 3 checkpointed AvailableNow
+    // restarts must equal the one-shot batch join (q_j1_enrich's oracle)
+    Face("q_enrich_stream_replay", (s, dir) =>
       s.read.parquet(s"${enrichReplayFixture(s, dir)}/joined")
         .select(col("c_custkey"), col("c_name"), col("n_days"), col("history"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      CoreQueries.enrichOracleSql),
 
     // as-of under streaming ingest: the union of 3 scrambled
     // checkpointed per-batch merge_asof runs against the standing
     // orders table must equal the one-shot batch join (q_asof_join's
     // oracle verbatim — static-right as-of is per-left-row)
-    "q_asof_stream_replay" -> ((s, dir) =>
+    Face("q_asof_stream_replay", (s, dir) =>
       s.read.parquet(s"${asofReplayFixture(s, dir)}/enriched")
         .select(col("event_id"), col("user_id"), col("o_orderkey"),
           col("o_totalprice"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      CoreQueries.asofOracleSql),
 
     // SCD2 under streaming state maintenance: the final snapshot (max
     // batch_id) of the 3-batch scrambled checkpointed replay — stale
     // versions planted across batch boundaries — must equal q_scd2's
     // batch-window oracle verbatim
-    "q_scd2_stream_replay" -> ((s, dir) => {
+    Face("q_scd2_stream_replay", (s, dir) => {
       val t = s.read.parquet(s"${scd2ReplayFixture(s, dir)}/scd2")
       t.join(t.groupBy().agg(max(col("batch_id")).as("batch_id")),
           Seq("batch_id"))
         .select(col("key").as("user_id"), col("event_type"), col("value"),
           col("valid_from"), col("valid_to"), col("is_current"))
         .orderBy(col("user_id"), col("valid_from"))
-    }),
+    },
+      CoreQueries.scd2OracleSql),
 
     // the HOPPING-window streaming surface under the oracle gate: final
     // per-(window, type) state of the scrambled checkpointed replay
     // (max batch_id emission), its decimal sum divided exactly as the
     // batch face does — must equal q_hopping_window's oracle
-    "q_hopping_stream_replay" -> ((s, dir) =>
+    Face("q_hopping_stream_replay", (s, dir) =>
       s.read.parquet(s"${hoppingReplayFixture(s, dir)}/updates")
         .groupBy(col("w_start_us"), col("event_type"))
         .agg(max_by(struct(col("dec_sum"), col("cnt"), col("n")),
           col("batch_id")).as("f"))
         .select(col("w_start_us"), col("event_type"), col("f.n").as("n"),
           (col("f.dec_sum").cast("double") / col("f.cnt")).as("avg_value"))
-        .orderBy(col("w_start_us"), col("event_type"))),
+        .orderBy(col("w_start_us"), col("event_type")),
+      CoreQueries.hoppingOracleSql),
 
-    "q_daily_avg_stream_replay" -> ((s, dir) =>
+    // the reference's CORE aggregation (A1/M3 daily average) under the
+    // oracle gate as a streamed changelog: final update per (user, day)
+    // from the checkpointed scrambled replay must be BIT-identical to the
+    // one-shot batch answer — the decimal-exact sum makes cross-batch
+    // state merges order-independent, so this face proves the streaming
+    // aggregation machinery, not just the operator algebra
+    Face("q_daily_avg_stream_replay", (s, dir) =>
       s.read.parquet(s"${dailyAvgReplayFixture(s, dir)}/updates")
         .groupBy(col("user_id"), col("day"))
         .agg(max_by(struct(col("avg_tmp_f"), col("avg_tmp_c")),
           col("batch_id")).as("f"))
         .select(col("user_id"), col("day"),
           col("f.avg_tmp_f").as("avg_f"), col("f.avg_tmp_c").as("avg_c"))
-        .orderBy(col("user_id"), col("day"))),
+        .orderBy(col("user_id"), col("day")),
+      CoreQueries.dailyAvgOracleSql),
 
     // the KTable-materialization surface (C1 toTable/latest-per-key)
     // under the oracle gate: the update-mode changelog of the
@@ -5381,7 +7479,7 @@ object ExtQueries {
     // (max batch_id — one emission per touched key per micro-batch),
     // must equal the batch window oracle exactly; cross-batch ordinal
     // regressions make the no-regression state rule the thing checked
-    "q_latest_stream_replay" -> ((s, dir) =>
+    Face("q_latest_stream_replay", (s, dir) =>
       s.read.parquet(s"${latestReplayFixture(s, dir)}/updates")
         .groupBy(col("user_id"))
         .agg(max_by(
@@ -5389,16 +7487,20 @@ object ExtQueries {
           col("batch_id")).as("f"))
         .select(col("user_id"), col("f.event_id"), col("f.event_type"),
           col("f.value"))
-        .orderBy(col("user_id"))),
+        .orderBy(col("user_id")),
+      CoreQueries.latestOracleSql),
 
     // STREAMING dedup under the oracle gate: the checkpointed 3-batch
     // scrambled replay of dropDuplicatesWithinWatermark must land on
     // exactly one row per distinct (user_id, event_type) — the cross-
     // batch dedup-state contract, gated against a trivial-by-design
     // DISTINCT oracle (the point is the state machinery, not the SQL)
-    "q_dedup_stream_replay" -> ((s, dir) =>
+    Face("q_dedup_stream_replay", (s, dir) =>
       s.read.parquet(s"${dedupStreamReplayFixture(s, dir)}/dedup")
-        .orderBy(col("user_id"), col("event_type"))),
+        .orderBy(col("user_id"), col("event_type")),
+      """SELECT DISTINCT user_id, event_type FROM events
+        |WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL
+        |ORDER BY user_id, event_type""".stripMargin),
 
     // STREAMING sessionization under the oracle gate: the checkpointed
     // 3-batch scrambled replay's sealed sessions, summarized per user
@@ -5407,18 +7509,19 @@ object ExtQueries {
     // state merge must equal the batch answer end-to-end (the
     // session-window extension row, SURVEY §2.9; streaming ≡ batch is
     // additionally property-fuzzed in PropertiesSpec)
-    "q_sessionize_stream_replay" -> ((s, dir) =>
+    Face("q_sessionize_stream_replay", (s, dir) =>
       s.read.parquet(s"${sessionReplayFixture(s, dir)}/sessions")
         .filter(col("user_id") >= 0)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_sessions"),
           max(col("n_events")).as("max_session_events"),
           sum(col("n_events")).as("n_events_total"))
-        .orderBy(col("user_id"))),
+        .orderBy(col("user_id")),
+      CoreQueries.sessionizeOracleSql),
 
     // synthesize deterministic PII into each doc so the redaction path is
     // exercised (the fixture corpus itself is clean)
-    "q_pii_redact" -> ((s, dir) =>
+    Face("q_pii_redact", (s, dir) =>
       TextPrep.redactPii(
         Tables.documents(s, dir).withColumn("text", concat(
           col("text"), lit(" contact user"), col("doc_id").cast("string"),
@@ -5426,7 +7529,16 @@ object ExtQueries {
           lit(".7 tel 555-123-4567"))))
         .select(col("doc_id"), col("n_email"), col("n_ipv4"), col("n_phone"),
           col("text_clean"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""WITH aug AS (SELECT doc_id,
+         |    text || ' contact user' || CAST(doc_id AS VARCHAR) ||
+         |    '@example.com or 10.0.' || CAST(doc_id % 256 AS VARCHAR) ||
+         |    '.7 tel 555-123-4567' AS text
+         |  FROM documents)
+         |SELECT doc_id,
+         |$piiCountSql,
+         |$piiCleanSql AS text_clean
+         |FROM aug ORDER BY doc_id""".stripMargin),
 
     // ---- embedding prep -------------------------------------------------
 
@@ -5434,41 +7546,97 @@ object ExtQueries {
     // rule at CoreQueries: list aggregates never cross the driver comparator
     // as raw arrays) — `round(x·1e6) AS BIGINT` sidesteps double→string
     // formatting divergence between engines entirely
-    "q_embed_normalize" -> ((s, dir) =>
+    Face("q_embed_normalize", (s, dir) =>
       EmbeddingPrep.l2Normalize(Tables.embeddings(s, dir))
         .select(col("vec_id"),
           concat_ws("|", transform(col("nvec"),
             x => round(x * 1000000d).cast("bigint").cast("string"))).as("nvec"))
-        .orderBy(col("vec_id"))),
+        .orderBy(col("vec_id")),
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM v)
+        |SELECT vec_id,
+        |  array_to_string(list_transform(v, x -> CAST(round(
+        |    (CASE WHEN nrm = 0 THEN x ELSE x / nrm END) * 1000000) AS BIGINT)), '|')
+        |    AS nvec
+        |FROM n ORDER BY vec_id""".stripMargin),
 
-    "q_embed_quantize" -> ((s, dir) =>
+    Face("q_embed_quantize", (s, dir) =>
       EmbeddingPrep.quantizeInt8(Tables.embeddings(s, dir))
         .select(col("vec_id"),
           concat_ws("|", transform(col("qvec"),
             q => q.cast("string"))).as("qvec"),
           round(col("scale"), 6).as("scale"))
-        .orderBy(col("vec_id"))),
+        .orderBy(col("vec_id")),
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |s AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS scale FROM v)
+        |SELECT vec_id,
+        |  array_to_string(
+        |    CASE WHEN scale = 0 THEN list_transform(v, x -> CAST(0 AS TINYINT))
+        |         ELSE list_transform(v, x -> CAST(round(x * 127.0 / scale) AS TINYINT))
+        |    END, '|') AS qvec,
+        |  round(scale, 6) AS scale
+        |FROM s ORDER BY vec_id""".stripMargin),
 
     // matryoshka truncation (keep-first-16 + renormalize): the MRL
     // storage/latency dial, gated with the same scaled-integer rule as
     // q_embed_normalize (both engines slice, dot, and divide the same
     // doubles in the same order)
-    "q_embed_truncate" -> ((s, dir) =>
+    Face("q_embed_truncate", (s, dir) =>
       EmbeddingPrep.truncate(Tables.embeddings(s, dir), dim = 16)
         .select(col("vec_id"),
           concat_ws("|", transform(col("tvec"),
             x => round(x * 1000000d).cast("bigint").cast("string"))).as("tvec"))
-        .orderBy(col("vec_id"))),
+        .orderBy(col("vec_id")),
+      // the same normalize derivation over the first-16 slice (1-based
+      // inclusive list_slice == Spark's slice(v, 1, 16))
+      """WITH v AS (SELECT vec_id,
+        |    list_slice(CAST(embedding AS DOUBLE[]), 1, 16) AS v FROM embeddings),
+        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM v)
+        |SELECT vec_id,
+        |  array_to_string(list_transform(v, x -> CAST(round(
+        |    (CASE WHEN nrm = 0 THEN x ELSE x / nrm END) * 1000000) AS BIGINT)), '|')
+        |    AS tvec
+        |FROM n ORDER BY vec_id""".stripMargin),
 
     // hard-negative mining (contrastive-training negatives: nearest
     // WRONG-label vectors) — the knnGraph candidate plan with the label
     // exclusion riding the cell join; staged-quantizer oracle re-derives
     // assignment, probing, the label filter, and the top-k
-    "q_hard_negatives" -> ((s, dir) =>
+    Face("q_hard_negatives", (s, dir) =>
       Similarity.hardNegatives(Tables.embeddings(s, dir), k = 5,
         nlist = 8, nprobe = 3,
         centroidsSink = Some(oracleStagePath(dir, "q_hard_negatives")))
-        .orderBy(col("query_id"), col("rank"))),
+        .orderBy(col("query_id"), col("rank")),
+      // hard negatives from the staged quantizer: the q_knn_graph
+      // derivation (assignment = argmin score, nprobe=3 probing, cell
+      // join, per-query top-5) plus the wrong-label predicate on the
+      // scored candidates — exactly where the engine applies it
+      s"""WITH cents AS (SELECT cell, c FROM read_parquet('$stagedRoot/q_hard_negatives/*.parquet')),
+         |v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |sc AS (SELECT vec_id, cell,
+         |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
+         |       FROM v, cents),
+         |assign AS (SELECT vec_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM sc) WHERE rn = 1),
+         |probe AS (SELECT vec_id AS query_id, cell FROM (
+         |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
+         |      ORDER BY s, cell) AS rn FROM sc) WHERE rn <= 3),
+         |scored AS (
+         |  SELECT p.query_id, a.vec_id,
+         |    round(list_dot_product(q.v, cv.v) /
+         |          (sqrt(list_dot_product(q.v, q.v)) *
+         |           sqrt(list_dot_product(cv.v, cv.v))), 6) AS cos
+         |  FROM probe p JOIN assign a USING (cell)
+         |  JOIN v q ON q.vec_id = p.query_id
+         |  JOIN v cv ON cv.vec_id = a.vec_id
+         |  WHERE cv.label <> q.label)
+         |SELECT query_id, rank, vec_id, cos FROM (
+         |  SELECT query_id, vec_id, cos,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY cos DESC, vec_id) AS INT) AS rank
+         |  FROM scored) t
+         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
 
     // ---- end-to-end corpus prep -----------------------------------------
 
@@ -5478,7 +7646,7 @@ object ExtQueries {
     // stage boundaries (the composability argument for building prep on a
     // query engine instead of chained batch jobs). All stages are
     // deterministic, so the whole pipeline is oracle-checked.
-    "q_prep_pipeline" -> ((s, dir) => {
+    Face("q_prep_pipeline", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val survivors = docs.join(
         Dedup.exact(docs, "text", "doc_id").select(col("doc_id")),
@@ -5498,29 +7666,88 @@ object ExtQueries {
         .agg(count(lit(1)).as("n_chunks"),
           sum(col("n_tokens")).as("pack_tokens"))
         .orderBy(col("group"), col("pack_id"))
-    }),
+    },
+      s"""WITH surv AS (
+         |  SELECT d.* FROM documents d
+         |  JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text) s
+         |    USING (doc_id)),
+         |gated AS (
+         |  SELECT doc_id, lang, text FROM (
+         |    SELECT doc_id, lang, text, $qualitySql AS quality
+         |    FROM (SELECT doc_id, lang, text, $toksSql AS toks FROM surv))
+         |  WHERE quality >= 0.5),
+         |t AS (SELECT doc_id, lang, $toksSql AS toks FROM gated),
+         |n AS (SELECT doc_id, lang, toks, CAST(len(toks) AS INT) AS n_toks FROM t),
+         |c AS (SELECT doc_id, lang, n_toks, toks,
+         |        CAST(unnest(range(0, greatest(1,
+         |          CAST(ceil((n_toks - 32) / 32.0) AS INT) + 1))) AS INT) AS chunk_idx
+         |      FROM n),
+         |chunks AS (
+         |  SELECT doc_id * 1000 + chunk_idx AS chunk_id, lang,
+         |    array_to_string(toks[chunk_idx*32 + 1 : chunk_idx*32 + 32], ' ') AS text
+         |  FROM c),
+         |ct AS (SELECT chunk_id, lang,
+         |         CAST(len(string_split_regex(lower(text), '\\s+')) AS INT) AS n_tokens
+         |       FROM chunks),
+         |packed AS (
+         |  SELECT lang AS "group", chunk_id, n_tokens,
+         |    CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY lang
+         |      ORDER BY chunk_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |      0) / 256.0) AS BIGINT) AS pack_id
+         |  FROM ct)
+         |SELECT "group", pack_id, count(*) AS n_chunks,
+         |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
+         |FROM packed GROUP BY "group", pack_id
+         |ORDER BY "group", pack_id""".stripMargin),
 
     // ---- profiling ------------------------------------------------------
 
-    // one-pass column profile (pipeline observability): exact distincts so
-    // the DuckDB oracle hash-matches
     // equi-width distribution audit: every bin emitted (gaps included),
     // fixed-shape IEEE bin arithmetic re-run verbatim by the oracle
-    "q_histogram" -> ((s, dir) =>
+    Face("q_histogram", (s, dir) =>
       Profile.histogram(Tables.lineitem(s, dir), col("l_quantity"),
         lo = 1.0, hi = 50.0, buckets = 10)
-        .orderBy(col("bucket"))),
+        .orderBy(col("bucket")),
+      """WITH x AS (SELECT CAST(l_quantity AS DOUBLE) AS v FROM lineitem
+        |           WHERE CAST(l_quantity AS DOUBLE) >= 1.0
+        |             AND CAST(l_quantity AS DOUBLE) <= 50.0),
+        |b AS (SELECT CAST(least(9, floor((v - 1.0) * 10 / (50.0 - 1.0)))
+        |             AS BIGINT) AS bucket FROM x),
+        |c AS (SELECT bucket, count(*) AS n FROM b GROUP BY bucket),
+        |g AS (SELECT unnest(generate_series(0, 9)) AS bucket)
+        |SELECT CAST(g.bucket AS BIGINT) AS bucket,
+        |  1.0 + g.bucket * (50.0 - 1.0) / 10 AS lo_edge,
+        |  1.0 + (g.bucket + 1) * (50.0 - 1.0) / 10 AS hi_edge,
+        |  CAST(coalesce(c.n, 0) AS BIGINT) AS n
+        |FROM g LEFT JOIN c ON g.bucket = c.bucket
+        |ORDER BY bucket""".stripMargin),
 
-    "q_profile" -> ((s, dir) =>
+    // one-pass column profile (pipeline observability): exact distincts so
+    // the DuckDB oracle hash-matches
+    Face("q_profile", (s, dir) =>
       Profile.profile(Tables.events(s, dir), Seq("user_id", "value", "event_type"))
-        .orderBy(col("column"))),
+        .orderBy(col("column")),
+      {
+      def colSql(c: String, isNum: Boolean, isStr: Boolean) =
+        s"""SELECT '$c' AS "column", count($c) AS n_nonnull,
+           |count(*) - count($c) AS n_null, count(DISTINCT $c) AS n_distinct,
+           |${if (isNum) s"CAST(min($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"} AS min_num,
+           |${if (isNum) s"CAST(max($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"} AS max_num,
+           |${if (isStr) s"min($c)" else "CAST(NULL AS VARCHAR)"} AS min_str,
+           |${if (isStr) s"max($c)" else "CAST(NULL AS VARCHAR)"} AS max_str
+           |FROM events""".stripMargin
+      Seq(colSql("user_id", isNum = true, isStr = false),
+        colSql("value", isNum = true, isStr = false),
+        colSql("event_type", isNum = false, isStr = true))
+        .mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")
+    }),
 
     // exact winsorization: clamp o_totalprice into the true [p1, p99]
     // order statistics (integer ppm rank rule, two-phase distributed
     // rank — never a single-task window), then the per-priority
     // decimal-exact mean of the clamped column; the oracle re-derives
     // the rank rule, both cutoffs, and the clamp independently
-    "q_winsorize" -> ((s, dir) =>
+    Face("q_winsorize", (s, dir) =>
       Profile.winsorize(Tables.orders(s, dir), col("o_totalprice"),
         ppmLow = 10000L, ppmHigh = 990000L)
         .groupBy(col("o_orderpriority"))
@@ -5528,56 +7755,113 @@ object ExtQueries {
           (sum(col("winsorized")
             .cast(org.apache.spark.sql.types.DecimalType(18, 6))).cast("double") /
             count(lit(1))).as("avg_w"))
-        .orderBy(col("o_orderpriority"))),
+        .orderBy(col("o_orderpriority")),
+      // the exact winsorize rule re-derived: rank k = max(1,
+      // (ppm·n + 999999) // 1e6) over ascending o_totalprice (any tie
+      // order — the k-th VALUE of a multiset is unique), clamp, then the
+      // decimal-exact per-priority mean
+      """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM orders
+        |            WHERE o_totalprice IS NOT NULL),
+        |r AS (SELECT o_totalprice,
+        |        row_number() OVER (ORDER BY o_totalprice) AS rnk
+        |      FROM orders WHERE o_totalprice IS NOT NULL),
+        |ks AS (SELECT greatest(1, (10000 * n + 999999) // 1000000) AS klo,
+        |              greatest(1, (990000 * n + 999999) // 1000000) AS khi
+        |       FROM nn),
+        |lo AS (SELECT o_totalprice AS v FROM r, ks WHERE rnk = klo),
+        |hi AS (SELECT o_totalprice AS v FROM r, ks WHERE rnk = khi)
+        |SELECT o_orderpriority, count(*) AS n,
+        |  CAST(sum(CAST(CASE WHEN o_totalprice IS NULL THEN NULL
+        |                ELSE least(greatest(o_totalprice, lo.v), hi.v) END
+        |               AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_w
+        |FROM orders, lo, hi
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
     // ---- multimodal -----------------------------------------------------
 
     // Gopher/C4-style boolean rule gate — every rule an auditable exact
     // predicate, whole gate hash-checked (required words are corpus-domain
     // terms: the synthetic corpus has no English function words)
-    "q_quality_rules" -> ((s, dir) =>
+    Face("q_quality_rules", (s, dir) =>
       TextAnalysis.qualityRules(Tables.documents(s, dir),
         requiredWords = qualityRuleWords)
         .select(col("doc_id"), col("n_words"), col("mean_word_len"),
           col("r_word_count"), col("r_mean_word_len"), col("r_alpha_words"),
           col("r_symbol_ratio"), col("r_bullet_lines"),
           col("r_ellipsis_lines"), col("r_stopwords"), col("keep"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // boolean rules re-derived over the same token/line definitions; the
+      // only double (mean_word_len) is one division of exact ints
+      {
+      val reqList = qualityRuleWords.mkString("['", "', '", "']")
+      s"""WITH d AS (SELECT doc_id, text, $toksSql AS toks,
+         |    string_split(text, chr(10)) AS lines FROM documents),
+         |r AS (SELECT doc_id,
+         |    CAST(len(toks) AS INT) AS n_words,
+         |    CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE)
+         |      / greatest(CAST(len(toks) AS DOUBLE), 1.0) AS mean_word_len,
+         |    CAST(len(list_filter(toks, t -> regexp_matches(t, '[a-z]'))) AS DOUBLE)
+         |      / greatest(CAST(len(toks) AS DOUBLE), 1.0) >= 0.8 AS r_alpha_words,
+         |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.|…')) AS DOUBLE)
+         |      / greatest(CAST(len(toks) AS DOUBLE), 1.0) <= 0.1 AS r_symbol_ratio,
+         |    CAST(len(list_filter(lines, l -> regexp_matches(l, '^\\s*[-*•]'))) AS DOUBLE)
+         |      / greatest(CAST(len(lines) AS DOUBLE), 1.0) <= 0.9 AS r_bullet_lines,
+         |    CAST(len(list_filter(lines, l -> regexp_matches(l, '(\\.\\.\\.|…)\\s*$$'))) AS DOUBLE)
+         |      / greatest(CAST(len(lines) AS DOUBLE), 1.0) <= 0.3 AS r_ellipsis_lines,
+         |    len(list_filter($reqList, w -> list_contains(toks, w))) >= 2 AS r_stopwords
+         |  FROM d)
+         |SELECT doc_id, n_words, mean_word_len,
+         |  n_words BETWEEN 50 AND 100000 AS r_word_count,
+         |  mean_word_len BETWEEN 3.0 AND 10.0 AS r_mean_word_len,
+         |  r_alpha_words, r_symbol_ratio, r_bullet_lines, r_ellipsis_lines,
+         |  r_stopwords,
+         |  (n_words BETWEEN 50 AND 100000) AND
+         |    (mean_word_len BETWEEN 3.0 AND 10.0) AND r_alpha_words AND
+         |    r_symbol_ratio AND r_bullet_lines AND r_ellipsis_lines AND
+         |    r_stopwords AS keep
+         |FROM r ORDER BY doc_id""".stripMargin
+    }),
 
     // Okapi BM25 against a fixed query-term set: the full rational
     // skeleton (tf, dl, idf_arg, tf_norm) is hash-checked bit-for-bit;
     // the composed score is excluded because ln itself is not
     // ULP-portable across engines (measured — see TextAnalysis.bm25
     // scaladoc; the score is hand-checked in TextAnalysisSpec)
-    "q_text_bm25" -> ((s, dir) =>
+    Face("q_text_bm25", (s, dir) =>
       TextAnalysis.bm25(Tables.documents(s, dir), bm25Terms)
         .select(col("doc_id"), col("term"), col("tf"), col("dl"),
           col("idf_arg"), col("tf_norm"))
-        .orderBy(col("doc_id"), col("term"))),
+        .orderBy(col("doc_id"), col("term")),
+      // identical rational operation tree to the Spark side: avgdl as ONE
+      // division, then dl/avgdl — basic IEEE ops are bit-portable; the ln
+      // composition is deliberately NOT compared (see the Spark-side note)
+      bm25OracleSql),
 
     // the SAME scores served from the standing inverted index (postings +
     // 1-row corpus stats) instead of raw text — the retrieval path at
     // corpus scale reads only query-term postings; identical operation
     // tree → bit-equal factors, so it shares q_text_bm25's oracle SQL
-    "q_bm25_index" -> ((s, dir) => {
+    Face("q_bm25_index", (s, dir) => {
       val postings = TextAnalysis.postingsIndex(Tables.documents(s, dir))
       TextAnalysis.bm25FromIndex(postings,
           TextAnalysis.corpusStats(postings), bm25Terms)
         .select(col("doc_id"), col("term"), col("tf"), col("dl"),
           col("idf_arg"), col("tf_norm"))
         .orderBy(col("doc_id"), col("term"))
-    }),
+    },
+      bm25OracleSql),
 
     // standing df statistic + one delta fold (disjoint-id contract): the
     // merged index must equal full-corpus df exactly — hash-gated against
     // DuckDB computing df over ALL documents in one shot
-    "q_text_df_inc" -> ((s, dir) => {
+    Face("q_text_df_inc", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val base = docs.filter(col("doc_id") % 10 < 7)
       val delta = docs.filter(col("doc_id") % 10 >= 7)
       TextAnalysis.incrementalDf(TextAnalysis.dfIndex(base), delta)
         .orderBy(col("term"))
-    }),
+    },
+      dfOracleSql),
 
     // re-ingest guard face: the delta OVERLAPS the indexed base
     // (doc_id % 10 == 6 rows are in both — an at-least-once source
@@ -5585,75 +7869,162 @@ object ExtQueries {
     // the additive fold keeps the disjoint-id contract and the merged
     // index equals full-corpus df (same oracle as q_text_df_inc). Without
     // the guard the overlap double-counts — locked in TextAnalysisSpec.
-    "q_text_df_guard" -> ((s, dir) => {
+    Face("q_text_df_guard", (s, dir) => {
       val docs = Tables.documents(s, dir)
       val base = docs.filter(col("doc_id") % 10 < 7)
       val delta = docs.filter(col("doc_id") % 10 >= 6)
       TextAnalysis.incrementalDf(TextAnalysis.dfIndex(base),
         Dedup.guardReingest(delta, base))
         .orderBy(col("term"))
-    }),
+    },
+      dfOracleSql),
 
     // ordered funnel conversion over the event log: stage k counts users
     // with a step-k event strictly after their stage-(k-1) time; ts
     // compared in epoch MICROS on both engines (unix_micros here,
     // epoch_us in the oracle — the established events-table convention)
-    "q_funnel" -> ((s, dir) =>
+    Face("q_funnel", (s, dir) =>
       Funnel.conversionCounts(
         Tables.events(s, dir).withColumn("ts_us", unix_micros(col("ts"))),
-        funnelSteps, tsCol = "ts_us")),
+        funnelSteps, tsCol = "ts_us"),
+      // the same sequential-min chain as Funnel.stages, one CTE per stage
+      funnelOracleSql),
 
     // 4-stage funnel with a 3-day conversion window: the windowed greedy
     // DP (tᵢ > tᵢ₋₁ AND tᵢ − t₀ ≤ W, one exchange at any depth) against
     // the same chain spelled as per-stage CTEs in the oracle
-    "q_funnel_window" -> ((s, dir) =>
+    Face("q_funnel_window", (s, dir) =>
       Funnel.conversionCounts(
         Tables.events(s, dir).withColumn("ts_us", unix_micros(col("ts"))),
-        windowFunnelSteps, tsCol = "ts_us", within = Some(funnelWindowUs))),
+        windowFunnelSteps, tsCol = "ts_us", within = Some(funnelWindowUs)),
+      // greedy windowed chain, one CTE per stage carrying t0 for the window
+      funnelWindowSql(windowFunnelSteps, funnelWindowUs)),
 
     // tokenizer-coverage: top-100 vocab via the string-tie heap, per-doc
     // OOV rate via broadcast anti-join — fully oracle-checked
-    "q_vocab_oov" -> ((s, dir) =>
+    Face("q_vocab_oov", (s, dir) =>
       TextAnalysis.oovRate(Tables.documents(s, dir), vocabSize = 100)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // same deterministic vocab rule: ORDER BY count DESC, term ASC LIMIT n
+      s"""WITH t AS (SELECT doc_id, unnest(toks) AS term
+         |           FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
+         |v AS (SELECT term FROM (SELECT term, count(*) AS c FROM t GROUP BY term)
+         |      ORDER BY c DESC, term LIMIT 100),
+         |o AS (SELECT doc_id, count(*) AS n_oov FROM t
+         |      ANTI JOIN v USING (term) GROUP BY doc_id),
+         |d AS (SELECT doc_id, CAST(len($toksSql) AS INT) AS n_tokens FROM documents)
+         |SELECT d.doc_id, d.n_tokens,
+         |  CAST(coalesce(o.n_oov, 0) AS BIGINT) AS n_oov,
+         |  CAST(coalesce(o.n_oov, 0) AS DOUBLE) /
+         |    greatest(CAST(d.n_tokens AS DOUBLE), 1.0) AS oov_rate
+         |FROM d LEFT JOIN o USING (doc_id) ORDER BY doc_id""".stripMargin),
 
     // per-source boilerplate line stripping; the fixture corpus has no
     // repeated lines, so this hash-checks the split/strip/rebuild
     // plumbing as an exact roundtrip (planted-boilerplate semantics are
     // locked in TextPrepSpec)
-    "q_boilerplate" -> ((s, dir) =>
+    Face("q_boilerplate", (s, dir) =>
       TextPrep.stripBoilerplate(Tables.documents(s, dir))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // per-source line df vs doc counts, boilerplate anti-joined away,
+      // docs rebuilt in line order
+      """WITH l AS (SELECT doc_id, source, ln.pos, ln.line FROM (
+        |    SELECT doc_id, source,
+        |      unnest(list_transform(string_split(text, chr(10)),
+        |        (x, i) -> struct_pack(pos := i - 1, line := x))) AS ln
+        |    FROM documents)),
+        |lf AS (SELECT source, line, count(DISTINCT doc_id) AS df
+        |       FROM l GROUP BY source, line),
+        |nd AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
+        |b AS (SELECT source, line FROM lf JOIN nd USING (source)
+        |      WHERE df >= 2 AND CAST(df AS DOUBLE) / CAST(n_docs AS DOUBLE) >= 0.5),
+        |k AS (SELECT * FROM l ANTI JOIN b USING (source, line)),
+        |r AS (SELECT doc_id, count(*) AS n_kept,
+        |        string_agg(line, chr(10) ORDER BY pos) AS text_clean
+        |      FROM k GROUP BY doc_id),
+        |t AS (SELECT doc_id, count(*) AS n_lines FROM l GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(r.text_clean, '') AS text_clean,
+        |  CAST(coalesce(t.n_lines, 0) AS BIGINT) AS n_lines,
+        |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept
+        |FROM documents d LEFT JOIN t USING (doc_id) LEFT JOIN r USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin),
 
     // join-key skew profile over orders.o_custkey: hottest keys by the
     // string-tie TopK heap, shares as single divisions — all portable
-    "q_key_skew" -> ((s, dir) =>
-      Profile.keySkew(Tables.orders(s, dir), col("o_custkey"), topK = 5)),
+    Face("q_key_skew", (s, dir) =>
+      Profile.keySkew(Tables.orders(s, dir), col("o_custkey"), topK = 5),
+      // top-k keys re-derived with ORDER BY count DESC, key ASC (binary
+      // string collation == the TopK string-tie contract)
+      """WITH c AS (SELECT coalesce(CAST(o_custkey AS VARCHAR), '<null>') AS k,
+        |                  count(*) AS c
+        |           FROM orders GROUP BY 1),
+        |t AS (SELECT k, c FROM c ORDER BY c DESC, k LIMIT 5)
+        |SELECT CAST((SELECT sum(c) FROM c) AS BIGINT) AS n_rows,
+        |  (SELECT count(*) FROM c) AS n_distinct,
+        |  (SELECT max(c) FROM c) AS max_count,
+        |  CAST((SELECT max(c) FROM c) AS DOUBLE) /
+        |    CAST((SELECT sum(c) FROM c) AS DOUBLE) AS top1_share,
+        |  (SELECT string_agg(k || ':' || CAST(c AS VARCHAR), ','
+        |                     ORDER BY c DESC, k) FROM t) AS top_keys""".stripMargin),
 
     // weekly cohort retention over the event log (UTC ISO-Monday weeks on
     // both engines; offsets are exact multiples of 7 days → int-safe)
-    "q_retention" -> ((s, dir) =>
+    Face("q_retention", (s, dir) =>
       Funnel.retention(Tables.events(s, dir))
         .select(date_format(col("cohort_week"), "yyyy-MM-dd").as("cohort_week"),
           col("week_offset"), col("n_active"))
-        .orderBy(col("cohort_week"), col("week_offset"))),
+        .orderBy(col("cohort_week"), col("week_offset")),
+      // same two-aggregate + join shape; date_trunc('week') is ISO-Monday
+      // in both engines, offsets exact multiples of 7 days
+      """WITH f AS (SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
+        |           FROM events GROUP BY user_id),
+        |a AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS active_week
+        |      FROM events)
+        |SELECT strftime(f.cohort_week, '%Y-%m-%d') AS cohort_week,
+        |  CAST(date_diff('day', f.cohort_week, a.active_week) / 7 AS INT)
+        |    AS week_offset,
+        |  count(*) AS n_active
+        |FROM a JOIN f USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // Morton z-value (the writeZOrdered clustering key) — pure integer
     // bit arithmetic, hash-checked against the same mask-and-shift chain
     // in DuckDB; the layout behavior itself is asserted in LayoutSpec
-    "q_zvalue" -> ((s, dir) =>
+    Face("q_zvalue", (s, dir) =>
       Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"),
           graft.sources.Sources.zValue(col("o_custkey"), col("o_orderkey"))
             .as("z"))
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      // the same spread-mask chain, stepwise CTEs (inlining would duplicate
+      // each subexpression 2^5 times); masks in decimal for portability
+      """WITH s0 AS (SELECT o_orderkey, o_custkey,
+        |    (CAST(o_custkey AS BIGINT) & 2147483647) AS xa,
+        |    (CAST(o_orderkey AS BIGINT) & 2147483647) AS xb FROM orders),
+        |s1 AS (SELECT o_orderkey, o_custkey,
+        |    ((xa | (xa << 16)) & 281470681808895) AS xa,
+        |    ((xb | (xb << 16)) & 281470681808895) AS xb FROM s0),
+        |s2 AS (SELECT o_orderkey, o_custkey,
+        |    ((xa | (xa << 8)) & 71777214294589695) AS xa,
+        |    ((xb | (xb << 8)) & 71777214294589695) AS xb FROM s1),
+        |s3 AS (SELECT o_orderkey, o_custkey,
+        |    ((xa | (xa << 4)) & 1085102592571150095) AS xa,
+        |    ((xb | (xb << 4)) & 1085102592571150095) AS xb FROM s2),
+        |s4 AS (SELECT o_orderkey, o_custkey,
+        |    ((xa | (xa << 2)) & 3689348814741910323) AS xa,
+        |    ((xb | (xb << 2)) & 3689348814741910323) AS xb FROM s3),
+        |s5 AS (SELECT o_orderkey, o_custkey,
+        |    ((xa | (xa << 1)) & 6148914691236517205) AS xa,
+        |    ((xb | (xb << 1)) & 6148914691236517205) AS xb FROM s4)
+        |SELECT o_orderkey, o_custkey, (xa | (xb << 1)) AS z
+        |FROM s5 ORDER BY o_orderkey""".stripMargin),
 
     // bucketed-layout staging + shuffle-free read-back: both join sides are
     // written bucketed on the join key, so the recurring fact⋈dim join and
     // the bucket-key aggregation plan with NO hash-partitioning exchange
     // (asserted in PlanInvariantsSpec); the result is layout-independent
     // and oracle-checked (decimal-exact sum for cross-engine float parity)
-    "q_bucketed_join" -> ((s, dir) => {
+    Face("q_bucketed_join", (s, dir) => {
       // the warehouse DIRECTORY outlives the in-memory catalog (a fresh
       // session sees the old location but no table entry, and saveAsTable
       // then refuses) — drop both the entry and any stale location
@@ -5681,7 +8052,12 @@ object ExtQueries {
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
             .as("total_spent"))
         .orderBy(col("o_custkey"))
-    }),
+    },
+      // the bucketed layout is invisible to semantics: plain join + group
+      """SELECT o_custkey, count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
 
     // payloads are synthesized deterministically from text and the fake
     // dims are integer arithmetic over the byte length, so the decode
@@ -5693,24 +8069,55 @@ object ExtQueries {
     // engine-portable arithmetic — not codec decodes; the real codec
     // family is q_media_* / q_audio_decode / q_media_jpeg. The rename
     // surfaces in the bench baseline block as r1_missing, by design.)
-    "q_payload_slice" -> ((s, dir) =>
+    Face("q_payload_slice", (s, dir) =>
       Multimodal.extractFeatures(s, Multimodal.attachPayload(Tables.documents(s, dir)))
         .select(col("doc_id"), col("mime"), col("width"), col("height"),
           col("n_bytes"), col("avg_luma"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // re-derives the stub decode features: dims are integer arithmetic on
+      // the payload byte length (strlen = bytes; the test corpus is ASCII so
+      // ord-per-char == byte value for the luma sum; both engines do one
+      // exact-integer-sum / int division in IEEE double → bit-identical)
+      """SELECT doc_id, 'image/fake' AS mime,
+        |  CAST((strlen(text) % 1920) + 1 AS INT) AS width,
+        |  CAST(((strlen(text) * 7919) % 1080) + 1 AS INT) AS height,
+        |  CAST(strlen(text) AS INT) AS n_bytes,
+        |  CASE WHEN strlen(text) = 0 THEN 0.0 ELSE
+        |    CAST(list_sum(list_transform(range(1, CAST(strlen(text) AS INT) + 1),
+        |      i -> ord(substr(text, i, 1)))) AS DOUBLE) / strlen(text)
+        |  END AS avg_luma
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // frame-sampling + resize plumbing in the verified path — the slice
     // arithmetic (resize ratio, frame offsets, substring clamping) is
     // mirrored exactly in the oracle SQL; slice invariants also in
     // MultimodalSpec
-    "q_payload_slice_frames" -> ((s, dir) =>
+    Face("q_payload_slice_frames", (s, dir) =>
       Multimodal.frameSample(
         Multimodal.resizeStub(
           Multimodal.attachPayload(Tables.documents(s, dir)), 256, 256),
         "doc_id", n = 4)
         .groupBy(col("frame_idx"))
         .agg(count(lit(1)).as("n_frames"), sum(length(col("frame"))).as("total_bytes"))
-        .orderBy(col("frame_idx"))),
+        .orderBy(col("frame_idx")),
+      // mirrors resizeStub + frameSample slice arithmetic: Spark's `/` on
+      // integers is DOUBLE division and CAST(double AS INT) truncates, hence
+      // the explicit trunc(); substring clamps at the payload end, hence the
+      // least/greatest. l1 = post-resize byte length (bounded by l0: substring
+      // cannot extend), s = 1-based frame offset, g = nominal slice length.
+      """WITH d AS (SELECT doc_id, strlen(text) AS l0,
+        |    (strlen(text) % 1920) + 1 AS w,
+        |    ((strlen(text) * 7919) % 1080) + 1 AS h FROM documents),
+        |r AS (SELECT doc_id, least(l0, greatest(1,
+        |    CAST(trunc(CAST(l0 AS DOUBLE) * 65536 / greatest(w * h, 1)) AS BIGINT)))
+        |    AS l1 FROM d),
+        |f AS (SELECT doc_id, i AS frame_idx,
+        |    1 + CAST(trunc(CAST(l1 AS DOUBLE) * i / 4) AS BIGINT) AS s,
+        |    greatest(1, CAST(trunc(CAST(l1 AS DOUBLE) / 4) AS BIGINT)) AS g, l1
+        |  FROM r, (SELECT unnest(range(0, 4)) AS i))
+        |SELECT CAST(frame_idx AS INT) AS frame_idx, count(*) AS n_frames,
+        |  CAST(sum(greatest(0, least(g, l1 - s + 1))) AS BIGINT) AS total_bytes
+        |FROM f GROUP BY frame_idx ORDER BY frame_idx""".stripMargin),
 
     // magic-byte MIME dispatch (r18): five REAL container families —
     // PNG / JPEG / GIF / RIFF-WAVE / RIFF-AVI, assigned by doc_id mod —
@@ -5718,7 +8125,7 @@ object ExtQueries {
     // cross-checked against each writer's meta.mime (the metadata-
     // integrity audit a crawl pipeline runs because Content-Type lies);
     // the oracle states both columns from the id rule alone
-    "q_mime_sniff" -> ((s, dir) => {
+    Face("q_mime_sniff", (s, dir) => {
       val ids = Tables.documents(s, dir).select(col("doc_id"))
       val all = Multimodal.attachPng(ids.filter(col("doc_id") % 5 === 0))
         .unionByName(Multimodal.attachJpeg(ids.filter(col("doc_id") % 5 === 1)))
@@ -5730,7 +8137,18 @@ object ExtQueries {
       all.select(col("doc_id"), sniffed.as("mime_sniffed"),
           (sniffed === col("media.meta.mime")).as("meta_agrees"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // both columns from the id rule alone: the container class each doc
+      // was written as, and the (always-true) sniff==meta agreement — a
+      // sniff reading the wrong bytes or a writer stamping the wrong mime
+      // diverges on either column
+      """SELECT doc_id,
+        |  CASE CAST(doc_id % 5 AS INT)
+        |    WHEN 0 THEN 'image/png' WHEN 1 THEN 'image/jpeg'
+        |    WHEN 2 THEN 'image/gif' WHEN 3 THEN 'audio/wav'
+        |    ELSE 'video/x-msvideo' END AS mime_sniffed,
+        |  true AS meta_agrees
+        |FROM documents ORDER BY doc_id""".stripMargin).budget(2.5),
 
     // REAL image decode (r13 directive #5): javax.imageio PNG round
     // trip. The payload is a real PNG encoded from a closed-form pixel
@@ -5740,12 +8158,20 @@ object ExtQueries {
     // alone — PNG is lossless, so a wrong or fake decode diverges.
     // Subset (doc_id % 5): the codec cost model is per-image, and the
     // face's job is gating the decode path, not scanning every doc
-    "q_media_decode" -> ((s, dir) =>
+    Face("q_media_decode", (s, dir) =>
       Multimodal.decodeFeatures(
         Multimodal.attachPng(
           Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
             .select(col("doc_id"))))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // REAL decode gate: the engine's width/height/px_sum come from
+      // javax.imageio DECODING a real PNG; this recomputes them from the
+      // closed-form pixel rule (r=(s+x)%256, g=(s+y)%256, b=(s+x+y)%256
+      // over w = id%16+4, h = id*7%16+4, s = id%256) — PNG is lossless,
+      // so equality certifies the decoder read the actual raster. The
+      // bounded series (0..18) covers every dim; the x<w / y<h joins
+      // scope each doc's pixels.
+      mediaDecodeOracleSql),
 
     // REAL lossy-codec decode (JPEG): bit-exact px_sum gating is
     // impossible on a lossy container, so the gate is the CONTRACT —
@@ -5753,7 +8179,7 @@ object ExtQueries {
     // closed-form gradient rule within a bound (probed worst case 4
     // across 512 ids at quality 0.95; gated at ≤ 12, a 3× margin).
     // Same doc_id % 5 subset as q_media_decode
-    "q_media_jpeg" -> ((s, dir) =>
+    Face("q_media_jpeg", (s, dir) =>
       Multimodal.decodeDeviation(
           Multimodal.attachJpeg(
             Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
@@ -5762,7 +8188,18 @@ object ExtQueries {
             Multimodal.gradientRgb((id % 256).toInt, w, h, x, y))
         .select(col("doc_id"), col("width"), col("height"),
           (col("max_dev") <= 12).as("within_tol"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // JPEG contract gate: dims are exact integer functions of the id
+      // (recomputed here without decoding); within_tol is the engine-side
+      // certificate that the DECODED raster stayed within the deviation
+      // bound of the closed-form gradient rule — a lossy container cannot
+      // be px_sum-gated, so the oracle pins the contract booleans + dims
+      // (the q_approx_distinct contract-gate pattern)
+      """SELECT doc_id,
+        |  CAST(doc_id % 16 + 4 AS INT) AS width,
+        |  CAST((doc_id * 7) % 16 + 4 AS INT) AS height,
+        |  true AS within_tol
+        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin),
 
     // the LOSSY decode→transform→re-encode loop (the q_media_resize_real
     // twin on a lossy container): JPEG decode → integer-exact NN resize
@@ -5770,7 +8207,7 @@ object ExtQueries {
     // per-pixel deviation from the NN-sampled gradient rule within a
     // bound (two codec hops compound; probed worst case 5 across 512
     // ids, gated at ≤ 15, a 3× margin)
-    "q_media_jpeg_resize" -> ((s, dir) =>
+    Face("q_media_jpeg_resize", (s, dir) =>
       Multimodal.decodeDeviation(
           Multimodal.resizeImage(
             Multimodal.attachJpeg(
@@ -5785,7 +8222,11 @@ object ExtQueries {
           })
         .select(col("doc_id"), col("width"), col("height"),
           (col("max_dev") <= 15).as("within_tol"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the lossy resize loop lands on the literal target dims + the
+      // contract boolean (two codec hops cannot be px_sum-gated)
+      """SELECT doc_id, 12 AS width, 10 AS height, true AS within_tol
+        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin),
 
     // REAL decode → transform → decode loop: nearest-neighbor resize on
     // the DECODED raster (out(x,y) = in(x·w0 div W, y·h0 div H), an
@@ -5794,26 +8235,56 @@ object ExtQueries {
     // checksum from the source pixel rule + the same index mapping —
     // both PNG hops are lossless, so any sampling or codec error
     // diverges. Same doc_id % 5 subset as q_media_decode
-    "q_media_resize_real" -> ((s, dir) =>
+    Face("q_media_resize_real", (s, dir) =>
       Multimodal.decodeFeatures(
         Multimodal.resizeImage(
           Multimodal.attachPng(
             Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
               .select(col("doc_id"))),
           newWidth = 8, newHeight = 6))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // resized checksum from the source rule + the nearest-neighbor index
+      // mapping sx = x*w0 // 8, sy = y*h0 // 6 (integer division, exactly
+      // the engine's explicit loop): v at the SAMPLED source coordinate
+      """WITH p AS (SELECT doc_id,
+        |    CAST(doc_id % 16 + 4 AS INT) w0,
+        |    CAST((doc_id * 7) % 16 + 4 AS INT) h0,
+        |    CAST(doc_id % 256 AS INT) s
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |m AS (SELECT doc_id, s,
+        |    (gx.x * w0) // 8 AS sx, (gy.y * h0) // 6 AS sy
+        |  FROM p, generate_series(0, 7) gx(x), generate_series(0, 5) gy(y)),
+        |px AS (SELECT doc_id,
+        |    ((s + sx) % 256) + ((s + sy) % 256) + ((s + sx + sy) % 256) AS v
+        |  FROM m)
+        |SELECT doc_id, 'image/png' AS mime, 8 AS width, 6 AS height,
+        |  CAST(sum(v) AS BIGINT) AS px_sum
+        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // REAL audio decode (the WAV twin of q_media_decode): each doc
     // carries a 16-bit PCM WAV from a closed-form sample rule; the face
     // decodes the stream with javax.sound.sampled and emits the format
     // + sample count + sample sum FROM THE PCM BYTES — the oracle
     // recomputes all of it from the rule (PCM WAV is lossless)
-    "q_audio_decode" -> ((s, dir) =>
+    Face("q_audio_decode", (s, dir) =>
       Multimodal.decodeAudioFeatures(
         Multimodal.attachWav(
           Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
             .select(col("doc_id"))))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // decoded PCM format + sample sum from the closed-form audio rule:
+      // n = id%64+16 samples of s_i = ((id%1000 + 7i) mod 65536) − 32768
+      """WITH p AS (SELECT doc_id,
+        |    CAST(doc_id % 64 + 16 AS BIGINT) n,
+        |    CAST(doc_id % 1000 AS BIGINT) s
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |sm AS (SELECT doc_id, n,
+        |    CAST(sum(((s + 7 * gi.i) % 65536) - 32768) AS BIGINT) AS sample_sum
+        |  FROM p JOIN generate_series(0, 78) gi(i) ON gi.i < n
+        |  GROUP BY doc_id, n)
+        |SELECT doc_id, 8000 AS sample_rate, 1 AS channels, 16 AS bits,
+        |  n AS n_samples, sample_sum
+        |FROM sm ORDER BY doc_id""".stripMargin),
 
     // REAL frame sampling: each doc carries a multi-frame animated-GIF
     // payload (palette-exact 8-gray frames, so the GIF hop is lossless
@@ -5822,65 +8293,127 @@ object ExtQueries {
     // sums from the decoded raster — the oracle recomputes frame count,
     // dims, and each frame's sum from the closed-form level rule, so a
     // decoder that drops/reorders/misreads frames diverges
-    "q_media_frames_real" -> ((s, dir) =>
+    Face("q_media_frames_real", (s, dir) =>
       Multimodal.decodeFrames(
         Multimodal.attachGif(
           Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
             .select(col("doc_id"))))
-        .orderBy(col("doc_id"), col("frame_idx"))),
+        .orderBy(col("doc_id"), col("frame_idx")),
+      // per-frame level sums from the closed-form GIF rule: frame count
+      // nf = id%3+2, dims w = id%8+4 / h = id·3%8+4, level(x,y,f) =
+      // (s+x+2y+3f) mod 8 — the bounded series cover every dim/frame
+      """WITH p AS (SELECT doc_id,
+        |    CAST(doc_id % 8 + 4 AS INT) w,
+        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
+        |    CAST(doc_id % 3 + 2 AS INT) nf,
+        |    CAST(doc_id % 8 AS INT) s
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |fr AS (SELECT doc_id, w, h, s, gf.f
+        |  FROM p JOIN generate_series(0, 3) gf(f) ON gf.f < nf),
+        |px AS (SELECT doc_id, w, h, f,
+        |    (s + gx.x + 2 * gy.y + 3 * f) % 8 AS v
+        |  FROM fr
+        |  JOIN generate_series(0, 10) gx(x) ON gx.x < w
+        |  JOIN generate_series(0, 10) gy(y) ON gy.y < h)
+        |SELECT doc_id, CAST(f AS INT) AS frame_idx, w AS width,
+        |  h AS height, CAST(sum(v) AS BIGINT) AS lvl_sum
+        |FROM px GROUP BY doc_id, f, w, h
+        |ORDER BY doc_id, frame_idx""".stripMargin),
 
     // decode-at-ingest STREAMED: the same subset arrives as a 3-batch
     // scrambled checkpointed stream, attach→decode run inside the
     // streaming plan, features land in an append parquet file sink
     // (exactly-once via the sink log) — the sink read-back must equal
     // the batch face's closed-form oracle verbatim
-    "q_media_stream_replay" -> ((s, dir) =>
+    Face("q_media_stream_replay", (s, dir) =>
       s.read.parquet(s"${mediaReplayFixture(s, dir)}/features")
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      mediaDecodeOracleSql),
 
     // REAL video demux (AVI/RIFF, pure-JDK — the last modality): every
     // column is a header word read back from the CONTAINER BYTES (dims
     // from strf, frame count from avih PLUS a count from the movi chunk
     // walk, micro-sec-per-frame from avih, codec from biCompression);
     // the id-parity codec mix makes the face gate BOTH demux paths
-    "q_video_meta" -> ((s, dir) =>
+    Face("q_video_meta", (s, dir) =>
       Video.decodeMeta(
         Video.attachAvi(
           Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
             .select(col("doc_id")),
           id => if (id % 2 == 0) Video.CodecRgb else Video.CodecMjpeg))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // AVI demux gate: every engine column is a header word parsed from
+      // the container bytes; this recomputes all of them from the attach
+      // rule's integer arithmetic (w = id%8+4, h = id·3%8+4, nf = id%4+2,
+      // fps = 20000 + (id%7)·5000, codec by id parity) — a demux that
+      // echoes attach-side metadata instead of reading the RIFF tree
+      // cannot diverge here, but one that misreads ANY word does
+      """SELECT doc_id,
+        |  CAST(doc_id % 8 + 4 AS INT) AS width,
+        |  CAST((doc_id * 3) % 8 + 4 AS INT) AS height,
+        |  CAST(doc_id % 4 + 2 AS INT) AS n_frames,
+        |  CAST(doc_id % 4 + 2 AS INT) AS movi_frames,
+        |  CAST(20000 + (doc_id % 7) * 5000 AS BIGINT) AS fps_micros,
+        |  CASE WHEN doc_id % 2 = 0 THEN 'rgb24' ELSE 'mjpeg' END AS codec
+        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin),
 
     // REAL video frame decode on the lossless rgb24 codec: per-frame
     // channel sums from the DECODED raster (explicit bottom-up BGR DIB
     // unpack incl. the 4-byte row-stride padding), bit-exact against
     // the closed-form frame rule — the q_media_frames_real gate shape
-    "q_video_frames" -> ((s, dir) =>
+    Face("q_video_frames", (s, dir) =>
       Video.decodeFrames(
         Video.attachAvi(
           Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
             .select(col("doc_id")),
           _ => Video.CodecRgb))
-        .orderBy(col("doc_id"), col("frame_idx"))),
+        .orderBy(col("doc_id"), col("frame_idx")),
+      // per-frame channel sums from the closed-form rgb24 rule
+      // r=(s+x+3f)%256, g=(s+y+3f)%256, b=(s+x+y)%256 over w = id%8+4,
+      // h = id·3%8+4, nf = id%4+2, s = id%256 — the DIB container hop is
+      // lossless, so equality certifies the decoder unpacked the actual
+      // bottom-up BGR rows (bounded series cover every dim/frame)
+      videoFramesOracleSql),
 
     // REAL temporal sampling: stride-2 frame sampling AT THE DECODER —
     // dropped frames never leave the scan stage (the 100 TB shape: a
     // corpus sampled 1-in-N ships 1/N of the rows downstream)
-    "q_video_sample" -> ((s, dir) =>
+    Face("q_video_sample", (s, dir) =>
       Video.decodeFrames(
         Video.attachAvi(
           Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
             .select(col("doc_id")),
           _ => Video.CodecRgb),
         stride = 2)
-        .orderBy(col("doc_id"), col("frame_idx"))),
+        .orderBy(col("doc_id"), col("frame_idx")),
+      // the stride-2 temporal sample: identical rule, only even movi
+      // ordinals survive — re-derived by the same series with f%2=0
+      """WITH p AS (SELECT doc_id,
+        |    CAST(doc_id % 8 + 4 AS INT) w,
+        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
+        |    CAST(doc_id % 4 + 2 AS INT) nf,
+        |    CAST(doc_id % 256 AS INT) s
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |fr AS (SELECT doc_id, w, h, s, gf.f
+        |  FROM p JOIN generate_series(0, 5) gf(f)
+        |    ON gf.f < nf AND gf.f % 2 = 0),
+        |px AS (SELECT doc_id, w, h, f,
+        |    ((s + gx.x + 3 * f) % 256) + ((s + gy.y + 3 * f) % 256)
+        |      + ((s + gx.x + gy.y) % 256) AS v
+        |  FROM fr
+        |  JOIN generate_series(0, 10) gx(x) ON gx.x < w
+        |  JOIN generate_series(0, 10) gy(y) ON gy.y < h)
+        |SELECT doc_id, CAST(f AS INT) AS frame_idx, w AS width,
+        |  h AS height, CAST(sum(v) AS BIGINT) AS px_sum
+        |FROM px GROUP BY doc_id, f, w, h
+        |ORDER BY doc_id, frame_idx""".stripMargin),
 
     // Motion-JPEG contract gate (the q_media_jpeg shape, per FRAME):
     // dims exact, decoded deviation from the closed-form per-frame
     // gradient rule within the probed bound (VideoSpec id sweep; gated
     // ≤ 12, the media-family 3× margin) — frame ORDER is gated because
     // the rule's blue channel varies with the frame ordinal
-    "q_video_mjpeg" -> ((s, dir) =>
+    Face("q_video_mjpeg", (s, dir) =>
       Video.decodeDeviation(
         Video.attachAvi(
           Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
@@ -5889,15 +8422,30 @@ object ExtQueries {
         (id, x, y, f) => Video.mjpegRule((id % 256).toInt, x, y, f))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           (col("max_dev") <= 12).as("within_tol"))
-        .orderBy(col("doc_id"), col("frame_idx"))),
+        .orderBy(col("doc_id"), col("frame_idx")),
+      // Motion-JPEG contract gate: dims + frame ordinals are exact
+      // integer functions of the id; within_tol is the engine-side
+      // certificate that each DECODED frame stayed within the deviation
+      // bound of the per-frame gradient rule (lossy container → the
+      // q_media_jpeg contract-boolean pattern, one row per frame)
+      """WITH p AS (SELECT doc_id,
+        |    CAST(doc_id % 8 + 4 AS INT) w,
+        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
+        |    CAST(doc_id % 4 + 2 AS INT) nf
+        |  FROM documents WHERE doc_id % 5 = 0)
+        |SELECT doc_id, CAST(gf.f AS INT) AS frame_idx, w AS width,
+        |  h AS height, true AS within_tol
+        |FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf
+        |ORDER BY doc_id, frame_idx""".stripMargin),
 
     // video demux+decode AT INGEST, streamed: the same subset arrives as
     // a 3-batch scrambled checkpointed stream, attach→demux→decode run
     // inside the streaming plan, per-frame rows land in an append
     // parquet sink — the read-back must equal q_video_frames' oracle
-    "q_video_ingest_replay" -> ((s, dir) =>
+    Face("q_video_ingest_replay", (s, dir) =>
       s.read.parquet(s"${videoReplayFixture(s, dir)}/frames")
-        .orderBy(col("doc_id"), col("frame_idx"))),
+        .orderBy(col("doc_id"), col("frame_idx")),
+      videoFramesOracleSql),
 
     // REAL decode → NN-resize → re-encode → decode loop on the video
     // container (the q_media_resize_real twin): every frame decoded,
@@ -5905,7 +8453,7 @@ object ExtQueries {
     // rgb24 AVI at the source fps, then re-decoded — both container
     // hops lossless, so per-frame sums are bit-exact against the source
     // rule + the same mapping
-    "q_video_resize" -> ((s, dir) =>
+    Face("q_video_resize", (s, dir) =>
       Video.decodeFrames(
         Video.resizeFrames(
           Video.attachAvi(
@@ -5913,7 +8461,29 @@ object ExtQueries {
               .select(col("doc_id")),
             _ => Video.CodecRgb),
           newWidth = 6, newHeight = 5))
-        .orderBy(col("doc_id"), col("frame_idx"))),
+        .orderBy(col("doc_id"), col("frame_idx")),
+      // resized sums from the source rule + the nearest-neighbor index
+      // mapping sx = x·w0 // 6, sy = y·h0 // 5 (integer division, exactly
+      // the engine's explicit loop), per frame — both AVI hops lossless
+      """WITH p AS (SELECT doc_id,
+        |    CAST(doc_id % 8 + 4 AS INT) w,
+        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
+        |    CAST(doc_id % 4 + 2 AS INT) nf,
+        |    CAST(doc_id % 256 AS INT) s
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |fr AS (SELECT doc_id, w, h, s, gf.f
+        |  FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf),
+        |m AS (SELECT doc_id, s, f,
+        |    (gx.x * w) // 6 AS sx, (gy.y * h) // 5 AS sy
+        |  FROM fr, generate_series(0, 5) gx(x), generate_series(0, 4) gy(y)),
+        |px AS (SELECT doc_id, f,
+        |    ((s + sx + 3 * f) % 256) + ((s + sy + 3 * f) % 256)
+        |      + ((s + sx + sy) % 256) AS v
+        |  FROM m)
+        |SELECT doc_id, CAST(f AS INT) AS frame_idx, 6 AS width,
+        |  5 AS height, CAST(sum(v) AS BIGINT) AS px_sum
+        |FROM px GROUP BY doc_id, f
+        |ORDER BY doc_id, frame_idx""".stripMargin),
 
     // keyframe selection: the representative-frame pick a multimodal
     // pipeline keeps per clip — here arg-max decoded brightness
@@ -5921,7 +8491,7 @@ object ExtQueries {
     // struct-max aggregate over the decoder's narrow output (no window,
     // no second decode pass) — the 100 TB shape: payloads die in the
     // scan stage, the exchange carries one struct per video
-    "q_video_keyframe" -> ((s, dir) =>
+    Face("q_video_keyframe", (s, dir) =>
       Video.decodeFrames(
         Video.attachAvi(
           Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
@@ -5931,7 +8501,30 @@ object ExtQueries {
         .agg(max(struct(col("px_sum"), (-col("frame_idx")).as("nfi"))).as("m"))
         .select(col("doc_id"), (-col("m.nfi")).cast("int").as("frame_idx"),
           col("m.px_sum").as("px_sum"))
-        .orderBy(col("doc_id")))
+        .orderBy(col("doc_id")),
+      // keyframe arg-max re-derived from the same closed-form frame sums:
+      // per video the brightest frame wins, ties to the earliest ordinal
+      """WITH p AS (SELECT doc_id,
+        |    CAST(doc_id % 8 + 4 AS INT) w,
+        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
+        |    CAST(doc_id % 4 + 2 AS INT) nf,
+        |    CAST(doc_id % 256 AS INT) s
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |fr AS (SELECT doc_id, w, h, s, gf.f
+        |  FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf),
+        |px AS (SELECT doc_id, f,
+        |    ((s + gx.x + 3 * f) % 256) + ((s + gy.y + 3 * f) % 256)
+        |      + ((s + gx.x + gy.y) % 256) AS v
+        |  FROM fr
+        |  JOIN generate_series(0, 10) gx(x) ON gx.x < w
+        |  JOIN generate_series(0, 10) gy(y) ON gy.y < h),
+        |sums AS (SELECT doc_id, f, CAST(sum(v) AS BIGINT) AS ps
+        |  FROM px GROUP BY doc_id, f)
+        |SELECT doc_id, CAST(f AS INT) AS frame_idx, ps AS px_sum
+        |FROM (SELECT doc_id, f, ps,
+        |    row_number() OVER (PARTITION BY doc_id ORDER BY ps DESC, f) AS rn
+        |  FROM sums)
+        |WHERE rn = 1 ORDER BY doc_id""".stripMargin)
   )
 
   /** PII redaction mirrored in DuckDB, built from [[TextPrep.PiiPatterns]]
@@ -6425,3014 +9018,4 @@ object ExtQueries {
        |       FROM fin)
        |SELECT piece, loss_scaled, (rn <= 24) AS kept FROM rk
        |ORDER BY piece""".stripMargin
-
-  /** Oracle entries whose SQL references per-dir STAGED artifacts (paths
-    * known only after the query lambdas ran — see [[oracleStagedFor]]). */
-  private def dynamicOracleSql: Map[String, String] = {
-    val root = oracleStageRoot(oracleStagedFor)
-    // standing-index refine leg: exact cosine between the engine-side
-    // unit-normalized queries (mirrored: x / sqrt(max(Σx², 1e-300))) and
-    // the index's OWN stored unit vectors, re-ranked over the staged
-    // shortlist — only present once q_ann_index has run in this process
-    val annEntry =
-      if (oracleAnnIndexDir.isEmpty) Map.empty[String, String]
-      else Map("q_ann_index" ->
-        s"""WITH sl AS (SELECT query_id, vec_id
-           |            FROM read_parquet('$root/q_ann_index/*.parquet')),
-           |p AS (SELECT vec_id, v
-           |      FROM read_parquet('$oracleAnnIndexDir/postings/*/*.parquet')),
-           |raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0
-           |        FROM embeddings WHERE vec_id < 8),
-           |qn AS (SELECT vec_id AS query_id,
-           |         list_transform(v0, x -> x /
-           |           sqrt(greatest(list_dot_product(v0, v0), 1e-300))) AS qv
-           |       FROM raw),
-           |scored AS (
-           |  SELECT s.query_id, s.vec_id,
-           |    round(list_dot_product(q.qv, c.v) /
-           |          (sqrt(list_dot_product(q.qv, q.qv)) *
-           |           sqrt(list_dot_product(c.v, c.v))), 6) AS cos
-           |  FROM sl s JOIN qn q USING (query_id)
-           |  JOIN p c ON c.vec_id = s.vec_id)
-           |SELECT query_id, rank, vec_id, cos FROM (
-           |  SELECT query_id, vec_id, cos,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, vec_id) AS INT) AS rank
-           |  FROM scored) t
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-        // recall of the standing-index read path: sketch top-5 = refine of
-        // the staged shortlist over the index's OWN stored unit vectors
-        // (queries mirrored engine-normalized); exact leg = brute force
-        // from raw embeddings; overlap recomputed per query
-        "q_ann_index_recall" -> simRecallOracleSql(
-          s"""sl AS (SELECT query_id, vec_id
-             |       FROM read_parquet('$root/q_ann_index_recall/*.parquet')),
-             |p AS (SELECT vec_id, v AS u
-             |      FROM read_parquet('$oracleAnnIndexDir/postings/*/*.parquet')),
-             |qn AS (SELECT vec_id AS query_id,
-             |         list_transform(v, x -> x /
-             |           sqrt(greatest(list_dot_product(v, v), 1e-300))) AS qv
-             |       FROM v WHERE vec_id < 8),
-             |skscored AS (
-             |  SELECT s.query_id, s.vec_id,
-             |    round(list_dot_product(q.qv, c.u) /
-             |          (sqrt(list_dot_product(q.qv, q.qv)) *
-             |           sqrt(list_dot_product(c.u, c.u))), 6) AS cos
-             |  FROM sl s JOIN qn q USING (query_id)
-             |  JOIN p c ON c.vec_id = s.vec_id),
-             |sk AS (SELECT query_id, vec_id FROM (
-             |    SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
-             |      ORDER BY cos DESC, vec_id) AS rn FROM skscored) t
-             |  WHERE rn <= 5)""".stripMargin))
-    // incremental corpus-dedup fold: the oracle consumes the STANDING
-    // state as data (base survivors + base CC labels — persisted parquet,
-    // exactly what a production pipeline trusts between batches),
-    // re-verifies the staged delta pairs from raw text, re-derives the
-    // delta's exact survivors (min shifted id per text, minus texts the
-    // base partition holds), and recomputes the merged closure + survivor
-    // anti-join independently — the FOLD is what's under the gate
-    val incEntry =
-      if (oracleCorpusIncDir.isEmpty) Map.empty[String, String]
-      else Map("q_dedup_corpus_inc" ->
-        s"""WITH RECURSIVE d AS (
-           |  SELECT doc_id, list_distinct($shinglesSql) AS sh
-           |  FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
-           |delta AS (SELECT doc_id + 1000000 AS doc_id, text, lang, source
-           |          FROM documents WHERE doc_id % 10 >= 9),
-           |dsurv AS (SELECT min(doc_id) AS doc_id, text FROM delta GROUP BY text),
-           |dsurv2 AS (
-           |  SELECT s.doc_id, dd.lang, dd.source FROM dsurv s
-           |  JOIN delta dd ON dd.doc_id = s.doc_id
-           |  WHERE NOT EXISTS (SELECT 1 FROM documents c
-           |                    WHERE c.doc_id % 10 < 9 AND c.text = s.text)),
-           |bsurv AS (SELECT doc_id, lang, source
-           |          FROM read_parquet('$oracleCorpusIncDir/base_surv/*.parquet')),
-           |lab AS (SELECT id, component
-           |        FROM read_parquet('$oracleCorpusIncDir/labels/*.parquet')),
-           |rawp AS (SELECT id_a, id_b FROM read_parquet(
-           |           '${oracleStageRoot(oracleStagedFor)}/q_dedup_corpus_inc/*.parquet')),
-           |vp AS (SELECT id_a, id_b FROM (
-           |    SELECT id_a, id_b,
-           |      CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-           |      (CAST(len(a.sh) AS DOUBLE) + CAST(len(b.sh) AS DOUBLE) -
-           |       CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)) AS jraw
-           |    FROM rawp
-           |    JOIN d a ON a.doc_id =
-           |      (CASE WHEN id_a >= 1000000 THEN id_a - 1000000 ELSE id_a END)
-           |    JOIN d b ON b.doc_id =
-           |      (CASE WHEN id_b >= 1000000 THEN id_b - 1000000 ELSE id_b END))
-           |  WHERE jraw >= 0.5),
-           |edges AS (
-           |  SELECT id AS u, component AS v FROM lab
-           |  UNION SELECT component, id FROM lab
-           |  UNION SELECT id_a, id_b FROM vp
-           |  UNION SELECT id_b, id_a FROM vp),
-           |reach(id, r) AS (
-           |  SELECT DISTINCT u, u FROM edges
-           |  UNION
-           |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id),
-           |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-           |losers AS (SELECT id AS doc_id FROM comp WHERE id <> component),
-           |allsurv AS (SELECT doc_id, lang, source FROM bsurv
-           |            UNION ALL SELECT doc_id, lang, source FROM dsurv2)
-           |SELECT doc_id, lang, source FROM allsurv
-           |WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-           |ORDER BY doc_id""".stripMargin)
-    annEntry ++ incEntry ++ Map(
-      // DSIR: bucketing (Karp–Rabin fold mod 256), per-doc counts, and
-      // BOTH smoothing inputs (t_cnt, r_cnt) recomputed from raw text;
-      // the staged ratio_scaled is consumed only on buckets whose staged
-      // counts equal the recomputation (`ver` join — a mismatch drops
-      // buckets, changes scores, and fails the hash). Engine-side
-      // residue: the ln of two verified rationals (TextAnalysisSpec).
-      // drift table from the staged evidence: bin assignment, per-slice
-      // counts, totals, and the exact diff numerator all re-derived
-      // (the oracle emits ITS diff_num, so a wrong engine value can't
-      // hash-match); ln_scaled consumed only where the counts agree
-      "q_drift" ->
-        s"""WITH x AS (SELECT CAST(n_chars AS DOUBLE) AS v,
-           |             coalesce(lang = 'en', false) AS a
-           |           FROM documents
-           |           WHERE CAST(n_chars AS DOUBLE) >= 0.0
-           |             AND CAST(n_chars AS DOUBLE) <= 600.0),
-           |b AS (SELECT CAST(least(11, floor((v - 0.0) * 12 / (600.0 - 0.0)))
-           |             AS BIGINT) AS bucket, a FROM x),
-           |c AS (SELECT bucket,
-           |        CAST(count(*) FILTER (a) AS BIGINT) AS na_chk,
-           |        CAST(count(*) FILTER (NOT a) AS BIGINT) AS nb_chk
-           |      FROM b GROUP BY bucket),
-           |tot AS (SELECT CAST(coalesce(sum(na_chk), 0) AS BIGINT) AS nA,
-           |               CAST(coalesce(sum(nb_chk), 0) AS BIGINT) AS nB
-           |        FROM c),
-           |g AS (SELECT unnest(generate_series(0, 11)) AS bucket),
-           |f AS (SELECT g.bucket, CAST(coalesce(c.na_chk, 0) AS BIGINT) AS na_chk,
-           |        CAST(coalesce(c.nb_chk, 0) AS BIGINT) AS nb_chk
-           |      FROM g LEFT JOIN c ON g.bucket = c.bucket),
-           |staged AS (SELECT bucket, n_a, n_b, diff_num, ln_scaled
-           |           FROM read_parquet('$root/q_drift/*.parquet'))
-           |SELECT s.bucket, s.n_a, s.n_b,
-           |  CAST(f.na_chk * (SELECT nB FROM tot)
-           |     - f.nb_chk * (SELECT nA FROM tot) AS BIGINT) AS diff_num,
-           |  s.ln_scaled
-           |FROM staged s JOIN f ON s.bucket = f.bucket
-           |  AND s.n_a = f.na_chk AND s.n_b = f.nb_chk
-           |ORDER BY s.bucket""".stripMargin,
-
-      // bigram-LM scoring from the staged model: per-doc bucket-bigram
-      // counts re-derived from raw text (same Karp–Rabin fold, same
-      // adjacent pairing), the model's c12/c1 evidence recomputed
-      // independently, ln_scaled consumed only where they agree, and
-      // the integer sums recomputed exactly
-      "q_unigram_train" -> unigramOracleSql(root),
-      "q_unigram_tokens" -> unigramTokensOracleSql(root),
-      "q_unigram_prune" -> unigramPruneOracleSql(root),
-
-      // langid2: the 5-script corpus reconstructed from the same literal
-      // lists, bigram buckets re-derived per code point (Karp–Rabin fold),
-      // the model's (cnt, total) evidence recomputed independently,
-      // ln_scaled consumed only where they agree, scores re-summed as
-      // exact integers, argmax under the same (score desc, label) order
-      "q_text_langid2" ->
-        s"""WITH t2 AS (SELECT doc_id, $langIdTextSql AS text2,
-           |              $langIdLabelSql AS label FROM documents),
-           |bgr AS (SELECT doc_id,
-           |          ${polyFoldSql("substr(text2, CAST(i AS INT), 2)")} % 128
-           |            AS bucket
-           |        FROM (SELECT doc_id, text2,
-           |                unnest(range(1, len(text2))) AS i FROM t2)),
-           |pc AS (SELECT doc_id, bucket, count(*) AS c FROM bgr
-           |       GROUP BY doc_id, bucket),
-           |lc AS (SELECT t.label, b.bucket, CAST(count(*) AS BIGINT) AS cnt_chk
-           |       FROM bgr b JOIN t2 t USING (doc_id) GROUP BY label, bucket),
-           |lt AS (SELECT label, CAST(sum(cnt_chk) AS BIGINT) AS tot_chk
-           |       FROM lc GROUP BY label),
-           |staged AS (SELECT label, bucket, cnt, total, ln_scaled
-           |           FROM read_parquet('$root/q_text_langid2/*.parquet')),
-           |ver AS (SELECT s.label, s.bucket, s.ln_scaled FROM staged s
-           |        LEFT JOIN lc ON lc.label = s.label AND lc.bucket = s.bucket
-           |        LEFT JOIN lt ON lt.label = s.label
-           |        WHERE coalesce(lc.cnt_chk, 0) = s.cnt
-           |          AND coalesce(lt.tot_chk, 0) = s.total),
-           |sc AS (SELECT p.doc_id, v.label,
-           |         CAST(sum(p.c * v.ln_scaled) AS BIGINT) AS score_scaled
-           |       FROM pc p JOIN ver v USING (bucket)
-           |       GROUP BY doc_id, label),
-           |best AS (SELECT doc_id, label AS lang_pred, score_scaled FROM (
-           |           SELECT *, row_number() OVER (PARTITION BY doc_id
-           |             ORDER BY score_scaled DESC, label) AS rn FROM sc)
-           |         WHERE rn = 1)
-           |SELECT b.doc_id, t.label, b.lang_pred, b.score_scaled
-           |FROM best b JOIN t2 t USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-      "q_lm_score" ->
-        s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-           |bg AS (SELECT doc_id,
-           |         ${polyFoldSql("toks[i]")} % 64 AS b1,
-           |         ${polyFoldSql("toks[i + 1]")} % 64 AS b2
-           |       FROM (SELECT doc_id, toks,
-           |               unnest(generate_series(1, len(toks) - 1)) AS i
-           |             FROM t)),
-           |c AS (SELECT doc_id, b1, b2, count(*) AS c FROM bg
-           |      GROUP BY doc_id, b1, b2),
-           |corpus AS (SELECT b1, b2, CAST(sum(c) AS BIGINT) AS c12_chk
-           |           FROM c GROUP BY b1, b2),
-           |uni AS (SELECT b1, CAST(sum(c12_chk) AS BIGINT) AS c1_chk
-           |        FROM corpus GROUP BY b1),
-           |staged AS (SELECT b1, b2, c12, c1, ln_scaled
-           |           FROM read_parquet('$root/q_lm_score/*.parquet')),
-           |ver AS (SELECT s.b1, s.b2, s.ln_scaled FROM staged s
-           |        LEFT JOIN corpus ON corpus.b1 = s.b1 AND corpus.b2 = s.b2
-           |        LEFT JOIN uni ON uni.b1 = s.b1
-           |        WHERE coalesce(corpus.c12_chk, 0) = s.c12
-           |          AND coalesce(uni.c1_chk, 0) = s.c1)
-           |SELECT c.doc_id, CAST(sum(c.c) AS BIGINT) AS n_bigrams,
-           |       CAST(sum(c.c * v.ln_scaled) AS BIGINT) AS ll_scaled
-           |FROM c JOIN ver v ON c.b1 = v.b1 AND c.b2 = v.b2
-           |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin,
-
-      "q_dsir_select" ->
-        s"""WITH t AS (SELECT doc_id, unnest(toks) AS term
-           |           FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
-           |tb AS (SELECT doc_id, ${polyFoldSql("term")} % 256 AS bucket FROM t),
-           |c AS (SELECT doc_id, bucket, count(*) AS c FROM tb GROUP BY doc_id, bucket),
-           |rawb AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS r_chk FROM c GROUP BY bucket),
-           |tgtb AS (SELECT bucket, CAST(sum(c.c) AS BIGINT) AS t_chk
-           |         FROM c JOIN documents d USING (doc_id)
-           |         WHERE d.lang = 'en' GROUP BY bucket),
-           |staged AS (SELECT bucket, t_cnt, r_cnt, ratio_scaled
-           |           FROM read_parquet('$root/q_dsir_select/*.parquet')),
-           |ver AS (SELECT s.bucket, s.ratio_scaled FROM staged s
-           |        JOIN rawb ON rawb.bucket = s.bucket AND rawb.r_chk = s.r_cnt
-           |        LEFT JOIN tgtb ON tgtb.bucket = s.bucket
-           |        WHERE coalesce(tgtb.t_chk, 0) = s.t_cnt),
-           |scores AS (SELECT c.doc_id,
-           |             CAST(sum(c.c * v.ratio_scaled) AS BIGINT) AS score
-           |           FROM c JOIN ver v USING (bucket) GROUP BY c.doc_id)
-           |SELECT doc_id, score FROM (
-           |  SELECT doc_id, score, row_number() OVER (
-           |    ORDER BY score DESC, doc_id) AS rn FROM scores) t
-           |WHERE rn <= 50 ORDER BY doc_id""".stripMargin,
-      "q_dedup_corpus" ->
-        corpusDedupOracleSql(s"$root/q_dedup_corpus", "onepass"),
-      "q_dedup_corpus_staged" ->
-        corpusDedupOracleSql(s"$root/q_dedup_corpus_staged", "onepass"),
-      // cc/best consume the SHARED standing graph (corpusPairsFixture),
-      // so the oracle re-verifies at ITS mining threshold — not the
-      // one-pass faces' 0.8 (r13 ADVICE: a stricter oracle threshold
-      // silently certifies a smaller closure than the engine computes)
-      "q_dedup_corpus_cc" ->
-        corpusDedupOracleSql(s"$root/q_dedup_corpus_cc", "cc",
-          verifyThreshold = corpusPairsThreshold),
-      "q_dedup_corpus_best" ->
-        corpusDedupOracleSql(s"$root/q_dedup_corpus_best", "best",
-          verifyThreshold = corpusPairsThreshold),
-      // IVF from the staged quantizer: corpus cell = argmin score (the
-      // kernel's ||c||²−2·v·c form, sequential-sum parity with
-      // list_dot_product — same equivalence q_sim_topk already proves for
-      // the cosine), ties to the lower cell id exactly like the kernel's
-      // strict-< scan; queries probe their nprobe=4 nearest cells; exact
-      // rounded cosine ranks the candidates (cos DESC, vec_id ASC)
-      "q_sim_ivf" ->
-        s"""WITH cents AS (SELECT cell, c FROM read_parquet('$root/q_sim_ivf/*.parquet')),
-           |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |sc AS (SELECT vec_id, cell,
-           |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
-           |       FROM v, cents),
-           |assign AS (SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM sc) WHERE rn = 1),
-           |probe AS (SELECT vec_id AS query_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM sc WHERE vec_id < 8) WHERE rn <= 4),
-           |scored AS (
-           |  SELECT p.query_id, a.vec_id,
-           |    round(list_dot_product(q.v, cv.v) /
-           |          (sqrt(list_dot_product(q.v, q.v)) *
-           |           sqrt(list_dot_product(cv.v, cv.v))), 6) AS cos
-           |  FROM probe p JOIN assign a USING (cell)
-           |  JOIN v q ON q.vec_id = p.query_id
-           |  JOIN v cv ON cv.vec_id = a.vec_id
-           |  WHERE a.vec_id <> p.query_id)
-           |SELECT query_id, rank, vec_id, cos FROM (
-           |  SELECT query_id, vec_id, cos,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, vec_id) AS INT) AS rank
-           |  FROM scored) t
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-      // kNN graph from the staged quantizer: assignment = argmin score
-      // (ties → lower cell), EVERY vector probes its nprobe=3 nearest
-      // of 8 cells (the rn <= 3 below — must match the face's knnGraph
-      // call), candidates join on cell, exact rounded cosine + the
-      // (cos DESC, vec_id ASC) top-5 per query
-      "q_knn_graph" ->
-        s"""WITH cents AS (SELECT cell, c FROM read_parquet('$root/q_knn_graph/*.parquet')),
-           |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |sc AS (SELECT vec_id, cell,
-           |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
-           |       FROM v, cents),
-           |assign AS (SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM sc) WHERE rn = 1),
-           |probe AS (SELECT vec_id AS query_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM sc) WHERE rn <= 3),
-           |scored AS (
-           |  SELECT p.query_id, a.vec_id,
-           |    round(list_dot_product(q.v, cv.v) /
-           |          (sqrt(list_dot_product(q.v, q.v)) *
-           |           sqrt(list_dot_product(cv.v, cv.v))), 6) AS cos
-           |  FROM probe p JOIN assign a USING (cell)
-           |  JOIN v q ON q.vec_id = p.query_id
-           |  JOIN v cv ON cv.vec_id = a.vec_id
-           |  WHERE a.vec_id <> p.query_id)
-           |SELECT query_id, rank, vec_id, cos FROM (
-           |  SELECT query_id, vec_id, cos,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, vec_id) AS INT) AS rank
-           |  FROM scored) t
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-      // hard negatives from the staged quantizer: the q_knn_graph
-      // derivation (assignment = argmin score, nprobe=3 probing, cell
-      // join, per-query top-5) plus the wrong-label predicate on the
-      // scored candidates — exactly where the engine applies it
-      "q_hard_negatives" ->
-        s"""WITH cents AS (SELECT cell, c FROM read_parquet('$root/q_hard_negatives/*.parquet')),
-           |v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |sc AS (SELECT vec_id, cell,
-           |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
-           |       FROM v, cents),
-           |assign AS (SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM sc) WHERE rn = 1),
-           |probe AS (SELECT vec_id AS query_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM sc) WHERE rn <= 3),
-           |scored AS (
-           |  SELECT p.query_id, a.vec_id,
-           |    round(list_dot_product(q.v, cv.v) /
-           |          (sqrt(list_dot_product(q.v, q.v)) *
-           |           sqrt(list_dot_product(cv.v, cv.v))), 6) AS cos
-           |  FROM probe p JOIN assign a USING (cell)
-           |  JOIN v q ON q.vec_id = p.query_id
-           |  JOIN v cv ON cv.vec_id = a.vec_id
-           |  WHERE cv.label <> q.label)
-           |SELECT query_id, rank, vec_id, cos FROM (
-           |  SELECT query_id, vec_id, cos,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, vec_id) AS INT) AS rank
-           |  FROM scored) t
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-      // SemDeDup face from the staged quantizer: every vector probes its
-      // nprobe=2 nearest cells (same argmin-score rule as IVF), postings
-      // in over-cap cells are dropped exactly like dropOversized (no-op
-      // at fixture scale, mirrored anyway so the guard semantics are
-      // under the gate), vectors sharing ANY cell pair up once
-      // (id_a < id_b), and the exact rounded cosine decides survival
-      "q_dedup_semantic" ->
-        s"""WITH cents AS (SELECT cell, c FROM read_parquet('$root/q_dedup_semantic/*.parquet')),
-           |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |sc AS (SELECT vec_id, cell,
-           |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
-           |       FROM v, cents),
-           |probe AS (SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM sc) WHERE rn <= 2),
-           |sizes AS (SELECT cell, count(*) AS n FROM probe GROUP BY cell),
-           |ok AS (SELECT p.vec_id, p.cell FROM probe p
-           |       JOIN sizes USING (cell) WHERE n <= 10000),
-           |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-           |         FROM ok a JOIN ok b USING (cell)
-           |         WHERE a.vec_id < b.vec_id),
-           |scored AS (
-           |  SELECT id_a, id_b,
-           |    round(list_dot_product(x.v, y.v) /
-           |          (sqrt(list_dot_product(x.v, x.v)) *
-           |           sqrt(list_dot_product(y.v, y.v))), 6) AS cos
-           |  FROM cand JOIN v x ON x.vec_id = id_a JOIN v y ON y.vec_id = id_b)
-           |SELECT id_a, id_b, cos FROM scored
-           |WHERE cos >= 0.35 ORDER BY id_a, id_b""".stripMargin,
-      "q_dedup_minhash" ->
-        pairJaccardOracleSql(s"$root/q_dedup_minhash", 0.5),
-      "q_minhash_ingest_replay" ->
-        pairJaccardOracleSql(s"$root/q_minhash_ingest_replay", 0.5),
-      "q_dedup_minhash_inc" ->
-        pairJaccardOracleSql(s"$root/q_dedup_minhash_inc", 0.5,
-          extraWhere =
-            "\n  AND id_a % 10 >= 7 AND (id_b % 10 < 7 OR id_a < id_b)"),
-      // simhash from the staged signatures: 8 × 8-bit chunk postings
-      // ((sim >> 8i) & 255 — arithmetic shift then mask, identical in
-      // both engines), over-cap buckets dropped like dropOversized,
-      // pigeonhole candidates (a < b, any shared chunk), hamming =
-      // popcount of the XOR — every step integer-exact
-      "q_dedup_simhash" ->
-        s"""WITH sig AS (SELECT doc_id, sim
-           |             FROM read_parquet('$root/q_dedup_simhash/*.parquet')),
-           |ch AS (SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-           |         (sim >> (CAST(i AS INT) * 8)) & 255 AS chunk_val
-           |       FROM sig, range(0, 8) r(i)),
-           |sizes AS (SELECT chunk_idx, chunk_val, count(*) AS n
-           |          FROM ch GROUP BY 1, 2),
-           |ok AS (SELECT c.doc_id, c.chunk_idx, c.chunk_val FROM ch c
-           |       JOIN sizes USING (chunk_idx, chunk_val) WHERE n <= 1000),
-           |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-           |         FROM ok a JOIN ok b USING (chunk_idx, chunk_val)
-           |         WHERE a.doc_id < b.doc_id),
-           |h AS (SELECT id_a, id_b,
-           |        CAST(bit_count(xor(x.sim, y.sim)) AS INT) AS hamming
-           |      FROM cand JOIN sig x ON x.doc_id = id_a
-           |      JOIN sig y ON y.doc_id = id_b)
-           |SELECT id_a, id_b, hamming FROM h
-           |WHERE hamming <= 6 ORDER BY id_a, id_b""".stripMargin,
-      // hyperplane LSH from the staged plane matrix: bucket = packed sign
-      // bits of v·plane_p (integer sum of disjoint powers of two —
-      // order-free), single-probe bucket equality, exact rounded cosine
-      // ranks within the bucket
-      "q_sim_ann_lsh" ->
-        s"""WITH planes AS (SELECT cell AS p, c
-           |                FROM read_parquet('$root/q_sim_ann_lsh/*.parquet')),
-           |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |sig AS (SELECT vec_id,
-           |          CAST(sum(CASE WHEN list_dot_product(v, c) >= 0
-           |                        THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)
-           |               AS BIGINT) AS bucket
-           |        FROM v, planes GROUP BY vec_id),
-           |scored AS (
-           |  SELECT sq.vec_id AS query_id, sc.vec_id,
-           |    round(list_dot_product(a.v, b.v) /
-           |          (sqrt(list_dot_product(a.v, a.v)) *
-           |           sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-           |  FROM sig sq JOIN sig sc ON sq.bucket = sc.bucket
-           |   AND sq.vec_id < 8 AND sq.vec_id <> sc.vec_id
-           |  JOIN v a ON a.vec_id = sq.vec_id
-           |  JOIN v b ON b.vec_id = sc.vec_id)
-           |SELECT query_id, rank, vec_id, cos FROM (
-           |  SELECT query_id, vec_id, cos,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, vec_id) AS INT) AS rank
-           |  FROM scored) t
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-      // PQ refine leg from the staged ADC shortlist: unit-normalize raw
-      // vectors exactly like the engine (x / sqrt(max(Σx², 1e-300)), the
-      // sequential fold list_dot_product mirrors), then the exact rounded
-      // cosine re-rank picks the top 5
-      "q_sim_pq" ->
-        s"""WITH sl AS (SELECT query_id, vec_id
-           |            FROM read_parquet('$root/q_sim_pq/*.parquet')),
-           |raw AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0 FROM embeddings),
-           |n AS (SELECT vec_id,
-           |        list_transform(v0, x -> x /
-           |          sqrt(greatest(list_dot_product(v0, v0), 1e-300))) AS v
-           |      FROM raw),
-           |scored AS (
-           |  SELECT s.query_id, s.vec_id,
-           |    round(list_dot_product(q.v, c.v) /
-           |          (sqrt(list_dot_product(q.v, q.v)) *
-           |           sqrt(list_dot_product(c.v, c.v))), 6) AS cos
-           |  FROM sl s JOIN n q ON q.vec_id = s.query_id
-           |  JOIN n c ON c.vec_id = s.vec_id)
-           |SELECT query_id, rank, vec_id, cos FROM (
-           |  SELECT query_id, vec_id, cos,
-           |    CAST(row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, vec_id) AS INT) AS rank
-           |  FROM scored) t
-           |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-      // quality classifier from the staged weights: features recomputed
-      // from raw text (the q_text_quality arithmetic, rounded to 6
-      // BEFORE the dot product exactly like the engine), z as the same
-      // left-associated multiply-add chain, keep on the unrounded z
-      "q_quality_classifier" ->
-        s"""WITH wts AS (
-           |  SELECT max(CASE WHEN i = 0 THEN w END) AS w0,
-           |         max(CASE WHEN i = 1 THEN w END) AS w1,
-           |         max(CASE WHEN i = 2 THEN w END) AS w2,
-           |         max(CASE WHEN i = 3 THEN w END) AS w3,
-           |         max(CASE WHEN i = 4 THEN w END) AS w4
-           |  FROM read_parquet('$root/q_quality_classifier/*.parquet')),
-           |f AS (
-           |  SELECT doc_id,
-           |    round(CAST(len(list_filter(toks, t -> list_contains($stopSql, t))) AS DOUBLE)
-           |      / greatest(CAST(len(toks) AS DOUBLE), 1.0), 6) AS f1,
-           |    round(CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE)
-           |      / greatest(CAST(len(toks) AS DOUBLE), 1.0), 6) AS f2,
-           |    round(CAST(len(regexp_extract_all(text, '[[:punct:]]')) AS DOUBLE)
-           |      / greatest(CAST(length(text) AS DOUBLE), 1.0), 6) AS f3,
-           |    round(CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
-           |      / greatest(CAST(length(text) AS DOUBLE), 1.0), 6) AS f4
-           |  FROM (SELECT doc_id, text, $toksSql AS toks FROM documents)),
-           |z AS (SELECT doc_id,
-           |        ((((w0 + w1 * f1) + w2 * f2) + w3 * f3) + w4 * f4) AS zr
-           |      FROM f, wts)
-           |SELECT doc_id, round(zr, 6) AS z_quality, zr > 0 AS keep
-           |FROM z ORDER BY doc_id""".stripMargin,
-      // cluster assignment from the staged quantizer — the q_sim_ivf
-      // assign CTE, exported as a first-class face
-      "q_cluster_assign" ->
-        s"""WITH cents AS (SELECT cell, c
-           |               FROM read_parquet('$root/q_cluster_assign/*.parquet')),
-           |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |sc AS (SELECT vec_id, cell,
-           |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
-           |       FROM v, cents)
-           |SELECT vec_id, cluster FROM (
-           |  SELECT vec_id, cell AS cluster, row_number() OVER (
-           |    PARTITION BY vec_id ORDER BY s, cell) AS rn FROM sc) t
-           |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-      // cluster-balanced epoch mix: assignment re-derived from the staged
-      // quantizer, then the q_mix_epochs copy rule keyed by cluster
-      "q_cluster_balance" ->
-        s"""WITH cents AS (SELECT cell, c
-           |               FROM read_parquet('$root/q_cluster_balance/*.parquet')),
-           |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |sc AS (SELECT vec_id, cell,
-           |         list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
-           |       FROM v, cents),
-           |a AS (SELECT vec_id, cluster FROM (
-           |    SELECT vec_id, cell AS cluster, row_number() OVER (
-           |      PARTITION BY vec_id ORDER BY s, cell) AS rn FROM sc) t
-           |  WHERE rn = 1),
-           |e AS (SELECT vec_id, cluster,
-           |    CAST(CASE cluster WHEN 0 THEN 2.0 WHEN 1 THEN 0.5
-           |      WHEN 2 THEN 1.25 WHEN 3 THEN 1.0 WHEN 4 THEN 0.75
-           |      WHEN 5 THEN 2.5 WHEN 6 THEN 0.25 WHEN 7 THEN 1.5 END
-           |      AS DOUBLE) AS ep
-           |  FROM a),
-           |n AS (SELECT vec_id, cluster,
-           |    CAST(floor(ep) AS BIGINT) +
-           |    CASE WHEN CAST(round((ep - floor(ep)) * 4294967296.0) AS BIGINT)
-           |               >= 4294967296
-           |           OR substr(md5(CAST(vec_id AS VARCHAR)), 1, 8) <
-           |              printf('%08x',
-           |                CAST(round((ep - floor(ep)) * 4294967296.0) AS BIGINT))
-           |         THEN 1 ELSE 0 END AS nc
-           |  FROM e WHERE ep IS NOT NULL)
-           |SELECT vec_id, cluster, unnest(range(0, nc)) AS epoch
-           |FROM n WHERE nc > 0
-           |ORDER BY vec_id, epoch""".stripMargin,
-      // LSH recall: sketch top-5 fully re-derived from the staged plane
-      // matrix (bucket signatures + single-probe join + exact rounded
-      // cosine — the q_sim_ann_lsh derivation reduced to membership),
-      // exact leg from raw vectors, overlap recomputed per query
-      "q_sim_lsh_recall" -> simRecallOracleSql(
-        s"""planes AS (SELECT cell AS p, c
-           |           FROM read_parquet('$root/q_sim_lsh_recall/*.parquet')),
-           |sig AS (SELECT vec_id,
-           |          CAST(sum(CASE WHEN list_dot_product(v, c) >= 0
-           |                        THEN (CAST(1 AS BIGINT) << p) ELSE 0 END)
-           |               AS BIGINT) AS bucket
-           |        FROM v, planes GROUP BY vec_id),
-           |skscored AS (
-           |  SELECT sq.vec_id AS query_id, sc.vec_id,
-           |    round(list_dot_product(a.v, b.v) /
-           |          (sqrt(list_dot_product(a.v, a.v)) *
-           |           sqrt(list_dot_product(b.v, b.v))), 6) AS cos
-           |  FROM sig sq JOIN sig sc ON sq.bucket = sc.bucket
-           |   AND sq.vec_id < 8 AND sq.vec_id <> sc.vec_id
-           |  JOIN v a ON a.vec_id = sq.vec_id
-           |  JOIN v b ON b.vec_id = sc.vec_id),
-           |sk AS (SELECT query_id, vec_id FROM (
-           |    SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, vec_id) AS rn FROM skscored) t
-           |  WHERE rn <= 5)""".stripMargin),
-      // IVF recall: sketch top-5 re-derived from the staged coarse
-      // quantizer (argmin cell assignment + nprobe probing + exact
-      // rounded cosine — the q_sim_ivf derivation reduced to membership)
-      "q_sim_ivf_recall" -> simRecallOracleSql(
-        s"""cents AS (SELECT cell, c
-           |          FROM read_parquet('$root/q_sim_ivf_recall/*.parquet')),
-           |cellsc AS (SELECT vec_id, cell,
-           |             list_dot_product(c, c) - 2 * list_dot_product(v, c) AS s
-           |           FROM v, cents),
-           |assign AS (SELECT vec_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM cellsc) WHERE rn = 1),
-           |probe AS (SELECT vec_id AS query_id, cell FROM (
-           |    SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-           |      ORDER BY s, cell) AS rn FROM cellsc WHERE vec_id < 8) WHERE rn <= 4),
-           |skscored AS (
-           |  SELECT p.query_id, a.vec_id,
-           |    round(list_dot_product(q.v, cv.v) /
-           |          (sqrt(list_dot_product(q.v, q.v)) *
-           |           sqrt(list_dot_product(cv.v, cv.v))), 6) AS cos
-           |  FROM probe p JOIN assign a USING (cell)
-           |  JOIN v q ON q.vec_id = p.query_id
-           |  JOIN v cv ON cv.vec_id = a.vec_id
-           |  WHERE a.vec_id <> p.query_id),
-           |sk AS (SELECT query_id, vec_id FROM (
-           |    SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
-           |      ORDER BY cos DESC, vec_id) AS rn FROM skscored) t
-           |  WHERE rn <= 5)""".stripMargin),
-      // PQ / IVF-PQ recall: sketch top-5 = exact refine of each audit's
-      // own staged ADC shortlist (unit-normalized, the q_sim_pq refine
-      // derivation); shortlist membership stays engine-side
-      "q_sim_pq_recall" -> simRecallOracleSql(
-        pqRefineSketchCte(s"$root/q_sim_pq_recall")),
-      "q_sim_ivfpq_recall" -> simRecallOracleSql(
-        pqRefineSketchCte(s"$root/q_sim_ivfpq_recall")),
-      // minhash banding recall: the exact lang-blocked uncapped pair set
-      // is recomputed from raw text (the q_dedup_ngram_jaccard
-      // derivation), the staged sketch pair set is consumed as data, and
-      // the overlap fraction is recomputed — the exact shape of
-      // Dedup.pairRecallAudit (n_exact=0 → recall 1.0)
-      "q_dedup_minhash_recall" ->
-        s"""WITH d AS (
-           |  SELECT doc_id, lang, list_distinct($shinglesSql) AS sh
-           |  FROM (SELECT doc_id, lang, $toksSql AS toks FROM documents)),
-           |ex AS (
-           |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-           |  FROM d a JOIN d b ON a.lang = b.lang AND a.doc_id < b.doc_id
-           |  WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-           |        CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6)
-           |        >= 0.5),
-           |skp AS (SELECT id_a, id_b
-           |        FROM read_parquet('$root/q_dedup_minhash_recall/*.parquet')),
-           |ne AS (SELECT count(*) AS n_exact FROM ex),
-           |nh AS (SELECT count(*) AS n_hit FROM ex JOIN skp USING (id_a, id_b))
-           |SELECT ne.n_exact, nh.n_hit,
-           |  CASE WHEN ne.n_exact = 0 THEN 1.0
-           |       ELSE round(CAST(nh.n_hit AS DOUBLE) / ne.n_exact, 4)
-           |  END AS recall
-           |FROM ne, nh""".stripMargin)
-  }
-
-  def oracleSql: Map[String, String] = staticOracleSql ++ dynamicOracleSql
-
-  private val staticOracleSql: Map[String, String] = Map(
-
-    // ---- URL / domain faces: the oracle derives the canonical domain
-    // from the generator arithmetic (lower(source) || '.example.com') —
-    // a deliberately different formulation from the engine's regex
-    // canonicalization pipeline, so any engine slip on a planted scheme/
-    // userinfo/www/case/port/root-dot variant breaks the hash
-    "q_url_domains" ->
-      s"""SELECT lower(source) || '.example.com' AS domain,
-         |  count(*) AS n_docs,
-         |  CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
-         |FROM documents GROUP BY 1 ORDER BY domain""".stripMargin,
-
-    // the streamed ledger must fold to the identical whole-corpus answer
-    "q_url_ingest_replay" ->
-      s"""SELECT lower(source) || '.example.com' AS domain,
-         |  count(*) AS n_docs,
-         |  CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
-         |FROM documents GROUP BY 1 ORDER BY domain""".stripMargin,
-
-    "q_url_topk" ->
-      s"""WITH d AS (SELECT lower(source) || '.example.com' AS domain,
-         |             count(*) AS n_docs,
-         |             CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
-         |           FROM documents GROUP BY 1),
-         |top AS (SELECT domain || ':' || n_docs || ':' || n_tokens AS entry,
-         |          n_tokens AS nt, domain AS dd
-         |        FROM d ORDER BY n_tokens DESC, domain LIMIT 5)
-         |SELECT (SELECT count(*) FROM d) AS n_domains,
-         |  (SELECT CAST(sum(n_docs) AS BIGINT) FROM d) AS n_docs,
-         |  (SELECT CAST(sum(n_tokens) AS BIGINT) FROM d) AS n_tokens,
-         |  (SELECT string_agg(entry, ',' ORDER BY nt DESC, dd) FROM top)
-         |    AS top_domains""".stripMargin,
-
-    "q_domain_filter" ->
-      s"""SELECT doc_id, lower(source) || '.example.com' AS domain, lang
-         |FROM documents
-         |WHERE lower(source) || '.example.com' NOT IN
-         |  (${urlBlocklist.map("'" + _ + "'").mkString(", ")})
-         |ORDER BY doc_id""".stripMargin,
-
-    // the canonical URL per planted-variant class, straight from the
-    // generator arithmetic: scheme from mod 4 (the engine's default
-    // kicks in on the empty class), scheme-AWARE default-port strip
-    // from mod 5 × mod 4, resolved path from mod 3, sorted+stripped
-    // query from mod 4 — the engine runs the whole regex/HOF
-    // canonicalization pipeline; the oracle needs none of it
-    "q_url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 4 IN (1, 2) THEN 'https' ELSE 'http' END
-        |      AS scheme,
-        |    lower(source) || '.example.com' AS host
-        |  FROM documents)
-        |SELECT doc_id,
-        |  scheme || '://' || host ||
-        |  CASE CAST(doc_id % 5 AS INT)
-        |    WHEN 0 THEN CASE WHEN scheme = 'https' THEN ':80' ELSE '' END
-        |    WHEN 1 THEN CASE WHEN scheme = 'http' THEN ':443' ELSE '' END
-        |    WHEN 2 THEN ':8080' ELSE '' END ||
-        |  CASE CAST(doc_id % 3 AS INT)
-        |    WHEN 0 THEN '/a/p/' WHEN 1 THEN '/x/p/' ELSE '/p/' END ||
-        |  CAST(doc_id AS VARCHAR) ||
-        |  CASE CAST(doc_id % 4 AS INT)
-        |    WHEN 0 THEN '?a=1&b=2' WHEN 2 THEN '?a=2&z=9' ELSE '' END
-        |  AS canonical_url
-        |FROM u ORDER BY doc_id""".stripMargin,
-
-    // the normalized spelling per percent class, stated outright:
-    // unreserved escapes decoded, reserved ones uppercase-hex'd, the
-    // %2E dot-segment popped, malformed % untouched, control unchanged
-    "q_url_percent" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 4 AS INT)
-        |    WHEN 0 THEN 'http://t.example.com/~user/path%2Fx/' ||
-        |      CAST(doc_id AS VARCHAR) || '?q=AB'
-        |    WHEN 1 THEN 'http://t.example.com/a%2Fb/' ||
-        |      CAST(doc_id AS VARCHAR) || '?x=%3D1'
-        |    WHEN 2 THEN 'http://t.example.com/b%zz/' ||
-        |      CAST(doc_id AS VARCHAR)
-        |    ELSE 'http://t.example.com/p/' || CAST(doc_id AS VARCHAR)
-        |      || '?a=1' END AS canonical_url
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // URL-dedup survivors re-derived from the construction: canonical
-    // spelling is a pure function of page = doc_id % 97, so survivors
-    // are min(doc_id) and group sizes the page populations
-    "q_url_dedup" ->
-      """WITH c AS (SELECT doc_id,
-        |    'http://dup.example.com/p/' || CAST(doc_id % 97 AS VARCHAR) ||
-        |      CASE WHEN (doc_id % 97) % 2 = 0 THEN '?x=1' ELSE '' END
-        |      AS canonical_url
-        |  FROM documents)
-        |SELECT min(doc_id) AS doc_id, canonical_url,
-        |  CAST(count(*) AS BIGINT) AS n_dups
-        |FROM c GROUP BY canonical_url ORDER BY doc_id""".stripMargin,
-
-    // trap signals restated per mod class (depth/dup/params as stated
-    // constants, url_len off the reconstructed URL, verdict = the
-    // first four classes)
-    "q_url_traps" ->
-      """WITH u AS (SELECT doc_id,
-        |  CASE CAST(doc_id % 6 AS INT)
-        |    WHEN 0 THEN 'http://t.example.com/cal/2026/01/2026/01/2026/01/d'
-        |      || CAST(doc_id AS VARCHAR)
-        |    WHEN 1 THEN 'http://t.example.com/s1/s2/s3/s4/s5/s6/s7/s8/s9/s10'
-        |      || '/s11/s12/s13/s14/s15/s16/s17/d' || CAST(doc_id AS VARCHAR)
-        |    WHEN 2 THEN 'http://t.example.com/p?a1=1&a2=2&a3=3&a4=4&a5=5'
-        |      || '&a6=6&a7=7&a8=8&a9=9&a10=10&a11=11&a12=12&a13='
-        |      || CAST(doc_id AS VARCHAR)
-        |    WHEN 3 THEN 'http://t.example.com/' || repeat('x', 520)
-        |      || '?id=' || CAST(doc_id AS VARCHAR)
-        |    ELSE 'http://t.example.com/p/' || CAST(doc_id AS VARCHAR)
-        |      || '?a=1' END AS url
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(CASE CAST(doc_id % 6 AS INT) WHEN 0 THEN 8 WHEN 1 THEN 18
-        |    WHEN 2 THEN 1 WHEN 3 THEN 1 ELSE 2 END AS INT) AS path_depth,
-        |  CAST(CASE WHEN doc_id % 6 = 0 THEN 4 ELSE 0 END AS INT)
-        |    AS n_dup_segments,
-        |  CAST(CASE CAST(doc_id % 6 AS INT) WHEN 0 THEN 0 WHEN 1 THEN 0
-        |    WHEN 2 THEN 13 ELSE 1 END AS INT) AS n_params,
-        |  CAST(len(url) AS INT) AS url_len,
-        |  doc_id % 6 < 4 AS trap
-        |FROM u ORDER BY doc_id""".stripMargin,
-
-    // registrable domain per mod class, straight from the generator
-    // arithmetic (the engine runs candidate explode + suffix join +
-    // longest-match arg-max + fallback; the oracle needs none of it)
-    "q_reg_domains" ->
-      s"""SELECT CASE CAST(doc_id % 4 AS INT)
-         |    WHEN 0 THEN lower(source) || '.example.com'
-         |    WHEN 1 THEN 'blog.co.uk'
-         |    WHEN 2 THEN 'mirror.org'
-         |    ELSE 'intra.internal' END AS reg_domain,
-         |  count(*) AS n_docs
-         |FROM documents GROUP BY 1 ORDER BY reg_domain""".stripMargin,
-
-    // each mod class's registrable domain from the generator arithmetic:
-    // plain 'com' (suffix+1 collapses per class), plain multi-label
-    // 'co.uk', the EXCEPTION (!www.ck → www.ck itself registrable), the
-    // WILDCARD (*.ck → <label>.ck is the suffix, so the whole 3-label
-    // host is registrable and per-source rows survive), and the
-    // unlisted-TLD fallback
-    "q_reg_domains_psl" ->
-      s"""SELECT CASE CAST(doc_id % 5 AS INT)
-         |    WHEN 0 THEN 'example.com'
-         |    WHEN 1 THEN 'blog.co.uk'
-         |    WHEN 2 THEN 'www.ck'
-         |    WHEN 3 THEN lower(source) || '.bar.ck'
-         |    ELSE 'unlisted.test' END AS reg_domain,
-         |  count(*) AS n_docs
-         |FROM documents GROUP BY 1 ORDER BY reg_domain""".stripMargin,
-
-    // each reference class's resolved canonical target straight from
-    // the planting arithmetic (the engine runs the RFC 3986 dispatch +
-    // path merge + remove_dot_segments; the oracle needs none of it)
-    "q_url_resolve" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 8 AS INT)
-        |    WHEN 0 THEN 'http://' || source || '.example.com/b/c/g'
-        |    WHEN 1 THEN 'http://' || source || '.example.com/b/c/g'
-        |    WHEN 2 THEN 'http://' || source || '.example.com/b/g'
-        |    WHEN 3 THEN 'http://' || source || '.example.com/g'
-        |    WHEN 4 THEN 'http://other.example.net/g'
-        |    WHEN 5 THEN 'http://' || source || '.example.com/b/c/d?y=1'
-        |    WHEN 6 THEN 'http://' || source || '.example.com/b/c/d?bq=1'
-        |    ELSE 'https://abs.example.org/z' END AS resolved
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // both planted anchors' canonical targets per doc, restated from
-    // the href arithmetic (link_no 0 = the double-quoted ref, 1 = the
-    // single-quoted one — the extraction-order contract)
-    "q_link_extract" ->
-      """WITH l AS (
-        |  SELECT doc_id, CAST(0 AS INT) AS link_no,
-        |    CASE CAST(doc_id % 4 AS INT)
-        |      WHEN 0 THEN 'http://ext' || CAST(doc_id % 5 AS VARCHAR) ||
-        |        '.example.org/p'
-        |      WHEN 1 THEN 'http://cdn.example.net/lib'
-        |      WHEN 2 THEN 'http://' || source || '.example.com/local/' ||
-        |        CAST(doc_id AS VARCHAR)
-        |      ELSE 'http://' || source || '.example.com/dir/sub/page'
-        |      END AS target
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, CAST(1 AS INT),
-        |    CASE CAST(doc_id % 3 AS INT)
-        |      WHEN 0 THEN 'http://' || source || '.example.com/up/' ||
-        |        CAST(doc_id AS VARCHAR)
-        |      WHEN 1 THEN 'http://' || source || '.example.com/dir/page' ||
-        |        CAST(doc_id AS VARCHAR) || '.html?v=2'
-        |      ELSE 'http://' || source || '.example.com/dir/a/c' END
-        |  FROM documents)
-        |SELECT doc_id, link_no, target FROM l
-        |ORDER BY doc_id, link_no""".stripMargin,
-
-    // the host-graph edges those pages induce: only classes 0/1 of the
-    // double-quoted ref leave the page's own host (everything else is a
-    // self edge and must NOT appear)
-    "q_host_graph" -> hostGraphOracleSql,
-
-    // the 3-batch streamed ingest's standing edge sums must land on the
-    // batch face's derivation verbatim (edge counts are additive)
-    "q_link_ingest_replay" -> hostGraphOracleSql,
-
-    "q_host_rank" -> hostRankOracleSql,
-
-    // per-target anchor sets re-derived from the planting arithmetic:
-    // pair CTE (targetA × 'a{id%10}', targetB × 'b{id%7}'), then the
-    // same distinct-sort-cap aggregation with list HOFs
-    "q_anchor_text" ->
-      """WITH a AS (
-        |  SELECT CASE CAST(doc_id % 4 AS INT)
-        |      WHEN 0 THEN 'http://ext' || CAST(doc_id % 5 AS VARCHAR) ||
-        |        '.example.org/p'
-        |      WHEN 1 THEN 'http://cdn.example.net/lib'
-        |      WHEN 2 THEN 'http://' || source || '.example.com/local/' ||
-        |        CAST(doc_id AS VARCHAR)
-        |      ELSE 'http://' || source || '.example.com/dir/sub/page'
-        |      END AS target,
-        |    'a' || CAST(doc_id % 10 AS VARCHAR) AS anchor
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT CASE CAST(doc_id % 3 AS INT)
-        |      WHEN 0 THEN 'http://' || source || '.example.com/up/' ||
-        |        CAST(doc_id AS VARCHAR)
-        |      WHEN 1 THEN 'http://' || source || '.example.com/dir/page' ||
-        |        CAST(doc_id AS VARCHAR) || '.html?v=2'
-        |      ELSE 'http://' || source || '.example.com/dir/a/c' END,
-        |    'b' || CAST(doc_id % 7 AS VARCHAR)
-        |  FROM documents)
-        |SELECT target, CAST(count(*) AS BIGINT) AS n_anchors,
-        |  array_to_string(
-        |    list_slice(list_sort(list_distinct(list(anchor))), 1, 5), ',')
-        |    AS anchors
-        |FROM a GROUP BY target ORDER BY target""".stripMargin,
-
-    // every head field restated from the metaPages arithmetic: the
-    // lang/title/description/og/robots/canonical presence classes,
-    // spelling noise (case, quotes, attribute order, whitespace) all
-    // collapsing to the stated values, the relative canonical resolved
-    // to its absolute form, and the none=both robots class
-    "q_html_meta" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 2 THEN NULL
-        |       WHEN doc_id % 6 = 0 THEN 'xx' ELSE lang END AS lang_attr,
-        |  CASE WHEN doc_id % 7 = 3 THEN NULL
-        |       ELSE 'Doc ' || CAST(doc_id % 11 AS VARCHAR) || ' ' || source
-        |       END AS title,
-        |  CASE WHEN doc_id % 4 = 1 THEN NULL
-        |       ELSE 'd' || CAST(doc_id % 13 AS VARCHAR) || ' summary'
-        |       END AS description,
-        |  CASE WHEN doc_id % 5 = 0
-        |       THEN 'og' || CAST(doc_id % 9 AS VARCHAR) END AS og_title,
-        |  CASE WHEN doc_id % 4 = 3 THEN NULL
-        |       WHEN doc_id % 2 = 0 THEN 'http://canon.example.com/c/' ||
-        |         CAST(doc_id % 50 AS VARCHAR)
-        |       ELSE 'http://' || source || '.example.com/c/' ||
-        |         CAST(doc_id % 50 AS VARCHAR)
-        |       END AS canonical,
-        |  doc_id % 6 IN (0, 2) AS noindex,
-        |  doc_id % 6 IN (1, 2) AS nofollow
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // meta-refresh redirects restated per mod class: the quoted
-    // absolute target with its tracking param stripped and the rest
-    // kept, the relative target resolved through the page URL or the
-    // mod-3 base-href, the bare comma-form absolute path on the page
-    // host; reload-only and tag-less classes absent
-    "q_meta_refresh" ->
-      """SELECT doc_id,
-        |  CAST(CASE CAST(doc_id % 5 AS INT)
-        |    WHEN 0 THEN doc_id % 30 WHEN 1 THEN doc_id % 7
-        |    ELSE 5 END AS INT) AS delay_s,
-        |  CASE CAST(doc_id % 5 AS INT)
-        |    WHEN 0 THEN 'http://go.example.com/t/' ||
-        |      CAST(doc_id % 40 AS VARCHAR) || '?b=2'
-        |    WHEN 1 THEN 'http://' || source || '.example.com/' ||
-        |      CASE WHEN doc_id % 3 = 0 THEN 'b/r/' ELSE 'r/' END ||
-        |      CAST(doc_id % 20 AS VARCHAR)
-        |    ELSE 'http://' || source || '.example.com/abs/' ||
-        |      CAST(doc_id % 7 AS VARCHAR)
-        |    END AS target
-        |FROM documents WHERE doc_id % 5 < 3 ORDER BY doc_id""".stripMargin,
-
-    // per-page canonical target from the same arithmetic (self-cluster
-    // when undeclared), grouped: size + lexicographically-first member
-    "q_canonical_cluster" -> canonicalClusterOracleSql,
-
-    // the streamed ledger must land on the batch derivation verbatim
-    // (the additive/min-merge read-time fold is the only new machinery)
-    "q_meta_ingest_replay" -> canonicalClusterOracleSql,
-
-    // both channels stated per mod class: the header verdict (class 1
-    // only — the class-2 decoy directives never trip it), the payload
-    // meta verdict, and their disjunction
-    "q_warc_noindex" ->
-      """SELECT doc_id,
-        |  doc_id % 5 = 1 AS hdr_noindex,
-        |  doc_id % 3 = 0 AS meta_noindex,
-        |  NOT (doc_id % 5 = 1 OR doc_id % 3 = 0) AS indexable
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the same collapse AFTER the noindex gate (robots-meta classes
-    // "noindex" and "NONE" drop) — sizes/representatives shift exactly
-    // where the directive bites
-    "q_index_admission" ->
-      """WITH tgt AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 4 = 3 THEN 'http://' || source ||
-        |        '.example.com/m/' || CAST(doc_id AS VARCHAR)
-        |      WHEN doc_id % 2 = 0 THEN 'http://canon.example.com/c/' ||
-        |        CAST(doc_id % 50 AS VARCHAR)
-        |      ELSE 'http://' || source || '.example.com/c/' ||
-        |        CAST(doc_id % 50 AS VARCHAR) END AS canonical,
-        |    'http://' || source || '.example.com/m/' ||
-        |      CAST(doc_id AS VARCHAR) AS page_cu
-        |  FROM documents WHERE doc_id % 6 NOT IN (0, 2))
-        |SELECT canonical, CAST(count(*) AS BIGINT) AS n_pages,
-        |  min(page_cu) AS min_url
-        |FROM tgt GROUP BY canonical ORDER BY canonical""".stripMargin,
-
-    // survivors + document-order link numbers from the nofollowPages
-    // arithmetic: the href-less decoy holds link_no 0, the plain link
-    // (1) survives everywhere, the explicit-nofollow (2) never does,
-    // the rel-cycle slot (3) survives on its "me"/"nofollower" token
-    // classes, and the meta-nofollow pages (mod-7 class 0) vanish
-    "q_nofollow_links" ->
-      """WITH l AS (
-        |  SELECT doc_id, 1 AS link_no,
-        |    'http://' || source || '.example.com/k/' ||
-        |      CAST(doc_id % 20 AS VARCHAR) AS target
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id, 3,
-        |    'http://' || source || '.example.com/u/' ||
-        |      CAST(doc_id % 9 AS VARCHAR)
-        |  FROM documents WHERE doc_id % 7 <> 0 AND doc_id % 3 <> 0)
-        |SELECT doc_id, CAST(link_no AS INT) AS link_no, target FROM l
-        |ORDER BY doc_id, link_no""".stripMargin,
-
-    // every alternate row from the hreflangPages arithmetic: the self
-    // variant (lang lowercased), the resolved es variant, the x-default
-    // class — decoys absent by construction
-    "q_hreflang" ->
-      """WITH a AS (
-        |  SELECT doc_id, lang AS hreflang,
-        |    'http://' || source || '.example.com/h/' ||
-        |      CAST(doc_id AS VARCHAR) AS target
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, 'es',
-        |    'http://' || source || '.example.com/es/' ||
-        |      CAST(doc_id AS VARCHAR)
-        |  FROM documents WHERE doc_id % 3 <> 1
-        |  UNION ALL
-        |  SELECT doc_id, 'x-default',
-        |    'http://' || source || '.example.com/h/' ||
-        |      CAST(doc_id AS VARCHAR)
-        |  FROM documents WHERE doc_id % 4 = 0)
-        |SELECT doc_id, hreflang, target FROM a
-        |ORDER BY doc_id, hreflang, target""".stripMargin,
-
-    // the polite frontier: the same derivation minus the rel=nofollow
-    // anchor class and the meta-nofollow pages' rows
-    "q_frontier_polite" -> (politeFrontierOracleCtes +
-      """
-        |SELECT host, url, n_refs, rank FROM ranked WHERE rank <= 2
-        |ORDER BY host, rank""".stripMargin),
-
-    // the trap-gated frontier: the oracle derives the frontier from the
-    // CLEAN /k/ links alone — the two constant trap targets (which
-    // would otherwise take ranks 1–2 on every host) exist only if the
-    // gate failed
-    "q_frontier_traps" ->
-      """WITH cand AS (
-        |  SELECT 't' || CAST(doc_id % 4 AS VARCHAR) || '.example.com'
-        |      AS host,
-        |    'http://t' || CAST(doc_id % 4 AS VARCHAR) ||
-        |      '.example.com/k/' || CAST(doc_id % 20 AS VARCHAR) AS url
-        |  FROM documents),
-        |agg AS (SELECT host, url, CAST(count(*) AS BIGINT) AS n_refs
-        |        FROM cand GROUP BY host, url),
-        |r AS (SELECT host, url, n_refs,
-        |        CAST(row_number() OVER (PARTITION BY host
-        |          ORDER BY n_refs DESC, url) AS INT) AS rank
-        |      FROM agg)
-        |SELECT host, url, n_refs, rank FROM r WHERE rank <= 3
-        |ORDER BY host, rank""".stripMargin,
-
-    // the whole frontier re-derived from the planting arithmetic:
-    // candidate targets + in-link counts from the href CASEs, seen =
-    // the planted /local subset (doc_id % 8 = 2), the robots verdicts
-    // stated as two host-prefix drops, rank by (n_refs desc, url)
-    "q_crawl_frontier" -> (frontierOracleCtes +
-      """
-        |SELECT host, url, n_refs, rank FROM ranked WHERE rank <= 2
-        |ORDER BY host, rank""".stripMargin),
-
-    // the schedule on top of the same frontier derivation: delay from
-    // the planted Crawl-delay arithmetic (src hosts 2 + N%5, ext1 = 7,
-    // everything else the 1 s default), offset = (rank−1) × delay
-    "q_fetch_schedule" -> (frontierOracleCtes +
-      """,
-        |delayed AS (SELECT host, url, rank,
-        |    CASE WHEN host LIKE 'src%' THEN 2 +
-        |      CAST(regexp_extract(host, '^src([0-9]+)', 1) AS INT) % 5
-        |    WHEN host = 'ext1.example.org' THEN 7 ELSE 1 END AS delay_s
-        |  FROM ranked WHERE rank <= 2)
-        |SELECT host, url, rank, CAST(delay_s AS INT) AS delay_s,
-        |  CAST((rank - 1) * delay_s AS INT) AS fetch_offset_s
-        |FROM delayed ORDER BY host, rank""".stripMargin),
-
-    // every sitemap entry re-derived from the render arithmetic: the
-    // mod-3 class carries the entity-escaped query (the oracle states
-    // the DECODED form), optional fields NULL off their mod classes,
-    // the index rows constant
-    "q_sitemap_scan" ->
-      """WITH u AS (SELECT doc_id, source,
-        |    'http://' || source || '.example.com/p/' ||
-        |      CAST(doc_id AS VARCHAR) ||
-        |      CASE WHEN doc_id % 3 = 0 THEN '?a=1&b=2' ELSE '' END AS loc,
-        |    CASE WHEN doc_id % 4 = 0 THEN '2026-02-' ||
-        |      lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') END AS lastmod,
-        |    CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'daily'
-        |      WHEN 1 THEN 'weekly' END AS changefreq,
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN '0.' || CAST(doc_id % 10 AS VARCHAR) END AS priority
-        |  FROM documents)
-        |SELECT kind, loc, lastmod, changefreq, priority FROM (
-        |  SELECT 'urlset' AS kind, loc, lastmod, changefreq, priority
-        |  FROM u
-        |  UNION ALL
-        |  SELECT 'index', 'http://site.example.com/sitemap_' ||
-        |    CAST(i AS VARCHAR) || '.xml', '2026-03-01', NULL, NULL
-        |  FROM range(2) t(i)) z
-        |ORDER BY kind, loc""".stripMargin,
-
-    // each redirect class's canonical (src, dst) from the render
-    // arithmetic — the relative and scheme-relative classes state the
-    // RESOLVED absolute form, the 301 class points at the next record's
-    // URI (the chain head — one doc_id+1 self-join re-derives the
-    // successor's host; when the corpus' LAST doc is the 301 class the
-    // fixture emits the moved.example.net fallback instead, so the d2
-    // miss COALESCEs to it — without this, a max doc_id ≡ 1 (mod 4)
-    // corpus would render NULL dst and break on doc-count luck); the
-    // 200 class is absent
-    "q_redirect_map" ->
-      """SELECT d.doc_id,
-        |  CAST(CASE CAST(d.doc_id % 4 AS INT) WHEN 1 THEN 301
-        |    WHEN 2 THEN 302 ELSE 308 END AS INT) AS status,
-        |  'http://' || d.source || '.example.com/p/' ||
-        |    CAST(d.doc_id AS VARCHAR) AS src,
-        |  CASE CAST(d.doc_id % 4 AS INT)
-        |    WHEN 1 THEN COALESCE(
-        |      'http://' || d2.source || '.example.com/p/' ||
-        |        CAST(d.doc_id + 1 AS VARCHAR),
-        |      'http://moved.example.net/p/' || CAST(d.doc_id AS VARCHAR))
-        |    WHEN 2 THEN 'http://' || d.source || '.example.com/new/' ||
-        |      CAST(d.doc_id AS VARCHAR)
-        |    ELSE 'http://alt.example.org/' || CAST(d.doc_id AS VARCHAR)
-        |    END AS dst
-        |FROM documents d
-        |LEFT JOIN documents d2 ON d2.doc_id = d.doc_id + 1
-        |WHERE d.doc_id % 4 <> 0 ORDER BY d.doc_id""".stripMargin,
-
-    // the collapse: 301 heads resolve THROUGH their 302 successor to
-    // its /new target (hops 2), the 302/308 classes are terminal
-    // (hops 1) — finals and hop counts all from the same self-join;
-    // a last-row 301 has NO successor record (the fixture's
-    // moved.example.net fallback), so it is terminal at hops 1
-    "q_redirect_collapse" ->
-      """SELECT d.doc_id,
-        |  'http://' || d.source || '.example.com/p/' ||
-        |    CAST(d.doc_id AS VARCHAR) AS src,
-        |  CASE CAST(d.doc_id % 4 AS INT)
-        |    WHEN 1 THEN COALESCE(
-        |      'http://' || d2.source || '.example.com/new/' ||
-        |        CAST(d.doc_id + 1 AS VARCHAR),
-        |      'http://moved.example.net/p/' || CAST(d.doc_id AS VARCHAR))
-        |    WHEN 2 THEN 'http://' || d.source || '.example.com/new/' ||
-        |      CAST(d.doc_id AS VARCHAR)
-        |    ELSE 'http://alt.example.org/' || CAST(d.doc_id AS VARCHAR)
-        |    END AS dst,
-        |  CAST(CASE WHEN d.doc_id % 4 = 1 AND d2.doc_id IS NOT NULL
-        |    THEN 2 ELSE 1 END AS INT) AS hops
-        |FROM documents d
-        |LEFT JOIN documents d2 ON d2.doc_id = d.doc_id + 1
-        |WHERE d.doc_id % 4 <> 0 ORDER BY d.doc_id""".stripMargin,
-
-    // each mod class's RFC 9309 verdict stated directly: classes 0/2/4
-    // hit a longest-match Disallow (prefix, *…$ wildcard, *-group),
-    // 1/3 a longer/only Allow, 5 the exact-length tie (→ allow), 6 a
-    // host with no robots.txt (→ allow)
-    "q_robots_filter" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 7 AS INT)
-        |    WHEN 4 THEN 'b.example.com' WHEN 5 THEN 'b.example.com'
-        |    WHEN 6 THEN 'c.example.com' ELSE 'a.example.com' END AS host,
-        |  CASE CAST(doc_id % 7 AS INT)
-        |    WHEN 0 THEN '/private/x' WHEN 1 THEN '/private/pub/y'
-        |    WHEN 2 THEN '/doc/f' WHEN 3 THEN '/ok/z' WHEN 4 THEN '/tmp/x'
-        |    WHEN 5 THEN '/dup' ELSE '/any/' END ||
-        |    CAST(doc_id AS VARCHAR) ||
-        |    CASE WHEN doc_id % 7 = 2 THEN '.pdf' ELSE '' END AS path,
-        |  doc_id % 7 NOT IN (0, 2, 4) AS allowed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // robots-fetch-status verdicts stated per mod class: 0 hits the
-    // version-stripped graftbot group's Disallow (→ false), 1 misses it
-    // (→ true), 2 is the 404 host (body ignored → true), 3 the 503 host
-    // (body ignored → false), 4 the longest-prefix host where only the
-    // /b rule governs (→ true), 5 its /b hit (→ false), 6 a host with
-    // no robots row at all (→ true)
-    "q_robots_status" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 7 AS INT)
-        |    WHEN 0 THEN 'ok.example.com' WHEN 1 THEN 'ok.example.com'
-        |    WHEN 2 THEN 'gone.example.com' WHEN 3 THEN 'down.example.com'
-        |    WHEN 4 THEN 'pref.example.com' WHEN 5 THEN 'pref.example.com'
-        |    ELSE 'nofile.example.com' END AS host,
-        |  CASE CAST(doc_id % 7 AS INT)
-        |    WHEN 0 THEN '/private/x' WHEN 1 THEN '/pub/x'
-        |    WHEN 2 THEN '/any/' WHEN 3 THEN '/any/' WHEN 4 THEN '/a/'
-        |    WHEN 5 THEN '/b/' ELSE '/' END ||
-        |    CAST(doc_id AS VARCHAR) AS path,
-        |  doc_id % 7 NOT IN (0, 3, 5) AS allowed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the 200-class validators from the render arithmetic; redirect
-    // rows filtered out by status
-    "q_recrawl_ledger" ->
-      """SELECT doc_id,
-        |  'http://' || source || '.example.com/p/' ||
-        |    CAST(doc_id AS VARCHAR) AS url,
-        |  '"v' || CAST(doc_id AS VARCHAR) || '"' AS etag,
-        |  'Sat, 01 Feb 2026 00:' ||
-        |    lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') ||
-        |    ':00 GMT' AS last_modified
-        |FROM documents WHERE doc_id % 4 = 0 ORDER BY doc_id""".stripMargin,
-
-    // the three verdict classes from the two fixtures' shared
-    // arithmetic: query-spelled locs (mod 3) and redirect-class URLs
-    // (mod 4 ≠ 0) never match the 200-validator ledger → fetch; the
-    // matched class compares sitemap lastmod 2026-02-(id%28+1) against
-    // the ledger's Last-Modified date 2026-02-01 → skip exactly when
-    // id % 28 = 0, else revalidate
-    "q_recrawl_decide" ->
-      """SELECT doc_id,
-        |  'http://' || source || '.example.com/p/' ||
-        |    CAST(doc_id AS VARCHAR) ||
-        |    CASE WHEN doc_id % 3 = 0 THEN '?a=1&b=2' ELSE '' END AS url,
-        |  CASE WHEN doc_id % 3 = 0 OR doc_id % 4 <> 0 THEN 'fetch'
-        |       WHEN doc_id % 28 = 0 THEN 'skip'
-        |       ELSE 'revalidate' END AS verdict
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // each cadence verdict stated per mod class: query locs miss the
-    // ledger; the lastmod class (mod 4 = 0, non-query) splits by the
-    // planted capture date (January copy stale → revalidate via its
-    // even-id ETag; March 1 copy → skip); the weekly class (mod 3 = 1)
-    // is fresh-by-cadence only at age 6 days (mod 4 = 3), else
-    // validator-split; the no-cadence class is validator-split
-    "q_recrawl_cadence" ->
-      """SELECT doc_id,
-        |  'http://' || source || '.example.com/p/' ||
-        |    CAST(doc_id AS VARCHAR) ||
-        |    CASE WHEN doc_id % 3 = 0 THEN '?a=1&b=2' ELSE '' END AS url,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'fetch'
-        |       WHEN doc_id % 4 = 0 THEN
-        |         CASE WHEN doc_id % 8 = 0 THEN 'revalidate' ELSE 'skip' END
-        |       WHEN doc_id % 3 = 1 THEN
-        |         CASE WHEN doc_id % 4 = 3 THEN 'skip'
-        |              WHEN doc_id % 2 = 0 THEN 'revalidate'
-        |              ELSE 'fetch' END
-        |       WHEN doc_id % 2 = 0 THEN 'revalidate'
-        |       ELSE 'fetch' END AS verdict
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the revalidation fold restated as the same FULL OUTER join over
-    // the two arithmetic subsets: body spliced from prior (304/5xx/
-    // untouched), fresh (200), or nulled (404/410, orphan 304); all
-    // seven verdict classes stated
-    "q_revalidate_fold" ->
-      """WITH p AS (SELECT 'http://' || source || '.example.com/p/' ||
-        |    CAST(doc_id AS VARCHAR) AS url, text AS pb
-        |  FROM documents WHERE doc_id % 5 <> 4),
-        |f AS (SELECT 'http://' || source || '.example.com/p/' ||
-        |    CAST(doc_id AS VARCHAR) AS url,
-        |  CAST(CASE CAST(doc_id % 7 AS INT)
-        |    WHEN 0 THEN 200 WHEN 1 THEN 304 WHEN 2 THEN 404
-        |    WHEN 3 THEN 200 WHEN 4 THEN 304 WHEN 5 THEN 503
-        |    ELSE 410 END AS INT) AS status,
-        |  CASE WHEN doc_id % 7 IN (0, 3) THEN text || ' v2' END AS fb
-        |  FROM documents WHERE doc_id % 3 <> 2)
-        |SELECT COALESCE(p.url, f.url) AS url,
-        |  CASE WHEN f.status = 200 THEN f.fb
-        |       WHEN f.status IN (404, 410)
-        |         OR (f.status = 304 AND p.pb IS NULL) THEN NULL
-        |       ELSE p.pb END AS body,
-        |  CASE WHEN f.status IS NULL THEN 'kept'
-        |       WHEN f.status = 200 THEN
-        |         CASE WHEN p.pb IS NULL THEN 'added' ELSE 'updated' END
-        |       WHEN f.status = 304 THEN
-        |         CASE WHEN p.pb IS NULL THEN 'refetch' ELSE 'unchanged' END
-        |       WHEN f.status IN (404, 410) THEN 'retired'
-        |       ELSE 'kept' END AS verdict
-        |FROM p FULL OUTER JOIN f ON p.url = f.url
-        |ORDER BY url""".stripMargin,
-
-    // the Sitemap: lines planted in the robots fixture, verbatim (the
-    // face parses them back out of the raw files)
-    "q_robots_sitemaps" ->
-      """SELECT * FROM (VALUES
-        |  ('a.example.com', 'http://a.example.com/sitemap_index.xml'),
-        |  ('b.example.com', 'http://b.example.com/sm1.xml'),
-        |  ('b.example.com', 'http://b.example.com/sm2.xml'))
-        |  t(host, sitemap_url)
-        |ORDER BY host, sitemap_url""".stripMargin,
-
-    // claimed-vs-sniffed per the render arithmetic: the true mime from
-    // the mod-5 encoder class, the claim lying (text/html) on odd ids
-    "q_warc_mime_audit" ->
-      """WITH m AS (SELECT doc_id,
-        |    CASE CAST(doc_id % 5 AS INT)
-        |      WHEN 0 THEN 'image/png' WHEN 1 THEN 'image/jpeg'
-        |      WHEN 2 THEN 'image/gif' WHEN 3 THEN 'audio/wav'
-        |      ELSE 'video/x-msvideo' END AS mime
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN mime ELSE 'text/html' END
-        |    AS claimed,
-        |  mime AS sniffed,
-        |  doc_id % 2 = 0 AS agree
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // the CDX row per response record from the WARC fixture's render
-    // arithmetic: SURT key from the target URI, status/mime from the
-    // mod cycles, digest from the doc text the payload was rendered from
-    "q_cdx_index" ->
-      """SELECT 'com,example,' || source || ')/p/' ||
-        |    CAST(doc_id AS VARCHAR) AS urlkey,
-        |  'http://' || source || '.example.com/p/' ||
-        |    CAST(doc_id AS VARCHAR) AS url,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 404 ELSE 200 END AS INT)
-        |    AS status,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'text/html'
-        |       ELSE 'text/plain' END AS mime,
-        |  md5(text) AS digest
-        |FROM documents ORDER BY urlkey""".stripMargin,
-
-    "q_ngram_topk" ->
-      s"""WITH grams AS (
-         |  SELECT lang, unnest($shinglesSql) AS ngram
-         |  FROM (SELECT lang, $toksSql AS toks FROM documents)),
-         |c AS (SELECT lang, ngram, count(*) AS cnt FROM grams GROUP BY lang, ngram)
-         |SELECT lang, rank, ngram, cnt FROM (
-         |  SELECT lang, ngram, cnt,
-         |    CAST(row_number() OVER (PARTITION BY lang
-         |                            ORDER BY cnt DESC, ngram) AS INT) AS rank
-         |  FROM c) t
-         |WHERE rank <= 5 ORDER BY lang, rank""".stripMargin,
-
-    // exact-regime MG == plain counts, err 0, (est DESC, item ASC) order
-    "q_heavy_hitters" ->
-      s"""SELECT lang,
-         |  CAST(row_number() OVER (PARTITION BY lang
-         |                          ORDER BY est DESC, source) AS INT) AS rank,
-         |  source, est, CAST(0 AS BIGINT) AS err
-         |FROM (SELECT lang, source, count(*) AS est
-         |      FROM documents GROUP BY lang, source) t
-         |ORDER BY lang, rank""".stripMargin,
-
-    "q_repetition" ->
-      s"""SELECT doc_id, CAST(len(sh) AS INT) AS n_ngrams,
-         |  CAST(len(list_distinct(sh)) AS INT) AS n_distinct_ngrams,
-         |  round(1.0 - CAST(len(list_distinct(sh)) AS DOUBLE) /
-         |        greatest(CAST(len(sh) AS DOUBLE), 1.0), 6) AS repetition
-         |FROM (SELECT doc_id, $shinglesSql AS sh
-         |      FROM (SELECT doc_id, $toksSql AS toks FROM documents))
-         |ORDER BY doc_id""".stripMargin,
-
-    // boolean rules re-derived over the same token/line definitions; the
-    // only double (mean_word_len) is one division of exact ints
-    "q_quality_rules" -> {
-      val reqList = qualityRuleWords.mkString("['", "', '", "']")
-      s"""WITH d AS (SELECT doc_id, text, $toksSql AS toks,
-         |    string_split(text, chr(10)) AS lines FROM documents),
-         |r AS (SELECT doc_id,
-         |    CAST(len(toks) AS INT) AS n_words,
-         |    CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE)
-         |      / greatest(CAST(len(toks) AS DOUBLE), 1.0) AS mean_word_len,
-         |    CAST(len(list_filter(toks, t -> regexp_matches(t, '[a-z]'))) AS DOUBLE)
-         |      / greatest(CAST(len(toks) AS DOUBLE), 1.0) >= 0.8 AS r_alpha_words,
-         |    CAST(len(regexp_extract_all(text, '#|\\.\\.\\.|…')) AS DOUBLE)
-         |      / greatest(CAST(len(toks) AS DOUBLE), 1.0) <= 0.1 AS r_symbol_ratio,
-         |    CAST(len(list_filter(lines, l -> regexp_matches(l, '^\\s*[-*•]'))) AS DOUBLE)
-         |      / greatest(CAST(len(lines) AS DOUBLE), 1.0) <= 0.9 AS r_bullet_lines,
-         |    CAST(len(list_filter(lines, l -> regexp_matches(l, '(\\.\\.\\.|…)\\s*$$'))) AS DOUBLE)
-         |      / greatest(CAST(len(lines) AS DOUBLE), 1.0) <= 0.3 AS r_ellipsis_lines,
-         |    len(list_filter($reqList, w -> list_contains(toks, w))) >= 2 AS r_stopwords
-         |  FROM d)
-         |SELECT doc_id, n_words, mean_word_len,
-         |  n_words BETWEEN 50 AND 100000 AS r_word_count,
-         |  mean_word_len BETWEEN 3.0 AND 10.0 AS r_mean_word_len,
-         |  r_alpha_words, r_symbol_ratio, r_bullet_lines, r_ellipsis_lines,
-         |  r_stopwords,
-         |  (n_words BETWEEN 50 AND 100000) AND
-         |    (mean_word_len BETWEEN 3.0 AND 10.0) AND r_alpha_words AND
-         |    r_symbol_ratio AND r_bullet_lines AND r_ellipsis_lines AND
-         |    r_stopwords AS keep
-         |FROM r ORDER BY doc_id""".stripMargin
-    },
-
-    // identical rational operation tree to the Spark side: avgdl as ONE
-    // division, then dl/avgdl — basic IEEE ops are bit-portable; the ln
-    // composition is deliberately NOT compared (see the Spark-side note)
-    "q_text_bm25" -> bm25OracleSql,
-
-    // identical result served from the standing postings index — same SQL
-    "q_bm25_index" -> bm25OracleSql,
-
-    // full-corpus per-term document frequency; the Spark side computes it
-    // as a standing base index + one delta fold (disjoint ids → additive)
-    "q_text_df_inc" -> dfOracleSql,
-    "q_text_df_guard" -> dfOracleSql,
-
-    // same statistic, maintained by the streamed 3-batch dfIngest replay
-    "q_df_ingest_replay" -> dfOracleSql,
-
-    // per-source line df vs doc counts, boilerplate anti-joined away,
-    // docs rebuilt in line order
-    "q_boilerplate" ->
-      """WITH l AS (SELECT doc_id, source, ln.pos, ln.line FROM (
-        |    SELECT doc_id, source,
-        |      unnest(list_transform(string_split(text, chr(10)),
-        |        (x, i) -> struct_pack(pos := i - 1, line := x))) AS ln
-        |    FROM documents)),
-        |lf AS (SELECT source, line, count(DISTINCT doc_id) AS df
-        |       FROM l GROUP BY source, line),
-        |nd AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-        |b AS (SELECT source, line FROM lf JOIN nd USING (source)
-        |      WHERE df >= 2 AND CAST(df AS DOUBLE) / CAST(n_docs AS DOUBLE) >= 0.5),
-        |k AS (SELECT * FROM l ANTI JOIN b USING (source, line)),
-        |r AS (SELECT doc_id, count(*) AS n_kept,
-        |        string_agg(line, chr(10) ORDER BY pos) AS text_clean
-        |      FROM k GROUP BY doc_id),
-        |t AS (SELECT doc_id, count(*) AS n_lines FROM l GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(r.text_clean, '') AS text_clean,
-        |  CAST(coalesce(t.n_lines, 0) AS BIGINT) AS n_lines,
-        |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept
-        |FROM documents d LEFT JOIN t USING (doc_id) LEFT JOIN r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // same deterministic vocab rule: ORDER BY count DESC, term ASC LIMIT n
-    "q_vocab_oov" ->
-      s"""WITH t AS (SELECT doc_id, unnest(toks) AS term
-         |           FROM (SELECT doc_id, $toksSql AS toks FROM documents)),
-         |v AS (SELECT term FROM (SELECT term, count(*) AS c FROM t GROUP BY term)
-         |      ORDER BY c DESC, term LIMIT 100),
-         |o AS (SELECT doc_id, count(*) AS n_oov FROM t
-         |      ANTI JOIN v USING (term) GROUP BY doc_id),
-         |d AS (SELECT doc_id, CAST(len($toksSql) AS INT) AS n_tokens FROM documents)
-         |SELECT d.doc_id, d.n_tokens,
-         |  CAST(coalesce(o.n_oov, 0) AS BIGINT) AS n_oov,
-         |  CAST(coalesce(o.n_oov, 0) AS DOUBLE) /
-         |    greatest(CAST(d.n_tokens AS DOUBLE), 1.0) AS oov_rate
-         |FROM d LEFT JOIN o USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // the identical fixed-shape IEEE bin expression, every bin emitted
-    // via the generate_series spine (empty bins = 0)
-    "q_histogram" ->
-      """WITH x AS (SELECT CAST(l_quantity AS DOUBLE) AS v FROM lineitem
-        |           WHERE CAST(l_quantity AS DOUBLE) >= 1.0
-        |             AND CAST(l_quantity AS DOUBLE) <= 50.0),
-        |b AS (SELECT CAST(least(9, floor((v - 1.0) * 10 / (50.0 - 1.0)))
-        |             AS BIGINT) AS bucket FROM x),
-        |c AS (SELECT bucket, count(*) AS n FROM b GROUP BY bucket),
-        |g AS (SELECT unnest(generate_series(0, 9)) AS bucket)
-        |SELECT CAST(g.bucket AS BIGINT) AS bucket,
-        |  1.0 + g.bucket * (50.0 - 1.0) / 10 AS lo_edge,
-        |  1.0 + (g.bucket + 1) * (50.0 - 1.0) / 10 AS hi_edge,
-        |  CAST(coalesce(c.n, 0) AS BIGINT) AS n
-        |FROM g LEFT JOIN c ON g.bucket = c.bucket
-        |ORDER BY bucket""".stripMargin,
-
-    // the exact winsorize rule re-derived: rank k = max(1,
-    // (ppm·n + 999999) // 1e6) over ascending o_totalprice (any tie
-    // order — the k-th VALUE of a multiset is unique), clamp, then the
-    // decimal-exact per-priority mean
-    "q_winsorize" ->
-      """WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM orders
-        |            WHERE o_totalprice IS NOT NULL),
-        |r AS (SELECT o_totalprice,
-        |        row_number() OVER (ORDER BY o_totalprice) AS rnk
-        |      FROM orders WHERE o_totalprice IS NOT NULL),
-        |ks AS (SELECT greatest(1, (10000 * n + 999999) // 1000000) AS klo,
-        |              greatest(1, (990000 * n + 999999) // 1000000) AS khi
-        |       FROM nn),
-        |lo AS (SELECT o_totalprice AS v FROM r, ks WHERE rnk = klo),
-        |hi AS (SELECT o_totalprice AS v FROM r, ks WHERE rnk = khi)
-        |SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(CAST(CASE WHEN o_totalprice IS NULL THEN NULL
-        |                ELSE least(greatest(o_totalprice, lo.v), hi.v) END
-        |               AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_w
-        |FROM orders, lo, hi
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    // top-k keys re-derived with ORDER BY count DESC, key ASC (binary
-    // string collation == the TopK string-tie contract)
-    "q_key_skew" ->
-      """WITH c AS (SELECT coalesce(CAST(o_custkey AS VARCHAR), '<null>') AS k,
-        |                  count(*) AS c
-        |           FROM orders GROUP BY 1),
-        |t AS (SELECT k, c FROM c ORDER BY c DESC, k LIMIT 5)
-        |SELECT CAST((SELECT sum(c) FROM c) AS BIGINT) AS n_rows,
-        |  (SELECT count(*) FROM c) AS n_distinct,
-        |  (SELECT max(c) FROM c) AS max_count,
-        |  CAST((SELECT max(c) FROM c) AS DOUBLE) /
-        |    CAST((SELECT sum(c) FROM c) AS DOUBLE) AS top1_share,
-        |  (SELECT string_agg(k || ':' || CAST(c AS VARCHAR), ','
-        |                     ORDER BY c DESC, k) FROM t) AS top_keys""".stripMargin,
-
-    // same two-aggregate + join shape; date_trunc('week') is ISO-Monday
-    // in both engines, offsets exact multiples of 7 days
-    "q_retention" ->
-      """WITH f AS (SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-        |           FROM events GROUP BY user_id),
-        |a AS (SELECT DISTINCT user_id, date_trunc('week', ts) AS active_week
-        |      FROM events)
-        |SELECT strftime(f.cohort_week, '%Y-%m-%d') AS cohort_week,
-        |  CAST(date_diff('day', f.cohort_week, a.active_week) / 7 AS INT)
-        |    AS week_offset,
-        |  count(*) AS n_active
-        |FROM a JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // the same sequential-min chain as Funnel.stages, one CTE per stage
-    "q_funnel" -> funnelOracleSql,
-
-    // the streaming replay face answers to the IDENTICAL batch oracle:
-    // the stateful multi-batch machinery must land on the one-shot answer
-    "q_funnel_stream_replay" -> funnelOracleSql,
-
-    // streaming session_window replay answers to the batch sessionize
-    // oracle (same per-user summary, same 30-minute gap)
-    "q_sessionize_stream_replay" -> CoreQueries.oracleSql("q_sessionize"),
-
-    "q_dedup_stream_replay" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-        |WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    // the latest-per-key replay answers to the C1 batch window oracle:
-    // the changelog's final row per key IS the KTable's materialized view
-    "q_latest_stream_replay" -> CoreQueries.oracleSql("q_c1_latest"),
-
-    // the daily-average replay answers to the A1 batch oracle verbatim
-    "q_daily_avg_stream_replay" -> CoreQueries.oracleSql("q_a1_daily_avg"),
-
-    "q_hopping_stream_replay" -> CoreQueries.oracleSql("q_hopping_window"),
-
-    "q_enrich_stream_replay" -> CoreQueries.oracleSql("q_j1_enrich"),
-
-    // the streamed J2 replay answers to the batch left-join oracle
-    // verbatim: final maintained state ≡ one-shot table-table join
-    "q_j2_stream_replay" -> CoreQueries.oracleSql("q_j2_left"),
-
-    // the streamed SCD2 snapshot lands on the identical batch-window
-    // derivation — one oracle for both faces
-    "q_scd2_stream_replay" -> CoreQueries.oracleSql("q_scd2"),
-
-    // the streamed as-of union lands on the one-shot batch join's answer
-    "q_asof_stream_replay" -> CoreQueries.oracleSql("q_asof_join"),
-
-    // exact cardinalities recomputed independently; the contract bit is
-    // asserted literally (rsd=0.01 sketch vs a 5% bound — wide margin,
-    // and a wrong cross-batch state merge flips it)
-    "q_approx_distinct_stream_replay" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-        |true AS approx_ok
-        |FROM events
-        |WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // the percentile twin: exact n + exact median re-derived; the
-    // sketch's rank-band boolean must come out true on the engine side
-    "q_percentile_stream_replay" ->
-      """SELECT event_type, count(value) AS n,
-        |round(quantile_cont(value, 0.5), 6) AS p50_exact,
-        |true AS p50_ok
-        |FROM events
-        |WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // batch range join over the same events, restricted to the
-    // JoinWindows interval — what the streamed symmetric hash join's
-    // append output must equal row-for-row
-    "q_interval_join_replay" ->
-      """SELECT l.user_id AS l_user, epoch_us(l.ts) AS l_ts_us,
-        |       r.user_id AS r_user, epoch_us(r.ts) AS r_ts_us
-        |FROM events l JOIN events r
-        |  ON l.user_id = r.user_id
-        | AND r.ts >= l.ts - INTERVAL 10 MINUTE
-        | AND r.ts <= l.ts + INTERVAL 25 MINUTE
-        |WHERE l.event_type = 'view' AND r.event_type = 'click'
-        |ORDER BY l_user, l_ts_us, r_ts_us""".stripMargin,
-
-    "q_interval_join_replay_outer" ->
-      """SELECT l.user_id AS l_user, epoch_us(l.ts) AS l_ts_us,
-        |       coalesce(r.user_id, -1) AS r_user,
-        |       coalesce(epoch_us(r.ts), -1) AS r_ts_us
-        |FROM (SELECT user_id, ts FROM events WHERE event_type = 'view') l
-        |LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') r
-        |  ON l.user_id = r.user_id
-        | AND r.ts >= l.ts - INTERVAL 10 MINUTE
-        | AND r.ts <= l.ts + INTERVAL 25 MINUTE
-        |ORDER BY l_user, l_ts_us, r_user, r_ts_us""".stripMargin,
-
-    "q_interval_join_replay_full" ->
-      """SELECT coalesce(l.user_id, -1) AS l_user,
-        |       coalesce(epoch_us(l.ts), -1) AS l_ts_us,
-        |       coalesce(r.user_id, -1) AS r_user,
-        |       coalesce(epoch_us(r.ts), -1) AS r_ts_us
-        |FROM (SELECT user_id, ts FROM events WHERE event_type = 'view') l
-        |FULL JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') r
-        |  ON l.user_id = r.user_id
-        | AND r.ts >= l.ts - INTERVAL 10 MINUTE
-        | AND r.ts <= l.ts + INTERVAL 25 MINUTE
-        |ORDER BY l_user, l_ts_us, r_user, r_ts_us""".stripMargin,
-
-    // greedy windowed chain, one CTE per stage carrying t0 for the window
-    "q_funnel_window" -> funnelWindowSql(windowFunnelSteps, funnelWindowUs),
-
-    // the same spread-mask chain, stepwise CTEs (inlining would duplicate
-    // each subexpression 2^5 times); masks in decimal for portability
-    "q_zvalue" ->
-      """WITH s0 AS (SELECT o_orderkey, o_custkey,
-        |    (CAST(o_custkey AS BIGINT) & 2147483647) AS xa,
-        |    (CAST(o_orderkey AS BIGINT) & 2147483647) AS xb FROM orders),
-        |s1 AS (SELECT o_orderkey, o_custkey,
-        |    ((xa | (xa << 16)) & 281470681808895) AS xa,
-        |    ((xb | (xb << 16)) & 281470681808895) AS xb FROM s0),
-        |s2 AS (SELECT o_orderkey, o_custkey,
-        |    ((xa | (xa << 8)) & 71777214294589695) AS xa,
-        |    ((xb | (xb << 8)) & 71777214294589695) AS xb FROM s1),
-        |s3 AS (SELECT o_orderkey, o_custkey,
-        |    ((xa | (xa << 4)) & 1085102592571150095) AS xa,
-        |    ((xb | (xb << 4)) & 1085102592571150095) AS xb FROM s2),
-        |s4 AS (SELECT o_orderkey, o_custkey,
-        |    ((xa | (xa << 2)) & 3689348814741910323) AS xa,
-        |    ((xb | (xb << 2)) & 3689348814741910323) AS xb FROM s3),
-        |s5 AS (SELECT o_orderkey, o_custkey,
-        |    ((xa | (xa << 1)) & 6148914691236517205) AS xa,
-        |    ((xb | (xb << 1)) & 6148914691236517205) AS xb FROM s4)
-        |SELECT o_orderkey, o_custkey, (xa | (xb << 1)) AS z
-        |FROM s5 ORDER BY o_orderkey""".stripMargin,
-
-    // the bucketed layout is invisible to semantics: plain join + group
-    "q_bucketed_join" ->
-      """SELECT o_custkey, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-    // re-derives the stub decode features: dims are integer arithmetic on
-    // the payload byte length (strlen = bytes; the test corpus is ASCII so
-    // ord-per-char == byte value for the luma sum; both engines do one
-    // exact-integer-sum / int division in IEEE double → bit-identical)
-    "q_payload_slice" ->
-      """SELECT doc_id, 'image/fake' AS mime,
-        |  CAST((strlen(text) % 1920) + 1 AS INT) AS width,
-        |  CAST(((strlen(text) * 7919) % 1080) + 1 AS INT) AS height,
-        |  CAST(strlen(text) AS INT) AS n_bytes,
-        |  CASE WHEN strlen(text) = 0 THEN 0.0 ELSE
-        |    CAST(list_sum(list_transform(range(1, CAST(strlen(text) AS INT) + 1),
-        |      i -> ord(substr(text, i, 1)))) AS DOUBLE) / strlen(text)
-        |  END AS avg_luma
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // mirrors resizeStub + frameSample slice arithmetic: Spark's `/` on
-    // integers is DOUBLE division and CAST(double AS INT) truncates, hence
-    // the explicit trunc(); substring clamps at the payload end, hence the
-    // least/greatest. l1 = post-resize byte length (bounded by l0: substring
-    // cannot extend), s = 1-based frame offset, g = nominal slice length.
-    "q_payload_slice_frames" ->
-      """WITH d AS (SELECT doc_id, strlen(text) AS l0,
-        |    (strlen(text) % 1920) + 1 AS w,
-        |    ((strlen(text) * 7919) % 1080) + 1 AS h FROM documents),
-        |r AS (SELECT doc_id, least(l0, greatest(1,
-        |    CAST(trunc(CAST(l0 AS DOUBLE) * 65536 / greatest(w * h, 1)) AS BIGINT)))
-        |    AS l1 FROM d),
-        |f AS (SELECT doc_id, i AS frame_idx,
-        |    1 + CAST(trunc(CAST(l1 AS DOUBLE) * i / 4) AS BIGINT) AS s,
-        |    greatest(1, CAST(trunc(CAST(l1 AS DOUBLE) / 4) AS BIGINT)) AS g, l1
-        |  FROM r, (SELECT unnest(range(0, 4)) AS i))
-        |SELECT CAST(frame_idx AS INT) AS frame_idx, count(*) AS n_frames,
-        |  CAST(sum(greatest(0, least(g, l1 - s + 1))) AS BIGINT) AS total_bytes
-        |FROM f GROUP BY frame_idx ORDER BY frame_idx""".stripMargin,
-
-    // REAL decode gate: the engine's width/height/px_sum come from
-    // javax.imageio DECODING a real PNG; this recomputes them from the
-    // closed-form pixel rule (r=(s+x)%256, g=(s+y)%256, b=(s+x+y)%256
-    // over w = id%16+4, h = id*7%16+4, s = id%256) — PNG is lossless,
-    // so equality certifies the decoder read the actual raster. The
-    // bounded series (0..18) covers every dim; the x<w / y<h joins
-    // scope each doc's pixels.
-    "q_media_decode" -> mediaDecodeOracleSql,
-
-    // JPEG contract gate: dims are exact integer functions of the id
-    // (recomputed here without decoding); within_tol is the engine-side
-    // certificate that the DECODED raster stayed within the deviation
-    // bound of the closed-form gradient rule — a lossy container cannot
-    // be px_sum-gated, so the oracle pins the contract booleans + dims
-    // (the q_approx_distinct contract-gate pattern)
-    "q_media_jpeg" ->
-      """SELECT doc_id,
-        |  CAST(doc_id % 16 + 4 AS INT) AS width,
-        |  CAST((doc_id * 7) % 16 + 4 AS INT) AS height,
-        |  true AS within_tol
-        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin,
-
-    // the lossy resize loop lands on the literal target dims + the
-    // contract boolean (two codec hops cannot be px_sum-gated)
-    "q_media_jpeg_resize" ->
-      """SELECT doc_id, 12 AS width, 10 AS height, true AS within_tol
-        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin,
-
-    // the STREAMED decode-at-ingest sink must land on the identical
-    // closed-form oracle — one derivation for both the batch face and
-    // the 3-batch checkpointed replay
-    "q_media_stream_replay" -> mediaDecodeOracleSql,
-
-    // both columns from the id rule alone: the container class each doc
-    // was written as, and the (always-true) sniff==meta agreement — a
-    // sniff reading the wrong bytes or a writer stamping the wrong mime
-    // diverges on either column
-    "q_mime_sniff" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 5 AS INT)
-        |    WHEN 0 THEN 'image/png' WHEN 1 THEN 'image/jpeg'
-        |    WHEN 2 THEN 'image/gif' WHEN 3 THEN 'audio/wav'
-        |    ELSE 'video/x-msvideo' END AS mime_sniffed,
-        |  true AS meta_agrees
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // decoded PCM format + sample sum from the closed-form audio rule:
-    // n = id%64+16 samples of s_i = ((id%1000 + 7i) mod 65536) − 32768
-    "q_audio_decode" ->
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 64 + 16 AS BIGINT) n,
-        |    CAST(doc_id % 1000 AS BIGINT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |sm AS (SELECT doc_id, n,
-        |    CAST(sum(((s + 7 * gi.i) % 65536) - 32768) AS BIGINT) AS sample_sum
-        |  FROM p JOIN generate_series(0, 78) gi(i) ON gi.i < n
-        |  GROUP BY doc_id, n)
-        |SELECT doc_id, 8000 AS sample_rate, 1 AS channels, 16 AS bits,
-        |  n AS n_samples, sample_sum
-        |FROM sm ORDER BY doc_id""".stripMargin,
-
-    // per-frame level sums from the closed-form GIF rule: frame count
-    // nf = id%3+2, dims w = id%8+4 / h = id·3%8+4, level(x,y,f) =
-    // (s+x+2y+3f) mod 8 — the bounded series cover every dim/frame
-    "q_media_frames_real" ->
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 8 + 4 AS INT) w,
-        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
-        |    CAST(doc_id % 3 + 2 AS INT) nf,
-        |    CAST(doc_id % 8 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |fr AS (SELECT doc_id, w, h, s, gf.f
-        |  FROM p JOIN generate_series(0, 3) gf(f) ON gf.f < nf),
-        |px AS (SELECT doc_id, w, h, f,
-        |    (s + gx.x + 2 * gy.y + 3 * f) % 8 AS v
-        |  FROM fr
-        |  JOIN generate_series(0, 10) gx(x) ON gx.x < w
-        |  JOIN generate_series(0, 10) gy(y) ON gy.y < h)
-        |SELECT doc_id, CAST(f AS INT) AS frame_idx, w AS width,
-        |  h AS height, CAST(sum(v) AS BIGINT) AS lvl_sum
-        |FROM px GROUP BY doc_id, f, w, h
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // resized checksum from the source rule + the nearest-neighbor index
-    // mapping sx = x*w0 // 8, sy = y*h0 // 6 (integer division, exactly
-    // the engine's explicit loop): v at the SAMPLED source coordinate
-    "q_media_resize_real" ->
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 16 + 4 AS INT) w0,
-        |    CAST((doc_id * 7) % 16 + 4 AS INT) h0,
-        |    CAST(doc_id % 256 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |m AS (SELECT doc_id, s,
-        |    (gx.x * w0) // 8 AS sx, (gy.y * h0) // 6 AS sy
-        |  FROM p, generate_series(0, 7) gx(x), generate_series(0, 5) gy(y)),
-        |px AS (SELECT doc_id,
-        |    ((s + sx) % 256) + ((s + sy) % 256) + ((s + sx + sy) % 256) AS v
-        |  FROM m)
-        |SELECT doc_id, 'image/png' AS mime, 8 AS width, 6 AS height,
-        |  CAST(sum(v) AS BIGINT) AS px_sum
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // AVI demux gate: every engine column is a header word parsed from
-    // the container bytes; this recomputes all of them from the attach
-    // rule's integer arithmetic (w = id%8+4, h = id·3%8+4, nf = id%4+2,
-    // fps = 20000 + (id%7)·5000, codec by id parity) — a demux that
-    // echoes attach-side metadata instead of reading the RIFF tree
-    // cannot diverge here, but one that misreads ANY word does
-    "q_video_meta" ->
-      """SELECT doc_id,
-        |  CAST(doc_id % 8 + 4 AS INT) AS width,
-        |  CAST((doc_id * 3) % 8 + 4 AS INT) AS height,
-        |  CAST(doc_id % 4 + 2 AS INT) AS n_frames,
-        |  CAST(doc_id % 4 + 2 AS INT) AS movi_frames,
-        |  CAST(20000 + (doc_id % 7) * 5000 AS BIGINT) AS fps_micros,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'rgb24' ELSE 'mjpeg' END AS codec
-        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin,
-
-    // per-frame channel sums from the closed-form rgb24 rule
-    // r=(s+x+3f)%256, g=(s+y+3f)%256, b=(s+x+y)%256 over w = id%8+4,
-    // h = id·3%8+4, nf = id%4+2, s = id%256 — the DIB container hop is
-    // lossless, so equality certifies the decoder unpacked the actual
-    // bottom-up BGR rows (bounded series cover every dim/frame)
-    "q_video_frames" -> videoFramesOracleSql,
-
-    // the STREAMED demux-at-ingest sink must land on the identical
-    // closed-form oracle — one derivation for both the batch face and
-    // the 3-batch checkpointed replay (the q_media_stream_replay stance)
-    "q_video_ingest_replay" -> videoFramesOracleSql,
-
-    // resized sums from the source rule + the nearest-neighbor index
-    // mapping sx = x·w0 // 6, sy = y·h0 // 5 (integer division, exactly
-    // the engine's explicit loop), per frame — both AVI hops lossless
-    "q_video_resize" ->
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 8 + 4 AS INT) w,
-        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
-        |    CAST(doc_id % 4 + 2 AS INT) nf,
-        |    CAST(doc_id % 256 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |fr AS (SELECT doc_id, w, h, s, gf.f
-        |  FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf),
-        |m AS (SELECT doc_id, s, f,
-        |    (gx.x * w) // 6 AS sx, (gy.y * h) // 5 AS sy
-        |  FROM fr, generate_series(0, 5) gx(x), generate_series(0, 4) gy(y)),
-        |px AS (SELECT doc_id, f,
-        |    ((s + sx + 3 * f) % 256) + ((s + sy + 3 * f) % 256)
-        |      + ((s + sx + sy) % 256) AS v
-        |  FROM m)
-        |SELECT doc_id, CAST(f AS INT) AS frame_idx, 6 AS width,
-        |  5 AS height, CAST(sum(v) AS BIGINT) AS px_sum
-        |FROM px GROUP BY doc_id, f
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // keyframe arg-max re-derived from the same closed-form frame sums:
-    // per video the brightest frame wins, ties to the earliest ordinal
-    "q_video_keyframe" ->
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 8 + 4 AS INT) w,
-        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
-        |    CAST(doc_id % 4 + 2 AS INT) nf,
-        |    CAST(doc_id % 256 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |fr AS (SELECT doc_id, w, h, s, gf.f
-        |  FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf),
-        |px AS (SELECT doc_id, f,
-        |    ((s + gx.x + 3 * f) % 256) + ((s + gy.y + 3 * f) % 256)
-        |      + ((s + gx.x + gy.y) % 256) AS v
-        |  FROM fr
-        |  JOIN generate_series(0, 10) gx(x) ON gx.x < w
-        |  JOIN generate_series(0, 10) gy(y) ON gy.y < h),
-        |sums AS (SELECT doc_id, f, CAST(sum(v) AS BIGINT) AS ps
-        |  FROM px GROUP BY doc_id, f)
-        |SELECT doc_id, CAST(f AS INT) AS frame_idx, ps AS px_sum
-        |FROM (SELECT doc_id, f, ps,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY ps DESC, f) AS rn
-        |  FROM sums)
-        |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    // the stride-2 temporal sample: identical rule, only even movi
-    // ordinals survive — re-derived by the same series with f%2=0
-    "q_video_sample" ->
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 8 + 4 AS INT) w,
-        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
-        |    CAST(doc_id % 4 + 2 AS INT) nf,
-        |    CAST(doc_id % 256 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |fr AS (SELECT doc_id, w, h, s, gf.f
-        |  FROM p JOIN generate_series(0, 5) gf(f)
-        |    ON gf.f < nf AND gf.f % 2 = 0),
-        |px AS (SELECT doc_id, w, h, f,
-        |    ((s + gx.x + 3 * f) % 256) + ((s + gy.y + 3 * f) % 256)
-        |      + ((s + gx.x + gy.y) % 256) AS v
-        |  FROM fr
-        |  JOIN generate_series(0, 10) gx(x) ON gx.x < w
-        |  JOIN generate_series(0, 10) gy(y) ON gy.y < h)
-        |SELECT doc_id, CAST(f AS INT) AS frame_idx, w AS width,
-        |  h AS height, CAST(sum(v) AS BIGINT) AS px_sum
-        |FROM px GROUP BY doc_id, f, w, h
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // Motion-JPEG contract gate: dims + frame ordinals are exact
-    // integer functions of the id; within_tol is the engine-side
-    // certificate that each DECODED frame stayed within the deviation
-    // bound of the per-frame gradient rule (lossy container → the
-    // q_media_jpeg contract-boolean pattern, one row per frame)
-    "q_video_mjpeg" ->
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 8 + 4 AS INT) w,
-        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
-        |    CAST(doc_id % 4 + 2 AS INT) nf
-        |  FROM documents WHERE doc_id % 5 = 0)
-        |SELECT doc_id, CAST(gf.f AS INT) AS frame_idx, w AS width,
-        |  h AS height, true AS within_tol
-        |FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // systematic PPS: window cumsum + the identical integer pick rule
-    // rank numbering re-derived by row_number (driver-scale stand-in for
-    // the engine's distributed prefixSum), draw index by the identical
-    // md5-prefix integer, exclusions by the same three-valued predicates
-    "q_negative_sample" ->
-      """WITH c AS (SELECT vec_id, label FROM embeddings),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
-        |r AS (SELECT vec_id, label,
-        |        CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS idx
-        |      FROM c),
-        |q AS (SELECT vec_id AS qid, label AS qlab,
-        |        unnest(generate_series(0, 3)) AS j FROM c),
-        |d AS (SELECT qid, qlab, CAST(j AS INT) AS j,
-        |        CAST(('0x' || substring(md5(CAST(qid AS VARCHAR) || ':' ||
-        |          CAST(j AS VARCHAR)), 1, 8)) AS BIGINT)
-        |          % (SELECT n FROM n) AS draw
-        |      FROM q)
-        |SELECT d.qid AS query_id, d.j, r.vec_id AS neg_id
-        |FROM d JOIN r ON d.draw = r.idx
-        |WHERE r.label <> d.qlab AND r.vec_id <> d.qid
-        |ORDER BY query_id, j""".stripMargin,
-
-    // (all operands non-negative, so `//` floor == Spark `div` truncate);
-    // the CASTs pin DuckDB's HUGEINT-widening sums back to int64
-    "q_sample_pps" ->
-      """WITH d AS (SELECT doc_id, n_chars FROM documents),
-        |c AS (SELECT CAST(sum(n_chars) AS BIGINT) AS w FROM d),
-        |cum AS (SELECT doc_id, n_chars,
-        |  CAST(coalesce(sum(n_chars) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS a
-        |  FROM d),
-        |p AS (SELECT doc_id, a, a + n_chars AS b,
-        |  w // 100 AS stride, (w // 100) // 2 AS strt, w FROM cum CROSS JOIN c),
-        |picks AS (SELECT doc_id,
-        |  CAST(least(100, CASE WHEN b <= strt THEN 0 ELSE (b - strt - 1) // stride + 1 END)
-        |     - least(100, CASE WHEN a <= strt THEN 0 ELSE (a - strt - 1) // stride + 1 END)
-        |   AS BIGINT) AS n_picks
-        |  FROM p WHERE w >= 100)
-        |SELECT doc_id, n_picks FROM picks WHERE n_picks >= 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // per-stratum md5 membership, thresholds rendered from the SAME map
-    "q_sample_stratified" -> {
-      val thrValues = strataRates.toSeq.sorted.map { case (g, r) =>
-        s"('$g', '${graft.operators.Sampling.hexThreshold(r)}')"
-      }.mkString(", ")
-      s"""WITH thr(g, t) AS (VALUES $thrValues)
-         |SELECT d.doc_id, d.lang FROM documents d JOIN thr ON d.lang = thr.g
-         |WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < thr.t
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    // α = 0.5 temperature mixing: the Σw-free rate derivation re-stated
-    // verbatim — every op correctly rounded (sqrt/div/mul/round), so the
-    // thresholds agree bit-for-bit with the Spark side
-    // epoch mixing: CAST ... AS DOUBLE pins the CASE literals to the same
-    // IEEE doubles Spark's map literal carries (DuckDB would otherwise
-    // parse them as DECIMAL and round the threshold differently); the
-    // copy expansion is a per-row range() unnest
-    "q_mix_epochs" ->
-      """WITH e AS (
-        |  SELECT doc_id, lang,
-        |    CAST(CASE lang WHEN 'en' THEN 0.75 WHEN 'de' THEN 2.5
-        |                   WHEN 'fr' THEN 1.0 WHEN 'zh' THEN 3.25 END
-        |         AS DOUBLE) AS ep
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, lang,
-        |    CAST(floor(ep) AS BIGINT) +
-        |    CASE WHEN CAST(round((ep - floor(ep)) * 4294967296.0) AS BIGINT)
-        |               >= 4294967296
-        |           OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) <
-        |              printf('%08x',
-        |                CAST(round((ep - floor(ep)) * 4294967296.0) AS BIGINT))
-        |         THEN 1 ELSE 0 END AS n
-        |  FROM e WHERE ep IS NOT NULL)
-        |SELECT doc_id, lang, unnest(range(0, n)) AS epoch
-        |FROM c WHERE n > 0
-        |ORDER BY doc_id, epoch""".stripMargin,
-
-    "q_mix_temperature" ->
-      """WITH c AS (SELECT lang AS g, count(*) AS n FROM documents GROUP BY lang),
-        |j AS (SELECT g, n, sqrt(CAST(n AS DOUBLE)) AS w FROM c),
-        |s AS (SELECT min(CAST(n AS DOUBLE) / w) AS mn FROM j),
-        |thr AS (SELECT g, CAST(round(least(1.0, mn * w / CAST(n AS DOUBLE))
-        |          * 4294967296.0) AS BIGINT) AS t FROM j, s)
-        |SELECT d.doc_id, d.lang FROM documents d JOIN thr ON d.lang = thr.g
-        |WHERE t >= 4294967296 OR
-        |  substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < printf('%08x', t)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // same thresholds as the Spark side, rendered from the SAME map; "g"
-    // is the keep-all sentinel (above every 8-char hex string)
-    "q_mix_sample" -> {
-      val thrValues = mixRates.toSeq.sorted.map { case (g, r) =>
-        s"('$g', '${graft.operators.Sampling.hexThreshold(r)}')"
-      }.mkString(", ")
-      s"""WITH thr(g, t) AS (VALUES $thrValues)
-         |SELECT d.doc_id, d.lang FROM documents d JOIN thr ON d.lang = thr.g
-         |WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < thr.t
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    // independently re-derives the keep-rates (same IEEE double steps on
-    // exact integer inputs) and the md5 membership
-    "q_mix_shares" -> {
-      val wValues = mixWeights.toSeq.sorted.map { case (g, x) =>
-        s"('$g', $x)"
-      }.mkString(", ")
-      val totalW = mixWeights.values.map(_.toLong).sum
-      s"""WITH w(g, wt) AS (VALUES $wValues),
-         |c AS (SELECT lang AS g, count(*) AS n FROM documents
-         |      JOIN w ON lang = w.g GROUP BY lang),
-         |j AS (SELECT c.g, c.n,
-         |        CAST(wt AS DOUBLE) / CAST($totalW AS DOUBLE) AS share
-         |      FROM c JOIN w USING (g)),
-         |s AS (SELECT min(CAST(n AS DOUBLE) / share) AS sc FROM j),
-         |thr AS (SELECT g, CAST(round(least(1.0, sc * share / CAST(n AS DOUBLE))
-         |          * 4294967296.0) AS BIGINT) AS t FROM j, s)
-         |SELECT d.doc_id, d.lang FROM documents d JOIN thr ON d.lang = thr.g
-         |WHERE t >= 4294967296 OR
-         |  substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) < printf('%08x', t)
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    "q_quality_strata" ->
-      s"""SELECT doc_id, quality,
-         |  CAST(ntile(10) OVER (ORDER BY quality, doc_id) AS INT) AS stratum
-         |FROM (SELECT doc_id, $qualitySql AS quality
-         |      FROM (SELECT doc_id, text, $toksSql AS toks FROM documents))
-         |ORDER BY doc_id""".stripMargin,
-
-    // staged twin: identical semantics, identical oracle
-    "q_quality_strata_staged" ->
-      s"""SELECT doc_id, quality,
-         |  CAST(ntile(10) OVER (ORDER BY quality, doc_id) AS INT) AS stratum
-         |FROM (SELECT doc_id, $qualitySql AS quality
-         |      FROM (SELECT doc_id, text, $toksSql AS toks FROM documents))
-         |ORDER BY doc_id""".stripMargin,
-
-    // cumulative thresholds rendered from the SAME fractions via the same
-    // hexThreshold; the last split is the CASE's ELSE (catches the rest)
-    "q_split_assign" -> {
-      val cuts = splitFracs.map(_._2).scanLeft(0.0)(_ + _).tail.init
-        .map(graft.operators.Sampling.hexThreshold)
-      val whens = cuts.zip(splitFracs.map(_._1)).map { case (t, name) =>
-        s"WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '$t' THEN '$name'"
-      }.mkString(" ")
-      s"""SELECT doc_id,
-         |  CASE $whens ELSE '${splitFracs.last._1}' END AS split
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    // count_distinct over text (the Spark side hashes text to an 8-byte
-    // key first — identical modulo the documented birthday bound)
-    "q_corpus_report" ->
-      s"""SELECT lang, count(*) AS n_docs,
-         |  CAST(sum(len(toks)) AS BIGINT) AS total_tokens,
-         |  round(avg(CAST(len(toks) AS DOUBLE)), 6) AS avg_tokens,
-         |  count(DISTINCT source) AS n_sources,
-         |  count(*) - count(DISTINCT text) AS n_dup_docs
-         |FROM (SELECT lang, source, text, $toksSql AS toks FROM documents)
-         |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // mirrors Dedup.dupCoverage: positions of corpus-duplicated 3-grams,
-    // covered-token union computed by exploding the (clamped) k indices of
-    // every hit — set-equivalent to the Spark side's lead-window interval
-    // union, deliberately a DIFFERENT formulation so the oracle is
-    // independent evidence, not a translation
-    "q_dup_spans" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |d AS (SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
-         |        $shinglesSql AS gs FROM t),
-         |p0 AS (SELECT doc_id, n_tokens, gs,
-         |         CAST(unnest(range(0, len(gs))) AS INT) AS pos FROM d),
-         |pos AS (SELECT doc_id, n_tokens, pos, gs[pos + 1] AS s FROM p0),
-         |dup AS (SELECT s FROM pos GROUP BY s HAVING count(*) >= 2),
-         |hit AS (SELECT doc_id, n_tokens, pos FROM pos JOIN dup USING (s)),
-         |cov AS (SELECT doc_id, count(DISTINCT idx) AS n_dup FROM (
-         |          SELECT doc_id, unnest(range(pos, least(pos + 3, n_tokens))) AS idx
-         |          FROM hit) GROUP BY doc_id)
-         |SELECT d.doc_id, d.n_tokens,
-         |  CAST(coalesce(c.n_dup, 0) AS BIGINT) AS n_dup_tokens,
-         |  round(CAST(coalesce(c.n_dup, 0) AS DOUBLE) /
-         |        greatest(CAST(d.n_tokens AS DOUBLE), 1.0), 6) AS dup_ratio
-         |FROM d LEFT JOIN cov c USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // mirrors Dedup.dedupSubstrings (k=5): duplicated 5-gram occurrences
-    // ranked by (doc_id, pos) with the rank-1 survivor kept; the removed
-    // token set is the DISTINCT explosion of every excised span's indices —
-    // set-equivalent to the Spark side's merged-interval islands,
-    // deliberately a DIFFERENT formulation (row_number + index explosion
-    // vs arg-min + gaps-and-islands) so the oracle is independent evidence
-    "q_substring_dedup" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |d AS (SELECT doc_id, toks, CAST(len(toks) AS INT) AS n_tokens,
-         |        CASE WHEN len(toks) < 5 THEN [array_to_string(toks, ' ')]
-         |        ELSE list_transform(range(1, len(toks) - 3),
-         |               i -> array_to_string(toks[i:i+4], ' '))
-         |        END AS gs FROM t),
-         |p0 AS (SELECT doc_id, n_tokens, gs,
-         |         CAST(unnest(range(0, len(gs))) AS INT) AS pos FROM d),
-         |pos AS (SELECT doc_id, n_tokens, pos, gs[pos + 1] AS s FROM p0),
-         |rk AS (SELECT *, row_number() OVER (PARTITION BY s
-         |           ORDER BY doc_id, pos) AS rn,
-         |         count(*) OVER (PARTITION BY s) AS cnt FROM pos),
-         |cut AS (SELECT doc_id, pos, least(pos + 5, n_tokens) AS e
-         |        FROM rk WHERE cnt >= 2 AND rn > 1),
-         |rem AS (SELECT DISTINCT doc_id,
-         |          CAST(unnest(range(pos, e)) AS INT) AS idx FROM cut),
-         |nr AS (SELECT doc_id, count(*) AS n_removed FROM rem GROUP BY doc_id),
-         |tx AS (SELECT doc_id, toks,
-         |         CAST(unnest(range(0, len(toks))) AS INT) AS idx FROM d),
-         |tv AS (SELECT doc_id, idx, toks[idx + 1] AS tok FROM tx),
-         |keep AS (SELECT tv.doc_id, tv.idx, tv.tok FROM tv LEFT JOIN rem
-         |           ON tv.doc_id = rem.doc_id AND tv.idx = rem.idx
-         |         WHERE rem.idx IS NULL),
-         |r AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS text_dedup
-         |      FROM keep GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(r.text_dedup, '') AS text_dedup,
-         |  d.n_tokens, CAST(coalesce(nr.n_removed, 0) AS BIGINT) AS n_removed
-         |FROM d LEFT JOIN r USING (doc_id) LEFT JOIN nr USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "q_contamination" -> contaminationSql,
-
-    // the bloom variant is output-identical by construction (exact verify
-    // after the prefilter) — same oracle
-    "q_contamination_bloom" -> contaminationSql,
-
-    "q_html_strip" ->
-      s"""SELECT doc_id, $htmlCleanSql AS text_plain
-         |FROM (SELECT doc_id,
-         |    '<html><head><script>var x = 1 &lt; 2;</script>' ||
-         |    '<style>p{color:red}</style></head><body><!-- note -->' ||
-         |    '<p class="main">' || text ||
-         |    '</p>&nbsp;&amp;amp; <b>tail</b></body></html>' AS text
-         |  FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    // what main-content extraction must KEEP, reconstructed: the body
-    // text and the low-density tail (inline link text survives) — the
-    // title/header/nav/link-farm/aside/footer all provably absent; the
-    // shared strip/decode/collapse chain runs over the reconstruction
-    // so whitespace and entity handling agree with the engine's
-    // the shared markdown rule chain over the same reconstructed html —
-    // templates rendered for RE2 groups, patterns byte-identical
-    "q_html_markdown" -> htmlMarkdownOracleSql,
-
-    "q_main_content" -> mainContentOracleSql,
-
-    // the WARC-composed production lands on the SAME surviving-content
-    // derivation (the demux legs are proven under q_warc_scan)
-    "q_warc_to_main" -> mainContentOracleSql,
-
-    // the WET-production composition lands on the SAME strip derivation
-    // (the engine additionally proved the demux legs under q_warc_scan)
-    "q_warc_to_wet" ->
-      s"""SELECT doc_id, $htmlCleanSql AS text_plain
-         |FROM (SELECT doc_id,
-         |    '${htmlWrapPrefix.replace("'", "''")}' || text ||
-         |    '${htmlWrapSuffix.replace("'", "''")}' AS text
-         |  FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    // the markdown chain over the SAME reconstructed WARC payloads the
-    // WET oracle reads (demux legs proven under q_warc_scan)
-    "q_warc_to_markdown" ->
-      s"""SELECT doc_id, ${markdownChainSql("html")} AS markdown
-         |FROM (SELECT doc_id,
-         |    '${htmlWrapPrefix.replace("'", "''")}' || text ||
-         |    '${htmlWrapSuffix.replace("'", "''")}' AS html
-         |  FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_text_chunks" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |n AS (SELECT doc_id, toks, CAST(len(toks) AS INT) AS n_toks FROM t),
-         |c AS (SELECT doc_id, n_toks, toks,
-         |        CAST(unnest(range(0, greatest(1,
-         |          CAST(ceil((n_toks - 32) / 24.0) AS INT) + 1))) AS INT) AS chunk_idx
-         |      FROM n)
-         |SELECT doc_id, chunk_idx,
-         |  array_to_string(toks[chunk_idx*24 + 1 : chunk_idx*24 + 32], ' ') AS chunk_text,
-         |  CAST(least(32, n_toks - chunk_idx*24) AS INT) AS n_chunk_tokens
-         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q_pack_budget" ->
-      s"""WITH d AS (SELECT doc_id, lang AS "group",
-         |             CAST(len($toksSql) AS INT) AS n_tokens
-         |           FROM documents)
-         |SELECT doc_id, "group",
-         |  CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY "group"
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |    0) / 1000.0) AS BIGINT) AS pack_id,
-         |  n_tokens
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // pack assignment re-derived, boundaries via a window cumsum (a
-    // different formulation than the engine's aggregate-HOF prefix
-    // sum), sequence identity via ordered string_agg — eos length 7
-    "q_pack_render" ->
-      s"""WITH d AS (SELECT doc_id, lang AS "group", text,
-         |             CAST(len($toksSql) AS INT) AS n_tokens
-         |           FROM documents),
-         |p AS (SELECT doc_id, "group", text,
-         |    CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY "group"
-         |      ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |      0) / 1000.0) AS BIGINT) AS pack_id
-         |  FROM d),
-         |b AS (SELECT "group", pack_id, doc_id, text,
-         |    sum(len(text)) OVER (PARTITION BY "group", pack_id
-         |      ORDER BY doc_id) +
-         |    (row_number() OVER (PARTITION BY "group", pack_id
-         |      ORDER BY doc_id) - 1) * 7 AS bend
-         |  FROM p)
-         |SELECT "group", pack_id, CAST(count(*) AS INT) AS n_docs,
-         |  CAST(sum(len(text)) + (count(*) - 1) * 7 AS BIGINT) AS seq_chars,
-         |  string_agg(CAST(bend AS VARCHAR), ',' ORDER BY doc_id) AS boundaries,
-         |  md5(string_agg(text, '<|eos|>' ORDER BY doc_id)) AS seq_md5
-         |FROM b GROUP BY "group", pack_id
-         |ORDER BY "group", pack_id""".stripMargin,
-
-    // the FIM selection draw, both cut points, and the PSM render all
-    // recomputed from the same md5-prefix integers (the
-    // q_negative_sample hex-cast pattern); non-selected and short docs
-    // hash as their verbatim text
-    "q_fim_transform" ->
-      """WITH d AS (SELECT doc_id, text,
-        |    CAST(length(text) AS BIGINT) AS L,
-        |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':fim'),
-        |      1, 8)) AS BIGINT) AS hf,
-        |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':a'),
-        |      1, 8)) AS BIGINT) AS ha,
-        |    CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':b'),
-        |      1, 8)) AS BIGINT) AS hb
-        |  FROM documents),
-        |c AS (SELECT doc_id, text, L, hb,
-        |    (hf % 100 < 50 AND L >= 2) AS fim, ha % (L + 1) AS a
-        |  FROM d),
-        |e AS (SELECT doc_id, text, L, fim, a, a + hb % (L - a + 1) AS b
-        |  FROM c)
-        |SELECT doc_id, fim,
-        |  md5(CASE WHEN fim THEN
-        |      '<|fim_pre|>' || substring(text, 1, CAST(a AS INT)) ||
-        |      '<|fim_suf|>' ||
-        |        substring(text, CAST(b + 1 AS INT), CAST(L - b AS INT)) ||
-        |      '<|fim_mid|>' ||
-        |        substring(text, CAST(a + 1 AS INT), CAST(b - a AS INT))
-        |    ELSE text END) AS seq_md5
-        |FROM e ORDER BY doc_id""".stripMargin,
-
-    // first-occurrence survivor via a window rn=1 — a deliberately
-    // DIFFERENT formulation than the Spark side's arg-min + equi-join
-    "q_para_dedup" ->
-      s"""WITH $paraDedupCtes
-         |SELECT d.doc_id, coalesce(r.text_dedup, '') AS text_dedup,
-         |  CAST(coalesce(t.n_paras, 0) AS BIGINT) AS n_paras,
-         |  CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept
-         |FROM documents d LEFT JOIN t USING (doc_id) LEFT JOIN r USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // v2 pipeline: the same paragraph-dedup CTEs feed quality gating and
-    // the per-language token quota — one definition, two queries
-    "q_prep_pipeline2" ->
-      s"""WITH $paraDedupCtes,
-         |dd AS (SELECT r.doc_id, d.lang, r.text_dedup AS text
-         |       FROM r JOIN documents d USING (doc_id) WHERE r.n_kept > 0),
-         |q AS (SELECT doc_id, lang, CAST(len(toks) AS INT) AS n_tokens,
-         |        $qualitySql AS quality
-         |      FROM (SELECT doc_id, lang, text, $toksSql AS toks FROM dd)),
-         |g AS (SELECT doc_id, lang AS "group", n_tokens FROM q
-         |      WHERE quality >= 0.3),
-         |w AS (SELECT doc_id, "group", n_tokens,
-         |        CAST(coalesce(sum(n_tokens) OVER (PARTITION BY "group"
-         |          ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |          0) AS BIGINT) AS cum_before
-         |      FROM g)
-         |SELECT doc_id, "group", n_tokens,
-         |       CAST(cum_before + n_tokens AS BIGINT) AS cum_tokens
-         |FROM w WHERE cum_before < 1500 ORDER BY doc_id""".stripMargin,
-
-    "q_quota_trim" ->
-      s"""WITH d AS (SELECT doc_id, lang AS "group",
-         |             CAST(len($toksSql) AS INT) AS n_tokens
-         |           FROM documents),
-         |w AS (SELECT doc_id, "group", n_tokens,
-         |        CAST(coalesce(sum(n_tokens) OVER (PARTITION BY "group"
-         |          ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |          0) AS BIGINT) AS cum_before
-         |      FROM d)
-         |SELECT doc_id, "group", n_tokens,
-         |       CAST(cum_before + n_tokens AS BIGINT) AS cum_tokens
-         |FROM w WHERE cum_before < 2000 ORDER BY doc_id""".stripMargin,
-
-    "q_train_shards" ->
-      """WITH h AS (SELECT doc_id,
-        |             substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS hex
-        |           FROM documents),
-        |s AS (SELECT doc_id, hex,
-        |        CAST(CAST(concat('0x', hex) AS BIGINT) % 8 AS INT) AS shard
-        |      FROM h)
-        |SELECT doc_id, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY hex, doc_id)
-        |       AS INT) AS pos
-        |FROM s ORDER BY shard, pos""".stripMargin,
-
-    "q_ingest_exact_replay" ->
-      """SELECT doc_id FROM (
-        |  SELECT doc_id, row_number() OVER (
-        |    PARTITION BY text ORDER BY doc_id % 3, doc_id) AS rn
-        |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    // each id's diff status straight from the generator arithmetic (the
-    // engine runs two hash projections + a full-outer id join; the
-    // oracle needs none of it — CASE order resolves the overlaps:
-    // removed/added membership first, then the mod-7 refresh)
-    "q_corpus_diff" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 10 = 0 THEN 'removed'
-        |       WHEN doc_id % 10 = 9 THEN 'added'
-        |       WHEN doc_id % 7 = 0 THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_incremental" ->
-      """WITH delta AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 >= 7),
-        |grp AS (SELECT text, min(doc_id) AS doc_id, count(*) AS n_dups
-        |        FROM delta GROUP BY text)
-        |SELECT doc_id, n_dups FROM grp g
-        |WHERE NOT EXISTS (SELECT 1 FROM documents c
-        |                  WHERE c.doc_id % 10 < 7 AND c.text = g.text)
-        |ORDER BY doc_id""".stripMargin,
-
-    // the whole mirror derivation re-run relationally on the same
-    // construction: distinct (host, content), df-cap the boilerplate
-    // out, self-join on content, integer-ppm overlap vs the smaller
-    // host's inventory ('//' floor == Spark div: operands non-negative)
-    "q_mirror_hosts" -> mirrorHostsOracleSql,
-
-    // the streamed ledger must land on the batch derivation verbatim
-    // (cross-batch distinct + the read-time fold is the only new
-    // machinery)
-    "q_mirror_ingest_replay" -> mirrorHostsOracleSql,
-
-    "q_text_langid" ->
-      s"""WITH $langidPredCtes
-         |SELECT lang_pred, count(*) AS n FROM pred
-         |GROUP BY lang_pred ORDER BY lang_pred""".stripMargin,
-
-    // the declared <html lang> per mod class joined against the SAME
-    // per-doc langid derivation q_text_langid is gated on; agreement
-    // null-safe (an undeclared page never "agrees")
-    "q_lang_audit" ->
-      s"""WITH $langidPredCtes,
-         |dec AS (SELECT doc_id,
-         |    CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'en'
-         |      WHEN 1 THEN 'zh' WHEN 2 THEN 'xx' END AS lang_attr
-         |  FROM documents)
-         |SELECT d.doc_id, d.lang_attr, p.lang_pred,
-         |  coalesce(d.lang_attr = p.lang_pred, false) AS agree
-         |FROM dec d JOIN pred p ON d.doc_id = p.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // independent recount of every script histogram column (RE2 \p{X}
-    // classes vs the engine's Java \p{IsX}), the same (count, name
-    // DESC) argmax as the engine's struct max, and the presence sum
-    "q_script_mix" -> {
-      val tails = scriptMixTails.map(t => s"'${t.replace("'", "''")}'")
-      s"""WITH d AS (SELECT doc_id, text ||
-         |    CASE CAST(doc_id % 5 AS INT)
-         |      WHEN 0 THEN ${tails(0)} WHEN 1 THEN ${tails(1)}
-         |      WHEN 2 THEN ${tails(2)} WHEN 3 THEN ${tails(3)}
-         |      ELSE ${tails(4)} END AS t
-         |  FROM documents),
-         |c AS (SELECT doc_id,
-         |    CAST(len(regexp_extract_all(t, '\\p{Latin}')) AS BIGINT) AS n_latin,
-         |    CAST(len(regexp_extract_all(t, '\\p{Cyrillic}')) AS BIGINT) AS n_cyrillic,
-         |    CAST(len(regexp_extract_all(t, '\\p{Greek}')) AS BIGINT) AS n_greek,
-         |    CAST(len(regexp_extract_all(t, '\\p{Han}')) AS BIGINT) AS n_han,
-         |    CAST(len(regexp_extract_all(t, '\\p{Arabic}')) AS BIGINT) AS n_arabic
-         |  FROM d),
-         |s AS (SELECT doc_id, 'arabic' AS s, n_arabic AS n FROM c
-         |  UNION ALL SELECT doc_id, 'cyrillic', n_cyrillic FROM c
-         |  UNION ALL SELECT doc_id, 'greek', n_greek FROM c
-         |  UNION ALL SELECT doc_id, 'han', n_han FROM c),
-         |b AS (SELECT doc_id, s, n, row_number() OVER (PARTITION BY doc_id
-         |        ORDER BY n DESC, s DESC) AS rn FROM s)
-         |SELECT c.doc_id, n_latin, n_cyrillic, n_greek, n_han, n_arabic,
-         |  CASE WHEN b.n > 0 THEN b.s ELSE 'none' END AS main_other,
-         |  (CAST(n_latin > 0 AS INT) + CAST(n_cyrillic > 0 AS INT) +
-         |   CAST(n_greek > 0 AS INT) + CAST(n_han > 0 AS INT) +
-         |   CAST(n_arabic > 0 AS INT)) >= 2 AS mixed
-         |FROM c JOIN b ON c.doc_id = b.doc_id AND b.rn = 1
-         |ORDER BY c.doc_id""".stripMargin
-    },
-
-    "q_embed_normalize" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM v)
-        |SELECT vec_id,
-        |  array_to_string(list_transform(v, x -> CAST(round(
-        |    (CASE WHEN nrm = 0 THEN x ELSE x / nrm END) * 1000000) AS BIGINT)), '|')
-        |    AS nvec
-        |FROM n ORDER BY vec_id""".stripMargin,
-
-    // the same normalize derivation over the first-16 slice (1-based
-    // inclusive list_slice == Spark's slice(v, 1, 16))
-    "q_embed_truncate" ->
-      """WITH v AS (SELECT vec_id,
-        |    list_slice(CAST(embedding AS DOUBLE[]), 1, 16) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM v)
-        |SELECT vec_id,
-        |  array_to_string(list_transform(v, x -> CAST(round(
-        |    (CASE WHEN nrm = 0 THEN x ELSE x / nrm END) * 1000000) AS BIGINT)), '|')
-        |    AS tvec
-        |FROM n ORDER BY vec_id""".stripMargin,
-
-    "q_embed_quantize" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |s AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS scale FROM v)
-        |SELECT vec_id,
-        |  array_to_string(
-        |    CASE WHEN scale = 0 THEN list_transform(v, x -> CAST(0 AS TINYINT))
-        |         ELSE list_transform(v, x -> CAST(round(x * 127.0 / scale) AS TINYINT))
-        |    END, '|') AS qvec,
-        |  round(scale, 6) AS scale
-        |FROM s ORDER BY vec_id""".stripMargin,
-
-    "q_prep_pipeline" ->
-      s"""WITH surv AS (
-         |  SELECT d.* FROM documents d
-         |  JOIN (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text) s
-         |    USING (doc_id)),
-         |gated AS (
-         |  SELECT doc_id, lang, text FROM (
-         |    SELECT doc_id, lang, text, $qualitySql AS quality
-         |    FROM (SELECT doc_id, lang, text, $toksSql AS toks FROM surv))
-         |  WHERE quality >= 0.5),
-         |t AS (SELECT doc_id, lang, $toksSql AS toks FROM gated),
-         |n AS (SELECT doc_id, lang, toks, CAST(len(toks) AS INT) AS n_toks FROM t),
-         |c AS (SELECT doc_id, lang, n_toks, toks,
-         |        CAST(unnest(range(0, greatest(1,
-         |          CAST(ceil((n_toks - 32) / 32.0) AS INT) + 1))) AS INT) AS chunk_idx
-         |      FROM n),
-         |chunks AS (
-         |  SELECT doc_id * 1000 + chunk_idx AS chunk_id, lang,
-         |    array_to_string(toks[chunk_idx*32 + 1 : chunk_idx*32 + 32], ' ') AS text
-         |  FROM c),
-         |ct AS (SELECT chunk_id, lang,
-         |         CAST(len(string_split_regex(lower(text), '\\s+')) AS INT) AS n_tokens
-         |       FROM chunks),
-         |packed AS (
-         |  SELECT lang AS "group", chunk_id, n_tokens,
-         |    CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY lang
-         |      ORDER BY chunk_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |      0) / 256.0) AS BIGINT) AS pack_id
-         |  FROM ct)
-         |SELECT "group", pack_id, count(*) AS n_chunks,
-         |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-         |FROM packed GROUP BY "group", pack_id
-         |ORDER BY "group", pack_id""".stripMargin,
-
-    "q_profile" -> {
-      def colSql(c: String, isNum: Boolean, isStr: Boolean) =
-        s"""SELECT '$c' AS "column", count($c) AS n_nonnull,
-           |count(*) - count($c) AS n_null, count(DISTINCT $c) AS n_distinct,
-           |${if (isNum) s"CAST(min($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"} AS min_num,
-           |${if (isNum) s"CAST(max($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"} AS max_num,
-           |${if (isStr) s"min($c)" else "CAST(NULL AS VARCHAR)"} AS min_str,
-           |${if (isStr) s"max($c)" else "CAST(NULL AS VARCHAR)"} AS max_str
-           |FROM events""".stripMargin
-      Seq(colSql("user_id", isNum = true, isStr = false),
-        colSql("value", isNum = true, isStr = false),
-        colSql("event_type", isNum = false, isStr = true))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")
-    },
-
-    "q_pii_redact" ->
-      s"""WITH aug AS (SELECT doc_id,
-         |    text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-         |    '@example.com or 10.0.' || CAST(doc_id % 256 AS VARCHAR) ||
-         |    '.7 tel 555-123-4567' AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |$piiCountSql,
-         |$piiCleanSql AS text_clean
-         |FROM aug ORDER BY doc_id""".stripMargin,
-
-    "q_text_normalize" ->
-      """SELECT doc_id, nfc_normalize(text) AS text_nfc,
-        |  CAST(length(text) - length(nfc_normalize(text)) AS INT) AS delta_chars
-        |FROM (SELECT doc_id,
-        |        text || ' cafe' || chr(769) || ' ' || chr(233) || 'clair' AS text
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_text_stats" ->
-      s"""SELECT doc_id, CAST(len(toks) AS INT) AS n_tokens,
-         |CAST(length(text) AS INT) AS n_chars_calc,
-         |CAST(len(regexp_extract_all(text, '[[:punct:]]')) AS INT) AS n_punct,
-         |CAST(len(regexp_extract_all(text,
-         |  '${graft.functions.TextFunctions.BpeishPattern.replace("'", "''")}'))
-         |  AS INT) AS n_bpeish,
-         |CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE) / len(toks)
-         |  AS avg_token_len
-         |FROM (SELECT doc_id, text, $toksSql AS toks FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_text_quality" ->
-      s"""SELECT doc_id, $qualitySql AS quality
-         |FROM (SELECT doc_id, text, $toksSql AS toks FROM documents)
-         |ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT min(doc_id) AS doc_id, count(*) AS n_dups
-        |FROM documents GROUP BY text ORDER BY doc_id""".stripMargin,
-
-    "q_text_tfidf" ->
-      s"""WITH terms AS (
-         |  SELECT doc_id, unnest(toks) AS term
-         |  FROM (SELECT doc_id, $toksSql AS toks FROM documents WHERE doc_id < 10)),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
-         |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM terms GROUP BY term),
-         |n AS (SELECT count(*) AS n_docs FROM documents WHERE doc_id < 10),
-         |scored AS (
-         |  SELECT tf.doc_id, tf.term, tf.tf,
-         |    round(CAST(tf.tf AS DOUBLE) *
-         |      (ln((CAST(n_docs AS DOUBLE) + 1.0) / (CAST(df.df AS DOUBLE) + 1.0)) + 1.0),
-         |      6) AS tfidf
-         |  FROM tf JOIN df USING (term) CROSS JOIN n)
-         |SELECT doc_id, rank, term, tf, tfidf FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY doc_id
-         |                               ORDER BY tfidf DESC, term) AS rank
-         |  FROM scored) t
-         |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    "q_text_fingerprint" ->
-      s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
-         |f AS (SELECT doc_id, ${polyFoldSql("text")} AS fp_roll FROM t),
-         |shl AS (SELECT doc_id, unnest($shinglesSql) AS s FROM t),
-         |m AS (SELECT doc_id, min(${polyFoldSql("s")}) AS fp_roll_min
-         |      FROM shl GROUP BY doc_id)
-         |SELECT f.doc_id, f.fp_roll, m.fp_roll_min
-         |FROM f JOIN m USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_ngram_jaccard" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id, lang,
-         |         list_distinct($shinglesSql) AS sh
-         |  FROM (SELECT doc_id, lang, $toksSql AS toks FROM documents))
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-         |        CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6)
-         |    AS jaccard
-         |FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
-         |WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-         |            CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE), 6)
-         |      >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // mirrors the operator's capped inverted index: df per (block, shingle),
-    // drop shingles over the cap, count intersections over SURVIVING
-    // shingles only, union = len_a + len_b − inter with len still the FULL
-    // distinct-shingle count (capping shrinks the numerator only)
-    "q_dedup_ngram_capped" ->
-      s"""WITH aug AS (SELECT doc_id, lang,
-         |    text || ' standard footer disclaimer boilerplate notice applies' AS text
-         |  FROM documents),
-         |sh AS (
-         |  SELECT doc_id, lang, list_distinct($shinglesSql) AS sh
-         |  FROM (SELECT doc_id, lang, $toksSql AS toks FROM aug)),
-         |d AS (SELECT doc_id, lang, sh, CAST(len(sh) AS BIGINT) AS len FROM sh),
-         |post AS (SELECT lang, unnest(sh) AS s, doc_id, len FROM d),
-         |kept AS (
-         |  SELECT p.lang, p.s, p.doc_id, p.len FROM post p
-         |  JOIN (SELECT lang, s FROM post GROUP BY lang, s HAVING count(*) <= 10) ok
-         |    ON p.lang = ok.lang AND p.s = ok.s),
-         |pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.len AS len_a,
-         |    b.len AS len_b, count(*) AS inter
-         |  FROM kept a JOIN kept b
-         |    ON a.lang = b.lang AND a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2, 3, 4)
-         |SELECT id_a, id_b,
-         |  round(CAST(inter AS DOUBLE) / (len_a + len_b - inter), 6) AS jaccard
-         |FROM pairs
-         |WHERE round(CAST(inter AS DOUBLE) / (len_a + len_b - inter), 6) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_cc_components" ->
-      """WITH RECURSIVE v AS (
-        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v) /
-        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
-        |        >= 0.35),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT u, u FROM edges
-        |  UNION
-        |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-
-    "q_pagerank" -> pageRankOracleSql,
-    "q_ppr" -> pprOracleSql,
-
-    "q_kcore" -> kCoreOracleSql,
-    "q_label_prop" -> labelPropOracleSql,
-    "q_modularity" -> modularityOracleSql,
-
-    // same pair mining as q_cc_components, then the degree-ordered
-    // triangle algorithm re-derived: canonical edges, degrees, (deg, id)
-    // orientation, source wedges, closing semi-join
-    "q_triangles" ->
-      """WITH v AS (
-        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v) /
-        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
-        |        >= 0.35),
-        |canon AS (SELECT DISTINCT least(id_a, id_b) AS u, greatest(id_a, id_b) AS v
-        |          FROM pairs WHERE id_a <> id_b),
-        |deg AS (SELECT x, count(*) AS d FROM (
-        |    SELECT u AS x FROM canon UNION ALL SELECT v FROM canon) GROUP BY x),
-        |oriented AS (
-        |  SELECT CASE WHEN (du.d, c.u) < (dv.d, c.v) THEN c.u ELSE c.v END AS a,
-        |         CASE WHEN (du.d, c.u) < (dv.d, c.v) THEN c.v ELSE c.u END AS b,
-        |         CASE WHEN (du.d, c.u) < (dv.d, c.v) THEN dv.d ELSE du.d END AS db
-        |  FROM canon c JOIN deg du ON du.x = c.u JOIN deg dv ON dv.x = c.v),
-        |wedges AS (
-        |  SELECT o1.b, o2.b AS c
-        |  FROM oriented o1 JOIN oriented o2
-        |    ON o1.a = o2.a AND (o1.db, o1.b) < (o2.db, o2.b))
-        |SELECT CAST(count(*) AS BIGINT) AS n_triangles
-        |FROM wedges w
-        |WHERE EXISTS (SELECT 1 FROM oriented o WHERE o.a = w.b AND o.b = w.c)""".stripMargin,
-
-    "q_bpe_train" -> bpeTrainOracleSql,
-
-    // the full WordPiece training recurrence re-derived (scores in
-    // HUGEINT ≡ the engine's DECIMAL(38,0) — both exact truncation)
-    "q_wordpiece_train" -> wordpieceTrainOracleSql,
-
-    // training chain + the step-unrolled greedy longest-match scan
-    "q_wordpiece_tokens" -> wordpieceTokensOracleSql,
-
-    // every pattern recounted at every start position (overlaps and
-    // nesting included — substr equality per offset, NOT replace()
-    // arithmetic, which only sees non-overlapping occurrences)
-    "q_keyword_hits" -> {
-      val values = keywordPatterns.map(p => s"('$p')").mkString(", ")
-      s"""WITH pats(p) AS (VALUES $values),
-         |h AS (SELECT d.doc_id, pats.p,
-         |    len(list_filter(range(1, len(d.text) - len(pats.p) + 2),
-         |      i -> substr(d.text, CAST(i AS INT), len(pats.p)) = pats.p)) AS n
-         |  FROM documents d CROSS JOIN pats)
-         |SELECT p AS pattern, CAST(sum(n) AS BIGINT) AS n_hits,
-         |  CAST(count(*) FILTER (WHERE n > 0) AS BIGINT) AS n_docs
-         |FROM h GROUP BY p ORDER BY pattern""".stripMargin
-    },
-
-    // the fold recomputed in the oracle (lower ∘ nfc_normalize — the
-    // engine's exact composition order) over the SAME planted tail,
-    // then every pattern recounted at every start position like
-    // q_keyword_hits; the patterns are already folded-form literals,
-    // so the VALUES list doubles as the folded automaton input
-    "q_keyword_hits_ci" -> {
-      val values = ciKeywordPatterns.map(p => s"('$p')").mkString(", ")
-      s"""WITH pats(p) AS (VALUES $values),
-         |d AS (SELECT doc_id,
-         |    lower(nfc_normalize(text || '$ciPlantedTail')) AS t
-         |  FROM documents),
-         |h AS (SELECT d.doc_id, pats.p,
-         |    len(list_filter(range(1, len(d.t) - len(pats.p) + 2),
-         |      i -> substr(d.t, CAST(i AS INT), len(pats.p)) = pats.p)) AS n
-         |  FROM d CROSS JOIN pats)
-         |SELECT p AS pattern, CAST(sum(n) AS BIGINT) AS n_hits,
-         |  CAST(count(*) FILTER (WHERE n > 0) AS BIGINT) AS n_docs
-         |FROM h GROUP BY p ORDER BY pattern""".stripMargin
-    },
-
-    // the repaired strings, stated directly: each mojibake class's TRUE
-    // text is a literal here — the engine must land on the same bytes
-    // from the general re-encode path, and must not touch the clean one
-    "q_mojibake" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 3 THEN false ELSE true END AS mojibake_fixed,
-        |  md5(text || CASE CAST(doc_id % 4 AS INT)
-        |    WHEN 0 THEN ' café bar' WHEN 1 THEN ' don’t go'
-        |    WHEN 2 THEN ' über alles' ELSE ' clean tail' END) AS text_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // bigram/unigram recount + the identical exact integer lift
-    // (HUGEINT ≡ the engine's DECIMAL(38,0) — both truncate)
-    "q_collocations" ->
-      s"""WITH d AS (SELECT $toksSql AS l FROM documents),
-         |bg AS (SELECT a, b, CAST(count(*) AS BIGINT) AS n FROM (
-         |    SELECT l[i] AS a, l[i + 1] AS b FROM (
-         |      SELECT l, unnest(generate_series(1, len(l) - 1)) AS i FROM d))
-         |  WHERE len(a) > 0 AND len(b) > 0 GROUP BY a, b),
-         |uni AS (SELECT u, CAST(count(*) AS BIGINT) AS c FROM (
-         |    SELECT unnest(l) AS u FROM d) WHERE len(u) > 0 GROUP BY u),
-         |tot AS (SELECT CAST(sum(c) AS HUGEINT) AS nn FROM uni)
-         |SELECT a, b, n AS pair_count,
-         |  CAST(CAST(n AS HUGEINT) * (SELECT nn FROM tot) * 1000000 //
-         |    (CAST(ca.c AS HUGEINT) * cb.c) AS BIGINT) AS lift_ppm
-         |FROM bg JOIN uni ca ON ca.u = bg.a JOIN uni cb ON cb.u = bg.b
-         |WHERE n >= 2
-         |ORDER BY lift_ppm DESC, a, b LIMIT 20""".stripMargin,
-
-    // fertility: the same chain + greedy scan, then the per-(lang,
-    // word) frequency ledger joined on the segmented word table —
-    // exact integer ppm both sides
-    "q_wordpiece_fertility" -> (
-      wordpieceScanCtes +
-        s""",
-           |wlang AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS cnt
-           |  FROM (SELECT lang, unnest($toksSql) AS w FROM documents)
-           |  WHERE len(w) BETWEEN 1 AND 12 GROUP BY lang, w),
-           |wnp AS (SELECT w, CAST(len(pieces) AS BIGINT) AS np FROM gst12)
-           |SELECT lang, CAST(sum(cnt) AS BIGINT) AS n_words,
-           |  CAST(sum(cnt * np) AS BIGINT) AS n_pieces,
-           |  CAST((sum(cnt * np) * 1000000) // sum(cnt) AS BIGINT)
-           |    AS pieces_per_word_ppm
-           |FROM wlang JOIN wnp USING (w)
-           |GROUP BY lang ORDER BY lang""".stripMargin),
-
-    // every engine column is parsed from the rendered WET file; this
-    // recomputes them all from the source-of-truth documents table —
-    // uri/type from the render rule, length and body md5 from the text
-    "q_wet_scan" -> wetScanOracleSql,
-
-    // the streamed 3-file checkpointed ingest must land on the batch
-    // face's oracle verbatim — one derivation for both
-    "q_wet_ingest_replay" -> wetScanOracleSql,
-
-    // every engine column parsed from the rendered WARC response dump;
-    // this recomputes them from the documents table + the render rule —
-    // content_length is the full HTTP block's BYTE count (status line +
-    // Content-Type header + blank line + payload), payload md5-gated
-    "q_warc_scan" ->
-      """WITH r AS (SELECT doc_id, source, text,
-        |    CASE WHEN doc_id % 3 = 0 THEN 404 ELSE 200 END AS st,
-        |    CASE WHEN doc_id % 2 = 0 THEN 'text/html; charset=UTF-8'
-        |         ELSE 'text/plain' END AS ct
-        |  FROM documents)
-        |SELECT doc_id, 'response' AS rec_type,
-        |  'http://' || source || '.example.com/p/' ||
-        |    CAST(doc_id AS VARCHAR) AS uri,
-        |  CAST(octet_length(encode('HTTP/1.1 ' || CAST(st AS VARCHAR) ||
-        |      ' OK' || chr(13) || chr(10) || 'Content-Type: ' || ct ||
-        |      chr(13) || chr(10) || chr(13) || chr(10))) +
-        |    octet_length(encode(text)) AS BIGINT) AS content_length,
-        |  CAST(st AS INT) AS http_status, ct AS content_type,
-        |  md5(text) AS body_md5
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // the decoded payload is the doc text by construction, so every
-    // coding class's de-chunk/inflate result is re-derived from the
-    // documents table — the coding labels from the mod-6 render rule
-    // (identity / chunked / gzip / chunked-over-gzip / deflate / zstd),
-    // the body from its md5 + byte count
-    "q_warc_http_decode" ->
-      """SELECT doc_id, CAST(200 AS INT) AS http_status,
-        |  CASE WHEN doc_id % 6 IN (1, 3) THEN 'chunked' END
-        |    AS transfer_encoding,
-        |  CASE WHEN doc_id % 6 IN (2, 3) THEN 'gzip'
-        |       WHEN doc_id % 6 = 4 THEN 'deflate'
-        |       WHEN doc_id % 6 = 5 THEN 'zstd' END AS content_encoding,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS body_bytes,
-        |  md5(text) AS body_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // exactly one row per fetch — the response record's — with the
-    // mod-3 status and the doc text's md5; the request/metadata
-    // records planted around it contribute NOTHING
-    "q_warc_demux_mixed" ->
-      """SELECT doc_id, 'response' AS rec_type,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 404 ELSE 200 END AS INT)
-        |    AS http_status,
-        |  md5(text) AS body_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // expected charset label + decoded text per mod-5 class, re-derived
-    // from the documents table and the shared tail constants — md5 runs
-    // on the DECODED text (UTF-8 re-encoding), so the gate is charset-
-    // independent on the comparison side and charset-SENSITIVE on the
-    // engine side (a skipped or lied-about decode breaks it)
-    "q_warc_charset" -> {
-      val t = charsetTails
-      s"""SELECT doc_id,
-         |  CASE doc_id % 5 WHEN 0 THEN 'UTF-8' WHEN 1 THEN 'ISO-8859-1'
-         |    WHEN 2 THEN 'windows-1252' WHEN 3 THEN 'ISO-8859-1'
-         |    ELSE 'UTF-8' END AS charset,
-         |  md5(CASE doc_id % 5
-         |    WHEN 0 THEN text || '${t(0)}'
-         |    WHEN 1 THEN text || '${t(1)}'
-         |    WHEN 2 THEN text || '${t(2)}'
-         |    WHEN 3 THEN '$metaPrefix' || text || '${t(3)}'
-         |    ELSE text || '${t(4)}' END) AS body_md5
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    // expected charset label per BOM class + decoded-text md5 from the
-    // documents table and the shared tails — the BOM never appears in
-    // the text, and the lying-header classes only pass if the BOM won
-    "q_warc_bom" -> {
-      val t = bomTails
-      s"""SELECT doc_id,
-         |  CASE doc_id % 4 WHEN 0 THEN 'UTF-8' WHEN 1 THEN 'UTF-16LE'
-         |    WHEN 2 THEN 'UTF-16BE' ELSE 'UTF-8' END AS charset,
-         |  md5(text || CASE doc_id % 4
-         |    WHEN 0 THEN '${t(0)}' WHEN 1 THEN '${t(1)}'
-         |    WHEN 2 THEN '${t(2)}' ELSE '${t(3)}' END) AS body_md5
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    // the whole crawl-to-corpus pipeline re-derived from the documents
-    // table the WET dump was rendered from: blocklist drop from the
-    // render rule's host, stopword/CJK langid, the Gopher/C4 rule gate,
-    // then exact dedup (min-id per text) over the gated set — every
-    // stage recomputed independently, one SQL
-    "q_crawl_pipeline" -> crawlPipelineOracleSql,
-
-    // the streamed 3-file checkpointed crawl ingest must land on the
-    // batch face's oracle verbatim (range-ordered arrival makes
-    // first-arrival incremental dedup ≡ min-id dedup) — one derivation
-    // for both, the wetScanOracleSql pattern
-    "q_crawl_ingest_replay" -> crawlPipelineOracleSql,
-
-    // the streamed ledger must fold to the identical whole-corpus
-    // recount, minus the never-hit rows (no ledger rows to sum)
-    "q_keyword_ingest_replay" -> {
-      val values = keywordPatterns.map(p => s"('$p')").mkString(", ")
-      s"""WITH pats(p) AS (VALUES $values),
-         |h AS (SELECT d.doc_id, pats.p,
-         |    len(list_filter(range(1, len(d.text) - len(pats.p) + 2),
-         |      i -> substr(d.text, CAST(i AS INT), len(pats.p)) = pats.p)) AS n
-         |  FROM documents d CROSS JOIN pats)
-         |SELECT p AS pattern, CAST(sum(n) AS BIGINT) AS n_hits,
-         |  CAST(count(*) FILTER (WHERE n > 0) AS BIGINT) AS n_docs
-         |FROM h GROUP BY p HAVING sum(n) > 0
-         |ORDER BY pattern""".stripMargin
-    },
-
-    // the drop predicate as plain LIKEs — any-pattern containment is
-    // engine-trivial; what the face gates is the automaton agreeing
-    // with it on every doc
-    "q_keyword_filter" -> {
-      val likes = keywordBlocklist
-        .map(p => s"text LIKE '%$p%'").mkString(" OR ")
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE NOT ($likes) ORDER BY doc_id""".stripMargin
-    },
-
-    "q_bpe_tokens" -> bpeTokensOracleSql,
-    "q_byte_bpe_train" -> byteBpeTrainOracleSql,
-    "q_byte_bpe_tokens" -> byteBpeTokensOracleSql,
-
-    // both blocking passes, the HAVING straggler guard, candidate
-    // generation, and the levenshtein verify re-derived end to end —
-    // CAST to INT mirrors Spark's levenshtein return type. Two dial
-    // settings of the SAME derivation: the fast pl=15 and the
-    // total-recall pl=8 (SCALE.md recall table)
-    "q_fuzzy_pairs" -> fuzzyPairsOracleSql(15),
-    "q_fuzzy_pairs_safe" -> fuzzyPairsOracleSql(8),
-
-    // incremental face: base-partition labels + delta edges must land on
-    // the full recompute exactly — identical oracle by construction
-    "q_cc_components_inc" ->
-      """WITH RECURSIVE v AS (
-        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v) /
-        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
-        |        >= 0.35),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT u, u FROM edges
-        |  UNION
-        |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-
-    // same closure, then the quality survivor policy: per component keep
-    // arg-max((id % 7), then lowest id); docs outside the pair graph
-    // survive untouched
-    "q_cc_best_survivors" ->
-      """WITH RECURSIVE v AS (
-        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v) /
-        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
-        |        >= 0.35),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT u, u FROM edges
-        |  UNION
-        |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id),
-        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-        |best AS (SELECT component, id AS keep_id FROM (
-        |    SELECT component, id, row_number() OVER (
-        |      PARTITION BY component ORDER BY (id % 7) DESC, id ASC) AS rn
-        |    FROM comp) WHERE rn = 1),
-        |losers AS (SELECT id FROM comp
-        |           WHERE id NOT IN (SELECT keep_id FROM best))
-        |SELECT e.vec_id, e.label FROM embeddings e
-        |WHERE e.vec_id NOT IN (SELECT id FROM losers)
-        |ORDER BY e.vec_id""".stripMargin,
-
-    // staged twin: identical semantics (durable rounds), identical oracle
-    "q_cc_components_staged" ->
-      """WITH RECURSIVE v AS (
-        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pairs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE round(list_dot_product(a.v, b.v) /
-        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
-        |        >= 0.35),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT u, u FROM edges
-        |  UNION
-        |  SELECT e.u, r.r FROM edges e JOIN reach r ON e.v = r.id)
-        |SELECT id, min(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
-
-    "q_dedup_embedding" ->
-      """WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_dot_product(a.v, b.v) /
-        |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
-        |    AS cos
-        |FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(a.v, b.v) /
-        |            (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
-        |      >= 0.35
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // ranks re-derived like q_sim_topk, relevance = same label, and the
-    // SAME scaled-integer discount literals rendered from one Scala map
-    // (Eval.discounts/idealPrefix — one definition, two renderings)
-    "q_rank_metrics" -> {
-      val disc = graft.operators.Eval.discounts(5)
-      val ideal = graft.operators.Eval.idealPrefix(5)
-      val discSql = (1 to 5).map(r => s"WHEN ${r} THEN ${disc(r)}")
-        .mkString("CASE rank ", " ", " END")
-      val idealSql = (0 to 5).map(n => s"WHEN ${n} THEN ${ideal(n)}")
-        .mkString("CASE least(n_rel, 5) ", " ", " END")
-      s"""WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-         |           FROM embeddings),
-         |scored AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS id,
-         |    round(list_dot_product(q.v, c.v) /
-         |          (sqrt(list_dot_product(q.v, q.v)) *
-         |           sqrt(list_dot_product(c.v, c.v))), 6) AS cos
-         |  FROM v q JOIN v c ON q.vec_id < 8 AND q.vec_id <> c.vec_id),
-         |ranked AS (SELECT query_id, id, rank FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, id) AS rank FROM scored) t WHERE rank <= 5),
-         |rel AS (SELECT q.vec_id AS query_id, c.vec_id AS id
-         |        FROM v q JOIN v c ON q.label = c.label
-         |         AND q.vec_id < 8 AND q.vec_id <> c.vec_id),
-         |nrel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
-         |         FROM rel GROUP BY query_id),
-         |hits AS (SELECT r.query_id,
-         |           CAST(count(*) AS BIGINT) AS n_rel_at_k,
-         |           CAST(min(r.rank) AS BIGINT) AS first_rel_rank,
-         |           CAST(sum($discSql) AS BIGINT) AS dcg_scaled
-         |         FROM ranked r
-         |         WHERE EXISTS (SELECT 1 FROM rel
-         |                       WHERE rel.query_id = r.query_id
-         |                         AND rel.id = r.id)
-         |         GROUP BY r.query_id)
-         |SELECT n.query_id, n.n_rel,
-         |  CAST(coalesce(h.n_rel_at_k, 0) AS BIGINT) AS n_rel_at_k,
-         |  CAST(coalesce(h.first_rel_rank, -1) AS BIGINT) AS first_rel_rank,
-         |  CAST(coalesce(h.dcg_scaled, 0) AS BIGINT) AS dcg_scaled,
-         |  CAST($idealSql AS BIGINT) AS idcg_scaled
-         |FROM nrel n LEFT JOIN hits h ON n.query_id = h.query_id
-         |ORDER BY n.query_id""".stripMargin
-    },
-
-    "q_sim_topk" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-        |    round(list_dot_product(q.v, c.v) /
-        |          (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))), 6)
-        |      AS cos
-        |  FROM v q JOIN v c ON q.vec_id < 8 AND q.vec_id <> c.vec_id)
-        |SELECT query_id, rank, vec_id, cos FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |                               ORDER BY cos DESC, vec_id) AS rank
-        |  FROM scored) t
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // the packed sign words recomputed with plain integer shifts (bit j
-    // of word w set iff element 32w+j+1 > 0, little-endian)
-    "q_embed_binary" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |w AS (SELECT vec_id,
-        |    CAST(list_sum(list_transform(range(1, 33), j ->
-        |      CASE WHEN v[CAST(j AS INT)] > 0
-        |           THEN (CAST(1 AS BIGINT) << CAST(j - 1 AS INT))
-        |           ELSE 0 END)) AS BIGINT) AS w0,
-        |    CAST(list_sum(list_transform(range(1, 33), j ->
-        |      CASE WHEN v[CAST(32 + j AS INT)] > 0
-        |           THEN (CAST(1 AS BIGINT) << CAST(j - 1 AS INT))
-        |           ELSE 0 END)) AS BIGINT) AS w1
-        |  FROM v)
-        |SELECT vec_id, CAST(w0 AS VARCHAR) || '|' || CAST(w1 AS VARCHAR)
-        |  AS bvec
-        |FROM w ORDER BY vec_id""".stripMargin,
-
-    // the BQ read path from raw vectors alone: Hamming recomputed
-    // UNPACKED as the per-position sign-mismatch count (agreement with
-    // the engine's bit_count-of-XOR proves the packing), shortlist 20
-    // per query with (ham, vec_id) ties, exact rounded-cosine rerank
-    "q_sim_bq" ->
-      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |ham AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id, q.v AS qv, c.v AS cv,
-        |    CAST(len(list_filter(range(1, 65), j ->
-        |      (q.v[CAST(j AS INT)] > 0) <> (c.v[CAST(j AS INT)] > 0)))
-        |      AS BIGINT) AS ham
-        |  FROM v q JOIN v c ON q.vec_id < 8 AND q.vec_id <> c.vec_id),
-        |short AS (SELECT query_id, vec_id, qv, cv FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |                               ORDER BY ham, vec_id) AS rn
-        |  FROM ham) t WHERE rn <= 20),
-        |scored AS (
-        |  SELECT query_id, vec_id,
-        |    round(list_dot_product(qv, cv) /
-        |          (sqrt(list_dot_product(qv, qv)) *
-        |           sqrt(list_dot_product(cv, cv))), 6) AS cos
-        |  FROM short)
-        |SELECT query_id, rank, vec_id, cos FROM (
-        |  SELECT query_id, vec_id, cos,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, vec_id) AS INT) AS rank
-        |  FROM scored) t
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  )
 }

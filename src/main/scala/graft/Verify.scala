@@ -64,9 +64,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // sorted by face name, so two dumps diff line by line
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",\n", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -305,7 +305,6 @@ object Graph {
           val cp = smallRaw.localCheckpoint(eager = false)
           (cp, signature(cp))
       }
-      if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"[cc] round=$iter edges=${nextSig._1} t=${System.nanoTime()/1000000}ms")
       converged = nextSig == sig
       sig = nextSig
       e = small

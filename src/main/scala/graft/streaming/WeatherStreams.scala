@@ -16,7 +16,9 @@ import graft.operators.WeatherOps
   *  - KTable (changelog) → streaming aggregation in `update` output mode:
   *    every micro-batch re-emits the groups it touched — the same observable
   *    behavior as KTable's update stream (emission coalescing differs:
-  *    per-micro-batch, like the reference's record cache; SURVEY §7.5.1)
+  *    per-micro-batch, like the reference's record cache; SURVEY §7.5.1).
+  *    A1 on a stream is the batch [[WeatherOps.dailyAverage]] run in
+  *    `update` mode — the same plan, no stream-only variant.
   *  - repartition topics → shuffle exchanges (no topic round-trip)
   *  - Materialized store → state store + checkpointLocation
   *  - A1→A2 chained aggregation: Spark forbids two stateful aggs in one
@@ -29,7 +31,7 @@ import graft.operators.WeatherOps
   *
   * State-size note for 100 TB: per-cell state is O(distinct dates) — bounded
   * by the calendar (the reference's unwindowed semantics, kept). For
-  * unbounded keys use [[dailyAverageStream]] with a watermark + window
+  * unbounded keys use [[windowedAverageStream]] (watermark + window)
   * instead.
   */
 object WeatherStreams {
@@ -84,15 +86,6 @@ object WeatherStreams {
     * transforms are streaming-transparent). */
   def parseWeatherStream(raw: DataFrame, lenient: Boolean = false): DataFrame =
     WeatherOps.parseWeather(raw, lenient = lenient)
-
-  // ---- A1 streaming: update-mode daily average (≙ KTable changelog) ------
-
-  /** Per-(key, date) running average; run with `outputMode(Update)` to get
-    * KTable-style changelog emission (legal without watermark — unwindowed,
-    * like the reference). */
-  def dailyAverageStream(readings: DataFrame): DataFrame =
-    readings.groupBy(col("key"), col("wthr_date"))
-      .agg(avg(col("tmp_f")).as("avg_tmp_f"), avg(col("tmp_c")).as("avg_tmp_c"))
 
   /** Watermarked tumbling-window average — the bounded-state alternative to
     * the reference's unwindowed aggregation for unbounded key spaces

@@ -140,6 +140,33 @@ class BenchMetricSpec extends AnyFunSuite {
     assert(qs.contains("q_flagship"))
   }
 
+  test("budget breaches: over is listed, at is not, unbudgeted never") {
+    val results = Seq("q_over" -> 1.501, "q_at" -> 1.5, "q_at_ms" -> 1.5004,
+      "q_under" -> 0.2, "q_free" -> 99.0, "q_worst" -> 3.0)
+    val budgets = Map("q_over" -> 1.5, "q_at" -> 1.5, "q_at_ms" -> 1.5,
+      "q_under" -> 0.3, "q_worst" -> 1.0, "q_not_run" -> 0.1)
+    // slowest first; a time at its budget (also at the recorded ms
+    // precision) and a face without a budget are never breaches
+    assert(Bench.budgetBreaches(results, budgets) ==
+      Seq("q_worst:3.000(budget 1.0)", "q_over:1.501(budget 1.5)"))
+    assert(Bench.budgetBreaches(results, Map.empty).isEmpty)
+  }
+
+  test("budget breaches ride the file line only; stdout keeps its length guard") {
+    val breaches = Seq("q_worst:3.000(budget 1.0)", "q_over:1.501(budget 1.5)")
+    val (printed, full) = Bench.metricLine(worstCase, "/sf")
+    val file = Bench.withBudgetBreaches(full, breaches)
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(file)
+    assert(parsed.path("budget_breaches").size() == 2)
+    assert(parsed.path("budget_breaches").get(0).asText() == breaches.head)
+    assert(parsed.path("queries").size() == SparkEntry.queries.size)
+    // no breach is still recorded, as an empty list
+    val none = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Bench.withBudgetBreaches(full, Nil))
+    assert(none.path("budget_breaches").isArray && none.path("budget_breaches").size() == 0)
+    assert(!printed.contains("budget_breaches") && printed.length <= 1900)
+  }
+
   test("ms formatting is locale-proof and plain-notation") {
     assert(Bench.sec3(0.0001234) == "0.000")
     assert(Bench.sec3(31.7) == "31.700")

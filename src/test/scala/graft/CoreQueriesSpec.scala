@@ -10,10 +10,8 @@ class CoreQueriesSpec extends SparkSuite {
     val qs = SparkEntry.queries
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet),
       s"orphan oracle keys: ${SparkEntry.oracleSql.keySet -- qs.keySet}")
-    // a key in both sub-catalogs would silently shadow one of the two
-    // implementations under `++` (found the hard way: a second q_pivot)
-    val dup = CoreQueries.queries.keySet intersect ExtQueries.queries.keySet
-    assert(dup.isEmpty, s"catalog key collision across sub-maps: $dup")
+    // one name per face: no face is shadowed in the name-keyed map
+    assert(qs.size == SparkEntry.faces.size)
     // prewarm builds the declared fixtures: no face may build one it
     // missed (Bench would pay that build inside its timed region)
     val prewarmFailures = ExtQueries.prewarmFixtures(spark, sf0001)
@@ -26,10 +24,24 @@ class CoreQueriesSpec extends SparkSuite {
     val missed = ExtQueries.builtFixtures(sf0001) -- prewarmed
     assert(missed.isEmpty, s"fixtures built by faces, not by prewarm: $missed")
     // every catalog query must be value-gated — the rows-only era is
-    // over. Checked AFTER the run loop: three oracles are dynamic (their
-    // SQL embeds staged paths recorded when the query executes)
+    // over. Checked AFTER the run loop: three staged oracles exist only
+    // once their face has run (their SQL embeds paths the run records)
     assert(qs.keySet.subsetOf(SparkEntry.oracleSql.keySet),
       s"queries without an oracle: ${qs.keySet -- SparkEntry.oracleSql.keySet}")
+  }
+
+  test("building the face list rejects a repeated face name") {
+    def face(name: String) =
+      Face(name, (s, _) => s.range(1).toDF(), "SELECT 1 AS id")
+    assert(Face.catalog(face("q_a"), face("q_b")).map(_.name) == Seq("q_a", "q_b"))
+    // a repeat inside one sub-catalog: a name-keyed map keeps only one
+    val within = intercept[IllegalArgumentException](
+      Face.catalog(face("q_a"), face("q_b"), face("q_a")))
+    assert(within.getMessage.contains("q_a") && !within.getMessage.contains("q_b"))
+    // and one across the two sub-catalogs (a second q_pivot, found the
+    // hard way under `++`)
+    intercept[IllegalArgumentException](
+      Face.catalog(CoreQueries.faces ++ Seq(face(CoreQueries.faces.head.name)): _*))
   }
 
   test("approx freq: CMS never underestimates; over-estimate within eps·N") {

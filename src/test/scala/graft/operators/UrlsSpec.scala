@@ -350,12 +350,12 @@ class UrlsSpec extends SparkSuite {
       "HTTP://E.COM:00080/", "https://e.com:443?x=1", "e.com:8080/p")
     val urlDf = urls.toDF("u")
     val badHost = urlDf.select($"u",
-        Urls.canonicalHostExpr($"u").as("r"),
+        UrlColumnForms.canonicalHostExpr($"u").as("r"),
         Urls.canonicalHost($"u").as("k"))
       .where(!($"r" <=> $"k")).collect()
     assert(badHost.isEmpty, s"canonicalHost divergence: ${badHost.take(5).mkString("; ")}")
     val badUrl = urlDf.select($"u",
-        Urls.canonicalUrlExpr($"u").as("r"),
+        UrlColumnForms.canonicalUrlExpr($"u").as("r"),
         Urls.canonicalUrl($"u").as("k"))
       .where(!($"r" <=> $"k")).collect()
     assert(badUrl.isEmpty, s"canonicalUrl divergence: ${badUrl.take(5).mkString("; ")}")
@@ -366,7 +366,7 @@ class UrlsSpec extends SparkSuite {
       "a:b", ":x", " /sp ")
     val pairDf = bases.flatMap(b => refs.map(r => (b, r))).toDF("b", "r")
     val badRes = pairDf.select($"b", $"r",
-        Urls.resolveUrlExpr($"b", $"r").as("e"),
+        UrlColumnForms.resolveUrlExpr($"b", $"r").as("e"),
         Urls.resolveUrl($"b", $"r").as("k"))
       .where(!($"e" <=> $"k")).collect()
     assert(badRes.isEmpty, s"resolveUrl divergence: ${badRes.take(5).mkString("; ")}")
@@ -376,9 +376,9 @@ class UrlsSpec extends SparkSuite {
       .select(Urls.canonicalHost($"b").isNull.as("h"),
         Urls.canonicalUrl($"b").isNull.as("cu"),
         Urls.resolveUrl($"b", $"r").isNull.as("ru"),
-        Urls.canonicalHostExpr($"b").isNull.as("he"),
-        Urls.canonicalUrlExpr($"b").isNull.as("cue"),
-        Urls.resolveUrlExpr($"b", $"r").isNull.as("rue"))
+        UrlColumnForms.canonicalHostExpr($"b").isNull.as("he"),
+        UrlColumnForms.canonicalUrlExpr($"b").isNull.as("cue"),
+        UrlColumnForms.resolveUrlExpr($"b", $"r").isNull.as("rue"))
       .collect()
     n.foreach { row =>
       assert(row.getBoolean(0) == row.getBoolean(3))

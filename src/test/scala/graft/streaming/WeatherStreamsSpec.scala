@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSuite
 import graft.model.Weather
+import graft.operators.WeatherOps
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -23,7 +24,7 @@ class WeatherStreamsSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, String, Double, Double)]
     val readings = in.toDF().toDF("key", "wthr_date", "tmp_f", "tmp_c")
-    val q = WeatherStreams.dailyAverageStream(readings)
+    val q = WeatherOps.dailyAverage(readings)
       .writeStream.outputMode(OutputMode.Update())
       .format("memory").queryName("daily_upd")
       .option("checkpointLocation", tmpDir("ckpt-a1"))
@@ -193,7 +194,7 @@ class WeatherStreamsSpec extends SparkSuite {
     val readings = in.toDF().toDF("key", "wthr_date", "tmp_f", "tmp_c")
     val ckpt = tmpDir("ckpt-restart")
     val emissions = new scala.collection.concurrent.TrieMap[(Long, String), Double]()
-    def start() = WeatherStreams.dailyAverageStream(readings)
+    def start() = WeatherOps.dailyAverage(readings)
       .writeStream.outputMode(OutputMode.Update())
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
