@@ -5798,11 +5798,11 @@ object ExtQueries {
       val hashIdx = s.read.parquet(s"$fx/hash_idx")
       // exact dedup runs ONCE: the survivor rows feed both the fold (via
       // deltaUniq — the operator then skips its internal recompute) and
-      // the survivor-set union below
+      // the survivor-set union below; the fold persists them (its
+      // `inc_exact_survivors` stage), and the union reads that cache
       val deltaSurv = delta.join(
         Dedup.incrementalExact(delta, hashIdx).select(col("doc_id")),
         Seq("doc_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val updated = Dedup.dedupCorpusCCInc(delta, hashIdx,
         s.read.parquet(s"$fx/sig_idx"), s.read.parquet(s"$fx/labels"),
         bands = bands, rowsPerBand = rows, threshold = thr,
@@ -6462,16 +6462,16 @@ object ExtQueries {
          |      ORDER BY cos DESC, vec_id) AS rn FROM skscored) t
          |  WHERE rn <= 5)""".stripMargin)),
 
-    // product-quantization ANN with the refine leg VALUE-gated: the ADC
-    // shortlist is staged (read back into the refine for exact
+    // product-quantization ANN (flat PQ: IVF-PQ with one cell) with the
+    // refine leg VALUE-gated: the ADC shortlist is staged (read back into the refine for exact
     // provenance) and the oracle re-derives the unit-normalization and
     // the exact-cosine top-5 re-rank from raw vectors — shortlist
     // membership (the codebook-seeded part) stays in-engine, audited by
     // q_sim_pq_recall, the same epistemic split as the minhash faces
     Face("q_sim_pq", (s, dir) => {
       val embs = Tables.embeddings(s, dir)
-      Similarity.pqTopK(embs, embs.filter(col("vec_id") < 8), k = 5,
-        m = 16, ksub = 32, rerank = 8,
+      Similarity.ivfPqTopK(embs, embs.filter(col("vec_id") < 8), k = 5,
+        nlist = 1, nprobe = 1, m = 16, ksub = 32, rerank = 8,
         shortlistSink = Some(oracleStagePath(dir, "q_sim_pq")))
         .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
         .orderBy(col("query_id"), col("rank"))
@@ -6513,7 +6513,8 @@ object ExtQueries {
       val qs = embs.filter(col("vec_id") < 8)
       Similarity.recallAudit(
         Similarity.bruteForceTopK(embs, qs, k = 5),
-        Similarity.pqTopK(embs, qs, k = 5, m = 16, ksub = 32, rerank = 8,
+        Similarity.ivfPqTopK(embs, qs, k = 5, nlist = 1, nprobe = 1,
+          m = 16, ksub = 32, rerank = 8,
           shortlistSink = Some(oracleStagePath(dir, "q_sim_pq_recall"))))
     },
       // PQ / IVF-PQ recall: sketch top-5 = exact refine of each audit's

@@ -1181,16 +1181,10 @@ object Dedup {
     val v = embs.select(col(idCol),
       transform(col(vecCol), x => x.cast("double")).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // driver-local deterministic Lloyd over the bounded sample (same
-    // trainer as the PQ codebooks): distributed k-means would make the
-    // centroids — hence blocking recall — depend on float aggregation
-    // order across cluster layouts; this way the blocking is identical
-    // on any cluster. Only training is driver-side (≤ trainSample rows).
-    val sample = v.orderBy(col(idCol)).limit(trainSample)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "empty input")
-    val cents: Array[Array[Double]] = Similarity.lloyd(sample, nlist, iters = 8)
-    centroidsSink.foreach(Similarity.writeCentroids(embs.sparkSession, cents, _))
+    // the IVF coarse quantizer (driver-local Lloyd on the id-ordered
+    // sample): the blocking, hence its recall, is identical on any cluster
+    val cents = Similarity.coarseQuantizer(v, idCol, "v", nlist, trainSample,
+      centroidsSink)
     val cells = v.select(col(idCol),
       explode(Similarity.nearestCells(col("v"), cents, nprobe)).as("cell"))
       .repartition(col("cell")) // one exchange, read by both candidate sides

@@ -46,7 +46,7 @@ object Similarity {
     * aggregate ships at most k entries per (partition, query) and nothing
     * is globally sorted. Output contract is identical to the window form:
     * `ORDER BY score DESC, vec_id ASC`, rank 1-based. */
-  private def topKPerQuery(scored: DataFrame, scoreCol: String, k: Int): DataFrame =
+  private[graft] def topKPerQuery(scored: DataFrame, scoreCol: String, k: Int): DataFrame =
     scored.groupBy(col("query_id"))
       .agg(TopK.topKByOrd(
         struct(col("vec_id"), col(scoreCol)), col(scoreCol), col("vec_id"), k)
@@ -58,21 +58,25 @@ object Similarity {
 
   /** Scale-safe shortlist: ids of the `n` best candidates per query, same
     * k-bounded aggregate (the ADC shortlist feeding the exact refine). */
-  private def shortlistPerQuery(scored: DataFrame, scoreCol: String,
+  private[graft] def shortlistPerQuery(scored: DataFrame, scoreCol: String,
       n: Int): DataFrame =
     scored.groupBy(col("query_id"))
       .agg(TopK.topKByOrd(col("vec_id"), col(scoreCol), col("vec_id"), n)
         .as("__ids"))
       .select(col("query_id"), explode(col("__ids")).as("vec_id"))
 
+  /** The score every tier ranks by: exact cosine rounded to 6 places,
+    * over candidate rows carrying (query_id, qv, vec_id, v). */
+  private[graft] def exactCos(candidates: DataFrame): DataFrame =
+    candidates.select(col("query_id"), col("vec_id"),
+      round(cosine(col("qv"), col("v")), 6).as("cos"))
+
   /** Exact top-k: every query vector scored against every corpus vector. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("v")), 6).as("cos"))
+    val scored = exactCos(c.join(broadcast(q), col("query_id") =!= col("vec_id")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
@@ -110,11 +114,8 @@ object Similarity {
       .withColumn("bucket0", sigOf(col("qv")))
       .withColumn("bucket", explode(array(probeBuckets: _*)))
       .drop("bucket0")
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("v")), 6).as("cos"))
-    topKPerQuery(scored, "cos", k)
+    topKPerQuery(exactCos(c.join(broadcast(q), Seq("bucket"))
+      .filter(col("query_id") =!= col("vec_id"))), "cos", k)
   }
 
   /** Flip sign-bit `p` of a packed bucket id (XOR with 2^p). */
@@ -204,9 +205,7 @@ object Similarity {
     val refined = short
       .join(c.select(col("vec_id"), col("v")), Seq("vec_id"))
       .join(broadcast(q.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("v")), 6).as("cos"))
-    topKPerQuery(refined, "cos", k)
+    topKPerQuery(exactCos(refined), "cos", k)
   }
 
   /** IVF (inverted-file) approximate top-k: a k-means coarse quantizer
@@ -232,33 +231,12 @@ object Similarity {
       trainSample: Int = 10000,
       centroidsSink: Option[String] = None): DataFrame = {
     val c = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-    // coarse quantizer: driver-local deterministic Lloyd on a bounded
-    // sample (same trainer as the PQ codebooks) — centroids are identical
-    // on any cluster layout, unlike distributed k-means whose float
-    // aggregation order varies with partitioning; coarse cells only need
-    // rough geometry, and the sample is ≤ trainSample rows by contract
-    val sample = c.orderBy(col("vec_id")).limit(trainSample)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "empty corpus")
-    val cents: Array[Array[Double]] = lloyd(sample, nlist, iters = 8)
-    centroidsSink.foreach(writeCentroids(corpus.sparkSession, cents, _))
-
-    // Cell assignment via the NearestCells kernel expression — an unrolled
-    // literal formulation (nlist × dims plan literals) grows the expression
-    // tree past codegen limits and falls back to interpreted eval; the
-    // kernel keeps the centroid matrix as expression state and scores in
-    // one tight loop. Score = ||c||² − 2·v·c (rank-equal to distance).
-    val bucketed = c.withColumn("cell",
-      element_at(Similarity.nearestCells(col("v"), cents, 1), 1))
+    val cents = coarseQuantizer(c, "vec_id", "v", nlist, trainSample,
+      centroidsSink)
+    val bucketed = c.withColumn("cell", nearestCell(col("v"), cents))
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-    val probed = q.withColumn("cell",
-      explode(Similarity.nearestCells(col("qv"), cents, nprobe)))
-
-    val scored = bucketed.join(broadcast(probed), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("v")), 6).as("cos"))
-    topKPerQuery(scored, "cos", k)
+    topKPerQuery(exactCos(bucketed.join(broadcast(probe(q, cents, nprobe)),
+      Seq("cell")).filter(col("query_id") =!= col("vec_id"))), "cos", k)
   }
 
   /** Approximate ALL-PAIRS kNN graph — every corpus vector gets its top-k
@@ -305,38 +283,31 @@ object Similarity {
     val c = corpus.select((Seq(col(idCol).as("vec_id")) ++
       excludeLabelCol.map(l => col(l).as("lab")) :+
       asDouble(col(vecCol)).as("v")): _*)
-    val sample = c.orderBy(col("vec_id")).limit(trainSample)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "empty corpus")
-    val cents: Array[Array[Double]] = lloyd(sample, nlist, iters = 8)
-    centroidsSink.foreach(writeCentroids(corpus.sparkSession, cents, _))
+    val cents = coarseQuantizer(c, "vec_id", "v", nlist, trainSample,
+      centroidsSink)
     // staged: the (vec_id[, lab], v, cell) relation feeds BOTH join sides
     // — an unmaterialized diamond would run the assignment kernel twice.
     // Default executor-local persist (session-lifetime CacheManager
     // caveat of Dedup.minhashPairsFromShingles); stagingDir for the
     // durable cluster path, the Staging contract.
-    // Staging.spread (r21): the probe side broadcasts (BHJ — see the
-    // q_knn_graph plan dump), so the scoring join's parallelism IS this
+    // Staging.spread (r21): the probe side broadcasts (a BHJ in
+    // q_knn_graph's plan), so the scoring join's parallelism IS this
     // relation's partition count — and a sub-megabyte embeddings file
     // arrives as one scan split, putting the whole |corpus|·nprobe/nlist
     // candidate cross-product in a single task (measured 1.9 s / 3.1 s
     // single-task jobs on q_knn_graph / q_hard_negatives at 32 cores).
     val bucketed = Staging.stage(
-      Staging.spread(c.withColumn("cell",
-        element_at(Similarity.nearestCells(col("v"), cents, 1), 1))),
+      Staging.spread(c.withColumn("cell", nearestCell(col("v"), cents))),
       stagingDir, "ivf_bucketed")
-    val probed = c.select((Seq(col("vec_id").as("query_id")) ++
+    val probed = probe(c.select((Seq(col("vec_id").as("query_id")) ++
         excludeLabelCol.map(_ => col("lab").as("qlab")) :+
-        col("v").as("qv")): _*)
-      .withColumn("cell", explode(Similarity.nearestCells(col("qv"), cents, nprobe)))
+        col("v").as("qv")): _*), cents, nprobe)
     val joined = bucketed.join(probed, Seq("cell"))
     val kept = excludeLabelCol match {
       case Some(_) => joined.filter(col("lab") =!= col("qlab"))
       case None => joined.filter(col("query_id") =!= col("vec_id"))
     }
-    val scored = kept.select(col("query_id"), col("vec_id"),
-      round(cosine(col("qv"), col("v")), 6).as("cos"))
-    topKPerQuery(scored, "cos", k)
+    topKPerQuery(exactCos(kept), "cos", k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cos"))
   }
 
@@ -439,57 +410,74 @@ object Similarity {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  // ---- Product quantization (PQ) -------------------------------------
+  /** `nprobe` nearest cells per query: one (query, cell) row each, the
+    * probe side of every IVF candidate join. */
+  private[graft] def probe(q: DataFrame, cents: Array[Array[Double]],
+      nprobe: Int): DataFrame =
+    q.withColumn("cell", explode(nearestCells(col("qv"), cents, nprobe)))
 
-  /** Unit-normalize an ARRAY<DOUBLE> column (dot == cosine afterwards),
-    * with the norm scalar materialized BEFORE the HOF lambda (the
-    * EmbeddingPrep re-evaluation trap). */
-  /** Topic-cluster assignment — the k-means cell per vector, as a
-    * first-class column: the primitive of CLUSTER-BALANCED corpus mixing
-    * (balance pretraining data across semantic clusters instead of
-    * metadata groups — the cluster-then-balance recipe; SemDeDup's
-    * blocking is the same geometry used for dedup). Train the coarse
-    * quantizer on a bounded sample (deterministic driver-local Lloyd,
-    * the IVF/PQ trainer), then assign every vector its nearest cell in
-    * ONE narrow map-side pass — no shuffle, no join; at 100 TB the
-    * cluster column streams out of the scan. Compose the emitted
-    * `cluster` with [[graft.operators.Sampling.mixToShares]] /
-    * [[graft.operators.Sampling.epochsMix]] for the balancing step.
-    * `centroidsSink` stages the quantizer so an external engine re-derives
-    * every assignment (argmin ‖c‖² − 2·v·c, ties → lower cell). */
-  def clusterAssign(corpus: DataFrame, nlist: Int = 16,
-      vecCol: String = "embedding", trainSample: Int = 10000,
-      seedIdCol: String = "vec_id",
-      centroidsSink: Option[String] = None): DataFrame = {
-    val withV = corpus.withColumn("__v", asDouble(col(vecCol)))
-    val sample = withV.orderBy(col(seedIdCol)).limit(trainSample)
-      .select(col("__v")).collect().map(_.getSeq[Double](0).toArray)
+  /** The cell a vector is stored in: its nearest centroid. An unrolled
+    * literal formulation (nlist × dims plan literals) grows the expression
+    * tree past codegen limits and falls back to interpreted eval; the
+    * [[NearestCells]] kernel keeps the centroid matrix as expression state
+    * and scores in one tight loop. Score = ||c||² − 2·v·c (rank-equal to
+    * distance), ties → lower cell. */
+  private[graft] def nearestCell(vec: Column,
+      cents: Array[Array[Double]]): Column =
+    element_at(nearestCells(vec, cents, 1), 1)
+
+  // ---- Quantizer training ----------------------------------------------
+
+  /** The bounded training sample every quantizer of this family trains
+    * on: the first `n` vectors by id, collected to the driver. Ordering by
+    * id makes the sample, hence every trained centroid and codebook,
+    * identical on any cluster layout (partition count, shuffle
+    * partitions), unlike distributed k-means whose float aggregation
+    * order varies with partitioning. Only training is driver-side; the
+    * data path stays distributed. */
+  private[graft] def trainingSample(df: DataFrame, idCol: String,
+      vecCol: String, n: Int): Array[Array[Double]] = {
+    val sample = df.orderBy(col(idCol)).limit(n)
+      .select(col(vecCol)).collect().map(_.getSeq[Double](0).toArray)
     require(sample.nonEmpty, "empty corpus")
-    val cents = lloyd(sample, nlist, iters = 8)
-    centroidsSink.foreach(writeCentroids(corpus.sparkSession, cents, _))
-    withV.withColumn("cluster", element_at(nearestCells(col("__v"), cents, 1), 1))
-      .drop("__v")
+    sample
   }
 
-  private def unit(df: DataFrame, in: Column, out: String): DataFrame =
-    df.withColumn("__n2", aggregate(in, lit(0.0d), (a, x) => a + x * x))
-      .withColumn(out, transform(in, x => x / sqrt(greatest(col("__n2"), lit(1e-300)))))
-      .drop("__n2")
+  /** The coarse (IVF) quantizer: [[lloyd]] over the [[trainingSample]];
+    * coarse cells only need rough geometry. With `sink` set the centroids
+    * are also staged as (cell, c) parquet ([[writeCentroids]]) for the
+    * oracle. */
+  private[graft] def coarseQuantizer(df: DataFrame, idCol: String,
+      vecCol: String, nlist: Int, trainSample: Int,
+      sink: Option[String]): Array[Array[Double]] = {
+    val cents = lloyd(trainingSample(df, idCol, vecCol, trainSample), nlist)
+    sink.foreach(writeCentroids(df.sparkSession, cents, _))
+    cents
+  }
 
-  /** Driver-local deterministic Lloyd k-means over a BOUNDED sample — the
-    * PQ codebook trainer. m independent problems of ksub centroids over
-    * (dims/m)-dim subvectors aren't worth a distributed solver; only
-    * training is driver-side (≤ trainSample rows), the data path stays
-    * fully distributed. Seeded spread init + fixed iteration count keeps
-    * it reproducible on any cluster. */
-  private[graft] def lloyd(points: Array[Array[Double]], k: Int,
-      iters: Int): Array[Array[Double]] = {
+  /** PQ codebooks: `m` independent [[lloyd]] problems of `ksub` centroids,
+    * one per (dims/m)-dim subvector of the sample. */
+  private[graft] def codebooks(sample: Array[Array[Double]], m: Int,
+      ksub: Int): Array[Array[Array[Double]]] = {
+    val dims = sample(0).length
+    require(dims % m == 0, s"dims=$dims must divide by m=$m")
+    val dsub = dims / m
+    Array.tabulate(m)(sub => lloyd(sample.map(p =>
+      java.util.Arrays.copyOfRange(p, sub * dsub, (sub + 1) * dsub)), ksub))
+  }
+
+  /** Driver-local deterministic Lloyd k-means over a BOUNDED sample, the
+    * one trainer of the coarse quantizers and the PQ codebooks: small
+    * problems aren't worth a distributed solver. Seeded spread init and a
+    * fixed 8 iterations keep it reproducible on any cluster. */
+  private[graft] def lloyd(points: Array[Array[Double]],
+      k: Int): Array[Array[Double]] = {
     val n = points.length
     val d = points(0).length
     val kk = math.max(1, math.min(k, n))
     val cents = Array.tabulate(kk)(i => points((i.toLong * n / kk).toInt).clone())
     var it = 0
-    while (it < iters) {
+    while (it < 8) {
       val sums = Array.ofDim[Double](kk, d)
       val counts = new Array[Int](kk)
       var i = 0
@@ -520,145 +508,133 @@ object Similarity {
     cents
   }
 
-  /** Product-quantization ANN top-k: vectors are unit-normalized, split
-    * into `m` subvectors, and each subvector replaced by the id of its
-    * nearest codebook centroid — `m` small ints per vector instead of
-    * `dims` floats. Scoring is asymmetric (ADC): the query stays exact,
-    * the corpus side is reconstructed from codebooks inside one fused
-    * kernel, so the approximate score ≈ cosine (unit norms make dot ==
-    * cosine).
+  /** Topic-cluster assignment — the k-means cell per vector, as a
+    * first-class column: the primitive of CLUSTER-BALANCED corpus mixing
+    * (balance pretraining data across semantic clusters instead of
+    * metadata groups — the cluster-then-balance recipe; SemDeDup's
+    * blocking is the same geometry used for dedup). Train the coarse
+    * quantizer ([[coarseQuantizer]]), then assign every vector its nearest
+    * cell in ONE narrow map-side pass — no shuffle, no join; at 100 TB the
+    * cluster column streams out of the scan. Compose the emitted
+    * `cluster` with [[graft.operators.Sampling.mixToShares]] /
+    * [[graft.operators.Sampling.epochsMix]] for the balancing step.
+    * `centroidsSink` stages the quantizer so an external engine re-derives
+    * every assignment (argmin ‖c‖² − 2·v·c, ties → lower cell). */
+  def clusterAssign(corpus: DataFrame, nlist: Int = 16,
+      vecCol: String = "embedding", trainSample: Int = 10000,
+      seedIdCol: String = "vec_id",
+      centroidsSink: Option[String] = None): DataFrame = {
+    val withV = corpus.withColumn("__v", asDouble(col(vecCol)))
+    val cents = coarseQuantizer(withV, seedIdCol, "__v", nlist, trainSample,
+      centroidsSink)
+    withV.withColumn("cluster", nearestCell(col("__v"), cents)).drop("__v")
+  }
+
+  // ---- Product quantization (PQ) -------------------------------------
+
+  /** (id, unit vector) from an embedding column: dot == cosine afterwards.
+    * The norm scalar is materialized BEFORE the HOF lambda (the
+    * EmbeddingPrep re-evaluation trap). */
+  private[graft] def unit(df: DataFrame, idCol: String, vecCol: String,
+      outId: String, outVec: String): DataFrame =
+    df.withColumn("__v0", asDouble(col(vecCol)))
+      .withColumn("__n2",
+        aggregate(col("__v0"), lit(0.0d), (a, x) => a + x * x))
+      .select(col(idCol).as(outId),
+        transform(col("__v0"),
+          x => x / sqrt(greatest(col("__n2"), lit(1e-300)))).as(outVec))
+
+  /** PQ codes of an ARRAY<DOUBLE> vector column (the [[PqEncode]] kernel,
+    * codebooks as expression state). */
+  private[graft] def pqCodes(vec: Column,
+      books: Array[Array[Array[Double]]]): Column = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    Bridge.column(PqEncode(Bridge.expression(vec), new Mat3(books)))
+  }
+
+  /** IVF-PQ approximate top-k, the production composition (FAISS
+    * `IVFx,PQy` + refine). Vectors are unit-normalized; coarse k-means
+    * cells bound WHICH vectors each query scores (per-query work
+    * |corpus|·nprobe/nlist); each vector is split into `m` subvectors and
+    * each subvector replaced by the id of its nearest codebook centroid,
+    * so a scored row COSTS `m` small ints instead of `dims` floats.
+    * Scoring is asymmetric (ADC): the query stays exact, the corpus side
+    * is reconstructed from codebooks inside one fused kernel, so the
+    * approximate score ≈ cosine.
     *
     * THE 100 TB argument is scan compression: at m=8 over 64 float dims
     * the corpus shrinks 8× (256 B → 32 B/vector; 8 B with byte-packed
     * codes) — the embedding sweep reads codes, never the float matrix,
     * and the codebooks (m·ksub·dims/m doubles) ride the plan as
-    * expression state.
+    * expression state. `nlist = 1, nprobe = 1` is flat PQ: every vector
+    * sits in cell 0 and every query scores the whole corpus.
     *
-    * Codebook distortion is repaired the standard way (FAISS "refine"):
-    * ADC produces a SHORTLIST of k·`rerank` candidates per query, and only
-    * those rows fetch their float vectors for an exact-cosine re-rank — at
-    * scale a narrow id-equi-join touching |queries|·k·rerank vectors, not
-    * the corpus. `rerank = 1` disables the refine step (pure ADC ranking);
-    * recall is audited in-engine like LSH/IVF ([[recallAudit]]). */
+    * Codebook distortion is repaired the standard way (FAISS "refine",
+    * [[adcRefineTopK]]): ADC produces a SHORTLIST of k·`rerank`
+    * candidates per query, and only those rows fetch their float vectors
+    * for an exact-cosine re-rank. `rerank = 1` disables the refine step
+    * (pure ADC ranking); recall is audited in-engine ([[recallAudit]]).
+    * Both quantizers train driver-locally on one [[trainingSample]];
+    * cells, codes, ADC and refine are distributed and deterministic. */
   /** @param shortlistSink when set, the ADC shortlist (query_id, vec_id)
     *   is eagerly staged to this parquet path and the refine consumes the
     *   read-back — the DuckDB oracle then re-derives the exact-cosine
     *   re-rank over unit-normalized vectors from raw data, value-gating
     *   the refine leg (shortlist membership stays in-engine, audited by
     *   the recall twin — the same epistemic split as LSH banding). */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 8,
-      ksub: Int = 16, rerank: Int = 4, idCol: String = "vec_id",
-      vecCol: String = "embedding", trainSample: Int = 10000,
-      shortlistSink: Option[String] = None,
-      stagingDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    require(m >= 1 && ksub >= 1, s"m=$m ksub=$ksub")
-    // three consumers (training sample, encode pass, shortlist refine) —
-    // the minhashPairs staging rule (persist default + its CacheManager
-    // caveat; stagingDir for the durable cluster path)
-    val c = Staging.stage(unit(corpus.select(col(idCol).as("vec_id"),
-      asDouble(col(vecCol)).as("v0")), col("v0"), "v").drop("v0"),
-      stagingDir, "pq_vectors")
-    val sample = c.orderBy(col("vec_id")).limit(trainSample)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "empty corpus")
-    val dims = sample(0).length
-    require(dims % m == 0, s"dims=$dims must divide by m=$m")
-    val dsub = dims / m
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { sub =>
-      lloyd(sample.map(p =>
-        java.util.Arrays.copyOfRange(p, sub * dsub, (sub + 1) * dsub)),
-        ksub, iters = 8)
-    }
-    val codes = c.select(col("vec_id"),
-      Bridge.column(PqEncode(Bridge.expression(col("v")), new Mat3(codebooks))).as("code"))
-    val q = unit(queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("q0")), col("q0"), "qv").drop("q0")
-    val scored = codes.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        Bridge.column(PqAdc(Bridge.expression(col("qv")),
-          Bridge.expression(col("code")), new Mat3(codebooks))).as("adc"))
-    val shortlist0 = shortlistPerQuery(scored, "adc", k * math.max(1, rerank))
-    val shortlist = shortlistSink match {
-      case Some(path) =>
-        shortlist0.write.mode("overwrite").parquet(path)
-        corpus.sparkSession.read.parquet(path)
-      case None => shortlist0
-    }
-    // refine: exact cosine over the shortlist only — vectors join back by
-    // id (narrow; |queries|·k·rerank rows), the corpus is never re-scanned
-    // shortlist is bounded (|queries| * k * rerank rows) — broadcast it
-    // into the persisted corpus scan so the refine never sort-merge-joins
-    val refined = c.select(col("vec_id"), col("v"))
-      .join(broadcast(shortlist), Seq("vec_id"))
-      .join(broadcast(q.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("v")), 6).as("cos"))
-    topKPerQuery(refined, "cos", k)
-  }
-
-  /** IVF-PQ: the production composition (FAISS `IVFx,PQy` + refine) —
-    * coarse k-means cells bound WHICH vectors each query scores
-    * (per-query work |corpus|·nprobe/nlist), PQ codes bound what each
-    * scored row COSTS (m ints scanned, not dims floats), and the exact
-    * refine repairs codebook distortion on the k·rerank shortlist only.
-    * Both quantizers train driver-locally on one bounded sample; cells,
-    * codes, ADC, and refine are all distributed and deterministic. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 16, nprobe: Int = 4, m: Int = 16, ksub: Int = 32,
       rerank: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding", trainSample: Int = 10000,
       shortlistSink: Option[String] = None,
       stagingDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
     require(nlist >= 1 && nprobe >= 1 && m >= 1 && ksub >= 1,
       s"nlist=$nlist nprobe=$nprobe m=$m ksub=$ksub")
-    // same consumer diamond + staging contract as pqTopK's vector relation
-    val c = Staging.stage(unit(corpus.select(col(idCol).as("vec_id"),
-      asDouble(col(vecCol)).as("v0")), col("v0"), "v").drop("v0"),
+    // three consumers (training sample, encode pass, shortlist refine) —
+    // the minhashPairs staging rule (persist default + its CacheManager
+    // caveat; stagingDir for the durable cluster path)
+    val c = Staging.stage(unit(corpus, idCol, vecCol, "vec_id", "v"),
       stagingDir, "ivfpq_vectors")
-    val sample = c.orderBy(col("vec_id")).limit(trainSample)
-      .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "empty corpus")
-    val dims = sample(0).length
-    require(dims % m == 0, s"dims=$dims must divide by m=$m")
-    val dsub = dims / m
-    val cents = lloyd(sample, nlist, iters = 8)
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { sub =>
-      lloyd(sample.map(p =>
-        java.util.Arrays.copyOfRange(p, sub * dsub, (sub + 1) * dsub)),
-        ksub, iters = 8)
-    }
+    val sample = trainingSample(c, "vec_id", "v", trainSample)
+    val cents = lloyd(sample, nlist)
+    val books = codebooks(sample, m, ksub)
     // one narrow pass emits (id, cell, codes) — the compressed index
-    val codes = c.select(col("vec_id"),
-      element_at(nearestCells(col("v"), cents, 1), 1).as("cell"),
-      Bridge.column(PqEncode(Bridge.expression(col("v")), new Mat3(codebooks))).as("code"))
-    val q = unit(queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("q0")), col("q0"), "qv").drop("q0")
-    val probed = q.withColumn("cell",
-      explode(nearestCells(col("qv"), cents, nprobe)))
-    val scored = codes.join(broadcast(probed), Seq("cell"))
+    val codes = c.select(col("vec_id"), nearestCell(col("v"), cents).as("cell"),
+      pqCodes(col("v"), books).as("code"))
+    adcRefineTopK(codes, c, unit(queries, idCol, vecCol, "query_id", "qv"),
+      cents, nprobe, books, k, rerank, shortlistSink)
+  }
+
+  /** The IVF-PQ read leg, shared by [[ivfPqTopK]] and the standing index's
+    * [[graft.streaming.IngestStreams.annFromIndex]]: probe `nprobe` cells
+    * per query, ADC-score the probed (vec_id, cell, code) rows into a
+    * k·`rerank` shortlist (staged to `shortlistSink` and read back when
+    * set, so the oracle-visible shortlist is exactly what refined), then
+    * exact-cosine re-rank only the shortlisted (vec_id, v) vectors. The
+    * shortlist is bounded (|queries|·k·rerank rows), so it broadcasts
+    * into the vector scan and the refine never sort-merge-joins; the
+    * float matrix is never re-scanned. `q` is (query_id, qv), unit
+    * vectors. */
+  private[graft] def adcRefineTopK(codes: DataFrame, vectors: DataFrame,
+      q: DataFrame, cents: Array[Array[Double]], nprobe: Int,
+      books: Array[Array[Array[Double]]], k: Int, rerank: Int,
+      shortlistSink: Option[String]): DataFrame = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val scored = codes.join(broadcast(probe(q, cents, nprobe)), Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
         Bridge.column(PqAdc(Bridge.expression(col("qv")),
-          Bridge.expression(col("code")), new Mat3(codebooks))).as("adc"))
+          Bridge.expression(col("code")), new Mat3(books))).as("adc"))
     val shortlist0 = shortlistPerQuery(scored, "adc", k * math.max(1, rerank))
-    // same staged-sink contract as [[pqTopK]]: the refine consumes the
-    // read-back so the oracle-visible shortlist is exactly what refined
     val shortlist = shortlistSink match {
       case Some(path) =>
         shortlist0.write.mode("overwrite").parquet(path)
-        corpus.sparkSession.read.parquet(path)
+        codes.sparkSession.read.parquet(path)
       case None => shortlist0
     }
-    // shortlist is bounded (|queries| * k * rerank rows) — broadcast it
-    // into the persisted corpus scan so the refine never sort-merge-joins
-    val refined = c.select(col("vec_id"), col("v"))
-      .join(broadcast(shortlist), Seq("vec_id"))
-      .join(broadcast(q.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qv"), col("v")), 6).as("cos"))
-    topKPerQuery(refined, "cos", k)
+    val refined = vectors.join(broadcast(shortlist), Seq("vec_id"))
+      .join(broadcast(q), Seq("query_id"))
+    topKPerQuery(exactCos(refined), "cos", k)
   }
 
   /** Kernel: nearest codebook centroid per subvector → m code ints. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 
 /** Streaming corpus ingestion with DURABLE cross-batch dedup — exact
   * always, near-dup (minhash) optionally.
@@ -110,9 +110,12 @@ object IngestStreams {
                 // signatures/postings; the pairs write below forces
                 // them, so they are released per batch — on the plain
                 // signature every micro-batch would pin two more
-                // CacheManager relations for the stream's lifetime
+                // CacheManager relations for the stream's lifetime.
+                // The mine reads the persisted `sigs` (its precomputed-
+                // `sig` path), so the batch is signed once and its
+                // release leaves `sigs` cached for the writes below
                 val (pairs, releaseMine) =
-                  Dedup.incrementalMinhashFromPostingsHandles(admitted,
+                  Dedup.incrementalMinhashFromPostingsHandles(sigs,
                     standing, standingPosts, standingCnts, idCol, textCol,
                     mh.k, mh.bands, mh.rowsPerBand, mh.threshold, mh.maxBucket)
                 try overwriteBatch(pairs, key, mh.pairsDir)
@@ -188,22 +191,17 @@ object IngestStreams {
       key: String, nlist: Int, trainSample: Int, idCol: String,
       vecCol: String, pq: Option[PqIndexConfig]): Unit = {
     val spark = batch.sparkSession
-    val unit = unitVec(batch, vecCol, idCol, idCol, "v")
+    val unit = Similarity.unit(batch, idCol, vecCol, idCol, "v")
     if (!unit.isEmpty) {
-      val cents = loadOrTrainCentroids(spark, indexDir, unit, nlist,
+      // collected at most once, and only when a quantizer still needs it
+      lazy val sample = Similarity.trainingSample(unit, idCol, "v",
         trainSample)
+      val cents = loadOrTrainCentroids(spark, indexDir, sample, nlist)
       val base = unit.select(col(idCol),
-        element_at(
-          graft.operators.Similarity.nearestCells(col("v"), cents, 1), 1)
-          .as("cell"),
-        col("v"))
+        Similarity.nearestCell(col("v"), cents).as("cell"), col("v"))
       val withCodes = pq.fold(base) { cfg =>
-        import org.apache.spark.sql.graftbridge.Bridge
-        val books = loadOrTrainCodebooks(spark, indexDir, unit, cfg,
-          trainSample)
-        base.withColumn("code", Bridge.column(
-          graft.operators.PqEncode(Bridge.expression(col("v")),
-            new graft.operators.Mat3(books))))
+        base.withColumn("code", Similarity.pqCodes(col("v"),
+          loadOrTrainCodebooks(spark, indexDir, sample, cfg)))
       }
       overwriteBatch(withCodes, key, s"$indexDir/postings")
     }
@@ -228,80 +226,31 @@ object IngestStreams {
       k: Int, nprobe: Int = 4, rerank: Int = 4, idCol: String = "vec_id",
       vecCol: String = "embedding",
       shortlistSink: Option[String] = None): DataFrame = {
-    import graft.functions.TopK
-    import org.apache.spark.sql.graftbridge.Bridge
     val cents = loadCentroids(spark, indexDir).getOrElse(
       throw new IllegalStateException(s"no centroids at $indexDir — ingest first"))
-    val q = unitVec(queries, vecCol, idCol, "query_id", "qv")
-      .withColumn("cell",
-        explode(graft.operators.Similarity.nearestCells(col("qv"), cents, nprobe)))
+    val q = Similarity.unit(queries, idCol, vecCol, "query_id", "qv")
     val postings = spark.read.parquet(s"$indexDir/postings")
-    def topKOf(scored: DataFrame, scoreCol: String): DataFrame =
-      scored.groupBy(col("query_id"))
-        .agg(TopK.topKByOrd(
-          struct(col("vec_id"), col(scoreCol)), col(scoreCol), col("vec_id"), k)
-          .as("__top"))
-        .select(col("query_id"), posexplode(col("__top")))
-        .select(col("query_id"), col("col.vec_id").as("vec_id"),
-          col("col." + scoreCol).as(scoreCol),
-          (col("pos") + 1).cast("int").as("rank"))
-    val exactWithin = (rows: DataFrame) => rows
-      .select(col("query_id"), col("vec_id"),
-        round(graft.functions.GraftFunctions.cosine(col("qv"), col("v")), 6)
-          .as("cos"))
+      .withColumnRenamed(idCol, "vec_id")
     loadCodebooks(spark, indexDir) match {
       case Some(books) if postings.columns.contains("code") =>
         // ADC over the narrow columns only → bounded shortlist → refine
-        val adc = postings.select(col(idCol).as("vec_id"), col("cell"), col("code"))
-          .join(broadcast(q), Seq("cell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id"),
-            Bridge.column(graft.operators.PqAdc(Bridge.expression(col("qv")),
-              Bridge.expression(col("code")),
-              new graft.operators.Mat3(books))).as("adc"))
-        val shortlist0 = adc.groupBy(col("query_id"))
-          .agg(TopK.topKByOrd(col("vec_id"), col("adc"), col("vec_id"),
-            k * math.max(1, rerank)).as("__ids"))
-          .select(col("query_id"), explode(col("__ids")).as("vec_id"))
-        val shortlist = shortlistSink match {
-          case Some(path) =>
-            shortlist0.write.mode("overwrite").parquet(path)
-            spark.read.parquet(path)
-          case None => shortlist0
-        }
-        val refined = postings.select(col(idCol).as("vec_id"), col("v"))
-          .join(broadcast(shortlist), Seq("vec_id"))
-          .join(broadcast(q.select(col("query_id"), col("qv")).distinct()),
-            Seq("query_id"))
-        topKOf(exactWithin(refined), "cos")
+        Similarity.adcRefineTopK(
+          postings.select(col("vec_id"), col("cell"), col("code")),
+          postings.select(col("vec_id"), col("v")), q, cents, nprobe, books,
+          k, rerank, shortlistSink)
       case _ =>
-        val scored = exactWithin(
-          postings.join(broadcast(q), Seq("cell"))
-            .filter(col("query_id") =!= col("vec_id")))
-        topKOf(scored, "cos")
+        Similarity.topKPerQuery(Similarity.exactCos(
+          postings.join(broadcast(Similarity.probe(q, cents, nprobe)), Seq("cell"))
+            .filter(col("query_id") =!= col("vec_id"))), "cos", k)
     }
   }
 
-  /** Unit-normalize an embedding column (dot == cosine afterwards); the
-    * norm scalar is materialized BEFORE the HOF lambda (re-evaluation
-    * trap documented at EmbeddingPrep). */
-  private def unitVec(df: DataFrame, vecCol: String, idCol: String,
-      outId: String, outVec: String): DataFrame =
-    df.withColumn("__v0", transform(col(vecCol), x => x.cast("double")))
-      .withColumn("__n2",
-        aggregate(col("__v0"), lit(0.0d), (a, x) => a + x * x))
-      .select(col(idCol).as(outId),
-        transform(col("__v0"),
-          x => x / sqrt(greatest(col("__n2"), lit(1e-300)))).as(outVec))
-
   /** Load persisted centroids, or train-and-persist them from this first
-    * batch (driver-local Lloyd over a bounded deterministic sample). */
+    * batch ([[Similarity.lloyd]] over the bounded [[Similarity.trainingSample]]). */
   private def loadOrTrainCentroids(spark: SparkSession, indexDir: String,
-      unit: DataFrame, nlist: Int, trainSample: Int): Array[Array[Double]] =
+      sample: => Array[Array[Double]], nlist: Int): Array[Array[Double]] =
     loadCentroids(spark, indexDir).getOrElse {
-      val sample = unit.orderBy(col(unit.columns.head)).limit(trainSample)
-        .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-      val cents = graft.operators.Similarity.lloyd(sample, nlist, iters = 8)
+      val cents = Similarity.lloyd(sample, nlist)
       import spark.implicits._
       cents.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -325,24 +274,13 @@ object IngestStreams {
   }
 
   /** Load persisted PQ codebooks, or train-and-persist from this first
-    * batch (one driver-local Lloyd per subvector — the
-    * [[graft.operators.Similarity.pqTopK]] trainer, same train-once
-    * contract as the coarse centroids). */
+    * batch ([[Similarity.codebooks]] over the same sample, same
+    * train-once contract as the coarse centroids). */
   private def loadOrTrainCodebooks(spark: SparkSession, indexDir: String,
-      unit: DataFrame, cfg: PqIndexConfig,
-      trainSample: Int): Array[Array[Array[Double]]] =
+      sample: => Array[Array[Double]],
+      cfg: PqIndexConfig): Array[Array[Array[Double]]] =
     loadCodebooks(spark, indexDir).getOrElse {
-      val sample = unit.orderBy(col(unit.columns.head)).limit(trainSample)
-        .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-      val dims = sample(0).length
-      require(dims % cfg.m == 0, s"dims=$dims must divide by m=${cfg.m}")
-      val dsub = dims / cfg.m
-      val books = Array.tabulate(cfg.m) { sub =>
-        graft.operators.Similarity.lloyd(
-          sample.map(p => java.util.Arrays.copyOfRange(p, sub * dsub,
-            (sub + 1) * dsub)),
-          cfg.ksub, iters = 8)
-      }
+      val books = Similarity.codebooks(sample, cfg.m, cfg.ksub)
       import spark.implicits._
       books.zipWithIndex.flatMap { case (book, sub) =>
         book.zipWithIndex.map { case (c, code) => (sub, code, c.toSeq) }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Scratch evidence harness (guide §7.2, VERDICT r20 #7): writes each
   * named catalog face's `explain("formatted")` to
-  * `$SPARK_GRAFT_PLANS_DIR/<face>_$SPARK_GRAFT_PLANS_SUFFIX.txt` — the
+  * `$SPARK_GRAFT_PLANS_DIR/<face>_$SPARK_GRAFT_PLANS_SUFFIX.txt`
+  * (default dir `/tmp/graft_plans`, outside the repository) — the
   * before/after plan dumps the optimization evidence contract requires.
   * Constructing a face's DataFrame may run its fixture builds; the dump
   * itself executes nothing. Not part of the library surface. */
@@ -13,7 +14,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val out = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r21")
+    val out = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "/tmp/graft_plans")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "before")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

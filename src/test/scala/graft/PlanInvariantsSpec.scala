@@ -184,7 +184,8 @@ class PlanInvariantsSpec extends SparkSuite {
     Seq(
       "lshTopK" -> S.lshTopK(embs, qs, k = 5, dims = 64, planes = 6),
       "ivfTopK" -> S.ivfTopK(embs, qs, k = 5, nlist = 16, nprobe = 4),
-      "pqTopK" -> S.pqTopK(embs, qs, k = 5, m = 16, ksub = 32, rerank = 8),
+      "ivfPqTopK(nlist = 1)" -> S.ivfPqTopK(embs, qs, k = 5, nlist = 1, nprobe = 1,
+        m = 16, ksub = 32, rerank = 8),
       "ivfPqTopK" -> S.ivfPqTopK(embs, qs, k = 5, nlist = 8, nprobe = 4,
         m = 16, ksub = 32, rerank = 8)
     ).foreach { case (name, df) =>

@@ -235,8 +235,8 @@ class SimilaritySpec extends SparkSuite {
     val queries = embs.filter($"vec_id" < 8)
     val exact = Similarity.bruteForceTopK(embs, queries, k = 5)
       .select($"query_id", $"vec_id").as[(Long, Long)].collect().toSet
-    def run() = Similarity.pqTopK(embs, queries, k = 5,
-      m = 16, ksub = 32, rerank = 8)
+    def run() = Similarity.ivfPqTopK(embs, queries, k = 5,
+      nlist = 1, nprobe = 1, m = 16, ksub = 32, rerank = 8)
     val pq = run().select($"query_id", $"vec_id", $"cos", $"rank")
       .as[(Long, Long, Double, Int)].collect()
     assert(pq.groupBy(_._1).values.forall(_.size <= 5))
@@ -360,6 +360,37 @@ class SimilaritySpec extends SparkSuite {
       s"clusterAssign must stay map-side:\n${p.take(1500)}")
   }
 
+  test("quantizer training does not depend on input layout") {
+    // the id-ordered training sample makes centroids and codebooks, hence
+    // every cell, code, shortlist and rank, identical on any layout: one
+    // input partition with one shuffle partition vs 7 and 8.
+    // trainSample 200 < |corpus| so the sample is a strict id prefix
+    def rows(parts: Int, shuffleParts: Int) = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", shuffleParts.toString)
+      try {
+        val e = embs.repartition(parts)
+        assert(e.rdd.getNumPartitions == parts)
+        val pq = Similarity.ivfPqTopK(e, e.filter($"vec_id" < 8), k = 5,
+          nlist = 8, nprobe = 3, m = 16, ksub = 16, rerank = 4,
+          trainSample = 200)
+          .select($"query_id", $"vec_id", $"cos", $"rank")
+          .as[(Long, Long, Double, Int)].collect().sorted.toSeq
+        val cl = Similarity.clusterAssign(e, nlist = 8)
+          .select($"vec_id", $"cluster").as[(Long, Int)].collect().sorted.toSeq
+        (pq, cl)
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.catalog.clearCache()
+      }
+    }
+    val (pq1, cl1) = rows(1, 1)
+    val (pq7, cl7) = rows(7, 8)
+    assert(pq1.nonEmpty && cl1.length == embs.count())
+    assert(pq7 == pq1, "ivfPqTopK rows depend on the input layout")
+    assert(cl7 == cl1, "clusterAssign rows depend on the input layout")
+  }
+
   test("stagingDir twins: knnGraph / pqTopK identical, nothing pinned") {
     val queries = embs.filter($"vec_id" < 8)
     spark.catalog.clearCache()
@@ -368,14 +399,15 @@ class SimilaritySpec extends SparkSuite {
       df.select($"query_id", $"rank", $"vec_id").as[(Long, Int, Long)]
         .collect().toSet
     val kDefault = rowsOf(Similarity.knnGraph(embs, k = 3, nlist = 8, nprobe = 2))
-    val pDefault = rowsOf(Similarity.pqTopK(embs, queries, k = 5,
-      m = 16, ksub = 32, rerank = 8))
+    val pDefault = rowsOf(Similarity.ivfPqTopK(embs, queries, k = 5,
+      nlist = 1, nprobe = 1, m = 16, ksub = 32, rerank = 8))
     spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.size
     val kStaged = rowsOf(Similarity.knnGraph(embs, k = 3, nlist = 8,
       nprobe = 2, stagingDir = Some(dir)))
-    val pStaged = rowsOf(Similarity.pqTopK(embs, queries, k = 5,
-      m = 16, ksub = 32, rerank = 8, stagingDir = Some(dir)))
+    val pStaged = rowsOf(Similarity.ivfPqTopK(embs, queries, k = 5,
+      nlist = 1, nprobe = 1, m = 16, ksub = 32, rerank = 8,
+      stagingDir = Some(dir)))
     // <= not ==: clearCache unpersists asynchronously, so `before` may
     // still count pins that drain while the staged runs execute — the
     // staged path itself adding a pin is what must fail

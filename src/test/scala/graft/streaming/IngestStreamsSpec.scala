@@ -553,6 +553,31 @@ class IngestStreamsSpec extends SparkSuite {
     assert(recall >= 0.5, s"PQ-index ANN recall too low: $recall")
   }
 
+  test("annFromIndex over a PQ index returns ivfPqTopK's rows and shortlist") {
+    // the standing index's read path is the batch IVF-PQ algorithm run
+    // over persisted quantizers: same sample, centroids, codebooks,
+    // probe, ADC shortlist and exact refine, so the same rows
+    val dir = Files.createTempDirectory("ann_vs_batch").toString
+    val embs = graft.Tables.embeddings(spark, sf0001)
+    val qs = embs.filter($"vec_id" < 8)
+    IngestStreams.buildEmbeddingIndex(embs, s"$dir/idx",
+      pq = Some(IngestStreams.PqIndexConfig(16, 32)), nlist = 16)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"query_id", $"vec_id", $"cos", $"rank")
+        .as[(Long, Long, Double, Int)].collect().sorted.toSeq
+    def shortlist(path: String) =
+      spark.read.parquet(path).as[(Long, Long)].collect().sorted.toSeq
+    val streamed = rows(IngestStreams.annFromIndex(spark, s"$dir/idx", qs,
+      k = 5, nprobe = 4, rerank = 8, shortlistSink = Some(s"$dir/sl_index")))
+    val batch = rows(graft.operators.Similarity.ivfPqTopK(embs, qs, k = 5,
+      nlist = 16, nprobe = 4, m = 16, ksub = 32, rerank = 8,
+      trainSample = 10000, shortlistSink = Some(s"$dir/sl_batch")))
+    spark.catalog.clearCache()
+    assert(streamed.nonEmpty)
+    assert(streamed == batch)
+    assert(shortlist(s"$dir/sl_index") == shortlist(s"$dir/sl_batch"))
+  }
+
   test("q_ann_index catalog face: batch-built index, rank contract, recall floor") {
     // the catalog entry builds the standing index with buildEmbeddingIndex
     // (same kernels as a streaming micro-batch) and answers via
