@@ -34,6 +34,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // one line per face, so a WARN or stack trace below it in the log
+      // can be tied to the face that emitted it
+      System.err.println(s"[verify] $name")
       try Bench.runPinned(spark, name) {
         val df = fn(spark, sfDir)
         // comparator-safety gate: the driver's pandas compare sorts every

@@ -1170,7 +1170,7 @@ object Dedup {
     *   guard, candidate pairing, and the exact-cosine verify are all
     *   re-derivable by the DuckDB oracle, value-gating the whole face. */
   def semanticPairs(embs: DataFrame, threshold: Double = 0.95,
-      nlist: Int = 16, nprobe: Int = 2, seed: Long = 7L,
+      nlist: Int = 16, nprobe: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding",
       trainSample: Int = 10000, maxBlock: Option[Int] = Some(10000),
       centroidsSink: Option[String] = None): DataFrame = {

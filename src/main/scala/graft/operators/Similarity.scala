@@ -216,8 +216,9 @@ object Similarity {
     * full corpus is never needed), the corpus is bucketed in one narrow pass
     * (cell id = argmin centroid distance, a plan-literal dot product), and
     * the query→cell fan-out is a broadcast join on cell id — per-query work
-    * drops from |corpus| to nprobe·|corpus|/nlist. Deterministic: fixed
-    * k-means seed, fixed sample.
+    * drops from |corpus| to nprobe·|corpus|/nlist. Deterministic: Lloyd
+    * starts from a fixed spread over the id-ordered training sample (no
+    * RNG), so the same corpus trains the same quantizer on any cluster.
     */
   /** @param centroidsSink when set, the trained coarse quantizer is
     *   eagerly written to this parquet path as (cell, c double[]) — the
@@ -226,7 +227,7 @@ object Similarity {
     *   same geometry, value-gating the whole IVF read path. A production
     *   index persists its quantizer anyway (train-once contract). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, seed: Long = 7L,
+      nlist: Int = 16, nprobe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
       trainSample: Int = 10000,
       centroidsSink: Option[String] = None): DataFrame = {
@@ -260,7 +261,7 @@ object Similarity {
     * is the [[recallAudit]] of the same config; `centroidsSink` stages
     * the quantizer for external (oracle) re-derivation. */
   def knnGraph(corpus: DataFrame, k: Int, nlist: Int = 16, nprobe: Int = 2,
-      seed: Long = 7L, idCol: String = "vec_id", vecCol: String = "embedding",
+      idCol: String = "vec_id", vecCol: String = "embedding",
       trainSample: Int = 10000,
       centroidsSink: Option[String] = None,
       stagingDir: Option[String] = None): DataFrame =
@@ -468,8 +469,9 @@ object Similarity {
 
   /** Driver-local deterministic Lloyd k-means over a BOUNDED sample, the
     * one trainer of the coarse quantizers and the PQ codebooks: small
-    * problems aren't worth a distributed solver. Seeded spread init and a
-    * fixed 8 iterations keep it reproducible on any cluster. */
+    * problems aren't worth a distributed solver. A fixed spread init
+    * (every (n/k)-th sample point, no RNG) and a fixed 8 iterations keep
+    * it reproducible on any cluster. */
   private[graft] def lloyd(points: Array[Array[Double]],
       k: Int): Array[Array[Double]] = {
     val n = points.length

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,22 +18,15 @@ import graft.operators.{Dedup, Similarity}
   * stream, in durable staging tables — the same `(key_hash)` index that
   * [[Dedup.incrementalExact]] consumes in batch, and (optionally) the
   * same `(id, sh, sig)` [[Dedup.signatureIndex]] that
-  * [[Dedup.incrementalMinhash]] consumes. `foreachBatch` is the
+  * [[Dedup.incrementalMinhash]] consumes. A micro-batch sink is the
   * Spark-native seam for this pattern: each micro-batch is deduped against
   * the index AND itself, survivors are appended to the output, their
   * hashes (and signatures) extend the indexes, and near-dup pairs of the
   * batch against everything admitted before it are emitted — so batch N+1
   * sees everything batch N admitted.
   *
-  * Exactly-once on plain parquet: every write is partitioned by
-  * `batch_key` in dynamic-partition-OVERWRITE mode, so a crash-and-replay
-  * of batch N rewrites exactly batch N's partitions with identical
-  * deterministic content instead of appending duplicates. The key is
-  * derived from (checkpointDir, batchId): stable under replay of the same
-  * checkpoint (idempotence), distinct across ingestion runs (a NEW
-  * checkpoint restarts batch ids at 0 — a bare batch-id partition would
-  * clobber an earlier run's partition 0; callers must reuse the same
-  * checkpointDir string to resume a run). One wrinkle: on replay the hash
+  * Every ingest here writes through one exactly-once sink on plain
+  * parquet, [[batchKeyed]]. One wrinkle for dedup: on replay the hash
   * index may ALREADY hold batch N's hashes (crash after the index write),
   * which would make the batch dedup against itself and admit nothing — so
   * index loads exclude the in-flight batch's partition (partition-pruned
@@ -67,72 +61,75 @@ object IngestStreams {
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text",
       minhash: Option[MinhashConfig] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val spark = batch.sparkSession
-        val key = batchKey(checkpointDir, bid)
-        val survivors = Dedup.incrementalExact(
-          batch, loadIndex(spark, indexDir, excludeBatch = key),
-          keyCol = textCol, idCol = idCol)
+    batchKeyed(docs, checkpointDir) { (batch, key, _) =>
+      val spark = batch.sparkSession
+      val survivors = Dedup.incrementalExact(
+        batch, loadIndex(spark, indexDir, excludeBatch = key),
+        keyCol = textCol, idCol = idCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // survivors carry (idCol, key_hash, n_dups); join the batch back
+        // for the full payload — batch-local, never touches the output
+        val admitted = batch
+          .join(survivors.select(col(idCol)), Seq(idCol), "left_semi")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // survivors carry (idCol, key_hash, n_dups); join the batch back
-          // for the full payload — batch-local, never touches the output
-          val admitted = batch
-            .join(survivors.select(col(idCol)), Seq(idCol), "left_semi")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            overwriteBatch(admitted, key, outDir)
-            overwriteBatch(survivors.select(col("key_hash")), key,
-              s"$indexDir/hashes")
-            minhash.foreach { mh =>
-              // signatures of the admitted docs only: the near-dup index
-              // mirrors the corpus the exact pass actually admitted
-              val sigs = Dedup.signatureIndex(admitted, idCol, textCol,
-                mh.k, mh.bands, mh.rowsPerBand)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              try {
-                val standing =
-                  loadSignatures(spark, indexDir, idCol, excludeBatch = key)
-                // the fold takes the POSTING path (r15): the standing
-                // corpus's LSH postings and per-bucket counts are standing
-                // artifacts maintained beside the signatures, so each
-                // batch broadcasts its own postings map-side instead of
-                // re-banding + shuffling the whole standing index (the
-                // bandPostings scaladoc — bit-identical output by the
-                // incrementalMinhashFromPostings contract)
-                val standingPosts = loadPostings(spark, indexDir, idCol,
-                  excludeBatch = key)
-                val standingCnts = loadBucketCounts(spark, indexDir,
-                  excludeBatch = key)
-                // handles variant: the mine stages the batch's delta
-                // signatures/postings; the pairs write below forces
-                // them, so they are released per batch — on the plain
-                // signature every micro-batch would pin two more
-                // CacheManager relations for the stream's lifetime.
-                // The mine reads the persisted `sigs` (its precomputed-
-                // `sig` path), so the batch is signed once and its
-                // release leaves `sigs` cached for the writes below
-                val (pairs, releaseMine) =
-                  Dedup.incrementalMinhashFromPostingsHandles(sigs,
-                    standing, standingPosts, standingCnts, idCol, textCol,
-                    mh.k, mh.bands, mh.rowsPerBand, mh.threshold, mh.maxBucket)
-                try overwriteBatch(pairs, key, mh.pairsDir)
-                finally releaseMine()
-                overwriteBatch(sigs, key, s"$indexDir/signatures")
-                val posts = Dedup.bandPostings(sigs, idCol,
-                  mh.bands, mh.rowsPerBand)
-                overwriteBatch(posts, key, s"$indexDir/postings")
-                overwriteBatch(Dedup.bandBucketCounts(posts), key,
-                  s"$indexDir/bucket_counts")
-              } finally sigs.unpersist()
-            }
-          } finally admitted.unpersist()
-        } finally survivors.unpersist()
-        ()
-      }
-      .start()
+          overwriteBatch(admitted, key, outDir)
+          overwriteBatch(survivors.select(col("key_hash")), key,
+            s"$indexDir/hashes")
+          minhash.foreach { mh =>
+            // signatures of the admitted docs only: the near-dup index
+            // mirrors the corpus the exact pass actually admitted
+            val sigs = Dedup.signatureIndex(admitted, idCol, textCol,
+              mh.k, mh.bands, mh.rowsPerBand)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try {
+              val standing =
+                loadSignatures(spark, indexDir, idCol, excludeBatch = key)
+              // the fold takes the POSTING path (r15): the standing
+              // corpus's LSH postings and per-bucket counts are standing
+              // artifacts maintained beside the signatures, so each
+              // batch broadcasts its own postings map-side instead of
+              // re-banding + shuffling the whole standing index (the
+              // bandPostings scaladoc — bit-identical output by the
+              // incrementalMinhashFromPostings contract)
+              val standingPosts = loadPostings(spark, indexDir, idCol,
+                excludeBatch = key)
+              val standingCnts = loadBucketCounts(spark, indexDir,
+                excludeBatch = key)
+              // handles variant: the mine stages the batch's delta
+              // signatures/postings; the pairs write below forces
+              // them, so they are released per batch — on the plain
+              // signature every micro-batch would pin two more
+              // CacheManager relations for the stream's lifetime.
+              // The mine reads the persisted `sigs` (its precomputed-
+              // `sig` path), so the batch is signed once and its
+              // release leaves `sigs` cached for the writes below
+              val (pairs, releaseMine) =
+                Dedup.incrementalMinhashFromPostingsHandles(sigs,
+                  standing, standingPosts, standingCnts, idCol, textCol,
+                  mh.k, mh.bands, mh.rowsPerBand, mh.threshold, mh.maxBucket)
+              try overwriteBatch(pairs, key, mh.pairsDir)
+              finally releaseMine()
+              overwriteBatch(sigs, key, s"$indexDir/signatures")
+              val posts = Dedup.bandPostings(sigs, idCol,
+                mh.bands, mh.rowsPerBand)
+              overwriteBatch(posts, key, s"$indexDir/postings")
+              overwriteBatch(Dedup.bandBucketCounts(posts), key,
+                s"$indexDir/bucket_counts")
+            } finally sigs.unpersist()
+          }
+        } finally admitted.unpersist()
+      } finally survivors.unpersist()
+    }
+
+  /** PQ compression knobs for [[embedIngest]]: vectors additionally get
+    * `m` codebook codes (trained once, persisted with the index), so the
+    * [[annFromIndex]] ADC pass scans `m` small ints per row instead of
+    * `dims` doubles — parquet column pruning makes the compression real
+    * at query time even though exact vectors sit in the same files for
+    * the refine step. */
+  final case class PqIndexConfig(m: Int = 8, ksub: Int = 16)
 
   /** Streaming embedding ingestion with a DURABLE IVF index — the
     * similarity-family analogue of [[dedupIngest]]'s dedup indexes: each
@@ -148,30 +145,16 @@ object IngestStreams {
     * index (the FAISS "train once, add forever" contract; retrain by
     * starting a new index). Unit-normalized vectors are stored alongside
     * the postings so the query face can exact-rescore its probed cells
-    * without a separate vector store. Writes use the same batch-key
-    * dynamic-partition overwrite as [[dedupIngest]] (exactly-once on
-    * plain parquet; replay-safe).
+    * without a separate vector store. Writes go through [[batchKeyed]].
     */
-  /** PQ compression knobs for [[embedIngest]]: vectors additionally get
-    * `m` codebook codes (trained once, persisted with the index), so the
-    * [[annFromIndex]] ADC pass scans `m` small ints per row instead of
-    * `dims` doubles — parquet column pruning makes the compression real
-    * at query time even though exact vectors sit in the same files for
-    * the refine step. */
-  final case class PqIndexConfig(m: Int = 8, ksub: Int = 16)
-
   def embedIngest(embs: DataFrame, indexDir: String, checkpointDir: String,
       nlist: Int = 16, trainSample: Int = 10000,
       idCol: String = "vec_id", vecCol: String = "embedding",
       pq: Option[PqIndexConfig] = None): StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ingestEmbeddingBatch(batch, indexDir, batchKey(checkpointDir, bid),
-          nlist, trainSample, idCol, vecCol, pq)
-        ()
-      }
-      .start()
+    batchKeyed(embs, checkpointDir) { (batch, key, _) =>
+      ingestEmbeddingBatch(batch, indexDir, key, nlist, trainSample, idCol,
+        vecCol, pq)
+    }
 
   /** Build (or extend) an [[embedIngest]]-shaped index from a BATCH of
     * vectors: identical kernels, train-once quantizer contract, and
@@ -264,11 +247,9 @@ object IngestStreams {
 
   private def loadCentroids(spark: SparkSession,
       indexDir: String): Option[Array[Array[Double]]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/centroids")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(
-      spark.read.parquet(p.toString)
+    val p = s"$indexDir/centroids"
+    Option.when(exists(spark, p))(
+      spark.read.parquet(p)
         .orderBy(col("cell"))
         .collect().map(_.getSeq[Double](1).toArray))
   }
@@ -291,16 +272,13 @@ object IngestStreams {
 
   private def loadCodebooks(spark: SparkSession,
       indexDir: String): Option[Array[Array[Array[Double]]]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/codebooks")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val rows = spark.read.parquet(p.toString)
+    val p = s"$indexDir/codebooks"
+    Option.when(exists(spark, p)) {
+      val bySub = spark.read.parquet(p)
         .orderBy(col("sub"), col("code"))
-        .collect()
-      val bySub = rows.groupBy(_.getInt(0))
-      Some((0 until bySub.size).toArray.map(sub =>
-        bySub(sub).sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)))
+        .collect().groupBy(_.getInt(0))
+      (0 until bySub.size).toArray.map(sub =>
+        bySub(sub).sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
     }
   }
 
@@ -326,28 +304,16 @@ object IngestStreams {
     * option) before pointing a new embedIngest at a compacted index. */
   def compactIndex(spark: SparkSession, indexDir: String, outDir: String,
       targetBytes: Long = 128L << 20): Unit = {
+    requireFresh(spark, indexDir, outDir, "compactIndex")
     val conf = spark.sparkContext.hadoopConfiguration
-    // qualify BOTH paths (scheme + working dir): `file:/x` and `/x`, or a
-    // relative spelling, must not slip past the overwrite-own-input guard —
-    // the static-mode overwrite would delete the source before reading it
-    def qualified(s: String) = {
-      val p = new org.apache.hadoop.fs.Path(s)
-      p.getFileSystem(conf).makeQualified(p)
-    }
-    require(qualified(outDir) != qualified(indexDir),
-      "compactIndex writes a fresh directory")
-    def exists(sub: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/$sub")
-      p.getFileSystem(conf).exists(p)
-    }
+    def present(sub: String) = exists(spark, s"$indexDir/$sub")
     Seq("hashes", "signatures", "postings", "bucket_counts")
-      .filter(exists).foreach { sub =>
+      .filter(present).foreach { sub =>
       val df = spark.read.parquet(s"$indexDir/$sub").drop("batch_key")
       val bytes = df.inputFiles.map { f =>
         val p =
-          try new org.apache.hadoop.fs.Path(new java.net.URI(f))
-          catch { case _: java.net.URISyntaxException =>
-            new org.apache.hadoop.fs.Path(f) }
+          try new Path(new java.net.URI(f))
+          catch { case _: java.net.URISyntaxException => new Path(f) }
         p.getFileSystem(conf).getFileStatus(p).getLen
       }.sum
       val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -356,7 +322,7 @@ object IngestStreams {
         .write.mode("overwrite").partitionBy("batch_key")
         .parquet(s"$outDir/$sub")
     }
-    Seq("centroids", "codebooks").filter(exists).foreach { sub =>
+    Seq("centroids", "codebooks").filter(present).foreach { sub =>
       spark.read.parquet(s"$indexDir/$sub")
         .write.mode("overwrite").parquet(s"$outDir/$sub")
     }
@@ -369,10 +335,8 @@ object IngestStreams {
     * disjoint-id ingest contract (each doc ingested exactly once, the
     * [[dedupIngest]] convention), so the index is APPEND-ONLY and the
     * standing statistic is the read-time term-keyed sum ([[readDfIndex]]).
-    * No read-modify-write of standing state ever happens — which is what
-    * makes exactly-once the same batch-key dynamic-partition overwrite as
-    * [[dedupIngest]]: a crash-and-replay of batch N rewrites exactly batch
-    * N's partition with identical deterministic content.
+    * No read-modify-write of standing state ever happens, so the
+    * [[batchKeyed]] sink alone makes it exactly-once.
     *
     * Scale: per batch, one explode of the BATCH's text + one term-keyed
     * aggregation; corpus text is never re-read and the index carries
@@ -381,15 +345,10 @@ object IngestStreams {
     * term hash so scorer lookups and later compactions prune. */
   def dfIngest(docs: DataFrame, indexDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        overwriteBatch(
-          graft.operators.TextAnalysis.dfIndex(batch, idCol, textCol),
-          batchKey(checkpointDir, bid), indexDir)
-        ()
-      }
-      .start()
+    batchKeyed(docs, checkpointDir) { (batch, key, _) =>
+      overwriteBatch(graft.operators.TextAnalysis.dfIndex(batch, idCol,
+        textCol), key, indexDir)
+    }
 
   /** Streaming maintenance of the standing per-domain corpus ledger —
     * [[graft.operators.Urls.domainStats]] kept fresh by the ingest
@@ -397,23 +356,17 @@ object IngestStreams {
     * Identical contract shape to [[dfIngest]]: the ledger is additive
     * under the disjoint-id ingest convention, each micro-batch's
     * (domain, n_docs, n_tokens) aggregate lands as its OWN batch-keyed
-    * partition (exactly-once by deterministic dynamic-partition
-    * overwrite), and the standing statistic is the read-time domain-
+    * partition, and the standing statistic is the read-time domain-
     * keyed sum ([[readDomainStats]]). Per batch: one canonicalize +
     * partial-agg groupBy over the BATCH only — the standing ledger is
     * never read, the corpus never re-scanned. */
   def domainIngest(docs: DataFrame, urlCol: org.apache.spark.sql.Column,
       indexDir: String, checkpointDir: String,
       textCol: org.apache.spark.sql.Column = col("text")): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        overwriteBatch(
-          graft.operators.Urls.domainStats(batch, urlCol, textCol),
-          batchKey(checkpointDir, bid), indexDir)
-        ()
-      }
-      .start()
+    batchKeyed(docs, checkpointDir) { (batch, key, _) =>
+      overwriteBatch(graft.operators.Urls.domainStats(batch, urlCol, textCol),
+        key, indexDir)
+    }
 
   /** Streaming maintenance of the standing host-level LINK GRAPH —
     * [[graft.operators.Links.hostGraph]] kept fresh as pages arrive
@@ -428,34 +381,23 @@ object IngestStreams {
   def linkIngest(pages: DataFrame, urlCol: org.apache.spark.sql.Column,
       htmlCol: org.apache.spark.sql.Column,
       indexDir: String, checkpointDir: String): StreamingQuery =
-    pages.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        overwriteBatch(
-          graft.operators.Links.hostGraph(batch, urlCol, htmlCol),
-          batchKey(checkpointDir, bid), indexDir)
-        ()
-      }
-      .start()
+    batchKeyed(pages, checkpointDir) { (batch, key, _) =>
+      overwriteBatch(graft.operators.Links.hostGraph(batch, urlCol, htmlCol),
+        key, indexDir)
+    }
 
   /** The standing link graph of a [[linkIngest]] index: edge-keyed sums
     * across batch partitions — equals the one-shot `Links.hostGraph`
     * over the concatenated batches (gated end-to-end through the
     * 3-batch replay as `q_link_ingest_replay`, on the q_host_graph
     * oracle verbatim). An absent/empty directory is the empty graph. */
-  def readLinkGraph(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val empty = !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (empty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("src_host", StringType),
-          StructField("dst_host", StringType),
-          StructField("n_links", LongType))))
-    else
-      spark.read.parquet(indexDir)
-        .groupBy(col("src_host"), col("dst_host"))
-        .agg(sum(col("n_links")).as("n_links"))
-  }
+  def readLinkGraph(spark: SparkSession, indexDir: String): DataFrame =
+    loadOrEmpty(spark, indexDir, "",
+      StructType(Seq(StructField("src_host", StringType),
+        StructField("dst_host", StringType),
+        StructField("n_links", LongType))))
+      .groupBy(col("src_host"), col("dst_host"))
+      .agg(sum(col("n_links")).as("n_links"))
 
   /** Streaming maintenance of the standing CANONICAL-CLUSTER ledger —
     * [[graft.operators.PageMeta.canonicalClusters]] kept fresh as pages
@@ -471,15 +413,10 @@ object IngestStreams {
   def metaIngest(pages: DataFrame, urlCol: org.apache.spark.sql.Column,
       htmlCol: org.apache.spark.sql.Column,
       indexDir: String, checkpointDir: String): StreamingQuery =
-    pages.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        overwriteBatch(
-          graft.operators.PageMeta.canonicalClusters(batch, urlCol, htmlCol),
-          batchKey(checkpointDir, bid), indexDir)
-        ()
-      }
-      .start()
+    batchKeyed(pages, checkpointDir) { (batch, key, _) =>
+      overwriteBatch(graft.operators.PageMeta.canonicalClusters(batch, urlCol,
+        htmlCol), key, indexDir)
+    }
 
   /** The standing canonical-cluster ledger of a [[metaIngest]] index:
     * per-canonical (sum, min) across batch partitions — equals the
@@ -487,27 +424,20 @@ object IngestStreams {
     * batches (gated end-to-end as `q_meta_ingest_replay`, on the
     * q_canonical_cluster oracle verbatim). Absent/empty directory →
     * empty ledger. */
-  def readCanonicalClusters(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val empty = !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (empty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("canonical", StringType),
-          StructField("n_pages", LongType),
-          StructField("min_url", StringType))))
-    else
-      spark.read.parquet(indexDir)
-        .groupBy(col("canonical"))
-        .agg(sum(col("n_pages")).as("n_pages"),
-          min(col("min_url")).as("min_url"))
-  }
+  def readCanonicalClusters(spark: SparkSession, indexDir: String): DataFrame =
+    loadOrEmpty(spark, indexDir, "",
+      StructType(Seq(StructField("canonical", StringType),
+        StructField("n_pages", LongType),
+        StructField("min_url", StringType))))
+      .groupBy(col("canonical"))
+      .agg(sum(col("n_pages")).as("n_pages"),
+        min(col("min_url")).as("min_url"))
 
   /** Streaming maintenance of the standing MIRROR-CONTENT ledger — the
     * narrow `(host, content-hash)` pair relation
     * [[graft.operators.Dedup.mirrorHosts]] mines, kept fresh as pages
     * arrive: per micro-batch one hash projection + batch-local DISTINCT
-    * landed as its own batch-keyed partition (exactly-once by
-    * deterministic dynamic-partition overwrite). Distinct-of-union is
+    * landed as its own batch-keyed partition. Distinct-of-union is
     * associative across ANY batch split, so the read-time fold
     * ([[readMirrorHosts]] — cross-batch distinct, then the df-cap +
     * self-join + ppm pair mining) equals the one-shot batch operator
@@ -515,16 +445,10 @@ object IngestStreams {
   def mirrorIngest(docs: DataFrame, hostCol: org.apache.spark.sql.Column,
       textCol: org.apache.spark.sql.Column,
       indexDir: String, checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        overwriteBatch(
-          batch.select(hostCol.as("host"), xxhash64(textCol).as("__h"))
-            .distinct(),
-          batchKey(checkpointDir, bid), indexDir)
-        ()
-      }
-      .start()
+    batchKeyed(docs, checkpointDir) { (batch, key, _) =>
+      overwriteBatch(batch.select(hostCol.as("host"),
+        xxhash64(textCol).as("__h")).distinct(), key, indexDir)
+    }
 
   /** The standing mirror report of a [[mirrorIngest]] index: cross-batch
     * distinct of the accumulated pair partitions, then
@@ -534,22 +458,13 @@ object IngestStreams {
     * report. */
   def readMirrorHosts(spark: SparkSession, indexDir: String,
       minShared: Int = 2, minOverlapPpm: Long = 500000L,
-      dfCap: Int = 64): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val empty = !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (empty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("host_a", StringType),
-          StructField("host_b", StringType),
-          StructField("n_shared", LongType),
-          StructField("n_a", LongType), StructField("n_b", LongType),
-          StructField("overlap_ppm", LongType))))
-    else
-      graft.operators.Dedup.mirrorHostsFromPairs(
-        spark.read.parquet(indexDir).select(col("host"), col("__h"))
-          .distinct(),
-        minShared, minOverlapPpm, dfCap)
-  }
+      dfCap: Int = 64): DataFrame =
+    graft.operators.Dedup.mirrorHostsFromPairs(
+      loadOrEmpty(spark, indexDir, "",
+        StructType(Seq(StructField("host", StringType),
+          StructField("__h", LongType))))
+        .select(col("host"), col("__h")).distinct(),
+      minShared, minOverlapPpm, dfCap)
 
   /** Streaming maintenance of the standing per-pattern hit ledger —
     * [[graft.operators.Keywords.matchCounts]] kept fresh by the ingest
@@ -563,17 +478,13 @@ object IngestStreams {
   def keywordIngest(docs: DataFrame, patterns: Seq[String],
       indexDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        overwriteBatch(
-          graft.operators.Keywords.matchCounts(batch, patterns, textCol, idCol)
-            .groupBy(col("pattern"))
-            .agg(sum(col("n")).as("n_hits"), count(lit(1)).as("n_docs")),
-          batchKey(checkpointDir, bid), indexDir)
-        ()
-      }
-      .start()
+    batchKeyed(docs, checkpointDir) { (batch, key, _) =>
+      overwriteBatch(
+        graft.operators.Keywords.matchCounts(batch, patterns, textCol, idCol)
+          .groupBy(col("pattern"))
+          .agg(sum(col("n")).as("n_hits"), count(lit(1)).as("n_docs")),
+        key, indexDir)
+    }
 
   /** The standing ledger of a [[keywordIngest]] index: pattern-keyed
     * sums across batch partitions — equals the one-shot
@@ -582,53 +493,35 @@ object IngestStreams {
     * rows to sum; the batch face q_keyword_hits carries the explicit
     * zeros). Gated end-to-end through the 3-batch replay as
     * `q_keyword_ingest_replay`. */
-  def readKeywordStats(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val empty = !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (empty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("pattern", StringType),
-          StructField("n_hits", LongType), StructField("n_docs", LongType))))
-    else
-      spark.read.parquet(indexDir)
-        .groupBy(col("pattern"))
-        .agg(sum(col("n_hits")).as("n_hits"),
-          sum(col("n_docs")).as("n_docs"))
-  }
+  def readKeywordStats(spark: SparkSession, indexDir: String): DataFrame =
+    loadOrEmpty(spark, indexDir, "",
+      StructType(Seq(StructField("pattern", StringType),
+        StructField("n_hits", LongType), StructField("n_docs", LongType))))
+      .groupBy(col("pattern"))
+      .agg(sum(col("n_hits")).as("n_hits"),
+        sum(col("n_docs")).as("n_docs"))
 
   /** The standing ledger of a [[domainIngest]] index: domain-keyed sums
     * across batch partitions — equals `Urls.domainStats` over the
     * concatenated batches (gated end-to-end through the 3-batch replay
     * as `q_url_ingest_replay`). Absent/empty directory = empty corpus. */
-  def readDomainStats(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val empty = !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (empty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("domain", StringType),
-          StructField("n_docs", LongType), StructField("n_tokens", LongType))))
-    else
-      spark.read.parquet(indexDir)
-        .groupBy(col("domain"))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("n_tokens")).as("n_tokens"))
-  }
+  def readDomainStats(spark: SparkSession, indexDir: String): DataFrame =
+    loadOrEmpty(spark, indexDir, "",
+      StructType(Seq(StructField("domain", StringType),
+        StructField("n_docs", LongType), StructField("n_tokens", LongType))))
+      .groupBy(col("domain"))
+      .agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("n_tokens")).as("n_tokens"))
 
   /** The standing df statistic of a [[dfIngest]] index: term-keyed sum
     * across batch partitions. Equals `TextAnalysis.dfIndex` over the
     * concatenated batches — gated end-to-end through a 3-batch replay as
     * `q_df_ingest_replay` (✓ hash vs DuckDB full-corpus df). An
     * absent/empty directory is the empty corpus. */
-  def readDfIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val empty = !p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (empty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("term", StringType), StructField("df", LongType))))
-    else
-      spark.read.parquet(indexDir)
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
-  }
+  def readDfIndex(spark: SparkSession, indexDir: String): DataFrame =
+    loadOrEmpty(spark, indexDir, "",
+      StructType(Seq(StructField("term", StringType), StructField("df", LongType))))
+      .groupBy(col("term")).agg(sum(col("df")).as("df"))
 
   /** Sum-preserving compaction of a [[dfIngest]] index: pre-aggregates
     * every batch partition into one `compacted` partition in a FRESH
@@ -639,13 +532,7 @@ object IngestStreams {
     * directory with a new checkpoint and pinned [[resumeOffsets]]. */
   def compactDfIndex(spark: SparkSession, indexDir: String,
       outDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def qualified(s: String) = {
-      val p = new org.apache.hadoop.fs.Path(s)
-      p.getFileSystem(conf).makeQualified(p)
-    }
-    require(qualified(outDir) != qualified(indexDir),
-      "compactDfIndex writes a fresh directory")
+    requireFresh(spark, indexDir, outDir, "compactDfIndex")
     readDfIndex(spark, indexDir)
       .withColumn("batch_key", lit("compacted"))
       .write.mode("overwrite").partitionBy("batch_key").parquet(outDir)
@@ -656,7 +543,7 @@ object IngestStreams {
     * keyed state kept fresh from ONE tagged changelog stream, and each
     * micro-batch emits the join snapshot. Spark's stream-stream joins
     * require event-time bounds a KTable changelog doesn't have, so the
-    * Spark-native seam is the same foreachBatch standing-state pattern
+    * Spark-native seam is the same micro-batch standing-state pattern
     * as [[dedupIngest]]/[[dfIngest]] — append-only batch-keyed parquet
     * state + read-time reduction, never a read-modify-write:
     *
@@ -672,10 +559,9 @@ object IngestStreams {
     * Per batch, the CURRENT standing dim left-joins the standing counts
     * and the snapshot lands batch-keyed in `outDir` with a `batch_id`
     * column — the changelog of join results; the latest batch's rows are
-    * the current table. Exactly-once everywhere via the
-    * [[batchKey]]+dynamic-partition-overwrite contract: a crash-and-
-    * replay of batch N deterministically rewrites batch N's state AND
-    * snapshot partitions. Gated end-to-end as `q_j2_stream_replay`
+    * the current table. Exactly-once everywhere via [[batchKeyed]]: a
+    * crash-and-replay of batch N deterministically rewrites batch N's
+    * state AND snapshot partitions. Gated end-to-end as `q_j2_stream_replay`
     * (3-batch scrambled feed with stale dim versions planted across
     * batch boundaries) against q_j2_left's batch oracle.
     *
@@ -688,32 +574,27 @@ object IngestStreams {
     * changelog. */
   def tableJoinIngest(tagged: DataFrame, dimDir: String, factDir: String,
       outDir: String, checkpointDir: String): StreamingQuery =
-    tagged.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val key = batchKey(checkpointDir, bid)
-        overwriteBatch(batch.filter(col("side") === "dim")
-          .select(col("key"), col("ord"), col("name")), key, dimDir)
-        overwriteBatch(batch.filter(col("side") === "fact")
-          .groupBy(col("key")).agg(count(lit(1)).as("delta")), key, factDir)
-        val spark = batch.sparkSession
-        val dim = spark.read.parquet(dimDir)
-          .groupBy(col("key"))
-          .agg(max_by(col("name"), col("ord")).as("name"))
-        val counts = spark.read.parquet(factDir)
-          .groupBy(col("key")).agg(sum(col("delta")).as("n_events"))
-        overwriteBatch(dim.join(counts, Seq("key"), "left")
-          .withColumn("batch_id", lit(bid)), key, outDir)
-        ()
-      }
-      .start()
+    batchKeyed(tagged, checkpointDir) { (batch, key, bid) =>
+      overwriteBatch(batch.filter(col("side") === "dim")
+        .select(col("key"), col("ord"), col("name")), key, dimDir)
+      overwriteBatch(batch.filter(col("side") === "fact")
+        .groupBy(col("key")).agg(count(lit(1)).as("delta")), key, factDir)
+      val spark = batch.sparkSession
+      val dim = spark.read.parquet(dimDir)
+        .groupBy(col("key"))
+        .agg(max_by(col("name"), col("ord")).as("name"))
+      val counts = spark.read.parquet(factDir)
+        .groupBy(col("key")).agg(sum(col("delta")).as("n_events"))
+      overwriteBatch(dim.join(counts, Seq("key"), "left")
+        .withColumn("batch_id", lit(bid)), key, outDir)
+    }
 
   /** SCD2 changelog consumer — the type-2 twin of [[tableJoinIngest]]'s
     * type-1 upsert surface: every micro-batch appends its `(key, ord,
     * payload…)` version rows into the standing version state (the
-    * [[batchKey]]+dynamic-partition-overwrite contract: a crash-and-
-    * replay of batch N deterministically rewrites batch N's state AND
-    * snapshot partitions), then re-derives the full validity-interval
+    * [[batchKeyed]] contract: a crash-and-replay of batch N
+    * deterministically rewrites batch N's state AND snapshot
+    * partitions), then re-derives the full validity-interval
     * table with [[graft.operators.WeatherOps.scd2History]] over the
     * standing state and snapshots it under the batch id — so a version
     * arriving LATE (after its successor, even batches later) correctly
@@ -731,19 +612,14 @@ object IngestStreams {
     * against q_scd2's batch-window oracle. */
   def scd2Ingest(changes: DataFrame, stateDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val key = batchKey(checkpointDir, bid)
-        overwriteBatch(batch, key, stateDir)
-        val spark = batch.sparkSession
-        val state = spark.read.parquet(stateDir).drop("batch_key")
-        val scd = graft.operators.WeatherOps.scd2History(
-          state, Seq("key"), "ord")
-        overwriteBatch(scd.withColumn("batch_id", lit(bid)), key, outDir)
-        ()
-      }
-      .start()
+    batchKeyed(changes, checkpointDir) { (batch, key, bid) =>
+      overwriteBatch(batch, key, stateDir)
+      val spark = batch.sparkSession
+      val state = spark.read.parquet(stateDir).drop("batch_key")
+      val scd = graft.operators.WeatherOps.scd2History(
+        state, Seq("key"), "ord")
+      overwriteBatch(scd.withColumn("batch_id", lit(bid)), key, outDir)
+    }
 
   /** Streamed as-of enrichment — production merge_asof-at-ingest: each
     * micro-batch runs the BATCH as-of join
@@ -751,10 +627,10 @@ object IngestStreams {
     * batch's left rows against the STANDING right table (`right` is
     * re-evaluated per batch — a parquet read of the durable dimension,
     * the [[dedupIngest]] standing-index pattern) and lands the enriched
-    * rows under the batch id (the [[batchKey]]+dynamic-partition-
-    * overwrite contract: crash-and-replay of batch N rewrites batch N's
-    * partition). Correct under ANY batching or arrival order because a
-    * static-right as-of join is per-left-row: the union over batches
+    * rows under the batch key (the [[batchKeyed]] contract: crash-and-
+    * replay of batch N rewrites batch N's partition). Correct under ANY
+    * batching or arrival order because a static-right as-of join is
+    * per-left-row: the union over batches
     * equals the one-shot batch join — which is exactly what
     * `q_asof_stream_replay` gates against q_asof_join's oracle.
     *
@@ -765,18 +641,13 @@ object IngestStreams {
       leftKey: String, rightKey: String, leftTime: String,
       rightTime: String, rightPayload: Seq[String], rightOrd: String,
       outDir: String, checkpointDir: String): StreamingQuery =
-    left.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val key = batchKey(checkpointDir, bid)
-        val joined = graft.operators.AsOf.join(batch, right(),
-          leftKey = col(leftKey), rightKey = col(rightKey),
-          leftTime = col(leftTime), rightTime = col(rightTime),
-          rightPayload = rightPayload, rightOrd = col(rightOrd))
-        overwriteBatch(joined, key, outDir)
-        ()
-      }
-      .start()
+    batchKeyed(left, checkpointDir) { (batch, key, _) =>
+      val joined = graft.operators.AsOf.join(batch, right(),
+        leftKey = col(leftKey), rightKey = col(rightKey),
+        leftTime = col(leftTime), rightTime = col(rightTime),
+        rightPayload = rightPayload, rightOrd = col(rightOrd))
+      overwriteBatch(joined, key, outDir)
+    }
 
   /** Offsets to pin when resuming a stream on a NEW checkpoint — the
     * compact-then-resume recipe (the [[compactIndex]] resume caveat) made
@@ -793,16 +664,13 @@ object IngestStreams {
     * from source defaults in that case. */
   def resumeOffsets(spark: SparkSession,
       oldCheckpointDir: String): Seq[Option[String]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val commits = new org.apache.hadoop.fs.Path(s"$oldCheckpointDir/commits")
-    val fs = commits.getFileSystem(conf)
-    if (!fs.exists(commits)) return Seq.empty
+    val commits = new Path(s"$oldCheckpointDir/commits")
+    if (!exists(spark, commits.toString)) return Seq.empty
+    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val committed = fs.listStatus(commits).map(_.getPath.getName)
       .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
     if (committed.isEmpty) return Seq.empty
-    val off = new org.apache.hadoop.fs.Path(
-      s"$oldCheckpointDir/offsets/${committed.max}")
-    val in = fs.open(off)
+    val in = fs.open(new Path(s"$oldCheckpointDir/offsets/${committed.max}"))
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
       finally in.close()
@@ -829,17 +697,42 @@ object IngestStreams {
     * `excludeBatch` no longer matches it. Start a fresh checkpoint (for
     * [[dedupIngest]] any starting offset is safe; for [[embedIngest]] pin
     * [[resumeOffsets]]) or compact to a new directory first. */
-  private[streaming] def batchKey(checkpointDir: String, bid: Long): String = {
+  private[streaming] def batchKey(checkpoint: String, bid: Long): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .digest(checkpoint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     md.take(8).map(b => f"$b%02x").mkString + s"-$bid"
   }
+
+  /** The one streaming sink every ingest here runs through, and the
+    * exactly-once contract they share on plain parquet. `body` receives
+    * each micro-batch with its [[batchKey]] and batch id, and writes
+    * everything the batch produced through [[overwriteBatch]]. A crash
+    * anywhere between those writes and the commit log replays batch N
+    * from the checkpoint; the deterministic recompute then rewrites
+    * exactly batch N's partitions with identical content instead of
+    * appending duplicates. The key is stable under replay of the same
+    * checkpoint (idempotence) and distinct across ingestion runs: a NEW
+    * checkpoint restarts batch ids at 0, and a bare batch-id partition
+    * would clobber an earlier run's partition 0 — callers must reuse the
+    * same checkpointDir string to resume a run. Standing state that
+    * `body` reads back (indexes, ledgers, join sides) is itself
+    * batch-keyed and append-only, never read-modify-write, which is what
+    * keeps the recompute identical. Crash-tested in IngestStreamsSpec. */
+  private[streaming] def batchKeyed(in: DataFrame, checkpointDir: String)(
+      body: (DataFrame, String, Long) => Unit): StreamingQuery =
+    in.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        body(batch, batchKey(checkpointDir, bid), bid)
+      }
+      .start()
 
   /** Idempotent batch write: everything this batch produced lands in the
     * `batch_key=<key>` partition, and OVERWRITE + dynamic partition mode
     * replaces exactly that partition on checkpoint replay (deterministic
     * recompute → identical content) instead of appending a duplicate. */
-  private def overwriteBatch(df: DataFrame, key: String, dir: String): Unit =
+  private[streaming] def overwriteBatch(df: DataFrame, key: String,
+      dir: String): Unit =
     df.withColumn("batch_key", lit(key))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
@@ -893,15 +786,34 @@ object IngestStreams {
       .groupBy(col("band_idx"), col("band_hash"))
       .agg(sum(col("n_base")).as("n_base"))
 
+  /** A batch-keyed directory minus the `excludeBatch` partition; an
+    * absent directory reads as empty with `schema` (the first batch ever,
+    * or a ledger nothing has been ingested into yet). */
   private def loadOrEmpty(spark: SparkSession, path: String,
-      excludeBatch: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      spark.read.parquet(p.toString)
+      excludeBatch: String, schema: StructType): DataFrame =
+    if (exists(spark, path))
+      spark.read.parquet(path)
         .filter(col("batch_key") =!= lit(excludeBatch))
     else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Compaction writes `outDir` in static-overwrite mode, which would
+    * delete `indexDir` before reading it if the two were one directory.
+    * Both are qualified (scheme + working dir), so `file:/x` vs `/x`, or a
+    * relative spelling, cannot slip past. */
+  private def requireFresh(spark: SparkSession, indexDir: String,
+      outDir: String, op: String): Unit = {
+    def qualified(s: String) = {
+      val p = new Path(s)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+    }
+    require(qualified(outDir) != qualified(indexDir),
+      s"$op writes a fresh directory")
   }
 }

@@ -4,8 +4,11 @@ import java.nio.file.Files
 
 import graft.SparkSuite
 import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Durable cross-batch dedup ingestion: batches stream in through
   * foreachBatch, survivors and their key hashes append to parquet, and a
@@ -239,6 +242,101 @@ class IngestStreamsSpec extends SparkSuite {
     assert(after == Seq(("m1", "m2", 3L, 4L, 4L, 750000L),
       ("m1", "solo", 3L, 4L, 7L, 750000L),
       ("m2", "solo", 3L, 4L, 7L, 750000L)))
+  }
+
+  test("linkIngest: streamed link graph equals batch hostGraph; restart-safe") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("linkingest").toString
+    val (indexDir, ckpt) = (s"$dir/link_idx", s"$dir/ckpt")
+
+    // an absent directory is the empty graph, with the ledger's schema
+    val empty = IngestStreams.readLinkGraph(spark, indexDir)
+    assert(empty.count() == 0L)
+    assert(empty.schema.map(f => (f.name, f.dataType)) == Seq(
+      "src_host" -> StringType, "dst_host" -> StringType, "n_links" -> LongType))
+
+    // the a.com → ext.org edge is split across batches, so the read-time
+    // sum is live; self links and mailto targets are no edges
+    val b1 = Seq(("http://a.com/p",
+      """<a href="http://ext.org/1">x</a><a href="/self">s</a>"""),
+      ("http://b.com/p", """<a href="//ext.org/3">x</a>"""))
+    val b2 = Seq(("http://a.com/q",
+      """<a href="http://ext.org/2">y</a><a href="mailto:z@q.com">m</a>"""),
+      ("http://c.com/p", """<a href="http://a.com/">a</a>"""))
+    val src = MemoryStream[(String, String)]
+    val q = IngestStreams.linkIngest(src.toDF().toDF("url", "html"),
+      $"url", $"html", indexDir, ckpt)
+    src.addData(b1: _*)
+    q.processAllAvailable()
+    src.addData(b2: _*)
+    q.processAllAvailable()
+    q.stop()
+
+    def rows(df: DataFrame) = df.orderBy($"src_host", $"dst_host")
+      .as[(String, String, Long)].collect().toSeq
+    val expected = rows(graft.operators.Links.hostGraph(
+      (b1 ++ b2).toDF("url", "html"), $"url", $"html"))
+    assert(rows(IngestStreams.readLinkGraph(spark, indexDir)) == expected)
+    assert(expected == Seq(("a.com", "ext.org", 2L), ("b.com", "ext.org", 1L),
+      ("c.com", "a.com", 1L)))
+
+    // the graph survives the query: a NEW stream over the same dir keeps
+    // accumulating edge counts
+    val src2 = MemoryStream[(String, String)]
+    val q2 = IngestStreams.linkIngest(src2.toDF().toDF("url", "html"),
+      $"url", $"html", indexDir, s"$dir/ckpt2")
+    src2.addData(("http://b.com/r", """<a href="http://ext.org/9">z</a>"""))
+    q2.processAllAvailable()
+    q2.stop()
+    assert(rows(IngestStreams.readLinkGraph(spark, indexDir)) ==
+      Seq(("a.com", "ext.org", 2L), ("b.com", "ext.org", 2L),
+        ("c.com", "a.com", 1L)))
+  }
+
+  test("keywordIngest: streamed hit ledger equals batch matchCounts; restart-safe") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("kwingest").toString
+    val (indexDir, ckpt) = (s"$dir/kw_idx", s"$dir/ckpt")
+    val patterns = Seq("table", "tab", "zzz")
+
+    // an absent directory is the empty ledger, with the ledger's schema
+    val empty = IngestStreams.readKeywordStats(spark, indexDir)
+    assert(empty.count() == 0L)
+    assert(empty.schema.map(f => (f.name, f.dataType)) == Seq(
+      "pattern" -> StringType, "n_hits" -> LongType, "n_docs" -> LongType))
+
+    // both hit patterns recur across the batch boundary
+    val b1 = Seq((1L, "the table is stable"), (2L, "no hits here!"))
+    val b2 = Seq((3L, "tab tab"), (4L, "a table"))
+    val src = MemoryStream[(Long, String)]
+    val q = IngestStreams.keywordIngest(src.toDF().toDF("doc_id", "text"),
+      patterns, indexDir, ckpt)
+    src.addData(b1: _*)
+    q.processAllAvailable()
+    src.addData(b2: _*)
+    q.processAllAvailable()
+    q.stop()
+
+    def rows(df: DataFrame) =
+      df.orderBy($"pattern").as[(String, Long, Long)].collect().toSeq
+    val expected = rows(graft.operators.Keywords.matchCounts(
+      (b1 ++ b2).toDF("doc_id", "text"), patterns)
+      .groupBy($"pattern")
+      .agg(sum($"n").as("n_hits"), count(lit(1)).as("n_docs")))
+    assert(rows(IngestStreams.readKeywordStats(spark, indexDir)) == expected)
+    // 'tab' is inside every 'table'; never-hit 'zzz' has no row
+    assert(expected == Seq(("tab", 5L, 3L), ("table", 3L, 2L)))
+
+    // the ledger survives the query: a NEW stream over the same dir keeps
+    // accumulating (additive pattern-keyed sums, disjoint ids)
+    val src2 = MemoryStream[(Long, String)]
+    val q2 = IngestStreams.keywordIngest(src2.toDF().toDF("doc_id", "text"),
+      patterns, indexDir, s"$dir/ckpt2")
+    src2.addData((5L, "zzz tab"))
+    q2.processAllAvailable()
+    q2.stop()
+    assert(rows(IngestStreams.readKeywordStats(spark, indexDir)) ==
+      Seq(("tab", 6L, 4L), ("table", 3L, 2L), ("zzz", 1L, 1L)))
   }
 
   test("metaIngest: streamed cluster ledger equals batch canonicalClusters; restart-safe") {
@@ -685,9 +783,7 @@ class IngestStreamsSpec extends SparkSuite {
     assert(k0 != k1 && k0 != IngestStreams.batchKey("/other/ckpt", 0L))
 
     def writeHashes(vals: Seq[Long], key: String): Unit =
-      vals.toDF("key_hash").withColumn("batch_key", lit(key))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_key").parquet(s"$dir/hashes")
+      IngestStreams.overwriteBatch(vals.toDF("key_hash"), key, s"$dir/hashes")
     writeHashes(Seq(10L, 11L), k0)
     writeHashes(Seq(20L), k1)
     writeHashes(Seq(10L, 11L), k0) // replay of batch 0: overwrite, not append
@@ -701,6 +797,64 @@ class IngestStreamsSpec extends SparkSuite {
     assert(visible == Set(10L, 11L), s"batch 1 must not see its own hashes: $visible")
     assert(IngestStreams.loadIndex(spark, dir).as[Long].collect().toSet ==
       Set(10L, 11L, 20L))
+  }
+
+  test("batchKeyed: a crash after the sink's write replays to the uninterrupted result") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("sink_crash").toString
+    val batches = Seq(
+      Seq((1L, "join hash join"), (2L, "hash scan")),
+      Seq((3L, "join row"), (4L, "scan scan filter")),
+      Seq((5L, "filter merge")))
+    // the dfIngest ledger body; with `crashAt`, that batch's first attempt
+    // throws AFTER its partition is written and before the commit log
+    // records the batch
+    val attempts = new java.util.concurrent.atomic.AtomicInteger
+    def start(src: MemoryStream[(Long, String)], out: String, ckpt: String,
+        crashAt: Option[Long]) =
+      IngestStreams.batchKeyed(src.toDF().toDF("doc_id", "text"), ckpt) {
+        (batch, key, bid) =>
+          IngestStreams.overwriteBatch(
+            graft.operators.TextAnalysis.dfIndex(batch), key, out)
+          if (crashAt.contains(bid) && attempts.getAndIncrement() == 0)
+            throw new IllegalStateException(s"injected crash in batch $bid")
+      }
+
+    val clean = MemoryStream[(Long, String)]
+    val q0 = start(clean, s"$dir/clean", s"$dir/ckpt_clean", None)
+    batches.foreach { b => clean.addData(b: _*); q0.processAllAvailable() }
+    q0.stop()
+
+    val (out, ckpt) = (s"$dir/crash", s"$dir/ckpt")
+    val src = MemoryStream[(Long, String)]
+    val q1 = start(src, out, ckpt, crashAt = Some(1L))
+    src.addData(batches(0): _*)
+    q1.processAllAvailable()
+    src.addData(batches(1): _*)
+    intercept[StreamingQueryException](q1.processAllAvailable())
+    assert(attempts.get() == 1)
+    // batch 1's partition is on disk although batch 1 never committed
+    assert(spark.read.parquet(out).select($"batch_key").distinct().count() == 2)
+
+    // restart on the same checkpoint over the same source: batch 1 replays
+    val q2 = start(src, out, ckpt, crashAt = Some(1L))
+    q2.processAllAvailable()
+    src.addData(batches(2): _*)
+    q2.processAllAvailable()
+    q2.stop()
+    assert(attempts.get() == 2, "batch 1 runs once more after the restart")
+
+    def rows(df: DataFrame) = df.orderBy($"term").as[(String, Long)].collect().toSeq
+    assert(rows(IngestStreams.readDfIndex(spark, out)) ==
+      rows(IngestStreams.readDfIndex(spark, s"$dir/clean")))
+    // each batch key appears exactly once per term: the replay rewrote
+    // batch 1's partition instead of appending a second copy beside it
+    val raw = spark.read.parquet(out)
+    assert(raw.groupBy($"batch_key", $"term").count()
+      .filter($"count" =!= 1L).isEmpty)
+    assert(raw.select($"batch_key").distinct().as[String].collect().toSet ==
+      (0L to 2L).map(IngestStreams.batchKey(ckpt, _)).toSet)
+    assert(raw.count() == spark.read.parquet(s"$dir/clean").count())
   }
 
   test("composed crawl ingest: wetStream→blocklist→langid→quality→dedup, restart-safe") {
