@@ -671,12 +671,6 @@ object ExtQueries {
        |SELECT term, count(DISTINCT doc_id) AS df
        |FROM t GROUP BY term ORDER BY term""".stripMargin
 
-  /** q_pagerank oracle: [[graft.operators.Graph.pageRank]]'s scaled-
-    * integer recurrence unrolled one CTE per round over the identical
-    * customer→supplier edge set — every step (`//` integral division,
-    * BIGINT sums) is exact, so the gate is bit-for-bit, not
-    * tolerance-based. The explicit CASTs keep DuckDB's sum() (which
-    * widens BIGINT → HUGEINT) in the same int64 domain Spark computes in. */
   /** One PageRank power-iteration round as a DuckDB CTE — the
     * scaled-integer recurrence of [[graft.operators.Graph.pageRank]],
     * shared by every pageRank-shaped oracle (q_pagerank over the
@@ -715,18 +709,23 @@ object ExtQueries {
       (1 to rounds).map(prRoundCte).mkString(",\n") +
       s"\nSELECT id, pr AS pr_scaled FROM pr$rounds ORDER BY id"
 
+  /** q_pagerank oracle: [[graft.operators.Graph.pageRank]]'s scaled-
+    * integer recurrence unrolled one CTE per round over the identical
+    * customer→supplier edge set — every step (`//` integral division,
+    * BIGINT sums) is exact, so the gate is bit-for-bit, not
+    * tolerance-based. The explicit CASTs keep DuckDB's sum() (which
+    * widens BIGINT → HUGEINT) in the same int64 domain Spark computes in. */
   private lazy val pageRankOracleSql: String = pageRankChainSql(
     """SELECT DISTINCT o_custkey AS u, l_suppkey + 1000000 AS v
       |           FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin,
     rounds = 5)
 
   /** The frontier derivation's shared CTE chain (candidates → seen
-    * anti-filter → robots gate → rank) — `q_crawl_frontier` selects the
-    * ranked rows, `q_fetch_schedule` layers the Crawl-delay arithmetic
-    * on top of the SAME chain. */
-  /** The frontier derivation parameterized by per-anchor WHERE clauses
-    * (empty for the impolite face; the nofollow drops for
-    * q_frontier_polite — one derivation, both faces). */
+    * anti-filter → robots gate → rank), parameterized by per-anchor
+    * WHERE clauses (empty for the impolite face; the nofollow drops for
+    * q_frontier_polite — one derivation, both faces). `q_crawl_frontier`
+    * selects the ranked rows, `q_fetch_schedule` layers the Crawl-delay
+    * arithmetic on top of the SAME chain. */
   private def frontierCtesFor(whereA: String, whereB: String): String =
     s"""WITH l AS (
       |  SELECT CASE CAST(doc_id % 4 AS INT)
@@ -1018,14 +1017,6 @@ object ExtQueries {
         .mkString("\nUNION ALL\n") +
       "\nORDER BY rank"
 
-  /** q_wordpiece_tokens oracle: the SAME training chain, then the
-    * greedy longest-match scan step-unrolled (words capped at 12 chars
-    * → 12 steps suffice; every piece advances ≥ 1 char). Per step: all
-    * vocab pieces matching at the cursor (bare form at word start,
-    * ##-form after), arg-max by advance length — identical pieces
-    * can't tie, two different pieces matching the same span can't both
-    * exist — and the no-match branch collapses the word to [UNK], the
-    * public WordPiece rule. */
   /** The greedy-scan CTE block shared by the wordpiece apply-side
     * oracles: training chain + vocab set + 12 unrolled longest-match
     * steps; `gst12` holds every word's final piece list. */
@@ -1065,6 +1056,14 @@ object ExtQueries {
       (1 to 12).map(stepCte).mkString(",\n")
   }
 
+  /** q_wordpiece_tokens oracle: the SAME training chain, then the
+    * greedy longest-match scan step-unrolled (words capped at 12 chars
+    * → 12 steps suffice; every piece advances ≥ 1 char). Per step: all
+    * vocab pieces matching at the cursor (bare form at word start,
+    * ##-form after), arg-max by advance length — identical pieces
+    * can't tie, two different pieces matching the same span can't both
+    * exist — and the no-match branch collapses the word to [UNK], the
+    * public WordPiece rule. */
   private lazy val wordpieceTokensOracleSql: String =
     wordpieceScanCtes +
       """
@@ -8584,9 +8583,6 @@ object ExtQueries {
       |      FROM k GROUP BY doc_id),
       |t AS (SELECT doc_id, count(*) AS n_paras FROM p GROUP BY doc_id)""".stripMargin
 
-  /** HTML strip + entity decode mirrored in DuckDB, built from the SAME
-    * pattern lists the Spark operator uses (`(?s)` rides inline — both
-    * regex dialects accept it; DuckDB needs the 'g' flag for replace-all). */
   /** One oracle for the batch canonical-cluster face AND its streamed
     * ledger twin (`q_canonical_cluster`, `q_meta_ingest_replay`): the
     * per-page canonical target restated from the metaPages arithmetic,
@@ -8606,12 +8602,6 @@ object ExtQueries {
       |  min(page_cu) AS min_url
       |FROM tgt GROUP BY canonical ORDER BY canonical""".stripMargin
 
-  /** One oracle for BOTH main-content faces (`q_main_content` over
-    * planted columns, `q_warc_to_main` over the chrome-laden WARC
-    * render): exactly the surviving content reconstructed — body text +
-    * the low-density tail with its inline link text — run through the
-    * shared strip/decode/collapse chain so whitespace/entity handling
-    * agrees with the engine's. */
   /** [[TextPrep.htmlToMarkdown]]'s chain rendered as DuckDB SQL over
     * `input` — patterns verbatim, replacement templates rendered for
     * RE2 group syntax (`\n`; real newline characters in the SQL
@@ -8667,6 +8657,12 @@ object ExtQueries {
        |ORDER BY doc_id""".stripMargin
   }
 
+  /** One oracle for BOTH main-content faces (`q_main_content` over
+    * planted columns, `q_warc_to_main` over the chrome-laden WARC
+    * render): exactly the surviving content reconstructed — body text +
+    * the low-density tail with its inline link text — run through the
+    * shared strip/decode/collapse chain so whitespace/entity handling
+    * agrees with the engine's. */
   private lazy val mainContentOracleSql: String =
     s"""SELECT doc_id, $htmlCleanSql AS main_text
        |FROM (SELECT doc_id,
@@ -8675,6 +8671,9 @@ object ExtQueries {
        |  FROM documents)
        |ORDER BY doc_id""".stripMargin
 
+  /** HTML strip + entity decode mirrored in DuckDB, built from the SAME
+    * pattern lists the Spark operator uses (`(?s)` rides inline — both
+    * regex dialects accept it; DuckDB needs the 'g' flag for replace-all). */
   private val htmlCleanSql: String = {
     val stripped = TextPrep.HtmlStripPatterns.foldLeft("text") { (acc, pat) =>
       s"regexp_replace($acc, '${pat.replace("'", "''")}', ' ', 'g')"
@@ -8874,17 +8873,6 @@ object ExtQueries {
        |      ORDER BY cos DESC, vec_id) AS rn FROM skscored) t
        |  WHERE rn <= 5)""".stripMargin
 
-  /** q_unigram_train oracle: replays [[graft.operators.Unigram.unigramTrain]]'s
-    * Viterbi-EM recurrence round by round — the seed substring grid and
-    * every round's usage counts are RE-DERIVED (brute-force enumeration
-    * of all 2^(L−1) cut masks per word, arg-max by the same
-    * (score desc, pieces asc, mask asc) total order), while the
-    * `score_scaled` integers are CONSUMED from the staged ledger only
-    * where the re-derived (cnt, total) agree — the q_lm_score staged-
-    * evidence epistemics: counts are proven, the one float (ln) is
-    * staged, and a count divergence nulls the score → hash mismatch.
-    * Brute force is oracle-affordable because the fixture vocabulary is
-    * tiny; the ENGINE runs the O(L·maxPieceLen) DP instead. */
   /** One oracle Viterbi round: best mask per word under the scores in
     * `prevS` (the same (score desc, pieces asc, mask asc) total order as
     * the engine DP), then usage counts `u<r>` weighted by word freq. */
@@ -8952,6 +8940,17 @@ object ExtQueries {
        |           AS pieces FROM cu),
        |pr AS (SELECT w, cnt, mask, np, unnest(pieces) AS piece FROM pc)""".stripMargin
 
+  /** q_unigram_train oracle: replays [[graft.operators.Unigram.unigramTrain]]'s
+    * Viterbi-EM recurrence round by round — the seed substring grid and
+    * every round's usage counts are RE-DERIVED (brute-force enumeration
+    * of all 2^(L−1) cut masks per word, arg-max by the same
+    * (score desc, pieces asc, mask asc) total order), while the
+    * `score_scaled` integers are CONSUMED from the staged ledger only
+    * where the re-derived (cnt, total) agree — the q_lm_score staged-
+    * evidence epistemics: counts are proven, the one float (ln) is
+    * staged, and a count divergence nulls the score → hash mismatch.
+    * Brute force is oracle-affordable because the fixture vocabulary is
+    * tiny; the ENGINE runs the O(L·maxPieceLen) DP instead. */
   private def unigramOracleSql(root: String): String =
     s"""WITH ${unigramBaseCtes(root)},
        |${unigramViterbiCtes(1, "s0")},

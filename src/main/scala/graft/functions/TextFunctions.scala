@@ -270,7 +270,6 @@ object TextFunctions {
   }
 }
 
-/** `nfc_normalize(text)` → STRING in Unicode Normalization Form C. */
 /** `poly_hash(text)` → LONG Karp–Rabin rolling hash (engine-portable). */
 case class PolyHash(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -287,6 +286,7 @@ case class PolyHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** `nfc_normalize(text)` → STRING in Unicode Normalization Form C. */
 case class NfcNormalize(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true

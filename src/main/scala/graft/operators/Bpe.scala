@@ -33,9 +33,10 @@ import graft.functions.TextFunctions.tokens
   *     (gaps-and-islands over a per-word window) select their odd
   *     members; selected positions emit the merged symbol, their
   *     successors drop, everything else passes through;
-  *  4. the vocab's lineage is truncated each round (localCheckpoint or
-  *     durable [[Staging]]) — k rounds of window+join lineage would
-  *     otherwise re-execute from the corpus scan on every action.
+  *  4. the vocab's lineage is cut each round ([[Staging.Rounds]]: an
+  *     eager local checkpoint, or a durable staged table) — k rounds of
+  *     window+join lineage would otherwise re-execute from the corpus
+  *     scan on every action.
   *
   * Everything is integer counts, string equality, and window positions —
   * no floats, no RNG — so the learned rules are bit-portable and the
@@ -95,30 +96,20 @@ object Bpe {
     require(merges >= 1, s"merges must be >= 1, got $merges")
     val spark = vocab0.sparkSession
     import spark.implicits._
-    var vocab = stagingDir match {
-      case Some(dir) => Staging.stageAt(vocab0, dir, "bpe_vocab")._1
-      case None      => vocab0.localCheckpoint()
-    }
-    var prevPath: Option[String] = None
+    val cut = new Staging.Rounds(stagingDir, "bpe_vocab")
+    var vocab = cut(vocab0)
 
     val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var round = 1
     var exhausted = false
     while (round <= merges && !exhausted) {
-      val pairs = vocab
-        .select(col("cnt"), slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("lb"))
-        .select(col("cnt"), explode(arrays_zip(col("la"), col("lb"))).as("p"))
-        .select(col("p.la").as("a"), col("p.lb").as("b"), col("cnt"))
-        .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("n"))
-      val best = pairs.orderBy(col("n").desc, col("a"), col("b"))
+      val best = pairCounts(vocab).orderBy(col("n").desc, col("a"), col("b"))
         .limit(1).collect()
       if (best.isEmpty || best(0).getLong(2) < 2L) exhausted = true
       else {
         val (a, b, n) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         rules += ((round, a, b, n))
-        vocab = truncate(applyMergeRelational(vocab, a, b), stagingDir,
-          { path => prevPath.foreach(Staging.drop(spark, _)); prevPath = Some(path) })
+        vocab = cut(applyMergeRelational(vocab, a, b))
       }
       round += 1
     }
@@ -126,14 +117,18 @@ object Bpe {
     rules.toSeq.toDF("rank", "lhs", "rhs", "pair_count")
   }
 
-  private def truncate(df: DataFrame, stagingDir: Option[String],
-      onStaged: String => Unit): DataFrame = stagingDir match {
-    case Some(dir) =>
-      val (staged, path) = Staging.stageAt(df, dir, "bpe_round")
-      onStaged(path)
-      staged
-    case None => df.localCheckpoint()
-  }
+  /** Adjacent-pair counts `(a, b, n)` of a vocab relation `(w, cnt,
+    * syms)` (the train-side step 1 in the class doc): one explode of
+    * each word's consecutive symbol pairs, summed by word count, so
+    * overlapping occurrences count individually. [[WordPiece]]'s
+    * trainer scores the same counts. */
+  private[graft] def pairCounts(vocab: DataFrame): DataFrame =
+    vocab
+      .select(col("cnt"), slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
+        slice(col("syms"), lit(2), size(col("syms")) - 1).as("lb"))
+      .select(col("cnt"), explode(arrays_zip(col("la"), col("lb"))).as("p"))
+      .select(col("p.la").as("a"), col("p.lb").as("b"), col("cnt"))
+      .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("n"))
 
   /** One greedy left-to-right application of rule (a, b) → `merged`
     * over the vocab relation `(w, cnt, syms)`, fully relational (the

@@ -24,12 +24,6 @@ import graft.functions.GraftFunctions.cosine
   */
 object Dedup {
 
-  /** Shared skew guard: deterministically drop rows whose bucket (the
-    * `keys` combination) holds more than `cap` rows. Partial-agg count +
-    * anti-join — NOT count().over(Window.partitionBy(keys)), which would
-    * shuffle the entire hot bucket into one task just to measure it,
-    * recreating the straggler the guard exists to prevent; groupBy's
-    * map-side combine counts hot buckets without ever assembling them. */
   /** Every `stagingDir` parameter in this object follows the [[Staging]]
     * contract: staged tables land under unique per-invocation
     * subdirectories (concurrent sharing is safe), the write is eager at
@@ -38,6 +32,12 @@ object Dedup {
   private def stage(df: DataFrame, stagingDir: Option[String],
       name: String): DataFrame = Staging.stage(df, stagingDir, name)
 
+  /** Shared skew guard: deterministically drop rows whose bucket (the
+    * `keys` combination) holds more than `cap` rows. Partial-agg count +
+    * anti-join — NOT count().over(Window.partitionBy(keys)), which would
+    * shuffle the entire hot bucket into one task just to measure it,
+    * recreating the straggler the guard exists to prevent; groupBy's
+    * map-side combine counts hot buckets without ever assembling them. */
   private def dropOversized(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
     val oversized = df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bucket_n"))
@@ -105,26 +105,6 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_dups"))
       .join(index, Seq("key_hash"), "left_anti")
 
-  /** Re-ingest guard — the front door that upholds the DISJOINT-ID
-    * contract every standing-index fold depends on ([[hashIndex]],
-    * [[signatureIndex]], [[TextAnalysis.incrementalDf]],
-    * [[TextAnalysis.postingsIndex]]): drop delta rows whose id the corpus
-    * has already ingested, by anti-joining against a persisted id roster
-    * (any relation carrying the ingested ids — the base corpus itself, a
-    * survivor table, or a dedicated 8-byte-per-doc id list).
-    *
-    * Why it exists: the folds are ADDITIVE (df counts sum, postings
-    * append, hash/signature rows union), so re-delivering a doc id —
-    * an at-least-once source replaying a batch, an upstream backfill —
-    * silently double-counts instead of erroring. Routing every delta
-    * through this guard makes the folds idempotent under redelivery:
-    * re-ingested rows are dropped, fresh rows pass untouched (the
-    * unguarded failure mode and this recovery are locked in
-    * TextAnalysisSpec; the df face is hash-gated as `q_text_df_guard`).
-    *
-    * Scale: an anti-join on narrow ids only — the delta side is one
-    * batch, so the roster probe broadcasts the delta's id partitions or
-    * sort-merges on the 8-byte key; corpus text is never read. */
   /** Corpus snapshot diff — "what changed since the last crawl": per
     * doc id, whether it was `added`, `removed`, `changed` (same id,
     * different content), or `unchanged` between two snapshots. The
@@ -151,6 +131,26 @@ object Dedup {
           .otherwise(lit("unchanged")).as("status"))
   }
 
+  /** Re-ingest guard — the front door that upholds the DISJOINT-ID
+    * contract every standing-index fold depends on ([[hashIndex]],
+    * [[signatureIndex]], [[TextAnalysis.incrementalDf]],
+    * [[TextAnalysis.postingsIndex]]): drop delta rows whose id the corpus
+    * has already ingested, by anti-joining against a persisted id roster
+    * (any relation carrying the ingested ids — the base corpus itself, a
+    * survivor table, or a dedicated 8-byte-per-doc id list).
+    *
+    * Why it exists: the folds are ADDITIVE (df counts sum, postings
+    * append, hash/signature rows union), so re-delivering a doc id —
+    * an at-least-once source replaying a batch, an upstream backfill —
+    * silently double-counts instead of erroring. Routing every delta
+    * through this guard makes the folds idempotent under redelivery:
+    * re-ingested rows are dropped, fresh rows pass untouched (the
+    * unguarded failure mode and this recovery are locked in
+    * TextAnalysisSpec; the df face is hash-gated as `q_text_df_guard`).
+    *
+    * Scale: an anti-join on narrow ids only — the delta side is one
+    * batch, so the roster probe broadcasts the delta's id partitions or
+    * sort-merges on the 8-byte key; corpus text is never read. */
   def guardReingest(delta: DataFrame, roster: DataFrame,
       idCol: String = "doc_id"): DataFrame =
     delta.join(roster.select(col(idCol)), Seq(idCol), "left_anti")
@@ -222,16 +222,6 @@ object Dedup {
         col("n_a"), col("n_b"), col("overlap_ppm"))
   }
 
-  /** End-to-end corpus dedup: drop exact duplicates (min-id survivor per
-    * text) then near-duplicates found by MinHash+LSH, keeping each pair's
-    * lower id. Pair-wise survivor selection is a single-pass approximation
-    * of connected components: every dropped doc was near-duplicate of SOME
-    * doc with a lower id, but along a chain a → b → c both b and c are
-    * dropped even though c's only direct neighbor b did not survive —
-    * i.e. survivors are not a maximal independent set. The exact
-    * alternative is iterative connected components (log-rounds of joins);
-    * the one-pass form is the standard production trade and errs only
-    * toward dropping more near-duplicates, never toward keeping one. */
   /** Audit sink for mined near-dup pairs: when set, the pair relation is
     * eagerly written to `path` as parquet and downstream consumes the
     * READ-BACK — so an external auditor (the DuckDB oracle re-deriving
@@ -247,7 +237,18 @@ object Dedup {
       case None => pairs
     }
 
-  /** @param preStaged standing sketch state a pipeline persists anyway —
+  /** End-to-end corpus dedup: drop exact duplicates (min-id survivor per
+    * text) then near-duplicates found by MinHash+LSH, keeping each pair's
+    * lower id. Pair-wise survivor selection is a single-pass approximation
+    * of connected components: every dropped doc was near-duplicate of SOME
+    * doc with a lower id, but along a chain a → b → c both b and c are
+    * dropped even though c's only direct neighbor b did not survive —
+    * i.e. survivors are not a maximal independent set. The exact
+    * alternative is iterative connected components (log-rounds of joins);
+    * the one-pass form is the standard production trade and errs only
+    * toward dropping more near-duplicates, never toward keeping one.
+    *
+    * @param preStaged standing sketch state a pipeline persists anyway —
     *   see [[PreStagedSketch]] for the contract. */
   def dedupCorpus(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", bands: Int = 32, rowsPerBand: Int = 2,
@@ -328,8 +329,9 @@ object Dedup {
     * survivor (so `dedupCorpusCC` ⊆ `dedupCorpus` always). Costs
     * O(log² n) extra rounds over the PAIR set (see
     * [[Graph.connectedComponents]]); pairs are tiny relative to the
-    * corpus, so the rounds never rescan documents. */
-  /** @param survivorOrd when set, the per-cluster survivor maximizes
+    * corpus, so the rounds never rescan documents.
+    *
+    * @param survivorOrd when set, the per-cluster survivor maximizes
     *   `(survivorOrd, then lowest id)` via [[survivorsFromLabelsBy]]
     *   (keep-longest/keep-best-scored policy) instead of the default
     *   lowest id — exact dedup within the cluster is policy-blind either
@@ -430,8 +432,9 @@ object Dedup {
     * Scale: corpus text is never read (the indexes are narrow), the label
     * table is streamed twice and never shuffled, and the only iterative
     * work is the O(delta) contracted label graph — each batch costs
-    * O(delta + affected components), not O(corpus). */
-  /** @param pairsSink when set, the delta's mined near-dup pairs are
+    * O(delta + affected components), not O(corpus).
+    *
+    * @param pairsSink when set, the delta's mined near-dup pairs are
     *   staged and the CC fold consumes the read-back ([[sinkPairs]]) —
     *   together with the persisted standing state (labels, survivors)
     *   this lets the DuckDB oracle re-verify the pairs from raw text and
@@ -474,12 +477,6 @@ object Dedup {
       stagingDir = stagingDir)
   }
 
-  /** Candidate near-dup pairs via MinHash + LSH banding, verified with exact
-    * Jaccard over distinct shingle-hash sets.
-    *
-    * @param bands     number of LSH bands (signature length = bands * rowsPerBand)
-    * @param maxBucket drop pathological buckets larger than this (skew guard)
-    */
   /** Per-doc sorted distinct shingle-hash sets — the shared first pass of
     * every shingle-based dedup operator. Callers running SEVERAL of them
     * over one corpus (e.g. a recall audit of minhash against the exact
@@ -493,6 +490,12 @@ object Dedup {
     docs.select((idCol +: extraCols).map(col) :+
       sort_array(array_distinct(shingleHashes(tokens(col(textCol)), k))).as("sh"): _*)
 
+  /** Candidate near-dup pairs via MinHash + LSH banding, verified with exact
+    * Jaccard over distinct shingle-hash sets.
+    *
+    * @param bands     number of LSH bands (signature length = bands * rowsPerBand)
+    * @param maxBucket drop pathological buckets larger than this (skew guard)
+    */
   def minhashPairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       k: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.8, maxBucket: Int = 1000,
@@ -1163,8 +1166,9 @@ object Dedup {
     * Scale: training touches ≤ `trainSample` vectors; assignment is one
     * narrow map pass (NearestCells kernel, centroid matrix as expression
     * state); the shuffle carries (cell, id) postings; `maxBlock` caps the
-    * per-cell quadratic exactly like [[embeddingPairs]]. */
-  /** @param centroidsSink when set, the learned blocking quantizer is
+    * per-cell quadratic exactly like [[embeddingPairs]].
+    *
+    * @param centroidsSink when set, the learned blocking quantizer is
     *   persisted as (cell, c double[]) parquet ([[Similarity.writeCentroids]])
     *   — given the centroids, multi-probe assignment, the block-size
     *   guard, candidate pairing, and the exact-cosine verify are all

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,16 +28,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *    non-root node;
   *  - the driver coordinates rounds (an inherently iterative algorithm)
   *    but touches only a (count, checksum) pair per round — no edge data;
-  *  - each round truncates the join lineage that would otherwise grow
+  *  - each round cuts the join lineage that would otherwise grow
   *    exponentially and re-execute from the scan on every action (the
-  *    GraphX/ML iteration pattern). With no `stagingDir`, truncation is
-  *    `localCheckpoint` — executor-memory/disk-resident, NOT tolerant of
+  *    GraphX/ML iteration pattern). Every iterative operator here cuts
+  *    through [[Staging.Rounds]] under one EAGER policy: each round runs
+  *    its job when it is built. With no `stagingDir` the cut is a local
+  *    checkpoint — executor-memory/disk-resident, NOT tolerant of
   *    executor loss, fine for a single-node or short job. At cluster
-  *    scale pass `stagingDir`: each round's edge set becomes a durable
-  *    parquet staging table ([[Staging]]) on the cluster filesystem, a
-  *    lost executor merely re-reads its split, and the previous round's
-  *    table is deleted as soon as the next is on disk — peak staging
-  *    footprint is two (shrinking) edge sets plus the canonical input.
+  *    scale pass `stagingDir`: each round's relation becomes a durable
+  *    parquet staging table on the cluster filesystem, a lost executor
+  *    merely re-reads its split, and the previous round's table is
+  *    deleted as soon as the next is on disk — peak staging footprint is
+  *    two (shrinking) edge sets plus the canonical input.
   */
 object Graph {
 
@@ -159,8 +161,8 @@ object Graph {
     * are the caller's to union in as their own singleton components.
     *
     * @param stagingDir when set, per-round lineage truncation is a durable
-    *   parquet staging table under this directory instead of
-    *   `localCheckpoint` — the fault-tolerant cluster path (see class
+    *   parquet staging table under this directory instead of a local
+    *   checkpoint — the fault-tolerant cluster path (see class
     *   doc). Job-scoped scratch: intermediate rounds are deleted as the
     *   algorithm advances, but the final round and the canonical edge set
     *   back the RETURNED DataFrame — delete the directory only after the
@@ -203,12 +205,8 @@ object Graph {
       greatest(col(srcCol), col(dstCol)).as("u"),
       least(col(srcCol), col(dstCol)).as("v"))
       .distinct()
-    val (canon, canonPath) = stagingDir match {
-      case Some(dir) =>
-        val (df, path) = Staging.stageAt(canonRaw, dir, "cc_canon")
-        (df, Some(path))
-      case None => (canonRaw.localCheckpoint(), None)
-    }
+    val canonCut = new Staging.Rounds(stagingDir, "cc_canon")
+    val canon = canonCut(canonRaw)
 
     // small-graph fast path: the canonical set is materialized, so this
     // count is one cheap narrow scan — no re-execution of the caller's
@@ -221,17 +219,14 @@ object Graph {
       val labels = driverCC(spark, canon.collect(), idType)
       // nothing references the staged canonical set anymore (the labels
       // are a local relation) — retire it now instead of at caller-delete
-      canonPath.foreach(Staging.drop(spark, _))
+      canonCut.retire()
       return labels
     }
 
-    // size-derived narrow-table partitioning — see [[pageRank]] (r21:
-    // the same roundParts treatment the other iteratives got)
+    // size-derived narrow-table partitioning — see [[roundParts]]
     val rp = roundParts(m)
     var e = canon.coalesce(rp).filter(col("u") =!= col("v"))
-    // staged path of the PREVIOUS round — safe to delete the moment the
-    // current round's table is on disk (nothing reads it after that)
-    var prevRoundPath: Option[String] = None
+    val cut = new Staging.Rounds(stagingDir, "cc_round")
 
     // (count, xor-fold of row hashes): an order-independent set signature
     // that can't overflow under ANSI arithmetic (a sum of longs can).
@@ -240,12 +235,12 @@ object Graph {
     // is a ~2^-64 event per round — an `except`-based exact comparison
     // (a full shuffle job per converged round, measured as the single
     // largest slice of q_dedup_corpus_cc wall time) buys nothing real.
-    def signature(d: DataFrame): (Any, Any) = {
-      val r = d.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
+    val signature = Seq(count(lit(1)).as("n"),
+      expr("bit_xor(xxhash64(u, v))").as("x"))
+    var sig: (Any, Any) = {
+      val r = e.agg(signature.head, signature.tail: _*).head()
       (r.get(0), r.get(1))
     }
-
-    var sig = signature(e)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -283,31 +278,16 @@ object Graph {
           col("m").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-      val (small, nextSig) = stagingDir match {
-        case Some(dir) =>
-          // durable round: the parquet write IS the round's job, and the
-          // convergence signature rides THAT job as an Observation (a
-          // CollectMetrics node over the written rows) instead of a
-          // separate post-write aggregate — one job and one scan of the
-          // staged table less per round (r21; same (count, xor-fold)
-          // values by construction)
-          val obs = org.apache.spark.sql.Observation()
-          val observed = smallRaw.observe(obs,
-            count(lit(1)).as("n"), expr("bit_xor(xxhash64(u, v))").as("x"))
-          val (staged, path) = Staging.stageAt(observed, dir, "cc_round")
-          prevRoundPath.foreach(Staging.drop(spark, _))
-          prevRoundPath = Some(path)
-          val om = obs.get
-          (staged, (om("n"), om("x")))
-        case None =>
-          // lazy: the signature action right below materializes the
-          // checkpoint — eager would run a separate job per round first
-          val cp = smallRaw.localCheckpoint(eager = false)
-          (cp, signature(cp))
-      }
+      // the round's cut IS its job (a parquet write or an eager local
+      // checkpoint), and the convergence signature rides THAT job as an
+      // Observation (a CollectMetrics node over the cut rows) instead of
+      // a separate aggregate — one job and one scan less per round
+      val obs = org.apache.spark.sql.Observation()
+      e = cut(smallRaw.observe(obs, signature.head, signature.tail: _*))
+      val om = obs.get
+      val nextSig = (om("n"), om("x"))
       converged = nextSig == sig
       sig = nextSig
-      e = small
       iter += 1
     }
     if (!converged)
@@ -323,45 +303,6 @@ object Graph {
       .select(col("id"), coalesce(col("root"), col("id")).as("component"))
   }
 
-  /** Incremental connected components: fold a DELTA edge set into the
-    * label table of a previous [[connectedComponents]] (or
-    * [[incrementalCC]]) run — the daily-ingest path, where re-converging
-    * over the full corpus graph every batch would be O(corpus · log²)
-    * for an O(delta)-sized change.
-    *
-    * Correctness: a previous run's labels are min-reachable-ids, so
-    * CONTRACTING each old component to its label preserves connectivity
-    * exactly; the delta edges, mapped endpoint → label (nodes never seen
-    * before label themselves), form a label-graph of size O(delta) whose
-    * components tell which old components the batch merges. Because old
-    * labels are the min node id of their component and fresh labels are
-    * the node ids themselves, the min label of a merged group IS the min
-    * node id of the merged component — the incremental result equals a
-    * full recompute over the unioned edge set, label values included
-    * (property-tested in GraphSpec).
-    *
-    * Scale: the iterative convergence runs ONLY on the contracted
-    * delta-label graph (O(delta) narrow rows, the usual log rounds); the
-    * corpus-sized label table is never shuffled and never iterated — it
-    * is STREAMED exactly twice, both times past a broadcast of an
-    * O(delta)-sized relation: once to look up the delta endpoints' old
-    * labels (broadcast semi-join probe) and once for the final relabel
-    * (broadcast left join against the changed-label remap). Output is the
-    * updated label table — O(corpus) rows, as any relabel must be, but
-    * produced by one narrow map-side pass.
-    *
-    * Contract: `prevLabels` holds (id, component) for every node of the
-    * PREVIOUS edge set (nodes outside it are implicitly their own
-    * singleton components, same convention as [[connectedComponents]]);
-    * labels must be min-reachable-ids as produced by this object — a
-    * foreign labeling with non-min representatives would still merge
-    * correctly but drift from full-recompute label VALUES.
-    *
-    * @param stagingDir threaded to the inner convergence AND used to
-    *   stage the (tiny) endpoint-label lookup, whose lineage contains the
-    *   caller's pair-mining pipeline — without truncation each of its
-    *   consumers would re-mine the delta (the [[Staging]] diamond rule).
-    */
   /** Exact-arithmetic PageRank over a directed edge set — fixed-round
     * power iteration with the classic damping/dangling-mass treatment
     * (Page, Brin, Motwani, Winograd 1999; the MapReduce formulation of
@@ -393,10 +334,11 @@ object Graph {
     *    O(N)-row rank table against the edge set + one map-side-combined
     *    sum per destination). No driver-side data beyond Staging paths;
     *  - the canonical edge set and out-degrees are staged ONCE and
-    *    re-read every round (they never change); only the narrow two-
-    *    column rank table is rewritten per round, truncating the join
-    *    lineage that would otherwise re-execute from the scan each round
-    *    (same rationale as [[connectedComponents]]'s per-round staging);
+    *    re-read every round (they never change); only the narrow
+    *    (id, od, pr) rank table is rewritten per round, and each round's
+    *    table is cut eagerly ([[Staging.Rounds]]), so each round runs
+    *    its job when it is built and the lineage never re-executes from
+    *    the scan;
     *  - the dangling-mass Σ rides the SAME plan as the contribution sum
     *    via a 1-row cross-join broadcast (no extra driver action per
     *    round);
@@ -411,83 +353,82 @@ object Graph {
       rounds: Int = 5, scale: Long = 1000000000000L,
       stagingDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
+    val (canon, nodesOd, n) = rankGraph(edges, srcCol, dstCol, stagingDir, "pr")
+    require(n > 0, "pageRank: empty graph")
+    require(scale >= n, s"pageRank: scale=$scale must be >= node count $n")
+    rankRounds(canon, nodesOd, n, rounds, pr0 = lit(scale / n),
+      restart = lit((15L * (scale / n)) / 100L),
+      dangShare = expr(s"dang div ${n}L"), stagingDir, "pr_round")
+      .select(col("id"), col("pr").as("pr_scaled"))
+  }
 
-    // canonical distinct edge set: out-degree and contributions must
-    // count each (u, v) once. Staged — read every round by two consumers.
-    val canonRaw = edges.select(col(srcCol).as("u"), col(dstCol).as("v")).distinct()
-    val canon0 = Staging.stage(canonRaw, stagingDir, "pr_edges")
-    // size-derived narrow-table partitioning (roundParts): the staged
-    // relations and every per-round rank table are coalesced to match
-    // their row counts — the counts are one cheap narrow job each
-    // against already-materialized data, paid once, and every one of
-    // the ~rounds×6 downstream jobs stops scheduling
-    // shuffle-partition-many tasks over kilobyte tables
-    val m = canon0.count()
-    val canon = canon0.coalesce(roundParts(m))
-    // fused node + out-degree derivation (r21, guide §2.4): the node
-    // distinct and the out-degree aggregate previously keyed the same
-    // way in two separate staged passes (two exchanges, two writes) —
-    // one union-aggregate produces (id, od) for EVERY endpoint in one
-    // exchange, with od = 0 marking the dangling set (exactly the rows
-    // the old left join surfaced as od IS NULL)
-    val nodesOd0 = Staging.stage(
+  /** [[Staging.stage]] `df`, count it, and coalesce it to [[roundParts]]
+    * of that count: size-derived narrow-table partitioning for the
+    * relations an iterative operator re-reads every round. The count is
+    * one cheap narrow job against already-materialized data, paid once,
+    * and every downstream round stops scheduling shuffle-partition-many
+    * tasks over kilobyte tables. Returns the relation and its rows. */
+  private def stageCounted(df: DataFrame, stagingDir: Option[String],
+      name: String): (DataFrame, Long) = {
+    val staged = Staging.stage(df, stagingDir, name)
+    val rows = staged.count()
+    (staged.coalesce(roundParts(rows)), rows)
+  }
+
+  /** The static inputs of [[pageRank]] and [[personalizedPageRank]],
+    * staged once and re-read every round: the canonical distinct edge
+    * set `(u, v)` (out-degree and contributions count each edge once)
+    * and the fused node + out-degree table `(id, od)` — one
+    * union-aggregate over both endpoints, od = 0 marking the dangling
+    * set. Also returns the node count. */
+  private def rankGraph(edges: DataFrame, srcCol: String, dstCol: String,
+      stagingDir: Option[String], prefix: String): (DataFrame, DataFrame, Long) = {
+    val (canon, _) = stageCounted(
+      edges.select(col(srcCol).as("u"), col(dstCol).as("v")).distinct(),
+      stagingDir, s"${prefix}_edges")
+    val (nodesOd, n) = stageCounted(
       canon.select(col("u").as("id"), lit(1L).as("c"))
         .union(canon.select(col("v").as("id"), lit(0L).as("c")))
         .groupBy(col("id")).agg(sum(col("c")).as("od")),
-      stagingDir, "pr_nodes")
-    val n = nodesOd0.count()
-    require(n > 0, "pageRank: empty graph")
-    require(scale >= n, s"pageRank: scale=$scale must be >= node count $n")
-    val rp = roundParts(n)
-    val nodesOd = nodesOd0.coalesce(rp)
+      stagingDir, s"${prefix}_nodes")
+    (canon, nodesOd, n)
+  }
 
-    val base = (15L * (scale / n)) / 100L
-    // the rank table CARRIES od (r21): the old shape re-joined pr
-    // against the static out-degree table every round (one join + its
-    // AQE stage per round for a column that never changes); carrying
-    // the 8-byte od through the round rewrite makes the dangling
-    // aggregate a plain filter over pr and drops the per-round join
-    var pr = nodesOd.select(col("id"), col("od"), lit(scale / n).as("pr"))
-    var prevRoundPath: Option[String] = None
-    var round = 0
-    while (round < rounds) {
-      // dangling mass: one 1-row aggregate, broadcast via cross join —
-      // stays inside the round's single job, no separate driver action.
-      // (r21 A/B: baking it in as a driver-collected literal instead
-      // was ~25% SLOWER — the per-round blocking head() re-materializes
-      // the rank table outside the round's job and serializes the
-      // rounds harder than the async broadcast future does.)
+  /** The fixed-round power iteration of [[pageRank]] and
+    * [[personalizedPageRank]]. `nodes` is `(id, od, …)`; the rank table
+    * carries those columns plus `pr`, starting at `pr0`, so the
+    * dangling aggregate is a plain filter over it and no round re-joins
+    * the static table. Per round:
+    *   pr′ = restart + (85 · (Σ_{u→v} pr(u) div od(u) + dangShare)) div 100
+    * where `dangShare` may read the round's dangling mass `dang`. The
+    * dangling Σ is a 1-row aggregate broadcast via cross join — inside
+    * the round's own job, no separate driver action (a driver-collected
+    * literal measured ~25% slower: its blocking head() serializes the
+    * rounds). Each round's table is coalesced to the node count's
+    * [[roundParts]] and cut by [[Staging.Rounds]]. */
+  private def rankRounds(canon: DataFrame, nodes: DataFrame, n: Long,
+      rounds: Int, pr0: Column, restart: Column, dangShare: Column,
+      stagingDir: Option[String], name: String): DataFrame = {
+    val rp = roundParts(n)
+    val carried = nodes.columns.toSeq.map(col)
+    val cut = new Staging.Rounds(stagingDir, name)
+    var pr = nodes.select(carried :+ pr0.as("pr"): _*)
+    for (_ <- 1 to rounds) {
       val dang = pr.filter(col("od") === 0L)
         .agg(coalesce(sum(col("pr")), lit(0L)).as("dang"))
-      // contributions: edges join ranks+degrees on the source, then one
-      // map-side-combined integer sum per destination
       val contrib = canon
         .join(pr.filter(col("od") > 0L)
           .select(col("id").as("u"), col("pr"), col("od")), Seq("u"))
         .groupBy(col("v").as("id"))
         .agg(sum(expr("pr div od")).as("insum"))
-      val nextRaw = nodesOd
+      pr = cut(nodes
         .join(contrib, Seq("id"), "left")
         .crossJoin(broadcast(dang))
-        .select(col("id"), col("od"),
-          (lit(base) + expr(s"(85 * (coalesce(insum, 0L) + (dang div ${n}L))) div 100"))
-            .as("pr"))
-      pr = stagingDir match {
-        case Some(dir) =>
-          val (staged, path) = Staging.stageAt(nextRaw.coalesce(rp), dir, "pr_round")
-          prevRoundPath.foreach(Staging.drop(spark, _))
-          prevRoundPath = Some(path)
-          staged
-        // lazy: there is no per-round action (unlike CC's convergence
-        // signature), so eager would schedule one materialization job per
-        // round — the caller's single final action materializes the whole
-        // checkpoint chain round by round instead
-        case None => nextRaw.coalesce(rp).localCheckpoint(eager = false)
-      }
-      round += 1
+        .withColumn("__redis", coalesce(col("insum"), lit(0L)) + dangShare)
+        .select(carried :+ (restart + expr("(85 * __redis) div 100")).as("pr"): _*)
+        .coalesce(rp))
     }
-    pr.select(col("id"), col("pr").as("pr_scaled"))
+    pr
   }
 
   /** PERSONALIZED PageRank — the restart distribution concentrated on a
@@ -509,21 +450,7 @@ object Graph {
       scale: Long = 1000000000000L,
       stagingDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
-    val canon0 = Staging.stage(
-      edges.select(col(srcCol).as("u"), col(dstCol).as("v")).distinct(),
-      stagingDir, "ppr_edges")
-    // size-derived narrow-table partitioning — see [[pageRank]]
-    val canon = canon0.coalesce(roundParts(canon0.count()))
-    // fused node + out-degree derivation and od carried in the rank
-    // table — see [[pageRank]] (r21)
-    val nodesOd0 = Staging.stage(
-      canon.select(col("u").as("id"), lit(1L).as("c"))
-        .union(canon.select(col("v").as("id"), lit(0L).as("c")))
-        .groupBy(col("id")).agg(sum(col("c")).as("od")),
-      stagingDir, "ppr_nodes")
-    val rp = roundParts(nodesOd0.count())
-    val nodesOd = nodesOd0.coalesce(rp)
+    val (canon, nodesOd, n) = rankGraph(edges, srcCol, dstCol, stagingDir, "ppr")
     val seedIds = Staging.stage(
       seeds.select(col(seeds.columns.head).as("id")).distinct()
         .join(nodesOd.select(col("id")), Seq("id"), "left_semi"),
@@ -531,45 +458,19 @@ object Graph {
     val nS = seedIds.count()
     require(nS > 0, "personalizedPageRank: no seed appears in the graph")
     require(scale >= nS, s"scale=$scale must be >= seed count $nS")
-    val seedFlag = seedIds.select(col("id"), lit(true).as("__seed"))
-    // the seed flag rides the rank table too (one broadcast join at
-    // setup instead of one per round); null → false is exactly the old
-    // per-round left join's `when(__seed, ...)` null path
-    val nodesOdSeed = nodesOd.join(broadcast(seedFlag), Seq("id"), "left")
+    // the seed flag rides the rank table (one broadcast join at setup,
+    // not one per round); a node outside the seed set gets false
+    val nodesOdSeed = nodesOd
+      .join(broadcast(seedIds.select(col("id"), lit(true).as("__seed"))),
+        Seq("id"), "left")
       .select(col("id"), col("od"),
         coalesce(col("__seed"), lit(false)).as("__seed"))
-    val base = (15L * (scale / nS)) / 100L
-    var pr = nodesOdSeed.select(col("id"), col("od"), col("__seed"),
-      when(col("__seed"), lit(scale / nS)).otherwise(lit(0L)).as("pr"))
-    var prevRoundPath: Option[String] = None
-    var round = 0
-    while (round < rounds) {
-      val dang = pr.filter(col("od") === 0L)
-        .agg(coalesce(sum(col("pr")), lit(0L)).as("dang"))
-      val contrib = canon
-        .join(pr.filter(col("od") > 0L)
-          .select(col("id").as("u"), col("pr"), col("od")), Seq("u"))
-        .groupBy(col("v").as("id"))
-        .agg(sum(expr("pr div od")).as("insum"))
-      val nextRaw = nodesOdSeed
-        .join(contrib, Seq("id"), "left")
-        .crossJoin(broadcast(dang))
-        .withColumn("__redis", coalesce(col("insum"), lit(0L)) +
-          when(col("__seed"), expr(s"dang div ${nS}L")).otherwise(lit(0L)))
-        .select(col("id"), col("od"), col("__seed"),
-          (when(col("__seed"), lit(base)).otherwise(lit(0L)) +
-            expr("(85 * __redis) div 100")).as("pr"))
-      pr = stagingDir match {
-        case Some(dir) =>
-          val (staged, path) = Staging.stageAt(nextRaw.coalesce(rp), dir, "ppr_round")
-          prevRoundPath.foreach(Staging.drop(spark, _))
-          prevRoundPath = Some(path)
-          staged
-        case None => nextRaw.coalesce(rp).localCheckpoint(eager = false)
-      }
-      round += 1
-    }
-    pr.select(col("id"), col("pr").as("ppr_scaled"))
+    def onSeeds(c: Column) =
+      when(col("__seed"), c).otherwise(lit(0L))
+    rankRounds(canon, nodesOdSeed, n, rounds, pr0 = onSeeds(lit(scale / nS)),
+      restart = onSeeds(lit((15L * (scale / nS)) / 100L)),
+      dangShare = onSeeds(expr(s"dang div ${nS}L")), stagingDir, "ppr_round")
+      .select(col("id"), col("pr").as("ppr_scaled"))
   }
 
   /** Exact global triangle count over an undirected edge set — the
@@ -644,11 +545,13 @@ object Graph {
     * once; per round, two semi-joins of the edges against the alive id
     * set (narrow ids — broadcast-sized long before the edges are) + one
     * map-side-combined degree count; only the narrow (id, deg) alive
-    * table is rewritten per round, truncating lineage via per-round
-    * staging (durable parquet with `stagingDir`, lazy localCheckpoint
-    * otherwise). Worst-case rounds to full convergence is the
-    * degeneracy-ordering depth; in practice a handful suffice — and the
-    * flag makes "did it?" a queryable fact rather than a hope.
+    * table is rewritten per round, cut by [[Staging.Rounds]] (a durable
+    * parquet table with `stagingDir`, an eager local checkpoint
+    * otherwise): each round runs its job when it is built, and the last
+    * round's cut is the one materialization the convergence counts and
+    * the caller's action share. Worst-case rounds to full convergence is
+    * the degeneracy-ordering depth; in practice a handful suffice — and
+    * the flag makes "did it?" a queryable fact rather than a hope.
     *
     * Exact recurrence (what the oracle unrolls): deg₀ = full degree in
     * the canonical edge set; aliveᵢ = {v : degᵢ(v) ≥ k};
@@ -662,63 +565,35 @@ object Graph {
       stagingDir: Option[String] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
-    val canon0 = Staging.stage(
+    val (canon, m) = stageCounted(
       edges.select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
         .filter(col("a") =!= col("b")).distinct(),
       stagingDir, "kcore_edges")
-    // size-derived narrow-table partitioning — see [[pageRank]]
-    val rp = roundParts(canon0.count())
-    val canon = canon0.coalesce(rp)
-    // round 0: every endpoint alive with its full degree
+    val rp = roundParts(m)
     def degreesOf(live: DataFrame): DataFrame =
       live.select(col("a").as("id")).union(live.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("deg"))
         .coalesce(rp)
+    val cut = new Staging.Rounds(stagingDir, "kcore_round")
+    // round 0: every endpoint alive with its full degree
     var alive = degreesOf(canon)
-    var prevPath: Option[String] = None
     var removedLast = true
-    var round = 0
-    while (round < rounds) {
+    for (round <- 1 to rounds) {
       val keep = alive.filter(col("deg") >= k).select(col("id"))
       val live = canon
         .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-      val nextRaw = degreesOf(live)
-      // lineage truncation per round — except the LAST round on the
-      // default path: nothing iterates on it, so a persist (lineage
-      // kept, plan stays inspectable) lets the convergence count and
-      // the caller's final action share one materialization instead of
-      // paying a checkpoint no one builds on
-      val (next, path) = stagingDir match {
-        case Some(dir) =>
-          val (staged, p) = Staging.stageAt(nextRaw, dir, "kcore_round")
-          (staged, Some(p))
-        case None if round == rounds - 1 =>
-          // one pin, final round only (the lazy result closes over it —
-          // session-lifetime CacheManager caveat of
-          // [[graft.operators.Dedup.minhashPairsFromShingles]];
-          // stagingDir callers get the droppable-rounds path above)
-          (nextRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-            None)
-        case None => (nextRaw.localCheckpoint(eager = false), None)
-      }
-      // convergence check on the LAST round only (two extra counts, not
-      // per round): the output is a fixed point iff the final recount
-      // kept every kept node (none lost all its edges) AND left no
-      // degree under k for the closing filter to remove. Runs BEFORE the
-      // previous round's staging table is dropped — `alive` still reads
-      // that path.
-      if (round == rounds - 1) {
-        val keptAll = next.count() == alive.filter(col("deg") >= k).count()
-        val allOverK = next.filter(col("deg") < k).count() == 0L
-        removedLast = !(keptAll && allOverK)
-      }
-      prevPath.foreach(Staging.drop(spark, _))
-      prevPath = path
-      alive = next
-      round += 1
+      // convergence check on the LAST round only: the output is a fixed
+      // point iff the final recount kept every kept node (none lost all
+      // its edges) AND left no degree under k for the closing filter to
+      // remove. The kept count reads `alive`, so it is taken before the
+      // cut retires the table `alive` was staged to.
+      val kept = if (round == rounds) keep.count() else 0L
+      alive = cut(degreesOf(live))
+      if (round == rounds)
+        removedLast = !(alive.count() == kept &&
+          alive.filter(col("deg") < k).count() == 0L)
     }
     alive.filter(col("deg") >= k)
       .select(col("id"), col("deg"), lit(!removedLast).as("converged"))
@@ -749,27 +624,23 @@ object Graph {
       srcCol: String = "id_a", dstCol: String = "id_b",
       stagingDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val spark = edges.sparkSession
-    val und0 = Staging.stage(
+    val (und, m) = stageCounted(
       edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
         .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
         .filter(col("a") =!= col("b")).distinct(),
       stagingDir, "lpa_edges")
-    // size-derived narrow-table partitioning — see [[pageRank]]
-    val rp = roundParts(und0.count())
-    val und = und0.coalesce(rp)
+    val rp = roundParts(m)
+    val cut = new Staging.Rounds(stagingDir, "lpa_round")
     var labels = und.select(col("a").as("id")).distinct()
       .withColumn("lbl", col("id")).coalesce(rp)
-    var prevPath: Option[String] = None
-    var round = 0
-    while (round < rounds) {
+    for (_ <- 1 to rounds) {
       // ballot: edge (a, b) contributes b's current label to a's ballot,
       // PLUS one self-vote per node (the standard synchronous-LPA
       // oscillation fix — without it an isolated pair swaps labels
       // forever and odd-round outputs are degenerate singletons);
       // arg-max by (count desc, label asc) via the struct-max trick
       // (labels are ids ≥ 0 by the edge-id contract)
-      val nextRaw = und
+      labels = cut(und
         .join(labels.select(col("id").as("b"), col("lbl")), Seq("b"))
         .select(col("a"), col("lbl"))
         .union(labels.select(col("id").as("a"), col("lbl")))
@@ -778,16 +649,7 @@ object Graph {
         .groupBy(col("a"))
         .agg(max(struct(col("n"), col("lbl").unary_-.as("neg"))).as("m"))
         .select(col("a").as("id"), (-col("m.neg")).as("lbl"))
-      val (next, path) = stagingDir match {
-        case Some(dir) =>
-          val (staged, p) = Staging.stageAt(nextRaw.coalesce(rp), dir, "lpa_round")
-          (staged, Some(p))
-        case None => (nextRaw.coalesce(rp).localCheckpoint(eager = false), None)
-      }
-      prevPath.foreach(Staging.drop(spark, _))
-      prevPath = path
-      labels = next
-      round += 1
+        .coalesce(rp))
     }
     labels.select(col("id"), col("lbl").as("community"))
   }
@@ -854,6 +716,45 @@ object Graph {
           col("degree_sum") * col("degree_sum")).as("q_part"))
   }
 
+  /** Incremental connected components: fold a DELTA edge set into the
+    * label table of a previous [[connectedComponents]] (or
+    * [[incrementalCC]]) run — the daily-ingest path, where re-converging
+    * over the full corpus graph every batch would be O(corpus · log²)
+    * for an O(delta)-sized change.
+    *
+    * Correctness: a previous run's labels are min-reachable-ids, so
+    * CONTRACTING each old component to its label preserves connectivity
+    * exactly; the delta edges, mapped endpoint → label (nodes never seen
+    * before label themselves), form a label-graph of size O(delta) whose
+    * components tell which old components the batch merges. Because old
+    * labels are the min node id of their component and fresh labels are
+    * the node ids themselves, the min label of a merged group IS the min
+    * node id of the merged component — the incremental result equals a
+    * full recompute over the unioned edge set, label values included
+    * (property-tested in GraphSpec).
+    *
+    * Scale: the iterative convergence runs ONLY on the contracted
+    * delta-label graph (O(delta) narrow rows, the usual log rounds); the
+    * corpus-sized label table is never shuffled and never iterated — it
+    * is STREAMED exactly twice, both times past a broadcast of an
+    * O(delta)-sized relation: once to look up the delta endpoints' old
+    * labels (broadcast semi-join probe) and once for the final relabel
+    * (broadcast left join against the changed-label remap). Output is the
+    * updated label table — O(corpus) rows, as any relabel must be, but
+    * produced by one narrow map-side pass.
+    *
+    * Contract: `prevLabels` holds (id, component) for every node of the
+    * PREVIOUS edge set (nodes outside it are implicitly their own
+    * singleton components, same convention as [[connectedComponents]]);
+    * labels must be min-reachable-ids as produced by this object — a
+    * foreign labeling with non-min representatives would still merge
+    * correctly but drift from full-recompute label VALUES.
+    *
+    * @param stagingDir threaded to the inner convergence AND used to
+    *   stage the (tiny) endpoint-label lookup, whose lineage contains the
+    *   caller's pair-mining pipeline — without truncation each of its
+    *   consumers would re-mine the delta (the [[Staging]] diamond rule).
+    */
   def incrementalCC(prevLabels: DataFrame, newEdges: DataFrame,
       idCol: String = "id", compCol: String = "component",
       srcCol: String = "id_a", dstCol: String = "id_b", maxIter: Int = 50,
@@ -862,10 +763,7 @@ object Graph {
     val endsRaw = newEdges.select(col(srcCol).as("a"), col(dstCol).as("b"))
     // the delta edge list is typically an expensive mining result (e.g.
     // incrementalMinhash) read by three consumers below — truncate once
-    val ends = stagingDir match {
-      case Some(dir) => Staging.stageAt(endsRaw, dir, "icc_delta")._1
-      case None      => endsRaw.localCheckpoint()
-    }
+    val ends = new Staging.Rounds(stagingDir, "icc_delta")(endsRaw)
     val nodes = ends.select(col("a").as("id"))
       .union(ends.select(col("b").as("id"))).distinct()
     // old labels of the delta endpoints: stream the corpus-sized label
@@ -878,10 +776,7 @@ object Graph {
     // staged: O(delta) rows, but its lineage streams the label table —
     // three consumers (two label-edge joins, the fresh-node relabel)
     // must not triple that pass
-    val nodeLbl = stagingDir match {
-      case Some(dir) => Staging.stageAt(nodeLblRaw, dir, "icc_node_lbl")._1
-      case None      => nodeLblRaw.localCheckpoint()
-    }
+    val nodeLbl = new Staging.Rounds(stagingDir, "icc_node_lbl")(nodeLblRaw)
     // contracted delta graph: edges between component representatives
     val labelEdges = ends
       .join(nodeLbl.select(col("id").as("a"), col("component").as("ca")), Seq("a"))

@@ -33,17 +33,6 @@ object Recrawl {
       regexp_extract(c, "([0-9]{2} [A-Za-z]{3} [0-9]{4})", 1),
       lit("dd MMM yyyy")).cast("date")
 
-  /** The fetch/revalidate/skip verdict per sitemap entry:
-    *  - `fetch` — no ledger row for the URL (never fetched, or the
-    *    previous response carried no validators): unconditional GET;
-    *  - `skip` — the sitemap `lastmod` is on/before the date of our
-    *    recorded copy: the site itself says nothing changed;
-    *  - `revalidate` — everything else (lastmod after our copy, or no
-    *    usable lastmod/fetch date): conditional GET with the persisted
-    *    validators (`If-None-Match` / `If-Modified-Since`).
-    * `entries` carries `loc` (+ optional `lastmod`, W3C date);
-    * `ledger` carries `url`, `etag`, `last_modified` (HTTP-date).
-    * Output: `(url, lastmod, etag, last_modified, verdict)`. */
   /** WARC-Date (ISO 8601, `2026-03-01T12:00:00Z`) → DATE; malformed →
     * NULL. The record's capture time is the fetch date a recrawl
     * scheduler ages content by. */
@@ -156,6 +145,17 @@ object Recrawl {
           .when(col("status").isin(404, 410), lit("retired"))
           .otherwise(lit("kept")).as("verdict"))
 
+  /** The fetch/revalidate/skip verdict per sitemap entry:
+    *  - `fetch` — no ledger row for the URL (never fetched, or the
+    *    previous response carried no validators): unconditional GET;
+    *  - `skip` — the sitemap `lastmod` is on/before the date of our
+    *    recorded copy: the site itself says nothing changed;
+    *  - `revalidate` — everything else (lastmod after our copy, or no
+    *    usable lastmod/fetch date): conditional GET with the persisted
+    *    validators (`If-None-Match` / `If-Modified-Since`).
+    * `entries` carries `loc` (+ optional `lastmod`, W3C date);
+    * `ledger` carries `url`, `etag`, `last_modified` (HTTP-date).
+    * Output: `(url, lastmod, etag, last_modified, verdict)`. */
   def decide(entries: DataFrame, ledger: DataFrame): DataFrame =
     entries
       .select(col("loc").as("url"), col("lastmod"))

@@ -90,8 +90,9 @@ object Similarity {
     * (`probes = 1` → own bucket only; max `planes + 1`). Flipped buckets
     * are the likeliest homes of near neighbours that landed just across a
     * hyperplane. Corpus rows stay in exactly one bucket, so probing only
-    * fans out the (small, broadcast) query side. */
-  /** @param planesSink when set, the deterministic hyperplane matrix is
+    * fans out the (small, broadcast) query side.
+    *
+    * @param planesSink when set, the deterministic hyperplane matrix is
     *   persisted as (cell = plane index, c double[]) parquet — given the
     *   planes, bucket signatures, the bucket join, and the exact-cosine
     *   ranking are all re-derivable by the DuckDB oracle, value-gating
@@ -219,8 +220,8 @@ object Similarity {
     * drops from |corpus| to nprobe·|corpus|/nlist. Deterministic: Lloyd
     * starts from a fixed spread over the id-ordered training sample (no
     * RNG), so the same corpus trains the same quantizer on any cluster.
-    */
-  /** @param centroidsSink when set, the trained coarse quantizer is
+    *
+    * @param centroidsSink when set, the trained coarse quantizer is
     *   eagerly written to this parquet path as (cell, c double[]) — the
     *   audit artifact that lets an EXTERNAL engine (the DuckDB oracle)
     *   re-derive cell assignment, probing, and the exact top-k from the
@@ -577,8 +578,9 @@ object Similarity {
     * for an exact-cosine re-rank. `rerank = 1` disables the refine step
     * (pure ADC ranking); recall is audited in-engine ([[recallAudit]]).
     * Both quantizers train driver-locally on one [[trainingSample]];
-    * cells, codes, ADC and refine are distributed and deterministic. */
-  /** @param shortlistSink when set, the ADC shortlist (query_id, vec_id)
+    * cells, codes, ADC and refine are distributed and deterministic.
+    *
+    * @param shortlistSink when set, the ADC shortlist (query_id, vec_id)
     *   is eagerly staged to this parquet path and the refine consumes the
     *   read-back — the DuckDB oracle then re-derives the exact-cosine
     *   re-rank over unit-normalized vectors from raw data, value-gating

@@ -2,19 +2,26 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared materialization point for consumer-diamond staging relations.
+/** Shared materialization point for consumer-diamond staging relations
+  * and for the per-round lineage cut of the iterative operators.
   *
-  * With `stagingDir` set, the relation is written EAGERLY (at call time,
-  * not first action — the one non-lazy step in these otherwise lazy
-  * APIs) as an explicit parquet table under a unique subdirectory of
-  * `stagingDir` and read back — the 100 TB shape (SCALE.md
-  * §Cross-cutting): every consumer re-reads from disk, nothing pins the
-  * SQL CacheManager for the session lifetime, and the staged table
-  * doubles as a restart point. Without it, executor-local
+  * [[stage]]: with `stagingDir` set, the relation is written EAGERLY (at
+  * call time, not first action) as an explicit parquet table under a
+  * unique subdirectory of `stagingDir` and read back — the 100 TB shape
+  * (SCALE.md §Cross-cutting): every consumer re-reads from disk, nothing
+  * pins the SQL CacheManager for the session lifetime, and the staged
+  * table doubles as a restart point. Without it, executor-local
   * `persist(MEMORY_AND_DISK)` — the small-job default, whose cache is
   * pinned by the CacheManager until `spark.catalog.clearCache()` (the
   * Spark ML handlePersistence caveat, documented at
   * [[Dedup.minhashPairsFromShingles]]).
+  *
+  * [[Rounds]]: the iterative operators ([[Graph]], [[Bpe]],
+  * [[WordPiece]]) cut the lineage that grows with every round under ONE
+  * eager policy — each round runs a job when it is built, staged
+  * (`stagingDir`) or `localCheckpoint()` (no `stagingDir`), so no lazy
+  * checkpoint chain is left for a later action to complete round by
+  * round.
   *
   * Subdirectory names are unique per invocation
   * (`name_p<pid>_<jvmTag>_<n>`: process id, a random per-JVM tag, and a
@@ -102,8 +109,8 @@ object Staging {
   }
 
   /** Like [[stage]] with a directory, but also returns the staged path —
-    * for iterative callers ([[Graph.connectedComponents]]) that retire
-    * earlier rounds' staging tables with [[drop]] as they go. */
+    * for callers that [[drop]] the table themselves ([[Rounds]] retires
+    * each round's predecessor this way). */
   def stageAt(df: DataFrame, dir: String, name: String): (DataFrame, String) = {
     val path = s"$dir/${name}_p${ProcessHandle.current().pid()}_" +
       s"${jvmTag}_${counter.incrementAndGet()}"
@@ -147,5 +154,35 @@ object Staging {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(p, true)
+  }
+
+  /** The per-round lineage cut of one iterated relation: call it once
+    * per round (and on the round-0 input). Each call runs the job that
+    * materializes `df` before it returns — an `Observation` on `df` fills
+    * on that job, on either leg:
+    *  - with `stagingDir`, `df` is written by [[stageAt]] and read back,
+    *    then the table this instance staged on its previous call is
+    *    dropped: nothing reads it once the new one is on disk. Peak
+    *    footprint is two tables; the last one backs the caller's result
+    *    until [[retire]] or the caller's scratch delete;
+    *  - without, `df.localCheckpoint()` — executor-local blocks, not
+    *    tolerant of executor loss, fine for a single-node or short job. */
+  private[graft] final class Rounds(stagingDir: Option[String], name: String) {
+    private var last: Option[(SparkSession, String)] = None
+
+    def apply(df: DataFrame): DataFrame = stagingDir match {
+      case Some(dir) =>
+        val (staged, path) = stageAt(df, dir, name)
+        retire()
+        last = Some((df.sparkSession, path))
+        staged
+      case None => df.localCheckpoint()
+    }
+
+    /** Drop the last table this instance staged, if any. */
+    def retire(): Unit = {
+      last.foreach { case (spark, path) => drop(spark, path) }
+      last = None
+    }
   }
 }

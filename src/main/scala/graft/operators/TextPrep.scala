@@ -208,33 +208,6 @@ object TextPrep {
       .select(col(idCol), col("shard"), col("pos"))
   }
 
-  /** Paragraph-level corpus dedup (the RefinedWeb/CCNet boilerplate pass):
-    * a repeated paragraph survives only at its FIRST corpus occurrence —
-    * min (doc id, position) — and every later occurrence is dropped;
-    * documents are reassembled from their surviving paragraphs in order.
-    * Whole-document dedup misses this entirely (navigation chrome, cookie
-    * banners, licence footers repeat across *distinct* pages), and
-    * span-level coverage ([[Dedup.dupCoverage]]) only measures it — this
-    * op REMOVES it.
-    *
-    * Output: `(id, text_dedup, n_paras, n_kept)` — one row per input doc
-    * (a fully-boilerplate doc keeps its row with empty `text_dedup`).
-    * Whitespace-only paragraphs are dropped before dedup on both engines.
-    *
-    * Scale: paragraphs group on their `xxhash64` (8-byte shuffle key; the
-    * paragraph text crosses a shuffle only inside its own doc's rebuild
-    * group — same narrow-key move as [[Dedup.exact]], same documented
-    * birthday bound). Two shuffles: the survivor arg-min on the hash and
-    * the per-doc reassembly; the survivor relation ships (hash, id, pos)
-    * only. The first-occurrence rule (not "keep one arbitrary copy")
-    * makes the result deterministic AND oracle-checkable.
-    *
-    * The paragraph-posting relation is a consumer diamond (survivor
-    * arg-min + the keep join) staged via [[Staging.stage]]: default
-    * executor-local persist under the session-lifetime CacheManager
-    * caveat of [[Dedup.minhashPairsFromShingles]]; pass `stagingDir` at
-    * cluster scale for a durable parquet staging table that pins
-    * nothing (caller deletes the dir once the result is consumed). */
   /** Fill-in-the-middle (FIM) transformation — the code/infilling
     * training-prep step (Bavarian et al. 2022, "Efficient Training of
     * Language Models to Fill in the Middle"; the OpenAI/StarCoder
@@ -274,6 +247,33 @@ object TextPrep {
         .otherwise(col(textCol)))
   }
 
+  /** Paragraph-level corpus dedup (the RefinedWeb/CCNet boilerplate pass):
+    * a repeated paragraph survives only at its FIRST corpus occurrence —
+    * min (doc id, position) — and every later occurrence is dropped;
+    * documents are reassembled from their surviving paragraphs in order.
+    * Whole-document dedup misses this entirely (navigation chrome, cookie
+    * banners, licence footers repeat across *distinct* pages), and
+    * span-level coverage ([[Dedup.dupCoverage]]) only measures it — this
+    * op REMOVES it.
+    *
+    * Output: `(id, text_dedup, n_paras, n_kept)` — one row per input doc
+    * (a fully-boilerplate doc keeps its row with empty `text_dedup`).
+    * Whitespace-only paragraphs are dropped before dedup on both engines.
+    *
+    * Scale: paragraphs group on their `xxhash64` (8-byte shuffle key; the
+    * paragraph text crosses a shuffle only inside its own doc's rebuild
+    * group — same narrow-key move as [[Dedup.exact]], same documented
+    * birthday bound). Two shuffles: the survivor arg-min on the hash and
+    * the per-doc reassembly; the survivor relation ships (hash, id, pos)
+    * only. The first-occurrence rule (not "keep one arbitrary copy")
+    * makes the result deterministic AND oracle-checkable.
+    *
+    * The paragraph-posting relation is a consumer diamond (survivor
+    * arg-min + the keep join) staged via [[Staging.stage]]: default
+    * executor-local persist under the session-lifetime CacheManager
+    * caveat of [[Dedup.minhashPairsFromShingles]]; pass `stagingDir` at
+    * cluster scale for a durable parquet staging table that pins
+    * nothing (caller deletes the dir once the result is consumed). */
   def dedupParagraphs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text",
       stagingDir: Option[String] = None): DataFrame = {
@@ -539,8 +539,6 @@ object TextPrep {
       regexp_replace(clamped, "^\\s+|\\s+$", ""))
   }
 
-  /** PII patterns, in redaction order. Kept engine-portable (work unchanged
-    * in Java regex and RE2): email, IPv4, US-style dashed/spaced phone. */
   /** The windows-1252 printable extras beyond Latin-1: glyphs (what a
     * mojibake string shows) paired with the BYTES they decoded from
     * (U+0080–U+009F), in byte order — a `translate` over this pair IS
@@ -592,6 +590,8 @@ object TextPrep {
       .withColumn(textCol, when(col("mojibake_fixed"), repaired).otherwise(t))
   }
 
+  /** PII patterns, in redaction order. Kept engine-portable (work unchanged
+    * in Java regex and RE2): email, IPv4, US-style dashed/spaced phone. */
   val PiiPatterns: Seq[(String, String)] = Seq(
     "email" -> "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}",
     "ipv4" -> "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b",

@@ -181,29 +181,6 @@ object Urls {
       .join(broadcast(blocklist.select(col("domain"))), Seq("domain"),
         "left_anti")
 
-  /** Registrable domain (eTLD+1) per document under a caller-provided
-    * public-suffix table — the grouping level corpus quotas actually
-    * want (`a.blog.co.uk` and `b.blog.co.uk` are one site; `co.uk`
-    * alone is not): the LONGEST suffix of the canonical host present in
-    * `suffixes` (column `suffix`, canonical form, ≤ `maxSuffixLabels`
-    * labels) is the public suffix, and the registrable domain is that
-    * suffix plus one more label. A host matching no listed suffix takes
-    * the PSL fallback rule (the bare TLD is the suffix → registrable =
-    * last two labels); a host with no label left of its suffix (the
-    * suffix itself, e.g. a bare `co.uk`) yields the host unchanged.
-    * PSL wildcard (`*.ck`) and exception (`!www.ck`) rules are not
-    * interpreted here — [[registrableDomainsPsl]] handles the full rule
-    * syntax; this entry point stays for pre-expanded plain tables.
-    *
-    * Output: `(idCol, host, reg_domain)` — a narrow ledger the caller
-    * joins or aggregates on.
-    *
-    * Scale shape: candidate suffixes explode to ≤ maxSuffixLabels rows
-    * per doc and meet the suffix table on a BROADCAST semi-join (the
-    * real PSL is ~10⁴ rows — blocklist-class); the arg-max over
-    * candidates is one partial-agg-friendly struct-max keyed on the doc
-    * id, and the fallback left-join is id-keyed narrow rows. Two
-    * exchanges of (id, host)-width rows, document text untouched. */
   /** Registrable domain (eTLD+1) under the FULL public-suffix-list rule
     * syntax — plain rules plus wildcards (`*.ck`: every direct child of
     * `ck` is a public suffix) and exceptions (`!www.ck`: despite a
@@ -305,6 +282,29 @@ object Urls {
           col("url_len") > maxLen)
   }
 
+  /** Registrable domain (eTLD+1) per document under a caller-provided
+    * public-suffix table — the grouping level corpus quotas actually
+    * want (`a.blog.co.uk` and `b.blog.co.uk` are one site; `co.uk`
+    * alone is not): the LONGEST suffix of the canonical host present in
+    * `suffixes` (column `suffix`, canonical form, ≤ `maxSuffixLabels`
+    * labels) is the public suffix, and the registrable domain is that
+    * suffix plus one more label. A host matching no listed suffix takes
+    * the PSL fallback rule (the bare TLD is the suffix → registrable =
+    * last two labels); a host with no label left of its suffix (the
+    * suffix itself, e.g. a bare `co.uk`) yields the host unchanged.
+    * PSL wildcard (`*.ck`) and exception (`!www.ck`) rules are not
+    * interpreted here — [[registrableDomainsPsl]] handles the full rule
+    * syntax; this entry point stays for pre-expanded plain tables.
+    *
+    * Output: `(idCol, host, reg_domain)` — a narrow ledger the caller
+    * joins or aggregates on.
+    *
+    * Scale shape: candidate suffixes explode to ≤ maxSuffixLabels rows
+    * per doc and meet the suffix table on a BROADCAST semi-join (the
+    * real PSL is ~10⁴ rows — blocklist-class); the arg-max over
+    * candidates is one partial-agg-friendly struct-max keyed on the doc
+    * id, and the fallback left-join is id-keyed narrow rows. Two
+    * exchanges of (id, host)-width rows, document text untouched. */
   def registrableDomains(docs: DataFrame, idCol: String, urlCol: Column,
       suffixes: DataFrame, maxSuffixLabels: Int = 4): DataFrame = {
     require(maxSuffixLabels >= 1, s"maxSuffixLabels=$maxSuffixLabels")

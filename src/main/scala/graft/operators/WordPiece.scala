@@ -31,10 +31,10 @@ import graft.functions.TextFunctions.tokens
   * Scale shape (inherited from [[Bpe.bpeTrain]]): training runs on the
   * WORD FREQUENCY TABLE, not the corpus — one corpus-sized scan, then
   * every merge round is an explode + map-side-combinable sum over the
-  * (distinct words × symbols) relation, with per-round lineage
-  * truncation. Apply broadcasts the (small by construction) vocab and
-  * segments per-partition — zero shuffles beyond the word-table
-  * groupBy it rides on.
+  * (distinct words × symbols) relation, with the per-round lineage cut
+  * of [[Staging.Rounds]]. Apply broadcasts the (small by construction)
+  * vocab and segments per-partition — zero shuffles beyond the
+  * word-table groupBy it rides on.
   */
 object WordPiece {
 
@@ -89,12 +89,8 @@ object WordPiece {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val vocab0 = markedWordTable(docs, textCol)
-    var vocab = stagingDir match {
-      case Some(dir) => Staging.stageAt(vocab0, dir, "wp_vocab")._1
-      case None      => vocab0.localCheckpoint()
-    }
-    var prevPath: Option[String] = None
+    val cut = new Staging.Rounds(stagingDir, "wp_vocab")
+    var vocab = cut(markedWordTable(docs, textCol))
 
     val rules =
       scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long, Long)]
@@ -102,13 +98,7 @@ object WordPiece {
     var exhausted = false
     while (round <= merges && !exhausted) {
       // adjacent-pair counts (overlaps counted individually) ...
-      val pairs = vocab
-        .select(col("cnt"),
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("la"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("lb"))
-        .select(col("cnt"), explode(arrays_zip(col("la"), col("lb"))).as("p"))
-        .select(col("p.la").as("a"), col("p.lb").as("b"), col("cnt"))
-        .groupBy(col("a"), col("b")).agg(sum(col("cnt")).as("n"))
+      val pairs = Bpe.pairCounts(vocab)
       // ... joined against per-SYMBOL weighted counts for the score
       val symCnt = vocab
         .select(col("cnt"), explode(col("syms")).as("s"))
@@ -137,24 +127,12 @@ object WordPiece {
           best(0).getAs[Long]("score_scaled")))
         // merged symbol keeps a's marker, drops b's ## (b is always a
         // continuation symbol — it follows a within a word)
-        vocab = truncate(
-          Bpe.applyMergeRelational(vocab, a, b, a + strip(b)),
-          stagingDir,
-          { path => prevPath.foreach(Staging.drop(spark, _)); prevPath = Some(path) })
+        vocab = cut(Bpe.applyMergeRelational(vocab, a, b, a + strip(b)))
       }
       round += 1
     }
     (rules.toSeq.toDF("rank", "lhs", "rhs", "pair_count", "score_scaled"),
       vocab)
-  }
-
-  private def truncate(df: DataFrame, stagingDir: Option[String],
-      onStaged: String => Unit): DataFrame = stagingDir match {
-    case Some(dir) =>
-      val (staged, path) = Staging.stageAt(df, dir, "wp_round")
-      onStaged(path)
-      staged
-    case None => df.localCheckpoint()
   }
 
   /** Greedy longest-match-first segmentation of one word under a
@@ -228,10 +206,9 @@ object WordPiece {
       textCol: String = "text"): Set[String] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var vocab = markedWordTable(docs, textCol).localCheckpoint()
-    rules.foreach { case (a, b) =>
-      vocab = Bpe.applyMergeRelational(vocab, a, b, a + strip(b))
-        .localCheckpoint()
+    val cut = new Staging.Rounds(None, "wp_vocab")
+    val vocab = rules.foldLeft(cut(markedWordTable(docs, textCol))) {
+      case (v, (a, b)) => cut(Bpe.applyMergeRelational(v, a, b, a + strip(b)))
     }
     vocab.select(explode(col("syms")).as("s")).distinct()
       .as[String].collect().toSet

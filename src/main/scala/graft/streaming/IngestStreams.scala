@@ -198,8 +198,9 @@ object IngestStreams {
     * vectors; without codes, exact-rescore the probed cells directly.
     * Per-query work is |index|·nprobe/nlist either way; the standing
     * corpus is never re-assigned. Same output contract as
-    * [[graft.operators.Similarity.ivfTopK]]. */
-  /** @param shortlistSink when set (ADC branch only), the shortlist
+    * [[graft.operators.Similarity.ivfTopK]].
+    *
+    * @param shortlistSink when set (ADC branch only), the shortlist
     *   (query_id, vec_id) is eagerly staged to this parquet path and the
     *   refine consumes the read-back — the DuckDB oracle then re-derives
     *   the exact-cosine re-rank from the index's own stored vectors plus

@@ -93,8 +93,14 @@ class BpeSpec extends SparkSuite {
     val ref = refTrain(corpus, 10)
     assert(train(corpus, 10) == ref)
     val dir = java.nio.file.Files.createTempDirectory("bpe-stg").toString
-    try assert(train(corpus, 10, Some(dir)) == ref)
-    finally {
+    try {
+      assert(train(corpus, 10, Some(dir)) == ref)
+      // the round-0 vocab and every merge round share one lineage cut:
+      // only the final round's table remains
+      val vocabs = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.startsWith("bpe_vocab_")).toSeq
+      assert(vocabs.size == 1, vocabs.mkString(","))
+    } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       ()
     }

@@ -94,6 +94,11 @@ class GraphSpec extends SparkSuite {
     }
   }
 
+  /** Staged tables under `dir` whose name starts with `name_`. */
+  private def tables(dir: String, name: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith(name + "_")).toSeq
+
   private def incCC(prev: Map[Long, Long], delta: Seq[(Long, Long)],
       dir: Option[String] = None): Map[Long, Long] =
     Graph.incrementalCC(prev.toSeq.toDF("id", "component"),
@@ -313,6 +318,8 @@ class GraphSpec extends SparkSuite {
       .createTempDirectory("kcore-stg").toString) { d =>
       val (b, convB) = kcore(edges, k = 2, rounds = 2, stagingDir = Some(d))
       assert(b == a && convB == convA)
+      assert(tables(d, "kcore_round").size == 1,
+        s"only the final round's table may remain: ${tables(d, "kcore_round")}")
     }
   }
 
@@ -372,6 +379,8 @@ class GraphSpec extends SparkSuite {
       val staged = Graph.pageRank(edges.toDF("src", "dst"), rounds = 4,
         stagingDir = Some(dir)).as[(Long, Long)].collect().toMap
       assert(staged == pr(edges, rounds = 4))
+      assert(tables(dir, "pr_round").size == 1,
+        s"only the final round's table may remain: ${tables(dir, "pr_round")}")
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
       ()
@@ -454,6 +463,42 @@ class GraphSpec extends SparkSuite {
     assert(got == lpaReference(edges, 3), s"got $got")
     // the two triangles' non-bridge nodes carry distinct communities
     assert(got(1L) == got(2L) && got(11L) == got(12L) && got(1L) != got(11L))
+  }
+
+  test("labelPropagation: stagingDir path yields identical labels") {
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L),
+      (10L, 11L), (11L, 12L), (10L, 12L), (3L, 10L))
+    val dir = java.nio.file.Files.createTempDirectory("graft-lpa-stg").toString
+    try {
+      val staged = Graph.labelPropagation(edges.toDF("id_a", "id_b"), rounds = 3,
+        stagingDir = Some(dir)).as[(Long, Long)].collect().toMap
+      assert(staged == Graph.labelPropagation(edges.toDF("id_a", "id_b"), rounds = 3)
+        .as[(Long, Long)].collect().toMap)
+      assert(staged == lpaReference(edges, 3))
+      assert(tables(dir, "lpa_round").size == 1,
+        s"only the final round's table may remain: ${tables(dir, "lpa_round")}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      ()
+    }
+  }
+
+  test("personalizedPageRank: stagingDir path yields identical ranks") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (5L, 1L))
+    val seeds = Seq(1L, 5L).toDF("id")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ppr-stg").toString
+    try {
+      val staged = Graph.personalizedPageRank(edges.toDF("src", "dst"), seeds,
+        rounds = 4, stagingDir = Some(dir)).as[(Long, Long)].collect().toMap
+      assert(staged == Graph.personalizedPageRank(edges.toDF("src", "dst"), seeds,
+        rounds = 4).as[(Long, Long)].collect().toMap)
+      assert(staged == pprReference(edges, Set(1L, 5L), 4))
+      assert(tables(dir, "ppr_round").size == 1,
+        s"only the final round's table may remain: ${tables(dir, "ppr_round")}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      ()
+    }
   }
 
   test("personalizedPageRank: all-nodes seeding == uniform pageRank; mass follows seeds") {

@@ -148,6 +148,38 @@ class StagingSpec extends SparkSuite {
     }
   }
 
+  test("Rounds without a dir: the relation is already checkpointed on return") {
+    val obs = org.apache.spark.sql.Observation()
+    val cut = new Staging.Rounds(None, "r")
+    val df = cut(Seq(1L, 2L, 3L).toDF("x").observe(obs, sum($"x").as("s")))
+    val rdds = df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+    assert(rdds.nonEmpty && rdds.forall(_.isCheckpointed),
+      "the in-memory leg must be an eager local checkpoint")
+    // the checkpoint's own job fills an Observation on its input
+    // (connectedComponents reads its convergence signature this way)
+    assert(Await.result(Future(obs.get), 60.seconds)("s") == 6L)
+    assert(df.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("Rounds with a dir: only the last table remains; retire drops it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stg-rounds").toString
+    try {
+      val cut = new Staging.Rounds(Some(dir), "r")
+      val last = (1 to 3).map(i => cut(Seq(i).toDF("x"))).last
+      def tables = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.startsWith("r_")).toSeq
+      assert(tables.size == 1, tables.mkString(","))
+      assert(last.as[Int].collect().toSeq == Seq(3))
+      cut.retire()
+      assert(tables.isEmpty, tables.mkString(","))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      ()
+    }
+  }
+
   test("drop removes a staged table") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stg-drop").toString
     try {

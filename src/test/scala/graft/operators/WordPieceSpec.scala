@@ -141,6 +141,27 @@ class WordPieceSpec extends SparkSuite {
     assert((twice._1(0).getString(1), twice._1(0).getString(2)) == ("a", "##b"))
   }
 
+  test("stagingDir path learns identical rules; only the final round's table remains") {
+    val rnd = new scala.util.Random(5)
+    val words = Seq("alpha", "beta", "gamma", "delta", "aab", "abab", "bb")
+    val c = corpus((1 to 30).map(_ =>
+      (1 to 6).map(_ => words(rnd.nextInt(words.length))).mkString(" ")): _*)
+    val expect = WordPiece.train(c, merges = 8).collect().toSeq.map(_.toString)
+    assert(expect.size == 8)
+    val dir = java.nio.file.Files.createTempDirectory("wp-stg").toString
+    try {
+      val staged = WordPiece.train(c, merges = 8, stagingDir = Some(dir))
+        .collect().toSeq.map(_.toString)
+      assert(staged == expect)
+      val vocabs = new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.startsWith("wp_vocab_")).toSeq
+      assert(vocabs.size == 1, vocabs.mkString(","))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      ()
+    }
+  }
+
   test("tokenize default cap derives from the vocab: a >16-char learned piece still matches") {
     // a fixed default cap of 16 would make greedy longest-match skip this
     // piece silently (the r17 advisory) — the derived default must not
