@@ -76,6 +76,12 @@ object WeatherOps {
 
   // ---- M1: parse + geohash re-key (WeatherHotelsApp.java:68-88) ----------
 
+  /** A strictly typed reading the pipeline keeps: a date and both numeric
+    * temperatures (a missing or non-numeric one parses to null). */
+  private val parsedReading: Column =
+    col("w.wthr_date").isNotNull && col("w.avg_tmpr_f").isNotNull &&
+      col("w.avg_tmpr_c").isNotNull
+
   /** Parse raw weather JSON and key by `geohash4(lat,lng)` + date.
     *
     * `lenient = true` mirrors the reference's Jackson `doubleValue()` → 0.0
@@ -87,7 +93,9 @@ object WeatherOps {
     * (WeatherStreamsTest.java:206-214). `false` uses straight `from_json`
     * typing. A line that is not a JSON object, or has no `wthr_date`, is
     * dropped, matching the reference's catch-and-null mapper
-    * (WeatherHotelsApp.java:83-86).
+    * (WeatherHotelsApp.java:83-86); under strict typing so is a line
+    * lacking a numeric `avg_tmpr_f` or `avg_tmpr_c` (the reference's
+    * `node.get(..)` is null there and `doubleValue()` throws).
     *
     * Scale: narrow transform, no shuffle; the derived `key` becomes the
     * shuffle key of the downstream aggregation — same manual key-derivation
@@ -99,7 +107,7 @@ object WeatherOps {
     def fld(name: String, typed: Column): Column =
       if (lenient) jsonDoubleLenient(v, name) else typed
     parseOnce(raw, valueCol, weatherSchema)
-      .filter(col("w.wthr_date").isNotNull)
+      .filter(if (lenient) col("w.wthr_date").isNotNull else parsedReading)
       .select(
         geohash(fld("lat", col("w.lat")), fld("lng", col("w.lng")), 4).as("hash"),
         col("w.wthr_date").as("wthr_date"),
@@ -116,7 +124,7 @@ object WeatherOps {
     * false side to a quarantine sink. One pass, no shuffle. */
   def parseWeatherWithRejects(raw: DataFrame, valueCol: String = "value"): DataFrame =
     parseOnce(raw, valueCol, weatherSchema)
-      .withColumn("ok", col("w.wthr_date").isNotNull)
+      .withColumn("ok", parsedReading)
       .select(
         col("ok"),
         col(valueCol).as("raw"),
@@ -200,10 +208,16 @@ object WeatherOps {
     * Scale: list size = distinct dates per cell — bounded by the calendar,
     * not the data volume; safe. For truly unbounded keys use the windowed
     * variant in streaming.WeatherStreams.
+    *
+    * The daily rows are few bytes but much CPU per byte (`collect_list`
+    * buffers, sort), so they are exchanged on the key at the session's
+    * shuffle-partition count, which AQE does not coalesce into one task;
+    * partial and final `collect_list` then run in one stage on every core.
     */
   def cellHistory(daily: DataFrame, keyCol: String = "key",
       dateCol: String = "wthr_date"): DataFrame =
-    daily.groupBy(col(keyCol))
+    daily.repartition(daily.sparkSession.sessionState.conf.numShufflePartitions, col(keyCol))
+      .groupBy(col(keyCol))
       .agg(sort_array(collect_list(struct(
         col(dateCol).as("date"),
         col("avg_tmp_f").as("tmp_f"),

@@ -138,9 +138,6 @@ object WeatherStreams {
     // serialized at every partial-agg output and deserialized at every
     // merge; kryo pays object-graph walking + buffer allocation per trip,
     // the Tungsten map format is a flat binary copy. Same Map semantics.
-    // COMPAT: this changes the streaming state schema (binary kryo blob →
-    // MapType) — checkpoints written by the kryo build cannot be restored;
-    // start from a fresh checkpointLocation after upgrading.
     override def bufferEncoder: Encoder[CellBuf] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[CellBuf]()
     override def outputEncoder: Encoder[Seq[Weather]] =

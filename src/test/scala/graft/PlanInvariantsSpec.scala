@@ -743,39 +743,127 @@ class PlanInvariantsSpec extends SparkSuite {
       s"the query side must broadcast:\n${bq.take(2000)}")
   }
 
+  // ---- the reference composition (WeatherOpsSpec E2E), keyed by the cell ----
+
+  /** A file scan of `json`, not a local relation the optimizer would fold away. */
+  private def jsonLines(name: String, json: String): org.apache.spark.sql.DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(name)
+    java.nio.file.Files.writeString(dir.resolve("part.jsonl"), json)
+    graft.sources.Sources.rawLines(spark, dir.toString)
+  }
+
+  private def topology(weather: org.apache.spark.sql.DataFrame,
+      hotels: org.apache.spark.sql.DataFrame, lenient: Boolean = false) = {
+    import graft.operators.WeatherOps
+    WeatherOps.enrich(
+      WeatherOps.parseAddress(hotels),
+      WeatherOps.cellHistory(WeatherOps.dailyAverage(
+        WeatherOps.parseWeather(weather, lenient = lenient), keyCols = Seq("hash")),
+        keyCol = "hash").withColumnRenamed("hash", "key"))
+  }
+
   test("weather/hotel parsers: one from_json per parsed input after optimization") {
     import graft.operators.WeatherOps
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.expressions.JsonToStructs
     import org.apache.spark.sql.functions.col
-    // a file scan, not a local relation the optimizer would fold away
-    def lines(name: String, json: String): DataFrame = {
-      val dir = java.nio.file.Files.createTempDirectory(name)
-      java.nio.file.Files.writeString(dir.resolve("part.jsonl"), json)
-      graft.sources.Sources.rawLines(spark, dir.toString)
-    }
-    val weather = lines("parse-once-w",
+    val weather = jsonLines("parse-once-w",
       """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}""")
-    val hotels = lines("parse-once-h",
+    val hotels = jsonLines("parse-once-h",
       """{"Hash":"dp01","Country":"US","City":"c","Address":"a","Name":"n","Id":"1"}""")
-    // the reference composition (WeatherOpsSpec E2E), keyed by the cell
-    def topology(lenient: Boolean): DataFrame = WeatherOps.enrich(
-      WeatherOps.parseAddress(hotels),
-      WeatherOps.cellHistory(WeatherOps.dailyAverage(
-        WeatherOps.parseWeather(weather, lenient = lenient), keyCols = Seq("hash")),
-        keyCol = "hash").withColumnRenamed("hash", "key"))
     // each from_json left in the optimized plan tokenizes every record again
     def parses(df: DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case n =>
         n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum }.sum
     Seq(
-      ("topology", topology(lenient = false), 2),
-      ("topology lenient", topology(lenient = true), 2),
+      ("topology", topology(weather, hotels), 2),
+      ("topology lenient", topology(weather, hotels, lenient = true), 2),
       ("q_s2_roundtrip", SparkEntry.queries("q_s2_roundtrip")(spark, sf0001), 1),
       ("rejects ok side", WeatherOps.parseWeatherWithRejects(weather).filter(col("ok")), 1)
     ).foreach { case (name, df, inputs) =>
       assert(parses(df) == inputs,
         s"$name: one from_json per parsed input\n${df.queryExecution.optimizedPlan}")
     }
+  }
+
+  test("cell history: one uncoalesced exchange on the cell, then partial + final collect_list on every partition") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, CollectList, Final, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val stations = Seq((39.6467, -89.8455), (35.7395, -78.3249), (36.3367, -77.113),
+      (39.2336, -108.67), (36.9639, -85.3242), (51.5131, -0.1779))
+    val weather = jsonLines("history-w", stations.zipWithIndex.flatMap { case ((lat, lng), i) =>
+      (1 to 3).map(d => s"""{"avg_tmpr_c":${i + d}.5,"avg_tmpr_f":${40 + i + d}.5,"lat":$lat,"lng":$lng,"wthr_date":"2020-01-0$d"}""")
+    }.mkString("\n"))
+    val hotels = jsonLines("history-h",
+      """{"Hash":"dp01","Country":"US","City":"c","Address":"a","Name":"n","Id":"1"}""")
+    val parts = spark.sessionState.conf.numShufflePartitions
+
+    // the write's final adaptive plan, and the task count of every stage
+    // whose tasks updated a given SQL metric
+    val executed = new java.util.concurrent.atomic.AtomicReference[SparkPlan]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        executed.set(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val metricStages = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+    val taskListener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.foreach(a => metricStages.add(a.id -> e.stageId))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stageTasks.put(e.stageInfo.stageId, e.stageInfo.numTasks); ()
+      }
+    }
+    spark.listenerManager.register(qeListener)
+    spark.sparkContext.addSparkListener(taskListener)
+    try topology(weather, hotels).write.format("noop").mode("overwrite").save()
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(taskListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    val plan = Option(executed.get).getOrElse(fail("the noop write reported no plan"))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val shown = plan.toString
+    assert(shown.contains("isFinalPlan=true"), shown)
+
+    val hashExchanges = aqe.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashExchanges.size == 2, s"the (cell, date) and the cell exchange only:\n$shown")
+    val onCell = hashExchanges.filter(e => e.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), n) => a.name == "hash" && n == parts
+      case _ => false
+    })
+    assert(onCell.size == 1 && onCell.head.shuffleOrigin == REPARTITION_BY_NUM,
+      s"the cell exchange is hashpartitioning(hash, $parts), REPARTITION_BY_NUM:\n$shown")
+    val broadcasts = aqe.collect(plan) { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.size == 1 && broadcasts.head.output.exists(_.name == "country"),
+      s"the hotels broadcast:\n$shown")
+
+    def collectLists(p: SparkPlan, mode: AggregateMode) =
+      aqe.collect(p) {
+        case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+          e.mode == mode && e.aggregateFunction.isInstanceOf[CollectList]) => a
+      }
+    val belowExchange = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+      .flatMap(e => collectLists(e.child, Partial))
+    assert(belowExchange.isEmpty, s"no partial_collect_list below an exchange:\n$shown")
+
+    val finals = collectLists(plan, Final)
+    assert(finals.size == 1, shown)
+    val outRows = finals.head.metrics("numOutputRows").id
+    val stages = metricStages.toArray(Array.empty[(Long, Int)]).collect { case (`outRows`, s) => s }.distinct
+    assert(stages.nonEmpty && stages.forall(s => stageTasks.get(s) == parts),
+      s"the collect_list stage runs $parts tasks: ${stages.map(s => s -> stageTasks.get(s)).mkString(", ")}")
   }
 }

@@ -81,24 +81,32 @@ class WeatherOpsSpec extends SparkSuite {
     val bad = Seq("null", "[]", "123", "\"s\"", "{}",
       """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6""",
       """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":null}""")
-    val lines = Seq(good, stringLat) ++ bad
+    // a date but no numeric temperature: strict typing parses it to null
+    val noTemp = Seq(
+      """{"lat":39.6467,"lng":-89.8455,"wthr_date":"2020-01-02"}""",
+      """{"avg_tmpr_c":2.0,"avg_tmpr_f":"x","lat":39.6467,"lng":-89.8455,"wthr_date":"2020-01-03"}""")
+    val lines = Seq(good, stringLat) ++ bad ++ noTemp
     val raw = lines.toDF("value")
     def cells(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
       df.select("hash", "wthr_date").as[(String, String)].collect().toSet
 
     // strict typing: a string-typed lat nulls that field alone, so the
-    // reading survives without a cell; every bad line is dropped
+    // reading survives without a cell; every bad line is dropped, and so is
+    // a reading without both temperatures (the reference's doubleValue()
+    // on a missing node throws inside its catch-and-null mapper)
     assert(cells(WeatherOps.parseWeather(raw)) ==
       Set(("dp01", "2017-08-29"), (null, "2017-08-30")))
-    // lenient: the string lat coerces to 0.0 (Jackson doubleValue)
+    // lenient: the string lat coerces to 0.0 (Jackson doubleValue), and so
+    // do the missing or non-numeric temperatures
     assert(cells(WeatherOps.parseWeather(raw, lenient = true)) == Set(
-      ("dp01", "2017-08-29"), (Geohash.encode(0.0, -89.8455, 4), "2017-08-30")))
+      ("dp01", "2017-08-29"), (Geohash.encode(0.0, -89.8455, 4), "2017-08-30"),
+      ("dp01", "2020-01-02"), ("dp01", "2020-01-03")))
     // dead-letter channel: one row per line, the raw line kept verbatim,
-    // and the rejects are exactly the lines the other two paths drop
+    // and the rejects are exactly the lines the strict path drops
     val tagged = WeatherOps.parseWeatherWithRejects(raw)
       .select("ok", "raw").as[(Boolean, String)].collect().toSeq
     assert(tagged.map(_._2).sorted == lines.sorted)
-    assert(tagged.filterNot(_._1).map(_._2).sorted == bad.sorted)
+    assert(tagged.filterNot(_._1).map(_._2).sorted == (bad ++ noTemp).sorted)
 
     val address = """{"Hash":"dp01","Country":"US","City":"c","Address":"a","Name":"n","Id":"1"}"""
     val noHash = """{"Country":"US","City":"c","Address":"a","Name":"n","Id":"2"}"""
@@ -187,6 +195,50 @@ class WeatherOpsSpec extends SparkSuite {
     val weathers = row.getSeq[Row](6).map(r =>
       (r.getAs[String]("date"), r.getAs[Double]("tmp_f"), r.getAs[Double]("tmp_c")))
     assert(weathers == Seq(("2020-01-01", 71.0, 31.0), ("2020-01-02", 72.0, 32.0)))
+  }
+
+  test("E2E exact: rows and every weather_list bit are independent of partitioning and AQE") {
+    val rnd = new scala.util.Random(11)
+    val stations = Seq.fill(40)((rnd.nextInt(1800) / 10.0 - 90, rnd.nextInt(3600) / 10.0 - 180))
+    val weather = Seq.fill(3000) {
+      val (lat, lng) = stations(rnd.nextInt(stations.length))
+      f"""{"lat":$lat,"lng":$lng,"wthr_date":"2020-01-${1 + rnd.nextInt(20)}%02d",""" +
+        f""""avg_tmpr_f":${rnd.nextInt(1200) / 10.0 - 20}%.1f,"avg_tmpr_c":${rnd.nextInt(700) / 10.0 - 30}%.1f}"""
+    }
+    val hotels = stations.zipWithIndex.map { case ((lat, lng), i) =>
+      s"""{"Hash":"${Geohash.encode(lat, lng, 4)}","Country":"US","City":"c","Address":"a","Name":"n","Id":"$i"}"""
+    }
+    // several input partitions, so the partial aggregates merge across them
+    def lines(ls: Seq[String]) = spark.sparkContext.parallelize(ls, 5).toDF("value")
+    def run(): Seq[(String, String, Seq[(String, Long, Long)])] = {
+      val history = WeatherOps.cellHistory(WeatherOps.dailyAverage(
+        WeatherOps.parseWeather(lines(weather)), keyCols = Seq("hash"), exact = true),
+        keyCol = "hash").withColumnRenamed("hash", "key")
+      WeatherOps.enrich(WeatherOps.parseAddress(lines(hotels)), history)
+        .select($"key", $"id", $"weather_list").collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getSeq[Row](2).map(w => (w.getAs[String]("date"),
+          java.lang.Double.doubleToRawLongBits(w.getAs[Double]("tmp_f")),
+          java.lang.Double.doubleToRawLongBits(w.getAs[Double]("tmp_c"))))))
+        .sortBy(_._2)
+    }
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      val runs = Seq("1", "3", "7").map { p =>
+        spark.conf.set("spark.sql.shuffle.partitions", p)
+        s"$p shuffle partitions" -> run()
+      } :+ {
+        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        "AQE off" -> run()
+      }
+      val (_, base) = runs.head
+      assert(base.length == hotels.length && base.forall(_._3.nonEmpty))
+      runs.tail.foreach { case (name, rows) => assert(rows == base, s"$name differs from ${runs.head._1}") }
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   test("E2E inner-join semantics: addresses with no weather are dropped") {

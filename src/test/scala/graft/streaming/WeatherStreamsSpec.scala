@@ -88,14 +88,18 @@ class WeatherStreamsSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     val stations = Seq((39.6467, -89.8455), (35.7395, -78.3249), (51.5131074, -0.1778707))
     val malformed = Seq("not json", "{}", "[]", "null", """{"lat":1.0,"lng":""",
-      """{"lat":1.0,"lng":2.0,"wthr_date":null}""")
-    // five micro-batches; cells and dates recur across batch boundaries
+      """{"lat":1.0,"lng":2.0,"wthr_date":null}""",
+      // a date but no numeric temperature
+      """{"lat":39.6467,"lng":-89.8455,"wthr_date":"2020-01-02"}""",
+      """{"lat":39.6467,"lng":-89.8455,"wthr_date":"2020-01-02","avg_tmpr_f":"x","avg_tmpr_c":1.0}""")
+    // five micro-batches; cells and dates recur across batch boundaries, and
+    // every malformed line lands in some batch
     val batches = (0 until 5).map { b =>
       (0 until 12).map { i =>
         val (lat, lng) = stations((b + i) % stations.length)
         f"""{"lat":$lat,"lng":$lng,"wthr_date":"2020-01-0${1 + i % 3}",""" +
           f""""avg_tmpr_f":${50 + b * 1.5 + i}%.1f,"avg_tmpr_c":${10 - b * 0.5 + i}%.1f}"""
-      } :+ malformed(b) :+ malformed((b + 1) % malformed.length)
+      } ++ malformed.indices.filter(_ % 5 == b).map(malformed)
     }
     val in = MemoryStream[String]
     val q = WeatherStreams.cellHistoryStream(
