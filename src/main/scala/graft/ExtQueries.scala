@@ -100,16 +100,39 @@ object ExtQueries {
       when(col("doc_id") % 4 === 0, lit("#sec")).otherwise(lit("")))
   }
 
-  /** Shared by q_video_frames and its streamed twin
-    * q_video_ingest_replay: per-frame channel sums re-derived from the
-    * closed-form rgb24 rule (one derivation, two faces). */
-  private val videoFramesOracleSql: String =
-    """WITH p AS (SELECT doc_id,
+  /** The media faces' doc-id subset (`doc_id % 5 = 0`): codec cost is
+    * per payload, and these faces gate the decode path, not the scan. */
+  private def mediaIds(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).filter(col("doc_id") % 5 === 0).select(col("doc_id"))
+
+  /** [[mediaIds]] as the oracle's FROM clause. */
+  private val mediaIdsSql = "FROM documents WHERE doc_id % 5 = 0"
+
+  /** The rgb24 clip CTE `p` of the video oracles: width, height, frame
+    * count and seed per doc, from `Video.attachAvi`'s id rule. */
+  private val videoClipCte: String =
+    s"""WITH p AS (SELECT doc_id,
       |    CAST(doc_id % 8 + 4 AS INT) w,
       |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
       |    CAST(doc_id % 4 + 2 AS INT) nf,
       |    CAST(doc_id % 256 AS INT) s
-      |  FROM documents WHERE doc_id % 5 = 0),
+      |  $mediaIdsSql),""".stripMargin
+
+  /** Every id of `ids` as a REAL container, the class by `doc_id mod 5`:
+    * PNG, JPEG, GIF, WAV, rgb24 AVI. */
+  private def mimeMix(ids: DataFrame): DataFrame =
+    Multimodal.attachPng(ids.filter(col("doc_id") % 5 === 0))
+      .unionByName(Multimodal.attachJpeg(ids.filter(col("doc_id") % 5 === 1)))
+      .unionByName(Multimodal.attachGif(ids.filter(col("doc_id") % 5 === 2)))
+      .unionByName(Multimodal.attachWav(ids.filter(col("doc_id") % 5 === 3)))
+      .unionByName(Video.attachAvi(ids.filter(col("doc_id") % 5 === 4),
+        _ => Video.CodecRgb))
+
+  /** Shared by q_video_frames and its streamed twin
+    * q_video_ingest_replay: per-frame channel sums re-derived from the
+    * closed-form rgb24 rule (one derivation, two faces). */
+  private val videoFramesOracleSql: String =
+    s"""$videoClipCte
       |fr AS (SELECT doc_id, w, h, s, gf.f
       |  FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf),
       |px AS (SELECT doc_id, w, h, f,
@@ -1789,8 +1812,7 @@ object ExtQueries {
     * q_media_decode's closed-form oracle verbatim. */
   private val mediaReplayFixture = fixtures.rooted("media_replay") { (s, dir, root) =>
     import s.implicits._
-    val ids = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id")).as[Long].collect()
+    val ids = mediaIds(s, dir).as[Long].collect()
     replay(s, ids.sortBy(id => scrambleKey(id, id)), Nil) { ds =>
       appendSink(root, "features")(
         Multimodal.decodeFeatures(Multimodal.attachPng(ds.toDF("doc_id"))))
@@ -1984,26 +2006,13 @@ object ExtQueries {
     * the crawl-reality audit input: server-claimed type vs what the
     * bytes actually are. Binary render via [[warcRecBytes]]. */
   private val warcMimeFixture = fixtures.rooted("warc_mime") { (s, dir, root) =>
-    val ids = Tables.documents(s, dir).select(col("doc_id"))
-    val all = Multimodal.attachPng(ids.filter(col("doc_id") % 5 === 0))
-      .unionByName(Multimodal.attachJpeg(ids.filter(col("doc_id") % 5 === 1)))
-      .unionByName(Multimodal.attachGif(ids.filter(col("doc_id") % 5 === 2)))
-      .unionByName(Multimodal.attachWav(ids.filter(col("doc_id") % 5 === 3)))
-      .unionByName(Video.attachAvi(ids.filter(col("doc_id") % 5 === 4),
-        _ => Video.CodecRgb))
-    val rows = all.select(col("doc_id"), col("media.payload"))
+    val rows = mimeMix(Tables.documents(s, dir).select(col("doc_id")))
+      .select(col("doc_id"), col("media.payload"), col("media.meta.mime"))
       .orderBy(col("doc_id")).collect()
     val out = new java.io.ByteArrayOutputStream()
     rows.foreach { r =>
       val id = r.getLong(0)
-      val mime = (id % 5) match {
-        case 0 => "image/png"
-        case 1 => "image/jpeg"
-        case 2 => "image/gif"
-        case 3 => "audio/wav"
-        case _ => "video/x-msvideo"
-      }
-      val claimed = if (id % 2 == 0) mime else "text/html"
+      val claimed = if (id % 2 == 0) r.getString(2) else "text/html"
       warcRecBytes(out, s"http://m.example.com/p/$id",
         Seq(s"Content-Type: $claimed"), r.getAs[Array[Byte]](1))
     }
@@ -2348,8 +2357,7 @@ object ExtQueries {
     * batch face's closed-form oracle verbatim. */
   private val videoReplayFixture = fixtures.rooted("video_replay") { (s, dir, root) =>
     import s.implicits._
-    val ids = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id")).as[Long].collect()
+    val ids = mediaIds(s, dir).as[Long].collect()
     replay(s, ids.sortBy(id => scrambleKey(id, id)), Nil) { ds =>
       appendSink(root, "frames")(Video.decodeFrames(
         Video.attachAvi(ds.toDF("doc_id"), _ => Video.CodecRgb)))
@@ -8127,12 +8135,7 @@ object ExtQueries {
     // the oracle states both columns from the id rule alone
     Face("q_mime_sniff", (s, dir) => {
       val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val all = Multimodal.attachPng(ids.filter(col("doc_id") % 5 === 0))
-        .unionByName(Multimodal.attachJpeg(ids.filter(col("doc_id") % 5 === 1)))
-        .unionByName(Multimodal.attachGif(ids.filter(col("doc_id") % 5 === 2)))
-        .unionByName(Multimodal.attachWav(ids.filter(col("doc_id") % 5 === 3)))
-        .unionByName(Video.attachAvi(ids.filter(col("doc_id") % 5 === 4),
-          _ => Video.CodecRgb))
+      val all = mimeMix(ids)
       val sniffed = Multimodal.sniffMime(col("media.payload"))
       all.select(col("doc_id"), sniffed.as("mime_sniffed"),
           (sniffed === col("media.meta.mime")).as("meta_agrees"))
@@ -8160,9 +8163,7 @@ object ExtQueries {
     // face's job is gating the decode path, not scanning every doc
     Face("q_media_decode", (s, dir) =>
       Multimodal.decodeFeatures(
-        Multimodal.attachPng(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id"))))
+        Multimodal.attachPng(mediaIds(s, dir)))
         .orderBy(col("doc_id")),
       // REAL decode gate: the engine's width/height/px_sum come from
       // javax.imageio DECODING a real PNG; this recomputes them from the
@@ -8181,9 +8182,7 @@ object ExtQueries {
     // Same doc_id % 5 subset as q_media_decode
     Face("q_media_jpeg", (s, dir) =>
       Multimodal.decodeDeviation(
-          Multimodal.attachJpeg(
-            Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-              .select(col("doc_id"))),
+          Multimodal.attachJpeg(mediaIds(s, dir)),
           (id, w, h, x, y) =>
             Multimodal.gradientRgb((id % 256).toInt, w, h, x, y))
         .select(col("doc_id"), col("width"), col("height"),
@@ -8195,11 +8194,11 @@ object ExtQueries {
       // bound of the closed-form gradient rule — a lossy container cannot
       // be px_sum-gated, so the oracle pins the contract booleans + dims
       // (the q_approx_distinct contract-gate pattern)
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  CAST(doc_id % 16 + 4 AS INT) AS width,
         |  CAST((doc_id * 7) % 16 + 4 AS INT) AS height,
         |  true AS within_tol
-        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin),
+        |$mediaIdsSql ORDER BY doc_id""".stripMargin),
 
     // the LOSSY decode→transform→re-encode loop (the q_media_resize_real
     // twin on a lossy container): JPEG decode → integer-exact NN resize
@@ -8210,9 +8209,7 @@ object ExtQueries {
     Face("q_media_jpeg_resize", (s, dir) =>
       Multimodal.decodeDeviation(
           Multimodal.resizeImage(
-            Multimodal.attachJpeg(
-              Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-                .select(col("doc_id"))),
+            Multimodal.attachJpeg(mediaIds(s, dir)),
             newWidth = 12, newHeight = 10, format = "jpeg"),
           (id, w, h, x, y) => {
             val w0 = (id % 16 + 4).toInt
@@ -8225,8 +8222,8 @@ object ExtQueries {
         .orderBy(col("doc_id")),
       // the lossy resize loop lands on the literal target dims + the
       // contract boolean (two codec hops cannot be px_sum-gated)
-      """SELECT doc_id, 12 AS width, 10 AS height, true AS within_tol
-        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin),
+      s"""SELECT doc_id, 12 AS width, 10 AS height, true AS within_tol
+        |$mediaIdsSql ORDER BY doc_id""".stripMargin),
 
     // REAL decode → transform → decode loop: nearest-neighbor resize on
     // the DECODED raster (out(x,y) = in(x·w0 div W, y·h0 div H), an
@@ -8238,19 +8235,17 @@ object ExtQueries {
     Face("q_media_resize_real", (s, dir) =>
       Multimodal.decodeFeatures(
         Multimodal.resizeImage(
-          Multimodal.attachPng(
-            Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-              .select(col("doc_id"))),
+          Multimodal.attachPng(mediaIds(s, dir)),
           newWidth = 8, newHeight = 6))
         .orderBy(col("doc_id")),
       // resized checksum from the source rule + the nearest-neighbor index
       // mapping sx = x*w0 // 8, sy = y*h0 // 6 (integer division, exactly
       // the engine's explicit loop): v at the SAMPLED source coordinate
-      """WITH p AS (SELECT doc_id,
+      s"""WITH p AS (SELECT doc_id,
         |    CAST(doc_id % 16 + 4 AS INT) w0,
         |    CAST((doc_id * 7) % 16 + 4 AS INT) h0,
         |    CAST(doc_id % 256 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
+        |  $mediaIdsSql),
         |m AS (SELECT doc_id, s,
         |    (gx.x * w0) // 8 AS sx, (gy.y * h0) // 6 AS sy
         |  FROM p, generate_series(0, 7) gx(x), generate_series(0, 5) gy(y)),
@@ -8268,16 +8263,14 @@ object ExtQueries {
     // recomputes all of it from the rule (PCM WAV is lossless)
     Face("q_audio_decode", (s, dir) =>
       Multimodal.decodeAudioFeatures(
-        Multimodal.attachWav(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id"))))
+        Multimodal.attachWav(mediaIds(s, dir)))
         .orderBy(col("doc_id")),
       // decoded PCM format + sample sum from the closed-form audio rule:
       // n = id%64+16 samples of s_i = ((id%1000 + 7i) mod 65536) − 32768
-      """WITH p AS (SELECT doc_id,
+      s"""WITH p AS (SELECT doc_id,
         |    CAST(doc_id % 64 + 16 AS BIGINT) n,
         |    CAST(doc_id % 1000 AS BIGINT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
+        |  $mediaIdsSql),
         |sm AS (SELECT doc_id, n,
         |    CAST(sum(((s + 7 * gi.i) % 65536) - 32768) AS BIGINT) AS sample_sum
         |  FROM p JOIN generate_series(0, 78) gi(i) ON gi.i < n
@@ -8295,19 +8288,17 @@ object ExtQueries {
     // decoder that drops/reorders/misreads frames diverges
     Face("q_media_frames_real", (s, dir) =>
       Multimodal.decodeFrames(
-        Multimodal.attachGif(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id"))))
+        Multimodal.attachGif(mediaIds(s, dir)))
         .orderBy(col("doc_id"), col("frame_idx")),
       // per-frame level sums from the closed-form GIF rule: frame count
       // nf = id%3+2, dims w = id%8+4 / h = id·3%8+4, level(x,y,f) =
       // (s+x+2y+3f) mod 8 — the bounded series cover every dim/frame
-      """WITH p AS (SELECT doc_id,
+      s"""WITH p AS (SELECT doc_id,
         |    CAST(doc_id % 8 + 4 AS INT) w,
         |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
         |    CAST(doc_id % 3 + 2 AS INT) nf,
         |    CAST(doc_id % 8 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
+        |  $mediaIdsSql),
         |fr AS (SELECT doc_id, w, h, s, gf.f
         |  FROM p JOIN generate_series(0, 3) gf(f) ON gf.f < nf),
         |px AS (SELECT doc_id, w, h, f,
@@ -8337,9 +8328,7 @@ object ExtQueries {
     // the id-parity codec mix makes the face gate BOTH demux paths
     Face("q_video_meta", (s, dir) =>
       Video.decodeMeta(
-        Video.attachAvi(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id")),
+        Video.attachAvi(mediaIds(s, dir),
           id => if (id % 2 == 0) Video.CodecRgb else Video.CodecMjpeg))
         .orderBy(col("doc_id")),
       // AVI demux gate: every engine column is a header word parsed from
@@ -8348,14 +8337,14 @@ object ExtQueries {
       // fps = 20000 + (id%7)·5000, codec by id parity) — a demux that
       // echoes attach-side metadata instead of reading the RIFF tree
       // cannot diverge here, but one that misreads ANY word does
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  CAST(doc_id % 8 + 4 AS INT) AS width,
         |  CAST((doc_id * 3) % 8 + 4 AS INT) AS height,
         |  CAST(doc_id % 4 + 2 AS INT) AS n_frames,
         |  CAST(doc_id % 4 + 2 AS INT) AS movi_frames,
         |  CAST(20000 + (doc_id % 7) * 5000 AS BIGINT) AS fps_micros,
         |  CASE WHEN doc_id % 2 = 0 THEN 'rgb24' ELSE 'mjpeg' END AS codec
-        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin),
+        |$mediaIdsSql ORDER BY doc_id""".stripMargin),
 
     // REAL video frame decode on the lossless rgb24 codec: per-frame
     // channel sums from the DECODED raster (explicit bottom-up BGR DIB
@@ -8363,10 +8352,7 @@ object ExtQueries {
     // the closed-form frame rule — the q_media_frames_real gate shape
     Face("q_video_frames", (s, dir) =>
       Video.decodeFrames(
-        Video.attachAvi(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id")),
-          _ => Video.CodecRgb))
+        Video.attachAvi(mediaIds(s, dir), _ => Video.CodecRgb))
         .orderBy(col("doc_id"), col("frame_idx")),
       // per-frame channel sums from the closed-form rgb24 rule
       // r=(s+x+3f)%256, g=(s+y+3f)%256, b=(s+x+y)%256 over w = id%8+4,
@@ -8380,20 +8366,12 @@ object ExtQueries {
     // corpus sampled 1-in-N ships 1/N of the rows downstream)
     Face("q_video_sample", (s, dir) =>
       Video.decodeFrames(
-        Video.attachAvi(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id")),
-          _ => Video.CodecRgb),
+        Video.attachAvi(mediaIds(s, dir), _ => Video.CodecRgb),
         stride = 2)
         .orderBy(col("doc_id"), col("frame_idx")),
       // the stride-2 temporal sample: identical rule, only even movi
       // ordinals survive — re-derived by the same series with f%2=0
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 8 + 4 AS INT) w,
-        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
-        |    CAST(doc_id % 4 + 2 AS INT) nf,
-        |    CAST(doc_id % 256 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
+      s"""$videoClipCte
         |fr AS (SELECT doc_id, w, h, s, gf.f
         |  FROM p JOIN generate_series(0, 5) gf(f)
         |    ON gf.f < nf AND gf.f % 2 = 0),
@@ -8415,10 +8393,7 @@ object ExtQueries {
     // the rule's blue channel varies with the frame ordinal
     Face("q_video_mjpeg", (s, dir) =>
       Video.decodeDeviation(
-        Video.attachAvi(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id")),
-          _ => Video.CodecMjpeg),
+        Video.attachAvi(mediaIds(s, dir), _ => Video.CodecMjpeg),
         (id, x, y, f) => Video.mjpegRule((id % 256).toInt, x, y, f))
         .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
           (col("max_dev") <= 12).as("within_tol"))
@@ -8428,11 +8403,11 @@ object ExtQueries {
       // certificate that each DECODED frame stayed within the deviation
       // bound of the per-frame gradient rule (lossy container → the
       // q_media_jpeg contract-boolean pattern, one row per frame)
-      """WITH p AS (SELECT doc_id,
+      s"""WITH p AS (SELECT doc_id,
         |    CAST(doc_id % 8 + 4 AS INT) w,
         |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
         |    CAST(doc_id % 4 + 2 AS INT) nf
-        |  FROM documents WHERE doc_id % 5 = 0)
+        |  $mediaIdsSql)
         |SELECT doc_id, CAST(gf.f AS INT) AS frame_idx, w AS width,
         |  h AS height, true AS within_tol
         |FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf
@@ -8456,21 +8431,13 @@ object ExtQueries {
     Face("q_video_resize", (s, dir) =>
       Video.decodeFrames(
         Video.resizeFrames(
-          Video.attachAvi(
-            Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-              .select(col("doc_id")),
-            _ => Video.CodecRgb),
+          Video.attachAvi(mediaIds(s, dir), _ => Video.CodecRgb),
           newWidth = 6, newHeight = 5))
         .orderBy(col("doc_id"), col("frame_idx")),
       // resized sums from the source rule + the nearest-neighbor index
       // mapping sx = x·w0 // 6, sy = y·h0 // 5 (integer division, exactly
       // the engine's explicit loop), per frame — both AVI hops lossless
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 8 + 4 AS INT) w,
-        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
-        |    CAST(doc_id % 4 + 2 AS INT) nf,
-        |    CAST(doc_id % 256 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
+      s"""$videoClipCte
         |fr AS (SELECT doc_id, w, h, s, gf.f
         |  FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf),
         |m AS (SELECT doc_id, s, f,
@@ -8493,10 +8460,7 @@ object ExtQueries {
     // scan stage, the exchange carries one struct per video
     Face("q_video_keyframe", (s, dir) =>
       Video.decodeFrames(
-        Video.attachAvi(
-          Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id")),
-          _ => Video.CodecRgb))
+        Video.attachAvi(mediaIds(s, dir), _ => Video.CodecRgb))
         .groupBy(col("doc_id"))
         .agg(max(struct(col("px_sum"), (-col("frame_idx")).as("nfi"))).as("m"))
         .select(col("doc_id"), (-col("m.nfi")).cast("int").as("frame_idx"),
@@ -8504,12 +8468,7 @@ object ExtQueries {
         .orderBy(col("doc_id")),
       // keyframe arg-max re-derived from the same closed-form frame sums:
       // per video the brightest frame wins, ties to the earliest ordinal
-      """WITH p AS (SELECT doc_id,
-        |    CAST(doc_id % 8 + 4 AS INT) w,
-        |    CAST((doc_id * 3) % 8 + 4 AS INT) h,
-        |    CAST(doc_id % 4 + 2 AS INT) nf,
-        |    CAST(doc_id % 256 AS INT) s
-        |  FROM documents WHERE doc_id % 5 = 0),
+      s"""$videoClipCte
         |fr AS (SELECT doc_id, w, h, s, gf.f
         |  FROM p JOIN generate_series(0, 5) gf(f) ON gf.f < nf),
         |px AS (SELECT doc_id, f,
@@ -8691,11 +8650,11 @@ object ExtQueries {
     * the engine decoded the actual raster. The bounded series (0..18)
     * covers every dim; the x<w / y<h joins scope each doc's pixels. */
   private val mediaDecodeOracleSql: String =
-    """WITH p AS (SELECT doc_id,
+    s"""WITH p AS (SELECT doc_id,
       |    CAST(doc_id % 16 + 4 AS INT) w,
       |    CAST((doc_id * 7) % 16 + 4 AS INT) h,
       |    CAST(doc_id % 256 AS INT) s
-      |  FROM documents WHERE doc_id % 5 = 0),
+      |  $mediaIdsSql),
       |px AS (SELECT doc_id, w, h,
       |    ((s + gx.x) % 256) + ((s + gy.y) % 256) +
       |    ((s + gx.x + gy.y) % 256) AS v

@@ -179,8 +179,8 @@ object ScaleSmoke {
           "sort ta", "group v", "stream f") ++
           (0 until 100000).map(i => f"kw!$i%06d"))),
     // r17: video demux + full-frame decode on the catalog subset —
-    // per-row codec work, batched mapPartitions, nothing shuffles but
-    // the (id, frame, sums) rows; the step ratio must track the video
+    // per-row codec work in one narrow map, nothing shuffles but the
+    // (id, frame, sums) rows; the step ratio must track the video
     // count linearly (payload bytes never leave the scan stage)
     "video_decode" -> ((s: SparkSession, dir: String) =>
       graft.operators.Video.decodeFrames(

@@ -1,12 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import java.awt.image.BufferedImage
+import javax.imageio.ImageIO
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Multimodal-column plumbing (SURVEY.md §2.10): media as opaque `BINARY`
-  * payloads plus typed metadata, with batch-shaped decode/feature-extract.
+  * payloads plus typed metadata, with per-row decode/feature-extract.
   *
   * Since r14 the codecs are REAL, pure-JDK: [[encodePng]]/[[decodeImage]]
   * (javax.imageio PNG), [[resizeImage]] (decode → integer-exact
@@ -21,9 +24,9 @@ import org.apache.spark.sql.types._
   *
   * Shared shape across both paths:
   *  - schema: `media STRUCT<payload BINARY, meta STRUCT<mime, width, height>>`
-  *  - partition-parallel batched execution via `mapPartitions` with an
-  *    explicit batch size (the Scala analog of `mapInPandas`: the decoder
-  *    sees BATCHES, amortizing model/codec init per batch, not per row);
+  *  - every codec kernel is one [[perRow]] map: each row is decoded on its
+  *    own in one narrow stage, the id column keeps its name and type, and
+  *    the same kernel runs in batch and inside a streaming plan;
   *  - feature output lands back in a columnar-friendly flat schema.
   *
   * At 100 TB: payloads dominate row size → keep them out of shuffles
@@ -143,6 +146,106 @@ object Multimodal {
       .drop("media")
   }
 
+  /** The one media kernel: map each row of `in` (id column first) to zero
+    * or more rows of `(idCol, fields…)`. The id column keeps its name and
+    * its type from `in`. Each row is decoded on its own; payloads never
+    * shuffle. */
+  private[operators] def perRow(in: DataFrame, idCol: String,
+      fields: Seq[StructField])(f: Row => IterableOnce[Row]): DataFrame = {
+    implicit val enc: Encoder[Row] = RowEncoder.encoderFor(
+      StructType(StructField(idCol, in.schema(idCol).dataType) +: fields))
+    in.flatMap(f).toDF()
+  }
+
+  /** The payload of a kernel input row `(id, media)`; null for null media
+    * or a null payload. Positional (media.payload = 0): rows from an
+    * encoder round trip may be schema-less GenericRows. */
+  private[operators] def payloadOf(r: Row): Array[Byte] =
+    if (r.isNullAt(1)) null else r.getStruct(1).getAs[Array[Byte]](0)
+
+  /** The one attach kernel: per id (cast to BIGINT), `encode(id)` gives the
+    * payload and its meta width and height (null for a modality with no
+    * raster), stamped with `mime`. */
+  private[operators] def attach(ids: DataFrame, idCol: String, mime: String)(
+      encode: Long => (Array[Byte], Integer, Integer)): DataFrame =
+    perRow(ids.select(col(idCol).cast("long").as(idCol)), idCol,
+        Seq(StructField("media", mediaSchema))) { r =>
+      val id = r.getLong(0)
+      val (payload, w, h) = encode(id)
+      Some(Row(id, Row(payload, Row(mime, w, h))))
+    }
+
+  /** An RGB raster whose pixel (x, y) is `rgb(x, y)`, packed 0xRRGGBB. */
+  private[operators] def paint(width: Int, height: Int)(
+      rgb: (Int, Int) => Int): BufferedImage = {
+    val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < height) {
+      var x = 0
+      while (x < width) { img.setRGB(x, y, rgb(x, y)); x += 1 }
+      y += 1
+    }
+    img
+  }
+
+  /** Decode `payload` with whichever installed `javax.imageio` reader
+    * accepts it (PNG/BMP/GIF/JPEG). None for null or undecodable bytes —
+    * NonFatal, because JDK image readers throw unchecked on fuzzed
+    * payloads and the corrupt-row contract is None, never a failure. */
+  private def readImage(payload: Array[Byte]): Option[BufferedImage] =
+    if (payload == null) None
+    else try Option(ImageIO.read(new java.io.ByteArrayInputStream(payload)))
+    catch { case NonFatal(_) => None }
+
+  /** Channel-sum pixel checksum Σ(r+g+b) of a decoded raster. */
+  private[operators] def rgbSum(img: BufferedImage): Long = {
+    var sum = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val p = img.getRGB(x, y)
+        sum += ((p >> 16) & 0xFF) + ((p >> 8) & 0xFF) + (p & 0xFF)
+        x += 1
+      }
+      y += 1
+    }
+    sum
+  }
+
+  /** Integer-exact nearest-neighbour resize, `out(x, y) = in(x·w0 div W,
+    * y·h0 div H)` — an explicit loop, so the mapping is engine-portable
+    * rather than delegated to an interpolating Graphics2D path. */
+  private[operators] def resizeNN(src: BufferedImage, width: Int,
+      height: Int): BufferedImage = {
+    val (w0, h0) = (src.getWidth, src.getHeight)
+    paint(width, height)((x, y) => src.getRGB(x * w0 / width, y * h0 / height))
+  }
+
+  /** Maximum per-pixel per-channel |decoded − want(x, y)| over a raster
+    * (`want` packed 0xRRGGBB): the lossy-codec contract measure. */
+  private[operators] def maxDeviation(img: BufferedImage,
+      want: (Int, Int) => Int): Int = {
+    var dev = 0
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val got = img.getRGB(x, y)
+        val ref = want(x, y)
+        var shift = 0
+        while (shift < 24) {
+          dev = math.max(dev,
+            math.abs(((got >> shift) & 0xFF) - ((ref >> shift) & 0xFF)))
+          shift += 8
+        }
+        x += 1
+      }
+      y += 1
+    }
+    dev
+  }
+
   /** REAL image encode — pure-JDK `javax.imageio` PNG (offline-safe, no
     * external codec). Pixel (x, y) is the deterministic generation rule
     *   r = (seed+x) mod 256, g = (seed+y) mod 256, b = (seed+x+y) mod 256
@@ -153,23 +256,12 @@ object Multimodal {
     * operator a deployment keeps. */
   def encodePng(width: Int, height: Int, seed: Int): Array[Byte] = {
     require(width > 0 && height > 0, s"bad dims: ${width}x$height")
-    val img = new java.awt.image.BufferedImage(
-      width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < height) {
-      var x = 0
-      while (x < width) {
-        val r = (seed + x) % 256
-        val g = (seed + y) % 256
-        val b = (seed + x + y) % 256
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    encodeRaster(paint(width, height) { (x, y) =>
+      val r = (seed + x) % 256
+      val g = (seed + y) % 256
+      val b = (seed + x + y) % 256
+      (r << 16) | (g << 8) | b
+    }, "png")
   }
 
   /** REAL image decode via `javax.imageio` (PNG/BMP/GIF — whatever the
@@ -177,112 +269,44 @@ object Multimodal {
     * checksum Σ(r+g+b) of the decoded raster. None for bytes no
     * installed reader accepts (the null-tolerant contract — a corrupt
     * payload yields null features, never a task failure). */
-  def decodeImage(payload: Array[Byte]): Option[(Int, Int, Long)] = {
-    // NonFatal: JDK image readers throw unchecked on fuzzed payloads
-    // (the corrupt-row contract is None, never a failure)
-    val img = try javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(payload))
-    catch { case scala.util.control.NonFatal(_) => null }
-    if (img == null) None
-    else {
-      var sum = 0L
-      var y = 0
-      while (y < img.getHeight) {
-        var x = 0
-        while (x < img.getWidth) {
-          val p = img.getRGB(x, y)
-          sum += ((p >> 16) & 0xFF) + ((p >> 8) & 0xFF) + (p & 0xFF)
-          x += 1
-        }
-        y += 1
-      }
-      Some((img.getWidth, img.getHeight, sum))
-    }
-  }
+  def decodeImage(payload: Array[Byte]): Option[(Int, Int, Long)] =
+    readImage(payload).map(img => (img.getWidth, img.getHeight, rgbSum(img)))
 
   /** Attach a REAL PNG payload per row (vs [[attachPayload]]'s fake
     * bytes): dims and seed are pure integer functions of the id —
     *   w = id mod 16 + 4, h = (id·7) mod 16 + 4, seed = id mod 256
     * — so an oracle can recompute the expected decode output without
-    * decoding. Encoding runs batched in `mapPartitions` (the codec-
-    * amortization shape of [[extractFeatures]]); payloads never
-    * shuffle. */
-  def attachPng(ids: DataFrame, idCol: String = "doc_id",
-      batchSize: Int = 64): DataFrame = {
-    val in = ids.select(col(idCol).cast("long").as(idCol))
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("media", mediaSchema)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val w = (id % 16 + 4).toInt
-          val h = (id * 7 % 16 + 4).toInt
-          val png = encodePng(w, h, (id % 256).toInt)
-          Row(id, Row(png, Row("image/png", w, h)))
-        }
-      }
-    }.toDF()
-  }
+    * decoding. */
+  def attachPng(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    attach(ids, idCol, "image/png") { id =>
+      val w = (id % 16 + 4).toInt
+      val h = (id * 7 % 16 + 4).toInt
+      (encodePng(w, h, (id % 256).toInt), w, h)
+    }
 
   /** REAL nearest-neighbor resize over a `media` column: decode the
-    * payload (`javax.imageio`), sample `out(x, y) = in(x·w0 div W,
-    * y·h0 div H)` — the integer-exact nearest-neighbor rule, written as
-    * an explicit loop so the mapping is engine-portable rather than
-    * delegated to an interpolating Graphics2D path — and re-encode as
-    * `format` (PNG default — lossless, `q_media_resize_real`'s bit-exact
-    * gate; "jpeg" at `quality` for the lossy loop `q_media_jpeg_resize`
-    * gates as a deviation contract). The meta struct carries the new
-    * dimensions; a payload that
-    * fails to decode passes through with null media (the corrupt-row
-    * contract). Composed with [[decodeFeatures]] this closes a real
-    * decode→transform→decode loop whose output an oracle can recompute
-    * from the source pixel rule + the same index mapping (PNG lossless
-    * at both ends). Batched mapPartitions; payloads never shuffle. */
+    * payload (`javax.imageio`), sample with the integer-exact
+    * nearest-neighbor rule ([[resizeNN]]) and re-encode as `format` (PNG
+    * default — lossless, `q_media_resize_real`'s bit-exact gate; "jpeg"
+    * at `quality` for the lossy loop `q_media_jpeg_resize` gates as a
+    * deviation contract). The meta struct carries the new dimensions; a
+    * payload that fails to decode passes through with null media (the
+    * corrupt-row contract). Composed with [[decodeFeatures]] this closes
+    * a real decode→transform→decode loop whose output an oracle can
+    * recompute from the source pixel rule + the same index mapping (PNG
+    * lossless at both ends). */
   def resizeImage(df: DataFrame, newWidth: Int, newHeight: Int,
-      idCol: String = "doc_id", batchSize: Int = 64,
+      idCol: String = "doc_id",
       format: String = "png", quality: Float = 0.95f): DataFrame = {
     require(newWidth > 0 && newHeight > 0, s"bad dims: ${newWidth}x$newHeight")
     require(format == "png" || format == "jpeg", s"unsupported format: $format")
-    val in = df.select(col(idCol), col("media"))
-    val outSchema = StructType(Seq(
-      StructField(idCol, in.schema(idCol).dataType),
-      StructField("media", mediaSchema)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.get(0)
-          val payload =
-            if (r.isNullAt(1)) null
-            else r.getStruct(1).get(0).asInstanceOf[Array[Byte]]
-          val src = if (payload == null) null
-            else try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(payload))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (src == null) Row(id, null)
-          else {
-            val (w0, h0) = (src.getWidth, src.getHeight)
-            val dst = new java.awt.image.BufferedImage(
-              newWidth, newHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < newHeight) {
-              var x = 0
-              while (x < newWidth) {
-                dst.setRGB(x, y,
-                  src.getRGB(x * w0 / newWidth, y * h0 / newHeight))
-                x += 1
-              }
-              y += 1
-            }
-            Row(id, Row(encodeRaster(dst, format, quality),
-              Row(s"image/$format", newWidth, newHeight)))
-          }
-        }
-      }
-    }.toDF()
+    perRow(df.select(col(idCol), col("media")), idCol,
+        Seq(StructField("media", mediaSchema))) { r =>
+      Some(Row(r.get(0), readImage(payloadOf(r)).map { src =>
+        Row(encodeRaster(resizeNN(src, newWidth, newHeight), format, quality),
+          Row(s"image/$format", newWidth, newHeight))
+      }.orNull))
+    }
   }
 
   /** Smooth gradient pixel rule shared by [[encodeJpeg]] and its
@@ -308,32 +332,22 @@ object Multimodal {
   def encodeJpeg(width: Int, height: Int, seed: Int,
       quality: Float = 0.95f): Array[Byte] = {
     require(width > 0 && height > 0, s"bad dims: ${width}x$height")
-    val img = new java.awt.image.BufferedImage(
-      width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < height) {
-      var x = 0
-      while (x < width) {
-        img.setRGB(x, y, gradientRgb(seed, width, height, x, y))
-        x += 1
-      }
-      y += 1
-    }
-    encodeRaster(img, "jpeg", quality)
+    encodeRaster(paint(width, height)(gradientRgb(seed, width, height, _, _)),
+      "jpeg", quality)
   }
 
   /** Encode a raster as PNG (lossless, quality ignored) or JPEG at an
-    * explicit compression quality — the shared encode tail of
-    * [[encodeJpeg]] and [[resizeImage]]'s lossy output path. */
-  private def encodeRaster(img: java.awt.image.BufferedImage,
-      format: String, quality: Float): Array[Byte] = {
+    * explicit compression quality — the one encode tail of the PNG and
+    * JPEG writers, [[resizeImage]] and the Motion-JPEG frames of
+    * [[Video]]. */
+  private[operators] def encodeRaster(img: BufferedImage,
+      format: String, quality: Float = 0.95f): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     if (format == "png") {
-      javax.imageio.ImageIO.write(img, "png", bos)
+      ImageIO.write(img, "png", bos)
     } else {
-      val writer = javax.imageio.ImageIO
-        .getImageWritersByFormatName("jpeg").next()
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+      val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+      val ios = ImageIO.createImageOutputStream(bos)
       try {
         writer.setOutput(ios)
         val p = writer.getDefaultWriteParam
@@ -348,26 +362,13 @@ object Multimodal {
   /** Attach a REAL JPEG payload per row — same id→geometry rule as
     * [[attachPng]] (w = id mod 16 + 4, h = (id·7) mod 16 + 4,
     * seed = id mod 256) so an oracle recomputes the expected dims without
-    * decoding. Batched `mapPartitions`; payloads never shuffle. */
-  def attachJpeg(ids: DataFrame, idCol: String = "doc_id",
-      batchSize: Int = 64): DataFrame = {
-    val in = ids.select(col(idCol).cast("long").as(idCol))
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("media", mediaSchema)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val w = (id % 16 + 4).toInt
-          val h = (id * 7 % 16 + 4).toInt
-          val jpg = encodeJpeg(w, h, (id % 256).toInt)
-          Row(id, Row(jpg, Row("image/jpeg", w, h)))
-        }
-      }
-    }.toDF()
-  }
+    * decoding. */
+  def attachJpeg(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    attach(ids, idCol, "image/jpeg") { id =>
+      val w = (id % 16 + 4).toInt
+      val h = (id * 7 % 16 + 4).toInt
+      (encodeJpeg(w, h, (id % 256).toInt), w, h)
+    }
 
   /** Lossy-decode deviation gate: decode each `media` payload with the
     * REAL `javax.imageio` reader and measure the maximum per-pixel
@@ -377,57 +378,24 @@ object Multimodal {
     * verification operator for any LOSSY container, where the
     * px_sum-equality gate of [[decodeFeatures]] cannot hold bit-exact:
     * dims stay exact, the raster is certified within a bound. Output:
-    * `(idCol, width, height, max_dev)`, all null for a payload no
+    * `(idCol BIGINT, width, height, max_dev)`, all null for a payload no
     * installed reader accepts (the corrupt-row contract — never a task
-    * failure). Batched `mapPartitions`; payloads never shuffle. */
+    * failure). */
   def decodeDeviation(df: DataFrame,
       rule: (Long, Int, Int, Int, Int) => Int,
-      idCol: String = "doc_id", batchSize: Int = 64): DataFrame = {
-    val in = df.select(col(idCol).cast("long").as(idCol),
-      col("media.payload").as("payload"))
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("max_dev", IntegerType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val payload =
-            if (r.isNullAt(1)) null else r.get(1).asInstanceOf[Array[Byte]]
-          val img = if (payload == null) null
-            else try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(payload))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null) Row(id, null, null, null)
-          else {
-            val (w, h) = (img.getWidth, img.getHeight)
-            var maxDev = 0
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val got = img.getRGB(x, y)
-                val want = rule(id, w, h, x, y)
-                var c = 0
-                while (c < 3) {
-                  val d = math.abs(((got >> (8 * c)) & 0xFF) -
-                    ((want >> (8 * c)) & 0xFF))
-                  if (d > maxDev) maxDev = d
-                  c += 1
-                }
-                x += 1
-              }
-              y += 1
-            }
-            Row(id, w, h, maxDev)
-          }
-        }
-      }
-    }.toDF()
-  }
+      idCol: String = "doc_id"): DataFrame =
+    perRow(df.select(col(idCol).cast("long").as(idCol), col("media")), idCol,
+        Seq(StructField("width", IntegerType),
+          StructField("height", IntegerType),
+          StructField("max_dev", IntegerType))) { r =>
+      val id = r.getLong(0)
+      Some(readImage(payloadOf(r)) match {
+        case Some(img) =>
+          val (w, h) = (img.getWidth, img.getHeight)
+          Row(id, w, h, maxDeviation(img, rule(id, w, h, _, _)))
+        case None => Row(id, null, null, null)
+      })
+    }
 
   /** REAL multi-frame encode — an animated-GIF payload via the JDK's
     * GIF `ImageWriter` (writeToSequence; offline-safe, no external
@@ -493,99 +461,66 @@ object Multimodal {
     * [[frameSample]] slice stub: the frames come out of a real decoder,
     * and a corrupt payload yields ZERO rows, never a task failure.
     * Output: (id, frame_idx, width, height, lvl_sum). */
-  def decodeFrames(df: DataFrame, idCol: String = "doc_id",
-      batchSize: Int = 64): DataFrame = {
-    val in = df.select(col(idCol), col("media"))
-    val outSchema = StructType(
-      StructField(idCol, in.schema(idCol).dataType) +: Seq(
+  def decodeFrames(df: DataFrame, idCol: String = "doc_id"): DataFrame =
+    perRow(df.select(col(idCol), col("media")), idCol, Seq(
         StructField("frame_idx", IntegerType),
         StructField("width", IntegerType),
         StructField("height", IntegerType),
-        StructField("lvl_sum", LongType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val payload =
-            if (r.isNullAt(1)) null
-            else r.getStruct(1).get(0).asInstanceOf[Array[Byte]]
-          if (payload == null) Iterator.empty
-          else {
-            // stream + reader ALWAYS released (finally): the default
-            // ImageInputStream is file-cache backed — one leaked fd +
-            // temp file per row would exhaust the executor at scale.
-            // NonFatal, not just IOException: the JDK GIF reader throws
-            // unchecked (AIOOBE/NegativeArraySize) on fuzzed payloads,
-            // and the corrupt-row contract is zero rows, never a task
-            // failure.
-            var iis: javax.imageio.stream.ImageInputStream = null
-            var reader: javax.imageio.ImageReader = null
-            val frames = try {
-              iis = javax.imageio.ImageIO.createImageInputStream(
-                new java.io.ByteArrayInputStream(payload))
-              val readers = javax.imageio.ImageIO.getImageReaders(iis)
-              if (!readers.hasNext) Seq.empty
-              else {
-                reader = readers.next()
-                reader.setInput(iis)
-                val n = reader.getNumImages(true)
-                (0 until n).map { i =>
-                  val img = reader.read(i)
-                  var sum = 0L
-                  var y = 0
-                  while (y < img.getHeight) {
-                    var x = 0
-                    while (x < img.getWidth) {
-                      // gray level from the decoded ARGB (channel/32):
-                      // reads the actual raster, not the palette index
-                      // bytes, so a decoder bug cannot echo through
-                      sum += ((img.getRGB(x, y) >> 16) & 0xFF) / 32
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  (i, img.getWidth, img.getHeight, sum)
-                }
+        StructField("lvl_sum", LongType))) { r =>
+      val payload = payloadOf(r)
+      // stream + reader ALWAYS released (finally): the default
+      // ImageInputStream is file-cache backed — one leaked fd + temp file
+      // per row would exhaust the executor at scale. NonFatal, not just
+      // IOException: the JDK GIF reader throws unchecked
+      // (AIOOBE/NegativeArraySize) on fuzzed payloads, and the corrupt-row
+      // contract is zero rows, never a task failure.
+      var iis: javax.imageio.stream.ImageInputStream = null
+      var reader: javax.imageio.ImageReader = null
+      val frames = if (payload == null) Seq.empty else try {
+        iis = ImageIO.createImageInputStream(
+          new java.io.ByteArrayInputStream(payload))
+        val readers = ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) Seq.empty
+        else {
+          reader = readers.next()
+          reader.setInput(iis)
+          (0 until reader.getNumImages(true)).map { i =>
+            val img = reader.read(i)
+            var sum = 0L
+            var y = 0
+            while (y < img.getHeight) {
+              var x = 0
+              while (x < img.getWidth) {
+                // gray level from the decoded ARGB (channel/32): reads
+                // the actual raster, not the palette index bytes, so a
+                // decoder bug cannot echo through
+                sum += ((img.getRGB(x, y) >> 16) & 0xFF) / 32
+                x += 1
               }
-            } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-            finally {
-              if (reader != null) try reader.dispose() catch {
-                case scala.util.control.NonFatal(_) => () }
-              if (iis != null) try iis.close() catch {
-                case scala.util.control.NonFatal(_) => () }
+              y += 1
             }
-            frames.iterator.map { case (i, w, h, sum) =>
-              Row(r.get(0), i, w, h, sum) }
+            Row(r.get(0), i, img.getWidth, img.getHeight, sum)
           }
         }
+      } catch { case NonFatal(_) => Seq.empty }
+      finally {
+        if (reader != null) try reader.dispose() catch { case NonFatal(_) => () }
+        if (iis != null) try iis.close() catch { case NonFatal(_) => () }
       }
-    }.toDF()
-  }
+      frames
+    }
 
   /** Attach a REAL multi-frame GIF payload per row (the [[attachPng]]
     * convention): `w = id mod 8 + 4`, `h = id·3 mod 8 + 4`,
     * `frames = id mod 3 + 2`, `seed = id mod 8` — all pure integer
     * functions of the id, so the per-frame decode output is
     * oracle-derivable without decoding. */
-  def attachGif(ids: DataFrame, idCol: String = "doc_id",
-      batchSize: Int = 64): DataFrame = {
-    val in = ids.select(col(idCol).cast("long").as(idCol))
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("media", mediaSchema)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val w = (id % 8 + 4).toInt
-          val h = (id * 3 % 8 + 4).toInt
-          val gif = encodeGif(w, h, (id % 3 + 2).toInt, (id % 8).toInt)
-          Row(id, Row(gif, Row("image/gif", w, h)))
-        }
-      }
-    }.toDF()
-  }
+  def attachGif(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    attach(ids, idCol, "image/gif") { id =>
+      val w = (id % 8 + 4).toInt
+      val h = (id * 3 % 8 + 4).toInt
+      (encodeGif(w, h, (id % 3 + 2).toInt, (id % 8).toInt), w, h)
+    }
 
   /** REAL audio encode — a PCM WAV payload via `javax.sound.sampled`
     * (pure JDK, offline-safe): 16-bit signed little-endian mono at
@@ -641,137 +576,84 @@ object Multimodal {
   /** Attach a REAL WAV payload per row: `n = id mod 64 + 16` samples,
     * `seed = id mod 1000` — pure integer functions of the id, so the
     * decode output is oracle-derivable without decoding (the
-    * [[attachPng]] convention, audio modality). */
-  def attachWav(ids: DataFrame, idCol: String = "doc_id",
-      batchSize: Int = 64): DataFrame = {
-    val in = ids.select(col(idCol).cast("long").as(idCol))
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("media", mediaSchema)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val wav = encodeWav((id % 64 + 16).toInt, (id % 1000).toInt)
-          Row(id, Row(wav, Row("audio/wav", null, null)))
-        }
-      }
-    }.toDF()
-  }
+    * [[attachPng]] convention, audio modality). Meta width and height are
+    * null: audio has no raster. */
+  def attachWav(ids: DataFrame, idCol: String = "doc_id"): DataFrame =
+    attach(ids, idCol, "audio/wav") { id =>
+      (encodeWav((id % 64 + 16).toInt, (id % 1000).toInt), null, null)
+    }
 
-  /** Batched REAL audio feature extraction over a `media` column:
+  /** REAL audio feature extraction over a `media` column:
     * (id, sample_rate, channels, bits, n_samples, sample_sum) from the
     * decoded PCM stream; undecodable/null payloads yield null
     * features. */
-  def decodeAudioFeatures(df: DataFrame, idCol: String = "doc_id",
-      batchSize: Int = 64): DataFrame = {
-    val in = df.select(col(idCol), col("media"))
-    val outSchema = StructType(
-      StructField(idCol, in.schema(idCol).dataType) +: Seq(
+  def decodeAudioFeatures(df: DataFrame, idCol: String = "doc_id"): DataFrame =
+    perRow(df.select(col(idCol), col("media")), idCol, Seq(
         StructField("sample_rate", IntegerType),
         StructField("channels", IntegerType),
         StructField("bits", IntegerType),
         StructField("n_samples", LongType),
-        StructField("sample_sum", LongType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val payload =
-            if (r.isNullAt(1)) null
-            else r.getStruct(1).get(0).asInstanceOf[Array[Byte]]
-          if (payload == null) Row(r.get(0), null, null, null, null, null)
-          else decodeWav(payload) match {
-            case Some((sr, ch, bits, n, sum)) =>
-              Row(r.get(0), sr, ch, bits, n, sum)
-            case None => Row(r.get(0), null, null, null, null, null)
-          }
-        }
-      }
-    }.toDF()
-  }
+        StructField("sample_sum", LongType))) { r =>
+      Some(Option(payloadOf(r)).flatMap(decodeWav) match {
+        case Some((sr, ch, bits, n, sum)) => Row(r.get(0), sr, ch, bits, n, sum)
+        case None => Row(r.get(0), null, null, null, null, null)
+      })
+    }
 
-  /** Batched REAL decode over a `media` column: `javax.imageio` reads
-    * each payload and emits (id, mime, width, height, px_sum) — width/
+  /** REAL decode over a `media` column: `javax.imageio` reads each
+    * payload and emits (id, mime, width, height, px_sum) — width/
     * height/checksum come from the DECODED raster, never from the meta
     * struct, so a wrong or skipped decode cannot echo its way through.
-    * Same mapPartitions batch shape as [[extractFeatures]]; undecodable
-    * or null payloads yield null features. */
-  def decodeFeatures(df: DataFrame, idCol: String = "doc_id",
-      batchSize: Int = 64): DataFrame = {
-    val in = df.select(col(idCol), col("media"))
-    val outSchema = StructType(
-      StructField(idCol, in.schema(idCol).dataType) +: Seq(
+    * Undecodable or null payloads yield null features (mime kept). */
+  def decodeFeatures(df: DataFrame, idCol: String = "doc_id"): DataFrame =
+    perRow(df.select(col(idCol), col("media")), idCol, Seq(
         StructField("mime", StringType),
         StructField("width", IntegerType),
         StructField("height", IntegerType),
-        StructField("px_sum", LongType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch decoder/codec init would go here (why batches exist)
-        batch.iterator.map { r =>
-          val id = r.get(0)
-          // positional access (payload=0, meta=1, meta.mime=0): rows from
-          // an encoder round trip may be schema-less GenericRows
-          val payload =
-            if (r.isNullAt(1)) null
-            else r.getStruct(1).get(0).asInstanceOf[Array[Byte]]
-          val mime =
-            if (r.isNullAt(1) || r.getStruct(1).isNullAt(1)) null
-            else r.getStruct(1).getStruct(1).getString(0)
-          if (payload == null) Row(id, mime, null, null, null)
-          else decodeImage(payload) match {
-            case Some((w, h, sum)) => Row(id, mime, w, h, sum)
-            case None => Row(id, mime, null, null, null)
-          }
-        }
-      }
-    }.toDF()
-  }
+        StructField("px_sum", LongType))) { r =>
+      // positional access (meta=1, meta.mime=0), as in [[payloadOf]]
+      val mime =
+        if (r.isNullAt(1) || r.getStruct(1).isNullAt(1)) null
+        else r.getStruct(1).getStruct(1).getString(0)
+      Some(decodeImage(payloadOf(r)) match {
+        case Some((w, h, sum)) => Row(r.get(0), mime, w, h, sum)
+        case None => Row(r.get(0), mime, null, null, null)
+      })
+    }
 
-  /** Batched decode/feature-extract. Output: doc_id, mime, width, height,
-    * n_bytes, crc32, avg_luma. Batch size is the codec-amortization knob. */
+  /** Stub decode/feature-extract over the fake payloads of
+    * [[attachPayload]] (or any `media` column). Output: doc_id, mime,
+    * width, height, n_bytes, crc32, avg_luma; any payload bytes give
+    * features ([[decodeStub]]), null media gives all-null features and a
+    * null payload keeps only the meta columns. */
   def extractFeatures(spark: SparkSession, docs: DataFrame,
-      idCol: String = "doc_id", batchSize: Int = 64): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     val withMedia = if (docs.columns.contains("media")) docs else attachPayload(docs)
-    val in = withMedia.select(col(idCol), col("media"))
-    // id column keeps its caller-declared name AND type
-    val outSchema = StructType(
-      StructField(idCol, in.schema(idCol).dataType) +: Seq(
+    perRow(withMedia.select(col(idCol), col("media")), idCol, Seq(
         StructField("mime", StringType),
         StructField("width", IntegerType),
         StructField("height", IntegerType),
         StructField("n_bytes", IntegerType),
         StructField("crc32", LongType),
-        StructField("avg_luma", DoubleType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    val out: Dataset[Row] = in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch decoder init would go here (the point of batching)
-        batch.iterator.map { r =>
-          val id = r.get(0)
-          // null-tolerant like the rest of the engine: a null media/payload
-          // row yields null features, it does not fail the task
-          if (r.isNullAt(1)) Row(id, null, null, null, null, null, null)
-          else {
-            val media = r.getStruct(1)
-            val payload = media.getAs[Array[Byte]]("payload")
-            val metaIdx = media.fieldIndex("meta")
-            val meta = if (media.isNullAt(metaIdx)) null else media.getStruct(metaIdx)
-            def metaField[T](i: Int): Any =
-              if (meta == null || meta.isNullAt(i)) null else meta.get(i)
-            if (payload == null)
-              Row(id, metaField(0), metaField(1), metaField(2), null, null, null)
-            else {
-              val (luma, n, crc) = decodeStub(payload)
-              Row(id, metaField(0), metaField(1), metaField(2), n, crc, luma)
-            }
-          }
+        StructField("avg_luma", DoubleType))) { r =>
+      val id = r.get(0)
+      // null-tolerant like the rest of the engine: a null media/payload
+      // row yields null features, it does not fail the task
+      Some(if (r.isNullAt(1)) Row(id, null, null, null, null, null, null)
+      else {
+        val media = r.getStruct(1)
+        val payload = media.getAs[Array[Byte]]("payload")
+        val metaIdx = media.fieldIndex("meta")
+        val meta = if (media.isNullAt(metaIdx)) null else media.getStruct(metaIdx)
+        def metaField(i: Int): Any =
+          if (meta == null || meta.isNullAt(i)) null else meta.get(i)
+        if (payload == null)
+          Row(id, metaField(0), metaField(1), metaField(2), null, null, null)
+        else {
+          val (luma, n, crc) = decodeStub(payload)
+          Row(id, metaField(0), metaField(1), metaField(2), n, crc, luma)
         }
-      }
+      })
     }
-    out.toDF()
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.operators.Multimodal.{attach, encodeRaster, maxDeviation,
+  paint, payloadOf, perRow, resizeNN, rgbSum}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,12 +30,12 @@ import org.apache.spark.sql.types._
   * a fake parse that echoes attach-side metadata cannot pass, because
   * the faces derive every output from the parsed bytes.
   *
-  * Scale shape: encode/decode run batched in `mapPartitions` (the
-  * codec-amortization shape of `Multimodal.extractFeatures`); payloads
-  * never shuffle — only (id, frame_idx, sums) rows leave the scan
-  * stage. Temporal sampling ([[decodeFrames]] `stride`) drops frames
-  * at the decoder, BEFORE any exchange, so a 100 TB corpus sampled
-  * 1-in-30 ships 1/30th of the rows downstream.
+  * Scale shape: every kernel is one `Multimodal.perRow` map, each
+  * container demuxed and decoded on its own; payloads never shuffle —
+  * only (id, frame_idx, sums) rows leave the scan stage. Temporal
+  * sampling ([[decodeFrames]] `stride`) drops frames at the decoder,
+  * BEFORE any exchange, so a 100 TB corpus sampled 1-in-30 ships
+  * 1/30th of the rows downstream.
   */
 object Video {
 
@@ -113,19 +114,6 @@ object Video {
     (r << 16) | (g << 8) | b
   }
 
-  private def frameImage(width: Int, height: Int, f: Int, seed: Int,
-      rule: (Int, Int, Int, Int) => Int): java.awt.image.BufferedImage = {
-    val img = new java.awt.image.BufferedImage(
-      width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < height) {
-      var x = 0
-      while (x < width) { img.setRGB(x, y, rule(seed, x, y, f)); x += 1 }
-      y += 1
-    }
-    img
-  }
-
   /** DIB frame bytes: bottom-up rows, BGR byte order, row stride padded
     * to a multiple of 4 — the classic BI_RGB layout. */
   private def dibFrame(img: java.awt.image.BufferedImage): Array[Byte] = {
@@ -149,22 +137,6 @@ object Video {
     out
   }
 
-  private def jpegFrame(img: java.awt.image.BufferedImage,
-      quality: Float): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    val writer =
-      javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-    try {
-      writer.setOutput(ios)
-      val p = writer.getDefaultWriteParam
-      p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-      p.setCompressionQuality(quality)
-      writer.write(null, new javax.imageio.IIOImage(img, null, null), p)
-    } finally { writer.dispose(); ios.close() }
-    bos.toByteArray
-  }
-
   /** Build a complete AVI from the closed-form frame rule (the
     * attach-side fixture builder). */
   def encodeAvi(width: Int, height: Int, frames: Int, fpsMicros: Long,
@@ -173,7 +145,7 @@ object Video {
     val rule: (Int, Int, Int, Int) => Int =
       if (codec == CodecMjpeg) mjpegRule else rgbRule
     encodeAviFromImages(
-      (0 until frames).map(f => frameImage(width, height, f, seed, rule)),
+      (0 until frames).map(f => paint(width, height)(rule(seed, _, _, f))),
       fpsMicros, codec, quality)
   }
 
@@ -196,7 +168,7 @@ object Video {
     val frames = images.length
 
     val frameChunks = images.map { img =>
-      if (mjpeg) chunk("00dc", jpegFrame(img, quality))
+      if (mjpeg) chunk("00dc", encodeRaster(img, "jpeg", quality))
       else chunk("00db", dibFrame(img))
     }
     val maxFrame = frameChunks.map(_.length).max
@@ -366,24 +338,12 @@ object Video {
         // Long arithmetic: stride·h can exceed Int range at the dim
         // bounds parseAvi admits, and an overflowed product could pass
         // this check and allocate anyway
-        if (frame.length.toLong < stride.toLong * h) return None
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          val srcRow = h - 1 - y // stored bottom-up
-          var x = 0
-          while (x < w) {
-            val o = srcRow * stride + x * 3
-            val b = frame(o) & 0xFF
-            val g = frame(o + 1) & 0xFF
-            val r = frame(o + 2) & 0xFF
-            img.setRGB(x, y, (r << 16) | (g << 8) | b)
-            x += 1
-          }
-          y += 1
-        }
-        Some(img)
+        if (frame.length.toLong < stride.toLong * h) None
+        else Some(paint(w, h) { (x, y) =>
+          val o = (h - 1 - y) * stride + x * 3 // rows stored bottom-up
+          ((frame(o + 2) & 0xFF) << 16) | ((frame(o + 1) & 0xFF) << 8) |
+            (frame(o) & 0xFF)
+        })
       } else if (avi.codec == CodecMjpeg) {
         // dims come from the JPEG ITSELF, so the container bound does
         // not cover them: read the header words via an ImageReader and
@@ -421,29 +381,15 @@ object Video {
     * `fpsMicros = 20000 + (id%7)·5000`, `seed = id%256` — so the whole
     * demux→decode output is oracle-derivable without a decoder.
     * `codecFor` picks the container codec per id (faces use a pure
-    * id-parity rule so the oracle can mirror it). Batched
-    * mapPartitions; payloads never shuffle. */
+    * id-parity rule so the oracle can mirror it). */
   def attachAvi(ids: DataFrame, codecFor: Long => String,
-      idCol: String = "doc_id", batchSize: Int = 64): DataFrame = {
-    val in = ids.select(col(idCol).cast("long").as(idCol))
-    val outSchema = StructType(Seq(
-      StructField(idCol, LongType),
-      StructField("media", Multimodal.mediaSchema)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val id = r.getLong(0)
-          val w = (id % 8 + 4).toInt
-          val h = (id * 3 % 8 + 4).toInt
-          val nf = (id % 4 + 2).toInt
-          val fps = 20000L + (id % 7) * 5000L
-          val avi = encodeAvi(w, h, nf, fps, (id % 256).toInt, codecFor(id))
-          Row(id, Row(avi, Row("video/x-msvideo", w, h)))
-        }
-      }
-    }.toDF()
-  }
+      idCol: String = "doc_id"): DataFrame =
+    attach(ids, idCol, "video/x-msvideo") { id =>
+      val w = (id % 8 + 4).toInt
+      val h = (id * 3 % 8 + 4).toInt
+      (encodeAvi(w, h, (id % 4 + 2).toInt, 20000L + (id % 7) * 5000L,
+        (id % 256).toInt, codecFor(id)), w, h)
+    }
 
   /** REAL container metadata from the BYTES: every column is a header
     * word [[parseAvi]] read out of the RIFF tree (dims from strf,
@@ -451,33 +397,19 @@ object Video {
     * biCompression), plus `movi_frames` COUNTED from the movi chunk
     * walk — gating that the demux actually traversed the frames, not
     * just the header. Corrupt payload → zero rows. */
-  def decodeMeta(df: DataFrame, idCol: String = "doc_id",
-      batchSize: Int = 64): DataFrame = {
-    val in = df.select(col(idCol), col("media"))
-    val outSchema = StructType(
-      StructField(idCol, in.schema(idCol).dataType) +: Seq(
+  def decodeMeta(df: DataFrame, idCol: String = "doc_id"): DataFrame =
+    perRow(df.select(col(idCol), col("media")), idCol, Seq(
         StructField("width", IntegerType),
         StructField("height", IntegerType),
         StructField("n_frames", IntegerType),
         StructField("movi_frames", IntegerType),
         StructField("fps_micros", LongType),
-        StructField("codec", StringType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val payload =
-            if (r.isNullAt(1)) null
-            else r.getStruct(1).get(0).asInstanceOf[Array[Byte]]
-          if (payload == null) Iterator.empty
-          else parseAvi(payload).iterator.map { avi =>
-            Row(r.get(0), avi.width, avi.height, avi.headerFrames,
-              avi.frames.length, avi.fpsMicros, avi.codec)
-          }
-        }
+        StructField("codec", StringType))) { r =>
+      parseAvi(payloadOf(r)).map { avi =>
+        Row(r.get(0), avi.width, avi.height, avi.headerFrames,
+          avi.frames.length, avi.fpsMicros, avi.codec)
       }
-    }.toDF()
-  }
+    }
 
   /** REAL frame decode + temporal sampling: demux, decode every
     * `stride`-th frame (`frame_idx % stride == 0` over the movi
@@ -485,163 +417,77 @@ object Video {
     * exchange), and emit the decoded raster's channel sum Σ(r+g+b).
     * On the lossless `rgb24` codec the sums are bit-exact against the
     * closed-form rule; on `mjpeg` use [[decodeDeviation]] instead.
+    * Corrupt payload → zero rows.
     * Output: (id, frame_idx, width, height, px_sum). */
   def decodeFrames(df: DataFrame, idCol: String = "doc_id",
-      stride: Int = 1, batchSize: Int = 64): DataFrame = {
+      stride: Int = 1): DataFrame = {
     require(stride >= 1, s"bad stride: $stride")
-    val in = df.select(col(idCol), col("media"))
-    val outSchema = StructType(
-      StructField(idCol, in.schema(idCol).dataType) +: Seq(
+    perRow(df.select(col(idCol), col("media")), idCol, Seq(
         StructField("frame_idx", IntegerType),
         StructField("width", IntegerType),
         StructField("height", IntegerType),
-        StructField("px_sum", LongType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val payload =
-            if (r.isNullAt(1)) null
-            else r.getStruct(1).get(0).asInstanceOf[Array[Byte]]
-          val parsed = if (payload == null) None else parseAvi(payload)
-          parsed.iterator.flatMap { avi =>
-            avi.frames.iterator.zipWithIndex
-              .filter { case (_, i) => i % stride == 0 }
-              .flatMap { case (fb, i) =>
-                decodeFrame(avi, fb).iterator.map { img =>
-                  var sum = 0L
-                  var y = 0
-                  while (y < img.getHeight) {
-                    var x = 0
-                    while (x < img.getWidth) {
-                      val p = img.getRGB(x, y)
-                      sum += ((p >> 16) & 0xFF) + ((p >> 8) & 0xFF) + (p & 0xFF)
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  Row(r.get(0), i, img.getWidth, img.getHeight, sum)
-                }
-              }
+        StructField("px_sum", LongType))) { r =>
+      parseAvi(payloadOf(r)).iterator.flatMap { avi =>
+        avi.frames.iterator.zipWithIndex
+          .filter { case (_, i) => i % stride == 0 }
+          .flatMap { case (fb, i) =>
+            decodeFrame(avi, fb).map(img =>
+              Row(r.get(0), i, img.getWidth, img.getHeight, rgbSum(img)))
           }
-        }
       }
-    }.toDF()
+    }
   }
 
   /** REAL decode → transform → re-encode loop over a video column (the
     * `Multimodal.resizeImage` shape on the container family): demux,
     * decode EVERY frame, nearest-neighbor resize with the integer-exact
-    * rule `out(x, y) = in(x·w0 div W, y·h0 div H)` (an explicit loop —
-    * engine-portable, no interpolating Graphics2D path), and re-encode
-    * the frame sequence as a NEW rgb24 AVI at the source's
-    * µs-per-frame. Both container hops are lossless, so composing with
+    * rule `out(x, y) = in(x·w0 div W, y·h0 div H)`, and re-encode the
+    * frame sequence as a NEW rgb24 AVI at the source's µs-per-frame.
+    * Both container hops are lossless, so composing with
     * [[decodeFrames]] closes a loop whose per-frame sums an oracle
     * recomputes from the source rule + the same index mapping. A
-    * payload that fails to demux passes through with null media (the
-    * corrupt-row contract). Batched mapPartitions; payloads never
-    * shuffle. */
+    * payload that fails to demux or to decode every frame passes
+    * through with null media (the corrupt-row contract). */
   def resizeFrames(df: DataFrame, newWidth: Int, newHeight: Int,
-      idCol: String = "doc_id", batchSize: Int = 64): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     require(newWidth > 0 && newHeight > 0, s"bad dims: ${newWidth}x$newHeight")
-    val in = df.select(col(idCol), col("media"))
-    val outSchema = StructType(Seq(
-      StructField(idCol, in.schema(idCol).dataType),
-      StructField("media", Multimodal.mediaSchema)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val payload =
-            if (r.isNullAt(1)) null
-            else r.getStruct(1).get(0).asInstanceOf[Array[Byte]]
-          val parsed = if (payload == null) None else parseAvi(payload)
-          val resized = parsed.flatMap { avi =>
-            val imgs = avi.frames.flatMap(fb => decodeFrame(avi, fb))
-            if (imgs.isEmpty || imgs.length != avi.frames.length) None
-            else Some {
-              val out = imgs.map { src =>
-                val (w0, h0) = (src.getWidth, src.getHeight)
-                val dst = new java.awt.image.BufferedImage(newWidth,
-                  newHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
-                var y = 0
-                while (y < newHeight) {
-                  var x = 0
-                  while (x < newWidth) {
-                    dst.setRGB(x, y,
-                      src.getRGB(x * w0 / newWidth, y * h0 / newHeight))
-                    x += 1
-                  }
-                  y += 1
-                }
-                dst
-              }
-              encodeAviFromImages(out, avi.fpsMicros, CodecRgb)
-            }
-          }
-          resized match {
-            case Some(bytes) =>
-              Row(r.get(0), Row(bytes,
-                Row("video/x-msvideo", newWidth, newHeight)))
-            case None => Row(r.get(0), null)
-          }
-        }
+    perRow(df.select(col(idCol), col("media")), idCol,
+        Seq(StructField("media", Multimodal.mediaSchema))) { r =>
+      val resized = parseAvi(payloadOf(r)).flatMap { avi =>
+        val imgs = avi.frames.flatMap(fb => decodeFrame(avi, fb))
+        if (imgs.isEmpty || imgs.length != avi.frames.length) None
+        else Some(encodeAviFromImages(
+          imgs.map(resizeNN(_, newWidth, newHeight)), avi.fpsMicros, CodecRgb))
       }
-    }.toDF()
+      Some(Row(r.get(0), resized.map(bytes =>
+        Row(bytes, Row("video/x-msvideo", newWidth, newHeight))).orNull))
+    }
   }
 
   /** The lossy-codec CONTRACT gate for MJPEG (the
     * `Multimodal.decodeDeviation` shape, per FRAME): decode each movi
     * frame and emit the max per-pixel per-channel deviation from the
-    * closed-form `rule(seed, x, y, frameIdx)`. Dims must be exact;
-    * deviation is bounded, not bit-exact — JPEG is lossy.
+    * closed-form `rule(id, x, y, frameIdx)`. Dims must be exact;
+    * deviation is bounded, not bit-exact — JPEG is lossy. Corrupt
+    * payload → zero rows.
     * Output: (id, frame_idx, width, height, max_dev). */
   def decodeDeviation(df: DataFrame, rule: (Long, Int, Int, Int) => Int,
-      idCol: String = "doc_id", batchSize: Int = 64): DataFrame = {
-    val in = df.select(col(idCol), col("media"))
-    val outSchema = StructType(
-      StructField(idCol, in.schema(idCol).dataType) +: Seq(
+      idCol: String = "doc_id"): DataFrame =
+    perRow(df.select(col(idCol), col("media")), idCol, Seq(
         StructField("frame_idx", IntegerType),
         StructField("width", IntegerType),
         StructField("height", IntegerType),
-        StructField("max_dev", IntegerType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val id = r.get(0) match {
-            case l: java.lang.Long => l.longValue()
-            case i: java.lang.Integer => i.longValue()
-            case o => o.toString.toLong
-          }
-          val payload =
-            if (r.isNullAt(1)) null
-            else r.getStruct(1).get(0).asInstanceOf[Array[Byte]]
-          val parsed = if (payload == null) None else parseAvi(payload)
-          parsed.iterator.flatMap { avi =>
-            avi.frames.iterator.zipWithIndex.flatMap { case (fb, i) =>
-              decodeFrame(avi, fb).iterator.map { img =>
-                var dev = 0
-                var y = 0
-                while (y < img.getHeight) {
-                  var x = 0
-                  while (x < img.getWidth) {
-                    val got = img.getRGB(x, y)
-                    val want = rule(id, x, y, i)
-                    val dr = math.abs(((got >> 16) & 0xFF) - ((want >> 16) & 0xFF))
-                    val dg = math.abs(((got >> 8) & 0xFF) - ((want >> 8) & 0xFF))
-                    val db = math.abs((got & 0xFF) - (want & 0xFF))
-                    dev = math.max(dev, math.max(dr, math.max(dg, db)))
-                    x += 1
-                  }
-                  y += 1
-                }
-                Row(r.get(0), i, img.getWidth, img.getHeight, dev)
-              }
-            }
-          }
+        StructField("max_dev", IntegerType))) { r =>
+      val id = r.get(0) match {
+        case l: java.lang.Long => l.longValue()
+        case i: java.lang.Integer => i.longValue()
+        case o => o.toString.toLong
+      }
+      parseAvi(payloadOf(r)).iterator.flatMap { avi =>
+        avi.frames.iterator.zipWithIndex.flatMap { case (fb, i) =>
+          decodeFrame(avi, fb).map(img => Row(r.get(0), i, img.getWidth,
+            img.getHeight, maxDeviation(img, rule(id, _, _, i))))
         }
       }
-    }.toDF()
-  }
+    }
 }

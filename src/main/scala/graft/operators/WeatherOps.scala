@@ -268,18 +268,13 @@ object WeatherOps {
   // ---- J1/J2: enrichment joins (WeatherHotelsApp.java:134-142, MyStream.java:168-173)
 
   /** Inner enrichment join: each dimension row picks up its cell's weather
-    * list (J1). `broadcastDim` broadcasts the *smaller* side; at reference
-    * scale the aggregated weather table is small relative to 100 TB of
-    * events, but the dimension (hotels) is usually smaller still — caller
-    * chooses. Inner semantics drop dimension rows with no weather, exactly
-    * like the reference (the null-check at WeatherHotelsApp.java:137 is dead
-    * code under inner join).
+    * list (J1). Catalyst's size-based broadcast picks the side to
+    * broadcast. Inner semantics drop dimension rows with no weather,
+    * exactly like the reference (the null-check at
+    * WeatherHotelsApp.java:137 is dead code under inner join).
     */
-  def enrich(dim: DataFrame, history: DataFrame, keyCol: String = "key",
-      broadcastDim: Boolean = false): DataFrame = {
-    val d = if (broadcastDim) broadcast(dim) else dim
-    d.join(history, Seq(keyCol), "inner")
-  }
+  def enrich(dim: DataFrame, history: DataFrame, keyCol: String = "key"): DataFrame =
+    dim.join(history, Seq(keyCol), "inner")
 
   /** Left-outer table-table join (J2): dimension rows with no weather are
     * kept with a null list (null-guard semantics of MyStream.java:169-171). */

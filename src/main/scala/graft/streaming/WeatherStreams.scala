@@ -84,8 +84,8 @@ object WeatherStreams {
 
   /** Parse + geohash-rekey raw weather JSON (same batch code — narrow
     * transforms are streaming-transparent). */
-  def parseWeatherStream(raw: DataFrame, lenient: Boolean = false): DataFrame =
-    WeatherOps.parseWeather(raw, lenient = lenient)
+  def parseWeatherStream(raw: DataFrame): DataFrame =
+    WeatherOps.parseWeather(raw)
 
   /** Watermarked tumbling-window average — the bounded-state alternative to
     * the reference's unwindowed aggregation for unbounded key spaces

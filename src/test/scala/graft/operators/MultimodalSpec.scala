@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.SparkSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 class MultimodalSpec extends SparkSuite {
   import spark.implicits._
@@ -13,10 +15,9 @@ class MultimodalSpec extends SparkSuite {
     assert(mediaType.catalogString == Multimodal.mediaSchema.catalogString)
   }
 
-  test("feature extraction: deterministic fake decode over batches") {
+  test("feature extraction: deterministic fake decode") {
     val docs = graft.Tables.documents(spark, sf0001)
-    val feats = Multimodal.extractFeatures(spark, Multimodal.attachPayload(docs),
-      batchSize = 16)
+    val feats = Multimodal.extractFeatures(spark, Multimodal.attachPayload(docs))
     assert(feats.count() == docs.count())
     // n_bytes == utf-8 length of the source text (ASCII fixture → text length)
     val joined = feats.join(docs, "doc_id")
@@ -30,6 +31,76 @@ class MultimodalSpec extends SparkSuite {
     // dims within declared metadata bounds
     assert(feats.filter(col("width") < 1 || col("width") > 1920 ||
       col("height") < 1 || col("height") > 1080).count() == 0)
+  }
+
+  test("kernels give identical rows whether their input has 1 or 7 partitions") {
+    val ids = (0L until 40L).toDF("doc_id")
+    val docs = graft.Tables.documents(spark, sf0001)
+    val cases: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
+      ("extractFeatures", docs,
+        d => Multimodal.extractFeatures(spark, Multimodal.attachPayload(d))),
+      ("decodeFeatures(attachPng)", ids,
+        d => Multimodal.decodeFeatures(Multimodal.attachPng(d))),
+      ("Multimodal.decodeFrames(attachGif)", ids,
+        d => Multimodal.decodeFrames(Multimodal.attachGif(d))),
+      ("decodeAudioFeatures(attachWav)", ids,
+        d => Multimodal.decodeAudioFeatures(Multimodal.attachWav(d))),
+      ("Video.decodeFrames(attachAvi)", ids,
+        d => Video.decodeFrames(Video.attachAvi(d,
+          id => if (id % 2 == 0) Video.CodecRgb else Video.CodecMjpeg))))
+    cases.foreach { case (name, in, kernel) =>
+      def rows(n: Int): Seq[Row] = {
+        val out = kernel(in.repartition(n))
+        out.orderBy(out.columns.take(2).map(col).toIndexedSeq: _*).collect().toSeq
+      }
+      val one = rows(1)
+      assert(one.nonEmpty, name)
+      assert(rows(7) == one, s"$name: rows differ between 1 and 7 partitions")
+    }
+  }
+
+  test("corrupt-row sweep: null media, null/empty/random payloads give each kernel's documented outcome") {
+    val junk = new Array[Byte](64)
+    new scala.util.Random(42).nextBytes(junk)
+    val meta = Row("image/png", 4, 4)
+    val bad = spark.createDataFrame(java.util.List.of(
+        Row(1L, null), Row(2L, Row(null, meta)),
+        Row(3L, Row(Array.empty[Byte], meta)), Row(4L, Row(junk, meta))),
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField("media", Multimodal.mediaSchema))))
+    // one row per input row, every feature column null
+    def nullFeatures(name: String, out: DataFrame, cols: String*): Unit = {
+      val got = out.orderBy("doc_id").collect()
+      assert(got.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L), name)
+      for (r <- got; c <- cols)
+        assert(r.isNullAt(r.fieldIndex(c)), s"$name: doc ${r.getLong(0)} $c")
+    }
+    nullFeatures("decodeFeatures", Multimodal.decodeFeatures(bad),
+      "width", "height", "px_sum")
+    assert(Multimodal.decodeFeatures(bad).orderBy("doc_id")
+      .select("mime").as[Option[String]].collect().toSeq ==
+      Seq(None, Some("image/png"), Some("image/png"), Some("image/png")))
+    nullFeatures("Multimodal.decodeDeviation",
+      Multimodal.decodeDeviation(bad, (_, _, _, _, _) => 0),
+      "width", "height", "max_dev")
+    nullFeatures("resizeImage", Multimodal.resizeImage(bad, 4, 4), "media")
+    nullFeatures("decodeAudioFeatures", Multimodal.decodeAudioFeatures(bad),
+      "sample_rate", "channels", "bits", "n_samples", "sample_sum")
+    nullFeatures("resizeFrames", Video.resizeFrames(bad, 4, 4), "media")
+    // frame and demux kernels: zero rows
+    assert(Multimodal.decodeFrames(bad).count() == 0)
+    assert(Video.decodeMeta(bad).count() == 0)
+    assert(Video.decodeFrames(bad).count() == 0)
+    assert(Video.decodeDeviation(bad, (_, _, _, _) => 0).count() == 0)
+    // the stub decodes any bytes: null media → all null, null payload →
+    // meta only, empty and random payloads → their stub features
+    val (luma, n, crc) = Multimodal.decodeStub(junk)
+    assert(Multimodal.extractFeatures(spark, bad).orderBy("doc_id").collect()
+      .map(_.toSeq).toSeq == Seq(
+        Seq(1L, null, null, null, null, null, null),
+        Seq(2L, "image/png", 4, 4, null, null, null),
+        Seq(3L, "image/png", 4, 4, 0, 0L, 0.0),
+        Seq(4L, "image/png", 4, 4, n, crc, luma)))
   }
 
   test("resize: metadata updated, payload scaled by area ratio") {
