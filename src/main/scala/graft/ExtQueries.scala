@@ -8078,7 +8078,7 @@ object ExtQueries {
     // family is q_media_* / q_audio_decode / q_media_jpeg. The rename
     // surfaces in the bench baseline block as r1_missing, by design.)
     Face("q_payload_slice", (s, dir) =>
-      Multimodal.extractFeatures(s, Multimodal.attachPayload(Tables.documents(s, dir)))
+      Multimodal.extractFeatures(Multimodal.attachPayload(Tables.documents(s, dir)))
         .select(col("doc_id"), col("mime"), col("width"), col("height"),
           col("n_bytes"), col("avg_luma"))
         .orderBy(col("doc_id")),

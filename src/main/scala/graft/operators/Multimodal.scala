@@ -2,7 +2,7 @@ package graft.operators
 
 import java.awt.image.BufferedImage
 import javax.imageio.ImageIO
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -626,8 +626,7 @@ object Multimodal {
     * width, height, n_bytes, crc32, avg_luma; any payload bytes give
     * features ([[decodeStub]]), null media gives all-null features and a
     * null payload keeps only the meta columns. */
-  def extractFeatures(spark: SparkSession, docs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
+  def extractFeatures(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val withMedia = if (docs.columns.contains("media")) docs else attachPayload(docs)
     perRow(withMedia.select(col(idCol), col("media")), idCol, Seq(
         StructField("mime", StringType),

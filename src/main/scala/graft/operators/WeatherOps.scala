@@ -24,8 +24,8 @@ import graft.functions.GraftFunctions._
   * (WeatherHotelsApp.java:81) is Catalyst ColumnPruning.
   *
   * Scale notes per operator inline. Everything here is built-in-function
-  * only — whole-stage-codegen end to end, shuffles only at the two groupBys
-  * and the join (broadcast when the dimension side is small).
+  * only — whole-stage-codegen end to end, one shuffle on the cell for both
+  * aggregations and one at the join (broadcast when the dimension is small).
   *
   * Parse once: each parser tokenizes a record's JSON exactly once. The
   * natural form — `withColumn("w", from_json(..))` then a filter on `w` —
@@ -172,13 +172,18 @@ object WeatherOps {
 
   // ---- A1 + M3: per-(cell, day) average (WeatherHotelsApp.java:91-104) ---
 
-  /** Daily average temperature per (key, date).
+  /** Daily average temperature per (key, date), with O(1) state per group
+    * where the reference lists every reading (WeatherAgg.avgTmp()).
     *
-    * The reference collects every reading into a list and averages lazily
-    * (WeatherAgg.avgTmp()); Spark's partial+final hash aggregation computes
-    * the same mean with O(1) state per group — map-side combine means the
-    * shuffle carries (sum, count) pairs, not readings. At 100 TB this is the
-    * difference between shuffling the dataset and shuffling the group count.
+    * A batch input is exchanged once, on `keyCols` alone, at the session's
+    * shuffle-partition count (`REPARTITION_BY_NUM`, which AQE never
+    * coalesces); a later group-by on `keyCols` ([[cellHistory]]) needs no
+    * exchange of its own. The trade: readings cross the shuffle, not (sum,
+    * count) partials. With few readings per (key, date), as in the
+    * reference's per-station daily inputs, map-side combine saves little
+    * and one exchange beats two (SCALE.md, A1/A2 rows); with many per group
+    * a combined (key, date) exchange would win. A stream keeps the plain
+    * group-by: its state needs hash partitioning on every grouping key.
     */
   def dailyAverage(readings: DataFrame,
       keyCols: Seq[String] = Seq("key"), dateCol: String = "wthr_date",
@@ -191,7 +196,8 @@ object WeatherOps {
     def mean(c: String): Column =
       if (exact) sum(col(c).cast(DecimalType(18, 6))).cast("double") / count(col(c))
       else avg(col(c))
-    readings
+    (if (readings.isStreaming) readings else readings.repartition(
+      readings.sparkSession.sessionState.conf.numShufflePartitions, keyCols.map(col): _*))
       .groupBy((keyCols :+ dateCol).map(col): _*)
       .agg(mean("tmp_f").as("avg_tmp_f"), mean("tmp_c").as("avg_tmp_c"))
   }
@@ -205,19 +211,13 @@ object WeatherOps {
     * order; divergence documented). No subtractor needed: batch recompute /
     * streaming state maintenance replace changelog retraction (SURVEY §7.5.1).
     *
-    * Scale: list size = distinct dates per cell — bounded by the calendar,
-    * not the data volume; safe. For truly unbounded keys use the windowed
-    * variant in streaming.WeatherStreams.
-    *
-    * The daily rows are few bytes but much CPU per byte (`collect_list`
-    * buffers, sort), so they are exchanged on the key at the session's
-    * shuffle-partition count, which AQE does not coalesce into one task;
-    * partial and final `collect_list` then run in one stage on every core.
+    * Scale: list size = distinct dates per cell — bounded by the calendar.
+    * Fed by [[dailyAverage]] on the same key, partial and final
+    * `collect_list` run in its stage, with no exchange of their own.
     */
   def cellHistory(daily: DataFrame, keyCol: String = "key",
       dateCol: String = "wthr_date"): DataFrame =
-    daily.repartition(daily.sparkSession.sessionState.conf.numShufflePartitions, col(keyCol))
-      .groupBy(col(keyCol))
+    daily.groupBy(col(keyCol))
       .agg(sort_array(collect_list(struct(
         col(dateCol).as("date"),
         col("avg_tmp_f").as("tmp_f"),

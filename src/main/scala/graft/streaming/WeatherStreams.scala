@@ -26,8 +26,9 @@ import graft.operators.WeatherOps
   *    into ONE stateful op — [[CellHistoryAggregator]] keeps per-cell
   *    (date → (sum, count)) map state, so the daily averages AND the
   *    per-cell history are maintained by a single shuffle + state store.
-  *    That is *better* than the reference's two repartition hops at scale:
-  *    one exchange on `hash` instead of two (hash_date, then hash).
+  *    Like the batch path ([[WeatherOps.dailyAverage]] then
+  *    [[WeatherOps.cellHistory]]), that is one exchange on `hash` where the
+  *    reference has two repartition hops (hash_date, then hash).
   *
   * State-size note for 100 TB: per-cell state is O(distinct dates) — bounded
   * by the calendar (the reference's unwindowed semantics, kept). For

@@ -295,10 +295,30 @@ class PlanInvariantsSpec extends SparkSuite {
       s"the exchange must be a range partitioning on (score, tie):\n${p.take(2000)}")
   }
 
-  test("q_a1_daily_avg: partial + final aggregation (map-side combine)") {
-    val p = plan("q_a1_daily_avg")
-    assert("HashAggregate".r.findAllIn(p).size >= 2,
-      "aggregation must be two-phase so the shuffle carries partials, not rows")
+  test("q_a1_daily_avg: one uncoalesced exchange on user_id, partial + final aggregation above it") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val plan = SparkEntry.queries("q_a1_daily_avg")(spark, sf0001).queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val shown = plan.toString
+    // the orderBy's range exchange aside, the readings cross one exchange
+    val hash = aqe.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hash.size == 1 && (hash.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "user_id"
+      case _ => false
+    }) && hash.head.shuffleOrigin == REPARTITION_BY_NUM,
+      s"one hashpartitioning(user_id), REPARTITION_BY_NUM exchange:\n$shown")
+    def aggs(p: org.apache.spark.sql.execution.SparkPlan) =
+      aqe.collect(p) { case a: BaseAggregateExec => a.aggregateExpressions.map(_.mode) }.flatten
+    assert(aggs(plan).contains(Partial) && aggs(plan).contains(Final) &&
+      aggs(hash.head.child).isEmpty,
+      s"partial and final aggregation both run above the exchange:\n$shown")
   }
 
   test("catalog: no query exports a top-level array/map column") {
@@ -786,10 +806,10 @@ class PlanInvariantsSpec extends SparkSuite {
     }
   }
 
-  test("cell history: one uncoalesced exchange on the cell, then partial + final collect_list on every partition") {
+  test("topology: one uncoalesced exchange on the cell, then partial + final avg and collect_list on every partition") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
     import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, CollectList, Final, Partial}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, AggregateMode, Average, CollectList, Final, Partial}
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -839,27 +859,31 @@ class PlanInvariantsSpec extends SparkSuite {
     val hashExchanges = aqe.collect(plan) {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
     }
-    assert(hashExchanges.size == 2, s"the (cell, date) and the cell exchange only:\n$shown")
-    val onCell = hashExchanges.filter(e => e.outputPartitioning match {
+    // the daily average and the cell history share one exchange on the cell
+    assert(hashExchanges.size == 1 && (hashExchanges.head.outputPartitioning match {
       case HashPartitioning(Seq(a: Attribute), n) => a.name == "hash" && n == parts
       case _ => false
-    })
-    assert(onCell.size == 1 && onCell.head.shuffleOrigin == REPARTITION_BY_NUM,
-      s"the cell exchange is hashpartitioning(hash, $parts), REPARTITION_BY_NUM:\n$shown")
+    }) && hashExchanges.head.shuffleOrigin == REPARTITION_BY_NUM,
+      s"the only hash exchange is hashpartitioning(hash, $parts), REPARTITION_BY_NUM:\n$shown")
     val broadcasts = aqe.collect(plan) { case b: BroadcastExchangeExec => b }
     assert(broadcasts.size == 1 && broadcasts.head.output.exists(_.name == "country"),
       s"the hotels broadcast:\n$shown")
 
-    def collectLists(p: SparkPlan, mode: AggregateMode) =
+    def aggregates[F <: AggregateFunction](p: SparkPlan, mode: AggregateMode)(
+        implicit f: scala.reflect.ClassTag[F]) =
       aqe.collect(p) {
         case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
-          e.mode == mode && e.aggregateFunction.isInstanceOf[CollectList]) => a
+          e.mode == mode && f.runtimeClass.isInstance(e.aggregateFunction)) => a
       }
-    val belowExchange = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
-      .flatMap(e => collectLists(e.child, Partial))
-    assert(belowExchange.isEmpty, s"no partial_collect_list below an exchange:\n$shown")
+    val exchanged = aqe.collect(plan) { case e: ShuffleExchangeExec => e.child }
+    assert(exchanged.flatMap(aggregates[CollectList](_, Partial)).isEmpty,
+      s"no partial_collect_list below an exchange:\n$shown")
+    // a partial average below an exchange would bring back the (cell, date) shuffle
+    assert(aggregates[Average](plan, Partial).nonEmpty &&
+      exchanged.flatMap(aggregates[Average](_, Partial)).isEmpty,
+      s"partial_avg above the exchange, none below it:\n$shown")
 
-    val finals = collectLists(plan, Final)
+    val finals = aggregates[CollectList](plan, Final)
     assert(finals.size == 1, shown)
     val outRows = finals.head.metrics("numOutputRows").id
     val stages = metricStages.toArray(Array.empty[(Long, Int)]).collect { case (`outRows`, s) => s }.distinct

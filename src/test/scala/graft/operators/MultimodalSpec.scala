@@ -17,7 +17,7 @@ class MultimodalSpec extends SparkSuite {
 
   test("feature extraction: deterministic fake decode") {
     val docs = graft.Tables.documents(spark, sf0001)
-    val feats = Multimodal.extractFeatures(spark, Multimodal.attachPayload(docs))
+    val feats = Multimodal.extractFeatures(Multimodal.attachPayload(docs))
     assert(feats.count() == docs.count())
     // n_bytes == utf-8 length of the source text (ASCII fixture → text length)
     val joined = feats.join(docs, "doc_id")
@@ -25,7 +25,7 @@ class MultimodalSpec extends SparkSuite {
     assert(joined.count() == 0)
     // deterministic: same crc both runs
     val crc1 = feats.orderBy("doc_id").select("crc32").as[Long].collect().toSeq
-    val crc2 = Multimodal.extractFeatures(spark, Multimodal.attachPayload(docs))
+    val crc2 = Multimodal.extractFeatures(Multimodal.attachPayload(docs))
       .orderBy("doc_id").select("crc32").as[Long].collect().toSeq
     assert(crc1 == crc2)
     // dims within declared metadata bounds
@@ -38,7 +38,7 @@ class MultimodalSpec extends SparkSuite {
     val docs = graft.Tables.documents(spark, sf0001)
     val cases: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
       ("extractFeatures", docs,
-        d => Multimodal.extractFeatures(spark, Multimodal.attachPayload(d))),
+        d => Multimodal.extractFeatures(Multimodal.attachPayload(d))),
       ("decodeFeatures(attachPng)", ids,
         d => Multimodal.decodeFeatures(Multimodal.attachPng(d))),
       ("Multimodal.decodeFrames(attachGif)", ids,
@@ -95,7 +95,7 @@ class MultimodalSpec extends SparkSuite {
     // the stub decodes any bytes: null media → all null, null payload →
     // meta only, empty and random payloads → their stub features
     val (luma, n, crc) = Multimodal.decodeStub(junk)
-    assert(Multimodal.extractFeatures(spark, bad).orderBy("doc_id").collect()
+    assert(Multimodal.extractFeatures(bad).orderBy("doc_id").collect()
       .map(_.toSeq).toSeq == Seq(
         Seq(1L, null, null, null, null, null, null),
         Seq(2L, "image/png", 4, 4, null, null, null),

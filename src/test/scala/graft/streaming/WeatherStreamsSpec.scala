@@ -54,6 +54,36 @@ class WeatherStreamsSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("A1 update-mode: one exchange, hash-partitioned on every grouping key") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    implicit val sqlCtx = spark.sqlContext
+    // the A1 query above, and q_daily_avg_stream_replay's keys and exact mean;
+    // a batch input's cell-only repartition would add a second exchange here
+    Seq((Seq("key"), "wthr_date", false), (Seq("user_id"), "day", true)).foreach {
+      case (keys, date, exact) =>
+        val in = MemoryStream[(String, String, Double, Double)]
+        val readings = in.toDF().toDF(keys.head, date, "tmp_f", "tmp_c")
+        val q = WeatherOps.dailyAverage(readings, keyCols = keys, dateCol = date, exact = exact)
+          .writeStream.outputMode(OutputMode.Update()).format("noop")
+          .option("checkpointLocation", tmpDir("ckpt-a1-plan"))
+          .start()
+        try {
+          in.addData(("u09t", "2016-10-31", 23.8, -4.6))
+          q.processAllAvailable()
+          val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+          val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+          assert(exchanges.size == 1 && (exchanges.head.outputPartitioning match {
+            case HashPartitioning(es, _) => es.collect { case a: Attribute => a.name } == keys :+ date
+            case _ => false
+          }) && exchanges.head.shuffleOrigin != REPARTITION_BY_NUM,
+            s"one exchange, hashpartitioning(${(keys :+ date).mkString(", ")}):\n$plan")
+        } finally q.stop()
+    }
+  }
+
   test("A1→A2 single stateful op: per-cell history via CellHistoryAggregator") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, String, Double, Double)]
