@@ -39,7 +39,7 @@ object GraftFunctions {
     * it strips quotes, making `"11111"` and `11111` indistinguishable — so we
     * match the *unquoted* numeric token in the raw text, which preserves the
     * node-type distinction. Flat-object assumption documented; the normal
-    * (non-fidelity) path is `from_json` with an explicit schema.
+    * (non-fidelity) path is [[JsonStruct.parse]] with an explicit schema.
     */
   def jsonDoubleLenient(jsonCol: Column, field: String): Column =
     coalesce(

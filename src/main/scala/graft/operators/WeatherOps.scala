@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Geohash.geohash
 import graft.functions.GraftFunctions._
+import graft.functions.JsonStruct
 
 /** The reference pipeline's operator surface (SURVEY.md §2), re-expressed as
   * composable DataFrame transforms.
@@ -23,26 +24,28 @@ import graft.functions.GraftFunctions._
   * instead of consuming a changelog; manual pre-shuffle projection
   * (WeatherHotelsApp.java:81) is Catalyst ColumnPruning.
   *
-  * Scale notes per operator inline. Everything here is built-in-function
-  * only — whole-stage-codegen end to end, one shuffle on the cell for both
+  * Scale notes per operator inline. Everything here stays inside
+  * whole-stage codegen: built-in functions plus two graft kernels, the
+  * geohash ([[graft.functions.GeohashEncode]]) and the JSON parse
+  * ([[graft.functions.JsonStructParse]]); one shuffle on the cell for both
   * aggregations and one at the join (broadcast when the dimension is small).
   *
-  * Parse once: each parser tokenizes a record's JSON exactly once. The
-  * natural form — `withColumn("w", from_json(..))` then a filter on `w` —
-  * parses it several times after optimization, because three Catalyst rules
-  * copy the `from_json` call into every predicate above it:
+  * Parse once: each parser tokenizes a record's JSON exactly once, through
+  * [[graft.functions.JsonStruct.parse]] (`from_json`'s struct, without its
+  * per-record `InputStreamReader`). The natural form — `withColumn("w",
+  * parse(..))` then a filter on `w` — would parse it several times after
+  * optimization, because Catalyst copies any deterministic expression into
+  * the predicates above it:
   *  - `PushPredicateThroughNonJoin` pushes the filter below the projection
-  *    by substituting the `from_json` call for `w`;
-  *  - `OptimizeJsonExprs` prunes each pushed copy into its own single-field
-  *    `from_json`;
+  *    by substituting the parse call for `w`;
   *  - filters inferred from the downstream join (`isnotnull(key)`) are
-  *    pushed down the same way, e.g. as `isnotnull(geohash(from_json(..).lat,
-  *    from_json(..).lng))`.
+  *    pushed down the same way, e.g. as `isnotnull(geohash(json_struct(..).lat,
+  *    json_struct(..).lng))`.
   * [[parseOnce]] therefore yields the parsed struct from a generator
-  * (`explode(array(from_json(..)))`): a predicate on a generator's output
+  * (`explode(array(parse(..)))`): a predicate on a generator's output
   * cannot move below it, and `InferFiltersFromGenerate` skips non-attribute
-  * inputs, so the plan keeps one `from_json` per input. PlanInvariantsSpec
-  * pins the count.
+  * inputs, so the plan keeps one parse per input. PlanInvariantsSpec pins
+  * the count.
   */
 object WeatherOps {
 
@@ -66,13 +69,20 @@ object WeatherOps {
     StructField("Name", StringType),
     StructField("Id", StringType)))
 
+  /** Schema of an intermediate-topic Weather value (S2, see
+    * [[parseKeyedWeather]]). */
+  val keyedWeatherSchema: StructType = StructType(Seq(
+    StructField("tmp_f", DoubleType),
+    StructField("tmp_c", DoubleType),
+    StructField("date", StringType)))
+
   /** `raw`'s `valueCol` and `carry` columns plus `w`, the value parsed with
-    * `schema` once per record (see the header). Drops no row: a value that
-    * is not a JSON object yields a null `w`. */
+    * `schema` once per record (see the header). Drops no row: a malformed
+    * value yields a `w` of null fields, an empty one a null `w`. */
   private def parseOnce(raw: DataFrame, valueCol: String, schema: StructType,
       carry: String*): DataFrame =
     raw.select((valueCol +: carry).map(col) :+
-      explode(array(from_json(col(valueCol), schema))).as("w"): _*)
+      explode(array(JsonStruct.parse(col(valueCol), schema))).as("w"): _*)
 
   // ---- M1: parse + geohash re-key (WeatherHotelsApp.java:68-88) ----------
 
@@ -90,12 +100,13 @@ object WeatherOps {
     * `node.get(..).doubleValue()` (WeatherHotelsApp.java:75-81), so a
     * string-typed `"avg_tmpr_f": "72"` becomes 0.0, not 72.0, exactly like
     * a string-typed lat becomes geohash "s000"
-    * (WeatherStreamsTest.java:206-214). `false` uses straight `from_json`
-    * typing. A line that is not a JSON object, or has no `wthr_date`, is
-    * dropped, matching the reference's catch-and-null mapper
-    * (WeatherHotelsApp.java:83-86); under strict typing so is a line
-    * lacking a numeric `avg_tmpr_f` or `avg_tmpr_c` (the reference's
-    * `node.get(..)` is null there and `doubleValue()` throws).
+    * (WeatherStreamsTest.java:206-214). `false` takes each field as
+    * [[weatherSchema]] types it: a non-numeric value parses to null. A line
+    * that is not a JSON object, or has no `wthr_date`, is dropped, matching
+    * the reference's catch-and-null mapper (WeatherHotelsApp.java:83-86);
+    * under strict typing so is a line lacking a numeric `avg_tmpr_f` or
+    * `avg_tmpr_c` (the reference's `node.get(..)` is null there and
+    * `doubleValue()` throws).
     *
     * Scale: narrow transform, no shuffle; the derived `key` becomes the
     * shuffle key of the downstream aggregation — same manual key-derivation
@@ -141,12 +152,8 @@ object WeatherOps {
     * shuffle, so this parser exists for API/interop parity: consuming a
     * topic some *other* producer keyed this way. */
   def parseKeyedWeather(raw: DataFrame, keyCol: String = "key",
-      valueCol: String = "value"): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("tmp_f", DoubleType),
-      StructField("tmp_c", DoubleType),
-      StructField("date", StringType)))
-    parseOnce(raw, valueCol, schema, keyCol)
+      valueCol: String = "value"): DataFrame =
+    parseOnce(raw, valueCol, keyedWeatherSchema, keyCol)
       .filter(col("w").isNotNull)
       .select(
         col(keyCol).as("key"),
@@ -154,7 +161,6 @@ object WeatherOps {
         coalesce(col("w.date"), keyPart(col(keyCol), 2)).as("wthr_date"),
         col("w.tmp_f").as("tmp_f"),
         col("w.tmp_c").as("tmp_c"))
-  }
 
   // ---- M2: address parse + re-key (WeatherHotelsApp.java:112-132) --------
 

@@ -782,27 +782,47 @@ class PlanInvariantsSpec extends SparkSuite {
         keyCol = "hash").withColumnRenamed("hash", "key"))
   }
 
-  test("weather/hotel parsers: one from_json per parsed input after optimization") {
+  test("weather/hotel parsers: one JSON kernel per parsed input, no from_json") {
+    import graft.functions.JsonStructParse
     import graft.operators.WeatherOps
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import graft.streaming.WeatherStreams
+    import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
     import org.apache.spark.sql.functions.col
-    val weather = jsonLines("parse-once-w",
-      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}""")
+    val line =
+      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}"""
+    val weather = jsonLines("parse-once-w", line)
     val hotels = jsonLines("parse-once-h",
       """{"Hash":"dp01","Country":"US","City":"c","Address":"a","Name":"n","Id":"1"}""")
-    // each from_json left in the optimized plan tokenizes every record again
-    def parses(df: DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect { case n =>
-        n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum }.sum
+    // each parse left in the optimized plan tokenizes every record again, and
+    // a from_json would bring back its per-record reader
+    def count(plan: LogicalPlan)(pf: PartialFunction[Expression, Expression]): Int =
+      plan.collect { case n => n.expressions.map(_.collect(pf).size).sum }.sum
+    // a streaming plan is optimized per micro-batch: take the executed one's
+    val streamed = {
+      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      import spark.implicits._
+      val in = MemoryStream[String]
+      val q = WeatherStreams.parseWeatherStream(in.toDF().toDF("value"))
+        .writeStream.format("noop").start()
+      try {
+        in.addData(line); q.processAllAvailable()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+      } finally q.stop()
+    }
     Seq(
-      ("topology", topology(weather, hotels), 2),
-      ("topology lenient", topology(weather, hotels, lenient = true), 2),
-      ("q_s2_roundtrip", SparkEntry.queries("q_s2_roundtrip")(spark, sf0001), 1),
-      ("rejects ok side", WeatherOps.parseWeatherWithRejects(weather).filter(col("ok")), 1)
-    ).foreach { case (name, df, inputs) =>
-      assert(parses(df) == inputs,
-        s"$name: one from_json per parsed input\n${df.queryExecution.optimizedPlan}")
+      ("topology", topology(weather, hotels).queryExecution.optimizedPlan, 2),
+      ("topology lenient", topology(weather, hotels, lenient = true).queryExecution.optimizedPlan, 2),
+      ("q_s2_roundtrip",
+        SparkEntry.queries("q_s2_roundtrip")(spark, sf0001).queryExecution.optimizedPlan, 1),
+      ("rejects ok side",
+        WeatherOps.parseWeatherWithRejects(weather).filter(col("ok")).queryExecution.optimizedPlan, 1),
+      ("parseWeatherStream", streamed, 1)
+    ).foreach { case (name, plan, inputs) =>
+      assert(count(plan) { case j: JsonStructParse => j } == inputs,
+        s"$name: one json_struct per parsed input\n$plan")
+      assert(count(plan) { case j: JsonToStructs => j } == 0, s"$name: a from_json is left\n$plan")
     }
   }
 

@@ -12,19 +12,12 @@ import org.apache.spark.sql.functions._
   */
 class WeatherOpsSpec extends SparkSuite {
   import spark.implicits._
+  import WeatherOpsSpec._
 
   // ---- testHashWeather (M1) — WeatherStreamsTest.java:142-182 ------------
 
   test("M1: weather parse + geohash re-key matches golden keys and values") {
-    val raw = Seq(
-      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}""",
-      """{"avg_tmpr_c":16.5,"avg_tmpr_f":61.7,"lat":35.7395,"lng":-78.3249,"wthr_date":"2016-10-31"}""",
-      """{"avg_tmpr_c":10.9,"avg_tmpr_f":51.6,"lat":36.3367,"lng":-77.113,"wthr_date":"2016-10-26"}""",
-      """{"avg_tmpr_c":26.5,"avg_tmpr_f":79.7,"lat":39.2336,"lng":-108.67,"wthr_date":"2017-08-29"}""",
-      """{"avg_tmpr_c":17.4,"avg_tmpr_f":63.3,"lat":36.9639,"lng":-85.3242,"wthr_date":"2016-10-26"}"""
-    ).toDF("value")
-
-    val got = WeatherOps.parseWeather(raw)
+    val got = WeatherOps.parseWeather(golden.toDF("value"))
       .select("key", "tmp_f", "tmp_c").as[(String, Double, Double)]
       .collect().toSet
 
@@ -38,10 +31,7 @@ class WeatherOpsSpec extends SparkSuite {
   }
 
   test("M1: malformed JSON is dropped (lenient drop-on-error semantics)") {
-    val raw = Seq(
-      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}""",
-      """not json at all""",
-      """{"truncated": """).toDF("value")
+    val raw = (golden.head +: notJson).toDF("value")
     assert(WeatherOps.parseWeather(raw).count() == 1)
   }
 
@@ -61,31 +51,17 @@ class WeatherOpsSpec extends SparkSuite {
   }
 
   test("M1 dead-letter channel: rejects preserved with raw payload") {
-    val raw = Seq(
-      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}""",
-      """garbage {{{""",
-      """{"lat": 1.0, "lng": 2.0}""" // parses but no date → reject
-    ).toDF("value")
+    val raw = (golden.head +: deadLetters).toDF("value")
     val parsed = WeatherOps.parseWeatherWithRejects(raw)
     val good = parsed.filter($"ok")
     val bad = parsed.filter(!$"ok")
     assert(good.count() == 1 && good.head().getAs[String]("hash") == "dp01")
     assert(bad.count() == 2)
-    assert(bad.select("raw").as[String].collect().toSet ==
-      Set("""garbage {{{""", """{"lat": 1.0, "lng": 2.0}"""))
+    assert(bad.select("raw").as[String].collect().toSet == deadLetters.toSet)
   }
 
   test("malformed records fail per row on every parser path, never per job") {
-    val good = """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}"""
-    val stringLat = """{"avg_tmpr_c":2.0,"avg_tmpr_f":1.0,"lat":"39.6467","lng":-89.8455,"wthr_date":"2017-08-30"}"""
-    val bad = Seq("null", "[]", "123", "\"s\"", "{}",
-      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6""",
-      """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":null}""")
-    // a date but no numeric temperature: strict typing parses it to null
-    val noTemp = Seq(
-      """{"lat":39.6467,"lng":-89.8455,"wthr_date":"2020-01-02"}""",
-      """{"avg_tmpr_c":2.0,"avg_tmpr_f":"x","lat":39.6467,"lng":-89.8455,"wthr_date":"2020-01-03"}""")
-    val lines = Seq(good, stringLat) ++ bad ++ noTemp
+    val lines = Seq(golden.head, stringLat) ++ bad ++ noTemp
     val raw = lines.toDF("value")
     def cells(df: org.apache.spark.sql.DataFrame): Set[(String, String)] =
       df.select("hash", "wthr_date").as[(String, String)].collect().toSet
@@ -108,8 +84,6 @@ class WeatherOpsSpec extends SparkSuite {
     assert(tagged.map(_._2).sorted == lines.sorted)
     assert(tagged.filterNot(_._1).map(_._2).sorted == (bad ++ noTemp).sorted)
 
-    val address = """{"Hash":"dp01","Country":"US","City":"c","Address":"a","Name":"n","Id":"1"}"""
-    val noHash = """{"Country":"US","City":"c","Address":"a","Name":"n","Id":"2"}"""
     val hotels = WeatherOps.parseAddress((Seq(address, noHash) ++ bad).toDF("value"))
     assert(hotels.select("key", "id").as[(String, String)].collect().toSeq == Seq(("dp01", "1")))
   }
@@ -117,10 +91,7 @@ class WeatherOpsSpec extends SparkSuite {
   // ---- testHashAddresses (M2) — WeatherStreamsTest.java:88-140 -----------
 
   test("M2: address parse + re-key by Hash; unknown fields dropped") {
-    val raw = Seq(
-      """{"Address":"51 Gloucester Terrace","City":"Paddington","Country":"GB","Hash":"gcpv","Id":"3401614098437","Latitude":"51.5131074","Longitude":"-0.1778707","Name":"The Westbourne Hyde Park"}""",
-      """{"Hash":"s000","Country":"usa","City":"1","Id":"1","Address":"1","Name":"1"}"""
-    ).toDF("value")
+    val raw = goldenAddresses.toDF("value")
 
     val got = WeatherOps.parseAddress(raw).collect().map(r => (r.getString(0), r.getString(5))).toSet
     assert(got == Set(("gcpv", "3401614098437"), ("s000", "1")))
@@ -131,11 +102,7 @@ class WeatherOpsSpec extends SparkSuite {
   // ---- S2: intermediate-topic shape — WeatherStreamsTest.java:71-75 ------
 
   test("S2: keyed-weather parse of the reference's intermediate format") {
-    val raw = Seq( // exact testWeatherGrouping inputs
-      ("u09t_2016-10-31", """{"tmp_f":23.8,"tmp_c":-4.6,"date":"2016-10-31"}"""),
-      ("gcpv_2016-10-01", """{"tmp_f":59.9,"tmp_c":15.5,"date":"2016-10-01"}"""),
-      ("u09t_2016-10-26", """{"tmp_f":56.5,"tmp_c":13.6,"date":"2016-10-26"}""")
-    ).toDF("key", "value")
+    val raw = goldenKeyed.toDF("key", "value")
     val got = WeatherOps.parseKeyedWeather(raw)
       .select("hash", "wthr_date", "tmp_f").as[(String, String, Double)]
       .collect().toSet
@@ -143,8 +110,7 @@ class WeatherOpsSpec extends SparkSuite {
       ("u09t", "2016-10-31", 23.8), ("gcpv", "2016-10-01", 59.9),
       ("u09t", "2016-10-26", 56.5)))
     // date falls back to the key's date part when absent from the value
-    val noDate = Seq(("u09t_2016-10-31", """{"tmp_f":1.0,"tmp_c":2.0}"""))
-      .toDF("key", "value")
+    val noDate = Seq(("u09t_2016-10-31", keyedNoDate)).toDF("key", "value")
     assert(WeatherOps.parseKeyedWeather(noDate).head().getAs[String]("wthr_date")
       == "2016-10-31")
   }
@@ -277,4 +243,45 @@ class WeatherOpsSpec extends SparkSuite {
     ).toDF("j").select(jsonDoubleLenient(col("j"), "lat").as("v"))
     assert(df.as[Double].collect().toSeq == Seq(39.6467, 0.0, -5.0, 150.0, 0.0, 0.0))
   }
+}
+
+/** The JSON lines the parser tests above feed in; JsonStructSpec seeds its
+  * fuzz corpus from them. */
+object WeatherOpsSpec {
+  /** testHashWeather inputs (WeatherStreamsTest.java:142-182). */
+  val golden: Seq[String] = Seq(
+    """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":"2017-08-29"}""",
+    """{"avg_tmpr_c":16.5,"avg_tmpr_f":61.7,"lat":35.7395,"lng":-78.3249,"wthr_date":"2016-10-31"}""",
+    """{"avg_tmpr_c":10.9,"avg_tmpr_f":51.6,"lat":36.3367,"lng":-77.113,"wthr_date":"2016-10-26"}""",
+    """{"avg_tmpr_c":26.5,"avg_tmpr_f":79.7,"lat":39.2336,"lng":-108.67,"wthr_date":"2017-08-29"}""",
+    """{"avg_tmpr_c":17.4,"avg_tmpr_f":63.3,"lat":36.9639,"lng":-85.3242,"wthr_date":"2016-10-26"}""")
+  val notJson: Seq[String] = Seq("""not json at all""", """{"truncated": """)
+  /** Not JSON, and JSON with no date: both rejects. */
+  val deadLetters: Seq[String] = Seq("""garbage {{{""", """{"lat": 1.0, "lng": 2.0}""")
+  val stringLat =
+    """{"avg_tmpr_c":2.0,"avg_tmpr_f":1.0,"lat":"39.6467","lng":-89.8455,"wthr_date":"2017-08-30"}"""
+  val bad: Seq[String] = Seq("null", "[]", "123", "\"s\"", "{}",
+    """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6""",
+    """{"avg_tmpr_c":19.8,"avg_tmpr_f":67.7,"lat":39.6467,"lng":-89.8455,"wthr_date":null}""")
+  /** A date but no numeric temperature: strict typing parses it to null. */
+  val noTemp: Seq[String] = Seq(
+    """{"lat":39.6467,"lng":-89.8455,"wthr_date":"2020-01-02"}""",
+    """{"avg_tmpr_c":2.0,"avg_tmpr_f":"x","lat":39.6467,"lng":-89.8455,"wthr_date":"2020-01-03"}""")
+  val address = """{"Hash":"dp01","Country":"US","City":"c","Address":"a","Name":"n","Id":"1"}"""
+  val noHash = """{"Country":"US","City":"c","Address":"a","Name":"n","Id":"2"}"""
+  /** testHashAddresses inputs (WeatherStreamsTest.java:88-140). */
+  val goldenAddresses: Seq[String] = Seq(
+    """{"Address":"51 Gloucester Terrace","City":"Paddington","Country":"GB","Hash":"gcpv","Id":"3401614098437","Latitude":"51.5131074","Longitude":"-0.1778707","Name":"The Westbourne Hyde Park"}""",
+    """{"Hash":"s000","Country":"usa","City":"1","Id":"1","Address":"1","Name":"1"}""")
+  /** testWeatherGrouping inputs (WeatherStreamsTest.java:71-75). */
+  val goldenKeyed: Seq[(String, String)] = Seq(
+    ("u09t_2016-10-31", """{"tmp_f":23.8,"tmp_c":-4.6,"date":"2016-10-31"}"""),
+    ("gcpv_2016-10-01", """{"tmp_f":59.9,"tmp_c":15.5,"date":"2016-10-01"}"""),
+    ("u09t_2016-10-26", """{"tmp_f":56.5,"tmp_c":13.6,"date":"2016-10-26"}"""))
+  val keyedNoDate = """{"tmp_f":1.0,"tmp_c":2.0}"""
+
+  /** Every golden and malformed line above. */
+  val parserLines: Seq[String] = golden ++ notJson ++ deadLetters ++ Seq(stringLat) ++
+    bad ++ noTemp ++ Seq(address, noHash) ++ goldenAddresses ++ goldenKeyed.map(_._2) :+
+    keyedNoDate
 }
