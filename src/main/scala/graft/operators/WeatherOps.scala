@@ -30,12 +30,14 @@ import graft.functions.JsonStruct
   * ([[graft.functions.JsonStructParse]]); one shuffle on the cell for both
   * aggregations and one at the join (broadcast when the dimension is small).
   *
-  * Parse once: each parser tokenizes a record's JSON exactly once, through
-  * [[graft.functions.JsonStruct.parse]] (`from_json`'s struct, without its
-  * per-record `InputStreamReader`). The natural form — `withColumn("w",
-  * parse(..))` then a filter on `w` — would parse it several times after
-  * optimization, because Catalyst copies any deterministic expression into
-  * the predicates above it:
+  * Parse once: each parser reads a record's JSON exactly once, through
+  * [[graft.functions.JsonStruct.parse]] (`from_json`'s struct). The flat
+  * records the feeds carry are scanned from their bytes; anything else
+  * (escapes, non-ASCII, exponents, nesting, malformed lines) goes to
+  * Jackson, without `from_json`'s per-record `InputStreamReader`. The
+  * natural form — `withColumn("w", parse(..))` then a filter on `w` — would
+  * parse it several times after optimization, because Catalyst copies any
+  * deterministic expression into the predicates above it:
   *  - `PushPredicateThroughNonJoin` pushes the filter below the projection
   *    by substituting the parse call for `w`;
   *  - filters inferred from the downstream join (`isnotnull(key)`) are
@@ -150,11 +152,14 @@ object WeatherOps {
     * (WeatherHotelsApp.java:55-56; input shape pinned by
     * WeatherStreamsTest.java:71-75). In graft the repartition hop is a
     * shuffle, so this parser exists for API/interop parity: consuming a
-    * topic some *other* producer keyed this way. */
+    * topic some *other* producer keyed this way. A value without a numeric
+    * `tmp_f` and `tmp_c` is dropped, as strict [[parseWeather]] drops a raw
+    * reading without both temperatures: not JSON, not an object, `{}`, or a
+    * missing or non-numeric temperature. */
   def parseKeyedWeather(raw: DataFrame, keyCol: String = "key",
       valueCol: String = "value"): DataFrame =
     parseOnce(raw, valueCol, keyedWeatherSchema, keyCol)
-      .filter(col("w").isNotNull)
+      .filter(col("w.tmp_f").isNotNull && col("w.tmp_c").isNotNull)
       .select(
         col(keyCol).as("key"),
         keyPart(col(keyCol), 1).as("hash"),

@@ -5,10 +5,14 @@ import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import graft.SparkSuite
 import graft.operators.{WeatherOps, WeatherOpsSpec}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JsonToStructs}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Differential fuzzer: [[JsonStruct.parse]] against `from_json` on the
   * weather, address and keyed-weather schemas.
@@ -16,8 +20,10 @@ import org.apache.spark.sql.types.StructType
   * The corpus is seeded: the golden and malformed lines of WeatherOpsSpec,
   * about 2,000 byte-level mutants of them (byte flips, truncations, byte
   * insertions), and hand-written edge cases around the decoder and the
-  * tokenizer. Each line is built as `unhex(..).cast("string")`, so invalid
-  * UTF-8 reaches both parsers as it would from a text file.
+  * tokenizer, the flat scan's edges among them. Each line is built as
+  * `unhex(..).cast("string")`, so invalid UTF-8 reaches both parsers as it
+  * would from a text file. Doubles are compared by their bits, so a lost
+  * sign of zero or a last-digit rounding shows.
   */
 class JsonStructSpec extends SparkSuite {
   import spark.implicits._
@@ -84,7 +90,62 @@ class JsonStructSpec extends SparkSuite {
     latin1("""{lat:1,wthr_date:"d"}"""), latin1("""{"lat":1,}"""), latin1("{"), latin1("}"),
     latin1(""), latin1(" "), latin1("\"\""),
     // longer than Jackson's 32 Ki-char in-memory buffer for a String input
-    withDate("x" * 40000), withDate("\u00c3\u00a9" * 20000 + "\u00ff"))
+    withDate("x" * 40000), withDate("\u00c3\u00a9" * 20000 + "\u00ff")) ++ flatEdges
+
+  /** Lines at the edges of the flat scan (see [[FlatJsonScan]]). */
+  private def flatEdges: Seq[Array[Byte]] = {
+    def lat(num: String) = latin1(s"""{"lat":$num,"lng":$num,"wthr_date":"d","avg_tmpr_f":$num,"tmp_f":$num}""")
+    val nums = Seq(
+      // 15, 16 and 17 significant digits, as fractions and integers
+      "0.123456789012345", "0.1234567890123456", "0.12345678901234567",
+      "123456789012345", "-1234567890123456", "12345678901234567", "1234567.89012345",
+      "0.000000000000000000001", "0.0000000000000000000001", "0.00000000000000000000001",
+      "100000000000000.0", "1000000000000000.0", "999999999999999", "0.30000000000000",
+      "0.3", "-0", "-0.0", "0", "0.0", "9007199254740993", "1.7976931348623157", "-12.5", "2.675",
+      "0.1", "0.7", "123.456", "-89.8455", "1.00", "-", "-a", "1.", "1..2", "1.2.3", "00.5", "-01")
+    val ws = Seq(" ", "\t", "\n", "\r", "\f", "\u000b", "\u00c2\u00a0", "\u00a0")
+    nums.map(lat) ++ ws.flatMap { w =>
+      Seq(latin1(s"""$w{$w"lat"$w:${w}1.5$w,$w"wthr_date"$w:$w"d"$w}$w"""),
+        latin1(s"""{"lat":1.5$w}"""), latin1(s"""{$w}"""), latin1(s"""{"wthr_date":"d"}$w$w"""))
+    } ++ (Seq(
+      // numbers right before `,` and `}`, and run into other bytes
+      """{"lat":1.5,"lng":-2}""", """{"lng":-2,"lat":0}""", """{"lat":1.5x}""",
+      """{"lat":1.5"lng":2}""", """{"lat":1,5}""", """{"lat":-2null}""",
+      // keys that match a field only by prefix or case
+      """{"la":1.0,"latitude":2.0,"Lat":3.0,"LAT":4.0,"wthr_date":"d"}""",
+      """{"hash":"h","HASH":"x","Has":"y","Hash ":"z","Id":"1","id":"2"}""",
+      """{"tmp":1.0,"tmp_f_":2.0,"Date":"x","date":"d"}""",
+      // unknown keys with nested, boolean and null values
+      """{"x":{"a":1},"lat":1.0,"y":[1,"a"],"z":true,"w":false,"v":null,"wthr_date":"d"}""",
+      """{"lat":1.0,"x":[],"wthr_date":"d","y":{}}""",
+      // null in known keys, empty strings, empty key
+      """{"lat":null,"lng":null,"wthr_date":null,"avg_tmpr_f":null,"avg_tmpr_c":null}""",
+      """{"wthr_date":"","Hash":"","date":"","":"","":1}""",
+      """{"lat":nul}""", """{"lat":nulll}""", """{"lat":Null}""",
+      // a DEL byte, a double quote and a backslash inside values
+      "{\"wthr_date\":\"a\u007fb\",\"Hash\":\"\u007f\"}", """{"wthr_date":"a\"b"}""",
+      """{"wthr_date":"a\\b","Hash":"\\"}""",
+      // a string in a double field, a number in a string field
+      """{"lat":"1.5","wthr_date":"d"}""", """{"wthr_date":20170101,"Hash":12,"date":1.5}""",
+      // an unterminated or cut-off object
+      """{"lat":1.5""", """{"lat":1.5,""", """{"lat":""", """{"lat""", """{"""") ++
+      Generated.all).map(latin1)
+  }
+
+  /** The benchmark generator's line shapes: weather readings with `", "`
+    * separators, its three kinds of malformed line, a hotel with string
+    * Latitude/Longitude, and an intermediate-topic value. */
+  private object Generated {
+    val weather = Seq(
+      """{"avg_tmpr_c": -6.7, "avg_tmpr_f": 19.9, "lat": 25.0000, "lng": -124.9999, "wthr_date": "2017-01-01"}""",
+      """{"avg_tmpr_c": 0.0, "avg_tmpr_f": 32.0, "lat": 48.9999, "lng": -67.0001, "wthr_date": "2017-12-31"}""")
+    val cutOff = """{"avg_tmpr_c": 43.3, "avg_tmpr_f": 109.9, "lat": 39.6467, "lng": -89.8455, """
+    val noDate = """{"avg_tmpr_c": -28.9, "lat": 33.3333, "lng": -100.0}"""
+    val garbage = "garbage-123456"
+    val hotel = """{"Address": "42 Main Street", "City": "City 4711", "Country": "US", "Hash": "9q5c", "Id": "1000000042", "Latitude": "34.0522", "Longitude": "-118.2437", "Name": "Hotel 42"}"""
+    val keyed = """{"tmp_f":23.8,"tmp_c":-4.6,"date":"2016-10-31"}"""
+    val all: Seq[String] = weather ++ Seq(cutOff, noDate, garbage, hotel, keyed)
+  }
 
   /** Flip, cut or insert bytes: one to three edits per mutant. */
   private def mutants(seeds: Seq[Array[Byte]], n: Int, rnd: scala.util.Random): Seq[Array[Byte]] =
@@ -150,8 +211,18 @@ class JsonStructSpec extends SparkSuite {
     assert(graft.length == corpus.length && fromJson.size == corpus.length)
     graft.foreach { case Row(id: Int, hex: String, back: String, b) =>
       assert(back == hex, s"$name: the line's bytes did not survive the cast: $hex")
-      assert(fromJson(id) == b, s"$name: $hex\nfrom_json: ${fromJson(id)}\njson_struct: $b")
+      assert(sameBits(fromJson(id), b), s"$name: $hex\nfrom_json: ${fromJson(id)}\njson_struct: $b")
     }
+  }
+
+  /** Equality that tells doubles apart by all their bits (`-0.0` from
+    * `0.0`), in rows and in their nested values. */
+  private def sameBits(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) =>
+      java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+    case (x: Row, y: Row) =>
+      x.length == y.length && (0 until x.length).forall(i => sameBits(x.get(i), y.get(i)))
+    case _ => a == b
   }
 
   test("json_struct equals from_json on every fuzz line, with whole-stage codegen") {
@@ -174,5 +245,70 @@ class JsonStructSpec extends SparkSuite {
     assert(WeatherOps.parseAddress(raw).collect().length <= n)
     val keyed = raw.withColumn("key", concat(lit("u09t_2016-10-"), substring(col("hex"), 1, 2)))
     assert(WeatherOps.parseKeyedWeather(keyed).collect().length <= n)
+  }
+
+  private def evaluator(schema: StructType) = new JsonStructEvaluator(schema,
+    spark.conf.get("spark.sql.session.timeZone"), spark.conf.get("spark.sql.columnNameOfCorruptRecord"))
+
+  test("the flat scan reads the golden and generator-shaped lines; Jackson reads the rest") {
+    val weather = evaluator(WeatherOps.weatherSchema)
+    val address = evaluator(WeatherOps.addressSchema)
+    val keyed = evaluator(WeatherOps.keyedWeatherSchema)
+    def scanned(ev: JsonStructEvaluator, line: String) = ev.scan(UTF8String.fromString(line)) != null
+    val weatherLines = WeatherOpsSpec.golden ++ Seq(WeatherOpsSpec.noTemp.head, WeatherOpsSpec.deadLetters(1),
+      Generated.noDate) ++ Generated.weather
+    weatherLines.foreach(l => assert(scanned(weather, l), l))
+    (WeatherOpsSpec.goldenAddresses ++ Seq(WeatherOpsSpec.address, WeatherOpsSpec.noHash, Generated.hotel))
+      .foreach(l => assert(scanned(address, l), l))
+    (WeatherOpsSpec.goldenKeyed.map(_._2) ++ Seq(WeatherOpsSpec.keyedNoDate, Generated.keyed))
+      .foreach(l => assert(scanned(keyed, l), l))
+    val reading = WeatherOpsSpec.golden.head
+    val outOfShape = Seq(
+      "", " ", "null", "[]", "123", "\"s\"", "garbage", Generated.cutOff, Generated.garbage,
+      "\ufeff" + reading, reading + " x", reading + reading, "[" + reading + "]",
+      reading.replace("2017-08-29", "2017\\u002d08-29"), reading.replace("2017-08-29", "caf\u00e9"),
+      reading.replace("19.8", "1.98e1"), reading.replace("19.8", "NaN"), reading.replace("19.8", "019.8"),
+      reading.replace("19.8", "true"), reading.replace("19.8", "{}"), reading.replace("19.8", "[19.8]"),
+      reading.replace("19.8", "\"19.8\""), reading.replace("\"2017-08-29\"", "20170829"),
+      reading.replace("19.8", "19.8,\"lat\":1.0"), reading.replace("19.8", "0.12345678901234567"),
+      reading.replace("19.8", "1.7976931348623157"), reading.replace(":", " :\f"),
+      reading.replace("{", "{'lat':1.0,"), "{\"wthr_date\":\"a\tb\"}")
+    outOfShape.foreach(l => assert(!scanned(weather, l), l))
+  }
+
+  test("the evaluator reads a record at an offset in its bytes, and one off the heap") {
+    val schema = WeatherOps.weatherSchema
+    val ev = evaluator(schema)
+    val fromJson = JsonToStructs(schema, Map.empty, BoundReference(0, StringType, nullable = true),
+      Some(spark.conf.get("spark.sql.session.timeZone")))
+    def same(a: InternalRow, b: InternalRow): Boolean = schema.fields.indices.forall { i =>
+      a.isNullAt(i) == b.isNullAt(i) && (a.isNullAt(i) || (schema(i).dataType match {
+        case DoubleType => java.lang.Double.doubleToRawLongBits(a.getDouble(i)) ==
+          java.lang.Double.doubleToRawLongBits(b.getDouble(i))
+        case _ => a.getUTF8String(i) == b.getUTF8String(i)
+      }))
+    }
+    // each line, and whether the scan reads it
+    val lines = Seq(WeatherOpsSpec.golden.head -> true,
+      """{"lat":-0.0,"lng":-0,"wthr_date":"d","avg_tmpr_f":0.3,"avg_tmpr_c":null}""" -> true,
+      WeatherOpsSpec.noTemp(1) -> false,
+      "{\"lat\":-0.0,\"wthr_date\":\"caf\u00e9\",\"avg_tmpr_f\":1e1,\"avg_tmpr_c\":0.3}" -> false)
+    lines.foreach { case (line, scanned) =>
+      val bytes = line.getBytes(UTF_8)
+      val pad = "}{\"lat\":9".getBytes(UTF_8)
+      val atOffset = UTF8String.fromBytes(pad ++ bytes ++ pad, pad.length, bytes.length)
+      val addr = Platform.allocateMemory(bytes.length)
+      try {
+        Platform.copyMemory(bytes, Platform.BYTE_ARRAY_OFFSET, null, addr, bytes.length)
+        val offHeap = UTF8String.fromAddress(null, addr, bytes.length)
+        assert(offHeap.toString == line && atOffset.toString == line)
+        Seq(atOffset, offHeap).foreach { s =>
+          val expected = fromJson.eval(InternalRow(s)).asInstanceOf[InternalRow]
+          assert(same(ev.evaluate(s), expected), s"$line: ${ev.evaluate(s)} vs $expected")
+        }
+        assert(ev.scan(offHeap) == null, "off-heap bytes go to Jackson")
+        assert((ev.scan(atOffset) != null) == scanned, line)
+      } finally Platform.freeMemory(addr)
+    }
   }
 }

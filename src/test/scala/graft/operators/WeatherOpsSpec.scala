@@ -115,6 +115,14 @@ class WeatherOpsSpec extends SparkSuite {
       == "2016-10-31")
   }
 
+  test("S2: a keyed value without a numeric tmp_f and tmp_c is dropped") {
+    val values = Seq("garbage", "[]", "null", "123", "\"s\"", "{}") :+ goldenKeyed.head._2
+    val raw = values.map(v => ("u09t_2016-10-31", v)).toDF("key", "value")
+    val got = WeatherOps.parseKeyedWeather(raw)
+      .select("hash", "wthr_date", "tmp_f", "tmp_c").as[(String, String, Double, Double)].collect()
+    assert(got.toSeq == Seq(("u09t", "2016-10-31", 23.8, -4.6)))
+  }
+
   // ---- testWeatherGrouping (A1+A2 final state) — WeatherStreamsTest.java:48-86
 
   test("A1+A2: per-cell history (batch = final changelog state)") {
